@@ -51,57 +51,6 @@ def _truncate(
     return df.checkpoint(eager=eager)
 
 
-def coalesce_cached_state(fn):
-    """Decorator: run ``fn`` with the cached-plan AQE-coalescing flag ON
-    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``).
-
-    Iterative graph loops cache byte-light per-round state (edge sets,
-    rank/label tables); with the flag, AQE compiles those cached plans
-    with byte-sized partition coalescing, so every one of the O(rounds)
-    downstream stages schedules a handful of tasks instead of the
-    static shuffle-partition count (r12/r13 A/B: g14 1.39x, g05 1.23x
-    faster with the flag). The flag is consulted inside Spark's
-    ``CacheManager.cacheQuery`` — i.e. at ``.cache()`` CALL time, when
-    the cached plan is compiled — so the scope must wrap the code that
-    issues the ``.cache()`` calls. Wrapping only the ``localCheckpoint``
-    materializations (_truncate) does nothing: localCheckpoint persists
-    RDD blocks directly and never goes through the SQL cache (r13,
-    measured — truncate-scoped g14 sat at its flag-off 2.44s vs 1.75s
-    flag-on).
-
-    Applied PER MEASURED CALLER, not on the shared algorithms and not
-    session-global: the same flag SERIALIZES paths whose cached plans
-    sit under compute-dense pipelines — globally it cost the IVFPQ
-    family 2.2-2.8x (e35; r13 A/B table in OPTIMIZATION_r13.md), and
-    even scoped to connected-components internals it cost e21/e22 ~1.6x
-    (their CC input embeds the cosine/LSH pair pipeline: e22 interleaved
-    A/B 6.0s scoped vs 3.8s raw). The lineitem-graph g-family queries,
-    where the flag measurably wins, opt in at the query level.
-
-    Works as a decorator on functions whose first argument is a
-    SparkSession, a DataFrame, or a PropertyGraph.
-    """
-    import functools
-
-    from pyspark.sql import SparkSession
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        from goodreads_pyspark_spark.session import cached_plan_coalescing
-
-        first = args[0]
-        if isinstance(first, SparkSession):
-            spark = first
-        elif isinstance(first, DataFrame):
-            spark = first.sparkSession
-        else:
-            spark = first.edges.sparkSession
-        with cached_plan_coalescing(spark):
-            return fn(*args, **kwargs)
-
-    return wrapper
-
-
 @dataclass
 class PropertyGraph:
     """vertices(id, ...) + edges(src, dst, ...)."""

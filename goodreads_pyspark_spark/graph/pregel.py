@@ -170,7 +170,10 @@ def pagerank_scaled(
 
 
 def ppr_base(graph: PropertyGraph, seed_expr: str) -> dict:
-    """Cache the query-independent PPR inputs ONCE for several runs.
+    """Cache the PPR inputs for one graph and one seed predicate ONCE
+    for several runs. ``seeds`` depends on ``seed_expr``, which the base
+    records so a run with a different predicate fails instead of reusing
+    this seed set.
 
     ADVICE r12 (medium): when two concurrent PPR runs each built and
     cached their own ``edges``/``deg``/``seeds``, Spark's CacheManager
@@ -187,7 +190,7 @@ def ppr_base(graph: PropertyGraph, seed_expr: str) -> dict:
     seeds = graph.vertices.select(
         "id", F.when(F.expr(seed_expr), 1).otherwise(0).alias("is_seed")
     ).cache()
-    return {"edges": edges, "deg": deg, "seeds": seeds}
+    return {"edges": edges, "deg": deg, "seeds": seeds, "seed_expr": seed_expr}
 
 
 def personalized_pagerank_scaled(
@@ -216,12 +219,18 @@ def personalized_pagerank_scaled(
     default 1e12 scale supports ~10^5 seeds at any graph size.
 
     ``base`` — a :func:`ppr_base` dict — lets an orchestrator running
-    several PPRs over the same graph share ONE set of cached inputs;
-    the caller then owns their lifetime (see ppr_base docstring).
+    several PPRs over the same graph and seed predicate share ONE set of
+    cached inputs; the caller then owns their lifetime (see ppr_base
+    docstring). A base built for another ``seed_expr`` raises ValueError.
     """
     own_base = base is None
     if own_base:
         base = ppr_base(graph, seed_expr)
+    elif base["seed_expr"] != seed_expr:
+        raise ValueError(
+            f"ppr_base was built for seed_expr {base['seed_expr']!r}, "
+            f"not {seed_expr!r}"
+        )
     edges, deg, seeds = base["edges"], base["deg"], base["seeds"]
     reset_scaled = (reset_num * scale) // reset_den
     keep_num = reset_den - reset_num

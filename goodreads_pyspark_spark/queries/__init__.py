@@ -21,7 +21,6 @@ Oracle-parity rules (hard-won; keep them):
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -38,151 +37,11 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# The driver gates the first 50 exported queries in ITERATION order each
-# round (it does not re-sort — proven by CORRECTNESS_r08, see
-# _export_sorted). Queries listed here are exported with an ``a_``
-# prefix and all_queries()/all_oracles() sort by exported name, so
-# window members genuinely come first. Canonical names live in the
-# @query decorators and never change — tests, PRE_MATERIALIZATION keys,
-# and cross-references all use canonical names; only the driver-facing
-# export sees the prefix.
-#
-# Staleness policy (restated r9 so it is arithmetically auditable; at
-# 271 registered queries × 50-slot windows the floor is ceil(271/50) =
-# 6): every query's newest green CORRECTNESS row must be ≤6 rounds old.
-# Window selection each round, in priority order:
-#   1. additions — queries that have never had a driver-green row;
-#   2. code-changed — queries whose kernel was rewritten since their
-#      last green row;
-#   3. oldest last-green round first, sorted-name tiebreak, with any
-#      explicitly promised carry-overs (slot-yields) at the front of
-#      their age class.
-# COVERAGE.md carries the per-query last-green ledger this is computed
-# from.
-#
-# r13 window (VERDICT r12 item 9): rule 1 — io22, the declared
-# POST_FREEZE addition from r12 close (the only never-gated row). Rule
-# 2 code-changed re-gates: the r12 post-freeze overlap edits
-# (m02/g10/d69/io18 — VERDICT's own list; m01/m04 are covered below as
-# r7 rows) and e35 (nprobe curve restructured to a single scored table
-# this round). Rule 3 is FORCED this round: all 44 r7-green rows are
-# exactly at the 6-round staleness floor, so every one of them must
-# re-gate now — 1 + 5 + 44 = 50, the window writes itself. The other
-# r13-touched queries (g05/g11/g14/g17: cached-plan AQE scope opt-in;
-# io22's checkpoint restructure is rule-1 anyway) change runtime
-# partitioning only, never values; each passed this round's two full
-# 280-query sf0.01 oracle sweeps, and the flag-scope members are
-# driver-green r11/r12, so deferring their re-gate keeps the staleness
-# floor intact where adding them would push r7 rows past it.
-#: Queries registered AFTER this round's window froze (the io19/io20
-#: convention from r11): they carry no driver-green row yet and LEAD the
-#: next round's window as policy-rule-1 additions. The staleness pytest
-#: exempts exactly this set from the "never-gated rows must be in the
-#: window" assertion; rotate it to empty when the next window is cut.
-POST_FREEZE_ADDITIONS: frozenset[str] = frozenset()
-
-GATE_WINDOW: frozenset[str] = frozenset(
-    {
-        # --- policy rule 1: never driver-gated (r12 POST_FREEZE)
-        "io22_containment_ingest_loop",
-        # --- policy rule 2: code-changed since last green
-        "m02_kmeans_silhouette",
-        "g10_personalized_pagerank",
-        "d69_ensemble_tuning_sweep",
-        "io18_containment_index_publish",
-        "e35_ivfpq_nprobe_curve",
-        # --- policy rule 3: ALL 44 r7 rows (at the 6-round floor)
-        "g04_pagerank",
-        "g16_feature_propagation",
-        "h02_filtered_vector_search",
-        "h03_rag_context_pack",
-        "io01_source_roundtrip",
-        "io14_snapshot_time_travel",
-        "m01_als_rmse",
-        "m03_lda_topics",
-        "m04_pic_clusters",
-        "m05_tfidf_pca_norms",
-        "mm06_perceptual_buckets",
-        "q01_pricing_summary",
-        "q02_top_customers",
-        "q03_segment_stats",
-        "q04_latest_order_per_customer",
-        "q06_segments_with_pending_orders",
-        "q07_customers_without_orders",
-        "q08_customers_per_region",
-        "q09_suppliers_per_nation",
-        "q10_part_filters",
-        "q11_top_orders_per_priority",
-        "q12_active_nationkeys",
-        "q13_rollup_region_nation",
-        "q14_qty_pivot_by_linestatus",
-        "q15_order_tiers",
-        "q16_part_color_words",
-        "q17_dominant_segment_per_nation",
-        "q18_status_priority_combos",
-        "q19_customer_lookup",
-        "q20_order_scan_sorted",
-        "q21_median_price_by_flag",
-        "q22_salted_status_counts",
-        "q23_sql_facade_subqueries",
-        "q24_cube_status_priority",
-        "q25_unpivot_part_measures",
-        "q26_late_shipments",
-        "q27_approx_sketches",
-        "q28_shipping_priority",
-        "t01_daily_rollup",
-        "t02_hourly_by_type",
-        "t03_user_running_total",
-        "t04_user_sessions",
-        "t05_event_type_share",
-        "t25_lasttouch_attribution",
-    }
-)
-
-# Shared-kernel ledger (ADVICE r9): a few session-scoped memos
-# (localCheckpoint-backed) deliberately survive the bench harness's
-# clearCache, so per-query bench timings measure MARGINAL cost given a
-# warm kernel — correct, but uninterpretable without the build cost.
-# Each memo registers a builder here; bench.py forces every kernel up
-# front, times it as its own line, and records this consumer map in
-# BENCH_DETAIL so the amortization is explicit. Registration order is
-# dependency order (e.g. neardup_cc consumes jac05_pairs), so builds
-# are timed against warm upstream kernels, never double-counted.
-SHARED_KERNELS: dict[str, dict] = {}
-
-
-def shared_kernel(name: str, consumers: tuple[str, ...]):
-    """Decorator registering a shared-kernel builder ``(spark, sf_dir)
-    -> None`` with the bench-facing list of amortizing query names."""
-
-    def deco(fn):
-        SHARED_KERNELS[name] = {"build": fn, "consumers": list(consumers)}
-        return fn
-
-    return deco
-
-
-def canonical(name: str) -> str:
-    """Strip the ``a_`` gate-window prefix, returning the registry key.
-
-    Only ``a_`` is ever added by ``exported_name``; stripping is further
-    guarded on the remainder being a registered key so a future query
-    legitimately named ``a_something`` would not be silently renamed.
-    """
-    if name.startswith("a_") and name[2:] in REGISTRY:
-        return name[2:]
-    return name
-
-
-def exported_name(name: str) -> str:
-    """Driver-facing name: window members sort first via the a_ prefix."""
-    return f"a_{name}" if name in GATE_WINDOW else name
-
 
 def get_query(name: str) -> Query:
-    """Prefix-insensitive registry lookup (tests use canonical names)."""
     _load_all()
-    return REGISTRY[canonical(name)]
+    return REGISTRY[name]
+
 
 # Queries that checkpoint their (small) result to release working caches
 # return a frame whose plan is an opaque RDD scan. They expose the LAZY
@@ -198,36 +57,20 @@ def query(name: str, oracle: str | None = None, doc: str = ""):
     """Decorator registering a Spark query (and its DuckDB oracle)."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        key = canonical(name)
-        REGISTRY[key] = Query(name=key, spark_fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        REGISTRY[name] = Query(name=name, spark_fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
         return fn
 
     return deco
 
 
-def _export_sorted():
-    """Registry items sorted by the *driver-facing* name.
-
-    The driver gates the first 50 queries in dict-iteration order (it
-    demonstrably does NOT re-sort: CORRECTNESS_r08 gated the first 50
-    canonical-sorted names because r8 sorted by canonical key here while
-    renaming via the a_ prefix — the rename never moved the rows). Sorting
-    by exported_name makes insertion order == sorted-export order, so the
-    a_-prefixed window members genuinely reach the driver first.
-    """
-    return sorted(REGISTRY.items(), key=lambda kv: exported_name(kv[0]))
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _load_all()
-    return {exported_name(n): q.spark_fn for n, q in _export_sorted()}
+    return {n: q.spark_fn for n, q in sorted(REGISTRY.items())}
 
 
 def all_oracles() -> dict[str, str]:
     _load_all()
-    return {
-        exported_name(n): q.oracle for n, q in _export_sorted() if q.oracle is not None
-    }
+    return {n: q.oracle for n, q in sorted(REGISTRY.items()) if q.oracle is not None}
 
 
 _LOADED = False

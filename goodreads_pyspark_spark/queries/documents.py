@@ -25,7 +25,7 @@ from goodreads_pyspark_spark.functions.text import (
     tokens,
 )
 from goodreads_pyspark_spark.operators.concurrency import run_concurrent
-from goodreads_pyspark_spark.queries import query, shared_kernel
+from goodreads_pyspark_spark.queries import query
 from goodreads_pyspark_spark.queries._helpers import tbl
 
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
@@ -233,10 +233,7 @@ def _jac05_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _neardup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (id, component) labeling of the Jaccard≥0.5 pair graph."""
-    from goodreads_pyspark_spark.graph.frames import (
-        PropertyGraph,
-        coalesce_cached_state,
-    )
+    from goodreads_pyspark_spark.graph.frames import PropertyGraph
     from goodreads_pyspark_spark.graph.pregel import (
         connected_components_alternating,
     )
@@ -252,13 +249,7 @@ def _neardup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .union(edges.select(F.col("dst").alias("id")))
             .distinct()
         )
-        # the CC input here is an LC'd pair table (cheap scan above the
-        # per-round caches) — the shape where cached-plan AQE coalescing
-        # measurably wins (interleaved A/B: 1.36s vs 1.66s; see
-        # frames.coalesce_cached_state for where it measurably LOSES)
-        cc = coalesce_cached_state(connected_components_alternating)(
-            PropertyGraph(verts, edges)
-        )
+        cc = connected_components_alternating(PropertyGraph(verts, edges))
         # localCheckpoint for the same clearCache-survival reason as
         # _jac05_pairs; the labeling is clustered-vertex-sized.
         _NEARDUP_CC_MEMO[key] = cc.localCheckpoint()
@@ -5983,106 +5974,6 @@ def d64_containment_banding_audit(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("jaccard_recall"),
         )
     )
-
-
-# --- shared-kernel ledger registrations (ADVICE r9) ---------------------------
-# Builders force each session-scoped memo (accessors localCheckpoint
-# eagerly), so bench.py can time every kernel build as its own line and
-# record which queries amortize it. Dependency order: jac05_pairs feeds
-# neardup_cc, so it registers (and builds) first.
-
-
-@shared_kernel(
-    "jac05_pairs",
-    (
-        "d06_jaccard_neardup_pairs",
-        "d34_lsh_band_tuning",
-        "d62_cluster_cohesion_audit",
-        "c02_neardup_clusters",
-        "c04_quality_survivor",
-    ),
-)
-def _kernel_jac05(spark: SparkSession, sf_dir: str) -> None:
-    _jac05_pairs(spark, sf_dir)
-
-
-@shared_kernel(
-    "neardup_cc",
-    ("c02_neardup_clusters", "c04_quality_survivor", "d62_cluster_cohesion_audit"),
-)
-def _kernel_neardup_cc(spark: SparkSession, sf_dir: str) -> None:
-    _neardup_cc(spark, sf_dir)
-
-
-@shared_kernel(
-    "c_pipeline_stages",
-    ("c01_clean_corpus", "c03_corpus_to_shards", "c06_disposition_ledger"),
-)
-def _kernel_c_stages(spark: SparkSession, sf_dir: str) -> None:
-    _c_pipeline_stages(spark, sf_dir)
-
-
-@shared_kernel(
-    "minhash_sigs8",
-    (
-        "d07_minhash_lsh_candidates",
-        "d23_minhash_estimate_audit",
-        "d34_lsh_band_tuning",
-    ),
-)
-def _kernel_minhash_sigs8(spark: SparkSession, sf_dir: str) -> None:
-    _minhash_sigs8(spark, sf_dir)
-
-
-@shared_kernel("logit_fit", ("d49_logistic_fit", "d52_classifier_eval"))
-def _kernel_logit_fit(spark: SparkSession, sf_dir: str) -> None:
-    _logit_fit(spark, sf_dir)
-
-
-@shared_kernel(
-    "ensemble_sig_sizes",
-    (
-        "d65_lsh_ensemble_containment",
-        "d66_equidepth_ensemble",
-        "d67_containment_dedup",
-        "d69_ensemble_tuning_sweep",
-        "d70_equidepth_sketch_edges",
-        "d71_containment_threshold_sweep",
-        "io21_containment_index_fold_in",
-    ),
-)
-def _kernel_ensemble_sigs(spark: SparkSession, sf_dir: str) -> None:
-    _ensemble_sig_sizes(spark, sf_dir)
-
-
-@shared_kernel(
-    "d68_standing_index",
-    (
-        "d68_incremental_containment_admission",
-        "s15_streaming_containment_admission",
-        "d71_containment_threshold_sweep",
-        "io18_containment_index_publish",
-        "io21_containment_index_fold_in",
-        "io22_containment_ingest_loop",
-    ),
-)
-def _kernel_d68_index(spark: SparkSession, sf_dir: str) -> None:
-    _d68_standing_index(spark, sf_dir)
-
-
-@shared_kernel(
-    "containment_pairs2",
-    (
-        "d63_containment_audit",
-        "d64_containment_banding_audit",
-        "d65_lsh_ensemble_containment",
-        "d66_equidepth_ensemble",
-        "d67_containment_dedup",
-        "d69_ensemble_tuning_sweep",
-    ),
-)
-def _kernel_containment_pairs2(spark: SparkSession, sf_dir: str) -> None:
-    _containment_pairs2(spark, sf_dir)
 
 
 # --- d65: LSH-Ensemble containment candidates (new in r10) --------------------

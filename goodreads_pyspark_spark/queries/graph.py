@@ -5,8 +5,7 @@ oracle.
 The graph is the bipartite order→part structure from ``lineitem``
 (``l_orderkey → l_partkey + 10_000_000``) — the same shape as the
 reference's user→book ratings graph (goodreads.py:473-489) at testdata
-scale, and the same construction tools/graph_stress.py measures at 600k
-edges.
+scale.
 
 Oracle strategy for the iterative algorithms: both LPA and the scaled
 PageRank use only integer arithmetic (counts / fixed-point bigints), so a
@@ -19,9 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goodreads_pyspark_spark.graph.frames import PropertyGraph, coalesce_cached_state
+from goodreads_pyspark_spark.graph.frames import PropertyGraph
 from goodreads_pyspark_spark.graph.pregel import label_propagation, pagerank_scaled
-from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION, query, shared_kernel
+from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION, query
 from goodreads_pyspark_spark.queries._helpers import tbl
 from goodreads_pyspark_spark.queries.timeseries import T14_MAX_BASKET
 
@@ -184,8 +183,7 @@ def _pagerank_oracle(n_iter: int = 3, scale: int = 10**12) -> str:
 
 # --- connected components (alternating star contraction) --------------------
 #: g05 runs on the 1-in-5-orderkey subgraph: same bipartite shape, more
-#: components (sparser), and a bench-sized round count — the full-graph
-#: contraction stress lives in tools/graph_stress.py.
+#: components (sparser), and a bench-sized round count.
 _CC_SAMPLE_CTES = f"""
     edges AS MATERIALIZED (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst
               FROM lineitem WHERE l_orderkey % 5 = 0),
@@ -250,7 +248,6 @@ def _cc_oracle(rounds: int = 12) -> str:
     "(component = min reachable id), so the gate checks the labels "
     "exactly despite the different algorithms.",
 )
-@coalesce_cached_state
 def g05_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.pregel import (
         connected_components_alternating,
@@ -586,7 +583,6 @@ def _ppr_oracle(n_iter: int = 3, scale: int = 10**12) -> str:
     "checkpoint_every=1 forces a truncation every superstep so the "
     "reliable path is exercised three times, not just at the end.",
 )
-@coalesce_cached_state
 def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
@@ -644,8 +640,8 @@ def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         same = bool(n_diff == 0)
     finally:
-        for f in base.values():
-            f.unpersist()
+        for k in ("edges", "deg", "seeds"):
+            base[k].unpersist()
         shutil.rmtree(ckpt_dir, ignore_errors=True)
     # return the local-mode frame (its blocks don't live in ckpt_dir)
     return local.select(
@@ -688,7 +684,6 @@ def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cc = 2*tri/(d*(d-1)) from exact integers through identical "
     "double ops.",
 )
-@coalesce_cached_state
 def g11_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.frames import clustering_coefficients
 
@@ -932,7 +927,6 @@ def _hits_oracle(n_iter: int = 2, scale: int = _HITS_SCALE) -> str:
     "normalization is exact and order-independent, so the unrolled "
     "DuckDB recurrence (HUGEINT rescale) matches bit-for-bit.",
 )
-@coalesce_cached_state
 def g14_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.pregel import hits_scaled
 
@@ -1157,7 +1151,6 @@ def _g17_oracle(rounds: int = 12) -> str:
     "the batch endpoints, CC rounds on a batch-sized graph, one "
     "map-side relabel join of the old assignment.",
 )
-@coalesce_cached_state
 def g17_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.pregel import (
         connected_components_alternating,
@@ -1452,14 +1445,3 @@ def g19_fanout_neighborhood_sample(spark: SparkSession, sf_dir: str) -> DataFram
             F.coalesce("cks", F.lit("0")).alias("frontier_checksum"),
         )
     )
-
-
-# --- shared-kernel ledger registration (ADVICE r9) ----------------------------
-
-
-@shared_kernel(
-    "copart_pairs",
-    ("g07_triangle_count", "g08_kcore_trim", "g11_clustering_coefficient"),
-)
-def _kernel_copart(spark: SparkSession, sf_dir: str) -> None:
-    _copart_pairs(spark, sf_dir)

@@ -13,43 +13,33 @@ paths).
 from __future__ import annotations
 
 import os
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 
-#: Measured tuning posture (r12 A/B: SCALING.md addendum 12 / commit
-#: 90aa1f3; r13 re-validation: OPTIMIZATION_r13.md).
-#: canChangeCachedPlanOutputPartitioning was GLOBAL=true in r12 — it
-#: extends AQE partition coalescing to plans that materialize a cache(),
-#: which is what iterative graph loops want (per-round cached state
-#: coalesces to byte-sized partitions; r12/r13 A/B: g14 1.39-1.47x,
-#: g05 1.23x faster with it). But the r13 final-tree A/B showed the
-#: same flag SERIALIZES the e33-e35 IVFPQ family (their small cached
-#: explode frames coalesce to ~1 partition and every downstream window
-#: runs single-task: e33 2.2x, e34 1.5x, e35 2.8x slower). The flag is
-#: therefore no longer global: :func:`scoped_conf` sets it around the
-#: iterative-loop materializations in graph/frames._truncate — the one
-#: surface where it measurably wins. The candidate flags
-#: coalescePartitions.parallelismFirst=false + 16m advisory were
-#: REJECTED on measurement in r12: compute-dense, byte-light stages
-#: (tokenize/shingle, LPA rounds) lost core coverage — g03 1.78x,
-#: d54 1.34x, d65 1.18x.
-_TUNED_CONFS: dict[str, str] = {}
+def _default_driver_memory() -> str:
+    """Half of physical RAM (``MemTotal`` in /proc/meminfo), at least 1g.
 
-#: The cached-plan AQE-coalescing flag, scoped (see comment above).
-CACHED_PLAN_AQE_FLAG = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    A fixed default larger than the host lets the driver JVM grow until the
+    machine runs out of memory; ``$SPARK_GRAFT_DRIVER_MEM`` overrides this.
+    """
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{max(1024, int(line.split()[1]) // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "1g"
 
 
 def _env_conf_overrides() -> list[tuple[str, str]]:
     """``SPARK_GRAFT_CONF="k=v;k=v"`` — deployment-specific overrides.
 
-    ';'-separated (like tools/r12_ab.py --confs) so conf values that
-    legitimately contain commas (extraJavaOptions, list-valued confs)
-    stay expressible; ','-separated pairs are still accepted for
-    backwards compatibility when no ';' is present. Malformed items
-    (no '=') warn instead of vanishing (ADVICE r12).
+    ';'-separated so conf values that legitimately contain commas
+    (extraJavaOptions, list-valued confs) stay expressible; ','-separated
+    pairs are still accepted for backwards compatibility when no ';' is
+    present. Malformed items (no '=') warn instead of vanishing.
     """
     import sys
 
@@ -95,71 +85,17 @@ def get_spark(app_name: str = "goodreads_pyspark_spark", cpus: int | None = None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
-    # Measured tuning knobs (optimization guide §2.2/§9), each overridable
-    # via SPARK_GRAFT_CONF="k=v;k=v" so cluster deployments can re-tune
-    # without code edits. The current set is one boolean AQE-scope flag —
-    # behavioral, not sized to local[32]; byte-sized candidates
-    # (advisoryPartitionSizeInBytes et al.) were A/B'd and rejected on
-    # measurement (see _TUNED_CONFS comment above).
-    for k, v in _TUNED_CONFS.items():
-        builder = builder.config(k, v)
     for k, v in _env_conf_overrides():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-_SCOPED_LOCK = threading.Lock()
-#: (session id, conf key) -> [refcount, original value or None]
-_SCOPED_STATE: dict[tuple[int, str], list] = {}
-
-
-@contextmanager
-def scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set a runtime SQL conf for the duration of a block, refcounted.
-
-    SQL confs are session-global, and operators that overlap jobs from
-    driver threads (g10's two concurrent PPR runs both truncating
-    per-round state) can nest/interleave scopes for the same key — a
-    plain save/set/restore would let the first exiting thread restore
-    the original under the second, or the last exiting thread "restore"
-    the scoped value permanently. Refcount per (session, key): the first
-    enter saves+sets, the last exit restores/unsets. All scopes for a
-    key must use the SAME value (true here — the only current use is
-    the cached-plan AQE flag).
-    """
-    sk = (id(spark), key)
-    with _SCOPED_LOCK:
-        st = _SCOPED_STATE.get(sk)
-        if st is None:
-            orig = spark.conf.get(key, None)
-            spark.conf.set(key, value)
-            _SCOPED_STATE[sk] = st = [0, orig]
-        st[0] += 1
-    try:
-        yield
-    finally:
-        with _SCOPED_LOCK:
-            st[0] -= 1
-            if st[0] == 0:
-                orig = st[1]
-                if orig is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, orig)
-                _SCOPED_STATE.pop(sk, None)
-
-
-def cached_plan_coalescing(spark: SparkSession):
-    """Scope the cached-plan AQE-coalescing flag ON (see _TUNED_CONFS
-    comment: global=true serializes the IVFPQ family; the win lives in
-    iterative-loop state materialization, so only that surface —
-    graph/frames._truncate — opts in)."""
-    return scoped_conf(spark, CACHED_PLAN_AQE_FLAG, "true")
 
 
 def configure_for_oracle(spark: SparkSession) -> SparkSession:

@@ -518,7 +518,7 @@ def ivfpq_recall_curve(
         .join(F.broadcast(cell_rank), "ccid")
     )
     depths = df.sparkSession.createDataFrame(
-        [(int(p),) for p in probes], "nprobe int"
+        [(p,) for p in sorted({int(p) for p in probes})], "nprobe int"
     )
     wd = Window.partitionBy("nprobe").orderBy(
         F.col("adc_d2").asc(), F.col(id_col).asc()

@@ -306,6 +306,31 @@ def test_personalized_pagerank_hand_computed_path(spark):
     assert out == {1: 15, 2: 12, 3: 72, 4: 0}
 
 
+def test_personalized_pagerank_rejects_base_for_other_seeds(spark):
+    """A ``ppr_base`` built for one seed predicate must not silently
+    answer a run with another: that would return the first seed set's
+    ranks under the second predicate's name."""
+    from goodreads_pyspark_spark.graph.pregel import (
+        personalized_pagerank_scaled,
+        ppr_base,
+    )
+
+    v = spark.createDataFrame([(1,), (2,), (3,), (4,)], ["id"])
+    e = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
+    g = PropertyGraph(v, e)
+    base = ppr_base(g, "id = 1")
+    try:
+        with pytest.raises(ValueError, match="seed_expr"):
+            personalized_pagerank_scaled(g, "id = 2", n_iter=2, scale=100, base=base)
+        shared = personalized_pagerank_scaled(g, "id = 1", n_iter=2, scale=100, base=base)
+        assert {r["id"]: r["ppr_scaled"] for r in shared.collect()} == {
+            1: 15, 2: 12, 3: 72, 4: 0
+        }
+    finally:
+        for k in ("edges", "deg", "seeds"):
+            base[k].unpersist()
+
+
 def test_clustering_coefficients_known_graph(spark):
     """Triangle 1-2-3 plus pendant 4 attached to 3: cc(1)=cc(2)=1,
     cc(3)=1/3 (one triangle over C(3,2) possible), 4 excluded (deg 1)."""

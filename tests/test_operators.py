@@ -806,6 +806,23 @@ def test_ivfpq_exhaustive_probe_covers_all_candidates(spark):
     assert out.count() == 39  # every vector except the query
 
 
+def test_ivfpq_recall_curve_ignores_duplicate_probes(spark):
+    """A probe depth listed twice is still one depth: the curve must be
+    the same rows as with each depth listed once, not a doubled depth
+    whose duplicated candidates crowd the top-k."""
+    import random
+
+    from goodreads_pyspark_spark.similarity.quantize import ivfpq_recall_curve
+
+    rng = random.Random(3)
+    vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+    df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
+    kw = dict(query_id=5, k=6, nlist=8, n_sub=2, sub_dim=4, ksub=4)
+    dup = ivfpq_recall_curve(df, probes=(4, 4, 8), **kw).collect()
+    once = ivfpq_recall_curve(df, probes=(4, 8), **kw).collect()
+    assert dup == once
+
+
 def test_d61_fluency_fixed_point_in_unit_range(spark):
     """Per-doc fixed-point fluency is floor(1e9 * mean smoothed bigram
     probability) — a probability, so every per-source mean must land in
@@ -840,62 +857,6 @@ def test_pq_geometry_guard_raises_on_mismatched_n_sub(spark):
     # inconsistent: raises with the actual/expected dims in the message
     with pytest.raises(Exception, match="PQ geometry mismatch"):
         pq_assignments(df, n_sub=3, sub_dim=4, ksub=4).collect()
-
-
-def test_shared_kernel_ledger_names_registered_queries():
-    """Every bench-facing shared-kernel consumer must be a registered
-    query name, and every localCheckpoint-backed memo must be in the
-    ledger — otherwise BENCH_DETAIL's amortization map silently rots."""
-    from goodreads_pyspark_spark.queries import (
-        REGISTRY,
-        SHARED_KERNELS,
-        _load_all,
-    )
-
-    _load_all()
-    assert set(SHARED_KERNELS) == {
-        "jac05_pairs",
-        "neardup_cc",
-        "c_pipeline_stages",
-        "minhash_sigs8",
-        "logit_fit",
-        "containment_pairs2",
-        "ensemble_sig_sizes",
-        "d68_standing_index",
-        "copart_pairs",
-    }
-    for kname, spec in SHARED_KERNELS.items():
-        assert spec["consumers"], kname
-        for c in spec["consumers"]:
-            assert c in REGISTRY, (kname, c)
-
-    # Completeness, not just membership (ADVICE r10): every registered
-    # query whose source DIRECTLY calls a kernel's memo accessor must be
-    # in that kernel's consumer list, or BENCH_DETAIL's amortization map
-    # under-reports. (Indirect consumption through another kernel's memo
-    # is attributed to that kernel, so only direct references count.)
-    import inspect
-
-    accessors = {
-        "jac05_pairs": "_jac05_pairs",
-        "neardup_cc": "_neardup_cc",
-        "c_pipeline_stages": "_c_pipeline_stages",
-        "minhash_sigs8": "_minhash_sigs8",
-        "logit_fit": "_logit_fit",
-        "containment_pairs2": "_containment_pairs2",
-        "ensemble_sig_sizes": "_ensemble_sig_sizes",
-        "d68_standing_index": "_d68_standing_index",
-        "copart_pairs": "_copart_pairs",
-    }
-    assert set(accessors) == set(SHARED_KERNELS)
-    for qname, q in REGISTRY.items():
-        src = inspect.getsource(q.spark_fn)
-        for kname, acc in accessors.items():
-            if f"{acc}(" in src:
-                assert qname in SHARED_KERNELS[kname]["consumers"], (
-                    f"{qname} consumes kernel {kname} (calls {acc}) but is "
-                    "not in its consumer list"
-                )
 
 
 def test_lsh_ensemble_finds_containment_pair(spark):
@@ -1491,53 +1452,3 @@ def test_jsonlgz_append_adopts_legacy_dir_without_duplication(
         )
     )
     assert back == [(1, "legacy"), (2, "new")]
-
-
-# --- scoped runtime confs (r13: cached-plan AQE coalescing opt-in) ----------
-
-
-def test_scoped_conf_refcounts_and_restores(spark):
-    """scoped_conf must set on first enter, survive nested/overlapping
-    scopes for the same key (the g10 two-concurrent-PPR shape), and
-    restore the ORIGINAL value only when the last scope exits —
-    a plain save/set/restore would let the first exiting thread restore
-    under the second."""
-    from goodreads_pyspark_spark.session import scoped_conf
-
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    orig = spark.conf.get(key, None)
-    with scoped_conf(spark, key, "true"):
-        assert spark.conf.get(key) == "true"
-        with scoped_conf(spark, key, "true"):  # nested scope, same value
-            assert spark.conf.get(key) == "true"
-        # inner exit must NOT restore while the outer scope is live
-        assert spark.conf.get(key) == "true"
-    assert spark.conf.get(key, None) == orig
-
-
-def test_coalesce_cached_state_scopes_only_the_call(spark):
-    """The decorator must flip the cached-plan AQE flag ON exactly for
-    the duration of the wrapped call (where .cache() compiles cached
-    plans) and leave the session default untouched outside — the r13
-    posture: per-measured-caller opt-in, never global (globally the
-    flag cost e35 2.8x; scoped onto shared CC internals it cost e22
-    1.57x — see frames.coalesce_cached_state)."""
-    from goodreads_pyspark_spark.graph.frames import coalesce_cached_state
-    from goodreads_pyspark_spark.session import CACHED_PLAN_AQE_FLAG
-
-    seen = {}
-
-    @coalesce_cached_state
-    def probe(s, _sf_dir):
-        seen["inside"] = s.conf.get(CACHED_PLAN_AQE_FLAG)
-        return None
-
-    before = spark.conf.get(CACHED_PLAN_AQE_FLAG, None)
-    probe(spark, "unused")
-    assert seen["inside"] == "true"
-    assert spark.conf.get(CACHED_PLAN_AQE_FLAG, None) == before
-    # the registered winners opt in; the embedding-pair CC paths do not
-    from goodreads_pyspark_spark.queries import get_query
-
-    assert hasattr(get_query("g05_connected_components").spark_fn, "__wrapped__")
-    assert hasattr(get_query("g17_incremental_components").spark_fn, "__wrapped__")

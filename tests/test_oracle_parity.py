@@ -46,77 +46,14 @@ def test_query_matches_oracle(name, spark, duck):
     assert _norm(s_cols, s_rows) == _norm(d_cols, d_rows)
 
 
-def test_gate_window_integrity():
-    """The driver gates the first 50 exported names in dict ITERATION
-    order (not re-sorted — the r8 gate demonstrably consumed insertion
-    order), so the window must be exactly 50 registered queries and the
-    a_-prefixed members must be the first 50 keys of the dict itself."""
-    from goodreads_pyspark_spark.queries import GATE_WINDOW, all_oracles, all_queries
+def test_export_contract():
+    """The driver contract exports every registry key as-is, in sorted
+    order, and each oracle under the name of the query it checks."""
+    import __spark_entry__
 
-    names = list(all_queries())
-    assert len(GATE_WINDOW) == 50
-    missing = GATE_WINDOW - {n for n in REGISTRY}
-    assert not missing, f"window members not registered: {sorted(missing)}"
-    prefixed = sorted(n for n in names if n.startswith("a_"))
-    assert len(prefixed) == 50
-    # the property the driver actually consumes: iteration order
-    assert names[:50] == prefixed, "window members must lead dict iteration order"
-    assert names == sorted(names), "export must iterate in sorted(exported) order"
-    assert {n[2:] for n in prefixed} == set(GATE_WINDOW)
-    # oracles must iterate in the same relative order
-    onames = list(all_oracles())
-    assert onames == sorted(onames)
-
-
-def test_staleness_invariant_enforced_at_close():
-    """The ≤6-round staleness floor, self-enforcing (VERDICT r11 item
-    5): at round close every registry row's newest driver-green
-    CORRECTNESS record must be at most 6 rounds old — the arithmetic
-    floor at 279 queries x 50-slot windows. Rows in the current
-    GATE_WINDOW count as green THIS round (the driver gate itself fails
-    the round if they are not), and a row that has never been
-    driver-gated must be in the window (rule 1 of the rotation policy).
-    If this fails, the window in queries/__init__.py is not covering
-    the oldest ledger rows — fix the window, not the test."""
-    import importlib.util
-    from pathlib import Path
-
-    from goodreads_pyspark_spark.queries import (
-        GATE_WINDOW,
-        POST_FREEZE_ADDITIONS,
-    )
-
-    repo = Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "gate_ledger", repo / "tools" / "gate_ledger.py"
-    )
-    gl = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gl)
-    green = gl.last_green_rounds()
-    recorded = [
-        int(p.name.split("_r")[1].split(".")[0])
-        for p in repo.glob("CORRECTNESS_r*.json")
-    ]
-    cur_round = max(recorded) + 1  # the round being closed
-    stale, ungated = [], []
-    for name in sorted(REGISTRY):
-        if name in GATE_WINDOW:
-            continue  # re-certified this round by the driver gate
-        lg = green.get(name)
-        if lg is None:
-            if name not in POST_FREEZE_ADDITIONS:
-                ungated.append(name)
-        elif cur_round - lg > 6:
-            stale.append(f"{name} (last green r{lg}, age {cur_round - lg})")
-    assert not ungated, f"never-gated rows missing from the window: {ungated}"
-    # post-freeze additions must not linger: they are either brand-new
-    # (no green row) or already rotated into a window and out of this set
-    stale_exempt = [
-        n
-        for n in POST_FREEZE_ADDITIONS
-        if n in GATE_WINDOW or green.get(n) is not None
-    ]
-    assert not stale_exempt, (
-        f"rotate POST_FREEZE_ADDITIONS: already windowed/gated: {stale_exempt}"
-    )
-    assert not stale, f"rows past the 6-round staleness floor: {stale}"
+    names = list(__spark_entry__.queries())
+    assert names == sorted(REGISTRY)
+    assert not [n for n in names if n.startswith("a_")]
+    oracles = __spark_entry__.oracle_sql()
+    assert set(oracles) <= set(names)
+    assert oracles == {n: q.oracle for n, q in REGISTRY.items() if q.oracle is not None}

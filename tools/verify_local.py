@@ -19,7 +19,7 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from goodreads_pyspark_spark.queries import REGISTRY, _load_all, canonical  # noqa: E402
+from goodreads_pyspark_spark.queries import REGISTRY, _load_all  # noqa: E402
 from goodreads_pyspark_spark.session import get_spark  # noqa: E402
 from goodreads_pyspark_spark.sources.readers import TESTDATA_TABLES  # noqa: E402
 
@@ -54,7 +54,7 @@ def _norm_rows(cols, rows):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = {canonical(n) for n in sys.argv[2:]}
+    only = set(sys.argv[2:])
     _load_all()
 
     con = duckdb.connect()
