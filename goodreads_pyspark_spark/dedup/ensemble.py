@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from goodreads_pyspark_spark.dedup.minhash import (
     minhash_signatures_from_shingles,
 )
+from goodreads_pyspark_spark.dedup.shingles import shingle_hash
 
 #: Static size-partition upper edges (shingle-set size, 2-gram corpus
 #: quartile-ish geometric edges) — partition p holds sizes in
@@ -410,10 +411,9 @@ def build_containment_standing(
             ["p", "band", "key"],
         )
     st = _pin(
-        corpus_sh.withColumn(
-            "sh",
-            F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint"),
-        ).withColumnRenamed(id_col, "container"),
+        corpus_sh.withColumn("sh", shingle_hash()).withColumnRenamed(
+            id_col, "container"
+        ),
         cache_registry,
     )
     dfreq = st.groupBy("sh").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
@@ -558,10 +558,9 @@ def extend_containment_standing(
             entries_b.select("container", *bkeys)
         )
     st_b = _pin(
-        admitted_sh.withColumn(
-            "sh",
-            F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint"),
-        ).withColumnRenamed(id_col, "container"),
+        admitted_sh.withColumn("sh", shingle_hash()).withColumnRenamed(
+            id_col, "container"
+        ),
         cache_registry,
     )
     df_b = _pin(
@@ -723,10 +722,7 @@ def _containment_probe(
     # df row, and dropping them would shrink sz_in and inflate
     # containment for novel documents.
     inc = _pin(
-        incoming_sh.withColumn(
-            "sh",
-            F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint"),
-        )
+        incoming_sh.withColumn("sh", shingle_hash())
         .withColumnRenamed(id_col, "incoming")
         .join(hot, "sh", "left_anti"),
         cache_registry,

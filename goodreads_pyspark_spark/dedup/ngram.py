@@ -13,34 +13,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+from goodreads_pyspark_spark.dedup.shingles import shingle_hash, shingle_rows
 
 
-def jaccard_pairs_from_shingles(
-    sh: DataFrame,
-    threshold: float = 0.2,
-    max_df: int | None = None,
-    already_cached: bool = False,
+def _shingle_overlap(
+    sh: DataFrame, max_df: int | None, already_cached: bool
 ) -> DataFrame:
-    """(doc_a < doc_b, jaccard) from a prebuilt ``(id, sh)`` shingle table.
+    """``(doc_b, doc_a, n_common, sz_a, sz_b, jaccard)`` for every pair
+    (doc_a < doc_b) sharing >= 1 hashed shingle of ``(id, sh)`` rows.
 
-    The shingle table feeds three consumers (sizes, both join sides); pass
-    ``already_cached=True`` when the caller has cached ``sh`` (e.g. the
-    corpus pipeline sharing it with MinHash) to avoid double-caching.
+    Shingles are hashed (``shingle_hash``) before ANYTHING shuffles:
+    every downstream key (the df count and both inverted-index join
+    sides) is then 8 bytes instead of a raw n-gram string (measured
+    21.8x of corpus text in shuffle bytes for d34 before, the d54 fix
+    applied here). Every oracle replaying this kernel applies the
+    IDENTICAL hash, so values match bit-for-bit even under a collision,
+    and row counts are unchanged because the input is distinct
+    (id, shingle) rows.
 
-    Shingles are hashed to engine-portable md5-prefix 60-bit ints before
-    ANYTHING shuffles: every downstream key (the df count and both
-    inverted-index join sides) is then 8 bytes instead of a raw n-gram
-    string (measured 21.8x of corpus text in shuffle bytes for d34
-    before, the d54 fix applied here). Every oracle replaying this
-    kernel applies the IDENTICAL hash, so Jaccard values match
-    bit-for-bit even under a collision — both engines collide
-    identically, and row counts are unchanged because the input is
-    distinct (id, shingle) rows.
+    The shingle table feeds three consumers (sizes, both join sides);
+    ``already_cached=True`` means the caller owns a cached ``sh`` (e.g.
+    the corpus pipeline sharing it with MinHash), so at most one extra
+    cached copy (the df-capped table) lives here.
     """
-    sh = sh.withColumn(
-        "sh", F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint")
-    )
+    sh = sh.withColumn("sh", shingle_hash())
     if max_df is not None:
         # Cache the raw shingles first: the df-count and the cap join both
         # consume them, and uncached each side re-runs the tokenizer pass.
@@ -61,7 +57,7 @@ def jaccard_pairs_from_shingles(
     )
     sa = sizes.select(F.col("id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = (
+    return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn(
@@ -70,8 +66,21 @@ def jaccard_pairs_from_shingles(
             / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
         )
     )
-    return jac.filter(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", "jaccard"
+
+
+def jaccard_pairs_from_shingles(
+    sh: DataFrame,
+    threshold: float = 0.2,
+    max_df: int | None = None,
+    already_cached: bool = False,
+) -> DataFrame:
+    """(doc_a < doc_b, jaccard) from a prebuilt ``(id, sh)`` shingle table,
+    for pairs with Jaccard >= ``threshold`` (see ``_shingle_overlap`` for
+    the hashing, ``max_df`` and ``already_cached`` contract)."""
+    return (
+        _shingle_overlap(sh, max_df, already_cached)
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -102,50 +111,14 @@ def containment_pairs_from_shingles(
     boilerplate wrapper, a concatenation): |A∩B|/|A∪B| stays small while
     |A∩B|/|A| is near 1. Containment is the detector for that case
     (Broder's resemblance-vs-containment distinction; the datasketch
-    ``MinHashLSHEnsemble`` use case). Same inverted-index shape and
-    ``max_df`` discipline as ``jaccard_pairs_from_shingles`` — hashed
-    8-byte shingle keys, only shingle-sharing pairs materialize, the df
-    cap bounds any key's m² contribution. Measured (SCALING.md addendum
+    ``MinHashLSHEnsemble`` use case). Same inverted-index kernel and
+    ``max_df`` discipline as ``jaccard_pairs_from_shingles``: the df cap
+    bounds any key's m² contribution. Measured (SCALING.md addendum
     10): the kernel build stays FLAT at 1×/2×/4× corpus replication
     (2.1s → 1.7s) even as near-dup density grows output pairs 17× —
     the cap, not luck, is what holds the join.
     """
-    sh = sh.withColumn(
-        "sh", F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint")
-    )
-    # Same caching discipline as jaccard_pairs_from_shingles (ADVICE r9):
-    # when the caller owns a cached shingle table, skip the pre-filter
-    # cache so at most one extra cached copy (the df-capped table) lives
-    # here instead of three overlapping ones.
-    if max_df is not None:
-        if not already_cached:
-            sh = sh.cache()
-        dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
-        sh = sh.join(dfreq.filter(F.col("__df") <= max_df).drop("__df"), "sh")
-        sh = sh.cache()
-    elif not already_cached:
-        sh = sh.cache()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
-        )
-        .withColumn(
-            "containment",
-            F.col("n_common").cast("double")
-            / F.least("sz_a", "sz_b").cast("double"),
-        )
+    return _shingle_overlap(sh, max_df, already_cached).withColumn(
+        "containment",
+        F.col("n_common").cast("double") / F.least("sz_a", "sz_b").cast("double"),
     )

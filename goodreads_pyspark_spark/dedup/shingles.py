@@ -10,7 +10,7 @@ so it must run exactly once per pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.functions.text import tokens, word_shingles
@@ -41,3 +41,14 @@ def shingle_rows(
     )
     sh = word_shingles(F.col("__toks"), shingle_n)
     return base.select(F.col(out_id), F.explode(sh).alias("sh"))
+
+
+def shingle_hash(col: str = "sh") -> Column:
+    """A shingle string as an engine-portable 60-bit int: the first 15
+    hex digits of its md5, ``conv(substring(md5(sh),1,15),16,10)::bigint``.
+
+    Every shuffle keyed by shingle carries these 8 bytes instead of the
+    raw n-gram, and every DuckDB oracle replaying a shingle join applies
+    the identical hash, so both engines collide identically.
+    """
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")

@@ -2,10 +2,15 @@
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
+from types import GeneratorType
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from goodreads_pyspark_spark.operators.concurrency import run_concurrent
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -25,6 +30,64 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except Exception:  # noqa: BLE001 — e.g. non-numeric "auto"
         pass
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def session_memo(build):
+    """Build a shared ``(spark, sf_dir)`` kernel once per session and input.
+
+    Several registry queries consume each such kernel, and the oracle
+    suite and the driver gate run them all in one session; there one
+    build per session beats a build per consumer (A/B in CHANGES.md).
+
+    The key is the session's application id, ``sf_dir`` and the size and
+    mtime of every file under it, so rewritten input is rebuilt, never
+    served stale. A miss evicts entries of stopped sessions and older
+    snapshots of the same ``sf_dir``. The builder returns a DataFrame or
+    a tuple or dict of them; each is ``localCheckpoint``ed once here, so
+    the entry holds output-sized blocks independent of the SQL cache. A
+    builder that caches intermediates is a generator: it yields its
+    frames and releases the caches after the yield. ``__wrapped__`` is
+    the unmaterialised builder, for plan audits.
+    """
+    store: dict[tuple, object] = {}
+    lock = threading.Lock()
+
+    @functools.wraps(build)
+    def memo(spark: SparkSession, sf_dir: str):
+        app = spark.sparkContext.applicationId
+        key = (app, sf_dir, _input_stamp(sf_dir))
+        with lock:
+            if key not in store:
+                for k in [k for k in store if k[0] != app or k[1] == sf_dir]:
+                    del store[k]
+                built = build(spark, sf_dir)
+                if isinstance(built, GeneratorType):
+                    try:
+                        store[key] = _checkpoint(next(built))
+                    finally:
+                        next(built, None)
+                else:
+                    store[key] = _checkpoint(built)
+            return store[key]
+
+    return memo
+
+
+def _input_stamp(sf_dir: str) -> tuple:
+    stamp = []
+    for root, _, files in os.walk(sf_dir):
+        for name in files:
+            st = os.stat(os.path.join(root, name))
+            stamp.append((os.path.join(root, name), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stamp))
+
+
+def _checkpoint(frames):
+    if isinstance(frames, DataFrame):
+        return frames.localCheckpoint()
+    keys = list(frames) if isinstance(frames, dict) else range(len(frames))
+    done = run_concurrent([frames[k].localCheckpoint for k in keys])
+    return dict(zip(keys, done)) if isinstance(frames, dict) else tuple(done)
 
 
 def events_tbl(spark: SparkSession, sf_dir: str) -> DataFrame:

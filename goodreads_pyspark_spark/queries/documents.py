@@ -17,6 +17,7 @@ from goodreads_pyspark_spark.dedup import (
     lsh_candidate_pairs,
     simhash_signatures,
 )
+from goodreads_pyspark_spark.dedup.shingles import shingle_hash
 from goodreads_pyspark_spark.functions.text import (
     EN_STOPWORDS,
     doc_fingerprint,
@@ -26,7 +27,7 @@ from goodreads_pyspark_spark.functions.text import (
 )
 from goodreads_pyspark_spark.operators.concurrency import run_concurrent
 from goodreads_pyspark_spark.queries import query
-from goodreads_pyspark_spark.queries._helpers import tbl
+from goodreads_pyspark_spark.queries._helpers import session_memo, tbl
 
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
@@ -193,157 +194,88 @@ def d05_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: contribution at 10⁴ rows while touching almost no discriminative shingles.
 D06_MAX_DF = 100
 
-# Session-scoped memo for the Jaccard≥0.5 pairs table and the near-dup CC
-# labeling that d06 / c02 / c04 all share (identical params). Each suite
-# run recomputed the same inverted-index self-join + CC loop up to three
-# times; the kernel is deterministic, so computing it once per
-# (session, sf_dir) and caching the (small, output-sized) result is
-# result-identical. Entries from stopped sessions are evicted on the next
-# miss; at most a handful of (app, sf) keys ever live at once.
-_JAC05_MEMO: dict[tuple[str, str], DataFrame] = {}
-_NEARDUP_CC_MEMO: dict[tuple[str, str], DataFrame] = {}
 
-
-def _evict_dead(memo: dict[tuple[str, str], DataFrame], app: str) -> None:
-    for k in [k for k in memo if k[0] != app]:
-        del memo[k]
-
-
+@session_memo
 def _jac05_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached (doc_a, doc_b, jaccard) pairs at threshold 0.5, df cap 100."""
-    from goodreads_pyspark_spark.dedup.ngram import jaccard_pairs 
+    """(doc_a, doc_b, jaccard) pairs at threshold 0.5, df cap 100."""
+    from goodreads_pyspark_spark.dedup.ngram import jaccard_pairs
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _JAC05_MEMO:
-        _evict_dead(_JAC05_MEMO, app)
-        docs = tbl(spark, sf_dir, "documents")
-        # localCheckpoint, not cache(): the result is output-sized (pairs
-        # above threshold), and RDD checkpoint blocks survive
-        # spark.catalog.clearCache() — the bench harness clears the SQL
-        # cache between queries, which would otherwise silently evict the
-        # shared kernel and re-run the self-join per consumer. On a real
-        # cluster this would be a reliable checkpoint (localCheckpoint
-        # dies with an executor); single-JVM local mode has no such loss.
-        _JAC05_MEMO[key] = jaccard_pairs(
-            docs, threshold=0.5, max_df=D06_MAX_DF
-        ).localCheckpoint()
-    return _JAC05_MEMO[key]
+    docs = tbl(spark, sf_dir, "documents")
+    return jaccard_pairs(docs, threshold=0.5, max_df=D06_MAX_DF)
 
 
+@session_memo
 def _neardup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached (id, component) labeling of the Jaccard≥0.5 pair graph."""
+    """(id, component) labeling of the Jaccard≥0.5 pair graph."""
     from goodreads_pyspark_spark.graph.frames import PropertyGraph
     from goodreads_pyspark_spark.graph.pregel import (
         connected_components_alternating,
     )
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _NEARDUP_CC_MEMO:
-        _evict_dead(_NEARDUP_CC_MEMO, app)
-        pairs = _jac05_pairs(spark, sf_dir)
-        edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        cc = connected_components_alternating(PropertyGraph(verts, edges))
-        # localCheckpoint for the same clearCache-survival reason as
-        # _jac05_pairs; the labeling is clustered-vertex-sized.
-        _NEARDUP_CC_MEMO[key] = cc.localCheckpoint()
-    return _NEARDUP_CC_MEMO[key]
+    pairs = _jac05_pairs(spark, sf_dir)
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    verts = (
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    return connected_components_alternating(PropertyGraph(verts, edges))
 
 
-_C_STAGES_MEMO: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
-def _c_pipeline_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Session-scoped memo of the c01/c03/c06 shared pipeline stages.
-
-    Returns id-frames (single ``doc_id`` column, localCheckpoint-backed —
-    the _jac05_pairs rationale) for each stage boundary: ``gated`` (past
-    the quality gate), ``exact`` (exact-dedup survivors), ``cleaned``
+@session_memo
+def _c_pipeline_stages(spark: SparkSession, sf_dir: str):
+    """The c01/c03/c06 shared pipeline stages as id-frames (single
+    ``doc_id`` column) for each stage boundary: ``gated`` (past the
+    quality gate), ``exact`` (exact-dedup survivors), ``cleaned``
     (near-dup removal at 0.8), ``contam`` (train-side docs failing d15
     decontamination at 0.5). The LSH+verify near-dup kernel and the
-    shingle-based contamination join are the pipeline's dominant costs;
-    c01, c03, and c06 all consume identical stage sets, so they are
-    computed once per (session, sf_dir).
+    shingle-based contamination join are the pipeline's dominant costs.
     """
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _C_STAGES_MEMO:
-        _evict_dead(_C_STAGES_MEMO, app)
-        from goodreads_pyspark_spark.dedup.decontaminate import (
-            contamination_stats,
-        )
-        from goodreads_pyspark_spark.dedup.exact import exact_dedup
-        from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-        from goodreads_pyspark_spark.pipelines.corpus import (
-            drop_near_duplicates,
-            quality_gate,
-        )
+    from goodreads_pyspark_spark.dedup.decontaminate import contamination_stats
+    from goodreads_pyspark_spark.dedup.exact import exact_dedup
+    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+    from goodreads_pyspark_spark.pipelines.corpus import (
+        drop_near_duplicates,
+        quality_gate,
+    )
 
-        docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
-        # ONE corpus-wide tokenize->shingle pass feeds the near-dup stage
-        # and decontamination (the dominant linear cost at scale)
-        all_sh = shingle_rows(docs, out_id="id").cache()
-        gated = quality_gate(docs, min_tokens=20)
-        exact = exact_dedup(gated).cache()
-        cleaned = drop_near_duplicates(
-            exact, jaccard_threshold=0.8, shingles=all_sh
-        )
-        train = cleaned.filter(F.col("doc_id") % 20 != 0)
-        ev = docs.filter(F.col("doc_id") % 20 == 0)
-        contam = (
-            contamination_stats(train, ev, shingles=all_sh)
-            .filter(F.col("contamination") >= 0.5)
-            .select("doc_id")
-        )
-        stages = {
-            "gated": gated.select("doc_id"),
-            "exact": exact.select("doc_id"),
-            "cleaned": cleaned.select("doc_id"),
-            "contam": contam,
-        }
-        # overlap the four stage materializations (guide §2.6); `gated`
-        # and `exact` fill the shared caches on first touch, and the
-        # deeper frames reuse them
-        names = list(stages)
-        checkpointed = run_concurrent(
-            [(lambda f=stages[n]: f.localCheckpoint()) for n in names],
-            max_workers=2,
-        )
-        _C_STAGES_MEMO[key] = dict(zip(names, checkpointed))
-        exact.unpersist()
-        all_sh.unpersist()
-    return _C_STAGES_MEMO[key]
-
-
-_MINHASH_SIGS_MEMO: dict[tuple[str, str], DataFrame] = {}
+    docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
+    # ONE corpus-wide tokenize->shingle pass feeds the near-dup stage
+    # and decontamination (the dominant linear cost at scale)
+    all_sh = shingle_rows(docs, out_id="id").cache()
+    gated = quality_gate(docs, min_tokens=20)
+    exact = exact_dedup(gated).cache()
+    cleaned = drop_near_duplicates(exact, jaccard_threshold=0.8, shingles=all_sh)
+    train = cleaned.filter(F.col("doc_id") % 20 != 0)
+    ev = docs.filter(F.col("doc_id") % 20 == 0)
+    contam = (
+        contamination_stats(train, ev, shingles=all_sh)
+        .filter(F.col("contamination") >= 0.5)
+        .select("doc_id")
+    )
+    yield {
+        "gated": gated.select("doc_id"),
+        "exact": exact.select("doc_id"),
+        "cleaned": cleaned.select("doc_id"),
+        "contam": contam,
+    }
+    exact.unpersist()
+    all_sh.unpersist()
 
 
 def _minhash_sigs8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized 8-hash MinHash signature table over the corpus's
-    distinct 3-shingles — the identical aggregation d07/d23/d34 each
-    re-ran (localCheckpoint-backed; the _jac05_pairs rationale). One row
-    per doc with >=1 shingle, columns mh0..mh7."""
+    """8-hash MinHash signature table over the corpus's distinct
+    3-shingles for d07/d23/d34. One row per doc with >=1 shingle,
+    columns mh0..mh7. Built per call: a session memo did not pay here
+    (A/B in CHANGES.md)."""
     from goodreads_pyspark_spark.dedup.minhash import (
         minhash_signatures_from_shingles,
     )
     from goodreads_pyspark_spark.dedup.shingles import shingle_rows
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _MINHASH_SIGS_MEMO:
-        _evict_dead(_MINHASH_SIGS_MEMO, app)
-        docs = tbl(spark, sf_dir, "documents")
-        sh = shingle_rows(docs, out_id="doc_id")
-        _MINHASH_SIGS_MEMO[key] = minhash_signatures_from_shingles(
-            sh, "doc_id", num_hashes=8
-        ).localCheckpoint()
-    return _MINHASH_SIGS_MEMO[key]
+    sh = shingle_rows(tbl(spark, sf_dir, "documents"), out_id="doc_id")
+    sigs = minhash_signatures_from_shingles(sh, "doc_id", num_hashes=8)
+    return sigs.localCheckpoint()
 
 
 @query(
@@ -1418,9 +1350,7 @@ def d23_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8-byte join keys; the oracle hashes identically, so even a
     # collision matches bit-for-bit). Sizes stay raw: hashing is a
     # per-row bijection, row counts are unchanged.
-    shingle_class = (
-        F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint").alias("sh")
-    )
+    shingle_class = shingle_hash().alias("sh")
     sa = sh.select(F.col("doc_id").alias("doc_a"), shingle_class)
     sb = sh.select(F.col("doc_id").alias("doc_b"), shingle_class)
     common = (
@@ -1728,12 +1658,7 @@ def d28_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashes identically, so type counts match even under a collision).
     ssh = (
         base.select("source", F.explode(word_shingles(F.col("__toks"))).alias("sh"))
-        .select(
-            "source",
-            F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("sh"),
-        )
+        .select("source", shingle_hash().alias("sh"))
         .distinct()
         .cache()
     )
@@ -2357,12 +2282,7 @@ def d35_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct/exclusive type counts match even under a collision).
     ds = (
         shingle_rows(docs, out_id="doc_id")
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("sh"),
-        )
+        .select("doc_id", shingle_hash().alias("sh"))
         .join(docs.select("doc_id", "source"), "doc_id")
         .cache()
     )
@@ -3886,34 +3806,25 @@ def _d49_oracle(n_rounds: int = _D49_ROUNDS, eta: float = _D49_ETA) -> str:
     """
 
 
-_LOGIT_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def _logit_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Session-memoized d49/d52 classifier fit: the hashed feature frame
-    and the FINAL fitted weight table (both localCheckpoint-backed — the
-    _jac05_pairs rationale). d49 ranks the weights and d52 scores the
-    corpus against them; before the memo each ran the identical
-    2-round full-batch fit (tokenize + 2x2 linear passes) from scratch."""
+@session_memo
+def _logit_fit(spark: SparkSession, sf_dir: str):
+    """The d49/d52 classifier fit: the hashed feature frame and the FINAL
+    fitted weight table. d49 ranks the weights and d52 scores the corpus
+    against them."""
     from goodreads_pyspark_spark.functions.logistic import (
         feature_matrix,
         logistic_fit,
     )
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _LOGIT_MEMO:
-        _evict_dead(_LOGIT_MEMO, app)
-        docs = tbl(spark, sf_dir, "documents")
-        labels = docs.select(
-            "doc_id", F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y")
-        )
-        x = feature_matrix(docs).localCheckpoint()
-        w = logistic_fit(
-            x, labels, n_rounds=_D49_ROUNDS, eta=_D49_ETA
-        ).localCheckpoint()
-        _LOGIT_MEMO[key] = (x, w)
-    return _LOGIT_MEMO[key]
+    docs = tbl(spark, sf_dir, "documents")
+    labels = docs.select(
+        "doc_id", F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y")
+    )
+    x = feature_matrix(docs).cache()
+    yield x, logistic_fit(
+        x, labels, n_rounds=_D49_ROUNDS, eta=_D49_ETA, unpersist=False
+    )
+    x.unpersist()
 
 
 @query(
@@ -4477,12 +4388,7 @@ def d54_boilerplate_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IDENTICAL hash classes — ledger parity holds even under the
     # (2^-60-scale) collision, because both engines collide identically.
     ss = (
-        sh.select(
-            "doc_id",
-            F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("sh"),
-        )
+        sh.select("doc_id", shingle_hash().alias("sh"))
         .join(docs.select("doc_id", "source"), "doc_id")
         .select("source", "sh", "doc_id")
     )
@@ -5762,31 +5668,12 @@ def _d63_oracle() -> str:
     """
 
 
-_CONT2_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _containment_pairs2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized FULL 2-gram shingle-sharing pair table with
-    n_common/sizes/jaccard/containment at df cap ``_D63_CAP`` — the
-    exact verifier d63/d64/d65 each rebuilt from its own corpus pass
-    (localCheckpoint-backed; the _jac05_pairs rationale). The frame is
-    pair-count-sized (~1k rows at sf0.1): everything upstream — the
-    tokenize pass, the hashed inverted index, the size join — runs once
-    per (session, sf_dir)."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _CONT2_MEMO:
-        _evict_dead(_CONT2_MEMO, app)
-        _CONT2_MEMO[key] = _containment_pairs2_lazy(
-            spark, sf_dir
-        ).localCheckpoint()
-    return _CONT2_MEMO[key]
-
-
-def _containment_pairs2_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UNCHECKPOINTED containment-pair frame — exposed separately so
-    plan audits can assert on the real hashed-shingle join shape
-    (the _copart_lazy convention)."""
+    """FULL 2-gram shingle-sharing pair table with n_common/sizes/
+    jaccard/containment at df cap ``_D63_CAP`` — the exact verifier
+    d63-d67/d69 share. The frame is pair-count-sized (~1k rows at
+    sf0.1)."""
     from goodreads_pyspark_spark.dedup.ngram import (
         containment_pairs_from_shingles,
     )
@@ -5817,7 +5704,7 @@ def _containment_pairs2_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d63_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION
 
-    PRE_MATERIALIZATION["d63_containment_audit"] = _containment_pairs2_lazy(
+    PRE_MATERIALIZATION["d63_containment_audit"] = _containment_pairs2.__wrapped__(
         spark, sf_dir
     ).filter((F.col("containment") >= 0.4) & (F.col("jaccard") < 0.5))
     p = _containment_pairs2(spark, sf_dir).filter(
@@ -6085,12 +5972,9 @@ def _d65_oracle() -> str:
     """
 
 
-_D65_SIGS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _ensemble_sig_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized (id, sz, mh0..mh15) table over the 2-gram corpus
-    shingles (localCheckpoint-backed; the _jac05_pairs rationale) — the
+@session_memo
+def _ensemble_sig_sizes(spark: SparkSession, sf_dir: str):
+    """(id, sz, mh0..mh15) table over the 2-gram corpus shingles — the
     16-hash signature aggregation is the expensive corpus pass behind
     every ensemble consumer (d65/d66/d67), and its first 8 columns are
     exactly the d07-convention 8-hash signatures, so the plain-banding
@@ -6100,17 +5984,12 @@ def _ensemble_sig_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from goodreads_pyspark_spark.dedup.shingles import shingle_rows
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _D65_SIGS_MEMO:
-        _evict_dead(_D65_SIGS_MEMO, app)
-        docs = tbl(spark, sf_dir, "documents")
-        sh = shingle_rows(docs, shingle_n=2, out_id="id").cache()
-        sigs = minhash_signatures_from_shingles(sh, "id", _D65_HASHES)
-        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-        _D65_SIGS_MEMO[key] = sigs.join(sizes, "id").localCheckpoint()
-        sh.unpersist()
-    return _D65_SIGS_MEMO[key]
+    docs = tbl(spark, sf_dir, "documents")
+    sh = shingle_rows(docs, shingle_n=2, out_id="id").cache()
+    sigs = minhash_signatures_from_shingles(sh, "id", _D65_HASHES)
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+    yield sigs.join(sizes, "id")
+    sh.unpersist()
 
 
 @query(
@@ -6640,55 +6519,44 @@ def _d68_oracle() -> str:
     """
 
 
-_D68_INDEX_MEMO: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
-def _d68_standing_index(spark: SparkSession, sf_dir: str) -> dict:
-    """Session-memoized standing containment state over the %7!=0 corpus
-    (localCheckpoint-backed; the _jac05_pairs rationale) — in production
-    this is a PERSISTED table maintained across ingestion batches, so
-    the gate measuring only the per-batch probe cost is the honest
-    production shape; bench reports the build as its own kernel line."""
+def _d68_standing_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Standing containment state over the %7!=0 corpus — in production
+    a PERSISTED table maintained across ingestion batches, so its
+    consumers measure only the per-batch probe cost. Built per call: a
+    session memo did not pay here (A/B in CHANGES.md)."""
     from goodreads_pyspark_spark.dedup.ensemble import (
         build_containment_standing,
     )
     from goodreads_pyspark_spark.dedup.shingles import shingle_rows
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _D68_INDEX_MEMO:
-        _evict_dead(_D68_INDEX_MEMO, app)
-        docs = tbl(spark, sf_dir, "documents")
-        corpus_sh = shingle_rows(docs, shingle_n=2, out_id="id").filter(
+    docs = tbl(spark, sf_dir, "documents")
+    corpus_sh = shingle_rows(docs, shingle_n=2, out_id="id").filter(
+        F.col("id") % 7 != 0
+    ).cache()
+    standing = build_containment_standing(
+        corpus_sh,
+        id_col="id",
+        num_hashes=_D65_HASHES,
+        size_edges=_D65_EDGES,
+        rows_per_band=_D65_ROWS,
+        max_bucket=_D65_BUCKET,
+        max_df=_D63_CAP,
+        # signatures come from the shared kernel (bit-identical by
+        # construction: a doc's min-hashes depend only on its own
+        # shingles) — the standing build then costs one shingle
+        # pass instead of two
+        sig_sizes=_ensemble_sig_sizes(spark, sf_dir).filter(
             F.col("id") % 7 != 0
-        ).cache()
-        standing = build_containment_standing(
-            corpus_sh,
-            id_col="id",
-            num_hashes=_D65_HASHES,
-            size_edges=_D65_EDGES,
-            rows_per_band=_D65_ROWS,
-            max_bucket=_D65_BUCKET,
-            max_df=_D63_CAP,
-            # signatures come from the shared kernel (bit-identical by
-            # construction: a doc's min-hashes depend only on its own
-            # shingles) — the standing build then costs one shingle
-            # pass instead of two
-            sig_sizes=_ensemble_sig_sizes(spark, sf_dir).filter(
-                F.col("id") % 7 != 0
-            ),
-        )
-        # the five standing tables are independent given the shared
-        # pinned subtrees — overlap their materializations (guide §2.6)
-        names = list(standing)
-        checkpointed = run_concurrent(
-            [(lambda f=standing[n]: f.localCheckpoint()) for n in names],
-            max_workers=3,
-        )
-        _D68_INDEX_MEMO[key] = dict(zip(names, checkpointed))
-        corpus_sh.unpersist()
-    return _D68_INDEX_MEMO[key]
-
+        ),
+    )
+    # the five standing tables are independent given the shared
+    # pinned subtrees — overlap their materializations (guide §2.6)
+    names = list(standing)
+    checkpointed = run_concurrent(
+        [standing[n].localCheckpoint for n in names], max_workers=3
+    )
+    corpus_sh.unpersist()
+    return dict(zip(names, checkpointed))
 
 
 @query(
@@ -7350,10 +7218,7 @@ def d71_containment_threshold_sweep(
     # verify join (audit-only; the production path restricts to
     # candidates, which is the economy this sweep prices)
     inc = (
-        incoming_sh.withColumn(
-            "sh",
-            F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint"),
-        )
+        incoming_sh.withColumn("sh", shingle_hash())
         .withColumnRenamed("id", "incoming")
         .join(standing["hot"], "sh", "left_anti")
     )

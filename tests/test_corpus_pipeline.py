@@ -550,57 +550,94 @@ def test_substring_dedup_matches_pure_python_reference(spark):
     assert got == expect
 
 
-def test_neardup_kernel_memo_survives_clear_cache(spark):
-    """d06/c02/c04 share a session-memoized pairs+CC kernel. The memo is
-    localCheckpoint-backed precisely so the bench harness's per-query
-    spark.catalog.clearCache() cannot evict it — this pins that choice:
-    after a clearCache, the memoized frame must still return the same
-    rows WITHOUT recomputing from raw text (its plan is a checkpoint
-    scan, not the inverted-index join)."""
-    from goodreads_pyspark_spark.queries.documents import (
-        _JAC05_MEMO,
-        _jac05_pairs,
-        _neardup_cc,
-    )
+def _memo_kernels():
+    from goodreads_pyspark_spark.queries import documents, graph
+
+    return [
+        documents._jac05_pairs,
+        documents._neardup_cc,
+        documents._c_pipeline_stages,
+        documents._logit_fit,
+        documents._containment_pairs2,
+        documents._ensemble_sig_sizes,
+        graph._copart_pairs,
+    ]
+
+
+def _frame_rows(value):
+    """Sorted rows of each frame in a kernel's frame, tuple or dict."""
+    from pyspark.sql import DataFrame
+
+    if isinstance(value, DataFrame):
+        frames = [value]
+    else:
+        frames = list(value.values() if isinstance(value, dict) else value)
+    return [sorted(map(tuple, f.collect())) for f in frames], frames
+
+
+@pytest.mark.parametrize("kernel", _memo_kernels(), ids=lambda k: k.__name__)
+def test_session_memo_survives_clear_cache(spark, kernel):
+    """A shared kernel is built and checkpointed once per session and
+    input: after a clearCache the memo returns the same object with the
+    same rows, read from the checkpoint (its plan is an RDD scan, not a
+    parquet scan plus joins over raw text), and those rows equal a fresh
+    build by the unmaterialised builder."""
+    from types import GeneratorType
 
     sf = "/root/testdata/sf0.001"
-    first = _jac05_pairs(spark, sf)
-    before = sorted(map(tuple, first.collect()))
-    cc_before = sorted(map(tuple, _neardup_cc(spark, sf).collect()))
+    first = kernel(spark, sf)
+    before, _ = _frame_rows(first)
     spark.catalog.clearCache()
-    again = _jac05_pairs(spark, sf)
-    assert again is first, "memo must return the same frame per (app, sf)"
-    assert sorted(map(tuple, again.collect())) == before
-    assert sorted(map(tuple, _neardup_cc(spark, sf).collect())) == cc_before
-    # checkpoint-backed: the plan bottoms out in an RDD scan, not a parquet
-    # scan + join over raw text
-    plan = again._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan
-    key = (spark.sparkContext.applicationId, sf)
-    assert key in _JAC05_MEMO
-
-
-def test_stage_and_minhash_memos_survive_clear_cache(spark):
-    """Same pin as the jac05 memo for the other two shared kernels: the
-    c01/c03/c06 stage id-frames and the d07/d23/d34 signature table must
-    return the identical (checkpoint-backed) frames after a clearCache,
-    with unchanged contents."""
-    from goodreads_pyspark_spark.queries.documents import (
-        _c_pipeline_stages,
-        _minhash_sigs8,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    stages = _c_pipeline_stages(spark, sf)
-    sigs = _minhash_sigs8(spark, sf)
-    cleaned_before = sorted(r[0] for r in stages["cleaned"].collect())
-    sig_count = sigs.count()
-    spark.catalog.clearCache()
-    stages2 = _c_pipeline_stages(spark, sf)
-    assert stages2["cleaned"] is stages["cleaned"]
-    assert _minhash_sigs8(spark, sf) is sigs
-    assert sorted(r[0] for r in stages2["cleaned"].collect()) == cleaned_before
-    assert sigs.count() == sig_count
-    for frame in stages2.values():
+    again = kernel(spark, sf)
+    assert again is first, "memo must return the same frames per session+input"
+    rows, frames = _frame_rows(again)
+    assert rows == before
+    for frame in frames:
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "Scan ExistingRDD" in plan
+    built = kernel.__wrapped__(spark, sf)
+    if isinstance(built, GeneratorType):
+        assert _frame_rows(next(built))[0] == before
+        next(built, None)  # the builder releases its intermediate caches
+    else:
+        assert _frame_rows(built)[0] == before
+
+
+def test_session_memo_rebuilds_on_changed_input(spark, tmp_path):
+    """The memo key covers the files under sf_dir: after documents and
+    lineitem are rewritten, d06 and g07 must match their oracles on the
+    new files instead of serving the first build."""
+    import os
+    import shutil
+
+    import duckdb
+
+    from goodreads_pyspark_spark.queries import REGISTRY
+    from tests.test_oracle_parity import _norm
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree("/root/testdata/sf0.001", sf, copy_function=shutil.copyfile)
+    queries = [REGISTRY["d06_jaccard_neardup_pairs"], REGISTRY["g07_triangle_count"]]
+    for q in queries:
+        q.spark_fn(spark, sf).collect()
+    rewrites = {"documents": "doc_id % 2 = 0", "lineitem": "l_orderkey % 2 = 0"}
+    for table, keep in rewrites.items():
+        path = os.path.join(sf, f"{table}.parquet")
+        duckdb.sql(
+            f"COPY (SELECT * FROM read_parquet('{path}') WHERE {keep}) "
+            f"TO '{path}.new' (FORMAT parquet)"
+        )
+        os.replace(f"{path}.new", path)
+    spark.catalog.clearCache()
+    spark.catalog.refreshByPath(sf)
+    con = duckdb.connect()
+    for table in rewrites:
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{sf}/{table}.parquet')"
+        )
+    for q in queries:
+        sdf = q.spark_fn(spark, sf)
+        res = con.execute(q.oracle)
+        d_cols = [d[0] for d in res.description]
+        got = _norm(sdf.columns, sdf.collect())
+        assert got == _norm(d_cols, res.fetchall()), q.name

@@ -513,22 +513,3 @@ def test_hits_scaled_rescale_survives_large_mass(spark):
     }
     # all mass lands on the single sink: auth = (n*scale * scale) div (n*scale)
     assert out[100] == scale
-
-
-def test_copart_pair_memo_survives_clear_cache(spark):
-    """g07/g08/g11 share the session-memoized distinct co-occurrence
-    pair table (the _jac05_pairs discipline): after a clearCache the
-    memo must return the identical checkpoint-backed frame with
-    unchanged contents, and the three consumers must agree with it."""
-    from goodreads_pyspark_spark.queries.graph import _COPART_MEMO, _copart_pairs
-
-    sf = "/root/testdata/sf0.001"
-    first = _copart_pairs(spark, sf)
-    before = sorted(map(tuple, first.collect()))
-    spark.catalog.clearCache()
-    again = _copart_pairs(spark, sf)
-    assert again is first, "memo must return the same frame per (app, sf)"
-    assert sorted(map(tuple, again.collect())) == before
-    plan = again._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan
-    assert (spark.sparkContext.applicationId, sf) in _COPART_MEMO

@@ -55,6 +55,34 @@ def test_als_recommendations_explode(split):
     assert per_user <= 3
 
 
+def test_unknown_serve_ids_give_defined_answers(spark, goodreads_tables, split):
+    """Every serve request kind answers an id it has never seen with a
+    defined empty result, not an exception."""
+    from goodreads_pyspark_spark.pipelines.goodreads import (
+        get_book_title,
+        get_to_read_titles,
+        recommend_by_book,
+    )
+    from goodreads_pyspark_spark.similarity.ann import brute_force_knn
+
+    books, users = goodreads_tables.books, goodreads_tables.users
+    unknown = -1
+    clustered = books.select("book_id", "title", F.lit(0).alias("prediction"))
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(5)],
+        "vec_id int, embedding array<double>",
+    )
+    model = fit_als(split[0], rank=4, maxIter=2, seed=42)
+    unseen = spark.createDataFrame([(unknown,)], "user_id int")
+
+    assert get_book_title(books, unknown) is None
+    assert get_to_read_titles(books, users, unknown).count() == 0
+    assert recommend_by_book(clustered, unknown).count() == 0
+    assert brute_force_knn(emb, unknown).count() == 0
+    recs = model.recommendForUserSubset(unseen, 3)
+    assert explode_recommendations(recs).count() == 0
+
+
 def test_als_grid_cv_surface(split):
     # the notebook builds a 4x4x4 grid (goodreads.py:244-262) but never fits
     # it; we fit a deliberately tiny grid to prove the surface works.

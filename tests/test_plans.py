@@ -348,14 +348,14 @@ def test_g07_no_cartesian_and_pruned_scan(spark):
     # (g07/g08/g11 share one build), so the pruned-scan assertion runs
     # against the KERNEL's lazy plan and the query plan is asserted to
     # actually consume the checkpoint.
-    from goodreads_pyspark_spark.queries.graph import _copart_lazy
+    from goodreads_pyspark_spark.queries.graph import _copart_pairs
 
     plan = plan_of(spark, "g07_triangle_count")
     assert "CartesianProduct" not in plan
     assert "Scan ExistingRDD" in plan, "must consume the memoized kernel"
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        _copart_lazy(spark, SF).explain("formatted")
+        _copart_pairs.__wrapped__(spark, SF).explain("formatted")
     kplan = buf.getvalue()
     assert "CartesianProduct" not in kplan
     schemas = [seg.splitlines()[0] for seg in kplan.split("ReadSchema:")[1:]]

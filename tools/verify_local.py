@@ -80,6 +80,7 @@ def main() -> int:
     else:
         spark = get_spark("verify_local")
     failures, passed = [], 0
+    t_start = time.time()
     for name, q in sorted(REGISTRY.items()):
         if only and name not in only:
             continue
@@ -126,7 +127,10 @@ def main() -> int:
             print(f"ok   {name}: {len(s_rows)} rows match {time.time()-t0:.1f}s")
             passed += 1
 
-    print(f"\n{passed} passed, {len(failures)} failed")
+    print(
+        f"\n{passed} passed, {len(failures)} failed "
+        f"in {time.time() - t_start:.1f}s"
+    )
     return 1 if failures else 0
 
 
