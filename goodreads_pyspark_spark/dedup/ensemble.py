@@ -63,15 +63,13 @@ DEFAULT_SIZE_EDGES: tuple[int, ...] = (24, 48, 72)
 DEFAULT_ROWS_PER_BAND: tuple[int, ...] = (2, 2, 1, 1)
 
 
-def _pin(df: DataFrame, registry: list | None) -> DataFrame:
-    """cache() that optionally hands the unpersist handle back to the
-    caller. Long-running callers (s15's foreachBatch probes once per
-    micro-batch; d69 sweeps three configs) must pass a registry and
-    unpersist after materializing, or per-call caches accumulate
-    unboundedly over the job's lifetime."""
+def _pin(df: DataFrame, registry: list) -> DataFrame:
+    """cache() that hands the unpersist handle back to the caller: every
+    function here pins its per-call caches in ``registry``, and the
+    caller unpersists them once it has materialized what it needs —
+    otherwise per-call caches accumulate for the session's lifetime."""
     df = df.cache()
-    if registry is not None:
-        registry.append(df)
+    registry.append(df)
     return df
 
 
@@ -92,7 +90,8 @@ def lsh_ensemble_candidate_pairs(
     max_bucket: int | None = 100,
     max_probe: int | None = None,
     sig_sizes: DataFrame | None = None,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Oriented containment candidates ``(contained, container)`` from a
     prebuilt ``(id_col, sh)`` distinct-shingle table — or, when
@@ -275,7 +274,8 @@ def incremental_containment_matches(
     max_df: int | None = 100,
     threshold: float = 0.8,
     prebuilt_standing: dict[str, DataFrame] | None = None,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Ingestion-time containment dedup: incoming docs that are
     ``threshold``-contained in a STANDING corpus doc — the d19
@@ -314,6 +314,7 @@ def incremental_containment_matches(
         rows_per_band,
         max_bucket,
         max_df,
+        cache_registry=cache_registry,
     )
     return _containment_probe(
         standing,
@@ -351,7 +352,8 @@ def build_containment_standing(
     rows_per_band: tuple[int, ...] = DEFAULT_ROWS_PER_BAND,
     max_bucket: int | None = 100,
     max_df: int | None = 100,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
     sig_sizes: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """The ENTIRE standing half of incremental containment admission,
@@ -435,7 +437,8 @@ def extend_containment_standing(
     rows_per_band: tuple[int, ...] = DEFAULT_ROWS_PER_BAND,
     max_bucket: int | None = 100,
     max_df: int | None = 100,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> dict[str, DataFrame]:
     """Fold an ADMITTED batch into the standing containment state —
     the index-maintenance step that closes the production ingest loop
@@ -634,7 +637,8 @@ def containment_probe_candidates(
     rows_per_band: tuple[int, ...] = DEFAULT_ROWS_PER_BAND,
     threshold: float = 0.8,
     incoming_sig_sizes: DataFrame | None = None,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Candidate (incoming, container) pairs from probing the standing
     index — the banding half of the incremental path, exposed so audits
@@ -696,14 +700,13 @@ def _containment_probe(
     size_edges: tuple[int, ...],
     rows_per_band: tuple[int, ...],
     threshold: float,
-    cache_registry: list | None = None,
+    cache_registry: list,
 ) -> DataFrame:
     """The per-batch half: probe the standing index, verify exact
     containment on candidates only (standing-df-capped shingle space,
     over-df shingles excluded on both sides). Per-call caches go in
-    ``cache_registry`` when given — repeated callers (one probe per
-    micro-batch) unpersist them after materializing, or pinned caches
-    accumulate for the life of the stream."""
+    ``cache_registry`` — repeated callers (one probe per micro-batch)
+    unpersist them after materializing."""
     hot = standing["hot"]
     cand = containment_probe_candidates(
         standing,

@@ -16,7 +16,8 @@ Oracle-parity rules (hard-won; keep them):
   * Any ORDER BY ... LIMIT must have a unique total order (append a key
     column as tiebreak) or ties make the row set nondeterministic.
   * Arrays in result cells must be sorted on both sides.
-  * Timestamp ops pin the session to UTC (configure_for_oracle).
+  * Timestamp ops need the session pinned to UTC, which ``tbl()`` does on
+    every load (so load before building a time-zone-dependent expression).
 """
 
 from __future__ import annotations

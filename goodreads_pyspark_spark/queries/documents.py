@@ -9,7 +9,10 @@ empties.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from contextlib import contextmanager
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.dedup import (
@@ -17,7 +20,22 @@ from goodreads_pyspark_spark.dedup import (
     lsh_candidate_pairs,
     simhash_signatures,
 )
-from goodreads_pyspark_spark.dedup.shingles import shingle_hash
+from goodreads_pyspark_spark.dedup.ensemble import (
+    _pin,
+    build_containment_standing,
+    containment_probe_candidates,
+    equi_depth_edges,
+    extend_containment_standing,
+    incremental_containment_matches,
+    lsh_ensemble_candidate_pairs,
+)
+from goodreads_pyspark_spark.dedup.minhash import (
+    _band_signatures,
+    lsh_candidate_pairs_from_signatures,
+    minhash_signatures_from_shingles,
+)
+from goodreads_pyspark_spark.dedup.ngram import containment_pairs_from_shingles
+from goodreads_pyspark_spark.dedup.shingles import shingle_hash, shingle_rows
 from goodreads_pyspark_spark.functions.text import (
     EN_STOPWORDS,
     doc_fingerprint,
@@ -26,7 +44,7 @@ from goodreads_pyspark_spark.functions.text import (
     tokens,
 )
 from goodreads_pyspark_spark.operators.concurrency import run_concurrent
-from goodreads_pyspark_spark.queries import query
+from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION, query
 from goodreads_pyspark_spark.queries._helpers import session_memo, tbl
 
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
@@ -5624,35 +5642,422 @@ def d61_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- containment (asymmetric) near-dup audit (new in r9) ----------------------
+# --- LSH-Ensemble containment family -----------------------------------------
+# d63-d71, io18, io21, io22 and s15 share one index geometry, one DuckDB
+# replay of it and one Spark scaffold. Each oracle is composed from the
+# plain-SQL builders below (numbers and CTE names in, CTE text out); each
+# Spark body calls dedup/ensemble.py with ``_ENSEMBLE``, releases what it
+# pins through ``_released`` and reports through ``_ledger``/``_checksum``.
+
 #: df cap for the 2-gram containment index (same rationale as D06_MAX_DF).
 _D63_CAP = 100
+_D65_HASHES = 16
+_D65_EDGES = (24, 48, 72)
+_D65_ROWS = (2, 2, 1, 1)
+_D65_BUCKET = 50
+_D67_THRESHOLD = 0.8  # drop docs >=80%-contained in a larger doc
+_D68_THRESHOLD_NUM = 8  # containment threshold 8/10 — integer-exact
+#: The index geometry every dedup/ensemble.py call of the family takes.
+_ENSEMBLE = {
+    "id_col": "id",
+    "num_hashes": _D65_HASHES,
+    "size_edges": _D65_EDGES,
+    "rows_per_band": _D65_ROWS,
+}
+#: d63's containment-only pairs (SQL for both engines).
+_CONTAINMENT_ONLY = "containment >= 0.4 AND jaccard < 0.5"
+#: The admission split: the %7 batch against the standing rest. %7, not
+#: %10: the synthetic source column is doc_id%20, so a %10 batch would
+#: land in only two sources — %7 is coprime with the layout and spreads
+#: the batch over every source (~14% of docs).
+_STANDING, _BATCH = "doc_id % 7 <> 0", "doc_id % 7 = 0"
+_D67_LEDGER = ("n_docs", "n_dropped", "n_kept", "dropped_checksum")
+_D68_LEDGER = ("n_incoming", "n_rejected", "n_admitted", "rejected_checksum")
 
 
-def _d63_oracle() -> str:
-    return f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
+def _sql_h60(expr: str) -> str:
+    """DuckDB mirror of the engine's 60-bit md5-prefix hash of ``expr``."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
+
+
+def _sql_checksum(expr: str) -> str:
+    """Order-independent checksum aggregate of ``expr``'s non-null values
+    (sum of their md5-prefix hashes) as a decimal string — the gate cell
+    that pins an exact set, not just its size. Mirror of ``_checksum``."""
+    h = _sql_h60(f"CAST({expr} AS VARCHAR)")
+    return f"CAST(CAST(COALESCE(SUM({h}), 0) AS DECIMAL(38,0)) AS VARCHAR)"
+
+
+def _sql_count(rows: str) -> str:
+    return f"CAST((SELECT COUNT(*) FROM {rows}) AS BIGINT)"
+
+
+def _sql_recall(hit: str, of: str) -> str:
+    """``|hit| / |of|`` as a double, NULL when ``of`` is empty."""
+    return (
+        f"CAST((SELECT COUNT(*) FROM {hit}) AS DOUBLE)"
+        f" / NULLIF((SELECT COUNT(*) FROM {of}), 0)"
+    )
+
+
+def _sql_shingles() -> str:
+    """``tk`` (tokens), ``sh0`` (doc_id, distinct 2-gram shingle) and
+    ``shh`` (the same rows with the engine's 60-bit shingle hash)."""
+    return f"""tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
+    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
               range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
             FROM tk WHERE len(t) >= 2),
-    shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh0),
-    dfreq AS (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {_D63_CAP}),
-    sz AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS n_common
-              FROM shf a JOIN shf b USING (sh)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-    p AS (SELECT doc_a, doc_b, n_common, sa.sz AS sz_a, sb.sz AS sz_b,
-                 CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common)
-                   AS jaccard,
-                 CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz)
-                   AS containment
-          FROM inter
+    shh AS MATERIALIZED (SELECT doc_id, {_sql_h60("sh")} AS sh FROM sh0)"""
+
+
+def _sql_part(size: str, edges=_D65_EDGES) -> str:
+    """Size partition of the expression ``size`` over exclusive upper
+    ``edges`` — the engine's ``_partition_of``."""
+    whens = " ".join(f"WHEN {size} < {e} THEN {p}" for p, e in enumerate(edges))
+    return f"CASE {whens} ELSE {len(edges)} END"
+
+
+def _sql_signatures(parts: dict[str, str], edges=_D65_EDGES, join="") -> str:
+    """``sig``: per ``sh0`` doc its salted min-hashes ``mh0..``, its
+    shingle count ``sz`` and one partition column per ``parts`` entry
+    (name -> size expression, e.g. a probe floor over ``sz``); ``join``
+    brings in data-dependent ``edges``. A doc's signature depends only on
+    its own shingles, so one table serves every corpus split."""
+    mins = ",\n           ".join(
+        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
+    )
+    cols = "".join(f", {_sql_part(v, edges)} AS {n}" for n, v in parts.items())
+    return f"""sig AS MATERIALIZED (SELECT *{cols} FROM (SELECT doc_id,
+           {mins},
+           count(*) AS sz FROM sh0 GROUP BY doc_id) s{join})"""
+
+
+def _sql_band_keys(
+    cols: str, out="keys", rows=_D65_ROWS, n_hashes=_D65_HASHES, key=_sql_h60
+) -> str:
+    """``out``: ``cols`` of ``sig`` plus (p, band, key) for every band of
+    every partition's rows-per-band scheme. Index sides keep
+    ``p = part``; probe sides keep ``p >= part`` or ``p >= pmin``."""
+    branches = [
+        f"SELECT {cols}, {p} AS p, {b} AS band, "
+        f"{key(' || '.join(f'mh{b * r + k}' for k in range(r)))} AS key FROM sig"
+        for p, r in enumerate(rows)
+        for b in range(n_hashes // r)
+    ]
+    return f"{out} AS MATERIALIZED (\n      " + "\n      UNION ALL ".join(
+        branches
+    ) + ")"
+
+
+def _sql_capped(out: str, src: str, cap: int) -> str:
+    """``{out}_n``: the (p, band, key) bucket sizes of ``src``; ``out``:
+    ``src``'s rows in buckets of at most ``cap``."""
+    return f"""{out}_n AS MATERIALIZED (SELECT p, band, key, count(*) AS n
+          FROM {src} GROUP BY 1, 2, 3),
+    {out} AS MATERIALIZED (SELECT {src}.* FROM {src}
+          JOIN {out}_n USING (p, band, key) WHERE n <= {cap})"""
+
+
+def _sql_plain_cands(out: str, cap: int) -> str:
+    """``out``: (doc_a < doc_b) pairs sharing a d07-convention band (4
+    bands of 2 over ``sig``'s mh0..mh7, md5 keys) in a bucket of at most
+    ``cap`` docs — the Jaccard-banding baseline."""
+    keys = _sql_band_keys(
+        "doc_id", f"{out}_k", rows=(2,), n_hashes=8, key=lambda e: f"md5({e})"
+    )
+    return f"""{keys},
+    {_sql_capped(f"{out}_f", f"{out}_k", cap)},
+    {out} AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM {out}_f a JOIN {out}_f b USING (p, band, key)
+          WHERE a.doc_id < b.doc_id)"""
+
+
+def _sql_ensemble_cands(out: str, rows=_D65_ROWS) -> str:
+    """``out``: (doc_a < doc_b) LSH-Ensemble candidates over ``sig`` (its
+    ``part`` column): each doc indexed under its own partition's scheme
+    (buckets capped at ``_D65_BUCKET``) and probing every partition at or
+    above its own (probe buckets capped at 4x), the smaller doc probing
+    the larger (doc_id breaks size ties)."""
+    k = f"{out}_keys"
+    return f"""{_sql_band_keys("doc_id, sz, part", k, rows)},
+    {out}_i0 AS MATERIALIZED (SELECT * FROM {k} WHERE p = part),
+    {_sql_capped(f"{out}_i", f"{out}_i0", _D65_BUCKET)},
+    {out}_q0 AS MATERIALIZED (SELECT * FROM {k} WHERE p >= part),
+    {_sql_capped(f"{out}_q", f"{out}_q0", 4 * _D65_BUCKET)},
+    {out} AS MATERIALIZED (SELECT DISTINCT
+            LEAST(q.doc_id, x.doc_id) AS doc_a,
+            GREATEST(q.doc_id, x.doc_id) AS doc_b
+          FROM {out}_q q JOIN {out}_i x USING (p, band, key)
+          WHERE q.sz < x.sz OR (q.sz = x.sz AND q.doc_id < x.doc_id))"""
+
+
+def _sql_df_cap(sfx: str, member: str) -> str:
+    """Over the ``shh`` rows of docs matching ``member``: ``dfreq{sfx}``
+    (shingle doc frequency), ``hot{sfx}`` (shingles above ``_D63_CAP``)
+    and ``st{sfx}`` (those rows without hot shingles)."""
+    return f"""dfreq{sfx} AS MATERIALIZED (SELECT sh, count(*) AS df FROM shh
+          WHERE {member} GROUP BY sh),
+    hot{sfx} AS MATERIALIZED (SELECT sh FROM dfreq{sfx} WHERE df > {_D63_CAP}),
+    st{sfx} AS MATERIALIZED (SELECT * FROM shh
+          WHERE {member} AND sh NOT IN (SELECT sh FROM hot{sfx}))"""
+
+
+def _sql_exact_pairs() -> str:
+    """d63's exact verifier: the df cap over every doc, ``pr`` — each
+    pair doc_a < doc_b sharing a capped shingle, with n_common, capped
+    sizes sz_a/sz_b, jaccard and containment — and ``cont``, its
+    containment-only pairs."""
+    return f"""{_sql_df_cap("", "TRUE")},
+    sz AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM st GROUP BY doc_id),
+    pr AS MATERIALIZED (SELECT doc_a, doc_b, n_common,
+             sa.sz AS sz_a, sb.sz AS sz_b,
+             CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) AS jaccard,
+             CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz) AS containment
+          FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                       count(*) AS n_common
+                FROM st a JOIN st b USING (sh)
+                WHERE a.doc_id < b.doc_id GROUP BY 1, 2) i
           JOIN sz sa ON sa.doc_id = doc_a
-          JOIN sz sb ON sb.doc_id = doc_b)
+          JOIN sz sb ON sb.doc_id = doc_b),
+    cont AS MATERIALIZED (SELECT doc_a, doc_b FROM pr WHERE {_CONTAINMENT_ONLY})"""
+
+
+def _sql_standing(sfx: str, member: str) -> str:
+    """Standing containment state of the docs matching ``member``:
+    ``idx{sfx}`` (own-partition band keys, buckets capped; pre-cap sizes
+    in ``idx{sfx}_n``) and the df cap (``_sql_df_cap``)."""
+    return f"""idx0{sfx} AS MATERIALIZED (SELECT doc_id, p, band, key FROM keys
+          WHERE p = part AND {member}),
+    {_sql_capped(f"idx{sfx}", f"idx0{sfx}", _D65_BUCKET)},
+    {_sql_df_cap(sfx, member)}"""
+
+
+def _sql_probe(out: str, batch: str, floor: str, sfx="") -> str:
+    """``out``: (incoming, container) pairs where a doc matching ``batch``
+    shares a band key with the standing index ``idx{sfx}`` in a
+    partition at or above ``floor``."""
+    return f"""{out} AS MATERIALIZED (SELECT DISTINCT
+            q.doc_id AS incoming, x.doc_id AS container
+          FROM (SELECT * FROM keys WHERE {batch} AND p >= {floor}) q
+          JOIN idx{sfx} x USING (p, band, key))"""
+
+
+def _sql_verify(sfx: str, batch: str) -> str:
+    """``common{sfx}``: (incoming, container, n_common, sz_in) for every
+    doc matching ``batch`` and every standing doc of state ``sfx`` it
+    shares a shingle with, in the standing df-capped space (hot shingles
+    dropped on both sides, so ``sz_in`` counts the incoming doc's rest)."""
+    return f"""incf{sfx} AS MATERIALIZED (SELECT doc_id AS incoming, sh FROM shh
+          WHERE {batch} AND sh NOT IN (SELECT sh FROM hot{sfx})),
+    szin{sfx} AS MATERIALIZED (SELECT incoming, count(*) AS sz_in
+          FROM incf{sfx} GROUP BY incoming),
+    common{sfx} AS MATERIALIZED (SELECT * FROM (
+            SELECT i.incoming, s.doc_id AS container, count(*) AS n_common
+            FROM incf{sfx} i JOIN st{sfx} s USING (sh) GROUP BY 1, 2) c
+          JOIN szin{sfx} USING (incoming))"""
+
+
+def _sql_admit(sfx: str, batch: str) -> str:
+    """d68's per-batch half against standing state ``sfx``: candidates
+    ``cand{sfx}`` from the ``pmin`` probe floor, exact verification, the
+    ``matches{sfx}`` at ``_D68_THRESHOLD_NUM``/10 and ``rejected{sfx}``
+    (doc_id), their distinct incoming docs."""
+    t = _D68_THRESHOLD_NUM
+    return f"""{_sql_probe(f"cand{sfx}", batch, "pmin", sfx)},
+    {_sql_verify(sfx, batch)},
+    matches{sfx} AS MATERIALIZED (SELECT incoming, container FROM common{sfx}
+          JOIN cand{sfx} USING (incoming, container)
+          WHERE CAST(n_common AS DOUBLE) / sz_in >= {t} / 10.0),
+    rejected{sfx} AS MATERIALIZED (SELECT DISTINCT incoming AS doc_id
+          FROM matches{sfx})"""
+
+
+def _sql_admission() -> str:
+    """d68's replay: shingles, signatures with the 0.8 probe floor
+    ``pmin`` (|q∩x| <= |x| forces |x| >= 0.8|q|, integer-exact ceil),
+    band keys, the standing state of ``_STANDING`` and the admission of
+    ``_BATCH`` against it."""
+    floor = f"(({_D68_THRESHOLD_NUM} * sz + 9) // 10)"
+    return f"""{_sql_shingles()},
+    {_sql_signatures({"part": "sz", "pmin": floor})},
+    {_sql_band_keys("doc_id, sz, part, pmin")},
+    {_sql_standing("", _STANDING)},
+    {_sql_admit("", _BATCH)}"""
+
+
+def _sql_size_quantiles() -> str:
+    """``cum`` (size, cumulative doc count) over ``sh0``'s set sizes,
+    ``tot`` (doc count) and ``edges`` (e1..e3): the exact equi-depth
+    edges — the smallest size whose cumulative count reaches
+    ceil(k*n/4), plus one — the arithmetic of ``equi_depth_edges``
+    (integer-exact ceil (k*n + 3) // 4 matches its -(-k*n // P))."""
+    edge = (
+        "(SELECT min(sz) + 1 FROM cum CROSS JOIN tot"
+        " WHERE cum >= ({k} * n + 3) // 4)"
+    )
+    return f"""hist AS MATERIALIZED (SELECT sz, count(*) AS c FROM (
+          SELECT doc_id, count(*) AS sz FROM sh0 GROUP BY doc_id) s GROUP BY sz),
+    cum AS MATERIALIZED (SELECT sz, sum(c) OVER (ORDER BY sz
+             ROWS UNBOUNDED PRECEDING) AS cum FROM hist),
+    tot AS MATERIALIZED (SELECT sum(c) AS n FROM hist),
+    edges AS MATERIALIZED (SELECT {edge.format(k=1)} AS e1,
+      {edge.format(k=2)} AS e2,
+      {edge.format(k=3)} AS e3)"""
+
+
+def _sql_ledger(flagged: str, names: tuple[str, ...], where="TRUE") -> str:
+    """The per-source gate row over the documents matching ``where``: how
+    many, how many are in ``flagged`` (doc_id), how many not, and the
+    checksum of the flagged ids. Mirror of ``_ledger``."""
+    n_all, n_flagged, n_rest, checksum = names
+    return f"""SELECT d.source,
+           CAST(COUNT(*) AS BIGINT) AS {n_all},
+           CAST(COUNT(f.doc_id) AS BIGINT) AS {n_flagged},
+           CAST(COUNT(*) - COUNT(f.doc_id) AS BIGINT) AS {n_rest},
+           {_sql_checksum("f.doc_id")} AS {checksum}
+    FROM documents d LEFT JOIN {flagged} f USING (doc_id)
+    WHERE {where}
+    GROUP BY d.source ORDER BY d.source"""
+
+
+@contextmanager
+def _released():
+    """A cache registry for dedup/ensemble.py calls: every frame in it is
+    unpersisted when the block exits, on every exit path. A query builds
+    its small result inside the block and checkpoints it there."""
+    caches: list[DataFrame] = []
+    try:
+        yield caches
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
+def _materialize(name: str, out: DataFrame) -> DataFrame:
+    """Checkpoint query ``name``'s result so its caches can be released;
+    the lazy frame stays in ``PRE_MATERIALIZATION`` for plan audits."""
+    PRE_MATERIALIZATION[name] = out
+    return out.localCheckpoint()
+
+
+def _checksum(col: Column) -> Column:
+    """Order-independent checksum aggregate of ``col``'s non-null values
+    as a decimal string. Mirror of ``_sql_checksum``."""
+    h = F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10)
+    return (
+        F.coalesce(F.sum(h.cast("bigint").cast("decimal(38,0)")), F.lit(0))
+        .cast("decimal(38,0)")
+        .cast("string")
+    )
+
+
+def _ledger(
+    docs: DataFrame, flagged: DataFrame, names: tuple[str, ...]
+) -> DataFrame:
+    """Per-source gate row of ``docs`` (doc_id, source): how many, how
+    many are among the ``flagged`` doc ids, how many not, and the
+    checksum of the flagged ids. Mirror of ``_sql_ledger``."""
+    n_all, n_flagged, n_rest, checksum = names
+    fid = F.when(F.col("__hit"), F.col("doc_id"))
+    hits = F.broadcast(flagged.withColumn("__hit", F.lit(True)))
+    return (
+        docs.select("doc_id", "source")
+        .join(hits, "doc_id", "left")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias(n_all),
+            F.count(fid).cast("bigint").alias(n_flagged),
+            (F.count(F.lit(1)) - F.count(fid)).cast("bigint").alias(n_rest),
+            _checksum(fid).alias(checksum),
+        )
+        .orderBy("source")
+    )
+
+
+def _fingerprints(
+    specs: dict[str, tuple[DataFrame, Column | None]]
+) -> dict[str, tuple[int, str]]:
+    """(row count, ``c``) per tagged frame, where ``c`` is the given
+    one-row aggregate (a checksum, say) or "". One Spark job: a union of
+    one-row aggregates lets the scheduler overlap every scan."""
+    parts = [
+        df.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            (F.lit("") if c is None else c.cast("string")).alias("c"),
+        ).select(F.lit(tag).alias("t"), "n", "c")
+        for tag, (df, c) in specs.items()
+    ]
+    merged = reduce(DataFrame.unionByName, parts)
+    return {r["t"]: (r["n"], r["c"]) for r in merged.collect()}
+
+
+def _count_row(frames: dict[str, DataFrame]) -> DataFrame:
+    """One row with the row count of each frame, named by its key."""
+    rows = [
+        df.agg(F.count(F.lit(1)).cast("bigint").alias(n))
+        for n, df in frames.items()
+    ]
+    return reduce(lambda a, b: a.crossJoin(F.broadcast(b)), rows)
+
+
+def _ratio(num: str, den: str) -> Column:
+    """``num / den`` as a double, NULL on a zero denominator (Spark's
+    non-ANSI division would give NULL, DuckDB's NaN/inf: NULLIF on both
+    sides)."""
+    return F.when(F.col(den) > 0, F.col(num).cast("double") / F.col(den))
+
+
+def _containment_only(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _containment_pairs2(spark, sf_dir).filter(_CONTAINMENT_ONLY)
+
+
+def _ensemble_candidates(ss: DataFrame, caches: list, **over) -> DataFrame:
+    """(doc_a < doc_b) LSH-Ensemble candidates over the shared signature
+    table ``ss``, with ``over`` replacing parts of the family geometry."""
+    return lsh_ensemble_candidate_pairs(
+        None,
+        sig_sizes=ss,
+        cache_registry=caches,
+        **{**_ENSEMBLE, "max_bucket": _D65_BUCKET, **over},
+    ).select(
+        F.least("contained", "container").alias("doc_a"),
+        F.greatest("contained", "container").alias("doc_b"),
+    )
+
+
+def _plain_band_candidates(ss: DataFrame, max_bucket: int, caches: list):
+    """The d07-convention banding baseline (8 hashes, 4 bands of 2) over
+    the first 8 hash columns of the shared signature table.
+    ``lsh_candidate_pairs_from_signatures`` pins its banded key table
+    without a handle; an identically built frame is one (the cache
+    manager matches plans), so it goes in ``caches`` for release."""
+    caches.append(_band_signatures(ss, "id", 8, 4))
+    return _pin(
+        lsh_candidate_pairs_from_signatures(
+            ss, id_col="id", num_hashes=8, bands=4, max_bucket=max_bucket
+        ),
+        caches,
+    )
+
+
+def _admission(standing: dict, incoming_sh: DataFrame, caches: list):
+    """d68's probe of ``incoming_sh`` against prebuilt standing state:
+    (incoming, container, ...) matches at the 0.8 threshold."""
+    return incremental_containment_matches(
+        None,
+        incoming_sh,
+        threshold=_D68_THRESHOLD_NUM / 10.0,
+        prebuilt_standing=standing,
+        cache_registry=caches,
+        **_ENSEMBLE,
+    )
+
+
+# --- d63: containment (asymmetric) near-dup audit ----------------------------
+def _d63_oracle() -> str:
+    return f"""
+    WITH {_sql_shingles()},
+    {_sql_exact_pairs()}
     SELECT CASE WHEN sz_a < sz_b THEN doc_a
                 WHEN sz_b < sz_a THEN doc_b
                 ELSE LEAST(doc_a, doc_b) END AS contained_doc,
@@ -5663,8 +6068,8 @@ def _d63_oracle() -> str:
            CAST(LEAST(sz_a, sz_b) AS BIGINT) AS sz_contained,
            CAST(GREATEST(sz_a, sz_b) AS BIGINT) AS sz_container,
            containment, jaccard
-    FROM p
-    WHERE containment >= 0.4 AND jaccard < 0.5
+    FROM pr
+    WHERE {_CONTAINMENT_ONLY}
     """
 
 
@@ -5674,15 +6079,9 @@ def _containment_pairs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard/containment at df cap ``_D63_CAP`` — the exact verifier
     d63-d67/d69 share. The frame is pair-count-sized (~1k rows at
     sf0.1)."""
-    from goodreads_pyspark_spark.dedup.ngram import (
-        containment_pairs_from_shingles,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
     return containment_pairs_from_shingles(sh, max_df=_D63_CAP)
-
 
 
 @query(
@@ -5702,14 +6101,7 @@ def _containment_pairs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "adds zero new shuffle classes over Jaccard.".format(cap=_D63_CAP),
 )
 def d63_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION
-
-    PRE_MATERIALIZATION["d63_containment_audit"] = _containment_pairs2.__wrapped__(
-        spark, sf_dir
-    ).filter((F.col("containment") >= 0.4) & (F.col("jaccard") < 0.5))
-    p = _containment_pairs2(spark, sf_dir).filter(
-        (F.col("containment") >= 0.4) & (F.col("jaccard") < 0.5)
-    )
+    p = _containment_only(spark, sf_dir)
     smaller_is_a = F.col("sz_a") < F.col("sz_b")
     equal_sz = F.col("sz_a") == F.col("sz_b")
     return p.select(
@@ -5729,66 +6121,22 @@ def d63_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- containment-vs-banding recall audit (new in r9) ---------------------------
-def _d64_oracle(num_hashes: int = 8, bands: int = 4, max_bucket: int = 100) -> str:
-    r = num_hashes // bands
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(num_hashes)
-    )
-    band_rows = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"md5({' || '.join(f'mh{b * r + k}' for k in range(r))}) AS key FROM mh"
-        for b in range(bands)
-    )
+# --- d64: containment-vs-banding recall audit ---------------------------------
+def _d64_oracle() -> str:
+    hit = "{} JOIN bcand USING (doc_a, doc_b)"
     return f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    mh AS (SELECT doc_id,
-           {mins}
-           FROM sh0 GROUP BY doc_id),
-    bands AS (
-{band_rows}),
-    bc AS (SELECT band, key, count(*) AS n FROM bands GROUP BY band, key),
-    bf AS (SELECT bands.* FROM bands JOIN bc USING (band, key)
-           WHERE n <= {max_bucket}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bf a JOIN bf b USING (band, key)
-             WHERE a.doc_id < b.doc_id),
-    shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh0),
-    dfreq AS (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {_D63_CAP}),
-    sz AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS n_common
-              FROM shf a JOIN shf b USING (sh)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-    p AS (SELECT doc_a, doc_b,
-                 CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common)
-                   AS jaccard,
-                 CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz)
-                   AS containment
-          FROM inter
-          JOIN sz sa ON sa.doc_id = doc_a
-          JOIN sz sb ON sb.doc_id = doc_b),
-    cont AS (SELECT doc_a, doc_b FROM p
-             WHERE containment >= 0.4 AND jaccard < 0.5),
-    jac AS (SELECT doc_a, doc_b FROM p WHERE jaccard >= 0.5)
+    WITH {_sql_shingles()},
+    {_sql_signatures({})},
+    {_sql_plain_cands("bcand", D07_MAX_BUCKET)},
+    {_sql_exact_pairs()},
+    jac AS MATERIALIZED (SELECT doc_a, doc_b FROM pr WHERE jaccard >= 0.5)
     SELECT
-      CAST((SELECT COUNT(*) FROM cont) AS BIGINT) AS n_containment_pairs,
-      CAST((SELECT COUNT(*) FROM cont JOIN cand USING (doc_a, doc_b))
-           AS BIGINT) AS n_containment_recovered,
-      CAST((SELECT COUNT(*) FROM cont JOIN cand USING (doc_a, doc_b))
-           AS DOUBLE) / NULLIF((SELECT COUNT(*) FROM cont), 0)
-        AS containment_recall,
-      CAST((SELECT COUNT(*) FROM jac) AS BIGINT) AS n_jaccard_pairs,
-      CAST((SELECT COUNT(*) FROM jac JOIN cand USING (doc_a, doc_b))
-           AS BIGINT) AS n_jaccard_recovered,
-      CAST((SELECT COUNT(*) FROM jac JOIN cand USING (doc_a, doc_b))
-           AS DOUBLE) / NULLIF((SELECT COUNT(*) FROM jac), 0) AS jaccard_recall
+      {_sql_count("cont")} AS n_containment_pairs,
+      {_sql_count(hit.format("cont"))} AS n_containment_recovered,
+      {_sql_recall(hit.format("cont"), "cont")} AS containment_recall,
+      {_sql_count("jac")} AS n_jaccard_pairs,
+      {_sql_count(hit.format("jac"))} AS n_jaccard_recovered,
+      {_sql_recall(hit.format("jac"), "jac")} AS jaccard_recall
     """
 
 
@@ -5811,164 +6159,60 @@ def _d64_oracle(num_hashes: int = 8, bands: int = 4, max_bucket: int = 100) -> s
     "candidates are (band,key)-bucketed with the d07 bucket cap.",
 )
 def d64_containment_banding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.minhash import (
-        lsh_candidate_pairs_from_shingles,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
-    docs = tbl(spark, sf_dir, "documents")
-    sh = shingle_rows(docs, shingle_n=2, out_id="doc_id")
-    cand = lsh_candidate_pairs_from_shingles(
-        sh, num_hashes=8, bands=4, max_bucket=D07_MAX_BUCKET
-    ).cache()
-    # exact side comes from the shared containment-pair memo (also
-    # consumed by d63/d65) — the banding side above is this query's own
-    # only corpus pass.
+    # both sides read shared memos: the d07 8-hash signatures are the
+    # first 8 columns of the ensemble signature table
     p = _containment_pairs2(spark, sf_dir)
-    cont = p.filter(
-        (F.col("containment") >= 0.4) & (F.col("jaccard") < 0.5)
-    ).select("doc_a", "doc_b")
+    cont = p.filter(_CONTAINMENT_ONLY).select("doc_a", "doc_b")
     jac = p.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
-
-    def cnt(df: DataFrame, alias: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).cast("bigint").alias(alias))
-
-    nc = cnt(cont, "n_containment_pairs")
-    ncr = cnt(cont.join(cand, ["doc_a", "doc_b"]), "n_containment_recovered")
-    nj = cnt(jac, "n_jaccard_pairs")
-    njr = cnt(jac.join(cand, ["doc_a", "doc_b"]), "n_jaccard_recovered")
-    return (
-        nc.crossJoin(F.broadcast(ncr))
-        .crossJoin(F.broadcast(nj))
-        .crossJoin(F.broadcast(njr))
-        .select(
-            "n_containment_pairs",
-            "n_containment_recovered",
-            # Guard the zero-pair degenerate corpus: Spark non-ANSI
-            # division yields NULL while DuckDB IEEE doubles yield
-            # NaN/inf — NULL-on-zero on BOTH sides (ADVICE r9).
-            F.when(
-                F.col("n_containment_pairs") > 0,
-                F.col("n_containment_recovered").cast("double")
-                / F.col("n_containment_pairs"),
-            ).alias("containment_recall"),
-            "n_jaccard_pairs",
-            "n_jaccard_recovered",
-            F.when(
-                F.col("n_jaccard_pairs") > 0,
-                F.col("n_jaccard_recovered").cast("double")
-                / F.col("n_jaccard_pairs"),
-            ).alias("jaccard_recall"),
+    with _released() as caches:
+        cand = _plain_band_candidates(
+            _ensemble_sig_sizes(spark, sf_dir), D07_MAX_BUCKET, caches
         )
-    )
+        counts = _count_row(
+            {
+                "n_containment_pairs": cont,
+                "n_containment_recovered": cont.join(cand, ["doc_a", "doc_b"]),
+                "n_jaccard_pairs": jac,
+                "n_jaccard_recovered": jac.join(cand, ["doc_a", "doc_b"]),
+            }
+        )
+        return _materialize(
+            "d64_containment_banding_audit",
+            counts.select(
+                "n_containment_pairs",
+                "n_containment_recovered",
+                _ratio("n_containment_recovered", "n_containment_pairs").alias(
+                    "containment_recall"
+                ),
+                "n_jaccard_pairs",
+                "n_jaccard_recovered",
+                _ratio("n_jaccard_recovered", "n_jaccard_pairs").alias(
+                    "jaccard_recall"
+                ),
+            ),
+        )
 
 
-# --- d65: LSH-Ensemble containment candidates (new in r10) --------------------
-_D65_HASHES = 16
-_D65_EDGES = (24, 48, 72)
-_D65_ROWS = (2, 2, 1, 1)
-_D65_BUCKET = 50
-
-
+# --- d65: LSH-Ensemble containment candidates ---------------------------------
 def _d65_oracle() -> str:
     """Full SQL replay of the LSH-Ensemble candidate generator beside the
-    d64 plain-banding baseline: 16 salted min-hashes, static size
-    partitions with per-partition (bands, rows) schemes, index-side
-    bucket cap, size-oriented candidate join — then recall of BOTH
-    generators against the exact containment-only pairs (d63's filter)
-    over the same df-capped shingle pass."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    edge_case = "CASE " + " ".join(
-        f"WHEN sz0 < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    branches = []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            branches.append(
-                f"      SELECT doc_id, sz0, part, {p} AS p, {b} AS band,"
-                f" ('0x' || substr(md5({key}), 1, 15))::BIGINT AS key FROM mhsz"
-            )
-    keys_sql = "\n      UNION ALL\n".join(branches)
-    # plain d07/d64 baseline: first 8 hashes, 4 bands of 2
-    base_rows = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, md5(mh{2 * b} || mh{2 * b + 1})"
-        f" AS key FROM mhsz"
-        for b in range(4)
-    )
+    d64 plain-banding baseline, then recall of BOTH generators against
+    the exact containment-only pairs over the same df-capped pass."""
+    hit = "cont JOIN {} USING (doc_a, doc_b)"
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    mh AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM sh0 GROUP BY doc_id),
-    s0 AS MATERIALIZED (SELECT doc_id, count(*) AS sz0 FROM sh0 GROUP BY doc_id),
-    mhsz AS MATERIALIZED (SELECT mh.*, s0.sz0, {edge_case} AS part
-             FROM mh JOIN s0 USING (doc_id)),
-    keys AS MATERIALIZED (
-{keys_sql}),
-    idx AS MATERIALIZED (SELECT * FROM keys WHERE part = p),
-    bc AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx GROUP BY 1, 2, 3),
-    idxf AS MATERIALIZED (SELECT idx.* FROM idx JOIN bc USING (p, band, key)
-             WHERE n <= {_D65_BUCKET}),
-    probe0 AS MATERIALIZED (SELECT * FROM keys WHERE p >= part),
-    pc AS MATERIALIZED (SELECT p, band, key, count(*) AS m FROM probe0
-          GROUP BY 1, 2, 3),
-    probe AS MATERIALIZED (SELECT probe0.* FROM probe0
-             JOIN pc USING (p, band, key)
-             WHERE m <= {4 * _D65_BUCKET}),
-    ecand AS MATERIALIZED (SELECT DISTINCT
-                LEAST(q.doc_id, x.doc_id) AS doc_a,
-                GREATEST(q.doc_id, x.doc_id) AS doc_b
-              FROM probe q JOIN idxf x USING (p, band, key)
-              WHERE q.sz0 < x.sz0
-                 OR (q.sz0 = x.sz0 AND q.doc_id < x.doc_id)),
-    bands AS MATERIALIZED (
-{base_rows}),
-    bbc AS MATERIALIZED (SELECT band, key, count(*) AS n FROM bands GROUP BY band, key),
-    bf AS MATERIALIZED (SELECT bands.* FROM bands JOIN bbc USING (band, key)
-           WHERE n <= {_D65_BUCKET}),
-    bcand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bf a JOIN bf b USING (band, key)
-              WHERE a.doc_id < b.doc_id),
-    shh AS MATERIALIZED (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh0),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS MATERIALIZED (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {_D63_CAP}),
-    sz AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS n_common
-              FROM shf a JOIN shf b USING (sh)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-    pr AS MATERIALIZED (SELECT doc_a, doc_b,
-                 CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common)
-                   AS jaccard,
-                 CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz)
-                   AS containment
-          FROM inter
-          JOIN sz sa ON sa.doc_id = doc_a
-          JOIN sz sb ON sb.doc_id = doc_b),
-    cont AS MATERIALIZED (SELECT doc_a, doc_b FROM pr
-             WHERE containment >= 0.4 AND jaccard < 0.5)
+    WITH {_sql_shingles()},
+    {_sql_signatures({"part": "sz"})},
+    {_sql_ensemble_cands("ecand")},
+    {_sql_plain_cands("bcand", _D65_BUCKET)},
+    {_sql_exact_pairs()}
     SELECT
-      CAST((SELECT COUNT(*) FROM cont) AS BIGINT) AS n_containment_pairs,
-      CAST((SELECT COUNT(*) FROM ecand) AS BIGINT) AS n_ensemble_candidates,
-      CAST((SELECT COUNT(*) FROM cont JOIN ecand USING (doc_a, doc_b))
-           AS BIGINT) AS n_ensemble_recovered,
-      CAST((SELECT COUNT(*) FROM cont JOIN ecand USING (doc_a, doc_b))
-           AS DOUBLE) / NULLIF((SELECT COUNT(*) FROM cont), 0)
-        AS ensemble_recall,
-      CAST((SELECT COUNT(*) FROM bcand) AS BIGINT) AS n_banding_candidates,
-      CAST((SELECT COUNT(*) FROM cont JOIN bcand USING (doc_a, doc_b))
-           AS BIGINT) AS n_banding_recovered,
-      CAST((SELECT COUNT(*) FROM cont JOIN bcand USING (doc_a, doc_b))
-           AS DOUBLE) / NULLIF((SELECT COUNT(*) FROM cont), 0)
-        AS banding_recall
+      {_sql_count("cont")} AS n_containment_pairs,
+      {_sql_count("ecand")} AS n_ensemble_candidates,
+      {_sql_count(hit.format("ecand"))} AS n_ensemble_recovered,
+      {_sql_recall(hit.format("ecand"), "cont")} AS ensemble_recall,
+      {_sql_count("bcand")} AS n_banding_candidates,
+      {_sql_count(hit.format("bcand"))} AS n_banding_recovered,
+      {_sql_recall(hit.format("bcand"), "cont")} AS banding_recall
     """
 
 
@@ -5976,14 +6220,9 @@ def _d65_oracle() -> str:
 def _ensemble_sig_sizes(spark: SparkSession, sf_dir: str):
     """(id, sz, mh0..mh15) table over the 2-gram corpus shingles — the
     16-hash signature aggregation is the expensive corpus pass behind
-    every ensemble consumer (d65/d66/d67), and its first 8 columns are
-    exactly the d07-convention 8-hash signatures, so the plain-banding
-    baseline reads the same table."""
-    from goodreads_pyspark_spark.dedup.minhash import (
-        minhash_signatures_from_shingles,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
+    every ensemble consumer, and its first 8 columns are exactly the
+    d07-convention 8-hash signatures, so the plain-banding baseline
+    reads the same table."""
     docs = tbl(spark, sf_dir, "documents")
     sh = shingle_rows(docs, shingle_n=2, out_id="id").cache()
     sigs = minhash_signatures_from_shingles(sh, "id", _D65_HASHES)
@@ -6018,169 +6257,57 @@ def _ensemble_sig_sizes(spark: SparkSession, sf_dir: str):
     "measure recall honestly).",
 )
 def d65_lsh_ensemble_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        lsh_ensemble_candidate_pairs,
-    )
-    from goodreads_pyspark_spark.dedup.minhash import (
-        lsh_candidate_pairs_from_signatures,
-    )
-
     # No shingle pass in-query: the signature table and the exact
-    # verifier both come from shared session memos; the plain-banding
-    # baseline reads the SAME signature table (its first 8 hash columns
-    # are the d07 convention).
+    # verifier both come from shared session memos.
     ss = _ensemble_sig_sizes(spark, sf_dir)
-    ecand = lsh_ensemble_candidate_pairs(
-        None,
-        id_col="id",
-        num_hashes=_D65_HASHES,
-        size_edges=_D65_EDGES,
-        rows_per_band=_D65_ROWS,
-        max_bucket=_D65_BUCKET,
-        sig_sizes=ss,
-    ).select(
-        F.least("contained", "container").alias("doc_a"),
-        F.greatest("contained", "container").alias("doc_b"),
-    )
-    bcand = lsh_candidate_pairs_from_signatures(
-        ss, id_col="id", num_hashes=8, bands=4, max_bucket=_D65_BUCKET
-    ).cache()
-    cont = (
-        _containment_pairs2(spark, sf_dir)
-        .filter((F.col("containment") >= 0.4) & (F.col("jaccard") < 0.5))
-        .select("doc_a", "doc_b")
-        .cache()
-    )
-    ecand = ecand.cache()
-
-    def cnt(df: DataFrame, alias: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).cast("bigint").alias(alias))
-
-    nc = cnt(cont, "n_containment_pairs")
-    ne = cnt(ecand, "n_ensemble_candidates")
-    ner = cnt(cont.join(ecand, ["doc_a", "doc_b"]), "n_ensemble_recovered")
-    nb = cnt(bcand, "n_banding_candidates")
-    nbr = cnt(cont.join(bcand, ["doc_a", "doc_b"]), "n_banding_recovered")
-    recall = lambda num, den: F.when(  # noqa: E731
-        F.col(den) > 0, F.col(num).cast("double") / F.col(den)
-    )
-    return (
-        nc.crossJoin(F.broadcast(ne))
-        .crossJoin(F.broadcast(ner))
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(nbr))
-        .select(
-            "n_containment_pairs",
-            "n_ensemble_candidates",
-            "n_ensemble_recovered",
-            recall("n_ensemble_recovered", "n_containment_pairs").alias(
-                "ensemble_recall"
-            ),
-            "n_banding_candidates",
-            "n_banding_recovered",
-            recall("n_banding_recovered", "n_containment_pairs").alias(
-                "banding_recall"
+    cont = _containment_only(spark, sf_dir).select("doc_a", "doc_b")
+    with _released() as caches:
+        ecand = _pin(_ensemble_candidates(ss, caches), caches)
+        bcand = _plain_band_candidates(ss, _D65_BUCKET, caches)
+        counts = _count_row(
+            {
+                "n_containment_pairs": cont,
+                "n_ensemble_candidates": ecand,
+                "n_ensemble_recovered": cont.join(ecand, ["doc_a", "doc_b"]),
+                "n_banding_candidates": bcand,
+                "n_banding_recovered": cont.join(bcand, ["doc_a", "doc_b"]),
+            }
+        )
+        return _materialize(
+            "d65_lsh_ensemble_containment",
+            counts.select(
+                "n_containment_pairs",
+                "n_ensemble_candidates",
+                "n_ensemble_recovered",
+                _ratio("n_ensemble_recovered", "n_containment_pairs").alias(
+                    "ensemble_recall"
+                ),
+                "n_banding_candidates",
+                "n_banding_recovered",
+                _ratio("n_banding_recovered", "n_containment_pairs").alias(
+                    "banding_recall"
+                ),
             ),
         )
-    )
 
 
-# --- d66: equi-depth LSH-Ensemble (new in r10; r11 gate window) ---------------
+# --- d66: equi-depth LSH-Ensemble ---------------------------------------------
 def _d66_oracle() -> str:
-    """d65's full replay with DATA-DEPENDENT equi-depth edges: the k-th
-    partition edge is the smallest size whose cumulative doc count
-    reaches ceil(k*n/4), plus one (exclusive upper bound) — exact
-    value-at-rank from the size histogram, the same arithmetic the
-    engine's ``equi_depth_edges`` runs distributedly."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    branches = []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            branches.append(
-                f"      SELECT doc_id, sz0, part, {p} AS p, {b} AS band,"
-                f" ('0x' || substr(md5({key}), 1, 15))::BIGINT AS key FROM mhsz"
-            )
-    keys_sql = "\n      UNION ALL\n".join(branches)
-    # integer-exact ceil(k*n/4) = (k*n + 3) // 4 — matches the engine's
-    # -(-k*n // P) arithmetic bit-for-bit at any n
-    edge = (
-        "(SELECT min(sz) + 1 FROM cum CROSS JOIN tot"
-        " WHERE cum >= ({k} * n + 3) // 4)"
-    )
+    """d65's replay with DATA-DEPENDENT equi-depth partition edges."""
+    hit = "cont JOIN ecand USING (doc_a, doc_b)"
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    mh AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM sh0 GROUP BY doc_id),
-    s0 AS MATERIALIZED (SELECT doc_id, count(*) AS sz0 FROM sh0 GROUP BY doc_id),
-    hist AS MATERIALIZED (SELECT sz0 AS sz, count(*) AS c FROM s0 GROUP BY sz0),
-    cum AS MATERIALIZED (SELECT sz, sum(c) OVER (ORDER BY sz
-             ROWS UNBOUNDED PRECEDING) AS cum FROM hist),
-    tot AS MATERIALIZED (SELECT sum(c) AS n FROM hist),
-    edges AS MATERIALIZED (SELECT
-      {edge.format(k=1)} AS e1,
-      {edge.format(k=2)} AS e2,
-      {edge.format(k=3)} AS e3),
-    mhsz AS MATERIALIZED (
-      SELECT mh.*, s0.sz0,
-             CASE WHEN sz0 < e1 THEN 0 WHEN sz0 < e2 THEN 1
-                  WHEN sz0 < e3 THEN 2 ELSE 3 END AS part
-      FROM mh JOIN s0 USING (doc_id) CROSS JOIN edges),
-    keys AS MATERIALIZED (
-{keys_sql}),
-    idx AS MATERIALIZED (SELECT * FROM keys WHERE part = p),
-    bc AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx
-          GROUP BY 1, 2, 3),
-    idxf AS MATERIALIZED (SELECT idx.* FROM idx JOIN bc USING (p, band, key)
-             WHERE n <= {_D65_BUCKET}),
-    probe0 AS MATERIALIZED (SELECT * FROM keys WHERE p >= part),
-    pc AS MATERIALIZED (SELECT p, band, key, count(*) AS m FROM probe0
-          GROUP BY 1, 2, 3),
-    probe AS MATERIALIZED (SELECT probe0.* FROM probe0
-             JOIN pc USING (p, band, key)
-             WHERE m <= {4 * _D65_BUCKET}),
-    ecand AS MATERIALIZED (SELECT DISTINCT
-                LEAST(q.doc_id, x.doc_id) AS doc_a,
-                GREATEST(q.doc_id, x.doc_id) AS doc_b
-              FROM probe q JOIN idxf x USING (p, band, key)
-              WHERE q.sz0 < x.sz0
-                 OR (q.sz0 = x.sz0 AND q.doc_id < x.doc_id)),
-    shh AS MATERIALIZED (SELECT doc_id,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM sh0),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS MATERIALIZED (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {_D63_CAP}),
-    sz AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS n_common
-              FROM shf a JOIN shf b USING (sh)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-    pr AS MATERIALIZED (SELECT doc_a, doc_b,
-                 CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common)
-                   AS jaccard,
-                 CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz)
-                   AS containment
-          FROM inter
-          JOIN sz sa ON sa.doc_id = doc_a
-          JOIN sz sb ON sb.doc_id = doc_b),
-    cont AS MATERIALIZED (SELECT doc_a, doc_b FROM pr
-             WHERE containment >= 0.4 AND jaccard < 0.5)
+    WITH {_sql_shingles()},
+    {_sql_size_quantiles()},
+    {_sql_signatures({"part": "sz"}, ("e1", "e2", "e3"), " CROSS JOIN edges")},
+    {_sql_ensemble_cands("ecand")},
+    {_sql_exact_pairs()}
     SELECT
       CAST(e1 AS BIGINT) AS edge1, CAST(e2 AS BIGINT) AS edge2,
       CAST(e3 AS BIGINT) AS edge3,
-      CAST((SELECT COUNT(*) FROM cont) AS BIGINT) AS n_containment_pairs,
-      CAST((SELECT COUNT(*) FROM ecand) AS BIGINT) AS n_ensemble_candidates,
-      CAST((SELECT COUNT(*) FROM cont JOIN ecand USING (doc_a, doc_b))
-           AS BIGINT) AS n_ensemble_recovered,
-      CAST((SELECT COUNT(*) FROM cont JOIN ecand USING (doc_a, doc_b))
-           AS DOUBLE) / NULLIF((SELECT COUNT(*) FROM cont), 0)
-        AS ensemble_recall
+      {_sql_count("cont")} AS n_containment_pairs,
+      {_sql_count("ecand")} AS n_ensemble_candidates,
+      {_sql_count(hit)} AS n_ensemble_recovered,
+      {_sql_recall(hit, "cont")} AS ensemble_recall
     FROM edges
     """
 
@@ -6203,146 +6330,57 @@ def _d66_oracle() -> str:
     "histogram pass; the P-1 edge scalars broadcast.",
 )
 def d66_equidepth_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        equi_depth_edges,
-        lsh_ensemble_candidate_pairs,
-    )
-
     ss = _ensemble_sig_sizes(spark, sf_dir)
     edges = equi_depth_edges(
         None, id_col="id", n_partitions=4, sizes=ss.select("id", "sz")
     )
-    ecand = lsh_ensemble_candidate_pairs(
-        None,
-        id_col="id",
-        num_hashes=_D65_HASHES,
-        size_edges=tuple(edges),
-        rows_per_band=_D65_ROWS,
-        max_bucket=_D65_BUCKET,
-        sig_sizes=ss,
-    ).select(
-        F.least("contained", "container").alias("doc_a"),
-        F.greatest("contained", "container").alias("doc_b"),
-    ).cache()
-    cont = (
-        _containment_pairs2(spark, sf_dir)
-        .filter((F.col("containment") >= 0.4) & (F.col("jaccard") < 0.5))
-        .select("doc_a", "doc_b")
-        .cache()
-    )
-
-    def cnt(df: DataFrame, alias: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).cast("bigint").alias(alias))
-
-    nc = cnt(cont, "n_containment_pairs")
-    ne = cnt(ecand, "n_ensemble_candidates")
-    ner = cnt(cont.join(ecand, ["doc_a", "doc_b"]), "n_ensemble_recovered")
-    edge_row = spark.createDataFrame(
-        [tuple(edges)], "edge1 bigint, edge2 bigint, edge3 bigint"
-    )
-    return (
-        edge_row.crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(ne))
-        .crossJoin(F.broadcast(ner))
-        .select(
-            "edge1",
-            "edge2",
-            "edge3",
-            "n_containment_pairs",
-            "n_ensemble_candidates",
-            "n_ensemble_recovered",
-            F.when(
-                F.col("n_containment_pairs") > 0,
-                F.col("n_ensemble_recovered").cast("double")
-                / F.col("n_containment_pairs"),
-            ).alias("ensemble_recall"),
+    cont = _containment_only(spark, sf_dir).select("doc_a", "doc_b")
+    with _released() as caches:
+        ecand = _pin(
+            _ensemble_candidates(ss, caches, size_edges=tuple(edges)), caches
         )
-    )
+        edge_row = spark.createDataFrame(
+            [tuple(edges)], "edge1 bigint, edge2 bigint, edge3 bigint"
+        )
+        counts = _count_row(
+            {
+                "n_containment_pairs": cont,
+                "n_ensemble_candidates": ecand,
+                "n_ensemble_recovered": cont.join(ecand, ["doc_a", "doc_b"]),
+            }
+        )
+        return _materialize(
+            "d66_equidepth_ensemble",
+            edge_row.crossJoin(F.broadcast(counts)).select(
+                "edge1",
+                "edge2",
+                "edge3",
+                "n_containment_pairs",
+                "n_ensemble_candidates",
+                "n_ensemble_recovered",
+                _ratio("n_ensemble_recovered", "n_containment_pairs").alias(
+                    "ensemble_recall"
+                ),
+            ),
+        )
 
 
-# --- d67: containment dedup ACTION (new in r10; r11 gate window) --------------
-_D67_THRESHOLD = 0.8  # drop docs >=80%-contained in a larger doc
-
-
+# --- d67: containment dedup ACTION --------------------------------------------
 def _d67_oracle() -> str:
     """Candidates (d65's ensemble replay) -> exact containment verify
     restricted to candidates -> drop contained docs -> per-source
     ledger with an io15-style checksum of the dropped ids."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    edge_case = "CASE " + " ".join(
-        f"WHEN sz0 < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    branches = []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            branches.append(
-                f"      SELECT doc_id, sz0, part, {p} AS p, {b} AS band,"
-                f" ('0x' || substr(md5({key}), 1, 15))::BIGINT AS key FROM mhsz"
-            )
-    keys_sql = "\n      UNION ALL\n".join(branches)
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    mh AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM sh0 GROUP BY doc_id),
-    s0 AS MATERIALIZED (SELECT doc_id, count(*) AS sz0 FROM sh0 GROUP BY doc_id),
-    mhsz AS MATERIALIZED (SELECT mh.*, s0.sz0, {edge_case} AS part
-             FROM mh JOIN s0 USING (doc_id)),
-    keys AS MATERIALIZED (
-{keys_sql}),
-    idx AS MATERIALIZED (SELECT * FROM keys WHERE part = p),
-    bc AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx
-          GROUP BY 1, 2, 3),
-    idxf AS MATERIALIZED (SELECT idx.* FROM idx JOIN bc USING (p, band, key)
-             WHERE n <= {_D65_BUCKET}),
-    probe0 AS MATERIALIZED (SELECT * FROM keys WHERE p >= part),
-    pc AS MATERIALIZED (SELECT p, band, key, count(*) AS m FROM probe0
-          GROUP BY 1, 2, 3),
-    probe AS MATERIALIZED (SELECT probe0.* FROM probe0
-             JOIN pc USING (p, band, key)
-             WHERE m <= {4 * _D65_BUCKET}),
-    ecand AS MATERIALIZED (SELECT DISTINCT
-                LEAST(q.doc_id, x.doc_id) AS doc_a,
-                GREATEST(q.doc_id, x.doc_id) AS doc_b
-              FROM probe q JOIN idxf x USING (p, band, key)
-              WHERE q.sz0 < x.sz0
-                 OR (q.sz0 = x.sz0 AND q.doc_id < x.doc_id)),
-    shh AS MATERIALIZED (SELECT doc_id,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM sh0),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS MATERIALIZED (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {_D63_CAP}),
-    sz AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS n_common
-              FROM shf a JOIN shf b USING (sh)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-    ver AS MATERIALIZED (
-      SELECT i.doc_a, i.doc_b, sa.sz AS sz_a, sb.sz AS sz_b,
-             CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz) AS containment
-      FROM inter i
-      JOIN ecand USING (doc_a, doc_b)
-      JOIN sz sa ON sa.doc_id = i.doc_a
-      JOIN sz sb ON sb.doc_id = i.doc_b),
+    WITH {_sql_shingles()},
+    {_sql_signatures({"part": "sz"})},
+    {_sql_ensemble_cands("ecand")},
+    {_sql_exact_pairs()},
     dropped AS MATERIALIZED (
       SELECT DISTINCT CASE WHEN sz_a <= sz_b THEN doc_a ELSE doc_b END
                AS doc_id
-      FROM ver WHERE containment >= {_D67_THRESHOLD})
-    SELECT d.source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(dr.doc_id) AS BIGINT) AS n_dropped,
-           CAST(COUNT(*) - COUNT(dr.doc_id) AS BIGINT) AS n_kept,
-           CAST(CAST(COALESCE(SUM(
-             ('0x' || substr(md5(CAST(dr.doc_id AS VARCHAR)), 1, 15))::BIGINT
-           ), 0) AS DECIMAL(38,0)) AS VARCHAR) AS dropped_checksum
-    FROM documents d LEFT JOIN dropped dr USING (doc_id)
-    GROUP BY d.source ORDER BY d.source
+      FROM pr JOIN ecand USING (doc_a, doc_b)
+      WHERE containment >= {_D67_THRESHOLD})
+    {_sql_ledger("dropped", _D67_LEDGER)}
     """
 
 
@@ -6365,198 +6403,75 @@ def _d67_oracle() -> str:
     "join + one broadcast-able drop anti-join; nothing quadratic.",
 )
 def d67_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        lsh_ensemble_candidate_pairs,
-    )
-
     docs = tbl(spark, sf_dir, "documents")
-    cand = lsh_ensemble_candidate_pairs(
-        None,
-        id_col="id",
-        num_hashes=_D65_HASHES,
-        size_edges=_D65_EDGES,
-        rows_per_band=_D65_ROWS,
-        max_bucket=_D65_BUCKET,
-        sig_sizes=_ensemble_sig_sizes(spark, sf_dir),
-    ).select(
-        F.least("contained", "container").alias("doc_a"),
-        F.greatest("contained", "container").alias("doc_b"),
-    )
-    # exact containment restricted to candidates (the shared kernel holds
-    # every shingle-sharing pair, so the restriction is a pair-keyed join)
-    ver = _containment_pairs2(spark, sf_dir).join(cand, ["doc_a", "doc_b"])
-    dropped = (
-        ver.filter(F.col("containment") >= _D67_THRESHOLD)
-        .select(
-            F.when(F.col("sz_a") <= F.col("sz_b"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("doc_id")
-        )
-        .distinct()
-        .withColumn("__dropped", F.lit(1))
-    )
-    row_int = F.conv(
-        F.substring(F.md5(F.col("__did").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
-    return (
-        docs.select("doc_id", "source")
-        .join(F.broadcast(dropped), "doc_id", "left")
-        .withColumn(
-            "__did", F.when(F.col("__dropped") == 1, F.col("doc_id"))
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.count("__did").cast("bigint").alias("n_dropped"),
-            (F.count(F.lit(1)) - F.count("__did"))
-            .cast("bigint")
-            .alias("n_kept"),
-            F.coalesce(
-                F.sum(row_int.cast("decimal(38,0)")), F.lit(0)
+    with _released() as caches:
+        cand = _ensemble_candidates(_ensemble_sig_sizes(spark, sf_dir), caches)
+        # exact containment restricted to candidates (the shared kernel
+        # holds every shingle-sharing pair, so the restriction is a
+        # pair-keyed join)
+        dropped = (
+            _containment_pairs2(spark, sf_dir)
+            .join(cand, ["doc_a", "doc_b"])
+            .filter(F.col("containment") >= _D67_THRESHOLD)
+            .select(
+                F.when(F.col("sz_a") <= F.col("sz_b"), F.col("doc_a"))
+                .otherwise(F.col("doc_b"))
+                .alias("doc_id")
             )
-            .cast("decimal(38,0)")
-            .cast("string")
-            .alias("dropped_checksum"),
+            .distinct()
         )
-        .orderBy("source")
-    )
+        return _materialize(
+            "d67_containment_dedup", _ledger(docs, dropped, _D67_LEDGER)
+        )
 
 
-# --- d68: incremental containment admission (new in r10; r11 window) ----------
-_D68_THRESHOLD_NUM = 8  # containment threshold 8/10 — integer-exact
-
-
+# --- d68: incremental containment admission -----------------------------------
 def _d68_oracle() -> str:
     """SQL replay of the incremental path: standing index from the ~86%
     corpus (own-partition scheme, bucket cap), incoming ~14% batch probes
     partitions that can hold an 0.8-container of its size, exact
     containment verified on candidates in the standing-df-capped shingle
     space, per-source admission ledger."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    edge_case = "CASE " + " ".join(
-        f"WHEN {{v}} < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    idx_branches, probe_branches = [], []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            k_expr = f"('0x' || substr(md5({key}), 1, 15))::BIGINT"
-            idx_branches.append(
-                f"      SELECT doc_id AS container, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_c WHERE part = {p}"
-            )
-            probe_branches.append(
-                f"      SELECT doc_id AS incoming, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_i WHERE {p} >= pmin"
-            )
-    t = _D68_THRESHOLD_NUM
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    shc AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 <> 0),
-    shi AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 = 0),
-    mh_c AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shc GROUP BY doc_id),
-    sz_c AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shc GROUP BY doc_id),
-    mhsz_c AS MATERIALIZED (SELECT mh_c.*, sz_c.sz,
-             {edge_case.format(v="sz")} AS part
-             FROM mh_c JOIN sz_c USING (doc_id)),
-    mh_i AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shi GROUP BY doc_id),
-    sz_i AS MATERIALIZED (SELECT doc_id, count(*) AS szq FROM shi GROUP BY doc_id),
-    mhsz_i AS MATERIALIZED (SELECT mh_i.*, sz_i.szq,
-             {edge_case.format(v=f"(({t} * szq + 9) // 10)")} AS pmin
-             FROM mh_i JOIN sz_i USING (doc_id)),
-    idx0 AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in idx_branches])])}    ),
-    bc AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx0
-          GROUP BY 1, 2, 3),
-    idx AS MATERIALIZED (SELECT idx0.* FROM idx0 JOIN bc USING (p, band, key)
-           WHERE n <= {_D65_BUCKET}),
-    probe AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in probe_branches])])}    ),
-    cand AS MATERIALIZED (SELECT DISTINCT incoming, container
-            FROM probe JOIN idx USING (p, band, key)),
-    sth AS MATERIALIZED (SELECT doc_id AS container,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shc),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM sth GROUP BY sh),
-    hot AS MATERIALIZED (SELECT sh FROM dfreq WHERE df > {_D63_CAP}),
-    stf AS MATERIALIZED (SELECT * FROM sth WHERE sh NOT IN (SELECT sh FROM hot)
-           AND container IN (SELECT DISTINCT container FROM cand)),
-    inch AS MATERIALIZED (SELECT doc_id AS incoming,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shi),
-    incf AS MATERIALIZED (SELECT * FROM inch
-            WHERE sh NOT IN (SELECT sh FROM hot)),
-    szin AS MATERIALIZED (SELECT incoming, count(*) AS sz_in FROM incf
-           GROUP BY incoming),
-    common AS MATERIALIZED (
-      SELECT i.incoming, s.container, count(*) AS n_common
-      FROM incf i JOIN stf s USING (sh)
-      GROUP BY 1, 2),
-    matches AS MATERIALIZED (
-      SELECT c.incoming
-      FROM common c
-      JOIN cand USING (incoming, container)
-      JOIN szin USING (incoming)
-      WHERE CAST(n_common AS DOUBLE) / sz_in >= {t} / 10.0),
-    rejected AS MATERIALIZED (SELECT DISTINCT incoming AS doc_id FROM matches)
-    SELECT d.source,
-           CAST(COUNT(*) AS BIGINT) AS n_incoming,
-           CAST(COUNT(rj.doc_id) AS BIGINT) AS n_rejected,
-           CAST(COUNT(*) - COUNT(rj.doc_id) AS BIGINT) AS n_admitted,
-           CAST(CAST(COALESCE(SUM(
-             ('0x' || substr(md5(CAST(rj.doc_id AS VARCHAR)), 1, 15))::BIGINT
-           ), 0) AS DECIMAL(38,0)) AS VARCHAR) AS rejected_checksum
-    FROM documents d LEFT JOIN rejected rj USING (doc_id)
-    WHERE d.doc_id % 7 = 0
-    GROUP BY d.source ORDER BY d.source
+    WITH {_sql_admission()}
+    {_sql_ledger("rejected", _D68_LEDGER, _BATCH)}
     """
 
 
 def _d68_standing_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Standing containment state over the %7!=0 corpus — in production
     a PERSISTED table maintained across ingestion batches, so its
-    consumers measure only the per-batch probe cost. Built per call: a
-    session memo did not pay here (A/B in CHANGES.md)."""
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        build_containment_standing,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
+    consumers measure only the per-batch probe cost. The five tables
+    are checkpointed and the caches of their build released."""
     docs = tbl(spark, sf_dir, "documents")
-    corpus_sh = shingle_rows(docs, shingle_n=2, out_id="id").filter(
-        F.col("id") % 7 != 0
-    ).cache()
-    standing = build_containment_standing(
-        corpus_sh,
-        id_col="id",
-        num_hashes=_D65_HASHES,
-        size_edges=_D65_EDGES,
-        rows_per_band=_D65_ROWS,
-        max_bucket=_D65_BUCKET,
-        max_df=_D63_CAP,
-        # signatures come from the shared kernel (bit-identical by
-        # construction: a doc's min-hashes depend only on its own
-        # shingles) — the standing build then costs one shingle
-        # pass instead of two
-        sig_sizes=_ensemble_sig_sizes(spark, sf_dir).filter(
-            F.col("id") % 7 != 0
-        ),
-    )
-    # the five standing tables are independent given the shared
-    # pinned subtrees — overlap their materializations (guide §2.6)
-    names = list(standing)
-    checkpointed = run_concurrent(
-        [standing[n].localCheckpoint for n in names], max_workers=3
-    )
-    corpus_sh.unpersist()
-    return dict(zip(names, checkpointed))
+    with _released() as caches:
+        corpus_sh = _pin(
+            shingle_rows(docs, shingle_n=2, out_id="id").filter(
+                F.col("id") % 7 != 0
+            ),
+            caches,
+        )
+        standing = build_containment_standing(
+            corpus_sh,
+            max_bucket=_D65_BUCKET,
+            max_df=_D63_CAP,
+            cache_registry=caches,
+            # signatures come from the shared kernel (bit-identical by
+            # construction: a doc's min-hashes depend only on its own
+            # shingles) — the standing build then costs one shingle
+            # pass instead of two
+            sig_sizes=_ensemble_sig_sizes(spark, sf_dir).filter(
+                F.col("id") % 7 != 0
+            ),
+            **_ENSEMBLE,
+        )
+        # the five standing tables are independent given the shared
+        # pinned subtrees — overlap their materializations (guide §2.6)
+        names = list(standing)
+        checkpointed = run_concurrent(
+            [standing[n].localCheckpoint for n in names], max_workers=3
+        )
+        return dict(zip(names, checkpointed))
 
 
 @query(
@@ -6585,60 +6500,27 @@ def _d68_standing_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
 def d68_incremental_containment_admission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        incremental_containment_matches,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
-    sh = shingle_rows(docs, shingle_n=2, out_id="id").cache()
-    # %7, not %10: the synthetic source column is doc_id%20, so a %10
-    # batch would land in only two sources — %7 is coprime with the
-    # layout and spreads the batch over every source (~14% of docs).
-    corpus_sh = sh.filter(F.col("id") % 7 != 0)
-    incoming_sh = sh.filter(F.col("id") % 7 == 0)
-    matches = incremental_containment_matches(
-        corpus_sh,
-        incoming_sh,
-        id_col="id",
-        num_hashes=_D65_HASHES,
-        size_edges=_D65_EDGES,
-        rows_per_band=_D65_ROWS,
-        max_bucket=_D65_BUCKET,
-        max_df=_D63_CAP,
-        threshold=_D68_THRESHOLD_NUM / 10.0,
-        prebuilt_standing=_d68_standing_index(spark, sf_dir),
-    )
-    rejected = (
-        matches.select(F.col("incoming").alias("doc_id"))
-        .distinct()
-        .withColumn("__rej", F.lit(1))
-    )
-    row_int = F.conv(
-        F.substring(F.md5(F.col("__rid").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
-    return (
-        docs.filter(F.col("doc_id") % 7 == 0)
-        .select("doc_id", "source")
-        .join(F.broadcast(rejected), "doc_id", "left")
-        .withColumn("__rid", F.when(F.col("__rej") == 1, F.col("doc_id")))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_incoming"),
-            F.count("__rid").cast("bigint").alias("n_rejected"),
-            (F.count(F.lit(1)) - F.count("__rid"))
-            .cast("bigint")
-            .alias("n_admitted"),
-            F.coalesce(F.sum(row_int.cast("decimal(38,0)")), F.lit(0))
-            .cast("decimal(38,0)")
-            .cast("string")
-            .alias("rejected_checksum"),
+    standing = _d68_standing_index(spark, sf_dir)
+    with _released() as caches:
+        incoming_sh = _pin(
+            shingle_rows(docs, shingle_n=2, out_id="id").filter(
+                F.col("id") % 7 == 0
+            ),
+            caches,
         )
-        .orderBy("source")
-    )
+        rejected = (
+            _admission(standing, incoming_sh, caches)
+            .select(F.col("incoming").alias("doc_id"))
+            .distinct()
+        )
+        return _materialize(
+            "d68_incremental_containment_admission",
+            _ledger(docs.filter(_BATCH), rejected, _D68_LEDGER),
+        )
 
 
-# --- s15: STREAMING containment admission (new in r10; r11 window) ------------
+# --- s15: STREAMING containment admission -------------------------------------
 @query(
     "s15_streaming_containment_admission",
     oracle=_d68_oracle(),
@@ -6648,7 +6530,7 @@ def d68_incremental_containment_admission(
     "and every micro-batch probes the PRECOMPUTED standing state — the "
     "size-partitioned banding index, the hot-shingle set and the "
     "df-filtered corpus shingle table, exactly what a production "
-    "ingest daemon keeps warm (here the d68 session memo). Verdicts "
+    "ingest daemon keeps warm (here built once per query). Verdicts "
     "are ORDER-INDEPENDENT by construction — each incoming doc's "
     "containment verdict depends only on (doc, standing corpus), never "
     "on other incoming docs or arrival order — so the streamed ledger "
@@ -6666,13 +6548,10 @@ def s15_streaming_containment_admission(
     import shutil
     import tempfile
 
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        incremental_containment_matches,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+    from goodreads_pyspark_spark.streaming import state_partitions
 
     docs = tbl(spark, sf_dir, "documents")
-    incoming = docs.filter(F.col("doc_id") % 7 == 0)
+    incoming = docs.filter(_BATCH)
     standing = _d68_standing_index(spark, sf_dir)
 
     stage = tempfile.mkdtemp(prefix="s15_stage_")
@@ -6681,28 +6560,13 @@ def s15_streaming_containment_admission(
     incoming.repartition(3).write.mode("overwrite").parquet(stage)
 
     def screen(bdf: DataFrame, batch_id: int) -> None:
-        bsh = shingle_rows(bdf, "doc_id", "text", 2, out_id="id")
-        # per-batch probe caches are handed back and released after the
-        # write — without this a long-running stream pins one (cand,
-        # inc) cache pair per micro-batch, unbounded (ADVICE r10). The
-        # release lives in finally so a failed write/probe does not pin
-        # them either (ADVICE r11 — the failure path was the leak).
-        caches: list = []
-        try:
+        # per-batch probe caches are released after the write, on every
+        # exit path — a long-running stream would otherwise pin one
+        # (cand, inc) cache pair per micro-batch, unbounded
+        with _released() as caches:
+            bsh = shingle_rows(bdf, "doc_id", "text", 2, out_id="id")
             rejected = (
-                incremental_containment_matches(
-                    None,  # standing state is prebuilt; corpus_sh unused
-                    bsh,
-                    id_col="id",
-                    num_hashes=_D65_HASHES,
-                    size_edges=_D65_EDGES,
-                    rows_per_band=_D65_ROWS,
-                    max_bucket=_D65_BUCKET,
-                    max_df=_D63_CAP,
-                    threshold=_D68_THRESHOLD_NUM / 10.0,
-                    prebuilt_standing=standing,
-                    cache_registry=caches,
-                )
+                _admission(standing, bsh, caches)
                 .select(F.col("incoming").alias("doc_id"))
                 .distinct()
                 .withColumn("__rej", F.lit(1))
@@ -6718,13 +6582,8 @@ def s15_streaming_containment_admission(
                 .write.mode("append")
                 .parquet(out)
             )
-        finally:
-            for c in caches:
-                c.unpersist()
 
     try:
-        from goodreads_pyspark_spark.streaming import state_partitions
-
         with state_partitions(spark, 8):
             q = (
                 spark.readStream.schema(incoming.schema)
@@ -6745,35 +6604,15 @@ def s15_streaming_containment_admission(
             raise AssertionError(
                 f"streamed ledger has {n_led} rows, incoming batch has {n_in}"
             )
-        row_int = F.conv(
-            F.substring(F.md5(F.col("__rid").cast("string")), 1, 15), 16, 10
-        ).cast("bigint")
+        rejected = ledger.filter(F.col("rejected") == 1).select("doc_id")
         # materialize before the finally-block deletes the parquet dirs
-        return (
-            ledger.withColumn(
-                "__rid", F.when(F.col("rejected") == 1, F.col("doc_id"))
-            )
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_incoming"),
-                F.count("__rid").cast("bigint").alias("n_rejected"),
-                (F.count(F.lit(1)) - F.count("__rid"))
-                .cast("bigint")
-                .alias("n_admitted"),
-                F.coalesce(F.sum(row_int.cast("decimal(38,0)")), F.lit(0))
-                .cast("decimal(38,0)")
-                .cast("string")
-                .alias("rejected_checksum"),
-            )
-            .orderBy("source")
-            .localCheckpoint(eager=True)
-        )
+        return _ledger(ledger, rejected, _D68_LEDGER).localCheckpoint(eager=True)
     finally:
         for d in (stage, out, chk):
             shutil.rmtree(d, ignore_errors=True)
 
 
-# --- d69: ensemble (bands, rows) tuning sweep (new in r10; r11 window) --------
+# --- d69: ensemble (bands, rows) tuning sweep ---------------------------------
 #: The swept rows-per-band tables: conservative / default / aggressive.
 _D69_CONFIGS: tuple[tuple[int, ...], ...] = (
     (4, 4, 2, 2),
@@ -6787,87 +6626,25 @@ def _d69_oracle() -> str:
     over one shared signature table, plus the exact containment-only
     pairs — the d34 band-tuning audit applied to the containment
     index."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    edge_case = "CASE " + " ".join(
-        f"WHEN sz0 < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    per_cfg = []
     selects = []
-    for ci, rows_per_band in enumerate(_D69_CONFIGS):
-        branches = []
-        for p, r in enumerate(rows_per_band):
-            for b in range(_D65_HASHES // r):
-                key = " || ".join(f"mh{b * r + k}" for k in range(r))
-                branches.append(
-                    f"      SELECT doc_id, sz0, part, {p} AS p, {b} AS band,"
-                    f" ('0x' || substr(md5({key}), 1, 15))::BIGINT AS key"
-                    f" FROM mhsz"
-                )
-        keys_sql = "\n      UNION ALL\n".join(branches)
-        per_cfg.append(f"""
-    keys{ci} AS MATERIALIZED (
-{keys_sql}),
-    idx{ci}0 AS MATERIALIZED (SELECT * FROM keys{ci} WHERE part = p),
-    bc{ci} AS MATERIALIZED (SELECT p, band, key, count(*) AS n
-          FROM idx{ci}0 GROUP BY 1, 2, 3),
-    idx{ci} AS MATERIALIZED (SELECT idx{ci}0.* FROM idx{ci}0
-           JOIN bc{ci} USING (p, band, key) WHERE n <= {_D65_BUCKET}),
-    pr{ci}0 AS MATERIALIZED (SELECT * FROM keys{ci} WHERE p >= part),
-    pc{ci} AS MATERIALIZED (SELECT p, band, key, count(*) AS m
-          FROM pr{ci}0 GROUP BY 1, 2, 3),
-    pr{ci} AS MATERIALIZED (SELECT pr{ci}0.* FROM pr{ci}0
-           JOIN pc{ci} USING (p, band, key)
-           WHERE m <= {4 * _D65_BUCKET}),
-    cand{ci} AS MATERIALIZED (SELECT DISTINCT
-               LEAST(q.doc_id, x.doc_id) AS doc_a,
-               GREATEST(q.doc_id, x.doc_id) AS doc_b
-             FROM pr{ci} q JOIN idx{ci} x USING (p, band, key)
-             WHERE q.sz0 < x.sz0
-                OR (q.sz0 = x.sz0 AND q.doc_id < x.doc_id))""")
-        cfg_str = "/".join(str(r) for r in rows_per_band)
+    for ci, rows in enumerate(_D69_CONFIGS):
+        hit = f"cont JOIN cand{ci} USING (doc_a, doc_b)"
         selects.append(f"""
-    SELECT '{cfg_str}' AS rows_per_band,
-      CAST((SELECT COUNT(*) FROM cont) AS BIGINT) AS n_containment_pairs,
-      CAST((SELECT COUNT(*) FROM cand{ci}) AS BIGINT) AS n_candidates,
-      CAST((SELECT COUNT(*) FROM cont JOIN cand{ci} USING (doc_a, doc_b))
-           AS BIGINT) AS n_recovered,
-      CAST((SELECT COUNT(*) FROM cont JOIN cand{ci} USING (doc_a, doc_b))
-           AS DOUBLE) / NULLIF((SELECT COUNT(*) FROM cont), 0) AS recall""")
-    union_selects = "\n    UNION ALL".join(selects)
+    SELECT '{"/".join(map(str, rows))}' AS rows_per_band,
+      {_sql_count("cont")} AS n_containment_pairs,
+      {_sql_count(f"cand{ci}")} AS n_candidates,
+      {_sql_count(hit)} AS n_recovered,
+      {_sql_recall(hit, "cont")} AS recall""")
+    cands = ",\n    ".join(
+        _sql_ensemble_cands(f"cand{ci}", rows)
+        for ci, rows in enumerate(_D69_CONFIGS)
+    )
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    mh AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM sh0 GROUP BY doc_id),
-    s0 AS MATERIALIZED (SELECT doc_id, count(*) AS sz0 FROM sh0 GROUP BY doc_id),
-    mhsz AS MATERIALIZED (SELECT mh.*, s0.sz0, {edge_case} AS part
-             FROM mh JOIN s0 USING (doc_id)),{",".join(per_cfg)},
-    shh AS MATERIALIZED (SELECT doc_id,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM sh0),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS MATERIALIZED (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {_D63_CAP}),
-    sz AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS n_common
-              FROM shf a JOIN shf b USING (sh)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-    prx AS MATERIALIZED (SELECT doc_a, doc_b,
-                 CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common)
-                   AS jaccard,
-                 CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz)
-                   AS containment
-          FROM inter
-          JOIN sz sa ON sa.doc_id = doc_a
-          JOIN sz sb ON sb.doc_id = doc_b),
-    cont AS MATERIALIZED (SELECT doc_a, doc_b FROM prx
-             WHERE containment >= 0.4 AND jaccard < 0.5)
-    SELECT * FROM ({union_selects})
+    WITH {_sql_shingles()},
+    {_sql_signatures({"part": "sz"})},
+    {cands},
+    {_sql_exact_pairs()}
+    SELECT * FROM ({" UNION ALL".join(selects)})
     ORDER BY rows_per_band
     """
 
@@ -6889,56 +6666,26 @@ def _d69_oracle() -> str:
     "rows shuffle, both caps inherited from d65.",
 )
 def d69_ensemble_tuning_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        lsh_ensemble_candidate_pairs,
-    )
-
     ss = _ensemble_sig_sizes(spark, sf_dir)
-    cont = (
-        _containment_pairs2(spark, sf_dir)
-        .filter((F.col("containment") >= 0.4) & (F.col("jaccard") < 0.5))
-        .select("doc_a", "doc_b")
-        .cache()
-    )
+    cont = _containment_only(spark, sf_dir).select("doc_a", "doc_b")
+
     def run_config(rows_per_band) -> tuple[str, int, int]:
-        # per-config caches (incl. the keyed band table inside
-        # lsh_ensemble_candidate_pairs) are released once the config's
-        # counters are materialized. The candidate count and the
-        # recovered-pair count share the cached candidate frame, so a
-        # union of the two one-row aggregates materializes both in ONE
-        # job instead of two.
-        caches: list = []
-        cand = lsh_ensemble_candidate_pairs(
-            None,
-            id_col="id",
-            num_hashes=_D65_HASHES,
-            size_edges=_D65_EDGES,
-            rows_per_band=rows_per_band,
-            max_bucket=_D65_BUCKET,
-            sig_sizes=ss,
-            cache_registry=caches,
-        ).select(
-            F.least("contained", "container").alias("doc_a"),
-            F.greatest("contained", "container").alias("doc_b"),
-        ).cache()
-        try:
-            counters = {
-                r["t"]: r["n"]
-                for r in cand.agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("nc").alias("t"), "n")
-                .unionByName(
-                    cont.join(cand, ["doc_a", "doc_b"])
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .select(F.lit("nr").alias("t"), "n")
-                )
-                .collect()
-            }
-        finally:
-            cand.unpersist()
-            for c in caches:
-                c.unpersist()
+        # per-config caches are released once the config's counters are
+        # materialized; both counters share the cached candidate frame
+        # and come from ONE job
+        with _released() as caches:
+            cand = _pin(
+                _ensemble_candidates(ss, caches, rows_per_band=rows_per_band),
+                caches,
+            )
+            got = _fingerprints(
+                {
+                    "nc": (cand, None),
+                    "nr": (cont.join(cand, ["doc_a", "doc_b"]), None),
+                }
+            )
         cfg = "/".join(str(r) for r in rows_per_band)
-        return (cfg, counters["nc"], counters["nr"])
+        return (cfg, got["nc"][0], got["nr"][0])
 
     # the three configs (and the exact-pair denominator) are independent
     # measurements off shared read-only kernels — overlap them on a
@@ -6948,25 +6695,17 @@ def d69_ensemble_tuning_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [cont.count],
         max_workers=4,
     )
-    out = spark.createDataFrame(
+    return spark.createDataFrame(
         [
-            (
-                cfg,
-                n_exact,
-                nc,
-                nr,
-                (nr / n_exact) if n_exact else None,
-            )
+            (cfg, n_exact, nc, nr, (nr / n_exact) if n_exact else None)
             for cfg, nc, nr in parts
         ],
         "rows_per_band string, n_containment_pairs bigint, "
         "n_candidates bigint, n_recovered bigint, recall double",
-    )
-    cont.unpersist()
-    return out.orderBy("rows_per_band")
+    ).orderBy("rows_per_band")
 
 
-# --- d70: approx-quantile equi-depth edges agreement audit (new in r11) -------
+# --- d70: approx-quantile equi-depth edges agreement audit --------------------
 #: percentile_approx accuracy for the sketch-based edge path. GK's rank
 #: guarantee is |rank(v) - ceil(p*n)| <= n/accuracy; for n STRICTLY
 #: below accuracy that slack is < 1 rank, so the sketch is rank-EXACT
@@ -6982,27 +6721,12 @@ def _d70_oracle() -> str:
     """Exact value-at-rank edges (d66's arithmetic); the two audit
     booleans are theory-backed (GK rank bound) resp. rank-exactness
     at test scale, so the oracle pins them TRUE."""
-    edge = (
-        "(SELECT min(sz) + 1 FROM cum CROSS JOIN tot"
-        " WHERE cum >= ({k} * n + 3) // 4)"
-    )
-    rows = ",\n      ".join(
-        f"({k}, {edge.format(k=k)})" for k in (1, 2, 3)
-    )
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    s0 AS MATERIALIZED (SELECT doc_id, count(*) AS sz0 FROM sh0 GROUP BY doc_id),
-    hist AS MATERIALIZED (SELECT sz0 AS sz, count(*) AS c FROM s0 GROUP BY sz0),
-    cum AS MATERIALIZED (SELECT sz, sum(c) OVER (ORDER BY sz
-             ROWS UNBOUNDED PRECEDING) AS cum FROM hist),
-    tot AS MATERIALIZED (SELECT sum(c) AS n FROM hist)
-    SELECT k, CAST(exact_edge AS BIGINT) AS exact_edge,
+    WITH {_sql_shingles()},
+    {_sql_size_quantiles()}
+    SELECT k, CAST([e1, e2, e3][k] AS BIGINT) AS exact_edge,
            TRUE AS within_rank_bound, TRUE AS approx_equals_exact
-    FROM (VALUES
-      {rows}) AS v(k, exact_edge)
+    FROM (VALUES (1), (2), (3)) AS v(k) CROSS JOIN edges
     ORDER BY k
     """
 
@@ -7028,8 +6752,6 @@ def _d70_oracle() -> str:
     "exact path exists for the oracle and as the agreement reference.",
 )
 def d70_equidepth_sketch_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import equi_depth_edges
-
     ss = _ensemble_sig_sizes(spark, sf_dir)
     sizes = ss.select("id", "sz")
     exact, rows = equi_depth_edges(
@@ -7066,7 +6788,8 @@ def d70_equidepth_sketch_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("k")
 
 
-# --- d71: containment admission threshold sweep (new in r11) ------------------
+
+# --- d71: containment admission threshold sweep -------------------------------
 #: Swept operating points, integer percent (the probe-floor arithmetic
 #: is exact at hundredths). 65 deliberately exercises the non-decile
 #: quantization path; 80 is d68's production point.
@@ -7075,99 +6798,35 @@ _D71_THRESHOLDS: tuple[int, ...] = (50, 65, 80)
 
 def _d71_oracle() -> str:
     """Replay of the d68 standing/incoming machinery with per-threshold
-    probe floors: ONE probe-entry table (banding keys are threshold-
-    independent) filtered at each t's partition floor, ONE unrestricted
-    exact containment pair table filtered at each t — exactly how the
-    engine sweeps off shared tables."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    edge_case = "CASE " + " ".join(
-        f"WHEN {{v}} < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    idx_branches, probe_branches = [], []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            k_expr = f"('0x' || substr(md5({key}), 1, 15))::BIGINT"
-            idx_branches.append(
-                f"      SELECT doc_id AS container, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_c WHERE part = {p}"
-            )
-            probe_branches.append(
-                f"      SELECT doc_id AS incoming, szq, {p} AS p,"
-                f" {b} AS band, {k_expr} AS key FROM mhsz_i"
-            )
-    per_t = []
+    probe floors: ONE band-key table filtered at each t's partition
+    floor, ONE unrestricted exact containment pair table filtered at
+    each t — exactly how the engine sweeps off shared tables."""
+    per_t, selects = [], []
     for t in _D71_THRESHOLDS:
-        pmin = edge_case.format(v=f"(({t} * szq + 99) // 100)")
-        per_t.append(f"""
-    cand_{t} AS MATERIALIZED (SELECT DISTINCT incoming, container
-            FROM probe0 JOIN idx USING (p, band, key)
-            WHERE p >= ({pmin})),
+        floor = _sql_part(f"(({t} * sz + 99) // 100)")
+        per_t.append(f"""{_sql_probe(f"cand_{t}", _BATCH, floor)},
     exact_{t} AS MATERIALIZED (SELECT incoming, container FROM common
-            JOIN szin USING (incoming)
-            WHERE n_common * 100 >= {t} * sz_in),
+          WHERE n_common * 100 >= {t} * sz_in),
     rec_{t} AS MATERIALIZED (SELECT incoming, container FROM exact_{t}
-            JOIN cand_{t} USING (incoming, container))""")
-    selects = "\n    UNION ALL\n".join(
-        f"""    SELECT {t} AS t_pct,
-      CAST((SELECT COUNT(*) FROM exact_{t}) AS BIGINT) AS n_exact_pairs,
-      CAST((SELECT COUNT(*) FROM cand_{t}) AS BIGINT) AS n_candidates,
-      CAST((SELECT COUNT(*) FROM rec_{t}) AS BIGINT) AS n_recovered,
-      CAST((SELECT COUNT(*) FROM rec_{t}) AS DOUBLE)
-        / NULLIF((SELECT COUNT(*) FROM exact_{t}), 0) AS pair_recall,
+          JOIN cand_{t} USING (incoming, container))""")
+        selects.append(f"""    SELECT {t} AS t_pct,
+      {_sql_count(f"exact_{t}")} AS n_exact_pairs,
+      {_sql_count(f"cand_{t}")} AS n_candidates,
+      {_sql_count(f"rec_{t}")} AS n_recovered,
+      {_sql_recall(f"rec_{t}", f"exact_{t}")} AS pair_recall,
       CAST((SELECT COUNT(DISTINCT incoming) FROM exact_{t}) AS BIGINT)
         AS n_rejected_exact,
       CAST((SELECT COUNT(DISTINCT incoming) FROM rec_{t}) AS BIGINT)
-        AS n_rejected_index"""
-        for t in _D71_THRESHOLDS
-    )
+        AS n_rejected_index""")
+    union = "\n    UNION ALL\n".join(selects)
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    shc AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 <> 0),
-    shi AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 = 0),
-    mh_c AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shc GROUP BY doc_id),
-    sz_c AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shc GROUP BY doc_id),
-    mhsz_c AS MATERIALIZED (SELECT mh_c.*, sz_c.sz,
-             {edge_case.format(v="sz")} AS part
-             FROM mh_c JOIN sz_c USING (doc_id)),
-    mh_i AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shi GROUP BY doc_id),
-    sz_i AS MATERIALIZED (SELECT doc_id, count(*) AS szq FROM shi GROUP BY doc_id),
-    mhsz_i AS MATERIALIZED (SELECT mh_i.*, sz_i.szq
-             FROM mh_i JOIN sz_i USING (doc_id)),
-    idx0 AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in idx_branches])])}    ),
-    bc AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx0
-          GROUP BY 1, 2, 3),
-    idx AS MATERIALIZED (SELECT idx0.* FROM idx0 JOIN bc USING (p, band, key)
-           WHERE n <= {_D65_BUCKET}),
-    probe0 AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in probe_branches])])}    ),
-    sth AS MATERIALIZED (SELECT doc_id AS container,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shc),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM sth GROUP BY sh),
-    hot AS MATERIALIZED (SELECT sh FROM dfreq WHERE df > {_D63_CAP}),
-    stf AS MATERIALIZED (SELECT * FROM sth
-           WHERE sh NOT IN (SELECT sh FROM hot)),
-    inch AS MATERIALIZED (SELECT doc_id AS incoming,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shi),
-    incf AS MATERIALIZED (SELECT * FROM inch
-            WHERE sh NOT IN (SELECT sh FROM hot)),
-    szin AS MATERIALIZED (SELECT incoming, count(*) AS sz_in FROM incf
-           GROUP BY incoming),
-    common AS MATERIALIZED (
-      SELECT i.incoming, s.container, count(*) AS n_common
-      FROM incf i JOIN stf s USING (sh)
-      GROUP BY 1, 2),{",".join(per_t)}
-{selects}
+    WITH {_sql_shingles()},
+    {_sql_signatures({"part": "sz"})},
+    {_sql_band_keys("doc_id, sz, part")},
+    {_sql_standing("", _STANDING)},
+    {_sql_verify("", _BATCH)},
+    {",".join(per_t)}
+{union}
     ORDER BY t_pct
     """
 
@@ -7193,118 +6852,90 @@ def _d71_oracle() -> str:
 def d71_containment_threshold_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        containment_probe_candidates,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
     standing = _d68_standing_index(spark, sf_dir)
     incoming_sh = shingle_rows(docs, shingle_n=2, out_id="id").filter(
         F.col("id") % 7 == 0
     )
-    # a doc's distinct-shingle set (and so its min-hashes and size) is
-    # independent of the corpus split, so the memoized full-corpus
-    # signature kernel serves the incoming slice directly — no second
-    # 16-hash aggregation
-    sig_sizes = (
-        _ensemble_sig_sizes(spark, sf_dir)
-        .filter(F.col("id") % 7 == 0)
-        .withColumnRenamed("sz", "szq")
-        .cache()
-    )
-    # exact reference: containment of every incoming doc in every
-    # standing doc sharing a surviving shingle — the UNRESTRICTED
-    # verify join (audit-only; the production path restricts to
-    # candidates, which is the economy this sweep prices)
-    inc = (
-        incoming_sh.withColumn("sh", shingle_hash())
-        .withColumnRenamed("id", "incoming")
-        .join(standing["hot"], "sh", "left_anti")
-    )
-    sz_in = inc.groupBy("incoming").agg(F.count(F.lit(1)).alias("sz_in"))
-    # no broadcast hint on this audit join: inc here is the FULL incoming
-    # hashed-shingle table (one row per shingle, ~1/7 of corpus shingles),
-    # not the compact band-key table the production probe broadcasts — at
-    # higher replication a forced broadcast hits the size cap / driver
-    # memory. AQE picks the strategy; the plan shape need not match d68's
-    # (ADVICE r11).
-    allp = (
-        inc
-        .join(standing["st"], "sh")
-        .groupBy("incoming", "container")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .join(sz_in, "incoming")
-        .cache()
-    )
-    def run_threshold(t: int):
-        caches: list = []
-        ex = rec = None
-        try:
-            cand = containment_probe_candidates(
-                standing,
-                None,
-                id_col="id",
-                num_hashes=_D65_HASHES,
-                size_edges=_D65_EDGES,
-                rows_per_band=_D65_ROWS,
-                threshold=t / 100.0,
-                incoming_sig_sizes=sig_sizes,
-                cache_registry=caches,
-            )
-            ex = allp.filter(
-                F.col("n_common") * 100 >= F.lit(t) * F.col("sz_in")
-            ).cache()
-            rec = ex.join(cand, ["incoming", "container"]).cache()
-            # the five per-threshold counters are independent one-row
-            # aggregates over the three cached frames — union them into
-            # ONE job (the io21 side_fingerprints discipline) instead of
-            # five serial actions
-            counters = {
-                "n_exact": ex,
-                "n_cand": cand,
-                "n_rec": rec,
-                "n_rej_exact": ex.select("incoming").distinct(),
-                "n_rej_index": rec.select("incoming").distinct(),
-            }
-            merged = None
-            for tag, f in counters.items():
-                one = f.agg(F.count(F.lit(1)).alias("n")).select(
-                    F.lit(tag).alias("t"), "n"
+    with _released() as caches:
+        # a doc's distinct-shingle set (and so its min-hashes and size)
+        # is independent of the corpus split, so the memoized
+        # full-corpus signature kernel serves the incoming slice
+        # directly — no second 16-hash aggregation
+        sig_sizes = _pin(
+            _ensemble_sig_sizes(spark, sf_dir)
+            .filter(F.col("id") % 7 == 0)
+            .withColumnRenamed("sz", "szq"),
+            caches,
+        )
+        # exact reference: containment of every incoming doc in every
+        # standing doc sharing a surviving shingle — the UNRESTRICTED
+        # verify join (audit-only; the production path restricts to
+        # candidates, which is the economy this sweep prices)
+        inc = (
+            incoming_sh.withColumn("sh", shingle_hash())
+            .withColumnRenamed("id", "incoming")
+            .join(standing["hot"], "sh", "left_anti")
+        )
+        sz_in = inc.groupBy("incoming").agg(F.count(F.lit(1)).alias("sz_in"))
+        # no broadcast hint on this audit join: inc here is the FULL
+        # incoming hashed-shingle table (one row per shingle, ~1/7 of
+        # corpus shingles), not the compact band-key table the
+        # production probe broadcasts — at higher replication a forced
+        # broadcast hits the size cap / driver memory. AQE picks the
+        # strategy; the plan shape need not match d68's.
+        allp = _pin(
+            inc.join(standing["st"], "sh")
+            .groupBy("incoming", "container")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+            .join(sz_in, "incoming"),
+            caches,
+        )
+
+        def run_threshold(t: int):
+            with _released() as tcaches:
+                cand = containment_probe_candidates(
+                    standing,
+                    None,
+                    threshold=t / 100.0,
+                    incoming_sig_sizes=sig_sizes,
+                    cache_registry=tcaches,
+                    **_ENSEMBLE,
                 )
-                merged = one if merged is None else merged.unionByName(one)
-            got = {r["t"]: r["n"] for r in merged.collect()}
-            n_exact, n_cand, n_rec = (
-                got["n_exact"], got["n_cand"], got["n_rec"],
-            )
-            n_rej_exact, n_rej_index = (
-                got["n_rej_exact"], got["n_rej_index"],
-            )
+                ex = _pin(
+                    allp.filter(
+                        F.col("n_common") * 100 >= F.lit(t) * F.col("sz_in")
+                    ),
+                    tcaches,
+                )
+                rec = _pin(ex.join(cand, ["incoming", "container"]), tcaches)
+                # five independent one-row counters over the three
+                # cached frames, in ONE job
+                got = _fingerprints(
+                    {
+                        "n_exact": (ex, None),
+                        "n_cand": (cand, None),
+                        "n_rec": (rec, None),
+                        "n_rej_exact": (ex.select("incoming").distinct(), None),
+                        "n_rej_index": (rec.select("incoming").distinct(), None),
+                    }
+                )
+            n_exact, n_rec = got["n_exact"][0], got["n_rec"][0]
             return (
                 t,
                 n_exact,
-                n_cand,
+                got["n_cand"][0],
                 n_rec,
                 (n_rec / n_exact) if n_exact else None,
-                n_rej_exact,
-                n_rej_index,
+                got["n_rej_exact"][0],
+                got["n_rej_index"][0],
             )
-        finally:
-            for c in (ex, rec, *caches):
-                if c is not None:
-                    c.unpersist()
 
-    try:
         # thresholds are independent re-filters of one signature table —
         # overlap them on a driver pool (guide §2.6)
         rows = run_concurrent(
             [(lambda tt=t: run_threshold(tt)) for t in _D71_THRESHOLDS]
         )
-    finally:
-        # the two biggest caches release even when a threshold pass
-        # fails (the ADVICE r11 failure-path discipline)
-        allp.unpersist()
-        sig_sizes.unpersist()
     return spark.createDataFrame(
         rows,
         "t_pct int, n_exact_pairs bigint, n_candidates bigint, "
@@ -7313,7 +6944,7 @@ def d71_containment_threshold_sweep(
     ).orderBy("t_pct")
 
 
-# --- io18: containment standing-state publish (new in r11) --------------------
+# --- io18: containment standing-state publish ---------------------------------
 def _io18_oracle() -> str:
     """Recompute every audit cell of the published standing state from
     the source corpus: index/hot/shingle-table cardinalities, the
@@ -7321,98 +6952,35 @@ def _io18_oracle() -> str:
     checksum a probe of the published index must reproduce (identical
     to d68's rejected set — the probe is deterministic in (batch,
     standing state), so staged==memo is pinned TRUE)."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    edge_case = "CASE " + " ".join(
-        f"WHEN {{v}} < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    idx_branches, probe_branches = [], []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            k_expr = f"('0x' || substr(md5({key}), 1, 15))::BIGINT"
-            idx_branches.append(
-                f"      SELECT doc_id AS container, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_c WHERE part = {p}"
-            )
-            probe_branches.append(
-                f"      SELECT doc_id AS incoming, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_i WHERE {p} >= pmin"
-            )
-    t = _D68_THRESHOLD_NUM
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    shc AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 <> 0),
-    shi AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 = 0),
-    mh_c AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shc GROUP BY doc_id),
-    sz_c AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shc GROUP BY doc_id),
-    mhsz_c AS MATERIALIZED (SELECT mh_c.*, sz_c.sz,
-             {edge_case.format(v="sz")} AS part
-             FROM mh_c JOIN sz_c USING (doc_id)),
-    mh_i AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shi GROUP BY doc_id),
-    sz_i AS MATERIALIZED (SELECT doc_id, count(*) AS szq FROM shi GROUP BY doc_id),
-    mhsz_i AS MATERIALIZED (SELECT mh_i.*, sz_i.szq,
-             {edge_case.format(v=f"(({t} * szq + 9) // 10)")} AS pmin
-             FROM mh_i JOIN sz_i USING (doc_id)),
-    idx0 AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in idx_branches])])}    ),
-    bc AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx0
-          GROUP BY 1, 2, 3),
-    idx AS MATERIALIZED (SELECT idx0.* FROM idx0 JOIN bc USING (p, band, key)
-           WHERE n <= {_D65_BUCKET}),
-    probe AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in probe_branches])])}    ),
-    cand AS MATERIALIZED (SELECT DISTINCT incoming, container
-            FROM probe JOIN idx USING (p, band, key)),
-    sth AS MATERIALIZED (SELECT doc_id AS container,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shc),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM sth GROUP BY sh),
-    hot AS MATERIALIZED (SELECT sh FROM dfreq WHERE df > {_D63_CAP}),
-    stf AS MATERIALIZED (SELECT * FROM sth
-           WHERE sh NOT IN (SELECT sh FROM hot)),
-    stc AS MATERIALIZED (SELECT * FROM stf
-           WHERE container IN (SELECT DISTINCT container FROM cand)),
-    inch AS MATERIALIZED (SELECT doc_id AS incoming,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shi),
-    incf AS MATERIALIZED (SELECT * FROM inch
-            WHERE sh NOT IN (SELECT sh FROM hot)),
-    szin AS MATERIALIZED (SELECT incoming, count(*) AS sz_in FROM incf
-           GROUP BY incoming),
-    common AS MATERIALIZED (
-      SELECT i.incoming, s.container, count(*) AS n_common
-      FROM incf i JOIN stc s USING (sh)
-      GROUP BY 1, 2),
-    matches AS MATERIALIZED (
-      SELECT c.incoming
-      FROM common c
-      JOIN cand USING (incoming, container)
-      JOIN szin USING (incoming)
-      WHERE CAST(n_common AS DOUBLE) / sz_in >= {t} / 10.0),
-    rejected AS MATERIALIZED (SELECT DISTINCT incoming FROM matches)
+    WITH {_sql_admission()}
     SELECT
-      CAST((SELECT COUNT(*) FROM idx) AS BIGINT) AS n_index,
-      CAST((SELECT COUNT(*) FROM hot) AS BIGINT) AS n_hot,
-      CAST((SELECT COUNT(*) FROM stf) AS BIGINT) AS n_st,
-      CAST((SELECT COUNT(*) FROM bc) AS BIGINT) AS n_counts,
-      CAST(CAST((SELECT COALESCE(SUM(('0x' || substr(md5(
-             concat_ws('|', container, p, band, key)), 1, 15))::BIGINT), 0)
-           FROM idx) AS DECIMAL(38,0)) AS VARCHAR) AS index_checksum,
-      CAST(CAST((SELECT COALESCE(SUM(('0x' || substr(md5(
-             CAST(incoming AS VARCHAR)), 1, 15))::BIGINT), 0)
-           FROM rejected) AS DECIMAL(38,0)) AS VARCHAR)
-        AS rejected_checksum,
+      {_sql_count("idx")} AS n_index,
+      {_sql_count("hot")} AS n_hot,
+      {_sql_count("st")} AS n_st,
+      {_sql_count("idx_n")} AS n_counts,
+      (SELECT {_sql_checksum("concat_ws('|', doc_id, p, band, key)")}
+       FROM idx) AS index_checksum,
+      (SELECT {_sql_checksum("doc_id")} FROM rejected) AS rejected_checksum,
       TRUE AS probe_equals_memo,
       TRUE AS audit_passed,
       TRUE AS published
     """
+
+
+#: Checksummed columns of each standing table.
+_STANDING_COLS = {
+    "index": ["container", "p", "band", "key"],
+    "hot": ["sh"],
+    "st": ["container", "sh"],
+    "counts": ["p", "band", "key", "n"],
+    "dfreq": ["sh", "df"],
+}
+
+
+def _rejected_checksum(matches: DataFrame) -> str:
+    rejected = matches.select("incoming").distinct()
+    return _fingerprints({"r": (rejected, _checksum(F.col("incoming")))})["r"][1]
 
 
 @query(
@@ -7429,11 +6997,12 @@ def _io18_oracle() -> str:
     "partitionBy('p') so the probe floor becomes a DISK partition "
     "prune (plan test pins PartitionFilters); the audit runs on the "
     "READ-BACK staged tables only: per-table row counts vs the "
-    "in-session memo, an order-independent md5-prefix content checksum "
+    "in-session state, an order-independent md5-prefix content checksum "
     "of the index rows, and a probe-equivalence gate — the full d68 "
     "admission probe run against the STAGED tables (cold frames, no "
-    "lineage to the memo, index pruned to the batch's global probe "
-    "floor) must reproduce the memo path's exact rejected-set checksum. "
+    "lineage to the in-session state, index pruned to the batch's global "
+    "probe floor) must reproduce the in-session path's exact rejected-set "
+    "checksum. "
     "Only a passing audit publishes (rename; a metadata pointer swap "
     "on an object store). The oracle recomputes every cell from the "
     "source corpus, so a row lost in the staged write, a mis-keyed "
@@ -7450,197 +7019,121 @@ def io18_containment_index_publish(
     import shutil
     import tempfile
 
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        incremental_containment_matches,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
     standing = _d68_standing_index(spark, sf_dir)
-    incoming_sh = shingle_rows(docs, shingle_n=2, out_id="id").filter(
-        F.col("id") % 7 == 0
-    ).cache()
-
-    def rejected_checksum(matches: DataFrame) -> str:
-        row_int = F.conv(
-            F.substring(F.md5(F.col("incoming").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("bigint")
-        return (
-            matches.select("incoming")
-            .distinct()
-            .agg(
-                F.coalesce(F.sum(row_int.cast("decimal(38,0)")), F.lit(0))
-                .cast("decimal(38,0)")
-                .cast("string")
-                .alias("c")
-            )
-            .first()["c"]
-        )
-
-    def probe(state: dict[str, DataFrame], registry: list) -> DataFrame:
-        return incremental_containment_matches(
-            None,
-            incoming_sh,
-            id_col="id",
-            num_hashes=_D65_HASHES,
-            size_edges=_D65_EDGES,
-            rows_per_band=_D65_ROWS,
-            max_bucket=_D65_BUCKET,
-            max_df=_D63_CAP,
-            threshold=_D68_THRESHOLD_NUM / 10.0,
-            prebuilt_standing=state,
-            cache_registry=registry,
-        )
-
     base = tempfile.mkdtemp(prefix="io18_standing_")
     stage = f"{base}/stage"
     publish = f"{base}/published"
-    try:
-        # the index is written partitionBy("p") (VERDICT r11 item 3):
-        # the probe floor p >= partition_of(ceil(t·|q|)) is a partition
-        # predicate, so laying size partitions out as disk partitions
-        # turns it into a scan-level prune — at 100 TB the low-size
-        # partitions of the index are never read off disk for a batch
-        # of large documents (plan test pins PartitionFilters).
-        # the five staged tables are independent write jobs over
-        # localCheckpointed kernel state — submit them from a driver
-        # pool so their stage tails overlap (guide §2.6) instead of
-        # paying five serial write barriers
-        def write_one(name: str) -> None:
-            w = standing[name].write.mode("overwrite")
-            if name == "index":
-                w = w.partitionBy("p")
-            w.parquet(f"{stage}/{name}")
-
-        run_concurrent(
-            [(lambda n=name: write_one(n))
-             for name in ("index", "hot", "st", "counts", "dfreq")]
-        )
-
-        # -- audit on the READ-BACK staged tables only --------------------
-        staged = {
-            name: spark.read.parquet(f"{stage}/{name}")
-            for name in ("index", "hot", "st", "counts", "dfreq")
-        }
-        # ONE audit job, not twelve: per-table row counts on both sides,
-        # the staged-index content checksum, and the batch's minimum doc
-        # size are independent one-row aggregates — a union of them lets
-        # the scheduler run all the underlying scans concurrently (the
-        # io21 side_fingerprints discipline)
-        idx_int = F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", "container", "p", "band", "key")),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        idx_ck_col = (
-            F.coalesce(F.sum(idx_int.cast("decimal(38,0)")), F.lit(0))
-            .cast("decimal(38,0)")
-            .cast("string")
-            .alias("c")
-        )
-        aggs = []
-        for side, tables in (("staged", staged), ("memo", standing)):
-            for n, f in tables.items():
-                agg_cols = [F.count(F.lit(1)).cast("bigint").alias("n")]
-                agg_cols.append(
-                    idx_ck_col
-                    if (side, n) == ("staged", "index")
-                    else F.lit("").alias("c")
-                )
-                aggs.append(
-                    f.agg(*agg_cols).select(
-                        F.lit(f"{side}.{n}").alias("t"), "n", "c"
-                    )
-                )
-        aggs.append(
-            incoming_sh.groupBy("id")
-            .agg(F.count(F.lit(1)).alias("szq"))
-            .agg(F.min("szq").cast("bigint").alias("n"))
-            .select(F.lit("szq_min").alias("t"), "n", F.lit("").alias("c"))
-        )
-        merged = aggs[0]
-        for a in aggs[1:]:
-            merged = merged.unionByName(a)
-        audit_rows = {r["t"]: (r["n"], r["c"]) for r in merged.collect()}
-        counts = {n: audit_rows[f"staged.{n}"][0] for n in staged}
-        memo_counts = {n: audit_rows[f"memo.{n}"][0] for n in staged}
-        index_checksum = audit_rows["staged.index"][1]
-        szq_min = audit_rows["szq_min"][0]
-        # the staged probe reads the index with the batch's GLOBAL probe
-        # floor as a literal partition predicate (min over the batch of
-        # each doc's pmin = the floor for the batch's smallest doc):
-        # every probe row already satisfies e.p >= its own pmin >= the
-        # global floor, so pruning partitions below it cannot drop a
-        # match — probe_equals_memo certifies exactly that, against the
-        # unpruned in-memory path.
-        floor_sz = (
-            0 if szq_min is None else (_D68_THRESHOLD_NUM * szq_min + 9) // 10
-        )
-        pmin_glob = sum(1 for e in _D65_EDGES if floor_sz >= e)
-        staged_probe = dict(staged)
-        staged_probe["index"] = staged["index"].filter(
-            F.col("p") >= F.lit(pmin_glob)
-        )
-        caches: list = []
+    with _released() as caches:
         try:
-            # the two probe replays (memo-backed and staged-backed) are
+            incoming_sh = _pin(
+                shingle_rows(docs, shingle_n=2, out_id="id").filter(
+                    F.col("id") % 7 == 0
+                ),
+                caches,
+            )
+            # the index is written partitionBy("p"): the probe floor
+            # p >= partition_of(ceil(t·|q|)) is a partition predicate,
+            # so laying size partitions out as disk partitions turns it
+            # into a scan-level prune — at 100 TB the low-size partitions
+            # of the index are never read off disk for a batch of large
+            # documents (plan test pins PartitionFilters). The five
+            # staged tables are independent write jobs over checkpointed
+            # state — submit them from a driver pool so their stage
+            # tails overlap (guide §2.6)
+            def write_one(name: str) -> None:
+                w = standing[name].write.mode("overwrite")
+                if name == "index":
+                    w = w.partitionBy("p")
+                w.parquet(f"{stage}/{name}")
+
+            run_concurrent([(lambda n=name: write_one(n)) for name in standing])
+
+            # -- audit on the READ-BACK staged tables only ----------------
+            staged = {
+                name: spark.read.parquet(f"{stage}/{name}") for name in standing
+            }
+            # ONE audit job: per-table row counts on both sides, the
+            # staged-index content checksum and the batch's minimum doc
+            # size
+            specs = {f"live.{n}": (f, None) for n, f in standing.items()}
+            specs.update({f"staged.{n}": (f, None) for n, f in staged.items()})
+            specs["staged.index"] = (
+                staged["index"],
+                _checksum(F.concat_ws("|", *_STANDING_COLS["index"])),
+            )
+            specs["szq_min"] = (
+                incoming_sh.groupBy("id").agg(F.count(F.lit(1)).alias("szq")),
+                F.min("szq"),
+            )
+            audit = _fingerprints(specs)
+            counts = {n: audit[f"staged.{n}"][0] for n in staged}
+            live_counts = {n: audit[f"live.{n}"][0] for n in staged}
+            index_checksum = audit["staged.index"][1]
+            szq_min = audit["szq_min"][1]
+            # the staged probe reads the index with the batch's GLOBAL
+            # probe floor as a literal partition predicate (min over the
+            # batch of each doc's pmin = the floor for the batch's
+            # smallest doc): every probe row already satisfies e.p >= its
+            # own pmin >= the global floor, so pruning partitions below
+            # it cannot drop a match — probe_equals_memo certifies
+            # exactly that, against the unpruned in-memory path.
+            floor_sz = (
+                0
+                if not szq_min
+                else (_D68_THRESHOLD_NUM * int(szq_min) + 9) // 10
+            )
+            pmin_glob = sum(1 for e in _D65_EDGES if floor_sz >= e)
+            staged_probe = dict(staged)
+            staged_probe["index"] = staged["index"].filter(
+                F.col("p") >= F.lit(pmin_glob)
+            )
+            # the two probe replays (in-session and staged) are
             # independent by construction — that independence is the
             # audit's point — so they overlap on the driver pool
-            memo_rc, staged_rc = run_concurrent(
+            live_rc, staged_rc = run_concurrent(
                 [
-                    lambda: rejected_checksum(probe(standing, caches)),
-                    lambda: rejected_checksum(probe(staged_probe, caches)),
+                    lambda: _rejected_checksum(
+                        _admission(standing, incoming_sh, caches)
+                    ),
+                    lambda: _rejected_checksum(
+                        _admission(staged_probe, incoming_sh, caches)
+                    ),
                 ]
             )
+            probe_equals_memo = staged_rc == live_rc
+            audit_ok = probe_equals_memo and counts == live_counts
+            published = False
+            if audit_ok:
+                os.rename(stage, publish)
+                published = os.path.isdir(publish)
+            return spark.createDataFrame(
+                [
+                    (
+                        counts["index"],
+                        counts["hot"],
+                        counts["st"],
+                        counts["counts"],
+                        index_checksum,
+                        staged_rc,
+                        bool(probe_equals_memo),
+                        bool(audit_ok),
+                        bool(published),
+                    )
+                ],
+                "n_index bigint, n_hot bigint, n_st bigint, n_counts bigint, "
+                "index_checksum string, rejected_checksum string, "
+                "probe_equals_memo boolean, audit_passed boolean, "
+                "published boolean",
+            )
         finally:
-            # release in finally or a failed probe/write pins the
-            # registered caches for the session (ADVICE r11)
-            for c in caches:
-                c.unpersist()
-        probe_equals_memo = staged_rc == memo_rc
-        audit_ok = probe_equals_memo and all(
-            counts[n] == memo_counts[n] for n in counts
-        )
-        published = False
-        if audit_ok:
-            os.rename(stage, publish)
-            published = os.path.isdir(publish)
-        return spark.createDataFrame(
-            [
-                (
-                    counts["index"],
-                    counts["hot"],
-                    counts["st"],
-                    counts["counts"],
-                    index_checksum,
-                    staged_rc,
-                    bool(probe_equals_memo),
-                    bool(audit_ok),
-                    bool(published),
-                )
-            ],
-            "n_index bigint, n_hot bigint, n_st bigint, n_counts bigint, "
-            "index_checksum string, rejected_checksum string, "
-            "probe_equals_memo boolean, audit_passed boolean, "
-            "published boolean",
-        )
-    finally:
-        # the batch cache releases on EVERY exit path, including a
-        # failure before the probe section (r12 review)
-        incoming_sh.unpersist()
-        shutil.rmtree(base, ignore_errors=True)
+            shutil.rmtree(base, ignore_errors=True)
 
 
-# --- io21: fold admitted batches into the published standing index (r12) ------
+# --- io21: fold admitted batches into the published standing index ------------
 def _io21_oracle() -> str:
     """Independent from-scratch replay of the ENTIRE ingest loop:
-    probe the batch against the standing corpus (io18's CTEs), derive
+    probe the batch against the standing corpus (d68's replay), derive
     the admitted set, then REBUILD the containment state on corpus ∪
     admitted and emit its cardinalities and checksums. The engine side
     computes the same cells from the FOLD-IN path
@@ -7650,122 +7143,21 @@ def _io21_oracle() -> str:
     shingle — flips a gated cell. The equality booleans are pinned
     TRUE: the engine measures them against its own from-scratch
     rebuild, giving the same invariant a second, structural witness."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    mh_cols = ", ".join(f"mh{i}" for i in range(_D65_HASHES))
-    edge_case = "CASE " + " ".join(
-        f"WHEN {{v}} < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    idx_branches, probe_branches, idx_u_branches = [], [], []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            k_expr = f"('0x' || substr(md5({key}), 1, 15))::BIGINT"
-            idx_branches.append(
-                f"      SELECT doc_id AS container, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_c WHERE part = {p}"
-            )
-            probe_branches.append(
-                f"      SELECT doc_id AS incoming, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_i WHERE {p} >= pmin"
-            )
-            idx_u_branches.append(
-                f"      SELECT doc_id AS container, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz_u WHERE part = {p}"
-            )
-    t = _D68_THRESHOLD_NUM
+    kept = "doc_id NOT IN (SELECT doc_id FROM rejected)"
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    shc AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 <> 0),
-    shi AS MATERIALIZED (SELECT * FROM sh0 WHERE doc_id % 7 = 0),
-    mh_c AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shc GROUP BY doc_id),
-    sz_c AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM shc GROUP BY doc_id),
-    mhsz_c AS MATERIALIZED (SELECT mh_c.*, sz_c.sz,
-             {edge_case.format(v="sz")} AS part
-             FROM mh_c JOIN sz_c USING (doc_id)),
-    mh_i AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM shi GROUP BY doc_id),
-    sz_i AS MATERIALIZED (SELECT doc_id, count(*) AS szq FROM shi GROUP BY doc_id),
-    mhsz_i AS MATERIALIZED (SELECT mh_i.*, sz_i.szq,
-             {edge_case.format(v=f"(({t} * szq + 9) // 10)")} AS pmin
-             FROM mh_i JOIN sz_i USING (doc_id)),
-    idx0 AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in idx_branches])])}    ),
-    bc AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx0
-          GROUP BY 1, 2, 3),
-    idx AS MATERIALIZED (SELECT idx0.* FROM idx0 JOIN bc USING (p, band, key)
-           WHERE n <= {_D65_BUCKET}),
-    probe AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in probe_branches])])}    ),
-    cand AS MATERIALIZED (SELECT DISTINCT incoming, container
-            FROM probe JOIN idx USING (p, band, key)),
-    sth AS MATERIALIZED (SELECT doc_id AS container,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shc),
-    dfreq AS MATERIALIZED (SELECT sh, count(*) AS df FROM sth GROUP BY sh),
-    hot AS MATERIALIZED (SELECT sh FROM dfreq WHERE df > {_D63_CAP}),
-    stc AS MATERIALIZED (SELECT * FROM sth
-           WHERE sh NOT IN (SELECT sh FROM hot)
-             AND container IN (SELECT DISTINCT container FROM cand)),
-    inch AS MATERIALIZED (SELECT doc_id AS incoming,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM shi),
-    incf AS MATERIALIZED (SELECT * FROM inch
-            WHERE sh NOT IN (SELECT sh FROM hot)),
-    szin AS MATERIALIZED (SELECT incoming, count(*) AS sz_in FROM incf
-           GROUP BY incoming),
-    common AS MATERIALIZED (
-      SELECT i.incoming, s.container, count(*) AS n_common
-      FROM incf i JOIN stc s USING (sh)
-      GROUP BY 1, 2),
-    rejected AS MATERIALIZED (
-      SELECT DISTINCT c.incoming
-      FROM common c
-      JOIN cand USING (incoming, container)
-      JOIN szin USING (incoming)
-      WHERE CAST(n_common AS DOUBLE) / sz_in >= {t} / 10.0),
-    -- the admitted batch, then the from-scratch rebuild on corpus ∪ admitted
-    adm AS MATERIALIZED (SELECT * FROM mhsz_i
-           WHERE doc_id NOT IN (SELECT incoming FROM rejected)),
-    mhsz_u AS MATERIALIZED (
-      SELECT doc_id, {mh_cols}, sz, part FROM mhsz_c
-      UNION ALL
-      SELECT doc_id, {mh_cols}, szq AS sz,
-             {edge_case.format(v="szq")} AS part FROM adm),
-    idx0_u AS MATERIALIZED (
-{chr(10).join(["      UNION ALL".join([br + chr(10) for br in idx_u_branches])])}    ),
-    bc_u AS MATERIALIZED (SELECT p, band, key, count(*) AS n FROM idx0_u
-          GROUP BY 1, 2, 3),
-    idx_u AS MATERIALIZED (SELECT idx0_u.* FROM idx0_u
-           JOIN bc_u USING (p, band, key)
-           WHERE n <= {_D65_BUCKET}),
-    sth_u AS MATERIALIZED (
-      SELECT * FROM sth
-      UNION ALL
-      SELECT incoming AS container, sh FROM inch
-      WHERE incoming NOT IN (SELECT incoming FROM rejected)),
-    dfreq_u AS MATERIALIZED (SELECT sh, count(*) AS df FROM sth_u GROUP BY sh),
-    hot_u AS MATERIALIZED (SELECT sh FROM dfreq_u WHERE df > {_D63_CAP}),
-    stf_u AS MATERIALIZED (SELECT * FROM sth_u
-           WHERE sh NOT IN (SELECT sh FROM hot_u))
+    WITH {_sql_admission()},
+    {_sql_standing("_u", kept)}
     SELECT
-      CAST((SELECT COUNT(*) FROM adm) AS BIGINT) AS n_admitted,
-      CAST((SELECT COUNT(*) FROM idx_u) AS BIGINT) AS n_index,
-      CAST((SELECT COUNT(*) FROM hot_u) AS BIGINT) AS n_hot,
-      CAST((SELECT COUNT(*) FROM stf_u) AS BIGINT) AS n_st,
-      CAST((SELECT COUNT(*) FROM bc_u) AS BIGINT) AS n_counts,
-      CAST((SELECT COUNT(*) FROM dfreq_u) AS BIGINT) AS n_dfreq,
-      CAST(CAST((SELECT COALESCE(SUM(('0x' || substr(md5(
-             concat_ws('|', container, p, band, key)), 1, 15))::BIGINT), 0)
-           FROM idx_u) AS DECIMAL(38,0)) AS VARCHAR) AS index_checksum,
-      CAST(CAST((SELECT COALESCE(SUM(('0x' || substr(md5(
-             concat_ws('|', container, sh)), 1, 15))::BIGINT), 0)
-           FROM stf_u) AS DECIMAL(38,0)) AS VARCHAR) AS st_checksum,
+      {_sql_count(f"sig WHERE {_BATCH} AND {kept}")} AS n_admitted,
+      {_sql_count("idx_u")} AS n_index,
+      {_sql_count("hot_u")} AS n_hot,
+      {_sql_count("st_u")} AS n_st,
+      {_sql_count("idx_u_n")} AS n_counts,
+      {_sql_count("dfreq_u")} AS n_dfreq,
+      (SELECT {_sql_checksum("concat_ws('|', doc_id, p, band, key)")}
+       FROM idx_u) AS index_checksum,
+      (SELECT {_sql_checksum("concat_ws('|', doc_id, sh)")}
+       FROM st_u) AS st_checksum,
       TRUE AS index_equals_rebuild,
       TRUE AS hot_equals_rebuild,
       TRUE AS st_equals_rebuild,
@@ -7800,34 +7192,13 @@ def _io21_oracle() -> str:
 def io21_containment_index_fold_in(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        build_containment_standing,
-        extend_containment_standing,
-        incremental_containment_matches,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
     standing = _d68_standing_index(spark, sf_dir)
     all_sh = shingle_rows(docs, shingle_n=2, out_id="id")
     incoming_sh = all_sh.filter(F.col("id") % 7 == 0)
-
-    caches: list = []
-    try:
+    with _released() as caches:
         rejected = (
-            incremental_containment_matches(
-                None,
-                incoming_sh,
-                id_col="id",
-                num_hashes=_D65_HASHES,
-                size_edges=_D65_EDGES,
-                rows_per_band=_D65_ROWS,
-                max_bucket=_D65_BUCKET,
-                max_df=_D63_CAP,
-                threshold=_D68_THRESHOLD_NUM / 10.0,
-                prebuilt_standing=standing,
-                cache_registry=caches,
-            )
+            _admission(standing, incoming_sh, caches)
             .select(F.col("incoming").alias("id"))
             .distinct()
             # localCheckpoint, not cache: the rejected set is tiny but
@@ -7837,31 +7208,27 @@ def io21_containment_index_fold_in(
             # (measured ~3s of driver time per action at sf0.1)
             .localCheckpoint()
         )
-        admitted_sh = incoming_sh.join(
-            F.broadcast(rejected), "id", "left_anti"
-        )
-        kw = dict(
-            id_col="id",
-            num_hashes=_D65_HASHES,
-            size_edges=_D65_EDGES,
-            rows_per_band=_D65_ROWS,
+        admitted_sh = incoming_sh.join(F.broadcast(rejected), "id", "left_anti")
+        extended = extend_containment_standing(
+            standing,
+            admitted_sh,
             max_bucket=_D65_BUCKET,
             max_df=_D63_CAP,
-        )
-        extended = extend_containment_standing(
-            standing, admitted_sh, cache_registry=caches, **kw
+            cache_registry=caches,
+            **_ENSEMBLE,
         )
         # the from-scratch reference: corpus ∪ admitted in ONE shingle
         # pass (all docs minus the rejected batch docs), PINNED — the
         # standing build scans its corpus three times (signatures,
         # sizes, shingle table) and each scan would otherwise re-run
         # the full tokenize/explode subtree
-        union_sh = (
-            all_sh.join(F.broadcast(rejected), "id", "left_anti").cache()
+        union_sh = _pin(
+            all_sh.join(F.broadcast(rejected), "id", "left_anti"), caches
         )
-        caches.append(union_sh)
         rebuilt = build_containment_standing(
             union_sh,
+            max_bucket=_D65_BUCKET,
+            max_df=_D63_CAP,
             cache_registry=caches,
             # audit-side shortcut unavailable to production fold-in
             # (whose docs are NEW): every union doc is in the corpus
@@ -7869,37 +7236,16 @@ def io21_containment_index_fold_in(
             sig_sizes=_ensemble_sig_sizes(spark, sf_dir).join(
                 F.broadcast(rejected), "id", "left_anti"
             ),
-            **kw,
+            **_ENSEMBLE,
         )
 
-        key_cols = {
-            "index": ["container", "p", "band", "key"],
-            "hot": ["sh"],
-            "st": ["container", "sh"],
-            "counts": ["p", "band", "key", "n"],
-            "dfreq": ["sh", "df"],
-        }
-
-        def side_aggs(side: str, state: dict) -> list[DataFrame]:
-            aggs = []
-            for n, cols in key_cols.items():
-                row_int = F.conv(
-                    F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15),
-                    16,
-                    10,
-                ).cast("bigint")
-                aggs.append(
-                    state[n].agg(
-                        F.count(F.lit(1)).cast("bigint").alias("n"),
-                        F.coalesce(
-                            F.sum(row_int.cast("decimal(38,0)")), F.lit(0)
-                        )
-                        .cast("decimal(38,0)")
-                        .cast("string")
-                        .alias("c"),
-                    ).select(F.lit(f"{side}.{n}").alias("t"), "n", "c")
-                )
-            return aggs
+        def side_job(state: dict) -> dict:
+            return _fingerprints(
+                {
+                    n: (state[n], _checksum(F.concat_ws("|", *cols)))
+                    for n, cols in _STANDING_COLS.items()
+                }
+            )
 
         # one 5-row union job per side (the subtrees within a side are
         # independent, so the scheduler overlaps their scans), and the
@@ -7908,195 +7254,91 @@ def io21_containment_index_fold_in(
         # (11.4s vs 8.3s at sf0.1): the rebuilt side's deep build
         # lineage repeated across that many union branches pushes
         # Catalyst analysis past what the job overlap saves.
-        def side_job(side: str, state: dict) -> list:
-            aggs = side_aggs(side, state)
-            merged = aggs[0]
-            for a in aggs[1:]:
-                merged = merged.unionByName(a)
-            return merged.collect()
-
-        adm = (
-            admitted_sh.select("id")
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .select(F.lit("n_admitted").alias("t"), "n", F.lit("").alias("c"))
-        )
-        got = {
-            r["t"]: (r["n"], r["c"])
-            for rows_ in run_concurrent(
-                [
-                    lambda: side_job("ext", extended),
-                    lambda: side_job("reb", rebuilt),
-                    adm.collect,
-                ]
-            )
-            for r in rows_
-        }
-        ext_fp = {n: got[f"ext.{n}"] for n in key_cols}
-        reb_fp = {n: got[f"reb.{n}"] for n in key_cols}
-        equals = {n: ext_fp[n] == reb_fp[n] for n in key_cols}
-        n_admitted = got["n_admitted"][0]
-        return spark.createDataFrame(
+        ext_fp, reb_fp, adm = run_concurrent(
             [
-                (
-                    n_admitted,
-                    ext_fp["index"][0],
-                    ext_fp["hot"][0],
-                    ext_fp["st"][0],
-                    ext_fp["counts"][0],
-                    ext_fp["dfreq"][0],
-                    ext_fp["index"][1],
-                    ext_fp["st"][1],
-                    bool(equals["index"]),
-                    bool(equals["hot"]),
-                    bool(equals["st"]),
-                    bool(equals["counts"]),
-                    bool(equals["dfreq"]),
-                )
-            ],
-            "n_admitted bigint, n_index bigint, n_hot bigint, n_st bigint, "
-            "n_counts bigint, n_dfreq bigint, index_checksum string, "
-            "st_checksum string, "
-            "index_equals_rebuild boolean, hot_equals_rebuild boolean, "
-            "st_equals_rebuild boolean, counts_equals_rebuild boolean, "
-            "dfreq_equals_rebuild boolean",
+                lambda: side_job(extended),
+                lambda: side_job(rebuilt),
+                lambda: _fingerprints(
+                    {"a": (admitted_sh.select("id").distinct(), None)}
+                ),
+            ]
         )
-    finally:
-        for c in caches:
-            c.unpersist()
+    equals = {n: ext_fp[n] == reb_fp[n] for n in _STANDING_COLS}
+    return spark.createDataFrame(
+        [
+            (
+                adm["a"][0],
+                ext_fp["index"][0],
+                ext_fp["hot"][0],
+                ext_fp["st"][0],
+                ext_fp["counts"][0],
+                ext_fp["dfreq"][0],
+                ext_fp["index"][1],
+                ext_fp["st"][1],
+                bool(equals["index"]),
+                bool(equals["hot"]),
+                bool(equals["st"]),
+                bool(equals["counts"]),
+                bool(equals["dfreq"]),
+            )
+        ],
+        "n_admitted bigint, n_index bigint, n_hot bigint, n_st bigint, "
+        "n_counts bigint, n_dfreq bigint, index_checksum string, "
+        "st_checksum string, "
+        "index_equals_rebuild boolean, hot_equals_rebuild boolean, "
+        "st_equals_rebuild boolean, counts_equals_rebuild boolean, "
+        "dfreq_equals_rebuild boolean",
+    )
 
 
-# --- io22: the multi-round containment ingest loop (r12) ----------------------
+# --- io22: the multi-round containment ingest loop ----------------------------
 def _io22_oracle() -> str:
     """From-scratch SQL replay of THREE ingest rounds: batch k probes
     the standing state as grown by rounds 1..k-1 (corpus ∪ admitted so
     far), rejected docs are dropped, admitted docs fold in, and the
-    next round sees the LARGER index. One shared signature/entry blob
-    serves every round (signatures are per-doc); each round re-derives
-    its own bucket counts, cap, hot set and df-capped verification
-    space from that round's membership — exactly what the engine's
-    fold-in must be equivalent to, now composed across rounds where a
-    single-round gate (io21) cannot see a stale-state bug."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    edge_case = "CASE " + " ".join(
-        f"WHEN {{v}} < {e} THEN {p}" for p, e in enumerate(_D65_EDGES)
-    ) + f" ELSE {len(_D65_EDGES)} END"
-    branches = []
-    for p, r in enumerate(_D65_ROWS):
-        for b in range(_D65_HASHES // r):
-            key = " || ".join(f"mh{b * r + k}" for k in range(r))
-            k_expr = f"('0x' || substr(md5({key}), 1, 15))::BIGINT"
-            branches.append(
-                f"      SELECT doc_id, {p} AS p, {b} AS band,"
-                f" {k_expr} AS key FROM mhsz"
-            )
-    ent_blob = "      UNION ALL\n".join(br + "\n" for br in branches)
-    t = _D68_THRESHOLD_NUM
-    rounds_sql = []
-    summaries = []
+    next round sees the LARGER index. One shared signature/band-key
+    table serves every round (signatures are per-doc); each round
+    re-derives its own bucket counts, cap, hot set and df-capped
+    verification space from that round's membership — exactly what the
+    engine's fold-in must be equivalent to, now composed across rounds
+    where a single-round gate (io21) cannot see a stale-state bug. The
+    index after round k is round k+1's standing index."""
+    floor = f"(({_D68_THRESHOLD_NUM} * sz + 9) // 10)"
+    rounds, summaries = [], []
     for k in (1, 2, 3):
-        prev_mem = (
-            "mem_r1" if k == 1 else f"mem_r{k}"
-        )
-        rounds_sql.append(f"""
-    batch_r{k} AS MATERIALIZED (
-      SELECT doc_id FROM mhsz WHERE doc_id % 7 = 0 AND doc_id % 3 = {k - 1}),
-    idx0_r{k} AS MATERIALIZED (
-      SELECT e.* FROM own_ent e JOIN {prev_mem} m USING (doc_id)),
-    bc_r{k} AS MATERIALIZED (
-      SELECT p, band, key, count(*) AS n FROM idx0_r{k} GROUP BY 1, 2, 3),
-    idx_r{k} AS MATERIALIZED (
-      SELECT idx0_r{k}.* FROM idx0_r{k} JOIN bc_r{k} USING (p, band, key)
-      WHERE n <= {_D65_BUCKET}),
-    probe_r{k} AS MATERIALIZED (
-      SELECT e.* FROM probe_ent e JOIN batch_r{k} USING (doc_id)),
-    cand_r{k} AS MATERIALIZED (
-      SELECT DISTINCT pr.doc_id AS incoming, ix.doc_id AS container
-      FROM probe_r{k} pr JOIN idx_r{k} ix USING (p, band, key)),
-    dfreq_r{k} AS MATERIALIZED (
-      SELECT sh, count(*) AS df FROM sth JOIN {prev_mem} m
-      ON sth.doc_id = m.doc_id GROUP BY sh),
-    hot_r{k} AS MATERIALIZED (SELECT sh FROM dfreq_r{k} WHERE df > {_D63_CAP}),
-    stc_r{k} AS MATERIALIZED (
-      SELECT sth.doc_id AS container, sh FROM sth
-      WHERE doc_id IN (SELECT DISTINCT container FROM cand_r{k})
-        AND sh NOT IN (SELECT sh FROM hot_r{k})),
-    incf_r{k} AS MATERIALIZED (
-      SELECT sth.doc_id AS incoming, sh FROM sth
-      JOIN batch_r{k} b ON sth.doc_id = b.doc_id
-      WHERE sh NOT IN (SELECT sh FROM hot_r{k})),
-    szin_r{k} AS MATERIALIZED (
-      SELECT incoming, count(*) AS sz_in FROM incf_r{k} GROUP BY incoming),
-    common_r{k} AS MATERIALIZED (
-      SELECT i.incoming, s.container, count(*) AS n_common
-      FROM incf_r{k} i JOIN stc_r{k} s USING (sh)
-      GROUP BY 1, 2),
-    matches_r{k} AS MATERIALIZED (
-      SELECT c.incoming, c.container
-      FROM common_r{k} c
-      JOIN cand_r{k} USING (incoming, container)
-      JOIN szin_r{k} USING (incoming)
-      WHERE CAST(n_common AS DOUBLE) / sz_in >= {t} / 10.0),
-    rej_r{k} AS MATERIALIZED (
-      SELECT DISTINCT incoming AS doc_id FROM matches_r{k}),
+        member = f"doc_id IN (SELECT doc_id FROM mem_r{k})"
+        batch = f"doc_id IN (SELECT doc_id FROM batch_r{k})"
+        rounds.append(f"""
+    batch_r{k} AS MATERIALIZED (SELECT doc_id FROM sig
+          WHERE {_BATCH} AND doc_id % 3 = {k - 1}),
+    {_sql_standing(f"_r{k}", member)},
+    {_sql_admit(f"_r{k}", batch)},
     mem_r{k + 1} AS MATERIALIZED (
-      SELECT doc_id FROM {prev_mem}
+      SELECT doc_id FROM mem_r{k}
       UNION ALL
       SELECT doc_id FROM batch_r{k}
-      WHERE doc_id NOT IN (SELECT doc_id FROM rej_r{k})),
-    after_idx_r{k} AS MATERIALIZED (
-      SELECT idx0.* FROM
-        (SELECT e.* FROM own_ent e JOIN mem_r{k + 1} m USING (doc_id)) idx0
-      JOIN (SELECT p, band, key, count(*) AS n
-            FROM own_ent e JOIN mem_r{k + 1} m USING (doc_id)
-            GROUP BY 1, 2, 3) bc USING (p, band, key)
-      WHERE n <= {_D65_BUCKET})""")
+      WHERE doc_id NOT IN (SELECT doc_id FROM rejected_r{k}))""")
         summaries.append(f"""
       SELECT {k} AS round,
-        CAST((SELECT COUNT(*) FROM batch_r{k}) AS BIGINT) AS n_batch,
-        CAST((SELECT COUNT(*) FROM rej_r{k}) AS BIGINT) AS n_rejected,
+        {_sql_count(f"batch_r{k}")} AS n_batch,
+        {_sql_count(f"rejected_r{k}")} AS n_rejected,
         CAST((SELECT COUNT(*) FROM batch_r{k})
-             - (SELECT COUNT(*) FROM rej_r{k}) AS BIGINT) AS n_admitted,
+             - (SELECT COUNT(*) FROM rejected_r{k}) AS BIGINT) AS n_admitted,
         CAST((SELECT COUNT(DISTINCT incoming) FROM matches_r{k}
               WHERE container % 7 = 0) AS BIGINT) AS n_rejected_by_admitted,
-        CAST(CAST((SELECT COALESCE(SUM(('0x' || substr(md5(
-               CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT), 0)
-             FROM rej_r{k}) AS DECIMAL(38,0)) AS VARCHAR)
+        (SELECT {_sql_checksum("doc_id")} FROM rejected_r{k})
           AS rejected_checksum,
-        CAST((SELECT COUNT(*) FROM after_idx_r{k}) AS BIGINT) AS n_index_after,
-        CAST(CAST((SELECT COALESCE(SUM(('0x' || substr(md5(
-               concat_ws('|', doc_id, p, band, key)), 1, 15))::BIGINT), 0)
-             FROM after_idx_r{k}) AS DECIMAL(38,0)) AS VARCHAR)
-          AS index_checksum_after""")
+        {_sql_count(f"idx_r{k + 1}")} AS n_index_after,
+        (SELECT {_sql_checksum("concat_ws('|', doc_id, p, band, key)")}
+         FROM idx_r{k + 1}) AS index_checksum_after""")
     return f"""
-    WITH tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    mh AS MATERIALIZED (SELECT doc_id,
-           {mins}
-           FROM sh0 GROUP BY doc_id),
-    szs AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM sh0
-           GROUP BY doc_id),
-    mhsz AS MATERIALIZED (SELECT mh.*, szs.sz,
-             {edge_case.format(v="sz")} AS part,
-             {edge_case.format(v=f"(({t} * sz + 9) // 10)")} AS pmin
-             FROM mh JOIN szs USING (doc_id)),
-    ent AS MATERIALIZED (
-{ent_blob}    ),
-    own_ent AS MATERIALIZED (
-      SELECT ent.doc_id, p, band, key FROM ent
-      JOIN mhsz USING (doc_id) WHERE p = part),
-    probe_ent AS MATERIALIZED (
-      SELECT ent.doc_id, p, band, key FROM ent
-      JOIN mhsz USING (doc_id) WHERE p >= pmin),
-    sth AS MATERIALIZED (SELECT doc_id,
-            ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh FROM sh0),
-    mem_r1 AS MATERIALIZED (SELECT DISTINCT doc_id FROM mhsz
-            WHERE doc_id % 7 <> 0),{",".join(rounds_sql)}
-    {chr(10).join(["      UNION ALL".join([sm + chr(10) for sm in summaries])])}
+    WITH {_sql_shingles()},
+    {_sql_signatures({"part": "sz", "pmin": floor})},
+    {_sql_band_keys("doc_id, sz, part, pmin")},
+    mem_r1 AS MATERIALIZED (SELECT doc_id FROM sig WHERE {_STANDING}),
+    {",".join(rounds)},
+    {_sql_standing("_r4", "doc_id IN (SELECT doc_id FROM mem_r4)")}
+    {" UNION ALL".join(summaries)}
     ORDER BY round
     """
 
@@ -8137,41 +7379,12 @@ def _io22_oracle() -> str:
 def io22_containment_ingest_loop(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.ensemble import (
-        extend_containment_standing,
-        incremental_containment_matches,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+    from concurrent.futures import ThreadPoolExecutor
 
     docs = tbl(spark, sf_dir, "documents")
     all_sh = shingle_rows(docs, shingle_n=2, out_id="id").localCheckpoint()
-    kw = dict(
-        id_col="id",
-        num_hashes=_D65_HASHES,
-        size_edges=_D65_EDGES,
-        rows_per_band=_D65_ROWS,
-        max_bucket=_D65_BUCKET,
-        max_df=_D63_CAP,
-    )
     standing = _d68_standing_index(spark, sf_dir)
-
-    def checksum_of(df: DataFrame, cols: list[str]):
-        row_int = F.conv(
-            F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
-        ).cast("bigint")
-        r = df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.coalesce(F.sum(row_int.cast("decimal(38,0)")), F.lit(0))
-            .cast("decimal(38,0)")
-            .cast("string")
-            .alias("c"),
-        ).first()
-        return r["n"], r["c"]
-
-    from concurrent.futures import ThreadPoolExecutor
-
     rows = []
-    caches: list = []
     checksums: list = []
     pool = ThreadPoolExecutor(max_workers=1)
     # all three batch cardinalities in ONE upfront job
@@ -8184,127 +7397,96 @@ def io22_containment_ingest_loop(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    try:
-        for rnd in (1, 2, 3):
-            batch_sh = all_sh.filter(
-                (F.col("id") % 7 == 0) & (F.col("id") % 3 == rnd - 1)
-            )
-            n_batch = int(n_batch_by_round.get(rnd - 1, 0))
-            # the LC truncates the probe pipeline out of everything
-            # downstream (the io21 lesson); rejected/by-admitted are
-            # shallow derivations over it, fingerprinted in one job
-            matches = incremental_containment_matches(
-                None,
-                batch_sh,
-                threshold=_D68_THRESHOLD_NUM / 10.0,
-                prebuilt_standing=standing,
-                cache_registry=caches,
-                **kw,
-            ).localCheckpoint()
-            rejected = matches.select(
-                F.col("incoming").alias("id")
-            ).distinct()
-            rej_int = F.conv(
-                F.substring(F.md5(F.col("id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("bigint")
-            stats = (
-                rejected.agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n"),
-                    F.coalesce(
-                        F.sum(rej_int.cast("decimal(38,0)")), F.lit(0)
-                    )
-                    .cast("decimal(38,0)")
-                    .cast("string")
-                    .alias("c"),
+    with _released() as caches:
+        try:
+            for rnd in (1, 2, 3):
+                batch_sh = all_sh.filter(
+                    (F.col("id") % 7 == 0) & (F.col("id") % 3 == rnd - 1)
                 )
-                .select(F.lit("rej").alias("t"), "n", "c")
-                .unionByName(
+                n_batch = int(n_batch_by_round.get(rnd - 1, 0))
+                # the LC truncates the probe pipeline out of everything
+                # downstream (the io21 lesson); rejected/by-admitted are
+                # shallow derivations over it, fingerprinted in one job
+                matches = _admission(standing, batch_sh, caches).localCheckpoint()
+                rejected = matches.select(F.col("incoming").alias("id")).distinct()
+                admitted_sh = batch_sh.join(
+                    F.broadcast(rejected), "id", "left_anti"
+                )
+                extended = extend_containment_standing(
+                    standing,
+                    admitted_sh,
+                    max_bucket=_D65_BUCKET,
+                    max_df=_D63_CAP,
+                    cache_registry=caches,
+                    **_ENSEMBLE,
+                )
+                # truncate lineage between rounds: round k+1's plans must
+                # not embed round k's probe/fold pipeline (the io21
+                # lesson). Only index/counts/dfreq are checkpointed —
+                # their next-round consumers re-SCAN them wholesale 2-3x
+                # per round, so lazy versions would double the base-scan
+                # count every round. st (corpus-sized: a per-round
+                # localCheckpoint copied the entire shingle table) and
+                # hot stay LAZY: each is a linear chain of union +
+                # batch-sized broadcast anti-joins over the kernel's
+                # checkpointed round-0 state, scanned only filtered
+                # (probe) or anti-joined (fold), so a scan of the lazy
+                # chain costs one base scan plus batch-sized deltas —
+                # strictly cheaper than copy-per-round. The feeding
+                # caches are therefore held until the loop ends;
+                # production loops with many rounds would re-truncate
+                # st/hot every K rounds to bound the chain. The three
+                # truncations and the round's admission stats are
+                # mutually independent given the checkpointed matches
+                # frame — submit them from a driver pool so each job's
+                # stage tail back-fills with the next job's tasks (guide
+                # §2.6).
+                lc_names = ("index", "counts", "dfreq")
+                by_admitted = (
                     matches.filter(F.col("container") % 7 == 0)
                     .select("incoming")
                     .distinct()
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-                    .select(
-                        F.lit("byadm").alias("t"),
-                        "n",
-                        F.lit("").alias("c"),
+                )
+                stats, *lcs = run_concurrent(
+                    [
+                        lambda: _fingerprints(
+                            {
+                                "rej": (rejected, _checksum(F.col("id"))),
+                                "byadm": (by_admitted, None),
+                            }
+                        )
+                    ]
+                    + [
+                        (lambda f=extended[n]: f.localCheckpoint())
+                        for n in lc_names
+                    ],
+                    max_workers=3,
+                )
+                n_rej, rej_ck = stats["rej"]
+                standing = {**extended, **dict(zip(lc_names, lcs))}
+                # the post-fold index checksum reads the already-
+                # checkpointed blocks, so it needs nothing from later
+                # rounds — defer it to the pool and let it overlap round
+                # k+1's probe (guide §2.6)
+                index_ck = _checksum(F.concat_ws("|", *_STANDING_COLS["index"]))
+                checksums.append(
+                    pool.submit(
+                        lambda f=standing["index"]: _fingerprints(
+                            {"i": (f, index_ck)}
+                        )["i"]
                     )
                 )
-            )
-            admitted_sh = batch_sh.join(
-                F.broadcast(rejected), "id", "left_anti"
-            )
-            extended = extend_containment_standing(
-                standing, admitted_sh, cache_registry=caches, **kw
-            )
-            # truncate lineage between rounds: round k+1's plans must
-            # not embed round k's probe/fold pipeline (the io21 lesson).
-            # r13 (VERDICT r12 item 4): only index/counts/dfreq are
-            # checkpointed — their next-round consumers re-SCAN them
-            # wholesale 2-3x per round, so lazy versions would double
-            # the base-scan count every round. st (corpus-sized: its
-            # per-round localCheckpoint copied the entire shingle
-            # table) and hot stay LAZY: each is a linear chain of
-            # union + batch-sized broadcast anti-joins over the
-            # kernel's checkpointed round-0 state, scanned only
-            # filtered (probe) or anti-joined (fold), so a scan of the
-            # lazy chain costs one base scan plus batch-sized deltas —
-            # strictly cheaper than copy-per-round. The feeding caches
-            # are therefore held until the loop ends (finally below)
-            # instead of freed per round; production loops with many
-            # rounds would re-truncate st/hot every K rounds to bound
-            # the chain. The three truncations and the round's
-            # admission stats are mutually independent given the
-            # checkpointed matches frame — submit them from a driver
-            # pool so each job's stage tail back-fills with the next
-            # job's tasks (guide §2.6).
-            lc_names = ("index", "counts", "dfreq")
-            results = run_concurrent(
-                [stats.collect]
-                + [
-                    (lambda f=extended[n]: f.localCheckpoint())
-                    for n in lc_names
-                ],
-                max_workers=3,
-            )
-            st_rows = {r["t"]: (r["n"], r["c"]) for r in results[0]}
-            n_rej, rej_ck = st_rows["rej"]
-            n_by_admitted = st_rows["byadm"][0]
-            standing = {**extended, **dict(zip(lc_names, results[1:]))}
-            # the post-fold index checksum reads the already-checkpointed
-            # blocks, so it needs nothing from later rounds — defer it to
-            # the pool and let it overlap round k+1's probe (guide §2.6)
-            checksums.append(
-                pool.submit(
-                    checksum_of,
-                    standing["index"],
-                    ["container", "p", "band", "key"],
+                rows.append(
+                    (rnd, n_batch, n_rej, n_batch - n_rej, stats["byadm"][0], rej_ck)
                 )
-            )
-            rows.append(
-                (
-                    rnd,
-                    n_batch,
-                    n_rej,
-                    n_batch - n_rej,
-                    n_by_admitted,
-                    rej_ck,
-                )
-            )
-        return spark.createDataFrame(
-            [
-                r + f.result()
-                for r, f in zip(rows, checksums)
-            ],
-            "round int, n_batch bigint, n_rejected bigint, "
-            "n_admitted bigint, n_rejected_by_admitted bigint, "
-            "rejected_checksum string, n_index_after bigint, "
-            "index_checksum_after string",
-        ).orderBy("round")
-    finally:
-        for f in checksums:
-            f.cancel()
-        pool.shutdown(wait=True)
-        for c in caches:
-            c.unpersist()
+            return spark.createDataFrame(
+                [r + f.result() for r, f in zip(rows, checksums)],
+                "round int, n_batch bigint, n_rejected bigint, "
+                "n_admitted bigint, n_rejected_by_admitted bigint, "
+                "rejected_checksum string, n_index_after bigint, "
+                "index_checksum_after string",
+            ).orderBy("round")
+        finally:
+            for f in checksums:
+                f.cancel()
+            pool.shutdown(wait=True)

@@ -264,9 +264,7 @@ def io06_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_aggregate_states,
     )
     from goodreads_pyspark_spark.queries._helpers import events_tbl
-    from goodreads_pyspark_spark.session import configure_for_oracle
 
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir).withColumn(
         "day", F.to_date(F.date_trunc("day", "ts"))
     )
@@ -318,9 +316,7 @@ def io06_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def io07_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.queries._helpers import events_tbl
-    from goodreads_pyspark_spark.session import configure_for_oracle
 
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir).select("event_id", "value")
     old = ev.filter(F.col("event_id") % 7 != 0)
     new = ev.filter(F.col("event_id") % 5 != 0).select(

@@ -1299,9 +1299,6 @@ def _q41_oracle() -> str:
     "form.",
 )
 def q41_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.session import configure_for_oracle
-
-    configure_for_oracle(spark)
     orders = tbl(spark, sf_dir, "orders").cache()
     rows = []
     for c in _Q41_COLS:

@@ -25,7 +25,6 @@ from goodreads_pyspark_spark.queries._helpers import (
     sql_dsum,
     tbl,
 )
-from goodreads_pyspark_spark.session import configure_for_oracle
 
 
 # --- time bucketing (tumbling day) ------------------------------------------
@@ -40,7 +39,6 @@ from goodreads_pyspark_spark.session import configure_for_oracle
     """,
 )
 def t01_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     return ev.groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day")).agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -63,7 +61,6 @@ def t01_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reused by the streaming module with a watermark.",
 )
 def t02_hourly_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -276,7 +273,6 @@ def t07_asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s01_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         hourly_by_type,
@@ -285,19 +281,17 @@ def s01_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     # File-source streams need a dedicated directory of uniform-schema
     # files; stage the (nanos-normalized) events there.
     stage = tempfile.mkdtemp(prefix="stream_events_")
     try:
         events_tbl(spark, sf_dir).write.mode("overwrite").parquet(stage)
-        name = f"s01_sink_{uuid.uuid4().hex[:8]}"
         stream = stream_events_from_dir(spark, stage)
         with state_partitions(spark, 8):
-            run_to_memory_sink(
-                hourly_by_type(stream, exact_scale=6), name, output_mode="complete"
+            got = run_to_memory_sink(
+                hourly_by_type(stream, exact_scale=6), output_mode="complete"
             )
-        return spark.table(name).select(
+        return got.select(
             F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
             "n_events",
@@ -330,7 +324,6 @@ def s01_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s02_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         running_user_totals,
@@ -338,27 +331,23 @@ def s02_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="stream_state_")
     try:
         events = events_tbl(spark, sf_dir)
         events.write.mode("overwrite").parquet(stage)
-        name = f"s02_sink_{uuid.uuid4().hex[:8]}"
         # NO shard shrink here: running_user_totals is
         # applyInPandasWithState, where each shard is a Python worker —
         # shrinking shards serializes the per-key Python work; the
         # maintenance-dominated cases are many-micro-batch streams like
         # s11, not this single-batch one
-        run_to_memory_sink(
+        got = run_to_memory_sink(
             running_user_totals(stream_events_from_dir(spark, stage)),
-            name,
             output_mode="update",
         )
         # Update-mode sink: one row per (user, micro-batch touched); the final
         # state per user is the row with the largest running count.
         latest = (
-            spark.table(name)
-            .groupBy("user_id")
+            got.groupBy("user_id")
             .agg(F.max(F.struct("n_events", "total_value", "total_micros")).alias("s"))
             .select(
                 "user_id",
@@ -413,7 +402,6 @@ def s02_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s03_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         dedup_events,
@@ -428,14 +416,11 @@ def s03_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Two copies in separate files => duplicates span micro-batches.
         events.write.mode("overwrite").parquet(stage)
         events.write.mode("append").parquet(stage)
-        name = f"s03_sink_{uuid.uuid4().hex[:8]}"
         with state_partitions(spark, 8):
-            run_to_memory_sink(
+            got = run_to_memory_sink(
                 dedup_events(stream_events_from_dir(spark, stage)),
-                name,
                 output_mode="append",
             )
-        got = spark.table(name)
         n_got, n_expected = got.count(), events.dropDuplicates(["event_id"]).count()
         if n_got != n_expected:
             raise AssertionError(
@@ -473,7 +458,6 @@ def s03_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(window, type) regardless of slide.",
 )
 def t08_sliding_window_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     return (
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
@@ -518,7 +502,6 @@ def t08_sliding_window_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s04_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         run_to_memory_sink,
@@ -527,19 +510,15 @@ def s04_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="stream_slide_")
     try:
         events = events_tbl(spark, sf_dir)
         events.write.mode("overwrite").parquet(stage)
-        name = f"s04_sink_{uuid.uuid4().hex[:8]}"
         with state_partitions(spark, 8):
-            run_to_memory_sink(
+            got = run_to_memory_sink(
                 sliding_by_type(stream_events_from_dir(spark, stage), exact_scale=6),
-                name,
                 output_mode="complete",
             )
-        got = spark.table(name)
         expected = sliding_by_type(events, exact_scale=6)
         # null-safe compare: a window present on only one side must count as a
         # divergence; both sides are decimal-exact so equality is exact.
@@ -589,7 +568,6 @@ def s04_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream when a pre-agg collapses it first.",
 )
 def t09_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     daily = ev.groupBy(
         "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
@@ -631,7 +609,6 @@ def s05_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.queries._helpers import tbl
     from goodreads_pyspark_spark.streaming import (
@@ -641,20 +618,18 @@ def s05_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="stream_enrich_")
     try:
         events_tbl(spark, sf_dir).write.mode("overwrite").parquet(stage)
         dim = tbl(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("key"), F.col("c_mktsegment").alias("attr")
         )
-        name = f"s05_sink_{uuid.uuid4().hex[:8]}"
         stream = stream_events_from_dir(spark, stage)
         with state_partitions(spark, 8):
-            run_to_memory_sink(
-                enrich_with_dim(stream, dim), name, output_mode="complete"
+            got = run_to_memory_sink(
+                enrich_with_dim(stream, dim), output_mode="complete"
             )
-        return spark.table(name).select(
+        return got.select(
             F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "segment",
             "n_events",
@@ -688,7 +663,6 @@ def s05_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every frame. Integer-only.",
 )
 def t10_new_users_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     first_seen = ev.groupBy("user_id").agg(
         F.min(F.to_date(F.date_trunc("day", "ts"))).alias("day")
@@ -738,7 +712,6 @@ def t10_new_users_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s06_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         run_to_memory_sink,
@@ -746,7 +719,6 @@ def s06_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="stream_ssj_")
     try:
         events_tbl(spark, sf_dir).write.mode("overwrite").parquet(stage)
@@ -777,12 +749,10 @@ def s06_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("v_ts") <= F.col("p_ts")),
             "inner",
         ).select(F.col("p_user").alias("user_id"), "purchase_id", "view_id")
-        name = f"s06_sink_{uuid.uuid4().hex[:8]}"
         # join state is ~20k rows / 1.5k users per side — 8 state shards,
         # not 32 (state_partitions docstring has the sizing rule)
         with state_partitions(spark, 8):
-            run_to_memory_sink(joined, name, output_mode="append")
-        return spark.table(name)
+            return run_to_memory_sink(joined, output_mode="append")
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -817,7 +787,6 @@ def s06_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pre-aggregation of the raw stream. Integer-only.",
 )
 def t11_hourly_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour")
@@ -1088,7 +1057,6 @@ T15_Z_THRESHOLD = 2.0
     "event volume.",
 )
 def t15_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour_start")
@@ -1150,7 +1118,6 @@ def t15_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "key spreads the sort across executors.",
 )
 def t16_rolling_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     orders = tbl(spark, sf_dir, "orders").filter(F.col("o_custkey") < 300)
     sec = F.unix_timestamp("o_orderdate")
     w = (
@@ -1204,7 +1171,6 @@ def t16_rolling_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t17_session_windows_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.streaming import sessionized_by_user
 
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
     return sessionized_by_user(ev).select(
         "user_id",
@@ -1250,7 +1216,6 @@ def t17_session_windows_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s07_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         run_to_memory_sink,
@@ -1259,21 +1224,17 @@ def s07_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="stream_sess_")
     try:
         events = events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
         events.write.mode("overwrite").parquet(stage)
-        name = f"s07_sink_{uuid.uuid4().hex[:8]}"
         with state_partitions(spark, 8):
-            run_to_memory_sink(
+            got = run_to_memory_sink(
                 sessionized_by_user(stream_events_from_dir(spark, stage).filter(
                     F.col("user_id") < 100
                 )),
-                name,
                 output_mode="complete",
             )
-        got = spark.table(name)
         expected = sessionized_by_user(events)
         bad = (
             got.join(expected, ["user_id", "session_start"], "full")
@@ -1341,7 +1302,6 @@ T18_WEIGHTS = [(0, 1.0), (1, 0.5), (2, 0.25), (3, 0.125), (4, 0.0625), (5, 0.031
     "the tiny series, not the events."
 )
 def t18_ewma_hourly_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     hourly = (
         ev.groupBy(
@@ -1416,7 +1376,6 @@ def t18_ewma_hourly_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one (user)-keyed window sort then a keyed aggregate.",
 )
 def t19_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     x = ev.select(
@@ -1471,7 +1430,6 @@ def t19_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregate — the lag never sees a cross-user frame.",
 )
 def t20_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")
@@ -1518,7 +1476,6 @@ def t20_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sides so equality is exact.",
 )
 def t21_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     return (
         ev.groupBy(
@@ -1570,7 +1527,6 @@ def s08_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from goodreads_pyspark_spark.streaming import stream_events_from_dir
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="s08_stage_")
     out = tempfile.mkdtemp(prefix="s08_out_")
     chk = tempfile.mkdtemp(prefix="s08_chk_")
@@ -1755,7 +1711,6 @@ def s09_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from goodreads_pyspark_spark.operators.cdc import apply_cdc
 
-    configure_for_oracle(spark)
     docs = tbl(spark, sf_dir, "documents")
     base = tempfile.mkdtemp(prefix="s09_")
     try:
@@ -1853,7 +1808,6 @@ def s09_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         run_to_memory_sink,
@@ -1861,7 +1815,6 @@ def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="stream_ssloj_")
     try:
         ev = events_tbl(spark, sf_dir)
@@ -1909,12 +1862,11 @@ def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("v_ts") <= F.col("p_ts")),
             "left_outer",
         ).select(F.col("p_user").alias("user_id"), "purchase_id", "view_id")
-        name = f"s10_sink_{uuid.uuid4().hex[:8]}"
         # same state-shard sizing rationale as s06
         with state_partitions(spark, 8):
-            run_to_memory_sink(joined, name, output_mode="append")
+            got = run_to_memory_sink(joined, output_mode="append")
         # drop the sentinel purchase (it joins only the view sentinel)
-        return spark.table(name).filter(F.col("purchase_id") >= 0)
+        return got.filter(F.col("purchase_id") >= 0)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -2035,7 +1987,6 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
     import time
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
         run_to_memory_sink,
@@ -2045,7 +1996,6 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from goodreads_pyspark_spark.streaming.windows import EVENT_SCHEMA
 
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
 
     # Stage the stream as 3 time waves in ONE partitioned write job, cut
@@ -2128,17 +2078,14 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("user_id") < 100)
             .withWatermark("ts", "1 hour")
         )
-        name = f"s11_sink_{uuid.uuid4().hex[:8]}"
         # each micro-batch pays per-partition state-store maintenance;
         # state here is ~100 keys, so 4 shards, not 32 (state_partitions
         # docstring has the sizing rule)
         with state_partitions(spark, 4):
-            run_to_memory_sink(
+            got = run_to_memory_sink(
                 session_close_by_timeout(stream, gap_minutes=30),
-                name,
                 output_mode="update",
-            )
-        got = spark.table(name).filter(F.col("user_id") >= 0)
+            ).filter(F.col("user_id") >= 0)
 
         # fixture property: a timeout-closed session for a user who has a LATER
         # session is provably a MID-STREAM silence close — had the user's next
@@ -2235,7 +2182,6 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     "raw events.",
 )
 def t24_locf_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     ev = events_tbl(spark, sf_dir)
     w_pick = Window.partitionBy(
         "event_type", F.date_trunc("hour", F.col("ts"))
@@ -2415,12 +2361,12 @@ def s13_streaming_approx_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from goodreads_pyspark_spark.streaming import state_partitions
-    import uuid
+    from goodreads_pyspark_spark.streaming import (
+        run_to_memory_sink,
+        state_partitions,
+        stream_events_from_dir,
+    )
 
-    from goodreads_pyspark_spark.streaming import stream_events_from_dir
-
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="s13_")
     try:
         ev = events_tbl(spark, sf_dir)
@@ -2434,24 +2380,13 @@ def s13_streaming_approx_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.approx_count_distinct("user_id", rsd=_T26_RSD).alias("hll"),
             )
         )
-        name = f"s13_sink_{uuid.uuid4().hex[:8]}"
         # state is ~30 daily windows — 4 state shards, not 32
         with state_partitions(spark, 4):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .start()
+            got = run_to_memory_sink(agg, output_mode="complete").select(
+                F.date_format("w.start", "yyyy-MM-dd").alias("day"),
+                "n_events_stream",
+                "hll",
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        got = spark.table(name).select(
-            F.date_format("w.start", "yyyy-MM-dd").alias("day"),
-            "n_events_stream",
-            "hll",
-        )
         exact = ev.groupBy(
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
         ).agg(
@@ -2614,14 +2549,13 @@ def t27_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s14_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from goodreads_pyspark_spark.streaming import (
+        run_to_memory_sink,
         state_partitions,
         stream_events_from_dir,
     )
 
-    configure_for_oracle(spark)
     stage = tempfile.mkdtemp(prefix="s14_")
     try:
         ev = events_tbl(spark, sf_dir)
@@ -2630,20 +2564,9 @@ def s14_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells_stream = _cms_pairs(stream.select("user_id")).groupBy(
             "j", "b"
         ).agg(F.count(F.lit(1)).cast("bigint").alias("cell_s"))
-        name = f"s14_sink_{uuid.uuid4().hex[:8]}"
         # 768 cells of state — 4 shards, not 32 (the s13 sizing rule)
         with state_partitions(spark, 4):
-            q = (
-                cells_stream.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        got = spark.table(name)
+            got = run_to_memory_sink(cells_stream, output_mode="complete")
         kc = (
             ev.groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("cnt"))

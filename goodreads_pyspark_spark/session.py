@@ -96,14 +96,3 @@ def get_spark(app_name: str = "goodreads_pyspark_spark", cpus: int | None = None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def configure_for_oracle(spark: SparkSession) -> SparkSession:
-    """Runtime-settable configs needed for DuckDB-oracle comparability.
-
-    The driver hands us an externally built session; these keys are safe to
-    set post-construction. UTC pins timestamp semantics so parquet instants
-    group/truncate identically to DuckDB's naive-UTC reads.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

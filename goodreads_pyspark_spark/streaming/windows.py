@@ -12,6 +12,7 @@ an unbounded source.
 
 from __future__ import annotations
 
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,14 +105,17 @@ def state_partitions(spark: SparkSession, n: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def run_to_memory_sink(
-    agg: DataFrame, name: str, output_mode: str = "append"
-) -> None:
+def run_to_memory_sink(agg: DataFrame, output_mode: str = "append") -> DataFrame:
     """Drive a streaming aggregation to completion against the currently
-    available files and stop — the synchronous smoke-test harness
-    (``processAllAvailable``), not a production sink. Production sinks:
-    ``foreachBatch`` into partitioned parquet/Delta with checkpointing.
+    available files, stop, and return the sink's rows as a checkpointed
+    DataFrame — the synchronous smoke-test harness
+    (``processAllAvailable``), not a production sink. The memory sink's
+    view is dropped before returning, so no view outlives the call.
+    Production sinks: ``foreachBatch`` into partitioned parquet/Delta
+    with checkpointing.
     """
+    spark = agg.sparkSession
+    name = f"memory_sink_{uuid.uuid4().hex}"
     q = (
         agg.writeStream.outputMode(output_mode)
         .format("memory")
@@ -120,8 +124,10 @@ def run_to_memory_sink(
     )
     try:
         q.processAllAvailable()
+        return spark.table(name).localCheckpoint()
     finally:
         q.stop()
+        spark.catalog.dropTempView(name)
 
 
 def sliding_by_type(

@@ -641,3 +641,41 @@ def test_session_memo_rebuilds_on_changed_input(spark, tmp_path):
         d_cols = [d[0] for d in res.description]
         got = _norm(sdf.columns, sdf.collect())
         assert got == _norm(d_cols, res.fetchall()), q.name
+
+
+_CONTAINMENT_FAMILY = (
+    "d63_containment_audit",
+    "d64_containment_banding_audit",
+    "d65_lsh_ensemble_containment",
+    "d66_equidepth_ensemble",
+    "d67_containment_dedup",
+    "d68_incremental_containment_admission",
+    "d69_ensemble_tuning_sweep",
+    "d70_equidepth_sketch_edges",
+    "d71_containment_threshold_sweep",
+    "io18_containment_index_publish",
+    "io21_containment_index_fold_in",
+    "io22_containment_ingest_loop",
+    "s15_streaming_containment_admission",
+)
+
+
+@pytest.mark.parametrize("name", _CONTAINMENT_FAMILY)
+def test_containment_query_releases_its_caches(spark, duck, name):
+    """With the family's shared kernels built (then clearCache), a
+    containment-family query leaves no entry in the SQL cache manager,
+    and its answer, read after the release, still matches the oracle."""
+    from goodreads_pyspark_spark.queries import REGISTRY, documents
+    from tests.test_oracle_parity import SF_SMOKE, _norm
+
+    documents._containment_pairs2(spark, SF_SMOKE)
+    documents._ensemble_sig_sizes(spark, SF_SMOKE)
+    spark.catalog.clearCache()
+    q = REGISTRY[name]
+    sdf = q.spark_fn(spark, SF_SMOKE)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left cached plans behind"
+    )
+    res = duck.execute(q.oracle)
+    d_cols = [d[0] for d in res.description]
+    assert _norm(sdf.columns, sdf.collect()) == _norm(d_cols, res.fetchall())

@@ -890,7 +890,9 @@ def test_lsh_ensemble_finds_containment_pair(spark):
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
     got = {
         (r.contained, r.container)
-        for r in lsh_ensemble_candidate_pairs(sh, id_col="id").collect()
+        for r in lsh_ensemble_candidate_pairs(
+            sh, id_col="id", cache_registry=[]
+        ).collect()
     }
     assert (1, 2) in got
     # orientation: contained is always the smaller shingle set
@@ -901,9 +903,11 @@ def test_lsh_ensemble_finds_containment_pair(spark):
     for a, b in got:
         assert sz[a] <= sz[b]
     with pytest.raises(ValueError, match="partitions"):
-        lsh_ensemble_candidate_pairs(sh, rows_per_band=(2, 1))
+        lsh_ensemble_candidate_pairs(sh, rows_per_band=(2, 1), cache_registry=[])
     with pytest.raises(ValueError, match="divide num_hashes"):
-        lsh_ensemble_candidate_pairs(sh, rows_per_band=(3, 2, 1, 1))
+        lsh_ensemble_candidate_pairs(
+            sh, rows_per_band=(3, 2, 1, 1), cache_registry=[]
+        )
 
 
 def test_equi_depth_edges_exact_rank_arithmetic(spark):
@@ -953,6 +957,7 @@ def test_incremental_containment_novel_shingles_not_inflated(spark):
         shingle_rows(corpus, shingle_n=2, out_id="id"),
         shingle_rows(incoming, shingle_n=2, out_id="id"),
         id_col="id",
+        cache_registry=[],
     )
     got = {r["incoming"]: r["containment_in"] for r in m.collect()}
     assert 10 in got and got[10] >= 0.8
@@ -993,6 +998,7 @@ def test_extend_containment_standing_equals_rebuild(spark):
         rows_per_band=(2, 2, 1, 1),
         max_bucket=2,
         max_df=2,
+        cache_registry=[],
     )
 
     def sh_table(spec):
@@ -1067,7 +1073,11 @@ def test_fold_in_from_published_state(spark, tmp_path):
     )
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
     standing = build_containment_standing(
-        sh.filter(F.col("id") % 7 != 0), id_col="id", max_df=3, max_bucket=3
+        sh.filter(F.col("id") % 7 != 0),
+        id_col="id",
+        max_df=3,
+        max_bucket=3,
+        cache_registry=[],
     )
     base = str(tmp_path / "published")
     standing["index"].write.partitionBy("p").parquet(f"{base}/index")
@@ -1078,7 +1088,7 @@ def test_fold_in_from_published_state(spark, tmp_path):
         for name in ("index", "hot", "st", "counts", "dfreq")
     }
     batch = sh.filter(F.col("id") % 7 == 0)
-    kw2 = dict(id_col="id", max_df=3, max_bucket=3)
+    kw2 = dict(id_col="id", max_df=3, max_bucket=3, cache_registry=[])
     from_memo = extend_containment_standing(standing, batch, **kw2)
     from_disk = extend_containment_standing(reloaded, batch, **kw2)
 
@@ -1123,7 +1133,7 @@ def test_ingest_loop_rejects_against_admitted_container(spark):
     )
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
     standing = build_containment_standing(
-        sh.filter(F.col("id") == 1), id_col="id"
+        sh.filter(F.col("id") == 1), id_col="id", cache_registry=[]
     )
 
     def probe(state, batch_id):
@@ -1132,12 +1142,13 @@ def test_ingest_loop_rejects_against_admitted_container(spark):
             sh.filter(F.col("id") == batch_id),
             id_col="id",
             prebuilt_standing=state,
+            cache_registry=[],
         ).collect()
 
     # batch 1: doc 2 is novel -> admitted, folded in
     assert probe(standing, 2) == []
     grown = extend_containment_standing(
-        standing, sh.filter(F.col("id") == 2), id_col="id"
+        standing, sh.filter(F.col("id") == 2), id_col="id", cache_registry=[]
     )
     # batch 2: doc 3 is contained in the ADMITTED doc 2 — rejected by
     # the grown index, admitted by the stale one
@@ -1169,7 +1180,7 @@ def test_containment_probe_floor_monotone_in_threshold(spark):
     )
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
     standing = build_containment_standing(
-        sh.filter(F.col("id") != 3), id_col="id"
+        sh.filter(F.col("id") != 3), id_col="id", cache_registry=[]
     )
     incoming = sh.filter(F.col("id") == 3)
     cands = {}
@@ -1177,7 +1188,7 @@ def test_containment_probe_floor_monotone_in_threshold(spark):
         cands[t] = {
             (r["incoming"], r["container"])
             for r in containment_probe_candidates(
-                standing, incoming, id_col="id", threshold=t
+                standing, incoming, id_col="id", threshold=t, cache_registry=[]
             ).collect()
         }
     assert cands[0.8] <= cands[0.65] <= cands[0.5]
@@ -1245,7 +1256,7 @@ def test_containment_standing_cold_process_reload(spark, tmp_path):
     )
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
     standing = build_containment_standing(
-        sh.filter(F.col("id") % 3 != 0), id_col="id"
+        sh.filter(F.col("id") % 3 != 0), id_col="id", cache_registry=[]
     )
     base = str(tmp_path / "published")
     for name in ("index", "hot", "st"):
@@ -1260,6 +1271,7 @@ def test_containment_standing_cold_process_reload(spark, tmp_path):
             sh.filter(F.col("id") % 3 == 0),
             id_col="id",
             prebuilt_standing=standing,
+            cache_registry=[],
         ).collect()
     )
     assert memo_matches == [(3, 1)], "fixture must produce one admission hit"
@@ -1282,7 +1294,7 @@ def test_containment_standing_cold_process_reload(spark, tmp_path):
         sh = shingle_rows(incoming, shingle_n=2, out_id="id")
         got = sorted((r["incoming"], r["container"])
                      for r in incremental_containment_matches(
-                         None, sh, id_col="id",
+                         None, sh, id_col="id", cache_registry=[],
                          prebuilt_standing=standing).collect())
         json.dump(got, open({out_json!r}, "w"))
         spark.stop()

@@ -39,7 +39,10 @@ def _uncached_scans(spark):
 # mid-plan from per-superstep truncation; their surrounding plan is real,
 # so they don't belong in this set.)
 CHECKPOINTED_RESULTS = {
-    "d63_containment_audit",
+    "d65_lsh_ensemble_containment",
+    "d66_equidepth_ensemble",
+    "d67_containment_dedup",
+    "d68_incremental_containment_admission",
     "t22_association_rules",
     "h03_rag_context_pack",
     "h04_rerank_calibration",
@@ -168,8 +171,18 @@ def test_whole_stage_codegen_covers_agg(spark):
     ],
 )
 def test_dedup_plans_shuffle_hashes_not_documents(spark, name):
-    # dedup shuffles must carry hashes/ids, never the text column
-    plan = plan_of(spark, name)
+    # dedup shuffles must carry hashes/ids, never the text column. d63
+    # reads the shared containment-pair memo, so its audit runs on the
+    # memo's unmaterialised builder (as g07 does for its kernel).
+    if name == "d63_containment_audit":
+        from goodreads_pyspark_spark.queries.documents import _containment_pairs2
+
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            _containment_pairs2.__wrapped__(spark, SF).explain("formatted")
+        plan = buf.getvalue()
+    else:
+        plan = plan_of(spark, name)
     exchanges = [
         seg.splitlines()[0] for seg in plan.split("Exchange hashpartitioning")[1:]
     ]
@@ -1354,7 +1367,7 @@ def test_d71_candidate_probe_broadcasts_at_every_threshold(spark):
     )
     for t in (0.5, 0.8):
         cand = containment_probe_candidates(
-            standing, incoming, id_col="id", threshold=t
+            standing, incoming, id_col="id", threshold=t, cache_registry=[]
         )
         buf = _io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -1414,7 +1427,7 @@ def test_io18_published_index_prunes_size_partitions(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
-    standing = build_containment_standing(sh, id_col="id")
+    standing = build_containment_standing(sh, id_col="id", cache_registry=[])
     path = str(tmp_path / "index")
     standing["index"].write.partitionBy("p").parquet(path)
 
@@ -1467,10 +1480,10 @@ def test_fold_in_is_delta_only_no_standing_shuffle(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sh = shingle_rows(docs, shingle_n=2, out_id="id")
     standing = build_containment_standing(
-        sh.filter(F.col("id") % 7 != 0), id_col="id"
+        sh.filter(F.col("id") % 7 != 0), id_col="id", cache_registry=[]
     )
     extended = extend_containment_standing(
-        standing, sh.filter(F.col("id") % 7 == 0), id_col="id"
+        standing, sh.filter(F.col("id") % 7 == 0), id_col="id", cache_registry=[]
     )
 
     def plan_str(df):

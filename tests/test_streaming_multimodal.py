@@ -31,10 +31,10 @@ def events_dir(spark, tmp_path_factory):
 def test_stream_matches_batch(spark, events_dir):
     stream = stream_events_from_dir(spark, events_dir)
     assert stream.isStreaming
-    run_to_memory_sink(hourly_by_type(stream), "hourly_smoke", output_mode="complete")
+    sink = run_to_memory_sink(hourly_by_type(stream), output_mode="complete")
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM hourly_smoke").collect()
+        for r in sink.collect()
     }
     batch = hourly_by_type(spark.read.parquet(events_dir))
     want = {
@@ -197,12 +197,10 @@ def test_streaming_dedup_exactly_once(spark, tmp_path_factory):
     events.write.mode("overwrite").parquet(out)
     events.write.mode("append").parquet(out)
 
-    run_to_memory_sink(
+    got = run_to_memory_sink(
         dedup_events(stream_events_from_dir(spark, out)),
-        "dedup_smoke",
         output_mode="append",
     )
-    got = spark.table("dedup_smoke")
     assert got.count() == 200
     assert got.select("event_id").distinct().count() == 200
 
@@ -409,3 +407,35 @@ def test_session_timeout_close_paths(spark, tmp_path_factory):
         (4, t0): (t0 + 30 * m, 1, "gap"),      # inline same-batch close
         (4, t0 + 40 * m): (t0 + 70 * m, 1, "timeout"),  # mid-stream (w4)
     }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s01_streaming_hourly_counts",
+        "s02_stateful_user_totals",
+        "s03_streaming_dedup",
+        "s04_streaming_sliding_window",
+        "s05_stream_static_enrich",
+        "s06_stream_stream_join",
+        "s07_streaming_session_window",
+        "s10_stream_stream_left_join",
+        "s11_session_timeout_close",
+        "s13_streaming_approx_users",
+        "s14_streaming_heavy_hitters",
+    ],
+)
+def test_memory_sink_query_leaves_no_view(spark, duck, name):
+    """A memory-sink query's sink view does not outlive the call: the
+    catalog's table list is unchanged afterwards, and the answer still
+    matches the oracle."""
+    from goodreads_pyspark_spark.queries import REGISTRY
+    from tests.test_oracle_parity import SF_SMOKE, _norm
+
+    q = REGISTRY[name]
+    before = sorted(t.name for t in spark.catalog.listTables())
+    sdf = q.spark_fn(spark, SF_SMOKE)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    res = duck.execute(q.oracle)
+    d_cols = [d[0] for d in res.description]
+    assert _norm(sdf.columns, sdf.collect()) == _norm(d_cols, res.fetchall())

@@ -56,18 +56,13 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     _load_all()
-
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        p = Path(sf_dir) / f"{t}.parquet"
-        if p.exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duckdb_views(sf_dir)
 
     if os.environ.get("SPARK_GRAFT_HOSTILE"):
         # Driver-simulation mode: a PLAIN session (no factory configs)
         # with a non-UTC timezone — catches any query that silently
-        # relies on factory session settings (tbl()/configure_for_oracle
-        # must pin everything the oracle comparison needs).
+        # relies on factory session settings (tbl() must pin everything
+        # the oracle comparison needs).
         from pyspark.sql import SparkSession
 
         spark = (
@@ -132,6 +127,16 @@ def main() -> int:
         f"in {time.time() - t_start:.1f}s"
     )
     return 1 if failures else 0
+
+
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per test-data table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        p = Path(sf_dir) / f"{t}.parquet"
+        if p.exists():
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
 
 
 if __name__ == "__main__":
