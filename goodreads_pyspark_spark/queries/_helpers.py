@@ -5,12 +5,14 @@ from __future__ import annotations
 import functools
 import os
 import threading
+from contextlib import contextmanager
 from types import GeneratorType
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.operators.concurrency import run_concurrent
+from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -88,6 +90,27 @@ def _checkpoint(frames):
     keys = list(frames) if isinstance(frames, dict) else range(len(frames))
     done = run_concurrent([frames[k].localCheckpoint for k in keys])
     return dict(zip(keys, done)) if isinstance(frames, dict) else tuple(done)
+
+
+@contextmanager
+def _released():
+    """A cache registry: every frame in it is unpersisted when the block
+    exits, on every exit path. A query that caches (or calls code that
+    takes a ``cache_registry``) builds its small result inside the block
+    and checkpoints it there with ``_materialize``."""
+    caches: list[DataFrame] = []
+    try:
+        yield caches
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
+def _materialize(name: str, out: DataFrame) -> DataFrame:
+    """Checkpoint query ``name``'s result so its caches can be released;
+    the lazy frame stays in ``PRE_MATERIALIZATION`` for plan audits."""
+    PRE_MATERIALIZATION[name] = out
+    return out.localCheckpoint()
 
 
 def events_tbl(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,7 +9,6 @@ empties.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -44,8 +43,13 @@ from goodreads_pyspark_spark.functions.text import (
     tokens,
 )
 from goodreads_pyspark_spark.operators.concurrency import run_concurrent
-from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION, query
-from goodreads_pyspark_spark.queries._helpers import session_memo, tbl
+from goodreads_pyspark_spark.queries import query
+from goodreads_pyspark_spark.queries._helpers import (
+    _materialize,
+    _released,
+    session_memo,
+    tbl,
+)
 
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
@@ -5918,26 +5922,6 @@ def _sql_ledger(flagged: str, names: tuple[str, ...], where="TRUE") -> str:
     FROM documents d LEFT JOIN {flagged} f USING (doc_id)
     WHERE {where}
     GROUP BY d.source ORDER BY d.source"""
-
-
-@contextmanager
-def _released():
-    """A cache registry for dedup/ensemble.py calls: every frame in it is
-    unpersisted when the block exits, on every exit path. A query builds
-    its small result inside the block and checkpoints it there."""
-    caches: list[DataFrame] = []
-    try:
-        yield caches
-    finally:
-        for c in caches:
-            c.unpersist()
-
-
-def _materialize(name: str, out: DataFrame) -> DataFrame:
-    """Checkpoint query ``name``'s result so its caches can be released;
-    the lazy frame stays in ``PRE_MATERIALIZATION`` for plan audits."""
-    PRE_MATERIALIZATION[name] = out
-    return out.localCheckpoint()
 
 
 def _checksum(col: Column) -> Column:

@@ -9,14 +9,17 @@ where the oracle subtracts 1 to match.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
 
-from goodreads_pyspark_spark.operators import bounded_rank
-from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION, query
-from goodreads_pyspark_spark.queries._helpers import tbl
-from goodreads_pyspark_spark.similarity import (
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from goodreads_pyspark_spark.queries import query
+from goodreads_pyspark_spark.queries._helpers import _materialize, _released, tbl
+from goodreads_pyspark_spark.similarity.ann import (
     brute_force_knn,
     cosine_neardup_pairs,
+    recall_at_k,
     sign_lsh_buckets,
 )
 
@@ -28,20 +31,295 @@ _LONG = """
 
 _DSUM = "CAST(SUM(CAST({expr} AS DECIMAL(38,12))) AS DOUBLE)"
 
+# --- the family's DuckDB replay ----------------------------------------------
+# Every oracle below is composed from these plain-SQL builders over ``_LONG``
+# (numbers and CTE names in, CTE text out). Each Spark body mirrors them
+# with similarity/ (brute_force_knn, batch_knn, ivf, quantize) and reports
+# through ``recall_at_k``.
+
+#: The 6dp-rounded cosine of a ``_sql_cosines`` row, best first: the total
+#: order (vec_id breaks ties) both engines rank by.
+_BY_COS = "ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC"
+#: e07's per-dimension int8 scale.
+_AMAX = """amax AS (SELECT pos, greatest(MAX(abs(v)), 1e-30) AS amax
+             FROM e GROUP BY pos)"""
+
+
+def _sql_query(qid: int) -> str:
+    """``q`` (pos, qv): vector ``qid`` in long form."""
+    return f"q AS (SELECT pos, v AS qv FROM e WHERE vec_id = {qid})"
+
+
+def _sql_query_block(n: int) -> str:
+    """``q`` (qid, pos, qv): the query block ``vec_id < n`` in long form."""
+    return f"q AS (SELECT vec_id AS qid, pos, v AS qv FROM e WHERE vec_id < {n})"
+
+
+def _sql_cosines(
+    out: str, qid: int | None = None, src: str = "e", where: str = "TRUE"
+) -> str:
+    """``out`` (vec_id, dot, n2, q2): decimal-exact cosine components of
+    every ``src`` vector matching ``where`` against the query ``qid`` in
+    ``q``, itself excluded; with ``qid=None``, against each vector of the
+    query block, keyed (qid, vec_id)."""
+    keys = "vec_id" if qid is not None else "qid, vec_id"
+    me = qid if qid is not None else "qid"
+    return f"""{out} AS (
+      SELECT {keys},
+             {_DSUM.format(expr='v * qv')} AS dot,
+             {_DSUM.format(expr='v * v')} AS n2,
+             {_DSUM.format(expr='qv * qv')} AS q2
+      FROM {src} JOIN q USING (pos)
+      WHERE vec_id <> {me} AND {where}
+      GROUP BY {keys})"""
+
+
+def _sql_top(
+    out: str, src: str, order: str, k: int, where: str = "TRUE", by: str = ""
+) -> str:
+    """``out``: the ``k`` rows of ``src`` matching ``where`` that come
+    first by ``order`` (vec_id breaks ties) — vec_id, or (``by``, vec_id)
+    with ``k`` per ``by`` group."""
+    cols = f"{by}, vec_id" if by else "vec_id"
+    part = f"PARTITION BY {by} " if by else ""
+    return f"""{out} AS (SELECT {cols} FROM (
+        SELECT {cols}, ROW_NUMBER() OVER ({part}ORDER BY {order}, vec_id) AS rn
+        FROM {src} WHERE {where}) WHERE rn <= {k})"""
+
+
+def _sql_knn(
+    out: str, k: int, qid: int | None = None, src: str = "e", where: str = "TRUE"
+) -> str:
+    """``{out}_c`` (``_sql_cosines``) and ``out``: its exact cosine
+    top-``k`` — per query of the block when ``qid`` is None."""
+    return f"""{_sql_cosines(f"{out}_c", qid, src, where)},
+    {_sql_top(out, f"{out}_c", _BY_COS, k, by="" if qid is not None else "qid")}"""
+
+
+def _sql_l2(out: str, qid: int) -> str:
+    """``out`` (vec_id, d2): decimal-exact squared L2 distance of every
+    vector but ``qid`` to the query in ``q``."""
+    return f"""{out} AS (
+      SELECT vec_id, {_DSUM.format(expr='(v - qv) * (v - qv)')} AS d2
+      FROM e JOIN q USING (pos) WHERE vec_id <> {qid}
+      GROUP BY vec_id)"""
+
+
+def _sql_values(col: str, values) -> str:
+    """A one-column INTEGER table of ``values``."""
+    return f"(SELECT CAST(unnest({list(values)}) AS INTEGER) AS {col})"
+
+
+def _sql_recall(
+    approx: str,
+    k: int,
+    by: str = "",
+    grid: str = "",
+    exact: str = "exact",
+    on: str = "vec_id",
+) -> str:
+    """The gate rows (``by``..., k, n_hits, recall): per ``by`` group of
+    ``approx``, how many of its rows ``exact`` holds (joined on ``on``),
+    and that count over ``k``. With ``grid`` (a table of the ``by``
+    columns), one row per grid row, 0 where nothing hit. Mirror of
+    ``similarity.ann.recall_at_k``."""
+    keys = f"{by}, " if by else ""
+    hits = (
+        f"(SELECT {keys}COUNT(*) AS n FROM {approx} JOIN {exact} USING ({on})"
+        + (f" GROUP BY {by})" if by else ")")
+    )
+    src = f"{grid} g LEFT JOIN {hits} h USING ({by})" if grid else hits
+    return f"""SELECT {keys}CAST({k} AS INTEGER) AS k,
+           CAST(COALESCE(n, 0) AS BIGINT) AS n_hits,
+           CAST(COALESCE(n, 0) AS DOUBLE) / {k} AS recall
+    FROM {src}"""
+
+
+def _sql_bucket_cand(qid: int) -> str:
+    """``cand`` (vec_id, pos, v): the vectors sharing query ``qid``'s
+    sign-LSH bucket (``_bucket_cte``), the query excluded."""
+    return f"""cand AS (
+      SELECT e.vec_id, pos, v FROM e
+      JOIN buckets USING (vec_id)
+      WHERE bucket = (SELECT bucket FROM buckets WHERE vec_id = {qid})
+        AND vec_id <> {qid})"""
+
+
+def _sql_ivf(cents: str = "vec_id < 8") -> str:
+    """Sampled-centroid IVF: ``cents`` (cid, pos, cval), the vectors
+    matching ``cents`` as centroids; ``scored`` (vec_id, cid, dot, n2,
+    c2), every vector against every centroid; ``best`` (vec_id, cid),
+    each vector's cell by unrounded cosine, ties to the lowest cid."""
+    return f"""cents AS (SELECT CAST(vec_id AS INTEGER) AS cid, pos, v AS cval
+              FROM e WHERE {cents}),
+    scored AS (
+      SELECT e.vec_id, c.cid,
+             {_DSUM.format(expr='v * cval')} AS dot,
+             {_DSUM.format(expr='v * v')} AS n2,
+             {_DSUM.format(expr='cval * cval')} AS c2
+      FROM e JOIN cents c USING (pos)
+      GROUP BY e.vec_id, c.cid),
+    best AS (
+      SELECT vec_id, cid FROM (
+        SELECT vec_id, cid,
+               ROW_NUMBER() OVER (
+                 PARTITION BY vec_id
+                 ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
+        FROM scored) WHERE rn = 1)"""
+
+
+def _sql_cell_ranks(qid: int) -> str:
+    """``qcent`` (cid, rn): the ``_sql_ivf`` cells ranked for query
+    ``qid`` by unrounded centroid cosine, ties to the lowest cid.
+    Mirror of ``similarity.ivf.query_cell_ranks``."""
+    return f"""qcent AS (
+      SELECT cid,
+             ROW_NUMBER() OVER (
+               ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
+      FROM scored WHERE vec_id = {qid})"""
+
+
+def _sql_probed(nprobe: int) -> str:
+    """Predicate: the vector lies in one of the ``nprobe`` first cells
+    of ``qcent``."""
+    return f"vec_id IN (SELECT vec_id FROM best JOIN qcent USING (cid) WHERE rn <= {nprobe})"
+
+
+def _sql_pq(qid: int | None = None) -> str:
+    """Flat PQ (4 subspaces of 16 dims; the 16 lowest-id vectors' sub-
+    vectors are the codewords): ``c`` (cid, pos, cval); ``d2`` (vec_id,
+    sub, cid, d2); ``best`` (the same with rn = 1 for each (vec_id, sub)'s
+    nearest codeword, ties to the lowest cid). For query ``qid`` (in
+    ``q``) also ``lut`` (sub, cid, lut_d2) and ``adc`` (vec_id, adc_d2)
+    of every other vector, LUT sums kept DECIMAL to the last addend."""
+    index = f"""c AS (SELECT vec_id AS cid, pos, v AS cval FROM e WHERE vec_id < 16),
+    d2 AS (
+      SELECT e.vec_id, (e.pos - 1) // 16 AS sub, c.cid,
+             {_DSUM.format(expr='(e.v - c.cval) * (e.v - c.cval)')} AS d2
+      FROM e JOIN c USING (pos)
+      GROUP BY e.vec_id, (e.pos - 1) // 16, c.cid),
+    best AS (SELECT vec_id, sub, cid, d2,
+                    ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+                                       ORDER BY d2, cid) AS rn
+             FROM d2)"""
+    if qid is None:
+        return index
+    return f"""{index},
+    lut AS (
+      SELECT (q.pos - 1) // 16 AS sub, c.cid,
+             SUM(CAST((q.qv - c.cval) * (q.qv - c.cval)
+                      AS DECIMAL(38,12))) AS lut_d2
+      FROM q JOIN c USING (pos)
+      GROUP BY 1, 2),
+    adc AS (
+      SELECT b.vec_id, CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
+      FROM best b JOIN lut USING (sub, cid)
+      WHERE b.rn = 1 AND b.vec_id <> {qid}
+      GROUP BY b.vec_id)"""
+
+
+#: The IVFADC index (8 coarse cells, the vectors 0-7; residual codewords
+#: of the vectors 0-15; 4x16-dim subspaces): ``cc`` (ccid, pos, cval),
+#: ``ad2`` (vec_id, ccid, d2), ``asg`` (each vector's cell by exact L2,
+#: ties to the lowest ccid), ``res`` (residuals v - c(v)), ``cw``
+#: (residual codewords), ``ed2`` and ``enc`` (vec_id, ccid, sub, cid).
+_SQL_IVFPQ = f"""cc AS (SELECT vec_id AS ccid, pos, v AS cval FROM e WHERE vec_id < 8),
+    ad2 AS (SELECT e.vec_id, cc.ccid,
+                   {_DSUM.format(expr='(e.v - cc.cval) * (e.v - cc.cval)')}
+                     AS d2
+            FROM e JOIN cc USING (pos) GROUP BY e.vec_id, cc.ccid),
+    asg AS (SELECT vec_id, ccid FROM (
+              SELECT vec_id, ccid,
+                     ROW_NUMBER() OVER (PARTITION BY vec_id
+                                        ORDER BY d2, ccid) AS rn
+              FROM ad2) WHERE rn = 1),
+    res AS (SELECT e.vec_id, a.ccid, e.pos, e.v - cc.cval AS r
+            FROM e JOIN asg a ON a.vec_id = e.vec_id
+            JOIN cc ON cc.ccid = a.ccid AND cc.pos = e.pos),
+    cw AS (SELECT vec_id AS cid, pos, r AS cwv FROM res WHERE vec_id < 16),
+    ed2 AS (SELECT res.vec_id, res.ccid, (res.pos - 1) // 16 AS sub, cw.cid,
+                   {_DSUM.format(expr='(res.r - cw.cwv) * (res.r - cw.cwv)')}
+                     AS d2
+            FROM res JOIN cw ON cw.pos = res.pos
+            GROUP BY res.vec_id, res.ccid, (res.pos - 1) // 16, cw.cid),
+    enc AS (SELECT vec_id, ccid, sub, cid FROM (
+              SELECT vec_id, ccid, sub, cid,
+                     ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+                                        ORDER BY d2, cid) AS rn
+              FROM ed2) WHERE rn = 1)"""
+
+
+def _sql_ivfpq_search(qid: int, nprobe: int) -> str:
+    """``adc{nprobe}`` (vec_id, ccid, adc_d2): residual-ADC distance to
+    query ``qid`` of every other vector in its ``nprobe`` nearest cells,
+    through ``probe{nprobe}``, ``qr{nprobe}`` (the query's residual per
+    probed cell) and ``lut{nprobe}`` (per-cell LUT) over ``_SQL_IVFPQ``."""
+    p = nprobe
+    return f"""probe{p} AS (SELECT ccid FROM ad2 WHERE vec_id = {qid}
+                 ORDER BY d2, ccid LIMIT {p}),
+    qr{p} AS (SELECT pp.ccid, e.pos, e.v - cc.cval AS qr
+              FROM e CROSS JOIN probe{p} pp
+              JOIN cc ON cc.ccid = pp.ccid AND cc.pos = e.pos
+              WHERE e.vec_id = {qid}),
+    lut{p} AS (SELECT qr{p}.ccid, (qr{p}.pos - 1) // 16 AS sub, cw.cid,
+                      SUM(CAST((qr{p}.qr - cw.cwv) * (qr{p}.qr - cw.cwv)
+                               AS DECIMAL(38,12))) AS lut_d2
+               FROM qr{p} JOIN cw ON cw.pos = qr{p}.pos
+               GROUP BY qr{p}.ccid, (qr{p}.pos - 1) // 16, cw.cid),
+    adc{p} AS (SELECT enc.vec_id, enc.ccid,
+                      CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
+               FROM enc JOIN lut{p} ON lut{p}.ccid = enc.ccid
+                                   AND lut{p}.sub = enc.sub
+                                   AND lut{p}.cid = enc.cid
+               WHERE enc.vec_id <> {qid}
+               GROUP BY enc.vec_id, enc.ccid)"""
+
+
+def _sql_pairs(out: str, tau: float) -> str:
+    """``out`` (id_a < id_b, cosine): every vector pair whose 6dp exact
+    cosine is at least ``tau`` (``norms`` and ``dots`` CTEs)."""
+    cos = "ROUND(dot / (SQRT(na.n2) * SQRT(nb.n2)), 6)"
+    return f"""norms AS (SELECT vec_id, {_DSUM.format(expr='v * v')} AS n2
+              FROM e GROUP BY vec_id),
+    dots AS (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             {_DSUM.format(expr='a.v * b.v')} AS dot
+      FROM e a JOIN e b USING (pos) WHERE a.vec_id < b.vec_id
+      GROUP BY 1, 2),
+    {out} AS (
+      SELECT id_a, id_b, {cos} AS cosine FROM dots
+      JOIN norms na ON na.vec_id = id_a
+      JOIN norms nb ON nb.vec_id = id_b
+      WHERE {cos} >= {tau})"""
+
+
+def _sql_bucket_pairs(out: str, tau: float) -> str:
+    """``out`` (id_a < id_b, cosine): ``_sql_pairs`` restricted to pairs
+    sharing a sign-LSH bucket (``_bucket_cte``; ``cand`` and ``comps``)."""
+    cos = "ROUND(dot / (SQRT(na) * SQRT(nb)), 6)"
+    return f"""cand AS (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      FROM buckets a JOIN buckets b USING (bucket)
+      WHERE a.vec_id < b.vec_id),
+    comps AS (
+      SELECT c.id_a, c.id_b,
+             {_DSUM.format(expr='ea.v * eb.v')} AS dot,
+             {_DSUM.format(expr='ea.v * ea.v')} AS na,
+             {_DSUM.format(expr='eb.v * eb.v')} AS nb
+      FROM cand c
+      JOIN e ea ON ea.vec_id = c.id_a
+      JOIN e eb ON eb.vec_id = c.id_b AND eb.pos = ea.pos
+      GROUP BY c.id_a, c.id_b),
+    {out} AS (SELECT id_a, id_b, {cos} AS cosine FROM comps WHERE {cos} >= {tau})"""
+
 
 # --- exact brute-force k-NN -------------------------------------------------
 @query(
     "e01_knn_vec0",
     oracle=f"""
     WITH {_LONG},
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
-    comps AS (
-      SELECT vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos) WHERE vec_id <> 0
-      GROUP BY vec_id)
+    {_sql_query(0)},
+    {_sql_cosines("comps", 0)}
     SELECT vec_id, ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) AS cosine
     FROM comps ORDER BY cosine DESC, vec_id LIMIT 10
     """,
@@ -58,19 +336,8 @@ def e01_knn_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e02_cosine_neardup_pairs",
     oracle=f"""
     WITH {_LONG},
-    norms AS (SELECT vec_id, {_DSUM.format(expr='v * v')} AS n2
-              FROM e GROUP BY vec_id),
-    dots AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             {_DSUM.format(expr='a.v * b.v')} AS dot
-      FROM e a JOIN e b USING (pos) WHERE a.vec_id < b.vec_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           ROUND(dot / (SQRT(na.n2) * SQRT(nb.n2)), 6) AS cosine
-    FROM dots
-    JOIN norms na ON na.vec_id = id_a
-    JOIN norms nb ON nb.vec_id = id_b
-    WHERE ROUND(dot / (SQRT(na.n2) * SQRT(nb.n2)), 6) >= 0.4
+    {_sql_pairs("pairs", 0.4)}
+    SELECT * FROM pairs
     """,
     doc="All-pairs cosine ≥0.4 (embedding near-dup). Exact form; at scale "
     "this runs within LSH buckets only.",
@@ -123,19 +390,9 @@ def e03_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_LONG},
     {_bucket_cte()},
-    cand AS (
-      SELECT e.vec_id, pos, v FROM e
-      JOIN buckets USING (vec_id)
-      WHERE bucket = (SELECT bucket FROM buckets WHERE vec_id = 0)
-        AND vec_id <> 0),
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
-    comps AS (
-      SELECT vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM cand JOIN q USING (pos)
-      GROUP BY vec_id)
+    {_sql_bucket_cand(0)},
+    {_sql_query(0)},
+    {_sql_cosines("comps", 0, src="cand")}
     SELECT vec_id, ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) AS cosine
     FROM comps ORDER BY cosine DESC, vec_id LIMIT 5
     """,
@@ -143,19 +400,26 @@ def e03_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top-5. Recall vs e01 is the bucketing quality measure.",
 )
 def e04_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    return _bucket_knn(tbl(spark, sf_dir, "embeddings"), query_id=0, k=5)
 
-    emb = tbl(spark, sf_dir, "embeddings")
+
+def _bucket_knn(emb: DataFrame, query_id: int, k: int) -> DataFrame:
+    """Exact cosine top-``k`` of ``query_id`` among the vectors sharing its
+    8-plane sign-LSH bucket (the ``_sql_bucket_cand`` candidates)."""
     buckets = sign_lsh_buckets(emb, planes=8)
-    qb = buckets.filter(F.col("vec_id") == 0).select(F.col("bucket").alias("qbucket"))
+    qb = buckets.filter(F.col("vec_id") == query_id).select(
+        F.col("bucket").alias("qbucket")
+    )
     cand = (
         emb.join(buckets, "vec_id")
         .join(F.broadcast(qb), F.col("bucket") == F.col("qbucket"))
-        .filter(F.col("vec_id") != 0)
+        .filter(F.col("vec_id") != query_id)
         .select("vec_id", "embedding")
     )
-    with_query = cand.unionByName(emb.filter(F.col("vec_id") == 0).select("vec_id", "embedding"))
-    return brute_force_knn(with_query, query_id=0, k=5)
+    with_query = cand.unionByName(
+        emb.filter(F.col("vec_id") == query_id).select("vec_id", "embedding")
+    )
+    return brute_force_knn(with_query, query_id=query_id, k=k)
 
 
 # --- per-label centroids (long form) ----------------------------------------
@@ -175,8 +439,11 @@ def e04_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     "raw 12dp sums can differ ~1e-14; the final rounding absorbs that.",
 )
 def e05_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    return _label_centroids(spark, sf_dir).withColumnRenamed("c", "centroid_val")
 
+
+def _label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(label, pos, c): per-label centroid components, 6dp-rounded."""
     from goodreads_pyspark_spark.functions.vectors import explode_vector
     from goodreads_pyspark_spark.operators.partitioning import fan_out
 
@@ -190,7 +457,7 @@ def e05_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("v").cast("decimal(38,12)")).cast("double")
             / F.count(F.lit(1)),
             6,
-        ).alias("centroid_val")
+        ).alias("c")
     )
 
 
@@ -199,14 +466,8 @@ def e05_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e06_ivf_knn_vec1",
     oracle=f"""
     WITH {_LONG},
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 1),
-    comps AS (
-      SELECT vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos) WHERE vec_id <> 1
-      GROUP BY vec_id)
+    {_sql_query(1)},
+    {_sql_cosines("comps", 1)}
     SELECT vec_id, ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) AS cosine
     FROM comps ORDER BY cosine DESC, vec_id LIMIT 10
     """,
@@ -229,38 +490,10 @@ def e06_ivf_knn_vec1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e08_ivf_partial_probe_vec1",
     oracle=f"""
     WITH {_LONG},
-    cents AS (SELECT CAST(vec_id AS INTEGER) AS cid, pos, v AS cval
-              FROM e WHERE vec_id < 8),
-    scored AS (
-      SELECT e.vec_id, c.cid,
-             {_DSUM.format(expr='v * cval')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='cval * cval')} AS c2
-      FROM e JOIN cents c USING (pos)
-      GROUP BY e.vec_id, c.cid),
-    best AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
-        FROM scored) WHERE rn = 1),
-    probes AS (
-      SELECT cid FROM (
-        SELECT cid,
-               ROW_NUMBER() OVER (
-                 ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
-        FROM scored WHERE vec_id = 1) WHERE rn <= 2),
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 1),
-    comps AS (
-      SELECT e.vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos)
-      WHERE e.vec_id <> 1
-        AND e.vec_id IN (SELECT vec_id FROM best JOIN probes USING (cid))
-      GROUP BY e.vec_id)
+    {_sql_ivf()},
+    {_sql_cell_ranks(1)},
+    {_sql_query(1)},
+    {_sql_cosines("comps", 1, where=_sql_probed(2))}
     SELECT vec_id, ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) AS cosine
     FROM comps ORDER BY cosine DESC, vec_id LIMIT 10
     """,
@@ -317,14 +550,8 @@ def e07_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e09_batch_knn",
     oracle=f"""
     WITH {_LONG},
-    q AS (SELECT vec_id AS qid, pos, v AS qv FROM e WHERE vec_id < 8),
-    comps AS (
-      SELECT qid, vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos) WHERE vec_id <> qid
-      GROUP BY qid, vec_id),
+    {_sql_query_block(8)},
+    {_sql_cosines("comps")},
     r AS (SELECT qid, vec_id,
                  ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) AS cosine
           FROM comps),
@@ -352,16 +579,7 @@ def e09_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e10_pq_codes",
     oracle=f"""
     WITH {_LONG},
-    c AS (SELECT vec_id AS cid, pos, v AS cval FROM e WHERE vec_id < 16),
-    d2 AS (
-      SELECT e.vec_id, (e.pos - 1) // 16 AS sub, c.cid,
-             {_DSUM.format(expr='(e.v - c.cval) * (e.v - c.cval)')} AS d2
-      FROM e JOIN c USING (pos)
-      GROUP BY e.vec_id, (e.pos - 1) // 16, c.cid),
-    best AS (SELECT vec_id, sub, cid, d2,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                       ORDER BY d2, cid) AS rn
-             FROM d2)
+    {_sql_pq()}
     SELECT vec_id,
            string_agg(CAST(cid AS VARCHAR), ',' ORDER BY sub) AS pq_code,
            {_DSUM.format(expr='d2')} AS total_d2
@@ -387,33 +605,11 @@ def e10_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_LONG},
     {_bucket_cte()},
-    cand AS (
-      SELECT e.vec_id, pos, v FROM e
-      JOIN buckets USING (vec_id)
-      WHERE bucket = (SELECT bucket FROM buckets WHERE vec_id = 0)
-        AND vec_id <> 0),
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
-    ann AS (
-      SELECT vec_id FROM (
-        SELECT vec_id,
-               {_DSUM.format(expr='v * qv')} AS dot,
-               {_DSUM.format(expr='v * v')} AS n2,
-               {_DSUM.format(expr='qv * qv')} AS q2
-        FROM cand JOIN q USING (pos) GROUP BY vec_id)
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id LIMIT 5),
-    exact AS (
-      SELECT vec_id FROM (
-        SELECT vec_id,
-               {_DSUM.format(expr='v * qv')} AS dot,
-               {_DSUM.format(expr='v * v')} AS n2,
-               {_DSUM.format(expr='qv * qv')} AS q2
-        FROM e JOIN q USING (pos) WHERE vec_id <> 0 GROUP BY vec_id)
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id LIMIT 5)
-    SELECT CAST(5 AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM ann JOIN exact USING (vec_id))
-                AS BIGINT) AS n_hits,
-           CAST((SELECT COUNT(*) FROM ann JOIN exact USING (vec_id))
-                AS DOUBLE) / 5 AS recall
+    {_sql_bucket_cand(0)},
+    {_sql_query(0)},
+    {_sql_knn("ann", 5, 0, src="cand")},
+    {_sql_knn("exact", 5, 0)}
+    {_sql_recall("ann", 5)}
     """,
     doc="ANN quality audit: recall@5 of the LSH-bucketed ANN (e04) "
     "against the exact top-5 (e01's kernel) for the same query vector — "
@@ -423,34 +619,10 @@ def e10_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "inner join, count ratio) is unchanged.",
 )
 def e11_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.similarity.ann import brute_force_knn
-
     emb = tbl(spark, sf_dir, "embeddings")
-    buckets = sign_lsh_buckets(emb, planes=8)
-    qb = buckets.filter(F.col("vec_id") == 0).select(
-        F.col("bucket").alias("qbucket")
-    )
-    cand = (
-        emb.join(buckets, "vec_id")
-        .join(F.broadcast(qb), F.col("bucket") == F.col("qbucket"))
-        .filter(F.col("vec_id") != 0)
-        .select("vec_id", "embedding")
-    )
-    with_query = cand.unionByName(
-        emb.filter(F.col("vec_id") == 0).select("vec_id", "embedding")
-    )
-    ann = brute_force_knn(with_query, query_id=0, k=5).select("vec_id")
+    ann = _bucket_knn(emb, query_id=0, k=5).select("vec_id")
     exact = brute_force_knn(emb, query_id=0, k=5).select("vec_id")
-    hits = ann.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    return hits.select(
-        F.lit(5).cast("int").alias("k"),
-        "n_hits",
-        (F.col("n_hits").cast("double") / 5).alias("recall"),
-    )
+    return recall_at_k(ann, exact, 5)
 
 
 # --- IVF recall audit --------------------------------------------------------
@@ -458,49 +630,12 @@ def e11_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e12_ivf_recall_audit",
     oracle=f"""
     WITH {_LONG},
-    cents AS (SELECT CAST(vec_id AS INTEGER) AS cid, pos, v AS cval
-              FROM e WHERE vec_id < 8),
-    scored AS (
-      SELECT e.vec_id, c.cid,
-             {_DSUM.format(expr='v * cval')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='cval * cval')} AS c2
-      FROM e JOIN cents c USING (pos)
-      GROUP BY e.vec_id, c.cid),
-    best AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
-        FROM scored) WHERE rn = 1),
-    probes AS (
-      SELECT cid FROM (
-        SELECT cid,
-               ROW_NUMBER() OVER (
-                 ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
-        FROM scored WHERE vec_id = 1) WHERE rn <= 2),
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 1),
-    allcomps AS (
-      SELECT e.vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos)
-      WHERE e.vec_id <> 1
-      GROUP BY e.vec_id),
-    exact AS (
-      SELECT vec_id FROM allcomps
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id LIMIT 10),
-    ivf AS (
-      SELECT vec_id FROM allcomps
-      WHERE vec_id IN (SELECT vec_id FROM best JOIN probes USING (cid))
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id LIMIT 10)
-    SELECT CAST(10 AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM ivf JOIN exact USING (vec_id))
-                AS BIGINT) AS n_hits,
-           CAST((SELECT COUNT(*) FROM ivf JOIN exact USING (vec_id))
-                AS DOUBLE) / 10 AS recall
+    {_sql_ivf()},
+    {_sql_cell_ranks(1)},
+    {_sql_query(1)},
+    {_sql_knn("exact", 10, 1)},
+    {_sql_top("ivf", "exact_c", _BY_COS, 10, where=_sql_probed(2))}
+    {_sql_recall("ivf", 10)}
     """,
     doc="IVF quality audit: recall@10 of the nprobe=2-of-8 partial-probe "
     "IVF (e08) against the exact top-10 for the same query — the "
@@ -509,25 +644,13 @@ def e11_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Companion to e11's LSH recall audit.",
 )
 def e12_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.similarity.ann import brute_force_knn
     from goodreads_pyspark_spark.similarity.ivf import ivf_knn, sampled_centroids
 
     emb = tbl(spark, sf_dir, "embeddings")
     cents = sampled_centroids(emb, k=8)
-    ivf = ivf_knn(emb, query_id=1, k=10, nprobe=2, centroids_long=cents).select(
-        "vec_id"
-    )
-    exact = brute_force_knn(emb, query_id=1, k=10).select("vec_id")
-    hits = ivf.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    return hits.select(
-        F.lit(10).cast("int").alias("k"),
-        "n_hits",
-        (F.col("n_hits").cast("double") / 10).alias("recall"),
-    )
+    ivf = ivf_knn(emb, query_id=1, k=10, nprobe=2, centroids_long=cents)
+    exact = brute_force_knn(emb, query_id=1, k=10)
+    return recall_at_k(ivf.select("vec_id"), exact.select("vec_id"), 10)
 
 
 # --- bucketed near-dup pairs (the scale path of e02) -------------------------
@@ -536,23 +659,8 @@ def e12_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_LONG},
     {_bucket_cte()},
-    cand AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM buckets a JOIN buckets b USING (bucket)
-      WHERE a.vec_id < b.vec_id),
-    comps AS (
-      SELECT c.id_a, c.id_b,
-             {_DSUM.format(expr='ea.v * eb.v')} AS dot,
-             {_DSUM.format(expr='ea.v * ea.v')} AS na,
-             {_DSUM.format(expr='eb.v * eb.v')} AS nb
-      FROM cand c
-      JOIN e ea ON ea.vec_id = c.id_a
-      JOIN e eb ON eb.vec_id = c.id_b AND eb.pos = ea.pos
-      GROUP BY c.id_a, c.id_b)
-    SELECT id_a, id_b,
-           ROUND(dot / (SQRT(na) * SQRT(nb)), 6) AS cosine
-    FROM comps
-    WHERE ROUND(dot / (SQRT(na) * SQRT(nb)), 6) >= 0.4
+    {_sql_bucket_pairs("pairs", 0.4)}
+    SELECT * FROM pairs
     """,
     doc="Embedding near-dup pairs WITHIN sign-LSH buckets "
     "(similarity/ann.py bucketed_neardup_pairs) — the production form "
@@ -574,28 +682,8 @@ def e13_bucketed_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e14_pq_adc_topk",
     oracle=f"""
     WITH {_LONG},
-    c AS (SELECT vec_id AS cid, pos, v AS cval FROM e WHERE vec_id < 16),
-    d2 AS (
-      SELECT e.vec_id, (e.pos - 1) // 16 AS sub, c.cid,
-             {_DSUM.format(expr='(e.v - c.cval) * (e.v - c.cval)')} AS d2
-      FROM e JOIN c USING (pos)
-      GROUP BY e.vec_id, (e.pos - 1) // 16, c.cid),
-    best AS (SELECT vec_id, sub, cid,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                       ORDER BY d2, cid) AS rn
-             FROM d2),
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 2),
-    lut AS (
-      SELECT (q.pos - 1) // 16 AS sub, c.cid,
-             SUM(CAST((q.qv - c.cval) * (q.qv - c.cval)
-                      AS DECIMAL(38,12))) AS lut_d2
-      FROM q JOIN c USING (pos)
-      GROUP BY 1, 2),
-    adc AS (
-      SELECT b.vec_id, CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
-      FROM best b JOIN lut USING (sub, cid)
-      WHERE b.rn = 1 AND b.vec_id <> 2
-      GROUP BY b.vec_id)
+    {_sql_query(2)},
+    {_sql_pq(2)}
     SELECT vec_id, adc_d2 FROM adc ORDER BY adc_d2, vec_id LIMIT 10
     """,
     doc="ADC top-10 for query vec_id=2 over PQ codes (similarity/"
@@ -620,42 +708,12 @@ def e14_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e15_adc_recall_audit",
     oracle=f"""
     WITH {_LONG},
-    c AS (SELECT vec_id AS cid, pos, v AS cval FROM e WHERE vec_id < 16),
-    d2 AS (
-      SELECT e.vec_id, (e.pos - 1) // 16 AS sub, c.cid,
-             {_DSUM.format(expr='(e.v - c.cval) * (e.v - c.cval)')} AS d2
-      FROM e JOIN c USING (pos)
-      GROUP BY e.vec_id, (e.pos - 1) // 16, c.cid),
-    best AS (SELECT vec_id, sub, cid,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                       ORDER BY d2, cid) AS rn
-             FROM d2),
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 2),
-    lut AS (
-      SELECT (q.pos - 1) // 16 AS sub, c.cid,
-             SUM(CAST((q.qv - c.cval) * (q.qv - c.cval)
-                      AS DECIMAL(38,12))) AS lut_d2
-      FROM q JOIN c USING (pos)
-      GROUP BY 1, 2),
-    adc AS (
-      SELECT b.vec_id FROM (
-        SELECT b.vec_id, CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
-        FROM best b JOIN lut USING (sub, cid)
-        WHERE b.rn = 1 AND b.vec_id <> 2
-        GROUP BY b.vec_id) b
-      ORDER BY adc_d2, vec_id LIMIT 10),
-    exact AS (
-      SELECT vec_id FROM (
-        SELECT e.vec_id,
-               {_DSUM.format(expr='(e.v - q.qv) * (e.v - q.qv)')} AS d2
-        FROM e JOIN q USING (pos) WHERE e.vec_id <> 2
-        GROUP BY e.vec_id)
-      ORDER BY d2, vec_id LIMIT 10)
-    SELECT CAST(10 AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM adc JOIN exact USING (vec_id))
-                AS BIGINT) AS n_hits,
-           CAST((SELECT COUNT(*) FROM adc JOIN exact USING (vec_id))
-                AS DOUBLE) / 10 AS recall
+    {_sql_query(2)},
+    {_sql_pq(2)},
+    {_sql_top("adc10", "adc", "adc_d2", 10)},
+    {_sql_l2("l2", 2)},
+    {_sql_top("exact", "l2", "d2", 10)}
+    {_sql_recall("adc10", 10)}
     """,
     doc="PQ quality audit: recall@10 of ADC search (e14) against the "
     "exact L2 top-10 for the same query — quantifies what 256x "
@@ -664,37 +722,12 @@ def e14_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the recall number itself is hash-gated.",
 )
 def e15_adc_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.similarity.ann import _ACC, _long_form
-    from goodreads_pyspark_spark.similarity.quantize import pq_adc_topk
+    from goodreads_pyspark_spark.similarity.quantize import exact_l2_knn, pq_adc_topk
 
     emb = tbl(spark, sf_dir, "embeddings")
     adc = pq_adc_topk(emb, query_id=2, k=10).select("vec_id")
-
-    e = _long_form(emb, "vec_id", "embedding")
-    q = e.filter(F.col("vec_id") == 2).select("pos", F.col("v").alias("qv"))
-    exact = (
-        e.filter(F.col("vec_id") != 2)
-        .join(F.broadcast(q), "pos")
-        .groupBy("vec_id")
-        .agg(
-            F.sum(((F.col("v") - F.col("qv")) * (F.col("v") - F.col("qv"))).cast(_ACC))
-            .cast("double")
-            .alias("d2")
-        )
-        .orderBy(F.col("d2").asc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id")
-    )
-    hits = adc.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    return hits.select(
-        F.lit(10).cast("int").alias("k"),
-        "n_hits",
-        (F.col("n_hits").cast("double") / 10).alias("recall"),
-    )
+    exact = exact_l2_knn(emb, query_id=2, k=10).select("vec_id")
+    return recall_at_k(adc, exact, 10)
 
 
 # --- dimension-truncation (matryoshka) recall audit --------------------------
@@ -706,32 +739,11 @@ _E16_K = 5
     "e16_truncated_dim_recall",
     oracle=f"""
     WITH {_LONG},
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
-    trunc AS (
-      SELECT vec_id FROM (
-        SELECT vec_id,
-               {_DSUM.format(expr='v * qv')} AS dot,
-               {_DSUM.format(expr='v * v')} AS n2,
-               {_DSUM.format(expr='qv * qv')} AS q2
-        FROM e JOIN q USING (pos)
-        WHERE vec_id <> 0 AND pos <= {_E16_DIMS} GROUP BY vec_id)
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id
-      LIMIT {_E16_K}),
-    exact AS (
-      SELECT vec_id FROM (
-        SELECT vec_id,
-               {_DSUM.format(expr='v * qv')} AS dot,
-               {_DSUM.format(expr='v * v')} AS n2,
-               {_DSUM.format(expr='qv * qv')} AS q2
-        FROM e JOIN q USING (pos) WHERE vec_id <> 0 GROUP BY vec_id)
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id
-      LIMIT {_E16_K})
-    SELECT CAST({_E16_DIMS} AS INTEGER) AS n_dims,
-           CAST({_E16_K} AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM trunc JOIN exact USING (vec_id))
-                AS BIGINT) AS n_hits,
-           CAST((SELECT COUNT(*) FROM trunc JOIN exact USING (vec_id))
-                AS DOUBLE) / {_E16_K} AS recall
+    {_sql_query(0)},
+    {_sql_knn("trunc", _E16_K, 0, where=f"pos <= {_E16_DIMS}")},
+    {_sql_knn("exact", _E16_K, 0)}
+    SELECT CAST({_E16_DIMS} AS INTEGER) AS n_dims, *
+    FROM ({_sql_recall("trunc", _E16_K)})
     """,
     doc="Dimension-truncation recall audit (the matryoshka-embedding "
     "question): top-5 by cosine over only the first 32 of 64 dims vs "
@@ -742,24 +754,14 @@ _E16_K = 5
     "both sides reuse the e01 decimal-exact cosine.",
 )
 def e16_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.similarity.ann import brute_force_knn
-
     emb = tbl(spark, sf_dir, "embeddings")
     truncated = emb.select(
         "vec_id", F.slice("embedding", 1, _E16_DIMS).alias("embedding")
     )
     tr = brute_force_knn(truncated, query_id=0, k=_E16_K).select("vec_id")
     exact = brute_force_knn(emb, query_id=0, k=_E16_K).select("vec_id")
-    hits = tr.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    return hits.select(
-        F.lit(_E16_DIMS).cast("int").alias("n_dims"),
-        F.lit(_E16_K).cast("int").alias("k"),
-        "n_hits",
-        (F.col("n_hits").cast("double") / _E16_K).alias("recall"),
+    return recall_at_k(tr, exact, _E16_K).select(
+        F.lit(_E16_DIMS).cast("int").alias("n_dims"), "*"
     )
 
 
@@ -771,13 +773,8 @@ _E17_MIN_COS = 0.25
     "e17_cosine_range_search",
     oracle=f"""
     WITH {_LONG},
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
-    comps AS (
-      SELECT vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos) WHERE vec_id <> 0 GROUP BY vec_id)
+    {_sql_query(0)},
+    {_sql_cosines("comps", 0)}
     SELECT vec_id,
            ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) AS cosine
     FROM comps
@@ -829,8 +826,6 @@ def e17_cosine_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "independent, one final sqrt+round.",
 )
 def e18_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from goodreads_pyspark_spark.functions.vectors import explode_vector
     from goodreads_pyspark_spark.operators.partitioning import fan_out
 
@@ -855,66 +850,25 @@ def e18_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ============================ round-4 additions ==============================
+# --- IVF recall-vs-cost curve ------------------------------------------------
+_E19_PROBES = (1, 2, 4, 8)
 
 
 @query(
     "e19_ivf_nprobe_sweep",
     oracle=f"""
     WITH {_LONG},
-    cents AS (SELECT CAST(vec_id AS INTEGER) AS cid, pos, v AS cval
-              FROM e WHERE vec_id < 8),
-    scored AS (
-      SELECT e.vec_id, c.cid,
-             {_DSUM.format(expr='v * cval')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='cval * cval')} AS c2
-      FROM e JOIN cents c USING (pos)
-      GROUP BY e.vec_id, c.cid),
-    best AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
-        FROM scored) WHERE rn = 1),
-    qcent AS (
-      SELECT cid,
-             ROW_NUMBER() OVER (
-               ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
-      FROM scored WHERE vec_id = 1),
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 1),
-    allcomps AS (
-      SELECT e.vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos)
-      WHERE e.vec_id <> 1
-      GROUP BY e.vec_id),
-    exact AS (
-      SELECT vec_id FROM allcomps
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id LIMIT 10),
-    nps AS (SELECT CAST(unnest([1, 2, 4, 8]) AS INTEGER) AS nprobe),
-    assigned AS (SELECT b.vec_id, qc.rn FROM best b JOIN qcent qc USING (cid)),
-    ivf AS (
-      SELECT nprobe, vec_id FROM (
-        SELECT n.nprobe, ac.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.nprobe
-                 ORDER BY ROUND(ac.dot / (SQRT(ac.n2) * SQRT(ac.q2)), 6)
-                          DESC, ac.vec_id) AS rn2
-        FROM nps n
-        JOIN assigned a ON a.rn <= n.nprobe
-        JOIN allcomps ac ON ac.vec_id = a.vec_id)
-      WHERE rn2 <= 10),
-    hits AS (SELECT nprobe, COUNT(*) AS c
-             FROM ivf JOIN exact USING (vec_id) GROUP BY nprobe)
-    SELECT n.nprobe, CAST(10 AS INTEGER) AS k,
-           CAST(COALESCE(c, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(c, 0) AS DOUBLE) / 10 AS recall
-    FROM nps n LEFT JOIN hits USING (nprobe)
-    ORDER BY n.nprobe
+    {_sql_ivf()},
+    {_sql_cell_ranks(1)},
+    {_sql_query(1)},
+    {_sql_knn("exact", 10, 1)},
+    nps AS {_sql_values("nprobe", _E19_PROBES)},
+    swept AS (SELECT nprobe, exact_c.* FROM nps
+              JOIN qcent ON rn <= nprobe
+              JOIN best USING (cid) JOIN exact_c USING (vec_id)),
+    {_sql_top("ivf", "swept", _BY_COS, 10, by="nprobe")}
+    {_sql_recall("ivf", 10, by="nprobe", grid="nps")}
+    ORDER BY nprobe
     """,
     doc="IVF recall-vs-cost CURVE: recall@10 for the same query at "
     "nprobe = 1, 2, 4, 8 of 8 lists (e12 pins one point; this pins "
@@ -926,78 +880,40 @@ def e18_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distance math, which is the entire point of IVF at 100 TB.",
 )
 def e19_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from goodreads_pyspark_spark.similarity.ann import all_cosines
-    from goodreads_pyspark_spark.similarity.ivf import ivf_assign, sampled_centroids
+    from goodreads_pyspark_spark.similarity.ivf import (
+        ivf_assign,
+        query_cell_ranks,
+        sampled_centroids,
+    )
 
     # ONE exact scoring pass + ONE assignment pass serve the whole curve:
-    # the nprobe=p candidate set is just "assigned centroid ranks <= p",
-    # so every sweep point is a filter + window-rank over the same scored
-    # table — not four independent IVF pipelines (the first formulation
-    # ran 4x the jobs for identical numbers; same scoring/tie-break
-    # conventions as ivf_knn, which e08/e12 gate directly).
+    # the nprobe=p candidate set is just "assigned cell ranks <= p", so
+    # every sweep point is a filter + window-rank over the same scored
+    # table (same scoring/tie-break conventions as ivf_knn, which e08/e12
+    # gate directly).
     emb = tbl(spark, sf_dir, "embeddings")
-    cents = sampled_centroids(emb, k=8).cache()
-    assign = ivf_assign(emb, cents)
-    scores = all_cosines(emb, query_id=1).localCheckpoint(eager=True)
-    exact = scores.orderBy(F.col("cosine").desc(), "vec_id").limit(10).select(
-        "vec_id"
-    )
-    # the query's centroid ranking (unrounded cosine, cid tiebreak — the
-    # same ordering ivf_knn's probe selection uses)
-    from goodreads_pyspark_spark.functions.vectors import explode_vector
-
-    qe = explode_vector(emb.filter(F.col("vec_id") == 1), "vec_id")
-    q_scored = (
-        qe.join(F.broadcast(cents), "pos")
-        .groupBy("cid")
-        .agg(
-            F.sum((F.col("v") * F.col("cval")).cast("decimal(38,12)"))
-            .cast("double")
-            .alias("dot"),
-            F.sum((F.col("v") * F.col("v")).cast("decimal(38,12)"))
-            .cast("double")
-            .alias("n2"),
-            F.sum((F.col("cval") * F.col("cval")).cast("decimal(38,12)"))
-            .cast("double")
-            .alias("c2"),
+    with _released() as caches:
+        cents = sampled_centroids(emb, k=8).cache()
+        caches.append(cents)
+        scores = all_cosines(emb, query_id=1).localCheckpoint(eager=True)
+        exact = scores.orderBy(F.col("cosine").desc(), "vec_id").limit(10)
+        cand = ivf_assign(emb, cents).join(
+            F.broadcast(query_cell_ranks(emb, 1, cents)), "cid"
         )
-        .select(
-            "cid",
-            (F.col("dot") / (F.sqrt("n2") * F.sqrt("c2"))).alias("qcos"),
+        nps = spark.createDataFrame([(n,) for n in _E19_PROBES], "nprobe int")
+        sweep = nps.join(cand, cand.rn <= nps.nprobe).join(scores, "vec_id")
+        wr = Window.partitionBy("nprobe").orderBy(F.col("cosine").desc(), "vec_id")
+        ivf10 = (
+            sweep.withColumn("rk", F.row_number().over(wr))
+            .filter(F.col("rk") <= 10)
+            .select("nprobe", "vec_id")
         )
-    )
-    qrank = bounded_rank(q_scored, [("qcos", "desc"), ("cid", "asc")], "rn").select(
-        "cid", "rn"
-    )
-    cand = assign.join(F.broadcast(qrank), "cid").select("vec_id", "rn")
-    nps = spark.createDataFrame([(n,) for n in (1, 2, 4, 8)], "nprobe int")
-    sweep = nps.join(cand, cand.rn <= nps.nprobe).join(scores, "vec_id")
-    wr = Window.partitionBy("nprobe").orderBy(F.col("cosine").desc(), "vec_id")
-    ivf10 = (
-        sweep.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 10)
-        .select("nprobe", "vec_id")
-    )
-    hits = (
-        ivf10.join(exact, "vec_id")
-        .groupBy("nprobe")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
-    )
-    out = (
-        nps.join(hits, "nprobe", "left")
-        .select(
-            "nprobe",
-            F.lit(10).cast("int").alias("k"),
-            F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)).cast("double") / 10).alias("recall"),
+        out = _materialize(
+            "e19_ivf_nprobe_sweep",
+            recall_at_k(ivf10, exact.select("vec_id"), 10, by=("nprobe",), grid=nps)
+            .orderBy("nprobe"),
         )
-        .orderBy("nprobe")
-        .localCheckpoint(eager=True)
-    )
-    cents.unpersist()
     full_probe = [r for r in out.collect() if r["nprobe"] == 8]
     if not full_probe or full_probe[0]["recall"] != 1.0:
         raise AssertionError("nprobe == nlist must equal exhaustive search")
@@ -1043,24 +959,7 @@ def e19_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mean runs over 6dp-quantized distances.",
 )
 def e20_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.functions.vectors import explode_vector
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    emb = fan_out(tbl(spark, sf_dir, "embeddings"))
-    e = explode_vector(emb, "vec_id").withColumn("pos", F.col("pos") + 1)
-    cents = (
-        e.join(emb.select("vec_id", "label"), "vec_id")
-        .groupBy("label", "pos")
-        .agg(
-            F.round(
-                F.sum(F.col("v").cast("decimal(38,12)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("c")
-        )
-    )
+    cents = _label_centroids(spark, sf_dir)
     c1 = cents.select(
         F.col("label").alias("l1"), "pos", F.col("c").alias("ca")
     )
@@ -1074,8 +973,6 @@ def e20_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l1", "l2")
         .agg(F.round(F.sqrt(F.sum(diff * diff).cast("double")), 6).alias("dd"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("l1").orderBy("dd", "l2")
     nearest = (
         dist.withColumn("rn", F.row_number().over(w))
@@ -1100,19 +997,22 @@ def e20_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- SemDeDup-style semantic dedup clusters (new in r5) ----------------------
+# --- SemDeDup-style semantic dedup clusters ----------------------------------
 _E21_TAU = 0.4
 _E21_CC_ROUNDS = 12
 
 
-def _e21_oracle() -> str:
-    """Unrolled min-label propagation with pointer doubling over the
-    cosine>=tau pair graph (the g05 _cc_oracle pattern). 12 rounds
-    covers radius 8191: 8 rounds (radius 255) under-converged at sf0.1
-    — at tau=0.4 the pair graph grows CHAINS, not just near-cliques,
-    and the local sf0.1 sweep caught the oracle 10 clusters short
-    (the same lesson as g05; near-clique intuition does not survive a
-    loose threshold)."""
+def _sql_clusters(pairs: str) -> str:
+    """The per-cluster retention ledger (cluster_id, n_members,
+    n_dropped) of the connected components of the ``pairs`` (id_a, id_b)
+    graph over every vector: unrolled min-label propagation with pointer
+    doubling (the g05 _cc_oracle pattern). 12 rounds cover radius 8191:
+    8 rounds (radius 255) under-converged at sf0.1 — at tau=0.4 the pair
+    graph grows CHAINS, not just near-cliques, and the local sf0.1 sweep
+    caught the oracle 10 clusters short (the same lesson as g05; near-
+    clique intuition does not survive a loose threshold). The bucketed
+    pair graph (e22) keeps a subset of the edges, which can lengthen
+    paths within a component; 12 doublings still cover radius 8191."""
     steps = []
     for r in range(1, _E21_CC_ROUNDS + 1):
         p = r - 1
@@ -1124,22 +1024,8 @@ def _e21_oracle() -> str:
                UNION ALL
                SELECT e.u AS id, l.label AS x FROM und e JOIN l{p} l ON l.id = e.v
              ) t GROUP BY t.id)""")
-    return f"""
-    WITH {_LONG},
-    norms AS (SELECT vec_id, {_DSUM.format(expr='v * v')} AS n2
-              FROM e GROUP BY vec_id),
-    dots AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             {_DSUM.format(expr='a.v * b.v')} AS dot
-      FROM e a JOIN e b USING (pos) WHERE a.vec_id < b.vec_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM dots
-      JOIN norms na ON na.vec_id = id_a
-      JOIN norms nb ON nb.vec_id = id_b
-      WHERE ROUND(dot / (SQRT(na.n2) * SQRT(nb.n2)), 6) >= {_E21_TAU}),
-    und AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs),
+    return f"""und AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM {pairs}
+            UNION ALL SELECT id_b, id_a FROM {pairs}),
     l0 AS MATERIALIZED (SELECT vec_id AS id, vec_id AS label
                         FROM embeddings),{",".join(steps)}
     SELECT CAST(label AS BIGINT) AS cluster_id,
@@ -1152,7 +1038,10 @@ def _e21_oracle() -> str:
 
 @query(
     "e21_semdedup_clusters",
-    oracle=_e21_oracle(),
+    oracle=f"""
+    WITH {_LONG},
+    {_sql_pairs("pairs", _E21_TAU)},
+    {_sql_clusters("pairs")}""",
     doc="SemDeDup-style semantic dedup (Abbas et al. 2023, public "
     "literature): connected components over the exact cosine>= "
     f"{_E21_TAU} pair graph, keeping the min-id vector per cluster — "
@@ -1168,20 +1057,20 @@ def _e21_oracle() -> str:
     "is the complete per-cluster retention ledger for the corpus.",
 )
 def e21_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    emb = tbl(spark, sf_dir, "embeddings")
+    return _clusters(emb, cosine_neardup_pairs(emb, threshold=_E21_TAU))
 
+
+def _clusters(emb: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The per-cluster retention ledger of the ``pairs`` graph's connected
+    components over every vector. Mirror of ``_sql_clusters``."""
     from goodreads_pyspark_spark.graph.frames import PropertyGraph
     from goodreads_pyspark_spark.graph.pregel import (
         connected_components_alternating,
     )
-    from goodreads_pyspark_spark.similarity.ann import cosine_neardup_pairs
 
-    emb = tbl(spark, sf_dir, "embeddings")
-    pairs = cosine_neardup_pairs(emb, threshold=_E21_TAU)
     vertices = emb.select(F.col("vec_id").alias("id"))
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     comp = connected_components_alternating(PropertyGraph(vertices, edges))
     return comp.groupBy(F.col("component").cast("bigint").alias("cluster_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
@@ -1189,59 +1078,14 @@ def e21_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- scale-true SemDeDup: bucketed pairs -> CC -> ledger (new in r6) ---------
-def _e22_oracle() -> str:
-    """e21's pointer-doubling CC rollup, but over the BUCKETED pair graph
-    (e13's sign-LSH candidate CTE + decimal-exact rescore). Same 12
-    rounds: removing edges can only lengthen paths within surviving
-    components, and 12 doublings cover radius 8191 — re-checked by the
-    cross-sf sweep each round (the r5 lesson: verify convergence at
-    sf0.1, not just sf0.01)."""
-    steps = []
-    for r in range(1, _E21_CC_ROUNDS + 1):
-        p = r - 1
-        steps.append(f"""
-    l{r} AS MATERIALIZED (SELECT t.id, MIN(t.x) AS label FROM (
-               SELECT id, label AS x FROM l{p}
-               UNION ALL
-               SELECT a.id, b.label AS x FROM l{p} a JOIN l{p} b ON a.label = b.id
-               UNION ALL
-               SELECT e.u AS id, l.label AS x FROM und e JOIN l{p} l ON l.id = e.v
-             ) t GROUP BY t.id)""")
-    return f"""
-    WITH {_LONG},
-    {_bucket_cte()},
-    cand AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM buckets a JOIN buckets b USING (bucket)
-      WHERE a.vec_id < b.vec_id),
-    comps AS (
-      SELECT c.id_a, c.id_b,
-             {_DSUM.format(expr='ea.v * eb.v')} AS dot,
-             {_DSUM.format(expr='ea.v * ea.v')} AS na,
-             {_DSUM.format(expr='eb.v * eb.v')} AS nb
-      FROM cand c
-      JOIN e ea ON ea.vec_id = c.id_a
-      JOIN e eb ON eb.vec_id = c.id_b AND eb.pos = ea.pos
-      GROUP BY c.id_a, c.id_b),
-    pairs AS (
-      SELECT id_a, id_b FROM comps
-      WHERE ROUND(dot / (SQRT(na) * SQRT(nb)), 6) >= {_E21_TAU}),
-    und AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs),
-    l0 AS MATERIALIZED (SELECT vec_id AS id, vec_id AS label
-                        FROM embeddings),{",".join(steps)}
-    SELECT CAST(label AS BIGINT) AS cluster_id,
-           CAST(COUNT(*) AS BIGINT) AS n_members,
-           CAST(COUNT(*) - 1 AS BIGINT) AS n_dropped
-    FROM l{_E21_CC_ROUNDS}
-    GROUP BY label
-    """
-
-
+# --- scale-true SemDeDup: bucketed pairs -> CC -> ledger ---------------------
 @query(
     "e22_semdedup_bucketed",
-    oracle=_e22_oracle(),
+    oracle=f"""
+    WITH {_LONG},
+    {_bucket_cte()},
+    {_sql_bucket_pairs("pairs", _E21_TAU)},
+    {_sql_clusters("pairs")}""",
     doc="Scale-true SemDeDup (VERDICT r5 #2): the SAME cluster->retention "
     "ledger as e21, but the pair source is the production kernel — "
     "sign-LSH buckets (similarity/ann.py bucketed_neardup_pairs), so "
@@ -1253,23 +1097,10 @@ def _e22_oracle() -> str:
     "reported (n_dropped = 0) so the ledger is complete.",
 )
 def e22_semdedup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.graph.frames import PropertyGraph
-    from goodreads_pyspark_spark.graph.pregel import (
-        connected_components_alternating,
-    )
     from goodreads_pyspark_spark.similarity.ann import bucketed_neardup_pairs
 
     emb = tbl(spark, sf_dir, "embeddings")
-    pairs = bucketed_neardup_pairs(emb, threshold=_E21_TAU, planes=8)
-    vertices = emb.select(F.col("vec_id").alias("id"))
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    comp = connected_components_alternating(PropertyGraph(vertices, edges))
-    return comp.groupBy(F.col("component").cast("bigint").alias("cluster_id")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_members"),
-        (F.count(F.lit(1)) - 1).cast("bigint").alias("n_dropped"),
-    )
+    return _clusters(emb, bucketed_neardup_pairs(emb, threshold=_E21_TAU, planes=8))
 
 
 # --- recall of the bucketed pair source vs the exact pair set ----------------
@@ -1277,18 +1108,7 @@ def e22_semdedup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "e23_semdedup_recall",
     oracle=f"""
     WITH {_LONG},
-    norms AS (SELECT vec_id, {_DSUM.format(expr='v * v')} AS n2
-              FROM e GROUP BY vec_id),
-    dots AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             {_DSUM.format(expr='a.v * b.v')} AS dot
-      FROM e a JOIN e b USING (pos) WHERE a.vec_id < b.vec_id
-      GROUP BY 1, 2),
-    exact AS (
-      SELECT id_a, id_b FROM dots
-      JOIN norms na ON na.vec_id = id_a
-      JOIN norms nb ON nb.vec_id = id_b
-      WHERE ROUND(dot / (SQRT(na.n2) * SQRT(nb.n2)), 6) >= {_E21_TAU}),
+    {_sql_pairs("exact", _E21_TAU)},
     {_bucket_cte()},
     bucketed AS (
       SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -1311,13 +1131,6 @@ def e22_semdedup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engines.",
 )
 def e23_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.similarity.ann import (
-        cosine_neardup_pairs,
-        sign_lsh_buckets,
-    )
-
     emb = tbl(spark, sf_dir, "embeddings")
     exact = cosine_neardup_pairs(emb, threshold=_E21_TAU).select("id_a", "id_b")
     buckets = sign_lsh_buckets(emb, planes=8)
@@ -1343,7 +1156,7 @@ def e23_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- DataFrame-native Lloyd k-means, bit-exact across engines (new in r6) ----
+# --- DataFrame-native Lloyd k-means, bit-exact across engines ----------------
 _E24_K = 8
 _E24_ROUNDS = 2
 
@@ -1405,7 +1218,7 @@ def e24_lloyd_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lloyd_fit(emb, k=_E24_K, rounds=_E24_ROUNDS)
 
 
-# --- MMR diversity re-rank over int8 codes (new in r6) -----------------------
+# --- MMR diversity re-rank over int8 codes -----------------------------------
 _E25_POOL = 20
 _E25_K = 8
 
@@ -1479,24 +1292,14 @@ def e25_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_rerank(emb, query_id=0, pool=_E25_POOL, k=_E25_K)
 
 
-# --- int8 retrieval-pool recall audit (new in r6) ----------------------------
+# --- int8 retrieval-pool recall audit ----------------------------------------
 @query(
     "e26_int8_pool_recall",
     oracle=f"""
     WITH {_LONG},
-    qv AS (SELECT pos, v AS qval FROM e WHERE vec_id = 0),
-    comps AS (
-      SELECT e.vec_id,
-             {_DSUM.format(expr='v * qval')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qval * qval')} AS q2
-      FROM e JOIN qv USING (pos) WHERE vec_id <> 0
-      GROUP BY e.vec_id),
-    exact20 AS (SELECT vec_id FROM comps
-                ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id
-                LIMIT 20),
-    amax AS (SELECT pos, greatest(MAX(abs(v)), 1e-30) AS amax
-             FROM e GROUP BY pos),
+    {_sql_query(0)},
+    {_sql_knn("exact20", 20, 0)},
+    {_AMAX},
     cd AS (SELECT vec_id, e.pos,
                   CAST(floor(v * 127.0 / amax + 0.5) AS BIGINT) AS code
            FROM e JOIN amax USING (pos)),
@@ -1526,9 +1329,6 @@ def e25_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frames.",
 )
 def e26_int8_pool_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.similarity.ann import brute_force_knn
     from goodreads_pyspark_spark.similarity.mmr import int8_relevance_pool
 
     emb = tbl(spark, sf_dir, "embeddings")
@@ -1548,53 +1348,25 @@ def e26_int8_pool_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ============================ round-6 additions ===============================
-
-# --- matryoshka dimension sweep (new in r6) -----------------------------------
+# --- matryoshka dimension sweep ----------------------------------------------
 _E27_DIMS = (8, 16, 32, 48, 64)
 _E27_K = 10
 
 
 def _e27_oracle() -> str:
-    blocks = []
-    for d in _E27_DIMS:
-        blocks.append(f"""
-    SELECT CAST({d} AS INTEGER) AS n_dims, CAST({_E27_K} AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM (
-              SELECT vec_id FROM (
-                SELECT vec_id,
-                       {_DSUM.format(expr='v * qv')} AS dot,
-                       {_DSUM.format(expr='v * v')} AS n2,
-                       {_DSUM.format(expr='qv * qv')} AS q2
-                FROM e JOIN q USING (pos)
-                WHERE vec_id <> 0 AND pos <= {d} GROUP BY vec_id)
-              ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id
-              LIMIT {_E27_K}) t JOIN exact USING (vec_id)) AS BIGINT) AS n_hits,
-           CAST((SELECT COUNT(*) FROM (
-              SELECT vec_id FROM (
-                SELECT vec_id,
-                       {_DSUM.format(expr='v * qv')} AS dot,
-                       {_DSUM.format(expr='v * v')} AS n2,
-                       {_DSUM.format(expr='qv * qv')} AS q2
-                FROM e JOIN q USING (pos)
-                WHERE vec_id <> 0 AND pos <= {d} GROUP BY vec_id)
-              ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id
-              LIMIT {_E27_K}) t JOIN exact USING (vec_id)) AS DOUBLE)
-             / {_E27_K} AS recall""")
-    union = "\n    UNION ALL".join(blocks)
+    prefixes = ",\n    ".join(
+        _sql_knn(f"t{d}", _E27_K, 0, where=f"pos <= {d}") for d in _E27_DIMS
+    )
+    tagged = " UNION ALL ".join(
+        f"SELECT {d} AS n_dims, vec_id FROM t{d}" for d in _E27_DIMS
+    )
     return f"""
     WITH {_LONG},
-    q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
-    exact AS MATERIALIZED (
-      SELECT vec_id FROM (
-        SELECT vec_id,
-               {_DSUM.format(expr='v * qv')} AS dot,
-               {_DSUM.format(expr='v * v')} AS n2,
-               {_DSUM.format(expr='qv * qv')} AS q2
-        FROM e JOIN q USING (pos) WHERE vec_id <> 0 GROUP BY vec_id)
-      ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC, vec_id
-      LIMIT {_E27_K})
-    {union}
+    {_sql_query(0)},
+    {_sql_knn("exact", _E27_K, 0)},
+    {prefixes},
+    approx AS ({tagged})
+    {_sql_recall("approx", _E27_K, by="n_dims", grid=_sql_values("n_dims", _E27_DIMS))}
     """
 
 
@@ -1615,12 +1387,10 @@ def _e27_oracle() -> str:
     "sf because it is one broadcast-query pass.",
 )
 def e27_matryoshka_dim_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from goodreads_pyspark_spark.functions.vectors import explode_vector
     from goodreads_pyspark_spark.operators.partitioning import fan_out
+    from goodreads_pyspark_spark.similarity.ann import _ACC
 
-    _ACC = "decimal(38,12)"
     emb = fan_out(tbl(spark, sf_dir, "embeddings"))
     e = explode_vector(emb, "vec_id").withColumn("pos", F.col("pos") + 1)
     q = e.filter(F.col("vec_id") == 0).select(
@@ -1639,45 +1409,40 @@ def e27_matryoshka_dim_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             psum(F.col("v") * F.col("v"), d).alias(f"n2_{d}"),
             psum(F.col("qv") * F.col("qv"), d).alias(f"q2_{d}"),
         ]
-    comps = joined.groupBy("vec_id").agg(*aggs).cache()
+    with _released() as caches:
+        comps = joined.groupBy("vec_id").agg(*aggs).cache()
+        caches.append(comps)
 
-    def topk(d):
-        cos = F.round(
-            F.col(f"dot{d}")
-            / (F.sqrt(F.col(f"n2_{d}")) * F.sqrt(F.col(f"q2_{d}"))),
-            6,
-        )
-        return (
-            comps.select("vec_id", cos.alias("cosine"))
-            .orderBy(F.col("cosine").desc(), "vec_id")
-            .limit(_E27_K)
-            .select("vec_id")
-        )
+        def topk(d):
+            cos = F.round(
+                F.col(f"dot{d}")
+                / (F.sqrt(F.col(f"n2_{d}")) * F.sqrt(F.col(f"q2_{d}"))),
+                6,
+            )
+            return (
+                comps.select("vec_id", cos.alias("cosine"))
+                .orderBy(F.col("cosine").desc(), "vec_id")
+                .limit(_E27_K)
+                .select("vec_id")
+            )
 
-    exact = topk(64).cache()
-    out = None
-    for d in _E27_DIMS:
-        hits = topk(d).join(exact, "vec_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_hits")
+        exact = topk(64).cache()
+        caches.append(exact)
+        approx = reduce(
+            DataFrame.unionByName,
+            [topk(d).select(F.lit(d).alias("n_dims"), "vec_id") for d in _E27_DIMS],
         )
-        row = hits.select(
-            F.lit(d).cast("int").alias("n_dims"),
-            F.lit(_E27_K).cast("int").alias("k"),
-            "n_hits",
-            (F.col("n_hits").cast("double") / _E27_K).alias("recall"),
+        dims = spark.createDataFrame([(d,) for d in _E27_DIMS], "n_dims int")
+        # The 5-row sweep result is the only consumer of the cached kernel
+        # aggregate and exact baseline, which are released once it is
+        # checkpointed.
+        return _materialize(
+            "e27_matryoshka_dim_sweep",
+            recall_at_k(approx, exact, _E27_K, by=("n_dims",), grid=dims),
         )
-        out = row if out is None else out.unionByName(row)
-    # The 5-row sweep result is the only consumer of the cached kernel
-    # aggregate and exact baseline: materialize it eagerly, then release
-    # both so suite runs don't pin corpus-sized blocks across queries.
-    PRE_MATERIALIZATION["e27_matryoshka_dim_sweep"] = out
-    result = out.localCheckpoint(eager=True)
-    comps.unpersist()
-    exact.unpersist()
-    return result
 
 
-# --- contrastive-pair mining (new in r7) --------------------------------------
+# --- contrastive-pair mining -------------------------------------------------
 #: Anchor batch size and per-role depth.
 _E28_ANCHORS = 8
 _E28_K = 3
@@ -1687,14 +1452,8 @@ _E28_K = 3
     "e28_hard_negative_mining",
     oracle=f"""
     WITH {_LONG},
-    q AS (SELECT vec_id AS qid, pos, v AS qv FROM e WHERE vec_id < {_E28_ANCHORS}),
-    comps AS (
-      SELECT qid, vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos) WHERE vec_id <> qid
-      GROUP BY qid, vec_id),
+    {_sql_query_block(_E28_ANCHORS)},
+    {_sql_cosines("comps")},
     lab AS (SELECT doc_id AS vec_id, lang FROM documents),
     scored AS (
       SELECT c.qid, c.vec_id,
@@ -1723,9 +1482,6 @@ _E28_K = 3
     "vec_id tie-break (the e-series discipline).",
 )
 def e28_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from goodreads_pyspark_spark.similarity.ann import _ACC, _long_form
 
     emb = tbl(spark, sf_dir, "embeddings")
@@ -1773,7 +1529,7 @@ def e28_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- incremental IVF index maintenance (new in r7) -----------------------------
+# --- incremental IVF index maintenance ---------------------------------------
 #: Batch membership: every vec_id ending in 7 arrives later.
 _E29_MOD, _E29_REM = 10, 7
 
@@ -1782,22 +1538,7 @@ _E29_MOD, _E29_REM = 10, 7
     "e29_ivf_incremental_add",
     oracle=f"""
     WITH {_LONG},
-    cents AS (SELECT CAST(vec_id AS INTEGER) AS cid, pos, v AS cval
-              FROM e WHERE vec_id < 9 AND vec_id % {_E29_MOD} <> {_E29_REM}),
-    scored AS (
-      SELECT e.vec_id, c.cid,
-             {_DSUM.format(expr='v * cval')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='cval * cval')} AS c2
-      FROM e JOIN cents c USING (pos)
-      GROUP BY e.vec_id, c.cid),
-    best AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY dot / (SQRT(n2) * SQRT(c2)) DESC, cid) AS rn
-        FROM scored) WHERE rn = 1),
+    {_sql_ivf(f"vec_id < 9 AND vec_id % {_E29_MOD} <> {_E29_REM}")},
     tagged AS (
       SELECT cid, vec_id % {_E29_MOD} = {_E29_REM} AS is_new FROM best),
     cells AS (
@@ -1817,43 +1558,19 @@ _E29_MOD, _E29_REM = 10, 7
     "growth ledger (base size, additions, new share) that index "
     "maintenance decisions — rebalance, split, retrain — read. "
     "Assignment ties break to the smallest cell id in BOTH engines "
-    "(min over (−cosine, cid) structs == the oracle's ROW_NUMBER "
-    "order). Scale shape: the batch assignment is one pass over the "
+    "(similarity/ivf.py ivf_assign's window order == the oracle's "
+    "ROW_NUMBER order). Scale shape: the batch assignment is one pass over the "
     "BATCH with the k×d centroid table broadcast (the base is never "
     "rescanned in production — here the base pass exists only to "
     "report the ledger's denominators); cosines are decimal-exact "
     "component sums, so cell routing is bit-reproducible.",
 )
 def e29_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    from goodreads_pyspark_spark.similarity.ivf import ivf_assign, sampled_centroids
 
-    from goodreads_pyspark_spark.functions.vectors import explode_vector
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    _ACC = "decimal(38,12)"
-    emb = fan_out(tbl(spark, sf_dir, "embeddings"))
-    e = explode_vector(emb, "vec_id")
-    cents = e.filter(
-        (F.col("vec_id") < 9) & (F.col("vec_id") % _E29_MOD != _E29_REM)
-    ).select(F.col("vec_id").cast("int").alias("cid"), "pos", F.col("v").alias("cval"))
-    scored = (
-        e.join(F.broadcast(cents), "pos")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum((F.col("v") * F.col("cval")).cast(_ACC)).cast("double").alias("dot"),
-            F.sum((F.col("v") * F.col("v")).cast(_ACC)).cast("double").alias("n2"),
-            F.sum((F.col("cval") * F.col("cval")).cast(_ACC))
-            .cast("double")
-            .alias("c2"),
-        )
-    )
-    cos = F.col("dot") / (F.sqrt("n2") * F.sqrt("c2"))
-    best = (
-        scored.select("vec_id", F.struct((-cos).alias("nc"), "cid").alias("s"))
-        .groupBy("vec_id")
-        .agg(F.min("s").alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cid"))
-    )
+    emb = tbl(spark, sf_dir, "embeddings")
+    base = emb.filter(F.col("vec_id") % _E29_MOD != _E29_REM)
+    best = ivf_assign(emb, sampled_centroids(base, k=9))
     tagged = best.select(
         "cid", (F.col("vec_id") % _E29_MOD == _E29_REM).alias("is_new")
     )
@@ -1876,13 +1593,12 @@ def e29_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- embedding outlier pruning (new in r9) -----------------------------------
+# --- embedding outlier pruning -----------------------------------------------
 @query(
     "e30_embedding_outliers",
     oracle=f"""
     WITH {_LONG},
-    amax AS (SELECT pos, greatest(MAX(abs(v)), 1e-30) AS amax
-             FROM e GROUP BY pos),
+    {_AMAX},
     q AS (SELECT e.vec_id, e.pos,
                  CAST(floor(e.v * 127.0 / amax + 0.5) AS BIGINT) AS code
           FROM e JOIN amax USING (pos)),
@@ -1924,28 +1640,10 @@ def e29_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcasts.",
 )
 def e30_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    from goodreads_pyspark_spark.similarity.quantize import int8_codes_long
 
-    from goodreads_pyspark_spark.functions.vectors import explode_vector
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    emb = fan_out(tbl(spark, sf_dir, "embeddings"))
-    e = explode_vector(emb, "vec_id").withColumn("pos", F.col("pos") + 1)
-    amax = e.groupBy("pos").agg(
-        F.greatest(F.max(F.abs("v")), F.lit(1e-30)).alias("amax")
-    )
-    # one quantize pass feeds the centroid agg and the distance agg
-    q = (
-        e.join(amax, "pos")
-        .select(
-            "vec_id",
-            "pos",
-            F.floor(F.col("v") * 127.0 / F.col("amax") + 0.5)
-            .cast("bigint")
-            .alias("code"),
-        )
-        .cache()
-    )
+    emb = tbl(spark, sf_dir, "embeddings")
+    q = int8_codes_long(emb)
     lab = emb.select("vec_id", "label")
     cen = (
         q.join(lab, "vec_id")
@@ -1987,59 +1685,32 @@ def e30_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Matryoshka prefix-dim recall audit (new in r9) --------------------------
+# --- Matryoshka prefix-dim recall audit --------------------------------------
 _E31_DIMS = (8, 16, 32)
 _E31_Q = 8
 _E31_K = 10
 
 
-def _e31_topk_cte(tag: str, dim_filter: str) -> str:
-    """Top-k CTE pair over ``e`` restricted by ``dim_filter`` (the e09
-    kernel shape: decimal-exact comps, 6dp cosine, vec_id tiebreak)."""
-    return f"""
-    c_{tag} AS (
-      SELECT qid, vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos)
-      WHERE vec_id <> qid AND {dim_filter}
-      GROUP BY qid, vec_id),
-    t_{tag} AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY qid
-                 ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC,
-                          vec_id) AS rnk
-        FROM c_{tag})
-      WHERE rnk <= {_E31_K})"""
-
-
 def _e31_oracle() -> str:
-    ctes = ",".join(
-        [_e31_topk_cte("full", "TRUE")]
-        + [_e31_topk_cte(f"p{d}", f"pos <= {d}") for d in _E31_DIMS]
+    prefixes = ",\n    ".join(
+        _sql_knn(f"t_p{d}", _E31_K, where=f"pos <= {d}") for d in _E31_DIMS
     )
-    hit_blocks = "\n      UNION ALL\n".join(
-        f"""      SELECT qid, {d} AS prefix_dim, COUNT(*) AS hits
-      FROM t_p{d} JOIN t_full USING (qid, vec_id) GROUP BY qid"""
-        for d in _E31_DIMS
+    tagged = " UNION ALL ".join(
+        f"SELECT qid, {d} AS prefix_dim, vec_id FROM t_p{d}" for d in _E31_DIMS
+    )
+    recall = _sql_recall(
+        "approx", _E31_K, by="qid, prefix_dim", grid="grid", exact="t_full",
+        on="qid, vec_id",
     )
     return f"""
     WITH {_LONG},
-    q AS (SELECT vec_id AS qid, pos, v AS qv FROM e WHERE vec_id < {_E31_Q}),
-    {ctes},
-    hits AS (
-{hit_blocks}),
-    grid AS (SELECT DISTINCT qid, d.prefix_dim
-             FROM q CROSS JOIN (VALUES {", ".join(f"({d})" for d in _E31_DIMS)})
-                  AS d(prefix_dim))
-    SELECT g.qid, CAST(g.prefix_dim AS INTEGER) AS prefix_dim,
-           CAST(COALESCE(h.hits, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(h.hits, 0) AS DOUBLE) / {_E31_K} AS recall
-    FROM grid g LEFT JOIN hits h
-      ON h.qid = g.qid AND h.prefix_dim = g.prefix_dim
+    {_sql_query_block(_E31_Q)},
+    {_sql_knn("t_full", _E31_K)},
+    {prefixes},
+    approx AS ({tagged}),
+    grid AS (SELECT DISTINCT qid, prefix_dim
+             FROM q CROSS JOIN {_sql_values("prefix_dim", _E31_DIMS)})
+    SELECT * EXCLUDE (k) FROM ({recall})
     """
 
 
@@ -2062,48 +1733,48 @@ def _e31_oracle() -> str:
     "audit discipline, extended across the dim axis).",
 )
 def e31_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from goodreads_pyspark_spark.similarity.ann import batch_knn
 
     emb = tbl(spark, sf_dir, "embeddings")
     full = batch_knn(emb, n_queries=_E31_Q, k=_E31_K).select("qid", "vec_id")
-    grids = []
-    for d in _E31_DIMS:
-        pref = emb.select(
-            "vec_id", F.slice("embedding", 1, d).alias("embedding")
-        )
-        topd = batch_knn(pref, n_queries=_E31_Q, k=_E31_K).select(
-            "qid", "vec_id"
-        )
-        # both sides of the overlap are Q*k rows (80) by construction —
-        # broadcast hints are constant-bounded, never corpus-sized
-        hits = (
-            topd.join(F.broadcast(full), ["qid", "vec_id"])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("hits"))
-        )
-        qids = full.select("qid").distinct()
-        grids.append(
-            qids.join(F.broadcast(hits), "qid", "left").select(
-                "qid",
-                F.lit(d).cast("int").alias("prefix_dim"),
-                F.coalesce("hits", F.lit(0)).cast("bigint").alias("n_hits"),
-                (
-                    F.coalesce("hits", F.lit(0)).cast("double") / _E31_K
-                ).alias("recall"),
-            )
-        )
-    out = grids[0]
-    for g in grids[1:]:
-        out = out.unionByName(g)
-    return out
+    approx = reduce(
+        DataFrame.unionByName,
+        [
+            batch_knn(
+                emb.select("vec_id", F.slice("embedding", 1, d).alias("embedding")),
+                n_queries=_E31_Q,
+                k=_E31_K,
+            ).select("qid", F.lit(d).alias("prefix_dim"), "vec_id")
+            for d in _E31_DIMS
+        ],
+    )
+    return _query_grid_recall(spark, approx, full, "prefix_dim", _E31_DIMS, _E31_K)
 
 
-# --- quantization-bits recall sweep (new in r9) ------------------------------
+def _query_grid_recall(
+    spark: SparkSession,
+    approx: DataFrame,
+    full: DataFrame,
+    col: str,
+    values: tuple[int, ...],
+    k: int,
+) -> DataFrame:
+    """(qid, ``col``, n_hits, recall) for every query of ``full`` (qid,
+    vec_id) and every ``col`` value: recall@k of ``approx`` (qid, ``col``,
+    vec_id) against ``full``. All sides are Q*k rows or fewer, so the
+    broadcasts are constant-bounded, never corpus-sized."""
+    axis = spark.createDataFrame([(v,) for v in values], f"{col} int")
+    grid = full.select("qid").distinct().crossJoin(F.broadcast(axis))
+    return recall_at_k(approx, full, k, by=("qid", col), grid=grid).drop("k")
+
+
+# --- quantization-bits recall sweep ------------------------------------------
 _E32_LEVELS = ((8, 127), (4, 7))  # (bits, max symmetric code)
 _E32_Q = 8
 _E32_K = 10
+#: The 6dp cosine of BIGINT code dot products, best first.
+_BY_CODE_COS = """ROUND(CAST(dot AS DOUBLE)
+                       / (SQRT(CAST(n2 AS DOUBLE)) * SQRT(CAST(q2 AS DOUBLE))), 6) DESC"""
 
 
 def _e32_code_cte(tag: str, cmax: int) -> str:
@@ -2125,59 +1796,30 @@ def _e32_code_cte(tag: str, cmax: int) -> str:
              CAST(SUM(qcode * qcode) AS BIGINT) AS q2
       FROM c_{tag} JOIN qq_{tag} USING (pos)
       WHERE vec_id <> qid GROUP BY qid, vec_id),
-    t_{tag} AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY qid
-                 ORDER BY ROUND(CAST(dot AS DOUBLE)
-                                / (SQRT(CAST(n2 AS DOUBLE))
-                                   * SQRT(CAST(q2 AS DOUBLE))), 6) DESC,
-                          vec_id) AS rn
-        FROM d_{tag} WHERE n2 > 0 AND q2 > 0)
-      WHERE rn <= {_E32_K})"""
+    {_sql_top(f"t_{tag}", f"d_{tag}", _BY_CODE_COS, _E32_K, "n2 > 0 AND q2 > 0", by="qid")}"""
 
 
 def _e32_oracle() -> str:
     code_ctes = ",".join(
         _e32_code_cte(f"b{bits}", cmax) for bits, cmax in _E32_LEVELS
     )
-    hit_blocks = "\n      UNION ALL\n".join(
-        f"""      SELECT qid, {bits} AS bits, COUNT(*) AS hits
-      FROM t_b{bits} JOIN t_full USING (qid, vec_id) GROUP BY qid"""
-        for bits, _ in _E32_LEVELS
+    tagged = " UNION ALL ".join(
+        f"SELECT qid, {bits} AS bits, vec_id FROM t_b{bits}" for bits, _ in _E32_LEVELS
+    )
+    bits = _sql_values("bits", [b for b, _ in _E32_LEVELS])
+    recall = _sql_recall(
+        "approx", _E32_K, by="qid, bits", grid="grid", exact="t_full",
+        on="qid, vec_id",
     )
     return f"""
     WITH {_LONG},
-    amax AS (SELECT pos, greatest(MAX(abs(v)), 1e-30) AS amax
-             FROM e GROUP BY pos),
-    q AS (SELECT vec_id AS qid, pos, v AS qv FROM e WHERE vec_id < {_E32_Q}),
-    cf AS (
-      SELECT qid, vec_id,
-             {_DSUM.format(expr='v * qv')} AS dot,
-             {_DSUM.format(expr='v * v')} AS n2,
-             {_DSUM.format(expr='qv * qv')} AS q2
-      FROM e JOIN q USING (pos) WHERE vec_id <> qid
-      GROUP BY qid, vec_id),
-    t_full AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY qid
-                 ORDER BY ROUND(dot / (SQRT(n2) * SQRT(q2)), 6) DESC,
-                          vec_id) AS rn
-        FROM cf)
-      WHERE rn <= {_E32_K}),
+    {_AMAX},
+    {_sql_query_block(_E32_Q)},
+    {_sql_knn("t_full", _E32_K)},
     {code_ctes},
-    hits AS (
-{hit_blocks}),
-    grid AS (SELECT DISTINCT qid, b.bits
-             FROM q CROSS JOIN (VALUES {", ".join(f"({b})" for b, _ in _E32_LEVELS)})
-                  AS b(bits))
-    SELECT g.qid, CAST(g.bits AS INTEGER) AS bits,
-           CAST(COALESCE(h.hits, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(h.hits, 0) AS DOUBLE) / {_E32_K} AS recall
-    FROM grid g LEFT JOIN hits h ON h.qid = g.qid AND h.bits = g.bits
+    approx AS ({tagged}),
+    grid AS (SELECT DISTINCT qid, bits FROM q CROSS JOIN {bits})
+    SELECT * EXCLUDE (k) FROM ({recall})
     """
 
 
@@ -2198,9 +1840,6 @@ def _e32_oracle() -> str:
     "pos-wise; per-query WindowGroupLimit cuts.",
 )
 def e32_quantization_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from goodreads_pyspark_spark.functions.vectors import explode_vector
     from goodreads_pyspark_spark.operators.partitioning import fan_out
     from goodreads_pyspark_spark.similarity.ann import batch_knn
@@ -2211,8 +1850,8 @@ def e32_quantization_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     amax = e.groupBy("pos").agg(
         F.greatest(F.max(F.abs("v")), F.lit(1e-30)).alias("amax")
     )
-    ea = e.join(amax, "pos").cache()  # one scale join feeds both bit widths
-    grids = []
+    ea = e.join(amax, "pos")
+    approx = []
     for bits, cmax in _E32_LEVELS:
         codes = ea.select(
             "vec_id",
@@ -2241,81 +1880,30 @@ def e32_quantization_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
             6,
         )
         w = Window.partitionBy("qid").orderBy(cos.desc(), F.col("vec_id"))
-        topb = (
+        approx.append(
             d.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= _E32_K)
-            .select("qid", "vec_id")
+            .select("qid", F.lit(bits).alias("bits"), "vec_id")
         )
-        hits = (
-            topb.join(F.broadcast(full), ["qid", "vec_id"])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("hits"))
-        )
-        qids = full.select("qid").distinct()
-        grids.append(
-            qids.join(F.broadcast(hits), "qid", "left").select(
-                "qid",
-                F.lit(bits).cast("int").alias("bits"),
-                F.coalesce("hits", F.lit(0)).cast("bigint").alias("n_hits"),
-                (F.coalesce("hits", F.lit(0)).cast("double") / _E32_K).alias(
-                    "recall"
-                ),
-            )
-        )
-    out = grids[0]
-    for g in grids[1:]:
-        out = out.unionByName(g)
-    return out
+    return _query_grid_recall(
+        spark,
+        reduce(DataFrame.unionByName, approx),
+        full,
+        "bits",
+        tuple(b for b, _ in _E32_LEVELS),
+        _E32_K,
+    )
 
 
-# --- residual IVF-PQ (IVFADC) search (new in r9) -------------------------------
+# --- residual IVF-PQ (IVFADC) search -----------------------------------------
 @query(
     "e33_ivfpq_residual_adc",
     oracle=f"""
     WITH {_LONG},
-    cc AS (SELECT vec_id AS ccid, pos, v AS cval FROM e WHERE vec_id < 8),
-    ad2 AS (SELECT e.vec_id, cc.ccid,
-                   {_DSUM.format(expr='(e.v - cc.cval) * (e.v - cc.cval)')}
-                     AS d2
-            FROM e JOIN cc USING (pos) GROUP BY e.vec_id, cc.ccid),
-    asg AS (SELECT vec_id, ccid FROM (
-              SELECT vec_id, ccid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY d2, ccid) AS rn
-              FROM ad2) WHERE rn = 1),
-    res AS (SELECT e.vec_id, a.ccid, e.pos, e.v - cc.cval AS r
-            FROM e JOIN asg a ON a.vec_id = e.vec_id
-            JOIN cc ON cc.ccid = a.ccid AND cc.pos = e.pos),
-    cw AS (SELECT vec_id AS cid, pos, r AS cwv FROM res WHERE vec_id < 16),
-    ed2 AS (SELECT res.vec_id, res.ccid, (res.pos - 1) // 16 AS sub, cw.cid,
-                   {_DSUM.format(expr='(res.r - cw.cwv) * (res.r - cw.cwv)')}
-                     AS d2
-            FROM res JOIN cw ON cw.pos = res.pos
-            GROUP BY res.vec_id, res.ccid, (res.pos - 1) // 16, cw.cid),
-    enc AS (SELECT vec_id, ccid, sub, cid FROM (
-              SELECT vec_id, ccid, sub, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                        ORDER BY d2, cid) AS rn
-              FROM ed2) WHERE rn = 1),
-    probe AS (SELECT ccid FROM ad2 WHERE vec_id = 3
-              ORDER BY d2, ccid LIMIT 2),
-    qr AS (SELECT p.ccid, e.pos, e.v - cc.cval AS qr
-           FROM e CROSS JOIN probe p
-           JOIN cc ON cc.ccid = p.ccid AND cc.pos = e.pos
-           WHERE e.vec_id = 3),
-    lut AS (SELECT qr.ccid, (qr.pos - 1) // 16 AS sub, cw.cid,
-                   SUM(CAST((qr.qr - cw.cwv) * (qr.qr - cw.cwv)
-                            AS DECIMAL(38,12))) AS lut_d2
-            FROM qr JOIN cw ON cw.pos = qr.pos
-            GROUP BY qr.ccid, (qr.pos - 1) // 16, cw.cid),
-    adc AS (SELECT enc.vec_id, enc.ccid,
-                   CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
-            FROM enc JOIN lut ON lut.ccid = enc.ccid
-                             AND lut.sub = enc.sub AND lut.cid = enc.cid
-            WHERE enc.vec_id <> 3
-            GROUP BY enc.vec_id, enc.ccid)
+    {_SQL_IVFPQ},
+    {_sql_ivfpq_search(3, 2)}
     SELECT vec_id, CAST(ccid AS INTEGER) AS cell, adc_d2
-    FROM adc ORDER BY adc_d2, vec_id LIMIT 10
+    FROM adc2 ORDER BY adc_d2, vec_id LIMIT 10
     """,
     doc="Residual-encoded IVF-PQ search — the full IVFADC structure "
     "(Jegou, Douze & Schmid 2011, public; FAISS IndexIVFPQ) that e06 "
@@ -2337,96 +1925,32 @@ def e33_ivfpq_residual_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.similarity.quantize import ivfpq_adc_topk
 
     emb = tbl(spark, sf_dir, "embeddings")
-    return ivfpq_adc_topk(
-        emb, query_id=3, k=10, nlist=8, nprobe=2, n_sub=4, sub_dim=16, ksub=16
-    )
+    with _released() as caches:
+        return _materialize(
+            "e33_ivfpq_residual_adc",
+            ivfpq_adc_topk(
+                emb, query_id=3, k=10, nlist=8, nprobe=2, n_sub=4, sub_dim=16,
+                ksub=16, cache_registry=caches,
+            ),
+        )
 
 
-# --- IVFADC recall audit (new in r9) -------------------------------------------
+# --- IVFADC recall audit -----------------------------------------------------
 @query(
     "e34_ivfpq_recall_audit",
     oracle=f"""
     WITH {_LONG},
-    cc AS (SELECT vec_id AS ccid, pos, v AS cval FROM e WHERE vec_id < 8),
-    ad2 AS (SELECT e.vec_id, cc.ccid,
-                   {_DSUM.format(expr='(e.v - cc.cval) * (e.v - cc.cval)')}
-                     AS d2
-            FROM e JOIN cc USING (pos) GROUP BY e.vec_id, cc.ccid),
-    asg AS (SELECT vec_id, ccid FROM (
-              SELECT vec_id, ccid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY d2, ccid) AS rn
-              FROM ad2) WHERE rn = 1),
-    res AS (SELECT e.vec_id, a.ccid, e.pos, e.v - cc.cval AS r
-            FROM e JOIN asg a ON a.vec_id = e.vec_id
-            JOIN cc ON cc.ccid = a.ccid AND cc.pos = e.pos),
-    cw AS (SELECT vec_id AS cid, pos, r AS cwv FROM res WHERE vec_id < 16),
-    ed2 AS (SELECT res.vec_id, res.ccid, (res.pos - 1) // 16 AS sub, cw.cid,
-                   {_DSUM.format(expr='(res.r - cw.cwv) * (res.r - cw.cwv)')}
-                     AS d2
-            FROM res JOIN cw ON cw.pos = res.pos
-            GROUP BY res.vec_id, res.ccid, (res.pos - 1) // 16, cw.cid),
-    enc AS (SELECT vec_id, ccid, sub, cid FROM (
-              SELECT vec_id, ccid, sub, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                        ORDER BY d2, cid) AS rn
-              FROM ed2) WHERE rn = 1),
-    probe AS (SELECT ccid FROM ad2 WHERE vec_id = 3
-              ORDER BY d2, ccid LIMIT 2),
-    qr AS (SELECT p.ccid, e.pos, e.v - cc.cval AS qr
-           FROM e CROSS JOIN probe p
-           JOIN cc ON cc.ccid = p.ccid AND cc.pos = e.pos
-           WHERE e.vec_id = 3),
-    lutr AS (SELECT qr.ccid, (qr.pos - 1) // 16 AS sub, cw.cid,
-                    SUM(CAST((qr.qr - cw.cwv) * (qr.qr - cw.cwv)
-                             AS DECIMAL(38,12))) AS lut_d2
-             FROM qr JOIN cw ON cw.pos = qr.pos
-             GROUP BY qr.ccid, (qr.pos - 1) // 16, cw.cid),
-    ivfpq AS (SELECT vec_id FROM (
-                SELECT enc.vec_id, CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
-                FROM enc JOIN lutr ON lutr.ccid = enc.ccid
-                                  AND lutr.sub = enc.sub
-                                  AND lutr.cid = enc.cid
-                WHERE enc.vec_id <> 3 GROUP BY enc.vec_id)
-              ORDER BY adc_d2, vec_id LIMIT 10),
-    fcw AS (SELECT vec_id AS cid, pos, v AS cval FROM e WHERE vec_id < 16),
-    fd2 AS (SELECT e.vec_id, (e.pos - 1) // 16 AS sub, fcw.cid,
-                   {_DSUM.format(expr='(e.v - fcw.cval) * (e.v - fcw.cval)')}
-                     AS d2
-            FROM e JOIN fcw USING (pos)
-            GROUP BY e.vec_id, (e.pos - 1) // 16, fcw.cid),
-    fenc AS (SELECT vec_id, sub, cid FROM (
-               SELECT vec_id, sub, cid,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                         ORDER BY d2, cid) AS rn
-               FROM fd2) WHERE rn = 1),
-    fq AS (SELECT pos, v AS qv FROM e WHERE vec_id = 3),
-    flut AS (SELECT (fq.pos - 1) // 16 AS sub, fcw.cid,
-                    SUM(CAST((fq.qv - fcw.cval) * (fq.qv - fcw.cval)
-                             AS DECIMAL(38,12))) AS lut_d2
-             FROM fq JOIN fcw ON fcw.pos = fq.pos
-             GROUP BY (fq.pos - 1) // 16, fcw.cid),
-    flat AS (SELECT vec_id FROM (
-               SELECT fenc.vec_id, CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
-               FROM fenc JOIN flut USING (sub, cid)
-               WHERE fenc.vec_id <> 3 GROUP BY fenc.vec_id)
-             ORDER BY adc_d2, vec_id LIMIT 10),
-    exact AS (SELECT vec_id FROM (
-                SELECT e.vec_id,
-                       {_DSUM.format(expr='(e.v - fq.qv) * (e.v - fq.qv)')}
-                         AS d2
-                FROM e JOIN fq USING (pos) WHERE e.vec_id <> 3
-                GROUP BY e.vec_id)
-              ORDER BY d2, vec_id LIMIT 10)
-    SELECT CAST(10 AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM ivfpq JOIN exact USING (vec_id))
-                AS BIGINT) AS ivfpq_hits,
-           CAST((SELECT COUNT(*) FROM ivfpq JOIN exact USING (vec_id))
-                AS DOUBLE) / 10 AS ivfpq_recall,
-           CAST((SELECT COUNT(*) FROM flat JOIN exact USING (vec_id))
-                AS BIGINT) AS flatpq_hits,
-           CAST((SELECT COUNT(*) FROM flat JOIN exact USING (vec_id))
-                AS DOUBLE) / 10 AS flatpq_recall
+    {_SQL_IVFPQ},
+    {_sql_ivfpq_search(3, 2)},
+    {_sql_top("ivfpq", "adc2", "adc_d2", 10)},
+    {_sql_query(3)},
+    {_sql_pq(3)},
+    {_sql_top("flat", "adc", "adc_d2", 10)},
+    {_sql_l2("l2", 3)},
+    {_sql_top("exact", "l2", "d2", 10)}
+    SELECT a.k, a.n_hits AS ivfpq_hits, a.recall AS ivfpq_recall,
+           b.n_hits AS flatpq_hits, b.recall AS flatpq_recall
+    FROM ({_sql_recall("ivfpq", 10)}) a, ({_sql_recall("flat", 10)}) b
     """,
     doc="IVFADC quality audit: recall@10 of the residual IVF-PQ search "
     "(e33, nprobe=2 of 8) AND of flat-PQ ADC (the e14 kernel, same "
@@ -2440,121 +1964,55 @@ def e33_ivfpq_residual_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "already-audited kernels + two 10-row joins.",
 )
 def e34_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from goodreads_pyspark_spark.similarity.ann import _ACC, _long_form
     from goodreads_pyspark_spark.similarity.quantize import (
+        exact_l2_knn,
         ivfpq_adc_topk,
         pq_adc_topk,
     )
 
     emb = tbl(spark, sf_dir, "embeddings")
-    ivfpq = ivfpq_adc_topk(emb, query_id=3, k=10).select("vec_id")
-    flat = pq_adc_topk(emb, query_id=3, k=10).select("vec_id")
-
-    e = _long_form(emb, "vec_id", "embedding")
-    q = e.filter(F.col("vec_id") == 3).select("pos", F.col("v").alias("qv"))
-    exact = (
-        e.filter(F.col("vec_id") != 3)
-        .join(F.broadcast(q), "pos")
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                ((F.col("v") - F.col("qv")) * (F.col("v") - F.col("qv"))).cast(
-                    _ACC
+    exact = exact_l2_knn(emb, query_id=3, k=10).select("vec_id")
+    flat = recall_at_k(pq_adc_topk(emb, query_id=3, k=10).select("vec_id"), exact, 10)
+    with _released() as caches:
+        ivfpq = ivfpq_adc_topk(emb, query_id=3, k=10, cache_registry=caches)
+        out = recall_at_k(ivfpq.select("vec_id"), exact, 10).crossJoin(
+            F.broadcast(
+                flat.select(
+                    F.col("n_hits").alias("flatpq_hits"),
+                    F.col("recall").alias("flatpq_recall"),
                 )
             )
-            .cast("double")
-            .alias("d2")
         )
-        .orderBy(F.col("d2").asc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id")
-    )
-    exact = exact.cache()  # consumed by both recall joins
-    h1 = ivfpq.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("ivfpq_hits")
-    )
-    h2 = flat.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("flatpq_hits")
-    )
-    return (
-        h1.crossJoin(F.broadcast(h2))
-        .select(
-            F.lit(10).cast("int").alias("k"),
-            "ivfpq_hits",
-            (F.col("ivfpq_hits").cast("double") / 10).alias("ivfpq_recall"),
-            "flatpq_hits",
-            (F.col("flatpq_hits").cast("double") / 10).alias("flatpq_recall"),
+        return _materialize(
+            "e34_ivfpq_recall_audit",
+            out.select(
+                "k",
+                F.col("n_hits").alias("ivfpq_hits"),
+                F.col("recall").alias("ivfpq_recall"),
+                "flatpq_hits",
+                "flatpq_recall",
+            ),
         )
-    )
 
 
-# --- IVFADC nprobe recall curve (new in r9) -------------------------------------
+# --- IVFADC nprobe recall curve ----------------------------------------------
 def _e35_oracle(probes: tuple[int, ...] = (1, 4, 8), k: int = 10) -> str:
-    shared = f"""
+    searches = ",\n    ".join(_sql_ivfpq_search(3, p) for p in probes)
+    tops = ",\n    ".join(_sql_top(f"top{p}", f"adc{p}", "adc_d2", k) for p in probes)
+    tagged = " UNION ALL ".join(
+        f"SELECT {p} AS nprobe, vec_id FROM top{p}" for p in probes
+    )
+    return f"""
     WITH {_LONG},
-    cc AS (SELECT vec_id AS ccid, pos, v AS cval FROM e WHERE vec_id < 8),
-    ad2 AS (SELECT e.vec_id, cc.ccid,
-                   {_DSUM.format(expr='(e.v - cc.cval) * (e.v - cc.cval)')}
-                     AS d2
-            FROM e JOIN cc USING (pos) GROUP BY e.vec_id, cc.ccid),
-    asg AS (SELECT vec_id, ccid FROM (
-              SELECT vec_id, ccid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY d2, ccid) AS rn
-              FROM ad2) WHERE rn = 1),
-    res AS (SELECT e.vec_id, a.ccid, e.pos, e.v - cc.cval AS r
-            FROM e JOIN asg a ON a.vec_id = e.vec_id
-            JOIN cc ON cc.ccid = a.ccid AND cc.pos = e.pos),
-    cw AS (SELECT vec_id AS cid, pos, r AS cwv FROM res WHERE vec_id < 16),
-    ed2 AS (SELECT res.vec_id, res.ccid, (res.pos - 1) // 16 AS sub, cw.cid,
-                   {_DSUM.format(expr='(res.r - cw.cwv) * (res.r - cw.cwv)')}
-                     AS d2
-            FROM res JOIN cw ON cw.pos = res.pos
-            GROUP BY res.vec_id, res.ccid, (res.pos - 1) // 16, cw.cid),
-    enc AS (SELECT vec_id, ccid, sub, cid FROM (
-              SELECT vec_id, ccid, sub, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                        ORDER BY d2, cid) AS rn
-              FROM ed2) WHERE rn = 1),
-    fq AS (SELECT pos, v AS qv FROM e WHERE vec_id = 3),
-    exact AS (SELECT vec_id FROM (
-                SELECT e.vec_id,
-                       {_DSUM.format(expr='(e.v - fq.qv) * (e.v - fq.qv)')}
-                         AS d2
-                FROM e JOIN fq USING (pos) WHERE e.vec_id <> 3
-                GROUP BY e.vec_id)
-              ORDER BY d2, vec_id LIMIT {k})"""
-    per = []
-    sel = []
-    for p in probes:
-        per.append(f""",
-    probe{p} AS (SELECT ccid FROM ad2 WHERE vec_id = 3
-                 ORDER BY d2, ccid LIMIT {p}),
-    qr{p} AS (SELECT pp.ccid, e.pos, e.v - cc.cval AS qr
-              FROM e CROSS JOIN probe{p} pp
-              JOIN cc ON cc.ccid = pp.ccid AND cc.pos = e.pos
-              WHERE e.vec_id = 3),
-    lut{p} AS (SELECT qr{p}.ccid, (qr{p}.pos - 1) // 16 AS sub, cw.cid,
-                      SUM(CAST((qr{p}.qr - cw.cwv) * (qr{p}.qr - cw.cwv)
-                               AS DECIMAL(38,12))) AS lut_d2
-               FROM qr{p} JOIN cw ON cw.pos = qr{p}.pos
-               GROUP BY qr{p}.ccid, (qr{p}.pos - 1) // 16, cw.cid),
-    top{p} AS (SELECT vec_id FROM (
-                 SELECT enc.vec_id, CAST(SUM(lut_d2) AS DOUBLE) AS adc_d2
-                 FROM enc JOIN lut{p} ON lut{p}.ccid = enc.ccid
-                                     AND lut{p}.sub = enc.sub
-                                     AND lut{p}.cid = enc.cid
-                 WHERE enc.vec_id <> 3 GROUP BY enc.vec_id)
-               ORDER BY adc_d2, vec_id LIMIT {k})""")
-        sel.append(f"""
-    SELECT CAST({p} AS INTEGER) AS nprobe, CAST({k} AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM top{p} JOIN exact USING (vec_id))
-                AS BIGINT) AS n_hits,
-           CAST((SELECT COUNT(*) FROM top{p} JOIN exact USING (vec_id))
-                AS DOUBLE) / {k} AS recall""")
-    return shared + "".join(per) + "\n    UNION ALL".join(sel)
+    {_SQL_IVFPQ},
+    {searches},
+    {tops},
+    {_sql_query(3)},
+    {_sql_l2("l2", 3)},
+    {_sql_top("exact", "l2", "d2", k)},
+    approx AS ({tagged})
+    {_sql_recall("approx", k, by="nprobe", grid=_sql_values("nprobe", probes))}
+    """
 
 
 @query(
@@ -2577,7 +2035,11 @@ def e35_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.similarity.quantize import ivfpq_recall_curve
 
     emb = tbl(spark, sf_dir, "embeddings")
-    return ivfpq_recall_curve(
-        emb, query_id=3, k=10, probes=(1, 4, 8), nlist=8,
-        n_sub=4, sub_dim=16, ksub=16,
-    )
+    with _released() as caches:
+        return _materialize(
+            "e35_ivfpq_nprobe_curve",
+            ivfpq_recall_curve(
+                emb, query_id=3, k=10, probes=(1, 4, 8), nlist=8,
+                n_sub=4, sub_dim=16, ksub=16, cache_registry=caches,
+            ),
+        )

@@ -1056,8 +1056,8 @@ def io16_index_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from goodreads_pyspark_spark.similarity.ann import brute_force_knn
     from goodreads_pyspark_spark.similarity.ivf import (
-        _dsum,
         ivf_assign,
+        query_cell_ranks,
         sampled_centroids,
     )
 
@@ -1091,24 +1091,7 @@ def io16_index_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         # staged-index search: probe the query's 2 nearest cells, rerank
         # the probed lists exactly (ivf_knn's shape, but candidates come
         # from the STAGED assignment, not a recomputed one)
-        qe = (
-            emb.filter(F.col("vec_id") == 1)
-            .select(F.posexplode("embedding").alias("pos", "v"))
-            .withColumn("v", F.col("v").cast("double"))
-        )
-        probes = (
-            qe.join(F.broadcast(staged_cents), "pos")
-            .groupBy("cid")
-            .agg(
-                _dsum(F.col("v") * F.col("cval")).alias("dot"),
-                _dsum(F.col("v") * F.col("v")).alias("n2"),
-                _dsum(F.col("cval") * F.col("cval")).alias("c2"),
-            )
-            .withColumn("cos", F.col("dot") / (F.sqrt("n2") * F.sqrt("c2")))
-            .orderBy(F.col("cos").desc(), F.col("cid"))
-            .limit(2)
-            .select("cid")
-        )
+        probes = query_cell_ranks(emb, 1, staged_cents).filter(F.col("rn") <= 2)
         cand_ids = (
             staged.join(F.broadcast(probes), "cid")
             .select("vec_id")

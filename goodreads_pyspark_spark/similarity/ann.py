@@ -207,7 +207,7 @@ def cosine_neardup_pairs(
     dbl = fan_out(df).select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    ).cache()
+    )
     norms = dbl.select(
         F.col(id_col), _dot_decimal(F.col("vec"), F.col("vec")).alias("n2")
     )
@@ -447,4 +447,37 @@ def cosine_range_search(
         comps.select(F.col(id_col), cos.alias("cosine"))
         .filter(F.col("cosine") >= min_cosine)
         .orderBy(F.col("cosine").desc(), F.col(id_col))
+    )
+
+
+def recall_at_k(
+    approx: DataFrame,
+    exact: DataFrame,
+    k: int,
+    by: tuple[str, ...] = (),
+    grid: DataFrame | None = None,
+) -> DataFrame:
+    """The recall audit's gate rows: (``by``..., k, n_hits, recall).
+
+    Per ``by`` group of ``approx``, ``n_hits`` counts its rows found in
+    ``exact`` — joined on all of ``exact``'s columns, e.g. ``vec_id``, or
+    (``qid``, ``vec_id``) for a query block — and ``recall`` is
+    ``n_hits / k``. With ``grid`` (frame of the ``by`` columns) there is
+    one row per grid row, 0 hits where a group matched nothing; without
+    ``by`` it is the single global row. Both sides are top-k sized, so
+    ``exact`` broadcasts."""
+    hits = (
+        approx.join(F.broadcast(exact), exact.columns)
+        .groupBy(*by)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
+    )
+    if grid is not None:
+        hits = grid.join(F.broadcast(hits), list(by), "left").withColumn(
+            "n_hits", F.coalesce("n_hits", F.lit(0).cast("bigint"))
+        )
+    return hits.select(
+        *by,
+        F.lit(k).cast("int").alias("k"),
+        "n_hits",
+        (F.col("n_hits").cast("double") / k).alias("recall"),
     )

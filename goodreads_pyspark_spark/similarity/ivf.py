@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from goodreads_pyspark_spark.functions.vectors import explode_vector
 from goodreads_pyspark_spark.operators.partitioning import fan_out
+from goodreads_pyspark_spark.operators.relational import bounded_rank
 from goodreads_pyspark_spark.similarity.ann import brute_force_knn
 
 #: Decimal-exact component sum: accumulation order (Spark partial/final
@@ -123,6 +125,33 @@ def ivf_assign(
     )
 
 
+def query_cell_ranks(
+    df: DataFrame,
+    query_id: int,
+    centroids_long: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(cid, rn): every cell ranked for ``query_id``'s vector by the
+    unrounded cosine of its centroid (ties -> lowest cid), the scoring
+    ``ivf_assign`` uses. Probing ``nprobe`` lists keeps ``rn <= nprobe``;
+    the ranks of one query serve every probe depth."""
+    qe = explode_vector(df.filter(F.col(id_col) == query_id), id_col, vec_col)
+    scored = (
+        qe.join(F.broadcast(centroids_long), "pos")
+        .groupBy("cid")
+        .agg(
+            _dsum(F.col("v") * F.col("cval")).alias("dot"),
+            _dsum(F.col("v") * F.col("v")).alias("n2"),
+            _dsum(F.col("cval") * F.col("cval")).alias("c2"),
+        )
+        .select("cid", (F.col("dot") / (F.sqrt("n2") * F.sqrt("c2"))).alias("qcos"))
+    )
+    return bounded_rank(scored, [("qcos", "desc"), ("cid", "asc")], "rn").select(
+        "cid", "rn"
+    )
+
+
 def ivf_knn(
     df: DataFrame,
     query_id: int,
@@ -139,35 +168,18 @@ def ivf_knn(
         centroids_long = build_ivf_centroids(
             df, k=n_centroids, seed=seed, id_col=id_col, vec_col=vec_col
         )
-    centroids_long = centroids_long.cache()
-    assign = ivf_assign(df, centroids_long, id_col, vec_col).cache()
-
-    # the query's nprobe closest centroids (same scoring as assignment)
-    q = df.filter(F.col(id_col) == query_id)
-    qe = q.select(F.posexplode(vec_col).alias("pos", "v")).withColumn(
-        "v", F.col("v").cast("double")
-    )
-    q_scored = (
-        qe.join(F.broadcast(centroids_long), "pos")
-        .groupBy("cid")
-        .agg(
-            _dsum(F.col("v") * F.col("cval")).alias("dot"),
-            _dsum(F.col("v") * F.col("v")).alias("n2"),
-            _dsum(F.col("cval") * F.col("cval")).alias("c2"),
-        )
-        .withColumn("cos", F.col("dot") / (F.sqrt("n2") * F.sqrt("c2")))
-        .orderBy(F.col("cos").desc(), F.col("cid"))
-        .limit(nprobe)
-        .select("cid")
+    assign = ivf_assign(df, centroids_long, id_col, vec_col)
+    probes = query_cell_ranks(df, query_id, centroids_long, id_col, vec_col).filter(
+        F.col("rn") <= nprobe
     )
     # Dedup on ids BEFORE rejoining the vectors: distinct() over full rows
     # would shuffle every embedding array; ids are 8 bytes. The query's own
     # id is added explicitly — its cluster may not be among the probed
     # lists, but the rerank needs the query vector present.
     cand_ids = (
-        assign.join(F.broadcast(q_scored), "cid")
+        assign.join(F.broadcast(probes), "cid")
         .select(id_col)
-        .union(q.select(id_col))
+        .union(df.filter(F.col(id_col) == query_id).select(id_col))
         .distinct()
     )
     cand = df.join(cand_ids, id_col, "left_semi")

@@ -19,6 +19,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.operators.partitioning import fan_out
+from goodreads_pyspark_spark.operators.relational import bounded_rank
+from goodreads_pyspark_spark.similarity.ann import recall_at_k
+
+_ACC = "decimal(38,12)"
 
 
 def _require_geometry(
@@ -145,7 +149,6 @@ def pq_codes(
     decimal-exact sum of per-subspace squared distances (the
     reconstruction-error audit column).
     """
-    acc = "decimal(38,12)"
     best = pq_assignments(df, n_sub, sub_dim, ksub, id_col, vec_col)
     code = F.array_join(
         F.transform(
@@ -156,7 +159,7 @@ def pq_codes(
     )
     return best.groupBy(id_col).agg(
         code.alias("pq_code"),
-        F.sum(F.col("d2").cast(acc)).cast("double").alias("total_d2"),
+        F.sum(F.col("d2").cast(_ACC)).cast("double").alias("total_d2"),
     )
 
 
@@ -193,7 +196,6 @@ def pq_assignments(
     """
     from pyspark.sql import Window
 
-    acc = "decimal(38,12)"
     e = (
         fan_out(_require_geometry(df, n_sub, sub_dim, vec_col))
         .select(F.col(id_col), F.posexplode(vec_col).alias("pos", "v"))
@@ -206,7 +208,7 @@ def pq_assignments(
         .groupBy(id_col, "sub", "cid")
         .agg(
             F.sum(
-                ((F.col("v") - F.col("cval")) * (F.col("v") - F.col("cval"))).cast(acc)
+                ((F.col("v") - F.col("cval")) * (F.col("v") - F.col("cval"))).cast(_ACC)
             )
             .cast("double")
             .alias("d2")
@@ -217,6 +219,38 @@ def pq_assignments(
         d2.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
+    )
+
+
+def exact_l2_knn(
+    df: DataFrame,
+    query_id: int,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact L2 top-k of ``query_id``: (id, d2) for the ``k`` nearest other
+    vectors, ascending, id tiebreak — the baseline the PQ and IVFADC
+    recall audits price their rankings against. ``d2`` is a decimal-exact
+    sum of squared component differences, so the ranking is bit-identical
+    across engines."""
+    e = (
+        fan_out(df)
+        .select(F.col(id_col), F.posexplode(vec_col).alias("pos", "v"))
+        .withColumn("v", F.col("v").cast("double"))
+    )
+    q = e.filter(F.col(id_col) == query_id).select("pos", F.col("v").alias("qv"))
+    return (
+        e.filter(F.col(id_col) != query_id)
+        .join(F.broadcast(q), "pos")
+        .groupBy(id_col)
+        .agg(
+            F.sum(((F.col("v") - F.col("qv")) * (F.col("v") - F.col("qv"))).cast(_ACC))
+            .cast("double")
+            .alias("d2")
+        )
+        .orderBy(F.col("d2").asc(), F.col(id_col).asc())
+        .limit(k)
     )
 
 
@@ -247,7 +281,6 @@ def pq_adc_topk(
 
     Returns the k nearest non-query vectors as (id, adc_d2), ascending.
     """
-    acc = "decimal(38,12)"
     q = (
         df.filter(F.col(id_col) == query_id)
         .select(F.posexplode(vec_col).alias("pos", "qv"))
@@ -261,7 +294,7 @@ def pq_adc_topk(
         .agg(
             F.sum(
                 ((F.col("qv") - F.col("cval")) * (F.col("qv") - F.col("cval"))).cast(
-                    acc
+                    _ACC
                 )
             ).alias("lut_d2")
         )
@@ -288,6 +321,8 @@ def ivfpq_adc_topk(
     ksub: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Residual-encoded IVF-PQ search — the full IVFADC index structure
     (Jégou, Douze & Schmid 2011, "Product quantization for nearest
@@ -316,8 +351,14 @@ def ivfpq_adc_topk(
     (id, cell/sub, cid, distance) rows only; at query time the scan
     touches integer codes inside the probed cells — the candidate
     restriction is a semi-join on the assignment before any scoring.
+
+    The long form and the residuals are cached (a 10-pair A/B showed
+    they pay, CHANGES.md) and appended to ``cache_registry``: the caller
+    unpersists them once it has materialized the result.
     """
-    parts = _ivfpq_parts(df, nlist, n_sub, sub_dim, ksub, id_col, vec_col)
+    parts = _ivfpq_parts(
+        df, nlist, n_sub, sub_dim, ksub, id_col, vec_col, cache_registry
+    )
     return _ivfpq_search(parts, query_id, k, nprobe, id_col).select(
         id_col, F.col("ccid").alias("cell"), "adc_d2"
     )
@@ -331,6 +372,7 @@ def _ivfpq_parts(
     ksub: int,
     id_col: str,
     vec_col: str,
+    cache_registry: list,
 ) -> dict:
     """The query-independent half of IVFADC — long form, coarse
     centroids/assignment distances, residual codebooks and the encoded
@@ -339,15 +381,14 @@ def _ivfpq_parts(
     index at several depths (the e19 one-assignment-pass discipline)."""
     from pyspark.sql import Window
 
-    acc = "decimal(38,12)"
-    dsq = lambda a, b: F.sum(((a - b) * (a - b)).cast(acc))  # noqa: E731
+    dsq = lambda a, b: F.sum(((a - b) * (a - b)).cast(_ACC))  # noqa: E731
 
     e = (
         fan_out(_require_geometry(df, n_sub, sub_dim, vec_col))
         .select(F.col(id_col), F.posexplode(vec_col).alias("pos", "v"))
         .withColumn("v", F.col("v").cast("double"))
-    )
-    e = e.cache()  # feeds coarse assign, residuals, and the query side
+    ).cache()  # feeds coarse assign, residuals, and the query side
+    cache_registry.append(e)
     cc = (
         e.filter(F.col(id_col) < nlist)
         .select(
@@ -373,8 +414,8 @@ def _ivfpq_parts(
         e.join(asg, id_col)
         .join(F.broadcast(cc), ["ccid", "pos"])
         .select(id_col, "ccid", "pos", (F.col("v") - F.col("cval")).alias("r"))
-    )
-    res = res.cache()  # feeds codebooks, encode, and the query residual
+    ).cache()  # feeds codebooks, encode, and the query residual
+    cache_registry.append(res)
     # PQ codebooks ON RESIDUALS: subvectors of the ksub lowest-id vectors
     cw = res.filter(F.col(id_col) < ksub).select(
         F.col(id_col).cast("int").alias("cid"), "pos", F.col("r").alias("cwv")
@@ -446,6 +487,8 @@ def ivfpq_recall_curve(
     ksub: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Recall@k of IVFADC at several probe depths against the exact L2
     top-k — the nprobe dial for the combined index (e19's discipline:
@@ -454,46 +497,32 @@ def ivfpq_recall_curve(
     pure code loss. Returns one row per probe depth:
     (nprobe, k, n_hits, recall), ascending nprobe.
 
-    r13: the probe depths are nested prefixes of ONE cell ranking (the
-    query's coarse distances), and a candidate's per-cell LUT rows are
-    probe-depth-INDEPENDENT — so instead of one enc-join + ADC ranking
-    per depth (3x the encode-table window + scoring work), build the
-    LUT for all ``nlist`` cells once, score every candidate once, tag
-    each with its cell's probe rank, and derive every depth's top-k
-    from that single scored table with one rank-window partitioned by
-    depth. Per depth, the probe restriction ``cell_rank <= nprobe`` and
-    the (adc_d2, id) ordering are literally the original per-depth
-    semantics, so results are bit-identical (oracle-gated)."""
+    The probe depths are nested prefixes of ONE cell ranking (the
+    query's coarse distances), and a candidate's per-cell LUT rows do
+    not depend on the depth — so the LUT is built for all ``nlist``
+    cells once, every candidate is scored once and tagged with its
+    cell's probe rank, and every depth's top-k comes from that one
+    scored table through one rank window partitioned by depth. Per
+    depth, ``cell_rank <= nprobe`` and the (adc_d2, id) order are the
+    single-depth search's semantics, so results are bit-identical
+    (oracle-gated). Caches go to ``cache_registry`` as in
+    :func:`ivfpq_adc_topk`."""
     from pyspark.sql import Window
 
-    acc = "decimal(38,12)"
-    parts = _ivfpq_parts(df, nlist, n_sub, sub_dim, ksub, id_col, vec_col)
+    parts = _ivfpq_parts(
+        df, nlist, n_sub, sub_dim, ksub, id_col, vec_col, cache_registry
+    )
     e, cc, ad2 = parts["e"], parts["cc"], parts["ad2"]
     enc, cw, sub, dsq = parts["enc"], parts["cw"], parts["sub"], parts["dsq"]
-    q = e.filter(F.col(id_col) == query_id).select(
-        "pos", F.col("v").alias("qv")
-    )
-    exact = (
-        e.filter(F.col(id_col) != query_id)
-        .join(F.broadcast(q), "pos")
-        .groupBy(id_col)
-        .agg(
-            F.sum(((F.col("v") - F.col("qv")) * (F.col("v") - F.col("qv"))).cast(acc))
-            .cast("double")
-            .alias("d2")
-        )
-        .orderBy(F.col("d2").asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col)
-    )
+    exact = exact_l2_knn(df, query_id, k, id_col, vec_col).select(id_col)
     # every cell with its probe rank: depth p probes ranks 1..p (the
     # original per-depth orderBy(d2, ccid).limit(p) is exactly this
     # ranking's prefix)
-    wq = Window.orderBy(F.col("d2").asc(), F.col("ccid"))
-    cell_rank = (
-        ad2.filter(F.col(id_col) == query_id)
-        .select("ccid", F.row_number().over(wq).alias("crank"))
-    )
+    cell_rank = bounded_rank(
+        ad2.filter(F.col(id_col) == query_id).select("ccid", "d2"),
+        [("d2", "asc"), ("ccid", "asc")],
+        "crank",
+    ).select("ccid", "crank")
     # query residual and LUT against ALL cells, once (cell LUT rows do
     # not depend on probe depth — shallower depths just use fewer cells)
     qr = (
@@ -529,20 +558,6 @@ def ivfpq_recall_curve(
         .filter(F.col("rn") <= k)
         .select("nprobe", id_col)
     )
-    hits = topk.join(F.broadcast(exact), id_col).groupBy("nprobe").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    return (
-        depths.join(hits, "nprobe", "left")
-        .select(
-            F.col("nprobe").cast("int").alias("nprobe"),
-            F.lit(k).cast("int").alias("k"),
-            F.coalesce(F.col("n_hits"), F.lit(0).cast("bigint")).alias(
-                "n_hits"
-            ),
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double") / k
-            ).alias("recall"),
-        )
-        .orderBy("nprobe")
+    return recall_at_k(topk, exact, k, by=("nprobe",), grid=depths).orderBy(
+        "nprobe"
     )

@@ -658,13 +658,29 @@ _CONTAINMENT_FAMILY = (
     "io22_containment_ingest_loop",
     "s15_streaming_containment_admission",
 )
+#: Embedding-family queries whose kernels cache intermediates (directly or
+#: inside similarity/).
+_EMBEDDING_CACHE_USERS = (
+    "e02_cosine_neardup_pairs",
+    "e06_ivf_knn_vec1",
+    "e08_ivf_partial_probe_vec1",
+    "e12_ivf_recall_audit",
+    "e21_semdedup_clusters",
+    "e23_semdedup_recall",
+    "e30_embedding_outliers",
+    "e32_quantization_recall_sweep",
+    "e33_ivfpq_residual_adc",
+    "e34_ivfpq_recall_audit",
+    "e35_ivfpq_nprobe_curve",
+)
 
 
-@pytest.mark.parametrize("name", _CONTAINMENT_FAMILY)
+@pytest.mark.parametrize("name", _CONTAINMENT_FAMILY + _EMBEDDING_CACHE_USERS)
 def test_containment_query_releases_its_caches(spark, duck, name):
-    """With the family's shared kernels built (then clearCache), a
-    containment-family query leaves no entry in the SQL cache manager,
-    and its answer, read after the release, still matches the oracle."""
+    """With the containment family's shared kernels built (then
+    clearCache), a containment-family or caching embedding-family query
+    leaves no entry in the SQL cache manager, and its answer, read after
+    the release, still matches the oracle."""
     from goodreads_pyspark_spark.queries import REGISTRY, documents
     from tests.test_oracle_parity import SF_SMOKE, _norm
 

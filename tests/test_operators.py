@@ -801,7 +801,8 @@ def test_ivfpq_exhaustive_probe_covers_all_candidates(spark):
     vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
     df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
     out = ivfpq_adc_topk(
-        df, query_id=5, k=100, nlist=4, nprobe=4, n_sub=2, sub_dim=4, ksub=4
+        df, query_id=5, k=100, nlist=4, nprobe=4, n_sub=2, sub_dim=4, ksub=4,
+        cache_registry=[],
     )
     assert out.count() == 39  # every vector except the query
 
@@ -817,7 +818,7 @@ def test_ivfpq_recall_curve_ignores_duplicate_probes(spark):
     rng = random.Random(3)
     vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
     df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    kw = dict(query_id=5, k=6, nlist=8, n_sub=2, sub_dim=4, ksub=4)
+    kw = dict(query_id=5, k=6, nlist=8, n_sub=2, sub_dim=4, ksub=4, cache_registry=[])
     dup = ivfpq_recall_curve(df, probes=(4, 4, 8), **kw).collect()
     once = ivfpq_recall_curve(df, probes=(4, 8), **kw).collect()
     assert dup == once

@@ -43,6 +43,11 @@ CHECKPOINTED_RESULTS = {
     "d66_equidepth_ensemble",
     "d67_containment_dedup",
     "d68_incremental_containment_admission",
+    "e19_ivf_nprobe_sweep",
+    "e27_matryoshka_dim_sweep",
+    "e33_ivfpq_residual_adc",
+    "e34_ivfpq_recall_audit",
+    "e35_ivfpq_nprobe_curve",
     "t22_association_rules",
     "h03_rag_context_pack",
     "h04_rerank_calibration",

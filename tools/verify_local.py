@@ -2,7 +2,11 @@
 
 Runs every registered query on Spark AND its oracle SQL on DuckDB at the
 given sf dir, then compares row count, column names, and order-insensitive
-cell values. Usage:
+cell values. It also reports each query that leaves a cached plan behind
+(the SQL cache is cleared before every query and checked after it): a
+leaking query runs once more, and the leak is "per call" if that run
+leaks again, or a one-time "memo build" (a session memo's first build)
+if it does not. Leaks are reported, not failed. Usage:
 
     python tools/verify_local.py [sf_dir] [query_name ...]
 """
@@ -75,11 +79,14 @@ def main() -> int:
     else:
         spark = get_spark("verify_local")
     failures, passed = [], 0
+    leaks: dict[str, str] = {}
+    probe_s = 0.0  # leak re-runs, kept out of the reported query time
     t_start = time.time()
     for name, q in sorted(REGISTRY.items()):
         if only and name not in only:
             continue
         t0 = time.time()
+        spark.catalog.clearCache()
         try:
             sdf = q.spark_fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -88,8 +95,17 @@ def main() -> int:
             failures.append((name, f"spark error: {e}"))
             print(f"FAIL {name}: spark error: {e}")
             continue
+        leak, probe = "", 0.0
+        if not _cache_empty(spark):
+            t1 = time.time()
+            spark.catalog.clearCache()
+            q.spark_fn(spark, sf_dir).collect()
+            leaks[name] = "memo build" if _cache_empty(spark) else "per call"
+            probe = time.time() - t1
+            probe_s += probe
+            leak = f" [cache leak: {leaks[name]}]"
         if q.oracle is None:
-            print(f"ok   {name}: rows-only ({len(s_rows)} rows) {time.time()-t0:.1f}s")
+            print(f"ok   {name}: rows-only ({len(s_rows)} rows) {time.time()-t0-probe:.1f}s{leak}")
             passed += 1
             continue
         try:
@@ -117,16 +133,23 @@ def main() -> int:
                 problems.append(f"values differ, first diffs: {diff}")
         if problems:
             failures.append((name, "; ".join(problems)))
-            print(f"FAIL {name}: {'; '.join(problems)}")
+            print(f"FAIL {name}: {'; '.join(problems)}{leak}")
         else:
-            print(f"ok   {name}: {len(s_rows)} rows match {time.time()-t0:.1f}s")
+            print(f"ok   {name}: {len(s_rows)} rows match {time.time()-t0-probe:.1f}s{leak}")
             passed += 1
 
+    per_call = sum(1 for kind in leaks.values() if kind == "per call")
     print(
         f"\n{passed} passed, {len(failures)} failed "
-        f"in {time.time() - t_start:.1f}s"
+        f"in {time.time() - t_start - probe_s:.1f}s; "
+        f"{len(leaks)} cache leaks ({per_call} per call, "
+        f"{len(leaks) - per_call} memo builds)"
     )
     return 1 if failures else 0
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
