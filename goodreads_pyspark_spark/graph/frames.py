@@ -140,6 +140,92 @@ def plot_edge_sample(graph: PropertyGraph, n: int = 1000) -> list:
     return graph.edges.select("src", "dst").take(n)
 
 
+def graph_of(edges: DataFrame) -> PropertyGraph:
+    """The graph of an edge list over its distinct endpoints."""
+    ids = (
+        edges.select(F.col("src").alias("id"))
+        .unionAll(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    return PropertyGraph(ids, edges)
+
+
+def undirected(edges: DataFrame) -> DataFrame:
+    """Both directions of every (src, dst, ...) edge; other columns ride
+    along unchanged."""
+    rest = [c for c in edges.columns if c not in ("src", "dst")]
+    return edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *rest)
+    )
+
+
+def _canonical_pairs(edges: DataFrame, pre_deduped: bool) -> DataFrame:
+    """Each undirected edge of (src, dst) ``edges`` once, as (a, b) with
+    a < b and no self-loops — cached and materialized; the caller
+    unpersists it. ``pre_deduped``: the caller passes an ALREADY
+    (src<dst)-distinct, already-materialized pair table (e.g. the
+    queries/graph.py session memo) — skip the dedup shuffle and its
+    cache. The distinct pairs feed several downstream subtrees; without
+    the cache the dedup shuffle re-executes once per consumer."""
+    if pre_deduped:
+        return edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    und = (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+        )
+        .distinct()
+        .cache()
+    )
+    und.count()
+    return und
+
+
+def _pair_degrees(und: DataFrame) -> DataFrame:
+    """(id, d): every vertex's degree in the (a, b) pair list."""
+    return (
+        und.select(F.col("a").alias("id"))
+        .unionAll(und.select(F.col("b").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _forward_wedges(und: DataFrame, deg: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree-ordered (forward) orientation of ``und`` and its closing
+    join: ``o`` (lo, hi), cached and materialized (the caller unpersists
+    it), and (lo, hi, nbrs_lo, nbrs_hi) — every oriented edge with both
+    endpoints' forward neighbor arrays, whose intersection is the set of
+    triangles closing on that edge.
+
+    Each edge points from its (degree, id)-smaller endpoint to the
+    larger, compared tuple-wise — no global window/rank, so every stage
+    is a keyed shuffle join. ``o`` feeds the adjacency fold, the closing
+    join and the caller's counts; it is materialized NOW, after ``und``,
+    because siblings left lazy race to fill the cache and each
+    recomputes the distinct-pairs shuffle (measured ~2.5x cost)."""
+    da = deg.select(F.col("id").alias("a"), F.col("d").alias("da"))
+    db = deg.select(F.col("id").alias("b"), F.col("d").alias("db"))
+    a_first = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+    )
+    o = (
+        und.join(da, "a")
+        .join(db, "b")
+        .select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
+        )
+        .cache()
+    )
+    o.count()
+    adj = o.groupBy(F.col("lo").alias("v")).agg(F.collect_list("hi").alias("nbrs"))
+    a_lo = adj.select(F.col("v").alias("lo"), F.col("nbrs").alias("nbrs_lo"))
+    a_hi = adj.select(F.col("v").alias("hi"), F.col("nbrs").alias("nbrs_hi"))
+    return o, o.join(a_lo, "lo").join(a_hi, "hi")
+
+
 def triangle_count(edges: DataFrame, pre_deduped: bool = False) -> DataFrame:
     """Exact global triangle count via degree-ordered (forward) counting.
 
@@ -161,74 +247,21 @@ def triangle_count(edges: DataFrame, pre_deduped: bool = False) -> DataFrame:
     two arrays and fell to ~8s on the same input — the per-candidate
     work rides codegen instead of the exchange.
 
-    No global window/rank: the total order is compared tuple-wise
-    (degree, id) at orientation time, so every stage is a keyed shuffle
-    join — nothing single-partition at any scale.
-
-    Returns ONE row: (n_vertices, n_edges, n_triangles).
+    Returns ONE row: (n_vertices, n_edges, n_triangles), checkpointed so
+    the working caches are released before returning.
     """
-    # und and o each feed 2-3 downstream subtrees (degrees, orientation,
-    # adjacency fold, closing join, the count aggregates); without a cache
-    # the expensive distinct-pairs shuffle re-executes once per consumer.
-    # Both frames are id-pairs only — a few MB per million edges.
-    # pre_deduped: the caller passes an ALREADY (src<dst)-distinct,
-    # already-materialized pair table (e.g. the queries/graph.py
-    # session memo) — skip the dedup shuffle and its cache.
-    if pre_deduped:
-        und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    else:
-        und = (
-            edges.filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .distinct()
-            .cache()
-        )
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    da = deg.select(F.col("id").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("id").alias("b"), F.col("d").alias("db"))
-    with_deg = und.join(da, "a").join(db, "b")
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    o = with_deg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).cache()
-    # Materialize the two caches NOW, in dependency order. The returned
-    # plan references und/o from three sibling subtrees (counts, adjacency,
-    # closing join); left lazy, those siblings race to fill the cache and
-    # each recomputes the distinct-pairs shuffle (measured ~2.5x cost).
-    if not pre_deduped:
-        und.count()
-    o.count()
-    adj = o.groupBy(F.col("lo").alias("v")).agg(
-        F.collect_list("hi").alias("nbrs")
-    )
-    a_lo = adj.select(F.col("v").alias("lo"), F.col("nbrs").alias("nbrs_lo"))
-    a_hi = adj.select(F.col("v").alias("hi"), F.col("nbrs").alias("nbrs_hi"))
-    tri = (
-        o.join(a_lo, "lo")
-        .join(a_hi, "hi")
-        .select(
-            F.size(F.array_intersect("nbrs_lo", "nbrs_hi")).alias("n_common")
-        )
-        .agg(
-            F.coalesce(F.sum("n_common"), F.lit(0))
-            .cast("bigint")
-            .alias("n_triangles")
-        )
-    )
+    und = _canonical_pairs(edges, pre_deduped)
+    deg = _pair_degrees(und)
+    o, closing = _forward_wedges(und, deg)
+    tri = closing.select(
+        F.size(F.array_intersect("nbrs_lo", "nbrs_hi")).alias("n_common")
+    ).agg(F.coalesce(F.sum("n_common"), F.lit(0)).cast("bigint").alias("n_triangles"))
     nv = deg.agg(F.count(F.lit(1)).cast("bigint").alias("n_vertices"))
     ne = o.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-    return nv.crossJoin(F.broadcast(ne)).crossJoin(F.broadcast(tri))
+    result = _truncate(nv.crossJoin(F.broadcast(ne)).crossJoin(F.broadcast(tri)))
+    o.unpersist()
+    und.unpersist()
+    return result
 
 
 def kcore_trim(
@@ -254,34 +287,15 @@ def kcore_trim(
     Returns (id, degree) of vertices alive after ``rounds`` trims,
     with their degree in the surviving subgraph.
     """
-    if pre_deduped:
-        und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    else:
-        und = (
-            edges.filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .distinct()
-        )
     # Per-round cache + eager materialization (the Pregel superstep
     # pattern, graph/pregel.py): each round's edge set feeds BOTH the
     # next degree count and the next semi-join base — left lazy, round r
     # re-executes round r-1 twice and the recomputation nests
     # geometrically with depth. A pre_deduped (checkpointed) input is
     # already materialized — rounds still cache their own shrinking sets.
-    cur = und if pre_deduped else und.cache()
-    if not pre_deduped:
-        cur.count()
+    cur = _canonical_pairs(edges, pre_deduped)
     for _ in range(rounds):
-        deg = (
-            cur.select(F.col("a").alias("id"))
-            .unionAll(cur.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("id")
+        keep = _pair_degrees(cur).filter(F.col("d") >= k).select("id")
         prev = cur
         cur = (
             cur.join(keep.select(F.col("id").alias("a")), "a", "left_semi")
@@ -290,12 +304,7 @@ def kcore_trim(
         )
         cur.count()
         prev.unpersist()
-    deg = (
-        cur.select(F.col("a").alias("id"))
-        .unionAll(cur.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
-    )
+    deg = _pair_degrees(cur).select("id", F.col("d").cast("bigint").alias("degree"))
     # Per-vertex result is small: checkpoint it eagerly so the final
     # round's cached edge set can be released before returning — no
     # leaked executor blocks across repeated calls.
@@ -322,52 +331,14 @@ def clustering_coefficients(
 
     Returns (id, degree, n_triangles, clustering_coeff).
     """
-    if pre_deduped:
-        und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    else:
-        und = (
-            edges.filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .distinct()
-            .cache()
-        )
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .cache()
-    )
-    da = deg.select(F.col("id").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("id").alias("b"), F.col("d").alias("db"))
-    with_deg = und.join(da, "a").join(db, "b")
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    o = with_deg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).cache()
-    if not pre_deduped:
-        und.count()
+    und = _canonical_pairs(edges, pre_deduped)
+    deg = _pair_degrees(und).cache()
     deg.count()
-    o.count()
-    adj = o.groupBy(F.col("lo").alias("v")).agg(
-        F.collect_list("hi").alias("nbrs")
-    )
-    a_lo = adj.select(F.col("v").alias("lo"), F.col("nbrs").alias("nbrs_lo"))
-    a_hi = adj.select(F.col("v").alias("hi"), F.col("nbrs").alias("nbrs_hi"))
-    triangles = (
-        o.join(a_lo, "lo")
-        .join(a_hi, "hi")
-        .select(
-            "lo",
-            "hi",
-            F.explode(F.array_intersect("nbrs_lo", "nbrs_hi")).alias("w"),
-        )
+    o, closing = _forward_wedges(und, deg)
+    triangles = closing.select(
+        "lo",
+        "hi",
+        F.explode(F.array_intersect("nbrs_lo", "nbrs_hi")).alias("w"),
     )
     per_vertex = (
         triangles.select(F.col("lo").alias("id"))

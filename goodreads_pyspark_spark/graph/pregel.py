@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from goodreads_pyspark_spark.graph.frames import PropertyGraph, _truncate
+from goodreads_pyspark_spark.graph.frames import PropertyGraph, _truncate, undirected
 
 
 def _out_degrees(edges: DataFrame) -> DataFrame:
@@ -90,7 +90,10 @@ def pagerank(
         )
         ranks.unpersist()
         ranks = new_ranks
-        if delta is not None and delta < tol:
+        if (delta is not None and delta < tol) or i == max_iter - 1:
+            # checkpoint the final ranks so their superstep cache is released
+            ranks = _truncate(new_ranks, checkpoint_dir=checkpoint_dir)
+            new_ranks.unpersist()
             break
 
     out = graph.vertices.join(ranks.withColumnRenamed("pr", "pagerank"), "id", "left")
@@ -124,7 +127,9 @@ def pagerank_scaled(
     double accumulation, whose sum order differs per partitioning. Error
     vs true PageRank is ≤ n_iter·outdeg/scale — irrelevant at 1e12.
 
-    Iterations run lazily and the plan is truncated every
+    This is :func:`personalized_pagerank_scaled` with every vertex a seed
+    (initial mass ``scale`` and the full reset term everywhere); the two
+    run one loop. Iterations run lazily and the plan is truncated every
     ``checkpoint_every`` rounds via :func:`frames._truncate` —
     ``checkpoint_dir=None`` uses ``localCheckpoint`` (executor blocks),
     a directory switches to reliable ``checkpoint()`` for fault-tolerant
@@ -135,38 +140,17 @@ def pagerank_scaled(
     with the default scale that's ~10^5 vertices — lower ``scale`` for
     larger graphs (1e9 supports ~10^8 vertices).
     """
-    edges = graph.edges.select("src", "dst").cache()
-    deg = _out_degrees(edges).cache()
-    reset_scaled = (reset_num * scale) // reset_den
-    keep_num = reset_den - reset_num
-    ranks = graph.vertices.select("id").withColumn(
-        "pr", F.lit(scale).cast("bigint")
+    ranks = personalized_pagerank_scaled(
+        graph,
+        "TRUE",
+        n_iter,
+        scale,
+        reset_num,
+        reset_den,
+        checkpoint_every,
+        checkpoint_dir,
     )
-
-    for i in range(n_iter):
-        contrib = (
-            edges.join(ranks.withColumnRenamed("id", "src"), "src")
-            .join(deg.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.expr("pr div outdeg")).alias("msg"))
-        )
-        ranks = (
-            ranks.select("id")
-            .join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(reset_scaled)
-                    + F.expr(f"({keep_num} * coalesce(msg, 0L)) div {reset_den}")
-                ).cast("bigint").alias("pr"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == n_iter - 1:
-            ranks = _truncate(ranks, checkpoint_dir=checkpoint_dir)
-
-    edges.unpersist()
-    deg.unpersist()
-    return ranks.select("id", F.col("pr").alias("pr_scaled"))
+    return ranks.select("id", F.col("ppr_scaled").alias("pr_scaled"))
 
 
 def ppr_base(graph: PropertyGraph, seed_expr: str) -> dict:
@@ -328,7 +312,8 @@ def bfs(
     Frontier expansion: each round joins the frontier against edges and
     prunes already-visited vertices per start. Returns
     (start, end, length, path array<id>) for the first (shortest) level at
-    which any target is reached — all equal-length paths are returned.
+    which any target is reached — all equal-length paths are returned,
+    checkpointed so the last frontier's cache is released.
     """
     starts = graph.vertices.filter(from_expr).select(
         F.col("id").alias("start"),
@@ -375,9 +360,12 @@ def bfs(
             "path",
         )
         if hits.take(1):
+            hits = _truncate(hits)
+            frontier.unpersist()
             return hits
         if n_frontier == 0:
             break
+    frontier.unpersist()
     return hits.limit(0)
 
 
@@ -443,10 +431,7 @@ def connected_components(
     supersteps. Returns vertices + ``component`` (the minimum vertex id
     reachable). Stops early when no vertex's component changed.
     """
-    both = graph.edges.select("src", "dst").unionAll(
-        graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    both = both.cache()
+    both = undirected(graph.edges.select("src", "dst")).cache()
     comp = graph.vertices.select("id").withColumn("component", F.col("id")).cache()
 
     for i in range(max_iter):
@@ -479,9 +464,11 @@ def connected_components(
         if not changed:
             break
 
-    out = graph.vertices.join(comp, "id", "left")
+    # checkpoint the labels so the last superstep's cache is released
+    labels = _truncate(comp, checkpoint_dir=checkpoint_dir)
+    comp.unpersist()
     both.unpersist()
-    return out
+    return graph.vertices.join(labels, "id", "left")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -602,6 +589,52 @@ def connected_components_alternating(
     return out
 
 
+def _relax(edges: DataFrame, seeds: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` synchronous min-plus relaxations from every seed at once
+    over (src, dst, w) ``edges``: (seed, id, dist) for the pairs reached
+    within ``rounds`` hops (dist 0 = the seed itself).
+
+    Each round is one join edges⋈state + a (seed, id)-keyed
+    min-aggregate + a min-merge into the running distance table. State
+    is cached per round and materialized before its predecessor is
+    released (the superstep pattern); the final state is checkpointed so
+    its cache is released before returning.
+    """
+    dist = seeds.select(
+        F.col("id").alias("seed"), "id", F.lit(0).cast("bigint").alias("dist")
+    ).cache()
+    dist.count()
+    for _ in range(rounds):
+        msgs = (
+            edges.join(dist.withColumnRenamed("id", "src"), "src")
+            .select(
+                "seed",
+                F.col("dst").alias("id"),
+                (F.col("dist") + F.col("w")).alias("nd"),
+            )
+            .groupBy("seed", "id")
+            .agg(F.min("nd").alias("nd"))
+        )
+        prev = dist
+        dist = (
+            dist.join(msgs, ["seed", "id"], "full")
+            .select(
+                "seed",
+                "id",
+                F.when(F.col("dist").isNull(), F.col("nd"))
+                .when(F.col("nd").isNull(), F.col("dist"))
+                .otherwise(F.least("dist", "nd"))
+                .alias("dist"),
+            )
+            .cache()
+        )
+        dist.count()
+        prev.unpersist()
+    out = _truncate(dist)
+    dist.unpersist()
+    return out
+
+
 def sssp_rounds(
     edges: DataFrame,
     source: DataFrame,
@@ -614,40 +647,11 @@ def sssp_rounds(
     1-row (id) frame. Fixed rounds (not to-convergence) keep the result
     a deterministic input function with pure integer arithmetic, so a
     DuckDB CTE unrolling the same relaxations is bit-exact — the same
-    oracle discipline as the fixed-iteration LPA/PageRank/k-core. Each
-    round is one join edges⋈frontier + a min-aggregate + a min-merge
-    into the running distance table; frames cache per round with eager
-    materialization (superstep pattern). Returns (id, dist) for
-    vertices reached within ``rounds`` hops.
+    oracle discipline as the fixed-iteration LPA/PageRank/k-core. This
+    is :func:`multi_source_bfs`'s loop with one seed and weights.
+    Returns (id, dist) for vertices reached within ``rounds`` hops.
     """
-    from pyspark.sql import functions as F
-
-    dist = source.select(
-        F.col("id"), F.lit(0).cast("bigint").alias("dist")
-    ).cache()
-    dist.count()
-    for _ in range(rounds):
-        msgs = (
-            edges.join(dist.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("nd"))
-            .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        prev = dist
-        dist = (
-            dist.join(msgs, "id", "full")
-            .select(
-                "id",
-                F.when(F.col("dist").isNull(), F.col("nd"))
-                .when(F.col("nd").isNull(), F.col("dist"))
-                .otherwise(F.least("dist", "nd"))
-                .alias("dist"),
-            )
-            .cache()
-        )
-        dist.count()
-        prev.unpersist()
-    return dist
+    return _relax(edges, source, rounds).select("id", "dist")
 
 
 def hits_scaled(
@@ -763,37 +767,5 @@ def multi_source_bfs(
     partitions, not rounds. Same fixed-round integer-exact oracle
     discipline as sssp/LPA/PageRank. Returns (seed, id, dist) for pairs
     reached within ``rounds`` hops (dist 0 = the seed itself).
-
-    The returned frame is CACHED (it fed the final round's join and a
-    re-materialization would replay every round): the caller owns the
-    handle and must ``unpersist()`` it once its downstream aggregate has
-    materialized, or the state pins executor memory for the session.
     """
-    dist = seeds.select(
-        F.col("id").alias("seed"), "id", F.lit(0).cast("bigint").alias("dist")
-    ).cache()
-    dist.count()
-    for _ in range(rounds):
-        msgs = (
-            edges.join(dist.withColumnRenamed("id", "src"), "src")
-            .select("seed", F.col("dst").alias("id"),
-                    (F.col("dist") + 1).alias("nd"))
-            .groupBy("seed", "id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        prev = dist
-        dist = (
-            dist.join(msgs, ["seed", "id"], "full")
-            .select(
-                "seed",
-                "id",
-                F.when(F.col("dist").isNull(), F.col("nd"))
-                .when(F.col("nd").isNull(), F.col("dist"))
-                .otherwise(F.least("dist", "nd"))
-                .alias("dist"),
-            )
-            .cache()
-        )
-        dist.count()
-        prev.unpersist()
-    return dist
+    return _relax(edges.withColumn("w", F.lit(1)), seeds, rounds)

@@ -165,3 +165,26 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
 def sql_davg(expr: str, scale: int = 2) -> str:
     """DuckDB mirror of ``davg``."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(30,{scale}))) AS DOUBLE) / COUNT({expr})"
+
+
+def sql_cc_labels(und: str, l0: str, rounds: int) -> str:
+    """CTEs ``l0`` .. ``l{rounds}``: connected-component labels as
+    unrolled min-label propagation with pointer doubling over the
+    undirected (src, dst) view ``und``, starting from the (id, label)
+    query ``l0``. Each round takes the min over (own label, label's
+    label, neighbors' labels), so the covered radius roughly doubles per
+    round (d_{r+1} = 2d_r + 1): 10 rounds cover radius 2047, 12 rounds
+    8191. At enough rounds every engine reaches the same
+    algorithm-independent fixpoint (component = min reachable id), which
+    is what the Spark alternating-star CC is gated against."""
+    steps = [f"l0 AS MATERIALIZED ({l0})"]
+    for r in range(1, rounds + 1):
+        p = r - 1
+        steps.append(f"""l{r} AS MATERIALIZED (SELECT t.id, MIN(t.x) AS label FROM (
+               SELECT id, label AS x FROM l{p}
+               UNION ALL
+               SELECT a.id, b.label AS x FROM l{p} a JOIN l{p} b ON a.label = b.id
+               UNION ALL
+               SELECT e.src AS id, l.label AS x FROM {und} e JOIN l{p} l ON l.id = e.dst
+             ) t GROUP BY t.id)""")
+    return ",\n    ".join(steps)

@@ -48,6 +48,7 @@ from goodreads_pyspark_spark.queries._helpers import (
     _materialize,
     _released,
     session_memo,
+    sql_cc_labels,
     tbl,
 )
 
@@ -229,19 +230,14 @@ def _jac05_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_memo
 def _neardup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, component) labeling of the Jaccard≥0.5 pair graph."""
-    from goodreads_pyspark_spark.graph.frames import PropertyGraph
+    from goodreads_pyspark_spark.graph.frames import graph_of
     from goodreads_pyspark_spark.graph.pregel import (
         connected_components_alternating,
     )
 
     pairs = _jac05_pairs(spark, sf_dir)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return connected_components_alternating(PropertyGraph(verts, edges))
+    return connected_components_alternating(graph_of(edges))
 
 
 @session_memo
@@ -874,20 +870,9 @@ def d15_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cc_cluster_ctes(rounds: int = 10) -> str:
     """Shared CTE chain for the Jaccard>=0.5 near-dup component oracle:
     d06's exact pair SQL (same df cap) -> unrolled min-label propagation
-    with pointer doubling (g05's pattern; ``rounds``=10 covers radius
-    2047, far past any near-dup chain) -> per-cluster sizes. Used by c02
-    (min-id canonical) and c04 (quality-argmax survivor)."""
-    steps = []
-    for r in range(1, rounds + 1):
-        p = r - 1
-        steps.append(f"""
-    l{r} AS MATERIALIZED (SELECT t.id, MIN(t.x) AS label FROM (
-               SELECT id, label AS x FROM l{p}
-               UNION ALL
-               SELECT a.id, b.label AS x FROM l{p} a JOIN l{p} b ON a.label = b.id
-               UNION ALL
-               SELECT e.u AS id, l.label AS x FROM und e JOIN l{p} l ON l.id = e.v
-             ) t GROUP BY t.id)""")
+    with pointer doubling (``sql_cc_labels``; ``rounds``=10 covers
+    radius 2047, far past any near-dup chain) -> per-cluster sizes. Used
+    by c02 (min-id canonical) and c04 (quality-argmax survivor)."""
     return f"""{_SHINGLE_CTES},
     shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
             FROM sh),
@@ -903,9 +888,9 @@ def _cc_cluster_ctes(rounds: int = 10) -> str:
       JOIN sz sa ON sa.doc_id = doc_a
       JOIN sz sb ON sb.doc_id = doc_b
       WHERE CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) >= 0.5),
-    und AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
+    und AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
             UNION ALL SELECT doc_b, doc_a FROM pairs),
-    l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS label FROM und),{",".join(steps)},
+    {sql_cc_labels("und", "SELECT DISTINCT src AS id, src AS label FROM und", rounds)},
     sizes AS (SELECT label, count(*) AS cluster_size FROM l{rounds} GROUP BY label)"""
 
 

@@ -15,7 +15,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.queries import query
-from goodreads_pyspark_spark.queries._helpers import _materialize, _released, tbl
+from goodreads_pyspark_spark.queries._helpers import (
+    _materialize,
+    _released,
+    sql_cc_labels,
+    tbl,
+)
 from goodreads_pyspark_spark.similarity.ann import (
     brute_force_knn,
     cosine_neardup_pairs,
@@ -1005,29 +1010,18 @@ _E21_CC_ROUNDS = 12
 def _sql_clusters(pairs: str) -> str:
     """The per-cluster retention ledger (cluster_id, n_members,
     n_dropped) of the connected components of the ``pairs`` (id_a, id_b)
-    graph over every vector: unrolled min-label propagation with pointer
-    doubling (the g05 _cc_oracle pattern). 12 rounds cover radius 8191:
-    8 rounds (radius 255) under-converged at sf0.1 — at tau=0.4 the pair
-    graph grows CHAINS, not just near-cliques, and the local sf0.1 sweep
-    caught the oracle 10 clusters short (the same lesson as g05; near-
-    clique intuition does not survive a loose threshold). The bucketed
-    pair graph (e22) keeps a subset of the edges, which can lengthen
-    paths within a component; 12 doublings still cover radius 8191."""
-    steps = []
-    for r in range(1, _E21_CC_ROUNDS + 1):
-        p = r - 1
-        steps.append(f"""
-    l{r} AS MATERIALIZED (SELECT t.id, MIN(t.x) AS label FROM (
-               SELECT id, label AS x FROM l{p}
-               UNION ALL
-               SELECT a.id, b.label AS x FROM l{p} a JOIN l{p} b ON a.label = b.id
-               UNION ALL
-               SELECT e.u AS id, l.label AS x FROM und e JOIN l{p} l ON l.id = e.v
-             ) t GROUP BY t.id)""")
-    return f"""und AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM {pairs}
+    graph over every vector (``sql_cc_labels``). 12 rounds cover radius
+    8191: 8 rounds (radius 255) under-converged at sf0.1 — at tau=0.4
+    the pair graph grows CHAINS, not just near-cliques, and the local
+    sf0.1 sweep caught the oracle 10 clusters short (the same lesson as
+    g05; near-clique intuition does not survive a loose threshold). The
+    bucketed pair graph (e22) keeps a subset of the edges, which can
+    lengthen paths within a component; 12 doublings still cover radius
+    8191."""
+    l0 = "SELECT vec_id AS id, vec_id AS label FROM embeddings"
+    return f"""und AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM {pairs}
             UNION ALL SELECT id_b, id_a FROM {pairs}),
-    l0 AS MATERIALIZED (SELECT vec_id AS id, vec_id AS label
-                        FROM embeddings),{",".join(steps)}
+    {sql_cc_labels("und", l0, _E21_CC_ROUNDS)}
     SELECT CAST(label AS BIGINT) AS cluster_id,
            CAST(COUNT(*) AS BIGINT) AS n_members,
            CAST(COUNT(*) - 1 AS BIGINT) AS n_dropped

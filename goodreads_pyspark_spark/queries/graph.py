@@ -15,49 +15,75 @@ value bit-for-bit — no float-accumulation-order divergence possible.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goodreads_pyspark_spark.graph.frames import PropertyGraph
+from goodreads_pyspark_spark.graph.frames import graph_of, undirected
 from goodreads_pyspark_spark.graph.pregel import label_propagation, pagerank_scaled
-from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION, query
-from goodreads_pyspark_spark.queries._helpers import session_memo, tbl
+from goodreads_pyspark_spark.operators.partitioning import fan_out
+from goodreads_pyspark_spark.queries import query
+from goodreads_pyspark_spark.queries._helpers import (
+    _materialize,
+    _released,
+    session_memo,
+    sql_cc_labels,
+    tbl,
+)
 from goodreads_pyspark_spark.queries.timeseries import T14_MAX_BASKET
 
 #: Part-vertex id offset — disjoint id spaces, the reference's +100000 trick.
 _OFFSET = 10_000_000
 
-#: MATERIALIZED: the iterative oracles reference these CTEs once per
-#: unrolled round; without materialization DuckDB re-plans each reference
-#: as a fresh parquet scan and can exhaust file descriptors.
-_GRAPH_CTES = f"""
-    edges AS MATERIALIZED (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst
-              FROM lineitem),
+#: The 1-in-5-orderkey subgraph (g05, g14, g15, g18): same bipartite
+#: shape, more components (sparser), and bench-sized round counts. Like
+#: every fixture predicate here, one lineitem filter read by both engines.
+_SAMPLE = "l_orderkey % 5 = 0"
+
+
+def _sql_graph(where: str = "TRUE", **extra: str) -> str:
+    """The order→part test graph as CTEs: ``edges`` (src, dst, *extra)
+    of the lineitem rows matching ``where`` (``extra`` maps a column name
+    to its SQL over lineitem), ``vertices`` (id) — their distinct
+    endpoints — and ``und`` (src, dst, *extra), both directions of every
+    edge. MATERIALIZED: the iterative oracles reference these CTEs once
+    per unrolled round; without materialization DuckDB re-plans each
+    reference as a fresh parquet scan and can exhaust file descriptors.
+    Mirror of ``_edges`` with ``graph_of``/``undirected``."""
+    cols = "".join(f", {sql} AS {name}" for name, sql in extra.items())
+    rest = "".join(f", {name}" for name in extra)
+    return f"""
+    edges AS MATERIALIZED (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst{cols}
+              FROM lineitem WHERE {where}),
     vertices AS MATERIALIZED (SELECT src AS id FROM edges
                  UNION
-                 SELECT dst AS id FROM edges)
+                 SELECT dst AS id FROM edges),
+    und AS MATERIALIZED (SELECT src, dst{rest} FROM edges
+            UNION ALL SELECT dst, src{rest} FROM edges)
 """
 
 
-def _graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
-    li = tbl(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
+def _edges(
+    spark: SparkSession, sf_dir: str, where: str = "TRUE", **extra: Column
+) -> DataFrame:
+    """(src, dst, *extra) edges of the lineitem rows matching ``where``:
+    order ``l_orderkey`` → part ``l_partkey + _OFFSET``. Mirror of
+    ``_sql_graph``."""
+    return (
+        tbl(spark, sf_dir, "lineitem")
+        .filter(where)
+        .select(
+            F.col("l_orderkey").alias("src"),
+            (F.col("l_partkey") + _OFFSET).alias("dst"),
+            *[c.alias(name) for name, c in extra.items()],
+        )
     )
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionAll(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return PropertyGraph(vertices, edges)
 
 
 # --- G2: degrees ------------------------------------------------------------
 @query(
     "g01_degrees",
     oracle=f"""
-    WITH {_GRAPH_CTES},
+    WITH {_sql_graph()},
     deg AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS degree
             FROM (SELECT src AS id FROM edges
                   UNION ALL SELECT dst FROM edges) GROUP BY id),
@@ -75,7 +101,7 @@ def _graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     "degree counting IS aggregation, no graph machinery needed.",
 )
 def g01_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
+    g = graph_of(_edges(spark, sf_dir))
     d = g.degrees()
     i = g.in_degrees().withColumnRenamed("inDegree", "in_degree")
     o = g.out_degrees().withColumnRenamed("outDegree", "out_degree")
@@ -95,7 +121,7 @@ def g01_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "g02_motif_common_dst",
     oracle=f"""
-    WITH {_GRAPH_CTES},
+    WITH {_sql_graph()},
     pairs AS (SELECT a.src AS u1, b.src AS u2, a.dst AS b
               FROM edges a JOIN edges b ON a.dst = b.dst)
     SELECT b, CAST(COUNT(*) AS BIGINT) AS n_motifs
@@ -109,7 +135,7 @@ def g01_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contributes m² rows.",
 )
 def g02_motif_common_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
+    g = graph_of(_edges(spark, sf_dir))
     motifs = g.common_dst_motif(k=2)
     return (
         motifs.groupBy("b")
@@ -125,7 +151,7 @@ def _lpa_oracle(rounds: int = 2) -> str:
     for r in range(1, rounds + 1):
         steps.append(f"""
     n{r} AS MATERIALIZED (SELECT b.src AS id, l.label, COUNT(*) AS n
-             FROM ue b JOIN l{r - 1} l ON l.id = b.dst
+             FROM und b JOIN l{r - 1} l ON l.id = b.dst
              GROUP BY 1, 2),
     b{r} AS (SELECT id, label FROM (
                SELECT id, label,
@@ -135,9 +161,7 @@ def _lpa_oracle(rounds: int = 2) -> str:
     l{r} AS MATERIALIZED (SELECT v.id, COALESCE(b{r}.label, v.id) AS label
              FROM l{r - 1} v LEFT JOIN b{r} USING (id))""")
     return f"""
-    WITH {_GRAPH_CTES},
-    ue AS MATERIALIZED (SELECT src, dst FROM edges
-           UNION ALL SELECT dst, src FROM edges),
+    WITH {_sql_graph()},
     l0 AS MATERIALIZED (SELECT id, id AS label FROM vertices),{",".join(steps)}
     SELECT id, CAST(label AS BIGINT) AS label FROM l{rounds}
     """
@@ -152,14 +176,29 @@ def _lpa_oracle(rounds: int = 2) -> str:
     "order — so integer counts make the unrolled DuckDB CTE exact.",
 )
 def g03_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
+    g = graph_of(_edges(spark, sf_dir))
     return label_propagation(g, max_iter=2).select(
         "id", F.col("label").cast("bigint").alias("label")
     )
 
 
 # --- G8: PageRank (fixed-point integer arithmetic, 3 supersteps) ------------
-def _pagerank_oracle(n_iter: int = 3, scale: int = 10**12) -> str:
+#: PPR seed predicate — order vertices whose key is a multiple of 50.
+_PPR_SEED_MOD = 50
+_PPR_SEEDS = f"id < {_OFFSET} AND id % {_PPR_SEED_MOD} = 0"
+
+
+def _sql_pagerank(
+    n_iter: int = 3, seeds: str = "TRUE", columns: str = "pr AS pr_scaled"
+) -> str:
+    """Unrolled fixed-point (personalized) PageRank recurrence with the
+    reset mass confined to the vertices matching ``seeds``: seeds get
+    scale at t0 and the full teleport term each round; non-seeds only
+    accumulate damped messages. ``seeds`` TRUE is global PageRank (the
+    ``pagerank_scaled`` = all-seeds PPR identity). Pure BIGINT
+    arithmetic, so every score matches bit-for-bit. ``columns`` is the
+    final projection over (id, pr). Scores are scaled by 1e12."""
+    scale = 10**12
     reset = (15 * scale) // 100
     steps = []
     for r in range(1, n_iter + 1):
@@ -169,77 +208,46 @@ def _pagerank_oracle(n_iter: int = 3, scale: int = 10**12) -> str:
              JOIN p{r - 1} p ON p.id = e.src
              JOIN outd d ON d.id = e.src
              GROUP BY e.dst),
-    p{r} AS MATERIALIZED (SELECT v.id,
-                    CAST({reset} + (85 * COALESCE(m{r}.msg, 0)) // 100
+    p{r} AS MATERIALIZED (SELECT s.id,
+                    CAST(s.is_seed * {reset}
+                         + (85 * COALESCE(m{r}.msg, 0)) // 100
                          AS BIGINT) AS pr
-             FROM p{r - 1} v LEFT JOIN m{r} USING (id))""")
+             FROM seeds s LEFT JOIN m{r} USING (id))""")
     return f"""
-    WITH {_GRAPH_CTES},
+    WITH {_sql_graph()},
     outd AS MATERIALIZED (SELECT src AS id, COUNT(*) AS outdeg FROM edges GROUP BY src),
-    p0 AS MATERIALIZED (SELECT id, CAST({scale} AS BIGINT) AS pr FROM vertices),{",".join(steps)}
-    SELECT id, pr AS pr_scaled FROM p{n_iter}
+    seeds AS MATERIALIZED (SELECT id,
+                    CASE WHEN {seeds} THEN 1 ELSE 0 END AS is_seed
+             FROM vertices),
+    p0 AS MATERIALIZED (SELECT id, CAST(is_seed * {scale} AS BIGINT) AS pr
+                        FROM seeds),{",".join(steps)}
+    SELECT id, {columns} FROM p{n_iter}
     """
 
 
 # --- connected components (alternating star contraction) --------------------
-#: g05 runs on the 1-in-5-orderkey subgraph: same bipartite shape, more
-#: components (sparser), and a bench-sized round count.
-_CC_SAMPLE_CTES = f"""
-    edges AS MATERIALIZED (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst
-              FROM lineitem WHERE l_orderkey % 5 = 0),
-    vertices AS MATERIALIZED (SELECT src AS id FROM edges
-                 UNION
-                 SELECT dst AS id FROM edges)
-"""
+#: Pointer-doubling rounds of the CC oracles: 12 rounds ⇒ radius 8191.
+#: 8 rounds (radius 255) was NOT enough at sf0.1 — the sparser 1-in-5
+#: subgraph grows chains past it and the oracle under-converged while
+#: Spark's alternating contraction reached the true fixpoint (caught by
+#: the local sf0.1 sweep; the margin now covers any plausible testdata
+#: scale).
+_CC_ROUNDS = 12
 
 
-def _cc_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
-    li = tbl(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    edges = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-    )
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionAll(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return PropertyGraph(vertices, edges)
-
-
-def _cc_oracle(rounds: int = 12) -> str:
-    """Unrolled min-label propagation WITH pointer doubling: each round
-    takes the min over (own label, label's label, neighbors' labels), so
-    covered radius roughly doubles per round (d_{r+1} = 2d_r + 1).
-    12 rounds ⇒ radius 8191. 8 rounds (radius 255) was NOT enough at
-    sf0.1 — the sparser 1-in-5 subgraph grows chains past it and the
-    oracle under-converged while Spark's alternating contraction reached
-    the true fixpoint (caught by the local sf0.1 sweep; the margin now
-    covers any plausible testdata scale). Both engines must reach the
-    algorithm-independent FIXPOINT (component = min reachable id)."""
-    steps = []
-    for r in range(1, rounds + 1):
-        p = r - 1
-        steps.append(f"""
-    l{r} AS MATERIALIZED (SELECT t.id, MIN(t.x) AS label FROM (
-               SELECT id, label AS x FROM l{p}
-               UNION ALL
-               SELECT a.id, b.label AS x FROM l{p} a JOIN l{p} b ON a.label = b.id
-               UNION ALL
-               SELECT e.u AS id, l.label AS x FROM und e JOIN l{p} l ON l.id = e.v
-             ) t GROUP BY t.id)""")
+def _sql_components(where: str) -> str:
+    """Min-label fixpoint (component = min reachable id) of the test
+    graph's ``where`` edges, as (id, component)."""
     return f"""
-    WITH {_CC_SAMPLE_CTES},
-    und AS MATERIALIZED (SELECT src AS u, dst AS v FROM edges
-            UNION ALL SELECT dst, src FROM edges),
-    l0 AS MATERIALIZED (SELECT id, id AS label FROM vertices),{",".join(steps)}
-    SELECT id, CAST(label AS BIGINT) AS component FROM l{rounds}
+    WITH {_sql_graph(where)},
+    {sql_cc_labels("und", "SELECT id, id AS label FROM vertices", _CC_ROUNDS)}
+    SELECT id, CAST(label AS BIGINT) AS component FROM l{_CC_ROUNDS}
     """
 
 
 @query(
     "g05_connected_components",
-    oracle=_cc_oracle(rounds=12),
+    oracle=_sql_components(_SAMPLE),
     doc="Connected components via alternating large-star/small-star "
     "contraction (graph/pregel.py connected_components_alternating; "
     "Kiveris et al. SoCC'14), O(log² n) rounds vs hash-min's "
@@ -253,7 +261,7 @@ def g05_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components_alternating,
     )
 
-    g = _cc_graph(spark, sf_dir)
+    g = graph_of(_edges(spark, sf_dir, _SAMPLE))
     return connected_components_alternating(g).select(
         "id", F.col("component").cast("bigint").alias("component")
     )
@@ -261,7 +269,7 @@ def g05_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "g04_pagerank",
-    oracle=_pagerank_oracle(n_iter=3),
+    oracle=_sql_pagerank(n_iter=3),
     doc="G8 PageRank, 3 fixed supersteps in 1e12 fixed-point integers "
     "(graph/pregel.py pagerank_scaled; reference goodreads.py:618-619). "
     "Integer addition is exact and order-independent, so the unrolled "
@@ -269,7 +277,7 @@ def g05_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "accumulation answer to float PageRank's partition-order drift.",
 )
 def g04_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
+    g = graph_of(_edges(spark, sf_dir))
     return pagerank_scaled(g, n_iter=3)
 
 
@@ -277,11 +285,7 @@ def g04_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "g06_bfs_shortest_paths",
     oracle=f"""
-    WITH RECURSIVE
-    edges AS MATERIALIZED (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst
-              FROM lineitem),
-    und AS MATERIALIZED (SELECT src, dst FROM edges
-           UNION ALL SELECT dst, src FROM edges),
+    WITH RECURSIVE {_sql_graph()},
     src AS (SELECT MIN(l_orderkey) AS id FROM lineitem),
     walk(endv, path, len) AS (
       SELECT id, [id], 0 FROM src
@@ -308,19 +312,10 @@ def g04_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g06_bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.pregel import bfs
 
-    li = tbl(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-    )
-    und = edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    vertices = (
-        und.select(F.col("src").alias("id")).distinct()
-    )
-    g = PropertyGraph(vertices, und)
-    start = li.agg(F.min("l_orderkey")).first()[0]
+    edges = _edges(spark, sf_dir)
+    start = edges.agg(F.min("src")).first()[0]
     res = bfs(
-        g,
+        graph_of(undirected(edges)),
         f"id = {start}",
         f"id >= {_OFFSET} AND id % 100 = 7",
         max_path_length=3,
@@ -339,9 +334,7 @@ def g06_bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_memo
 def _copart_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT part co-occurrence pairs (src < dst) from the lineitem
-    self-join, shared by g07/g08/g11."""
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
+    self-join, shared by g07/g08/g11/g12. Mirror of ``_SQL_COPART``."""
     li = fan_out(tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
     a = li.select("l_orderkey", F.col("l_partkey").alias("src"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("dst"))
@@ -353,19 +346,28 @@ def _copart_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "g07_triangle_count",
-    oracle="""
-    WITH pairs AS (
+#: The co-part graph as CTEs: ``pairs`` (pa < pb, distinct), the same
+#: pairs as ``_copart_pairs``; ``_SQL_COPART_DEG`` adds ``deg`` (id, d);
+#: ``_SQL_COPART_ORIENTED`` adds ``o`` (lo, hi), each pair oriented by
+#: (degree, id) — the ``triangle_count`` orientation.
+_SQL_COPART = """pairs AS (
       SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
       FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
+_SQL_COPART_DEG = f"""{_SQL_COPART},
     deg AS (SELECT id, COUNT(*) AS d FROM (
               SELECT pa AS id FROM pairs UNION ALL SELECT pb AS id FROM pairs)
-            GROUP BY id),
+            GROUP BY id)"""
+_SQL_COPART_ORIENTED = f"""{_SQL_COPART_DEG},
     o AS (SELECT CASE WHEN (da.d, pa) < (db.d, pb) THEN pa ELSE pb END AS lo,
                  CASE WHEN (da.d, pa) < (db.d, pb) THEN pb ELSE pa END AS hi
-          FROM pairs JOIN deg da ON da.id = pa JOIN deg db ON db.id = pb),
+          FROM pairs JOIN deg da ON da.id = pa JOIN deg db ON db.id = pb)"""
+
+
+@query(
+    "g07_triangle_count",
+    oracle=f"""
+    WITH {_SQL_COPART_ORIENTED},
     tri AS (SELECT COUNT(*) AS n_triangles
             FROM o e1 JOIN o e2 ON e2.lo = e1.hi
                       JOIN o e3 ON e3.lo = e1.lo AND e3.hi = e2.hi)
@@ -391,13 +393,7 @@ _KCORE_ROUNDS = 3
 
 
 def _kcore_oracle(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
-    ctes = [
-        """pairs AS (
-      SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    e0 AS (SELECT pa AS a, pb AS b FROM pairs)"""
-    ]
+    ctes = [f"{_SQL_COPART},\n    e0 AS (SELECT pa AS a, pb AS b FROM pairs)"]
     for r in range(1, rounds + 1):
         ctes.append(
             f"""d{r} AS (SELECT id, COUNT(*) AS d FROM (
@@ -443,38 +439,36 @@ def g08_kcore_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SSSP_ROUNDS = 3
 
 
-def _sssp_oracle(rounds: int = _SSSP_ROUNDS) -> str:
-    ctes = [
-        f"""e0 AS (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst,
-                     CAST(l_quantity AS BIGINT) AS w
-              FROM lineitem),
-    ue AS MATERIALIZED (SELECT src, dst, w FROM e0
-           UNION ALL SELECT dst, src, w FROM e0),
-    s AS (SELECT MIN(l_orderkey) AS sid FROM lineitem),
-    d0 AS (SELECT sid AS id, CAST(0 AS BIGINT) AS dist FROM s)"""
-    ]
+def _sql_relax(seeds: str, rounds: int, w: str = "1") -> str:
+    """CTEs ``d0`` .. ``d{rounds}``: (seed, id, dist) after ``rounds``
+    synchronous min-plus relaxations over ``und`` from every id of the
+    ``seeds`` query, an edge costing ``w`` (SQL over ``und``). Mirror of
+    the one relaxation loop behind ``sssp_rounds`` and
+    ``multi_source_bfs``."""
+    ctes = [f"d0 AS (SELECT id AS seed, id, CAST(0 AS BIGINT) AS dist FROM ({seeds}))"]
     for r in range(1, rounds + 1):
         ctes.append(
-            f"""m{r} AS (SELECT ue.dst AS id, MIN(d.dist + ue.w) AS nd
-             FROM ue JOIN d{r - 1} d ON d.id = ue.src
-             GROUP BY ue.dst),
+            f"""m{r} AS (SELECT d.seed, und.dst AS id, MIN(d.dist + {w}) AS nd
+             FROM und JOIN d{r - 1} d ON d.id = und.src
+             GROUP BY d.seed, und.dst),
     d{r} AS MATERIALIZED (
-        SELECT COALESCE(d.id, m.id) AS id,
+        SELECT COALESCE(d.seed, m.seed) AS seed,
+               COALESCE(d.id, m.id) AS id,
                CASE WHEN d.dist IS NULL THEN m.nd
                     WHEN m.nd IS NULL THEN d.dist
                     ELSE LEAST(d.dist, m.nd) END AS dist
-        FROM d{r - 1} d FULL JOIN m{r} m ON m.id = d.id)"""
+        FROM d{r - 1} d FULL JOIN m{r} m ON m.id = d.id AND m.seed = d.seed)"""
         )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT id, dist FROM d{rounds}
-    """
+    return ",\n    ".join(ctes)
 
 
 @query(
     "g09_sssp_rounds",
-    oracle=_sssp_oracle(),
+    oracle=f"""
+    WITH {_sql_graph(w="CAST(l_quantity AS BIGINT)")},
+    {_sql_relax("SELECT MIN(src) AS id FROM edges", _SSSP_ROUNDS, "und.w")}
+    SELECT id, dist FROM d{_SSSP_ROUNDS}
+    """,
     doc=f"Weighted single-source shortest paths, {_SSSP_ROUNDS} synchronous "
     "Bellman-Ford rounds from the minimum order vertex over the "
     "undirected bipartite order-part graph with l_quantity weights "
@@ -484,67 +478,19 @@ def _sssp_oracle(rounds: int = _SSSP_ROUNDS) -> str:
 )
 def g09_sssp_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.pregel import sssp_rounds
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
 
-    li = fan_out(
-        tbl(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_quantity"
-        )
-    )
-    e0 = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-        F.col("l_quantity").cast("bigint").alias("w"),
-    )
-    ue = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
-    source = li.agg(F.min("l_orderkey").alias("id"))
-    return sssp_rounds(ue, source, rounds=_SSSP_ROUNDS)
+    edges = fan_out(_edges(spark, sf_dir, w=F.col("l_quantity").cast("bigint")))
+    source = edges.agg(F.min("src").alias("id"))
+    return sssp_rounds(undirected(edges), source, rounds=_SSSP_ROUNDS)
 
 
 # --- G-extension: personalized (topic-sensitive) PageRank --------------------
-#: PPR seed predicate — order vertices whose key is a multiple of 50.
-_PPR_SEED_MOD = 50
-
-
-def _ppr_oracle(n_iter: int = 3, scale: int = 10**12) -> str:
-    """Unrolled fixed-point PPR recurrence — g04's oracle with the reset
-    mass confined to the seed set (seeds get scale at t0 and the full
-    teleport term each round; non-seeds only accumulate damped messages).
-    Pure BIGINT arithmetic, so every score matches bit-for-bit."""
-    reset = (15 * scale) // 100
-    steps = []
-    for r in range(1, n_iter + 1):
-        steps.append(f"""
-    m{r} AS MATERIALIZED (SELECT e.dst AS id, SUM(p.pr // d.outdeg) AS msg
-             FROM edges e
-             JOIN p{r - 1} p ON p.id = e.src
-             JOIN outd d ON d.id = e.src
-             GROUP BY e.dst),
-    p{r} AS MATERIALIZED (SELECT s.id,
-                    CAST(s.is_seed * {reset}
-                         + (85 * COALESCE(m{r}.msg, 0)) // 100
-                         AS BIGINT) AS pr
-             FROM seeds s LEFT JOIN m{r} USING (id))""")
-    return f"""
-    WITH {_GRAPH_CTES},
-    outd AS MATERIALIZED (SELECT src AS id, COUNT(*) AS outdeg FROM edges GROUP BY src),
-    seeds AS MATERIALIZED (SELECT id,
-                    CASE WHEN id < {_OFFSET} AND id % {_PPR_SEED_MOD} = 0
-                         THEN 1 ELSE 0 END AS is_seed
-             FROM vertices),
-    p0 AS MATERIALIZED (SELECT id, CAST(is_seed * {scale} AS BIGINT) AS pr
-                        FROM seeds),{",".join(steps)}
-    SELECT id, pr AS ppr_scaled FROM p{n_iter}
-    """
-
-
 @query(
     "g10_personalized_pagerank",
-    oracle=_ppr_oracle(n_iter=3).replace(
-        "SELECT id, pr AS ppr_scaled",
-        "SELECT id, pr AS ppr_scaled, TRUE AS ckpt_equals_local",
+    oracle=_sql_pagerank(
+        n_iter=3,
+        seeds=_PPR_SEEDS,
+        columns="pr AS ppr_scaled, TRUE AS ckpt_equals_local",
     ),
     doc="Personalized PageRank from the orderkey%50=0 seed set, 3 fixed "
     "supersteps in 1e12 fixed-point integers (graph/pregel.py "
@@ -574,8 +520,7 @@ def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from goodreads_pyspark_spark.operators.concurrency import run_concurrent
 
-    g = _graph(spark, sf_dir)
-    seed_expr = f"id < {_OFFSET} AND id % {_PPR_SEED_MOD} = 0"
+    g = graph_of(_edges(spark, sf_dir))
     ckpt_dir = f"spark-warehouse/_g10_ckpt_{uuid.uuid4().hex[:8]}"
     # The edges/deg/seeds inputs are cached ONCE at this level and
     # released after both runs settle (ADVICE r12: per-run caches with
@@ -585,44 +530,45 @@ def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # result). The checkpoint-path independence the equality gate
     # certifies is untouched: both runs read identical base data by
     # construction; what differs is the truncation path.
-    base = ppr_base(g, seed_expr)
-    try:
-        # the two checkpoint-mode runs are independent by construction —
-        # that independence is what the equality gate certifies — so
-        # their per-superstep job chains overlap on a driver pool
-        # (guide §2.6) instead of running the same 3-round loop twice
-        # back-to-back
-        reliable, local = run_concurrent(
-            [
-                lambda: personalized_pagerank_scaled(
-                    g,
-                    seed_expr,
-                    n_iter=3,
-                    checkpoint_every=1,
-                    checkpoint_dir=ckpt_dir,
-                    base=base,
-                ),
-                lambda: personalized_pagerank_scaled(
-                    g, seed_expr, n_iter=3, checkpoint_every=1, base=base
-                ).localCheckpoint(),
-            ]
-        )
-        # bit-identity: same row count and zero (id, score) rows on one
-        # side only — integer PPR is deterministic, so any divergence is
-        # a checkpoint-path bug. Driver-side bounded action (two counts),
-        # evaluated BEFORE the reliable checkpoint dir is deleted.
-        n_diff = (
-            reliable.unionByName(local)
-            .groupBy("id", "ppr_scaled")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") != 2)
-            .count()
-        )
-        same = bool(n_diff == 0)
-    finally:
-        for k in ("edges", "deg", "seeds"):
-            base[k].unpersist()
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+    with _released() as caches:
+        base = ppr_base(g, _PPR_SEEDS)
+        caches += [base["edges"], base["deg"], base["seeds"]]
+        try:
+            # the two checkpoint-mode runs are independent by construction
+            # — that independence is what the equality gate certifies — so
+            # their per-superstep job chains overlap on a driver pool
+            # (guide §2.6) instead of running the same 3-round loop twice
+            # back-to-back
+            reliable, local = run_concurrent(
+                [
+                    lambda: personalized_pagerank_scaled(
+                        g,
+                        _PPR_SEEDS,
+                        n_iter=3,
+                        checkpoint_every=1,
+                        checkpoint_dir=ckpt_dir,
+                        base=base,
+                    ),
+                    lambda: personalized_pagerank_scaled(
+                        g, _PPR_SEEDS, n_iter=3, checkpoint_every=1, base=base
+                    ).localCheckpoint(),
+                ]
+            )
+            # bit-identity: same row count and zero (id, score) rows on
+            # one side only — integer PPR is deterministic, so any
+            # divergence is a checkpoint-path bug. Driver-side bounded
+            # action (two counts), evaluated BEFORE the reliable
+            # checkpoint dir is deleted.
+            n_diff = (
+                reliable.unionByName(local)
+                .groupBy("id", "ppr_scaled")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n") != 2)
+                .count()
+            )
+            same = bool(n_diff == 0)
+        finally:
+            shutil.rmtree(ckpt_dir, ignore_errors=True)
     # return the local-mode frame (its blocks don't live in ckpt_dir)
     return local.select(
         "id", "ppr_scaled", F.lit(same).alias("ckpt_equals_local")
@@ -632,17 +578,8 @@ def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- G-extension: per-vertex clustering coefficient --------------------------
 @query(
     "g11_clustering_coefficient",
-    oracle="""
-    WITH pairs AS (
-      SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    deg AS (SELECT id, COUNT(*) AS d FROM (
-              SELECT pa AS id FROM pairs UNION ALL SELECT pb AS id FROM pairs)
-            GROUP BY id),
-    o AS (SELECT CASE WHEN (da.d, pa) < (db.d, pb) THEN pa ELSE pb END AS lo,
-                 CASE WHEN (da.d, pa) < (db.d, pb) THEN pb ELSE pa END AS hi
-          FROM pairs JOIN deg da ON da.id = pa JOIN deg db ON db.id = pb),
+    oracle=f"""
+    WITH {_SQL_COPART_ORIENTED},
     tri AS (SELECT e1.lo AS x, e1.hi AS y, e2.hi AS z
             FROM o e1 JOIN o e2 ON e2.lo = e1.hi
                       JOIN o e3 ON e3.lo = e1.lo AND e3.hi = e2.hi),
@@ -673,14 +610,8 @@ def g11_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- G-extension: exact degree distribution ----------------------------------
 @query(
     "g12_degree_distribution",
-    oracle="""
-    WITH pairs AS (
-      SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    deg AS (SELECT id, COUNT(*) AS d FROM (
-              SELECT pa AS id FROM pairs UNION ALL SELECT pb AS id FROM pairs)
-            GROUP BY id)
+    oracle=f"""
+    WITH {_SQL_COPART_DEG}
     SELECT CAST(d AS BIGINT) AS degree,
            CAST(COUNT(*) AS BIGINT) AS n_vertices
     FROM deg GROUP BY d
@@ -692,29 +623,13 @@ def g11_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Two integer aggregates, nothing else.",
 )
 def g12_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    li = fan_out(tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
-    a = li.select("l_orderkey", F.col("l_partkey").alias("src"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("dst"))
-    und = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("src").alias("id"))
-        .unionAll(und.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    return deg.groupBy(F.col("d").cast("bigint").alias("degree")).agg(
+    deg = graph_of(_copart_pairs(spark, sf_dir)).degrees()
+    return deg.groupBy(F.col("degree").cast("bigint").alias("degree")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vertices")
     )
 
 
-# ============================ round-4 additions ==============================
+# --- G-extension: link prediction (common neighbors + Jaccard) --------------
 _G13_DEG_CAP = 40
 _G13_MIN_SUPPORT = 2
 _G13_TOP = 20
@@ -781,8 +696,6 @@ _G13_TOP = 20
     "a single exact-integer-derived division.",
 )
 def g13_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     raw = fan_out(tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
     ok = (
         raw.groupBy("l_orderkey")
@@ -854,7 +767,7 @@ def g13_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- HITS hubs & authorities (new in r6) --------------------------------------
+# --- HITS hubs & authorities -------------------------------------------------
 _HITS_SCALE = 10**6
 
 
@@ -862,7 +775,7 @@ def _hits_oracle(n_iter: int = 2, scale: int = _HITS_SCALE) -> str:
     """Unrolled fixed-point HITS: per round an in-edge hub sum, a HUGEINT
     ×scale sum-normalization (floor division — exact), then the symmetric
     out-edge authority sum. Same integer-recurrence strategy as
-    ``_pagerank_oracle``: every value matches Spark bit-for-bit."""
+    ``_sql_pagerank``: every value matches Spark bit-for-bit."""
     steps = []
     for r in range(1, n_iter + 1):
         p = r - 1
@@ -884,7 +797,7 @@ def _hits_oracle(n_iter: int = 2, scale: int = _HITS_SCALE) -> str:
              FROM vertices v LEFT JOIN hr{r} hr ON hr.id = v.id
              CROSS JOIN ht{r} ht)""")
     return f"""
-    WITH {_CC_SAMPLE_CTES},
+    WITH {_sql_graph(_SAMPLE)},
     s0 AS MATERIALIZED (SELECT id, CAST({scale} AS BIGINT) AS hub
                         FROM vertices),{",".join(steps)}
     SELECT s.id, s.hub AS hub_scaled, a.auth AS auth_scaled
@@ -910,11 +823,11 @@ def _hits_oracle(n_iter: int = 2, scale: int = _HITS_SCALE) -> str:
 def g14_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.pregel import hits_scaled
 
-    g = _cc_graph(spark, sf_dir)  # 1-in-5 subgraph: bench-sized, like g05
+    g = graph_of(_edges(spark, sf_dir, _SAMPLE))  # bench-sized, like g05
     return hits_scaled(g, n_iter=2, scale=_HITS_SCALE)
 
 
-# --- landmark harmonic centrality (new in r6) ----------------------------------
+# --- landmark harmonic centrality ---------------------------------------------
 _G15_SEEDS = 4
 _G15_ROUNDS = 3
 #: LCM(1..3): 6 div dist is an exact integer for every reachable distance,
@@ -922,42 +835,17 @@ _G15_ROUNDS = 3
 _G15_LCM = 6
 
 
-def _g15_oracle(seeds: int = _G15_SEEDS, rounds: int = _G15_ROUNDS) -> str:
-    ctes = [
-        f"""e0 AS (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst
-              FROM lineitem WHERE l_orderkey % 5 = 0),
-    ue AS MATERIALIZED (SELECT src, dst FROM e0
-           UNION ALL SELECT dst, src FROM e0),
-    sd AS (SELECT DISTINCT src AS id FROM e0 ORDER BY id LIMIT {seeds}),
-    d0 AS (SELECT id AS seed, id, CAST(0 AS BIGINT) AS dist FROM sd)"""
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"""m{r} AS (SELECT d.seed, ue.dst AS id, MIN(d.dist + 1) AS nd
-             FROM ue JOIN d{r - 1} d ON d.id = ue.src
-             GROUP BY d.seed, ue.dst),
-    d{r} AS MATERIALIZED (
-        SELECT COALESCE(d.seed, m.seed) AS seed,
-               COALESCE(d.id, m.id) AS id,
-               CASE WHEN d.dist IS NULL THEN m.nd
-                    WHEN m.nd IS NULL THEN d.dist
-                    ELSE LEAST(d.dist, m.nd) END AS dist
-        FROM d{r - 1} d FULL JOIN m{r} m ON m.id = d.id AND m.seed = d.seed)"""
-        )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
+@query(
+    "g15_landmark_harmonic",
+    oracle=f"""
+    WITH {_sql_graph(_SAMPLE)},
+    {_sql_relax(f"SELECT DISTINCT src AS id FROM edges ORDER BY id LIMIT {_G15_SEEDS}", _G15_ROUNDS)}
     SELECT id,
            CAST(COUNT(CASE WHEN dist > 0 THEN 1 END) AS BIGINT) AS n_reached,
            CAST(COALESCE(SUM(CASE WHEN dist > 0 THEN {_G15_LCM} // dist END), 0)
                 AS BIGINT) AS harmonic_x{_G15_LCM}
-    FROM d{rounds} GROUP BY id
-    """
-
-
-@query(
-    "g15_landmark_harmonic",
-    oracle=_g15_oracle(),
+    FROM d{_G15_ROUNDS} GROUP BY id
+    """,
     doc="Landmark harmonic-centrality estimate: BFS from 4 deterministic "
     "landmark vertices at once (graph/pregel.py multi_source_bfs, the "
     "multi-source generalization of g09's relaxation loop) on the g05 "
@@ -974,19 +862,14 @@ def _g15_oracle(seeds: int = _G15_SEEDS, rounds: int = _G15_ROUNDS) -> str:
 def g15_landmark_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.graph.pregel import multi_source_bfs
 
-    li = tbl(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    e0 = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-    )
-    ue = e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _edges(spark, sf_dir, _SAMPLE)
     seeds = (
-        e0.select(F.col("src").alias("id"))
+        edges.select(F.col("src").alias("id"))
         .distinct()
         .orderBy("id")
         .limit(_G15_SEEDS)
     )
-    dist = multi_source_bfs(ue, seeds, rounds=_G15_ROUNDS)
+    dist = multi_source_bfs(undirected(edges), seeds, rounds=_G15_ROUNDS)
     reached = F.when(F.col("dist") > 0, 1)
     out = dist.groupBy("id").agg(
         F.count(reached).cast("bigint").alias("n_reached"),
@@ -997,28 +880,20 @@ def g15_landmark_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias(f"harmonic_x{_G15_LCM}"),
     )
-    # multi_source_bfs returns its state CACHED (caller-owned handle):
-    # materialize the per-vertex aggregate eagerly, then release the BFS
-    # state so a long suite run doesn't pin (seed,id) frames in memory.
-    PRE_MATERIALIZATION["g15_landmark_harmonic"] = out
-    result = out.localCheckpoint(eager=True)
-    dist.unpersist()
-    return result
+    return _materialize("g15_landmark_harmonic", out)
 
 
-# --- SIGN-style k-hop feature propagation (new in r7) -------------------------
+# --- SIGN-style k-hop feature propagation -------------------------------------
 @query(
     "g16_feature_propagation",
     oracle=f"""
-    WITH {_GRAPH_CTES},
-    ue AS MATERIALIZED (SELECT src, dst FROM edges
-           UNION ALL SELECT dst, src FROM edges),
+    WITH {_sql_graph()},
     x0 AS MATERIALIZED (SELECT src AS id, CAST(COUNT(*) AS BIGINT) AS x0
-            FROM ue GROUP BY src),
-    x1 AS MATERIALIZED (SELECT ue.src AS id, CAST(SUM(x0.x0) AS BIGINT) AS x1
-            FROM ue JOIN x0 ON x0.id = ue.dst GROUP BY ue.src),
-    x2 AS (SELECT ue.src AS id, CAST(SUM(x1.x1) AS BIGINT) AS x2
-           FROM ue JOIN x1 ON x1.id = ue.dst GROUP BY ue.src)
+            FROM und GROUP BY src),
+    x1 AS MATERIALIZED (SELECT und.src AS id, CAST(SUM(x0.x0) AS BIGINT) AS x1
+            FROM und JOIN x0 ON x0.id = und.dst GROUP BY und.src),
+    x2 AS (SELECT und.src AS id, CAST(SUM(x1.x1) AS BIGINT) AS x2
+           FROM und JOIN x1 ON x1.id = und.dst GROUP BY und.src)
     SELECT x0.id, x0.x0, x1.x1, x2.x2,
            CAST(x1.x1 AS DOUBLE) / x0.x0 AS mean_neighbor_deg
     FROM x0 JOIN x1 USING (id) JOIN x2 USING (id)
@@ -1038,9 +913,7 @@ def g15_landmark_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unchanged (the hits_scaled discipline).",
 )
 def g16_feature_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
-    e = g.edges.select("src", "dst")
-    ue = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    ue = undirected(_edges(spark, sf_dir))
     x0 = ue.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("x0"))
     x0 = x0.withColumnRenamed("src", "id")
     x1 = (
@@ -1068,52 +941,18 @@ def g16_feature_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- incremental connected-components maintenance (new in r7) -----------------
-# Gate-scope rotation (COVERAGE.md gate-scope notes; VERDICT r9 item 4):
-# the r8 perf work shrank the gated fixture 4x (%5/%97 -> %20/%23) so the
-# driver gate certified a smaller graph than the r7 original. To keep the
-# original scale certified, every ~4 rounds the gate runs the FULL
-# fixture again — r10 did (%5/%97 certified, SCALING.md); r11–r13 are
-# cheap rounds per the rotation. Engine and oracle read the SAME
-# constants, so flipping them can never desynchronize the two sides.
-_G17_BASE_MOD = 20  # base graph: l_orderkey % _G17_BASE_MOD == 0
-_G17_BATCH_MOD = 23  # batch: % _G17_BASE_MOD == 1 AND % _G17_BATCH_MOD == 0
-
-
-def _g17_oracle(rounds: int = 12) -> str:
-    """Min-label fixpoint (pointer doubling, the g05 oracle machinery)
-    over the UNION graph base ∪ batch — the incremental path must land
-    on the identical algorithm-independent labels."""
-    steps = []
-    for r in range(1, rounds + 1):
-        p = r - 1
-        steps.append(f"""
-    l{r} AS MATERIALIZED (SELECT t.id, MIN(t.x) AS label FROM (
-               SELECT id, label AS x FROM l{p}
-               UNION ALL
-               SELECT a.id, b.label AS x FROM l{p} a JOIN l{p} b ON a.label = b.id
-               UNION ALL
-               SELECT e.u AS id, l.label AS x FROM und e JOIN l{p} l ON l.id = e.v
-             ) t GROUP BY t.id)""")
-    return f"""
-    WITH edges AS MATERIALIZED (
-      SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst
-      FROM lineitem
-      WHERE l_orderkey % {_G17_BASE_MOD} = 0
-         OR (l_orderkey % {_G17_BASE_MOD} = 1
-             AND l_orderkey % {_G17_BATCH_MOD} = 0)),
-    vertices AS MATERIALIZED (SELECT src AS id FROM edges
-                 UNION SELECT dst AS id FROM edges),
-    und AS MATERIALIZED (SELECT src AS u, dst AS v FROM edges
-            UNION ALL SELECT dst, src FROM edges),
-    l0 AS MATERIALIZED (SELECT id, id AS label FROM vertices),{",".join(steps)}
-    SELECT id, CAST(label AS BIGINT) AS component FROM l{rounds}
-    """
+# --- incremental connected-components maintenance -----------------------------
+#: Base graph and new-edge batch: disjoint order slices. The increment ==
+#: full-recompute equivalence holds at any scale, so the base stays small
+#: (rebuilding base CC state, which production persists, dominates).
+_G17_BASE_MOD, _G17_BATCH_MOD = 20, 23
+_G17_BASE = f"l_orderkey % {_G17_BASE_MOD} = 0"
+_G17_BATCH = f"l_orderkey % {_G17_BASE_MOD} = 1 AND l_orderkey % {_G17_BATCH_MOD} = 0"
 
 
 @query(
     "g17_incremental_components",
-    oracle=_g17_oracle(),
+    oracle=_sql_components(f"{_G17_BASE} OR ({_G17_BATCH})"),
     doc="INCREMENTAL connected-components maintenance — the table-"
     "maintenance move that makes graph dedup state affordable at "
     "100 TB: instead of re-running CC on base ∪ batch (every CC round "
@@ -1136,31 +975,9 @@ def g17_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components_alternating,
     )
 
-    li = tbl(spark, sf_dir, "lineitem")
-    # Fixture scale comes from the module constants above — %20/%23 in
-    # cheap rounds (the increment == full-recompute equivalence holds at
-    # any scale; ~70% of the original 13s gate was rebuilding base CC
-    # state that production persists), %5/%97 in full-scale re-gate
-    # rounds like this one.
-    base_e = li.filter(F.col("l_orderkey") % _G17_BASE_MOD == 0).select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-    )
-    batch_e = li.filter(
-        (F.col("l_orderkey") % _G17_BASE_MOD == 1)
-        & (F.col("l_orderkey") % _G17_BATCH_MOD == 0)
-    ).select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-    )
-    base_v = (
-        base_e.select(F.col("src").alias("id"))
-        .unionAll(base_e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    labels = connected_components_alternating(
-        PropertyGraph(base_v, base_e)
-    ).localCheckpoint(eager=True)
+    base = graph_of(_edges(spark, sf_dir, _G17_BASE))
+    batch_e = _edges(spark, sf_dir, _G17_BATCH)
+    labels = connected_components_alternating(base).localCheckpoint(eager=True)
 
     # map batch endpoints through the existing labels (unseen vertices
     # label themselves), contract, and solve the batch-sized graph
@@ -1175,20 +992,13 @@ def g17_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    cv = (
-        contracted.select(F.col("src").alias("id"))
-        .unionAll(contracted.select(F.col("dst").alias("id")))
-        .distinct()
-    )
     # alternating star contraction, NOT hash-min: a batch that merges many
     # base components transitively gives the contracted graph a long
     # label-chain diameter, and hash-min pays O(diameter) rounds for it
     # (measured 11.7s on a 603-edge contracted graph at sf0.1); the
     # alternating form converges in O(log² n) rounds on the same input.
     # Both return min-id labels, so the composition is unchanged.
-    relabel = connected_components_alternating(
-        PropertyGraph(cv, contracted)
-    ).select(
+    relabel = connected_components_alternating(graph_of(contracted)).select(
         F.col("id").alias("old_label"), F.col("component").alias("new_label")
     ).localCheckpoint(eager=True)
 
@@ -1200,10 +1010,8 @@ def g17_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id", F.coalesce("new_label", "component").alias("component")
     )
     batch_only = (
-        batch_e.select(F.col("src").alias("id"))
-        .unionAll(batch_e.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(base_v, "id", "left_anti")
+        graph_of(batch_e)
+        .vertices.join(base.vertices, "id", "left_anti")
         .join(relabel, F.col("id") == F.col("old_label"))
         .select("id", F.col("new_label").alias("component"))
     )
@@ -1212,7 +1020,7 @@ def g17_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- degree-stratified edge sampling (new in r7) -------------------------------
+# --- degree-stratified edge sampling ------------------------------------------
 #: Keep 1-in-4 edges per degree stratum (md5-portable, key-stable).
 _G18_MOD, _G18_KEEP = 4, 1
 
@@ -1220,9 +1028,7 @@ _G18_MOD, _G18_KEEP = 4, 1
 @query(
     "g18_degree_stratified_edge_sample",
     oracle=f"""
-    WITH edges AS MATERIALIZED (
-      SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst
-      FROM lineitem WHERE l_orderkey % 5 = 0),
+    WITH {_sql_graph(_SAMPLE)},
     deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src),
     strat AS (
       SELECT e.src, e.dst, CAST(floor(log2(d)) AS INTEGER) AS stratum,
@@ -1254,11 +1060,7 @@ _G18_MOD, _G18_KEEP = 4, 1
 def g18_degree_stratified_edge_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.pipelines.sampling import portable_bucket
 
-    li = tbl(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    edges = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-    )
+    edges = _edges(spark, sf_dir, _SAMPLE)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     strat = edges.join(deg, "src").select(
         "src",
@@ -1286,21 +1088,19 @@ def g18_degree_stratified_edge_sample(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-# --- GraphSAGE-style fanout neighborhood sampling (new in r9) ----------------
+# --- GraphSAGE-style fanout neighborhood sampling -----------------------------
 #: Per-hop fanout cap and the seed/edge thinning moduli. Seeds are a
 #: deterministic sliver of orders; edges the %3 slice of the bipartite
 #: order->part graph (the g18 fixture family).
 _G19_FANOUT = 4
 _G19_SEED_MOD = 211
-_G19_EDGE_MOD = 3
+_G19_EDGES = "l_orderkey % 3 = 0"
 
 
 def _g19_oracle() -> str:
     return f"""
-    WITH e AS (SELECT l_orderkey AS src,
-                      l_partkey + {_OFFSET} AS dst
-               FROM lineitem WHERE l_orderkey % {_G19_EDGE_MOD} = 0),
-    ed AS (SELECT DISTINCT src, dst FROM e),
+    WITH {_sql_graph(_G19_EDGES)},
+    ed AS (SELECT DISTINCT src, dst FROM edges),
     seeds AS (SELECT DISTINCT src AS seed FROM ed
               WHERE src % {_G19_SEED_MOD} = 0),
     h1r AS (SELECT s.seed, ed.dst,
@@ -1352,13 +1152,7 @@ def _g19_oracle() -> str:
 def g19_fanout_neighborhood_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.operators.relational import top_k_per_group
 
-    li = tbl(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % _G19_EDGE_MOD == 0
-    )
-    ed = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + _OFFSET).alias("dst"),
-    ).distinct()
+    ed = _edges(spark, sf_dir, _G19_EDGES).distinct()
     seeds = (
         ed.filter(F.col("src") % _G19_SEED_MOD == 0)
         .select(F.col("src").alias("seed"))

@@ -673,14 +673,22 @@ _EMBEDDING_CACHE_USERS = (
     "e34_ivfpq_recall_audit",
     "e35_ivfpq_nprobe_curve",
 )
+#: Graph-family queries whose library calls cache superstep state.
+_GRAPH_CACHE_USERS = (
+    "g06_bfs_shortest_paths",
+    "g07_triangle_count",
+    "g09_sssp_rounds",
+)
 
 
-@pytest.mark.parametrize("name", _CONTAINMENT_FAMILY + _EMBEDDING_CACHE_USERS)
+@pytest.mark.parametrize(
+    "name", _CONTAINMENT_FAMILY + _EMBEDDING_CACHE_USERS + _GRAPH_CACHE_USERS
+)
 def test_containment_query_releases_its_caches(spark, duck, name):
     """With the containment family's shared kernels built (then
-    clearCache), a containment-family or caching embedding-family query
-    leaves no entry in the SQL cache manager, and its answer, read after
-    the release, still matches the oracle."""
+    clearCache), a containment-family or caching embedding- or
+    graph-family query leaves no entry in the SQL cache manager, and its
+    answer, read after the release, still matches the oracle."""
     from goodreads_pyspark_spark.queries import REGISTRY, documents
     from tests.test_oracle_parity import SF_SMOKE, _norm
 

@@ -12,8 +12,10 @@ from goodreads_pyspark_spark.graph import (
     PropertyGraph,
     bfs,
     build_ratings_graph,
+    frames,
     label_propagation,
     pagerank,
+    pregel,
 )
 from goodreads_pyspark_spark.pipelines.goodreads import BOOK_ID_OFFSET
 
@@ -162,48 +164,55 @@ def test_label_propagation_community_count(graph):
     assert 1 <= n <= graph.vertices.count()
 
 
-def test_label_propagation_leaves_no_cached_blocks(spark, graph):
-    """The undirected edge view is cached per call; a long-lived session
-    running LPA over many graphs must not accumulate executor blocks —
-    the eager final checkpoint + unpersist must leave the cache manager
-    no fuller than it started."""
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    before = jcm.isEmpty()
-    label_propagation(graph, max_iter=2).count()
-    assert jcm.isEmpty() or not before
+def _hygiene_graph(spark):
+    """Triangle 1-2-3, path 3-4-5, isolated 6."""
+    v = spark.createDataFrame([(i,) for i in range(1, 7)], ["id"])
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], ["src", "dst"])
+    return PropertyGraph(v, e)
 
 
-def test_cc_alternating_and_kcore_leave_no_cached_blocks(spark, graph):
-    """The loop's final cached edge set must be released on return (the
-    result rides an eager checkpoint of the small per-vertex output)."""
-    from goodreads_pyspark_spark.graph.frames import kcore_trim
-    from goodreads_pyspark_spark.graph.pregel import (
-        connected_components_alternating,
+#: Every graph entry point, as a call on the ``_hygiene_graph``.
+_ENTRY_POINTS = {
+    "pagerank": lambda g: pagerank(g, tol=0.01, max_iter=3),
+    "pagerank_tol0": lambda g: pagerank(g, tol=0, max_iter=3),
+    "pagerank_scaled": lambda g: pregel.pagerank_scaled(g, n_iter=2),
+    "personalized_pagerank_scaled": lambda g: (
+        pregel.personalized_pagerank_scaled(g, "id = 1", n_iter=2)
+    ),
+    "label_propagation": lambda g: label_propagation(g, max_iter=2),
+    "bfs": lambda g: bfs(g, "id = 1", "id = 4"),
+    "bfs_paths": lambda g: pregel.bfs_paths(g, "id = 1", "id = 4"),
+    "connected_components": lambda g: pregel.connected_components(g),
+    "connected_components_alternating": lambda g: (
+        pregel.connected_components_alternating(g)
+    ),
+    "hits_scaled": lambda g: pregel.hits_scaled(g, n_iter=2),
+    "sssp_rounds": lambda g: pregel.sssp_rounds(
+        g.edges.withColumn("w", F.lit(2)), g.vertices.filter("id = 1"), rounds=2
+    ),
+    "multi_source_bfs": lambda g: pregel.multi_source_bfs(
+        g.edges, g.vertices.filter("id <= 2"), rounds=2
+    ),
+    "triangle_count": lambda g: frames.triangle_count(g.edges),
+    "kcore_trim": lambda g: frames.kcore_trim(g.edges, k=2, rounds=2),
+    "clustering_coefficients": lambda g: frames.clustering_coefficients(g.edges),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ENTRY_POINTS))
+def test_entry_point_leaves_no_cached_blocks(spark, name):
+    """A long-lived session calling graph entry points over many graphs
+    must not accumulate cached blocks: from a cleared cache, a call and
+    a collect of its result leave the cache manager empty."""
+    g = _hygiene_graph(spark)
+    spark.catalog.clearCache()
+    rows = _ENTRY_POINTS[name](g).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left cached plans behind"
     )
-
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    before = jcm.isEmpty()
-    connected_components_alternating(graph).count()
-    kcore_trim(graph.edges, k=2, rounds=2).count()
-    assert jcm.isEmpty() or not before
-
-
-def test_clustering_coefficients_leave_no_cached_blocks(spark):
-    """Same hygiene for the three working caches of
-    clustering_coefficients (bench loops call it repeatedly)."""
-    from goodreads_pyspark_spark.graph.frames import clustering_coefficients
-
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], ["src", "dst"]
-    )
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    before = jcm.isEmpty()
-    got = {
-        r["id"]: r["clustering_coeff"]
-        for r in clustering_coefficients(e).collect()
-    }
-    assert abs(got[1] - 1.0) < 1e-12 and abs(got[3] - 1 / 3) < 1e-12
-    assert jcm.isEmpty() or not before
+    if name == "clustering_coefficients":
+        got = {r["id"]: r["clustering_coeff"] for r in rows}
+        assert abs(got[1] - 1.0) < 1e-12 and abs(got[3] - 1 / 3) < 1e-12
 
 
 def test_connected_components(spark):

@@ -57,3 +57,10 @@ def test_export_contract():
     oracles = __spark_entry__.oracle_sql()
     assert set(oracles) <= set(names)
     assert oracles == {n: q.oracle for n, q in REGISTRY.items() if q.oracle is not None}
+
+
+def test_no_query_name_is_a_prefix_of_another():
+    """The tools select queries by name prefix; a full name must select
+    exactly that query."""
+    names = sorted(REGISTRY)
+    assert not [(a, b) for a, b in zip(names, names[1:]) if b.startswith(a)]

@@ -48,6 +48,7 @@ CHECKPOINTED_RESULTS = {
     "e33_ivfpq_residual_adc",
     "e34_ivfpq_recall_audit",
     "e35_ivfpq_nprobe_curve",
+    "g15_landmark_harmonic",
     "t22_association_rules",
     "h03_rag_context_pack",
     "h04_rerank_calibration",
@@ -360,15 +361,27 @@ def test_e09_broadcasts_query_block(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_g07_no_cartesian_and_pruned_scan(spark):
+def test_g07_no_cartesian_and_pruned_scan(spark, monkeypatch):
     # Degree-ordered triangle counting: every stage is a keyed join. The
     # query consumes the session-memoized co-occurrence pair checkpoint
-    # (g07/g08/g11 share one build), so the pruned-scan assertion runs
+    # (g07/g08/g11/g12 share one build), so the pruned-scan assertion runs
     # against the KERNEL's lazy plan and the query plan is asserted to
-    # actually consume the checkpoint.
+    # actually consume the checkpoint. triangle_count checkpoints its
+    # one-row result to release its caches, so the query plan audited is
+    # the lazy frame it hands to _truncate.
+    from goodreads_pyspark_spark.graph import frames
     from goodreads_pyspark_spark.queries.graph import _copart_pairs
 
-    plan = plan_of(spark, "g07_triangle_count")
+    lazy = []
+    truncate = frames._truncate
+    monkeypatch.setattr(
+        frames, "_truncate", lambda df, **kw: lazy.append(df) or truncate(df, **kw)
+    )
+    plan_of(spark, "g07_triangle_count")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        lazy[-1].explain("formatted")
+    plan = buf.getvalue()
     assert "CartesianProduct" not in plan
     assert "Scan ExistingRDD" in plan, "must consume the memoized kernel"
     buf = io.StringIO()

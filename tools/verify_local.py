@@ -8,7 +8,11 @@ leaking query runs once more, and the leak is "per call" if that run
 leaks again, or a one-time "memo build" (a session memo's first build)
 if it does not. Leaks are reported, not failed. Usage:
 
-    python tools/verify_local.py [sf_dir] [query_name ...]
+    python tools/verify_local.py [sf_dir] [name-prefix ...]
+
+A prefix selects every query whose name starts with it (``g0 g1`` runs
+g01-g19); no registered name is a prefix of another, so a full name
+selects exactly that query.
 """
 
 from __future__ import annotations
@@ -58,7 +62,7 @@ def _norm_rows(cols, rows):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = tuple(sys.argv[2:])
     _load_all()
     con = duckdb_views(sf_dir)
 
@@ -83,7 +87,7 @@ def main() -> int:
     probe_s = 0.0  # leak re-runs, kept out of the reported query time
     t_start = time.time()
     for name, q in sorted(REGISTRY.items()):
-        if only and name not in only:
+        if only and not name.startswith(only):
             continue
         t0 = time.time()
         spark.catalog.clearCache()
