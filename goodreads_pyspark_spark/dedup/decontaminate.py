@@ -52,16 +52,14 @@ def contamination_stats(
             f"precomputed shingles must have (id, sh) columns, got {shingles.columns}"
         )
     if shingles is None:
-        tsh = shingle_rows(train, id_col, text_col, shingle_n, out_id="id").cache()
+        tsh = shingle_rows(train, id_col, text_col, shingle_n, out_id="id")
         esh = (
             shingle_rows(eval_df, id_col, text_col, shingle_n, out_id="eid")
             .select("sh")
             .distinct()
         )
     else:
-        tsh = shingles.join(
-            train.select(F.col(id_col).alias("id")), "id", "left_semi"
-        ).cache()
+        tsh = shingles.join(train.select(F.col(id_col).alias("id")), "id", "left_semi")
         esh = (
             shingles.join(
                 eval_df.select(F.col(id_col).alias("id")), "id", "left_semi"

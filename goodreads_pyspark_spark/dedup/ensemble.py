@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.dedup.minhash import (
+    cap_buckets,
     minhash_signatures_from_shingles,
 )
 from goodreads_pyspark_spark.dedup.shingles import shingle_hash
@@ -173,26 +174,11 @@ def lsh_ensemble_candidate_pairs(
     )
     keyed = _pin(keyed, cache_registry)
 
-    index = keyed.filter(F.col("part") == F.col("p"))
-    if max_bucket is not None:
-        counts = index.groupBy("p", "band", "key").agg(
-            F.count(F.lit(1)).alias("__n")
-        )
-        index = index.join(
-            counts.filter(F.col("__n") <= max_bucket).drop("__n"),
-            ["p", "band", "key"],
-        )
-    probe = keyed.filter(F.col("p") >= F.col("part"))
+    bucket = ["p", "band", "key"]
+    index = cap_buckets(keyed.filter(F.col("part") == F.col("p")), bucket, max_bucket)
     if max_probe is None and max_bucket is not None:
         max_probe = 4 * max_bucket
-    if max_probe is not None:
-        pcounts = probe.groupBy("p", "band", "key").agg(
-            F.count(F.lit(1)).alias("__m")
-        )
-        probe = probe.join(
-            pcounts.filter(F.col("__m") <= max_probe).drop("__m"),
-            ["p", "band", "key"],
-        )
+    probe = cap_buckets(keyed.filter(F.col("p") >= F.col("part")), bucket, max_probe)
 
     q, x = probe.alias("q"), index.alias("x")
     return (

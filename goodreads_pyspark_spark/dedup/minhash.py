@@ -87,26 +87,45 @@ def lsh_candidate_pairs_from_signatures(
     same ``num_hashes`` — so a sweep computes signatures ONCE and calls
     this per config.
     """
+    _check_bands(num_hashes, bands)
+    # Both sides of the self-join read the banded keys; the planner reuses
+    # the signature exchange, so the signatures are computed once uncached.
+    banded = _band_signatures(sigs, id_col, num_hashes, bands)
+    return band_pairs(banded, id_col, ["band", "key"], max_bucket)
+
+
+def _check_bands(num_hashes: int, bands: int) -> None:
     if bands > num_hashes or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes}) evenly; "
             "a non-divisible split would silently drop trailing hashes "
             "from every band and change candidate recall"
         )
-    # Cache: both sides of the self-join consume this subtree; uncached,
-    # the whole signature computation runs twice.
-    banded = _band_signatures(sigs, id_col, num_hashes, bands).cache()
-    if max_bucket is not None:
-        # Guard against degenerate buckets (e.g. boilerplate-heavy corpora):
-        # a bucket of size m yields m^2 join rows.
-        counts = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
-        banded = banded.join(
-            counts.filter(F.col("__n") <= max_bucket).drop("__n"), ["band", "key"]
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
+
+
+def cap_buckets(rows: DataFrame, keys: list[str], max_bucket: int | None) -> DataFrame:
+    """``rows`` without those in buckets (equal ``keys``) of more than
+    ``max_bucket`` rows; all of them when ``max_bucket`` is None.
+
+    The degenerate-bucket guard of every banded search (MinHash, SimHash,
+    LSH-Ensemble, sign-LSH): a bucket of m rows yields m^2 join rows, and
+    boilerplate-heavy corpora concentrate mass in a few buckets.
+    """
+    if max_bucket is None:
+        return rows
+    counts = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+    return rows.join(counts.filter(F.col("__n") <= max_bucket).drop("__n"), keys)
+
+
+def band_pairs(
+    banded: DataFrame, id_col: str, keys: list[str], max_bucket: int | None = None
+) -> DataFrame:
+    """Distinct ``(doc_a < doc_b)`` pairs of ``banded`` rows sharing a
+    bucket (equal ``keys``), hot buckets capped by :func:`cap_buckets`."""
+    banded = cap_buckets(banded, keys, max_bucket)
+    a, b = banded.alias("a"), banded.alias("b")
     return (
-        a.join(b, ["band", "key"])
+        a.join(b, keys)
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
             F.col(f"a.{id_col}").alias("doc_a"),
@@ -138,6 +157,23 @@ def _banded_keys(
     """(id_col, band, key) rows from a shingle table — the LSH index form."""
     sigs = minhash_signatures_from_shingles(sh, id_col, num_hashes)
     return _band_signatures(sigs, id_col, num_hashes, bands)
+
+
+def band_index(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """The standing corpus's (id_col, band, key) LSH index, hot buckets
+    capped: what an ingest batch is matched against."""
+    _check_bands(num_hashes, bands)
+    sh = shingle_rows(docs, id_col, text_col, shingle_n, out_id=id_col)
+    keys = _banded_keys(sh, id_col, num_hashes, bands)
+    return cap_buckets(keys, ["band", "key"], max_bucket)
 
 
 def _band_signatures(
@@ -178,19 +214,9 @@ def incremental_lsh_matches(
 
     Returns distinct (new_id, corpus_id) collision pairs.
     """
-    if bands > num_hashes or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}) evenly"
-        )
-    cb = _banded_keys(
-        shingle_rows(corpus, id_col, text_col, shingle_n, out_id=id_col),
-        id_col, num_hashes, bands,
+    cb = band_index(
+        corpus, id_col, text_col, num_hashes, bands, shingle_n, max_bucket
     ).withColumnRenamed(id_col, "corpus_id")
-    if max_bucket is not None:
-        counts = cb.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
-        cb = cb.join(
-            counts.filter(F.col("__n") <= max_bucket).drop("__n"), ["band", "key"]
-        )
     ib = _banded_keys(
         shingle_rows(incoming, id_col, text_col, shingle_n, out_id=id_col),
         id_col, num_hashes, bands,

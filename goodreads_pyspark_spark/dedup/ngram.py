@@ -13,12 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from goodreads_pyspark_spark.dedup.minhash import cap_buckets
 from goodreads_pyspark_spark.dedup.shingles import shingle_hash, shingle_rows
 
 
-def _shingle_overlap(
-    sh: DataFrame, max_df: int | None, already_cached: bool
-) -> DataFrame:
+def _shingle_overlap(sh: DataFrame, max_df: int | None) -> DataFrame:
     """``(doc_b, doc_a, n_common, sz_a, sz_b, jaccard)`` for every pair
     (doc_a < doc_b) sharing >= 1 hashed shingle of ``(id, sh)`` rows.
 
@@ -31,22 +30,11 @@ def _shingle_overlap(
     and row counts are unchanged because the input is distinct
     (id, shingle) rows.
 
-    The shingle table feeds three consumers (sizes, both join sides);
-    ``already_cached=True`` means the caller owns a cached ``sh`` (e.g.
-    the corpus pipeline sharing it with MinHash), so at most one extra
-    cached copy (the df-capped table) lives here.
+    Nothing is cached here: the shingle table feeds three consumers
+    (sizes, both join sides), and a 10-pair A/B showed no gain from
+    caching it or its df-capped form (CHANGES.md).
     """
-    sh = sh.withColumn("sh", shingle_hash())
-    if max_df is not None:
-        # Cache the raw shingles first: the df-count and the cap join both
-        # consume them, and uncached each side re-runs the tokenizer pass.
-        if not already_cached:
-            sh = sh.cache()
-        dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
-        sh = sh.join(dfreq.filter(F.col("__df") <= max_df).drop("__df"), "sh")
-        sh = sh.cache()
-    elif not already_cached:
-        sh = sh.cache()
+    sh = cap_buckets(sh.withColumn("sh", shingle_hash()), ["sh"], max_df)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -76,9 +64,10 @@ def jaccard_pairs_from_shingles(
 ) -> DataFrame:
     """(doc_a < doc_b, jaccard) from a prebuilt ``(id, sh)`` shingle table,
     for pairs with Jaccard >= ``threshold`` (see ``_shingle_overlap`` for
-    the hashing, ``max_df`` and ``already_cached`` contract)."""
+    the hashing and ``max_df``). ``already_cached`` is accepted and has
+    no effect: the kernel caches nothing either way."""
     return (
-        _shingle_overlap(sh, max_df, already_cached)
+        _shingle_overlap(sh, max_df)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -98,9 +87,7 @@ def jaccard_pairs(
 
 
 def containment_pairs_from_shingles(
-    sh: DataFrame,
-    max_df: int | None = None,
-    already_cached: bool = False,
+    sh: DataFrame, max_df: int | None = None
 ) -> DataFrame:
     """Asymmetric containment per shingle-sharing pair.
 
@@ -118,7 +105,7 @@ def containment_pairs_from_shingles(
     (2.1s → 1.7s) even as near-dup density grows output pairs 17× —
     the cap, not luck, is what holds the join.
     """
-    return _shingle_overlap(sh, max_df, already_cached).withColumn(
+    return _shingle_overlap(sh, max_df).withColumn(
         "containment",
         F.col("n_common").cast("double") / F.least("sz_a", "sz_b").cast("double"),
     )

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from goodreads_pyspark_spark.dedup.minhash import band_pairs
 from goodreads_pyspark_spark.functions.text import tokens
 from goodreads_pyspark_spark.operators.partitioning import fan_out
 
@@ -104,9 +105,7 @@ def simhash_neardup_pairs(
         )
     width = bits // bands
     mask = (1 << width) - 1
-    # Both the band self-join AND the verify joins read this subtree —
-    # cached, the corpus is tokenized exactly once.
-    sigs = simhash_signatures(df, id_col, text_col, bits).cache()
+    sigs = simhash_signatures(df, id_col, text_col, bits)
     slices = [
         F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask))
         for b in range(bands)
@@ -114,21 +113,7 @@ def simhash_neardup_pairs(
     banded = sigs.select(
         F.col(id_col), F.posexplode(F.array(*slices)).alias("band", "val")
     )
-    if max_bucket is not None:
-        counts = banded.groupBy("band", "val").agg(F.count(F.lit(1)).alias("__n"))
-        banded = banded.join(
-            counts.filter(F.col("__n") <= max_bucket).drop("__n"), ["band", "val"]
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, ["band", "val"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .distinct()
-    )
+    cand = band_pairs(banded, id_col, ["band", "val"], max_bucket)
     sa = sigs.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("__sig_a"))
     sb = sigs.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("__sig_b"))
     return (

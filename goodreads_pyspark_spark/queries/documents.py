@@ -14,11 +14,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goodreads_pyspark_spark.dedup import (
-    dup_group_stats,
-    lsh_candidate_pairs,
-    simhash_signatures,
-)
+from goodreads_pyspark_spark.dedup import dup_group_stats, simhash_signatures
 from goodreads_pyspark_spark.dedup.ensemble import (
     _pin,
     build_containment_standing,
@@ -29,7 +25,8 @@ from goodreads_pyspark_spark.dedup.ensemble import (
     lsh_ensemble_candidate_pairs,
 )
 from goodreads_pyspark_spark.dedup.minhash import (
-    _band_signatures,
+    _banded_keys,
+    band_index,
     lsh_candidate_pairs_from_signatures,
     minhash_signatures_from_shingles,
 )
@@ -54,14 +51,197 @@ from goodreads_pyspark_spark.queries._helpers import (
 
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
-# Shared oracle CTEs: tokens and distinct 3-word shingles.
+# --- shared oracle builders ---------------------------------------------------
+# The near-dup family (d06-d35, c01-c06, d62, s12) and the containment
+# family (d63-d71, io18, io21, io22, s15) replay the engine's shingles,
+# MinHash signatures, band keys, bucket caps and exact pair overlap in
+# DuckDB with the plain-SQL builders below (CTE names and numbers in, CTE
+# text out). DuckDB builds every ``AS MATERIALIZED`` CTE whether or not
+# anything reads it, so each builder emits only what its callers read.
+
+#: The containment family's LSH-Ensemble geometry (see its section).
+_D65_HASHES = 16
+_D65_EDGES = (24, 48, 72)
+_D65_ROWS = (2, 2, 1, 1)
+
+
+def _sql_h60(expr: str) -> str:
+    """DuckDB mirror of the engine's 60-bit md5-prefix hash of ``expr``."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
+
+
+def _sql_ngrams(out: str, n: int, toks: str = "tk") -> str:
+    """``out``: (doc_id, sh) — each distinct ``n``-word shingle of the
+    token lists ``t`` of ``toks`` (``shingle_rows``)."""
+    gram = " || ' ' || ".join(f"t[i+{k}]" if k else "t[i]" for k in range(n))
+    return f"""{out} AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(
+              list_transform(range(1, len(t) - {n - 2}), i -> {gram}))) AS sh
+            FROM {toks} WHERE len(t) >= {n})"""
+
+
+def _sql_hashed(src: str) -> str:
+    """``shh``: ``src``'s (doc_id, sh) rows with the 60-bit shingle hash
+    (``shingle_hash``)."""
+    return f"shh AS MATERIALIZED (SELECT doc_id, {_sql_h60('sh')} AS sh FROM {src})"
+
+
+#: ``tk``: every document's tokens.
+_TK = f"tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents)"
+#: ``tk`` and ``sh`` (distinct 3-word shingles) of every document.
 _SHINGLE_CTES = f"""
-    tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    idx AS (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i
-            FROM tk WHERE len(t) >= 3),
-    sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-           FROM idx)
-"""
+    {_TK},
+    {_sql_ngrams("sh", 3)}"""
+
+
+def _sql_part(size: str, edges=_D65_EDGES) -> str:
+    """Size partition of the expression ``size`` over exclusive upper
+    ``edges`` — the engine's ``_partition_of``."""
+    whens = " ".join(f"WHEN {size} < {e} THEN {p}" for p, e in enumerate(edges))
+    return f"CASE {whens} ELSE {len(edges)} END"
+
+
+def _sql_signatures(
+    parts: dict[str, str] | None = None,
+    edges=_D65_EDGES,
+    join="",
+    src="sh0",
+    n_hashes=_D65_HASHES,
+) -> str:
+    """``sig``: per ``src`` doc its salted min-hashes ``mh0..``, its
+    shingle count ``sz`` and one partition column per ``parts`` entry
+    (name -> size expression, e.g. a probe floor over ``sz``); ``join``
+    brings in data-dependent ``edges``. A doc's signature depends only on
+    its own shingles, so one table serves every corpus split."""
+    mins = ",\n           ".join(
+        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(n_hashes)
+    )
+    parts = parts or {}
+    cols = "".join(f", {_sql_part(v, edges)} AS {n}" for n, v in parts.items())
+    return f"""sig AS MATERIALIZED (SELECT *{cols} FROM (SELECT doc_id,
+           {mins},
+           count(*) AS sz FROM {src} GROUP BY doc_id) s{join})"""
+
+
+def _sql_band_keys(
+    cols: str, out="keys", rows=_D65_ROWS, n_hashes=_D65_HASHES, key=_sql_h60
+) -> str:
+    """``out``: ``cols`` of ``sig`` plus (p, band, key) for every band of
+    every partition's rows-per-band scheme. Index sides keep
+    ``p = part``; probe sides keep ``p >= part`` or ``p >= pmin``."""
+    branches = [
+        f"SELECT {cols}, {p} AS p, {b} AS band, "
+        f"{key(' || '.join(f'mh{b * r + k}' for k in range(r)))} AS key FROM sig"
+        for p, r in enumerate(rows)
+        for b in range(n_hashes // r)
+    ]
+    return f"{out} AS MATERIALIZED (\n      " + "\n      UNION ALL ".join(
+        branches
+    ) + ")"
+
+
+def _sql_md5_keys(out: str, rows: int = 2) -> str:
+    """``out``: (doc_id, p, band, key) in the d07 convention — ``sig``'s
+    mh0..mh7 in bands of ``rows``, md5 keys (``_band_signatures``)."""
+    return _sql_band_keys(
+        "doc_id", out, rows=(rows,), n_hashes=8, key=lambda e: f"md5({e})"
+    )
+
+
+def _sql_capped(out: str, src: str, cap: int, keys: str = "p, band, key") -> str:
+    """``{out}_n``: the bucket (``keys``) sizes of ``src``; ``out``:
+    ``src``'s rows in buckets of at most ``cap`` (``cap_buckets``)."""
+    return f"""{out}_n AS MATERIALIZED (SELECT {keys}, count(*) AS n
+          FROM {src} GROUP BY {keys}),
+    {out} AS MATERIALIZED (SELECT {src}.* FROM {src}
+          JOIN {out}_n USING ({keys}) WHERE n <= {cap})"""
+
+
+def _sql_self_pairs(out: str, src: str, keys: str = "p, band, key") -> str:
+    """``out``: distinct (doc_a < doc_b) pairs of ``src`` rows sharing
+    ``keys`` — the band self-join (``band_pairs``)."""
+    return f"""{out} AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM {src} a JOIN {src} b USING ({keys})
+          WHERE a.doc_id < b.doc_id)"""
+
+
+def _sql_plain_cands(out: str, cap: int | None = None, rows: int = 2) -> str:
+    """``out``: (doc_a < doc_b) pairs sharing a d07-convention band
+    (``_sql_md5_keys``), in a bucket of at most ``cap`` docs when a cap
+    is given — ``lsh_candidate_pairs_from_signatures``, the
+    Jaccard-banding baseline."""
+    ctes, src = [_sql_md5_keys(f"{out}_k", rows)], f"{out}_k"
+    if cap is not None:
+        ctes.append(_sql_capped(f"{out}_f", src, cap))
+        src = f"{out}_f"
+    return ",\n    ".join(ctes + [_sql_self_pairs(out, src)])
+
+
+def _sql_batch_matches(out: str, batch: str, cap: int) -> str:
+    """``out``: distinct (new_id, corpus_id) pairs where a doc matching
+    ``batch`` shares a d07-convention band with a corpus doc (every other
+    doc) in a corpus bucket of at most ``cap`` — ``incremental_lsh_matches``."""
+    return f"""{_sql_md5_keys(f"{out}_k")},
+    {out}_c AS MATERIALIZED (SELECT * FROM {out}_k WHERE NOT ({batch})),
+    {_sql_capped(f"{out}_x", f"{out}_c", cap)},
+    {out} AS MATERIALIZED (SELECT DISTINCT q.doc_id AS new_id, x.doc_id AS corpus_id
+          FROM (SELECT * FROM {out}_k WHERE {batch}) q
+          JOIN {out}_x x USING (p, band, key))"""
+
+
+def _sql_df_cap(sfx: str, member: str, cap: int) -> str:
+    """Over the ``shh`` rows of docs matching ``member``: ``dfreq{sfx}``
+    (shingle doc frequency), ``hot{sfx}`` (shingles in more than ``cap``
+    docs) and ``st{sfx}`` (those rows without hot shingles)."""
+    return f"""dfreq{sfx} AS MATERIALIZED (SELECT sh, count(*) AS df FROM shh
+          WHERE {member} GROUP BY sh),
+    hot{sfx} AS MATERIALIZED (SELECT sh FROM dfreq{sfx} WHERE df > {cap}),
+    st{sfx} AS MATERIALIZED (SELECT * FROM shh
+          WHERE {member} AND sh NOT IN (SELECT sh FROM hot{sfx}))"""
+
+
+def _sql_pairs(out: str, src: str, cands: str | None = None) -> str:
+    """``{out}_sz`` (doc_id, sz) over the (doc_id, sh) rows of ``src`` and
+    ``out``: every pair doc_a < doc_b sharing a shingle of ``src`` (and
+    listed in ``cands``, when given), with n_common, sizes sz_a/sz_b,
+    jaccard and containment — ``containment_pairs_from_shingles``. Over
+    ``st`` (``_sql_df_cap``) the sizes count the capped shingles."""
+    only = f"\n          JOIN {cands} USING (doc_a, doc_b)" if cands else ""
+    return f"""{out}_sz AS MATERIALIZED (SELECT doc_id, count(*) AS sz
+          FROM {src} GROUP BY doc_id),
+    {out} AS MATERIALIZED (SELECT doc_a, doc_b, n_common,
+             sa.sz AS sz_a, sb.sz AS sz_b,
+             CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) AS jaccard,
+             CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz) AS containment
+          FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                       count(*) AS n_common
+                FROM {src} a JOIN {src} b USING (sh)
+                WHERE a.doc_id < b.doc_id GROUP BY 1, 2) i{only}
+          JOIN {out}_sz sa ON sa.doc_id = doc_a
+          JOIN {out}_sz sb ON sb.doc_id = doc_b)"""
+
+
+def _sql_contamination(out: str, sh: str) -> str:
+    """``out``: (doc_id, n_shared, n_shingles, contamination) for every
+    train doc (doc_id % 20 <> 0) of the shingle rows ``sh`` sharing a
+    shingle with the eval docs (doc_id % 20 = 0) — ``contamination_stats``
+    over d15's split."""
+    return f"""{out}_tr AS MATERIALIZED (SELECT doc_id, sh FROM {sh}
+          WHERE doc_id % 20 <> 0),
+    {out}_ev AS MATERIALIZED (SELECT DISTINCT sh FROM {sh} WHERE doc_id % 20 = 0),
+    {out} AS MATERIALIZED (SELECT doc_id, n_shared, n_shingles,
+             CAST(n_shared AS DOUBLE) / CAST(n_shingles AS DOUBLE) AS contamination
+          FROM (SELECT doc_id, count(*) AS n_shared
+                FROM {out}_tr JOIN {out}_ev USING (sh) GROUP BY doc_id) h
+          JOIN (SELECT doc_id, count(*) AS n_shingles
+                FROM {out}_tr GROUP BY doc_id) z USING (doc_id))"""
+
+
+def _sql_shard(doc_id: str, n_shards: int) -> str:
+    """``portable_bucket(doc_id, 'shard-v1', n_shards)`` (BIGINT)."""
+    return (
+        f"CAST(('0x' || substr(md5(CAST({doc_id} AS VARCHAR) || 'shard-v1'),"
+        f" 1, 8)) AS BIGINT) % {n_shards}"
+    )
 
 
 # --- token counting ---------------------------------------------------------
@@ -218,6 +398,16 @@ def d05_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 D06_MAX_DF = 100
 
 
+def _sql_jac_pairs() -> str:
+    """d06's exact verifier: 3-word shingles, their hashes, the
+    ``D06_MAX_DF`` cap and ``pr`` (``_sql_pairs`` over the capped rows)
+    — ``jaccard_pairs(max_df=D06_MAX_DF)`` before its threshold."""
+    return f"""{_SHINGLE_CTES},
+    {_sql_hashed("sh")},
+    {_sql_df_cap("", "TRUE", D06_MAX_DF)},
+    {_sql_pairs("pr", "st")}"""
+
+
 @session_memo
 def _jac05_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) pairs at threshold 0.5, df cap 100."""
@@ -286,11 +476,6 @@ def _minhash_sigs8(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-shingles for d07/d23/d34. One row per doc with >=1 shingle,
     columns mh0..mh7. Built per call: a session memo did not pay here
     (A/B in CHANGES.md)."""
-    from goodreads_pyspark_spark.dedup.minhash import (
-        minhash_signatures_from_shingles,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     sh = shingle_rows(tbl(spark, sf_dir, "documents"), out_id="doc_id")
     sigs = minhash_signatures_from_shingles(sh, "doc_id", num_hashes=8)
     return sigs.localCheckpoint()
@@ -299,23 +484,8 @@ def _minhash_sigs8(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d06_jaccard_neardup_pairs",
     oracle=f"""
-    WITH {_SHINGLE_CTES},
-    shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh),
-    dfreq AS (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {D06_MAX_DF}),
-    sz AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM shf a JOIN shf b USING (sh) WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT doc_a, doc_b,
-           CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) AS jaccard
-    FROM inter
-    JOIN sz sa ON sa.doc_id = doc_a
-    JOIN sz sb ON sb.doc_id = doc_b
-    WHERE CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) >= 0.5
+    WITH {_sql_jac_pairs()}
+    SELECT doc_a, doc_b, jaccard FROM pr WHERE jaccard >= 0.5
     """,
     doc="Exact 3-gram Jaccard ≥0.5 via inverted-index self-join "
     "(dedup/ngram.py); only shingle-sharing pairs materialize. The "
@@ -333,52 +503,24 @@ def d06_jaccard_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: buckets. Mirrored in the oracle so both engines drop the same buckets.
 D07_MAX_BUCKET = 100
 
-def _minhash_oracle(
-    num_hashes: int = 8, bands: int = 4, max_bucket: int | None = None
-) -> str:
-    r = num_hashes // bands
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(num_hashes)
-    )
-    band_rows = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"md5({' || '.join(f'mh{b * r + k}' for k in range(r))}) AS key FROM mh"
-        for b in range(bands)
-    )
-    src = "bands"
-    cap_ctes = ""
-    if max_bucket is not None:
-        cap_ctes = f""",
-    bc AS (SELECT band, key, count(*) AS n FROM bands GROUP BY band, key),
-    bf AS (SELECT bands.* FROM bands JOIN bc USING (band, key)
-           WHERE n <= {max_bucket})"""
-        src = "bf"
+def _minhash_oracle(max_bucket: int) -> str:
     return f"""
     WITH {_SHINGLE_CTES},
-    mh AS (SELECT doc_id,
-           {mins}
-           FROM sh GROUP BY doc_id),
-    bands AS (
-{band_rows}){cap_ctes}
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM {src} a JOIN {src} b USING (band, key)
-    WHERE a.doc_id < b.doc_id
+    {_sql_signatures(src="sh", n_hashes=8)},
+    {_sql_plain_cands("cand", max_bucket)}
+    SELECT doc_a, doc_b FROM cand
     """
 
 
 @query(
     "d07_minhash_lsh_candidates",
-    oracle=_minhash_oracle(max_bucket=D07_MAX_BUCKET),
+    oracle=_minhash_oracle(D07_MAX_BUCKET),
     doc="MinHash(8)+LSH(4 bands) candidate pairs (dedup/minhash.py): only "
     "(doc_id, band, key) rows shuffle; candidates ∝ true near-dups. "
     "max_bucket (mirrored in the oracle) drops degenerate hot buckets "
     "before the self-join — the 100 TB skew guard.",
 )
 def d07_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.minhash import (
-        lsh_candidate_pairs_from_signatures,
-    )
-
     return lsh_candidate_pairs_from_signatures(
         _minhash_sigs8(spark, sf_dir),
         num_hashes=8,
@@ -436,7 +578,7 @@ D11_MAX_BUCKET = 100
 
 
 def _simhash_pairs_oracle(
-    bits: int = 48, bands: int = 4, max_hamming: int = 3, max_bucket: int | None = None
+    max_bucket: int, bits: int = 48, bands: int = 4, max_hamming: int = 3
 ) -> str:
     width = bits // bands
     mask = (1 << width) - 1
@@ -445,21 +587,12 @@ def _simhash_pairs_oracle(
         "AS val FROM s"
         for b in range(bands)
     )
-    src = "banded"
-    cap = ""
-    if max_bucket is not None:
-        cap = f""",
-    bc AS (SELECT band, val, count(*) AS n FROM banded GROUP BY band, val),
-    bf AS (SELECT banded.* FROM banded JOIN bc USING (band, val)
-           WHERE n <= {max_bucket})"""
-        src = "bf"
     return f"""
     WITH {_simhash_sig_ctes(bits)},
     banded AS (
-{band_rows}){cap},
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM {src} a JOIN {src} b USING (band, val)
-             WHERE a.doc_id < b.doc_id)
+{band_rows}),
+    {_sql_capped("bf", "banded", max_bucket, "band, val")},
+    {_sql_self_pairs("cand", "bf", "band, val")}
     SELECT doc_a, doc_b,
            CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming
     FROM cand
@@ -471,7 +604,7 @@ def _simhash_pairs_oracle(
 
 @query(
     "d11_simhash_neardup_pairs",
-    oracle=_simhash_pairs_oracle(max_bucket=D11_MAX_BUCKET),
+    oracle=_simhash_pairs_oracle(D11_MAX_BUCKET),
     doc="SimHash near-dup pairs (dedup/simhash.py): 48-bit signatures, 4 "
     "banded 12-bit slices for candidates (pigeonhole: exact recall at "
     "hamming<=3), full Hamming verify. Only (id, band, slice) rows "
@@ -522,19 +655,11 @@ def d09_vocabulary_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- the full corpus-cleaning pipeline, oracle-checked ----------------------
-def _clean_corpus_ctes(
-    min_tokens: int = 20, jaccard: float = 0.8, num_hashes: int = 8, bands: int = 4
-) -> str:
-    """The c01 clean chain as a reusable CTE body (ending at ``verified``);
-    c01 selects the survivors, c06 reads the intermediate stages for its
-    per-doc disposition ledger."""
-    r = num_hashes // bands
-    mins = ", ".join(f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(num_hashes))
-    band_rows = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"md5({' || '.join(f'mh{b * r + k}' for k in range(r))}) AS key FROM mh"
-        for b in range(bands)
-    )
+def _clean_corpus_ctes(min_tokens: int = 20, jaccard: float = 0.8) -> str:
+    """The c01 clean chain as a reusable CTE body: ``tk0`` (every doc's
+    tokens), ``q`` (past the quality gate), ``kept1`` (exact-dedup
+    survivors), MinHash candidates verified by exact Jaccard and
+    ``clean`` (the near-dup survivors). c03 and c06 read the stages."""
     return f"""
     tk0 AS (SELECT doc_id, text, {_TOKS} AS t FROM documents),
     q AS (SELECT * FROM tk0
@@ -543,45 +668,18 @@ def _clean_corpus_ctes(
     surv AS (SELECT MIN(doc_id) AS doc_id
              FROM q GROUP BY md5(lower(trim(text)))),
     kept1 AS (SELECT q.* FROM q JOIN surv USING (doc_id)),
-    idx AS (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i
-            FROM kept1 WHERE len(t) >= 3),
-    sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-           FROM idx),
-    mh AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    bands AS (
-{band_rows}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b USING (band, key)
-             WHERE a.doc_id < b.doc_id),
-    sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS nc
-              FROM shh a JOIN shh b USING (sh) WHERE a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-    verified AS (
-      SELECT i.doc_a, i.doc_b
-      FROM inter i
-      JOIN cand USING (doc_a, doc_b)
-      JOIN sz sa ON sa.doc_id = i.doc_a
-      JOIN sz sb ON sb.doc_id = i.doc_b
-      WHERE CAST(nc AS DOUBLE) / (sa.sz + sb.sz - nc) >= {jaccard})
-    """
-
-
-def _clean_corpus_oracle(
-    min_tokens: int = 20, jaccard: float = 0.8, num_hashes: int = 8, bands: int = 4
-) -> str:
-    return f"""
-    WITH {_clean_corpus_ctes(min_tokens, jaccard, num_hashes, bands)}
-    SELECT doc_id FROM kept1
-    WHERE doc_id NOT IN (SELECT doc_b FROM verified)
-    """
+    {_sql_ngrams("sh", 3, "kept1")},
+    {_sql_signatures(src="sh", n_hashes=8)},
+    {_sql_plain_cands("cand")},
+    {_sql_hashed("sh")},
+    {_sql_pairs("pr", "shh", "cand")},
+    clean AS (SELECT doc_id FROM kept1 WHERE doc_id NOT IN (
+          SELECT doc_b FROM pr WHERE jaccard >= {jaccard}))"""
 
 
 @query(
     "c01_clean_corpus",
-    oracle=_clean_corpus_oracle(),
+    oracle=f"WITH {_clean_corpus_ctes()} SELECT doc_id FROM clean",
     doc="The full training-corpus cleaning pipeline (pipelines/corpus.py): "
     "quality gate -> exact dedup -> LSH-candidate near-dup removal with "
     "exact Jaccard verification. Output: surviving doc ids.",
@@ -840,16 +938,10 @@ def d14_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d15_decontamination",
     oracle=f"""
     WITH {_SHINGLE_CTES},
-    tr AS MATERIALIZED (SELECT doc_id, sh FROM sh WHERE doc_id % 20 <> 0),
-    ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 20 = 0),
-    hits AS (SELECT doc_id, count(*) AS n_shared
-             FROM tr JOIN ev USING (sh) GROUP BY doc_id),
-    sz AS (SELECT doc_id, count(*) AS n_shingles FROM tr GROUP BY doc_id)
+    {_sql_contamination("contam", "sh")}
     SELECT doc_id, CAST(n_shared AS BIGINT) AS n_shared,
-           CAST(n_shingles AS BIGINT) AS n_shingles,
-           CAST(n_shared AS DOUBLE) / CAST(n_shingles AS DOUBLE)
-             AS contamination
-    FROM hits JOIN sz USING (doc_id)
+           CAST(n_shingles AS BIGINT) AS n_shingles, contamination
+    FROM contam
     """,
     doc="Benchmark decontamination (dedup/decontaminate.py): train docs "
     "(doc_id%20!=0) sharing 3-word shingles with the eval split "
@@ -869,25 +961,14 @@ def d15_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- near-dup clustering + canonical selection ------------------------------
 def _cc_cluster_ctes(rounds: int = 10) -> str:
     """Shared CTE chain for the Jaccard>=0.5 near-dup component oracle:
-    d06's exact pair SQL (same df cap) -> unrolled min-label propagation
-    with pointer doubling (``sql_cc_labels``; ``rounds``=10 covers
-    radius 2047, far past any near-dup chain) -> per-cluster sizes. Used
-    by c02 (min-id canonical) and c04 (quality-argmax survivor)."""
-    return f"""{_SHINGLE_CTES},
-    shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh),
-    dfreq AS (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS MATERIALIZED (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {D06_MAX_DF}),
-    sz AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-              FROM shf a JOIN shf b USING (sh) WHERE a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-    pairs AS MATERIALIZED (
-      SELECT doc_a, doc_b FROM inter
-      JOIN sz sa ON sa.doc_id = doc_a
-      JOIN sz sb ON sb.doc_id = doc_b
-      WHERE CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) >= 0.5),
+    d06's exact pairs (``_sql_jac_pairs``, same df cap) -> ``pairs`` ->
+    unrolled min-label propagation with pointer doubling
+    (``sql_cc_labels``; ``rounds``=10 covers radius 2047, far past any
+    near-dup chain) -> per-cluster sizes. Used by c02 (min-id
+    canonical), c04 (quality-argmax survivor) and d62 (cohesion)."""
+    return f"""{_sql_jac_pairs()},
+    pairs AS MATERIALIZED (SELECT doc_a, doc_b, jaccard FROM pr
+          WHERE jaccard >= 0.5),
     und AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
             UNION ALL SELECT doc_b, doc_a FROM pairs),
     {sql_cc_labels("und", "SELECT DISTINCT src AS id, src AS label FROM und", rounds)},
@@ -1035,39 +1116,18 @@ def d18_mix_rollup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- incremental ingestion dedup ---------------------------------------------
-def _incremental_minhash_oracle(
-    num_hashes: int = 8, bands: int = 4, max_bucket: int = D07_MAX_BUCKET
-) -> str:
-    r = num_hashes // bands
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(num_hashes)
-    )
-    band_rows = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"md5({' || '.join(f'mh{b * r + k}' for k in range(r))}) AS key FROM mh"
-        for b in range(bands)
-    )
+def _incremental_minhash_oracle(batch: str, max_bucket: int) -> str:
     return f"""
     WITH {_SHINGLE_CTES},
-    mh AS (SELECT doc_id,
-           {mins}
-           FROM sh GROUP BY doc_id),
-    bands AS (
-{band_rows}),
-    cb AS (SELECT doc_id AS corpus_id, band, key FROM bands
-           WHERE doc_id % 10 <> 0),
-    bc AS (SELECT band, key, count(*) AS n FROM cb GROUP BY band, key),
-    cbf AS (SELECT cb.* FROM cb JOIN bc USING (band, key)
-            WHERE n <= {max_bucket}),
-    ib AS (SELECT doc_id AS new_id, band, key FROM bands
-           WHERE doc_id % 10 = 0)
-    SELECT DISTINCT new_id, corpus_id FROM cbf JOIN ib USING (band, key)
+    {_sql_signatures(src="sh", n_hashes=8)},
+    {_sql_batch_matches("near", batch, max_bucket)}
+    SELECT new_id, corpus_id FROM near
     """
 
 
 @query(
     "d19_incremental_ingest_dedup",
-    oracle=_incremental_minhash_oracle(),
+    oracle=_incremental_minhash_oracle("doc_id % 10 = 0", D07_MAX_BUCKET),
     doc="Incremental ingestion dedup (dedup/minhash.py "
     "incremental_lsh_matches): the incoming batch (doc_id%10==0 here) "
     "checked for near-duplicates against the standing corpus via the "
@@ -1270,62 +1330,36 @@ def d22_pii_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- MinHash estimator quality audit -----------------------------------------
-def _minhash_audit_oracle(
-    num_hashes: int = 8, bands: int = 4, max_bucket: int = D07_MAX_BUCKET
-) -> str:
-    r = num_hashes // bands
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(num_hashes)
-    )
-    band_rows = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"md5({' || '.join(f'mh{b * r + k}' for k in range(r))}) AS key FROM mh"
-        for b in range(bands)
-    )
+def _minhash_audit_oracle(max_bucket: int, num_hashes: int = 8) -> str:
     agree = " + ".join(
         f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
         for i in range(num_hashes)
     )
+    est = f"CAST(({agree}) AS DOUBLE) / {num_hashes}"
+    true = "CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common)"
     return f"""
     WITH {_SHINGLE_CTES},
-    mh AS (SELECT doc_id,
-           {mins}
-           FROM sh GROUP BY doc_id),
-    bands AS (
-{band_rows}),
-    bc AS (SELECT band, key, count(*) AS n FROM bands GROUP BY band, key),
-    bf AS (SELECT bands.* FROM bands JOIN bc USING (band, key)
-           WHERE n <= {max_bucket}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bf a JOIN bf b USING (band, key)
-             WHERE a.doc_id < b.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
-    shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh),
-    common AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
+    {_sql_signatures(src="sh", n_hashes=num_hashes)},
+    {_sql_plain_cands("cand", max_bucket)},
+    {_sql_hashed("sh")},
+    common AS (SELECT c.doc_a, c.doc_b, COUNT(sb.sh) AS n_common
                FROM cand c
                JOIN shh sa ON sa.doc_id = c.doc_a
-               JOIN shh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
+               LEFT JOIN shh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
                GROUP BY c.doc_a, c.doc_b)
     SELECT c.doc_a, c.doc_b,
-           CAST(({agree}) AS DOUBLE) / {num_hashes} AS est_jaccard,
-           CAST(COALESCE(n_common, 0) AS DOUBLE)
-             / (za.nsh + zb.nsh - COALESCE(n_common, 0)) AS true_jaccard,
-           ABS(CAST(({agree}) AS DOUBLE) / {num_hashes}
-               - CAST(COALESCE(n_common, 0) AS DOUBLE)
-                 / (za.nsh + zb.nsh - COALESCE(n_common, 0))) AS abs_err
-    FROM cand c
-    LEFT JOIN common USING (doc_a, doc_b)
-    JOIN sizes za ON za.doc_id = c.doc_a
-    JOIN sizes zb ON zb.doc_id = c.doc_b
-    JOIN mh sa ON sa.doc_id = c.doc_a
-    JOIN mh sb ON sb.doc_id = c.doc_b
+           {est} AS est_jaccard,
+           {true} AS true_jaccard,
+           ABS({est} - {true}) AS abs_err
+    FROM common c
+    JOIN sig sa ON sa.doc_id = c.doc_a
+    JOIN sig sb ON sb.doc_id = c.doc_b
     """
 
 
 @query(
     "d23_minhash_estimate_audit",
-    oracle=_minhash_audit_oracle(),
+    oracle=_minhash_audit_oracle(D07_MAX_BUCKET),
     doc="Dedup-index quality audit: for every LSH candidate pair (d07's "
     "set), the MinHash-estimated Jaccard (agreeing hashes / 8) "
     "side-by-side with the TRUE shingle Jaccard and the estimator "
@@ -1337,34 +1371,11 @@ def _minhash_audit_oracle(
     "(doc, shingle) long form.",
 )
 def d23_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from functools import reduce
-
-    from goodreads_pyspark_spark.dedup.minhash import (
-        lsh_candidate_pairs_from_signatures,
-    )
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     num_hashes = 8
     docs = tbl(spark, sf_dir, "documents")
-    sh = shingle_rows(docs, out_id="doc_id").cache()
     sigs = _minhash_sigs8(spark, sf_dir)
     cand = lsh_candidate_pairs_from_signatures(
         sigs, num_hashes=num_hashes, bands=4, max_bucket=D07_MAX_BUCKET
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nsh"))
-    # The candidate-rescore intersection joins on md5-prefix 60-bit hash
-    # classes, not raw shingle strings (the ngram.py kernel discipline —
-    # 8-byte join keys; the oracle hashes identically, so even a
-    # collision matches bit-for-bit). Sizes stay raw: hashing is a
-    # per-row bijection, row counts are unchanged.
-    shingle_class = shingle_hash().alias("sh")
-    sa = sh.select(F.col("doc_id").alias("doc_a"), shingle_class)
-    sb = sh.select(F.col("doc_id").alias("doc_b"), shingle_class)
-    common = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
     )
     siga = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -1384,20 +1395,40 @@ def d23_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nc = F.coalesce(F.col("n_common"), F.lit(0))
     true_j = nc.cast("double") / (F.col("za") + F.col("zb") - nc)
     est_j = agree.cast("double") / num_hashes
-    return (
-        cand.join(common, ["doc_a", "doc_b"], "left")
-        .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("nsh").alias("za")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("nsh").alias("zb")), "doc_b")
-        .join(siga, "doc_a")
-        .join(sigb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            est_j.alias("est_jaccard"),
-            true_j.alias("true_jaccard"),
-            F.abs(est_j - true_j).alias("abs_err"),
+    with _released() as caches:
+        sh = _pin(shingle_rows(docs, out_id="doc_id"), caches)
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nsh"))
+        # The candidate-rescore intersection joins on md5-prefix 60-bit
+        # hash classes, not raw shingle strings (the ngram.py kernel
+        # discipline — 8-byte join keys; the oracle hashes identically,
+        # so even a collision matches bit-for-bit). Sizes stay raw:
+        # hashing is a per-row bijection, row counts are unchanged.
+        shingle_class = shingle_hash().alias("sh")
+        sa = sh.select(F.col("doc_id").alias("doc_a"), shingle_class)
+        sb = sh.select(F.col("doc_id").alias("doc_b"), shingle_class)
+        common = (
+            cand.join(sa, "doc_a")
+            .join(sb, ["doc_b", "sh"])
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-    )
+        za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("nsh").alias("za"))
+        zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("nsh").alias("zb"))
+        out = (
+            cand.join(common, ["doc_a", "doc_b"], "left")
+            .join(za, "doc_a")
+            .join(zb, "doc_b")
+            .join(siga, "doc_a")
+            .join(sigb, "doc_b")
+            .select(
+                "doc_a",
+                "doc_b",
+                est_j.alias("est_jaccard"),
+                true_j.alias("true_jaccard"),
+                F.abs(est_j - true_j).alias("abs_err"),
+            )
+        )
+        return _materialize("d23_minhash_estimate_audit", out)
 
 
 # --- composite quality gate with per-rule audit ------------------------------
@@ -1534,8 +1565,7 @@ _N_SHARDS = 16
     "d26_shard_manifest",
     oracle=f"""
     WITH sharded AS (
-      SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'shard-v1'),
-                   1, 8)) AS BIGINT) % {_N_SHARDS} AS shard,
+      SELECT {_sql_shard("doc_id", _N_SHARDS)} AS shard,
              doc_id,
              len({_TOKS}) AS n_tok
       FROM documents)
@@ -1599,29 +1629,29 @@ def d26_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never document bytes; nothing quadratic (no pair join).",
 )
 def d27_dup_shingle_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
-    sh = shingle_rows(docs, out_id="doc_id").cache()
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        sh.join(dfreq, "sh")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_dup"),
+    with _released() as caches:
+        sh = _pin(shingle_rows(docs, out_id="doc_id"), caches)
+        dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
+        out = (
+            sh.join(dfreq, "sh")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_shingles"),
+                F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
+                .cast("bigint")
+                .alias("n_dup"),
+            )
+            .select(
+                "doc_id",
+                "n_shingles",
+                "n_dup",
+                (F.col("n_dup").cast("double") / F.col("n_shingles")).alias(
+                    "dup_fraction"
+                ),
+            )
         )
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_dup",
-            (F.col("n_dup").cast("double") / F.col("n_shingles")).alias(
-                "dup_fraction"
-            ),
-        )
-    )
+        return _materialize("d27_dup_shingle_fraction", out)
 
 
 # --- cross-source overlap matrix ---------------------------------------------
@@ -1630,8 +1660,7 @@ def d27_dup_shingle_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SHINGLE_CTES},
     ssh AS MATERIALIZED (
-      SELECT DISTINCT d.source,
-             ('0x' || substr(md5(s.sh), 1, 15))::BIGINT AS sh
+      SELECT DISTINCT d.source, {_sql_h60("s.sh")} AS sh
       FROM sh s JOIN documents d USING (doc_id)),
     sz AS (SELECT source, COUNT(*) AS n_types FROM ssh GROUP BY source),
     ov AS (SELECT a.source AS source_a, b.source AS source_b,
@@ -1663,30 +1692,34 @@ def d28_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Hash shingles to portable 60-bit ints before the distinct and the
     # type self-join shuffle (the ngram-kernel discipline; the oracle
     # hashes identically, so type counts match even under a collision).
-    ssh = (
+    types = (
         base.select("source", F.explode(word_shingles(F.col("__toks"))).alias("sh"))
         .select("source", shingle_hash().alias("sh"))
         .distinct()
-        .cache()
     )
-    sz = ssh.groupBy("source").agg(F.count(F.lit(1)).alias("n_types"))
-    b = ssh.select(F.col("source").alias("source_b"), "sh")
-    ov = (
-        ssh.alias("a")
-        .join(b, "sh")
-        .filter(F.col("source") != F.col("source_b"))
-        .groupBy(F.col("source").alias("source_a"), "source_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    return ov.join(
-        F.broadcast(sz.withColumnRenamed("source", "source_a")), "source_a"
-    ).select(
-        "source_a",
-        "source_b",
-        "n_shared",
-        F.col("n_types").alias("n_types_a"),
-        (F.col("n_shared").cast("double") / F.col("n_types")).alias("containment"),
-    )
+    with _released() as caches:
+        ssh = _pin(types, caches)
+        sz = ssh.groupBy("source").agg(F.count(F.lit(1)).alias("n_types"))
+        b = ssh.select(F.col("source").alias("source_b"), "sh")
+        ov = (
+            ssh.alias("a")
+            .join(b, "sh")
+            .filter(F.col("source") != F.col("source_b"))
+            .groupBy(F.col("source").alias("source_a"), "source_b")
+            .agg(F.count(F.lit(1)).alias("n_shared"))
+        )
+        out = ov.join(
+            F.broadcast(sz.withColumnRenamed("source", "source_a")), "source_a"
+        ).select(
+            "source_a",
+            "source_b",
+            "n_shared",
+            F.col("n_types").alias("n_types_a"),
+            (F.col("n_shared").cast("double") / F.col("n_types")).alias(
+                "containment"
+            ),
+        )
+        return _materialize("d28_source_overlap", out)
 
 
 # --- exact-quota deterministic stratified sample -----------------------------
@@ -2031,30 +2064,15 @@ def _c03_oracle() -> str:
     sharing a 3-shingle with the eval split (doc_id%20=0, itself
     excluded from training), md5-routed to 8 shards with per-shard
     doc/token totals."""
-    clean = _clean_corpus_oracle()
     return f"""
-    WITH clean AS ({clean}),
-    tk2 AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    idx2 AS (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i
-             FROM tk2 WHERE len(t) >= 3),
-    sh2 AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-            FROM idx2),
-    ev2 AS (SELECT DISTINCT sh FROM sh2 WHERE doc_id % 20 = 0),
-    hits2 AS (SELECT s.doc_id, COUNT(*) AS n_shared
-              FROM sh2 s JOIN ev2 USING (sh)
-              WHERE s.doc_id % 20 <> 0 GROUP BY s.doc_id),
-    sz2 AS (SELECT doc_id, COUNT(*) AS n_shingles FROM sh2
-            WHERE doc_id % 20 <> 0 GROUP BY doc_id),
-    contam AS (SELECT h.doc_id FROM hits2 h JOIN sz2 USING (doc_id)
-               WHERE CAST(n_shared AS DOUBLE) / n_shingles >= 0.5),
-    final AS (SELECT c.doc_id FROM clean c
-              WHERE c.doc_id % 20 <> 0
-                AND c.doc_id NOT IN (SELECT doc_id FROM contam)),
+    WITH {_clean_corpus_ctes()},
+    {_sql_ngrams("sh2", 3, "tk0")},
+    {_sql_contamination("contam", "sh2")},
     routed AS (
-      SELECT CAST(('0x' || substr(md5(CAST(f.doc_id AS VARCHAR) || 'shard-v1'),
-                   1, 8)) AS BIGINT) % 8 AS shard,
-             f.doc_id, len(tk2.t) AS n_tok
-      FROM final f JOIN tk2 ON tk2.doc_id = f.doc_id)
+      SELECT {_sql_shard("c.doc_id", 8)} AS shard, len(tk0.t) AS n_tok
+      FROM clean c JOIN tk0 ON tk0.doc_id = c.doc_id
+      WHERE c.doc_id % 20 <> 0 AND c.doc_id NOT IN (
+          SELECT doc_id FROM contam WHERE contamination >= 0.5))
     SELECT CAST(shard AS INTEGER) AS shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_tok) AS BIGINT) AS total_tokens
@@ -2102,63 +2120,29 @@ def c03_corpus_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ============================ round-4 additions ==============================
-def _band_tuning_oracle(num_hashes: int = 8, max_bucket: int = D07_MAX_BUCKET) -> str:
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(num_hashes)
+# --- MinHash-LSH band-tuning audit --------------------------------------------
+#: The (bands) splits of the 8 MinHash rows d34 compares.
+_D34_BANDS = (8, 4, 2)
+
+
+def _band_tuning_oracle(max_bucket: int) -> str:
+    cands = ",\n    ".join(
+        _sql_plain_cands(f"cand_{b}", max_bucket, 8 // b) for b in _D34_BANDS
     )
-    blocks = []
-    for bands in (8, 4, 2):
-        r = num_hashes // bands
-        band_rows = "\n      UNION ALL\n".join(
-            f"      SELECT doc_id, {b} AS band, "
-            f"md5({' || '.join(f'mh{b * r + k}' for k in range(r))}) AS key FROM mh"
-            for b in range(bands)
-        )
-        blocks.append(
-            f"""bands_{bands} AS (
-{band_rows}),
-    bc_{bands} AS (SELECT band, key, count(*) AS n
-                   FROM bands_{bands} GROUP BY band, key),
-    bf_{bands} AS (SELECT bands_{bands}.* FROM bands_{bands}
-                   JOIN bc_{bands} USING (band, key) WHERE n <= {max_bucket}),
-    cand_{bands} AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bf_{bands} a JOIN bf_{bands} b USING (band, key)
-      WHERE a.doc_id < b.doc_id),
-    row_{bands} AS (
-      SELECT {bands} AS bands, {r} AS rows_per_band,
-             (SELECT count(*) FROM cand_{bands}) AS n_candidates,
-             (SELECT count(*) FROM cand_{bands} c
-              JOIN truep t ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b)
-               AS n_true_captured)"""
-        )
-    rows = ",\n    ".join(blocks)
-    unions = "\n    UNION ALL\n    ".join(
-        f"SELECT * FROM row_{b}" for b in (8, 4, 2)
+    rows = "\n    UNION ALL\n    ".join(
+        f"""SELECT {b} AS bands, {8 // b} AS rows_per_band,
+           (SELECT count(*) FROM cand_{b}) AS n_candidates,
+           (SELECT count(*) FROM cand_{b} JOIN truep USING (doc_a, doc_b))
+             AS n_true_captured"""
+        for b in _D34_BANDS
     )
     return f"""
-    WITH {_SHINGLE_CTES},
-    mh AS (SELECT doc_id,
-           {mins}
-           FROM sh GROUP BY doc_id),
-    shh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS sh
-            FROM sh),
-    dfreq AS (SELECT sh, count(*) AS df FROM shh GROUP BY sh),
-    shf AS (SELECT s.doc_id, s.sh FROM shh s
-            JOIN dfreq USING (sh) WHERE df <= {D06_MAX_DF}),
-    sz AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM shf a JOIN shf b USING (sh) WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    truep AS (
-      SELECT doc_a, doc_b FROM inter
-      JOIN sz sa ON sa.doc_id = doc_a
-      JOIN sz sb ON sb.doc_id = doc_b
-      WHERE CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) >= 0.5),
-    {rows},
-    allrows AS ({unions})
+    WITH {_sql_jac_pairs()},
+    truep AS MATERIALIZED (SELECT doc_a, doc_b FROM pr WHERE jaccard >= 0.5),
+    {_sql_signatures(src="sh", n_hashes=8)},
+    {cands},
+    allrows AS (
+    {rows})
     SELECT CAST(bands AS INTEGER) AS bands,
            CAST(rows_per_band AS INTEGER) AS rows_per_band,
            CAST(n_candidates AS BIGINT) AS n_candidates,
@@ -2173,31 +2157,26 @@ def _band_tuning_oracle(num_hashes: int = 8, max_bucket: int = D07_MAX_BUCKET) -
 
 @query(
     "d34_lsh_band_tuning",
-    oracle=_band_tuning_oracle(),
+    oracle=_band_tuning_oracle(D07_MAX_BUCKET),
     doc="MinHash-LSH band-tuning audit: candidate volume, true-pair "
     "capture, recall and precision for (bands, rows/band) = (8,1), "
     "(4,2), (2,4) over the same 8 minhashes, judged against the exact "
     "Jaccard>=0.5 pair set (d06 semantics). THE tuning table for the "
     "S-curve trade — more bands / fewer rows = higher recall, more "
     "junk candidates; this measures both sides instead of trusting "
-    "the 1-(1-s^r)^b formula. The signature table and the truth set "
-    "are the suite-shared memos (_minhash_sigs8 / _jac05_pairs, r9) — "
-    "built once per session; each config adds only its banded "
-    "equi-join, all hot buckets capped.",
+    "the 1-(1-s^r)^b formula. The signature table is built once per "
+    "call (_minhash_sigs8) and the truth set is the session-shared "
+    "_jac05_pairs memo; each config adds only its banded equi-join, "
+    "all hot buckets capped.",
 )
 def d34_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.minhash import (
-        lsh_candidate_pairs_from_signatures,
-    )
-
-    # Both heavy kernels are the suite-shared memos (r9): the 8-hash
-    # signature table and the exact-Jaccard 0.5 truth set (identical
-    # params to d06/c02); the three band configs are then pure
+    # One 8-hash signature table per call and the exact-Jaccard 0.5
+    # truth set (the d06/c02 memo); the three band configs are pure
     # re-bandings of the same 8 minhashes.
     sigs = _minhash_sigs8(spark, sf_dir)
     truep = _jac05_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sweeps = None
-    for bands in (8, 4, 2):
+    for bands in _D34_BANDS:
         cand = lsh_candidate_pairs_from_signatures(
             sigs, num_hashes=8, bands=bands, max_bucket=D07_MAX_BUCKET
         ).select(
@@ -2216,7 +2195,7 @@ def d34_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_true_captured"))
     )
     tot = truep.agg(F.count(F.lit(1)).alias("n_true"))
-    out = (
+    return (
         n_cand.join(n_capt, "bands", "left")
         .crossJoin(F.broadcast(tot))
         .select(
@@ -2236,19 +2215,14 @@ def d34_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("precision"),
         )
         .orderBy(F.col("bands").desc())
-        .localCheckpoint(eager=True)
     )
-    # memoized kernels stay resident for the suite — no unpersist here
-    return out
 
 
 @query(
     "d35_shingle_novelty",
     oracle=f"""
     WITH {_SHINGLE_CTES},
-    ds AS (SELECT s.doc_id,
-                  ('0x' || substr(md5(s.sh), 1, 15))::BIGINT AS sh,
-                  d.source
+    ds AS (SELECT s.doc_id, {_sql_h60("s.sh")} AS sh, d.source
            FROM sh s JOIN documents d USING (doc_id)),
     per_sh AS (SELECT sh, count(DISTINCT source) AS n_sources FROM ds GROUP BY sh),
     per_src AS (
@@ -2330,7 +2304,7 @@ def d35_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- temperature-weighted source mixing (new in r5) --------------------------
+# --- temperature-weighted source mixing --------------------------------------
 _D36_TARGET_DOCS = 1_000_000
 
 
@@ -2394,7 +2368,7 @@ def d36_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- distributed BPE tokenizer fit (new in r6) -------------------------------
+# --- distributed BPE tokenizer fit -------------------------------------------
 _D37_MERGES = 8
 
 
@@ -2474,7 +2448,7 @@ def d37_bpe_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_fit(spark, docs, n_merges=_D37_MERGES)
 
 
-# --- learned quality-gate inference (new in r6) ------------------------------
+# --- learned quality-gate inference ------------------------------------------
 @query(
     "d38_quality_classifier",
     oracle=f"""
@@ -2521,7 +2495,7 @@ def d38_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_scores(tbl(spark, sf_dir, "documents"))
 
 
-# --- BPE encode: segment the vocab with the learned merges (new in r6) -------
+# --- BPE encode: segment the vocab with the learned merges -------------------
 def _d39_oracle(n: int = _D37_MERGES, top_k: int = 200) -> str:
     body, _ = _bpe_cte_chain(n)
     return f"""{body}
@@ -2557,7 +2531,7 @@ def d39_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- deterministic training-order shuffle (epoch layout; new in r6) ----------
+# --- deterministic training-order shuffle (epoch layout) ---------------------
 @query(
     "d40_epoch_shuffle",
     oracle="""
@@ -2635,7 +2609,7 @@ def d40_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- quality-weighted canonical survivor (new in r6) -------------------------
+# --- quality-weighted canonical survivor -------------------------------------
 def _c04_oracle(rounds: int = 10) -> str:
     return f"""
     WITH {_cc_cluster_ctes(rounds)},
@@ -2723,7 +2697,7 @@ def c04_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- integer-exact BM25 ranked retrieval (new in r6) -------------------------
+# --- integer-exact BM25 ranked retrieval -------------------------------------
 _D41_TERMS = ("dup", "spark", "batch")
 
 
@@ -2775,7 +2749,7 @@ def d41_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- exact duplicated-substring removal (Lee et al. shape; new in r6) --------
+# --- exact duplicated-substring removal (Lee et al. shape) -------------------
 @query(
     "d42_substring_dedup",
     oracle=f"""
@@ -2819,7 +2793,7 @@ def d42_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicated_span_removal(tbl(spark, sf_dir, "documents"), k=8, min_freq=2)
 
 
-# --- filter-cascade attribution funnel (new in r6) ---------------------------
+# --- filter-cascade attribution funnel ---------------------------------------
 @query(
     "d43_filter_cascade",
     oracle=f"""
@@ -2933,7 +2907,7 @@ def d43_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- leakage-safe cluster-aware split (new in r6) ----------------------------
+# --- leakage-safe cluster-aware split ----------------------------------------
 @query(
     "d44_leakage_safe_split",
     oracle="""
@@ -3012,7 +2986,7 @@ def d44_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- semantic (paraphrase-level) decontamination (new in r6) ------------------
+# --- semantic (paraphrase-level) decontamination -----------------------------
 #: Eval-set membership: every 50th id — the deterministic stand-in for a
 #: held-out benchmark's embedding table.
 _D45_EVAL_MOD = 50
@@ -3112,7 +3086,7 @@ def d45_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- DSIR-style importance selection (new in r6) ------------------------------
+# --- DSIR-style importance selection -----------------------------------------
 #: Hashed n-gram feature space size (DSIR uses 10k buckets at corpus scale;
 #: 64 keeps per-bucket counts dense at test sf).
 _D46_BUCKETS = 64
@@ -3226,7 +3200,7 @@ def d46_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- CCNet-style quality partitioning (new in r6) -----------------------------
+# --- CCNet-style quality partitioning ----------------------------------------
 @query(
     "d47_quality_partitions",
     oracle=f"""
@@ -3311,7 +3285,7 @@ def d47_quality_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- incremental ingest admission pipeline (new in r6) ------------------------
+# --- incremental ingest admission pipeline -----------------------------------
 #: Batch membership: doc_id % 7 == 3 — disjoint from d19's demo batch
 #: (doc_id%10==0), and coprime with the source cycle (source = doc_id%20)
 #: so the batch spans every source instead of degenerating to two.
@@ -3319,33 +3293,13 @@ _C05_MOD = 7
 _C05_REM = 3
 
 
-def _c05_oracle(
-    num_hashes: int = 8, bands: int = 4, max_bucket: int = D07_MAX_BUCKET
-) -> str:
-    r = num_hashes // bands
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(num_hashes)
-    )
-    band_rows = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"md5({' || '.join(f'mh{b * r + k}' for k in range(r))}) AS key FROM mh"
-        for b in range(bands)
-    )
+def _c05_oracle(max_bucket: int = D07_MAX_BUCKET) -> str:
+    batch = f"doc_id % {_C05_MOD} = {_C05_REM}"
     return f"""
     WITH {_SHINGLE_CTES},
-    mh AS (SELECT doc_id,
-           {mins}
-           FROM sh GROUP BY doc_id),
-    bands AS (
-{band_rows}),
-    cb AS (SELECT doc_id AS corpus_id, band, key FROM bands
-           WHERE doc_id % {_C05_MOD} <> {_C05_REM}),
-    bc AS (SELECT band, key, count(*) AS n FROM cb GROUP BY band, key),
-    cbf AS (SELECT cb.* FROM cb JOIN bc USING (band, key)
-            WHERE n <= {max_bucket}),
-    ib AS (SELECT doc_id AS new_id, band, key FROM bands
-           WHERE doc_id % {_C05_MOD} = {_C05_REM}),
-    near AS (SELECT DISTINCT new_id AS doc_id FROM cbf JOIN ib USING (band, key)),
+    {_sql_signatures(src="sh", n_hashes=8)},
+    {_sql_batch_matches("nm", batch, max_bucket)},
+    near AS (SELECT DISTINCT new_id AS doc_id FROM nm),
     ch AS (SELECT DISTINCT md5(text) AS h FROM documents
            WHERE doc_id % {_C05_MOD} <> {_C05_REM}),
     bh AS (SELECT doc_id, md5(text) AS h FROM documents
@@ -3468,7 +3422,7 @@ def c05_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- window-free quality bucketing via order-statistic thresholds (r6) --------
+# --- window-free quality bucketing via order-statistic thresholds ------------
 @query(
     "d48_threshold_buckets",
     oracle=f"""
@@ -3595,7 +3549,7 @@ def d48_threshold_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- streaming ingest admission (new in r6) -----------------------------------
+# --- streaming ingest admission ----------------------------------------------
 @query(
     "s12_streaming_ingest_admission",
     oracle=_c05_oracle(),
@@ -3620,10 +3574,7 @@ def d48_threshold_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s12_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from goodreads_pyspark_spark.dedup.minhash import _banded_keys
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
     from goodreads_pyspark_spark.functions.quality_model import quality_scores
-    from goodreads_pyspark_spark.queries.documents import D07_MAX_BUCKET
 
     docs = tbl(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % _C05_MOD == _C05_REM
@@ -3632,14 +3583,8 @@ def s12_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFram
 
     # Static state a production ingest daemon keeps warm (built once,
     # reused by every micro-batch):
-    cb = _banded_keys(
-        shingle_rows(corpus, "doc_id", "text", 3, out_id="doc_id"),
-        "doc_id", 8, 4,
-    )
-    hot = cb.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
     index_keys = (
-        cb.join(hot.filter(F.col("__n") <= D07_MAX_BUCKET).drop("__n"),
-                ["band", "key"])
+        band_index(corpus, max_bucket=D07_MAX_BUCKET)
         .select("band", "key")
         .distinct()
         .cache()
@@ -3744,7 +3689,7 @@ def s12_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFram
             shutil.rmtree(d, ignore_errors=True)
 
 
-# --- learned quality-classifier FIT (new in r7) -------------------------------
+# --- learned quality-classifier FIT ------------------------------------------
 #: Fit hyperparameters — shared with the oracle unroll below.
 _D49_ETA = 32.0
 _D49_ROUNDS = 2
@@ -3871,7 +3816,7 @@ def d49_logistic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Gopher repetition rules (new in r7) --------------------------------------
+# --- Gopher repetition rules -------------------------------------------------
 #: Keep-gate thresholds (Rae et al. 2021 shape; values tuned so both
 #: verdicts occur on the synthetic corpus).
 _D50_MAX_ADJ = 0.10
@@ -4055,7 +4000,7 @@ def d50_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- per-domain admission cap (new in r7) -------------------------------------
+# --- per-domain admission cap ------------------------------------------------
 #: Max documents retained per source domain.
 _D51_CAP = 15
 
@@ -4134,7 +4079,7 @@ def d51_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- classifier train-fit evaluation (new in r7) -------------------------------
+# --- classifier train-fit evaluation -----------------------------------------
 def _d52_oracle(n_rounds: int = _D49_ROUNDS, eta: float = _D49_ETA) -> str:
     from goodreads_pyspark_spark.functions.logistic import DSUM_SQL
 
@@ -4217,7 +4162,7 @@ def d52_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- UniMax capped budget allocation (new in r7) -------------------------------
+# --- UniMax capped budget allocation -----------------------------------------
 #: Fixed waterfilling rounds (leftover after the last round stays
 #: unallocated — documented semantics, mirrored by the oracle).
 _D53_ROUNDS = 4
@@ -4333,7 +4278,7 @@ def d53_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- source-level boilerplate detection (new in r7) -----------------------------
+# --- source-level boilerplate detection --------------------------------------
 #: A shingle is boilerplate within a source when it appears in at least
 #: half of that source's (shingleable) documents.
 _D54_NUM, _D54_DEN = 1, 2
@@ -4439,7 +4384,7 @@ def d54_boilerplate_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- per-mix data card (new in r8) ---------------------------------------------
+# --- per-mix data card -------------------------------------------------------
 def _d55_oracle(n_rounds: int = _D53_ROUNDS) -> str:
     """Compose the d18/d02/d47/d33/d36/d53 per-source ledgers into one
     data-card oracle (the c03 composition precedent): volumes, exact-dup
@@ -4695,7 +4640,7 @@ def d55_datamix_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- data-card snapshot diff (new in r8) -----------------------------------------
+# --- data-card snapshot diff -------------------------------------------------
 @query(
     "d56_datacard_snapshot_diff",
     oracle=f"""
@@ -4790,7 +4735,7 @@ def d56_datacard_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- PII scrub (new in r9) ---------------------------------------------------
+# --- PII scrub ---------------------------------------------------------------
 #: Deterministic PII fixture: the synthetic corpus text is digit-free word
 #: salad, so a scrub over it would gate nothing. Both engines therefore
 #: splice structural PII into the text with the SAME ANSI fragment (the
@@ -4904,7 +4849,7 @@ def d57_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- DSIR-style importance resampling (new in r9) ----------------------------
+# --- DSIR-style importance resampling ----------------------------------------
 #: Hashed-feature bucket count for the importance estimator. 64 is small
 #: enough that the per-bucket score table broadcasts as a handful of rows
 #: yet large enough to separate target-like from raw-like token mass.
@@ -5020,7 +4965,7 @@ def d58_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- KMV cross-source overlap (new in r9) ------------------------------------
+# --- KMV cross-source overlap ------------------------------------------------
 #: k-minimum-values sketch size. Small enough that a per-source sketch is
 #: a handful of rows; the estimator degrades gracefully when a source has
 #: fewer distinct hashes than k (sketch == full set -> exact count).
@@ -5156,7 +5101,7 @@ def d59_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Bloom-filter admission prefilter (new in r9) ----------------------------
+# --- Bloom-filter admission prefilter ----------------------------------------
 #: Bloom geometry: j hash positions per key over m bits, with m sized
 #: FROM THE DATA as bits_per_key x corpus-count (computed in-query on
 #: both engines, so the same table always gets the same filter at any
@@ -5329,25 +5274,12 @@ def d60_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- per-doc disposition ledger (new in r9) ----------------------------------
+# --- per-doc disposition ledger ----------------------------------------------
 def _c06_oracle() -> str:
     return f"""
     WITH {_clean_corpus_ctes()},
-    clean AS (SELECT doc_id FROM kept1
-              WHERE doc_id NOT IN (SELECT doc_b FROM verified)),
-    tk2 AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    idx2 AS (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i
-             FROM tk2 WHERE len(t) >= 3),
-    sh2 AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-            FROM idx2),
-    ev2 AS (SELECT DISTINCT sh FROM sh2 WHERE doc_id % 20 = 0),
-    hits2 AS (SELECT s.doc_id, COUNT(*) AS n_shared
-              FROM sh2 s JOIN ev2 USING (sh)
-              WHERE s.doc_id % 20 <> 0 GROUP BY s.doc_id),
-    sz2 AS (SELECT doc_id, COUNT(*) AS n_shingles FROM sh2
-            WHERE doc_id % 20 <> 0 GROUP BY doc_id),
-    contam AS (SELECT h.doc_id FROM hits2 h JOIN sz2 USING (doc_id)
-               WHERE CAST(n_shared AS DOUBLE) / n_shingles >= 0.5),
+    {_sql_ngrams("sh2", 3, "tk0")},
+    {_sql_contamination("contam", "sh2")},
     disp AS (
       SELECT d.doc_id,
              CASE WHEN d.doc_id NOT IN (SELECT doc_id FROM q)
@@ -5357,14 +5289,14 @@ def _c06_oracle() -> str:
                   WHEN d.doc_id NOT IN (SELECT doc_id FROM clean)
                     THEN 'near_dup'
                   WHEN d.doc_id % 20 = 0 THEN 'eval_split'
-                  WHEN d.doc_id IN (SELECT doc_id FROM contam)
+                  WHEN d.doc_id IN (SELECT doc_id FROM contam
+                                    WHERE contamination >= 0.5)
                     THEN 'contaminated'
                   ELSE 'admitted' END AS disposition
       FROM documents d)
     SELECT doc_id, disposition,
            CASE WHEN disposition = 'admitted'
-                THEN CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)
-                     || 'shard-v1'), 1, 8)) AS BIGINT) % 8 AS INTEGER)
+                THEN CAST({_sql_shard("doc_id", 8)} AS INTEGER)
            END AS shard
     FROM disp
     """
@@ -5421,20 +5353,12 @@ def c06_disposition_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- near-dup cluster cohesion audit (new in r9) -----------------------------
+# --- near-dup cluster cohesion audit -----------------------------------------
 def _d62_oracle(rounds: int = 10) -> str:
     return f"""
     WITH {_cc_cluster_ctes(rounds)},
-    pj AS (SELECT doc_a, doc_b,
-                  CAST(n_common AS DOUBLE)
-                    / (sa.sz + sb.sz - n_common) AS j
-           FROM inter
-           JOIN sz sa ON sa.doc_id = doc_a
-           JOIN sz sb ON sb.doc_id = doc_b
-           WHERE CAST(n_common AS DOUBLE)
-                 / (sa.sz + sb.sz - n_common) >= 0.5),
-    pl AS (SELECT la.label AS cluster_id, j
-           FROM pj JOIN l{rounds} la ON la.id = pj.doc_a)
+    pl AS (SELECT la.label AS cluster_id, jaccard AS j
+           FROM pairs JOIN l{rounds} la ON la.id = pairs.doc_a)
     SELECT CAST(pl.cluster_id AS BIGINT) AS cluster_id,
            CAST(s.cluster_size AS BIGINT) AS cluster_size,
            CAST(COUNT(*) AS BIGINT) AS n_intra_pairs,
@@ -5498,7 +5422,7 @@ def d62_cluster_cohesion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- bigram LM fluency scoring (new in r9) ------------------------------------
+# --- bigram LM fluency scoring -----------------------------------------------
 #: Fixed-point scale for the smoothed bigram probability surrogate.
 _D61_FP = 1_000_000_000
 
@@ -5640,9 +5564,6 @@ def d61_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: df cap for the 2-gram containment index (same rationale as D06_MAX_DF).
 _D63_CAP = 100
-_D65_HASHES = 16
-_D65_EDGES = (24, 48, 72)
-_D65_ROWS = (2, 2, 1, 1)
 _D65_BUCKET = 50
 _D67_THRESHOLD = 0.8  # drop docs >=80%-contained in a larger doc
 _D68_THRESHOLD_NUM = 8  # containment threshold 8/10 — integer-exact
@@ -5662,11 +5583,6 @@ _CONTAINMENT_ONLY = "containment >= 0.4 AND jaccard < 0.5"
 _STANDING, _BATCH = "doc_id % 7 <> 0", "doc_id % 7 = 0"
 _D67_LEDGER = ("n_docs", "n_dropped", "n_kept", "dropped_checksum")
 _D68_LEDGER = ("n_incoming", "n_rejected", "n_admitted", "rejected_checksum")
-
-
-def _sql_h60(expr: str) -> str:
-    """DuckDB mirror of the engine's 60-bit md5-prefix hash of ``expr``."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
 def _sql_checksum(expr: str) -> str:
@@ -5692,73 +5608,9 @@ def _sql_recall(hit: str, of: str) -> str:
 def _sql_shingles() -> str:
     """``tk`` (tokens), ``sh0`` (doc_id, distinct 2-gram shingle) and
     ``shh`` (the same rows with the engine's 60-bit shingle hash)."""
-    return f"""tk AS MATERIALIZED (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS sh
-            FROM tk WHERE len(t) >= 2),
-    shh AS MATERIALIZED (SELECT doc_id, {_sql_h60("sh")} AS sh FROM sh0)"""
-
-
-def _sql_part(size: str, edges=_D65_EDGES) -> str:
-    """Size partition of the expression ``size`` over exclusive upper
-    ``edges`` — the engine's ``_partition_of``."""
-    whens = " ".join(f"WHEN {size} < {e} THEN {p}" for p, e in enumerate(edges))
-    return f"CASE {whens} ELSE {len(edges)} END"
-
-
-def _sql_signatures(parts: dict[str, str], edges=_D65_EDGES, join="") -> str:
-    """``sig``: per ``sh0`` doc its salted min-hashes ``mh0..``, its
-    shingle count ``sz`` and one partition column per ``parts`` entry
-    (name -> size expression, e.g. a probe floor over ``sz``); ``join``
-    brings in data-dependent ``edges``. A doc's signature depends only on
-    its own shingles, so one table serves every corpus split."""
-    mins = ",\n           ".join(
-        f"min(md5('s{i}_' || sh)) AS mh{i}" for i in range(_D65_HASHES)
-    )
-    cols = "".join(f", {_sql_part(v, edges)} AS {n}" for n, v in parts.items())
-    return f"""sig AS MATERIALIZED (SELECT *{cols} FROM (SELECT doc_id,
-           {mins},
-           count(*) AS sz FROM sh0 GROUP BY doc_id) s{join})"""
-
-
-def _sql_band_keys(
-    cols: str, out="keys", rows=_D65_ROWS, n_hashes=_D65_HASHES, key=_sql_h60
-) -> str:
-    """``out``: ``cols`` of ``sig`` plus (p, band, key) for every band of
-    every partition's rows-per-band scheme. Index sides keep
-    ``p = part``; probe sides keep ``p >= part`` or ``p >= pmin``."""
-    branches = [
-        f"SELECT {cols}, {p} AS p, {b} AS band, "
-        f"{key(' || '.join(f'mh{b * r + k}' for k in range(r)))} AS key FROM sig"
-        for p, r in enumerate(rows)
-        for b in range(n_hashes // r)
-    ]
-    return f"{out} AS MATERIALIZED (\n      " + "\n      UNION ALL ".join(
-        branches
-    ) + ")"
-
-
-def _sql_capped(out: str, src: str, cap: int) -> str:
-    """``{out}_n``: the (p, band, key) bucket sizes of ``src``; ``out``:
-    ``src``'s rows in buckets of at most ``cap``."""
-    return f"""{out}_n AS MATERIALIZED (SELECT p, band, key, count(*) AS n
-          FROM {src} GROUP BY 1, 2, 3),
-    {out} AS MATERIALIZED (SELECT {src}.* FROM {src}
-          JOIN {out}_n USING (p, band, key) WHERE n <= {cap})"""
-
-
-def _sql_plain_cands(out: str, cap: int) -> str:
-    """``out``: (doc_a < doc_b) pairs sharing a d07-convention band (4
-    bands of 2 over ``sig``'s mh0..mh7, md5 keys) in a bucket of at most
-    ``cap`` docs — the Jaccard-banding baseline."""
-    keys = _sql_band_keys(
-        "doc_id", f"{out}_k", rows=(2,), n_hashes=8, key=lambda e: f"md5({e})"
-    )
-    return f"""{keys},
-    {_sql_capped(f"{out}_f", f"{out}_k", cap)},
-    {out} AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM {out}_f a JOIN {out}_f b USING (p, band, key)
-          WHERE a.doc_id < b.doc_id)"""
+    return f"""{_TK},
+    {_sql_ngrams("sh0", 2)},
+    {_sql_hashed("sh0")}"""
 
 
 def _sql_ensemble_cands(out: str, rows=_D65_ROWS) -> str:
@@ -5780,34 +5632,13 @@ def _sql_ensemble_cands(out: str, rows=_D65_ROWS) -> str:
           WHERE q.sz < x.sz OR (q.sz = x.sz AND q.doc_id < x.doc_id))"""
 
 
-def _sql_df_cap(sfx: str, member: str) -> str:
-    """Over the ``shh`` rows of docs matching ``member``: ``dfreq{sfx}``
-    (shingle doc frequency), ``hot{sfx}`` (shingles above ``_D63_CAP``)
-    and ``st{sfx}`` (those rows without hot shingles)."""
-    return f"""dfreq{sfx} AS MATERIALIZED (SELECT sh, count(*) AS df FROM shh
-          WHERE {member} GROUP BY sh),
-    hot{sfx} AS MATERIALIZED (SELECT sh FROM dfreq{sfx} WHERE df > {_D63_CAP}),
-    st{sfx} AS MATERIALIZED (SELECT * FROM shh
-          WHERE {member} AND sh NOT IN (SELECT sh FROM hot{sfx}))"""
-
-
 def _sql_exact_pairs() -> str:
     """d63's exact verifier: the df cap over every doc, ``pr`` — each
     pair doc_a < doc_b sharing a capped shingle, with n_common, capped
-    sizes sz_a/sz_b, jaccard and containment — and ``cont``, its
-    containment-only pairs."""
-    return f"""{_sql_df_cap("", "TRUE")},
-    sz AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM st GROUP BY doc_id),
-    pr AS MATERIALIZED (SELECT doc_a, doc_b, n_common,
-             sa.sz AS sz_a, sb.sz AS sz_b,
-             CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) AS jaccard,
-             CAST(n_common AS DOUBLE) / LEAST(sa.sz, sb.sz) AS containment
-          FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       count(*) AS n_common
-                FROM st a JOIN st b USING (sh)
-                WHERE a.doc_id < b.doc_id GROUP BY 1, 2) i
-          JOIN sz sa ON sa.doc_id = doc_a
-          JOIN sz sb ON sb.doc_id = doc_b),
+    sizes sz_a/sz_b, jaccard and containment (``_sql_pairs``) — and
+    ``cont``, its containment-only pairs."""
+    return f"""{_sql_df_cap("", "TRUE", _D63_CAP)},
+    {_sql_pairs("pr", "st")},
     cont AS MATERIALIZED (SELECT doc_a, doc_b FROM pr WHERE {_CONTAINMENT_ONLY})"""
 
 
@@ -5818,7 +5649,7 @@ def _sql_standing(sfx: str, member: str) -> str:
     return f"""idx0{sfx} AS MATERIALIZED (SELECT doc_id, p, band, key FROM keys
           WHERE p = part AND {member}),
     {_sql_capped(f"idx{sfx}", f"idx0{sfx}", _D65_BUCKET)},
-    {_sql_df_cap(sfx, member)}"""
+    {_sql_df_cap(sfx, member, _D63_CAP)}"""
 
 
 def _sql_probe(out: str, batch: str, floor: str, sfx="") -> str:
@@ -5996,11 +5827,8 @@ def _ensemble_candidates(ss: DataFrame, caches: list, **over) -> DataFrame:
 
 def _plain_band_candidates(ss: DataFrame, max_bucket: int, caches: list):
     """The d07-convention banding baseline (8 hashes, 4 bands of 2) over
-    the first 8 hash columns of the shared signature table.
-    ``lsh_candidate_pairs_from_signatures`` pins its banded key table
-    without a handle; an identically built frame is one (the cache
-    manager matches plans), so it goes in ``caches`` for release."""
-    caches.append(_band_signatures(ss, "id", 8, 4))
+    the first 8 hash columns of the shared signature table, pinned in
+    ``caches``."""
     return _pin(
         lsh_candidate_pairs_from_signatures(
             ss, id_col="id", num_hashes=8, bands=4, max_bucket=max_bucket
@@ -6691,7 +6519,8 @@ def _d70_oracle() -> str:
     booleans are theory-backed (GK rank bound) resp. rank-exactness
     at test scale, so the oracle pins them TRUE."""
     return f"""
-    WITH {_sql_shingles()},
+    WITH {_TK},
+    {_sql_ngrams("sh0", 2)},
     {_sql_size_quantiles()}
     SELECT k, CAST([e1, e2, e3][k] AS BIGINT) AS exact_edge,
            TRUE AS within_rank_bound, TRUE AS approx_equals_exact

@@ -40,26 +40,33 @@ _OFFSET = 10_000_000
 _SAMPLE = "l_orderkey % 5 = 0"
 
 
-def _sql_graph(where: str = "TRUE", **extra: str) -> str:
+def _sql_graph(
+    where: str = "TRUE", *, vertices: bool = False, und: bool = False, **extra: str
+) -> str:
     """The order→part test graph as CTEs: ``edges`` (src, dst, *extra)
     of the lineitem rows matching ``where`` (``extra`` maps a column name
-    to its SQL over lineitem), ``vertices`` (id) — their distinct
-    endpoints — and ``und`` (src, dst, *extra), both directions of every
-    edge. MATERIALIZED: the iterative oracles reference these CTEs once
-    per unrolled round; without materialization DuckDB re-plans each
-    reference as a fresh parquet scan and can exhaust file descriptors.
-    Mirror of ``_edges`` with ``graph_of``/``undirected``."""
+    to its SQL over lineitem) and, for callers that read them,
+    ``vertices`` (id) — their distinct endpoints — and ``und`` (src, dst,
+    *extra), both directions of every edge. MATERIALIZED: the iterative
+    oracles reference these CTEs once per unrolled round; without
+    materialization DuckDB re-plans each reference as a fresh parquet
+    scan and can exhaust file descriptors. DuckDB builds a materialized
+    CTE even when nothing reads it, hence the flags. Mirror of ``_edges``
+    with ``graph_of``/``undirected``."""
     cols = "".join(f", {sql} AS {name}" for name, sql in extra.items())
     rest = "".join(f", {name}" for name in extra)
-    return f"""
-    edges AS MATERIALIZED (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst{cols}
-              FROM lineitem WHERE {where}),
-    vertices AS MATERIALIZED (SELECT src AS id FROM edges
+    ctes = [
+        f"""edges AS MATERIALIZED (SELECT l_orderkey AS src, l_partkey + {_OFFSET} AS dst{cols}
+              FROM lineitem WHERE {where})"""
+    ]
+    if vertices:
+        ctes.append("""vertices AS MATERIALIZED (SELECT src AS id FROM edges
                  UNION
-                 SELECT dst AS id FROM edges),
-    und AS MATERIALIZED (SELECT src, dst{rest} FROM edges
-            UNION ALL SELECT dst, src{rest} FROM edges)
-"""
+                 SELECT dst AS id FROM edges)""")
+    if und:
+        ctes.append(f"""und AS MATERIALIZED (SELECT src, dst{rest} FROM edges
+            UNION ALL SELECT dst, src{rest} FROM edges)""")
+    return "\n    " + ",\n    ".join(ctes) + "\n"
 
 
 def _edges(
@@ -161,7 +168,7 @@ def _lpa_oracle(rounds: int = 2) -> str:
     l{r} AS MATERIALIZED (SELECT v.id, COALESCE(b{r}.label, v.id) AS label
              FROM l{r - 1} v LEFT JOIN b{r} USING (id))""")
     return f"""
-    WITH {_sql_graph()},
+    WITH {_sql_graph(vertices=True, und=True)},
     l0 AS MATERIALIZED (SELECT id, id AS label FROM vertices),{",".join(steps)}
     SELECT id, CAST(label AS BIGINT) AS label FROM l{rounds}
     """
@@ -214,7 +221,7 @@ def _sql_pagerank(
                          AS BIGINT) AS pr
              FROM seeds s LEFT JOIN m{r} USING (id))""")
     return f"""
-    WITH {_sql_graph()},
+    WITH {_sql_graph(vertices=True)},
     outd AS MATERIALIZED (SELECT src AS id, COUNT(*) AS outdeg FROM edges GROUP BY src),
     seeds AS MATERIALIZED (SELECT id,
                     CASE WHEN {seeds} THEN 1 ELSE 0 END AS is_seed
@@ -239,7 +246,7 @@ def _sql_components(where: str) -> str:
     """Min-label fixpoint (component = min reachable id) of the test
     graph's ``where`` edges, as (id, component)."""
     return f"""
-    WITH {_sql_graph(where)},
+    WITH {_sql_graph(where, vertices=True, und=True)},
     {sql_cc_labels("und", "SELECT id, id AS label FROM vertices", _CC_ROUNDS)}
     SELECT id, CAST(label AS BIGINT) AS component FROM l{_CC_ROUNDS}
     """
@@ -285,7 +292,7 @@ def g04_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "g06_bfs_shortest_paths",
     oracle=f"""
-    WITH RECURSIVE {_sql_graph()},
+    WITH RECURSIVE {_sql_graph(und=True)},
     src AS (SELECT MIN(l_orderkey) AS id FROM lineitem),
     walk(endv, path, len) AS (
       SELECT id, [id], 0 FROM src
@@ -465,7 +472,7 @@ def _sql_relax(seeds: str, rounds: int, w: str = "1") -> str:
 @query(
     "g09_sssp_rounds",
     oracle=f"""
-    WITH {_sql_graph(w="CAST(l_quantity AS BIGINT)")},
+    WITH {_sql_graph(und=True, w="CAST(l_quantity AS BIGINT)")},
     {_sql_relax("SELECT MIN(src) AS id FROM edges", _SSSP_ROUNDS, "und.w")}
     SELECT id, dist FROM d{_SSSP_ROUNDS}
     """,
@@ -797,7 +804,7 @@ def _hits_oracle(n_iter: int = 2, scale: int = _HITS_SCALE) -> str:
              FROM vertices v LEFT JOIN hr{r} hr ON hr.id = v.id
              CROSS JOIN ht{r} ht)""")
     return f"""
-    WITH {_sql_graph(_SAMPLE)},
+    WITH {_sql_graph(_SAMPLE, vertices=True)},
     s0 AS MATERIALIZED (SELECT id, CAST({scale} AS BIGINT) AS hub
                         FROM vertices),{",".join(steps)}
     SELECT s.id, s.hub AS hub_scaled, a.auth AS auth_scaled
@@ -838,7 +845,7 @@ _G15_LCM = 6
 @query(
     "g15_landmark_harmonic",
     oracle=f"""
-    WITH {_sql_graph(_SAMPLE)},
+    WITH {_sql_graph(_SAMPLE, und=True)},
     {_sql_relax(f"SELECT DISTINCT src AS id FROM edges ORDER BY id LIMIT {_G15_SEEDS}", _G15_ROUNDS)}
     SELECT id,
            CAST(COUNT(CASE WHEN dist > 0 THEN 1 END) AS BIGINT) AS n_reached,
@@ -887,7 +894,7 @@ def g15_landmark_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "g16_feature_propagation",
     oracle=f"""
-    WITH {_sql_graph()},
+    WITH {_sql_graph(und=True)},
     x0 AS MATERIALIZED (SELECT src AS id, CAST(COUNT(*) AS BIGINT) AS x0
             FROM und GROUP BY src),
     x1 AS MATERIALIZED (SELECT und.src AS id, CAST(SUM(x0.x0) AS BIGINT) AS x1

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from goodreads_pyspark_spark.dedup.minhash import cap_buckets
 from goodreads_pyspark_spark.functions.vectors import explode_vector
 from goodreads_pyspark_spark.operators.partitioning import fan_out
 
@@ -378,12 +379,9 @@ def bucketed_neardup_pairs(
     measures exactly that regime blowing up 4x-replicated input. Returns
     (id_a, id_b, cosine) with id_a < id_b.
     """
-    buckets = sign_lsh_buckets(df, planes, id_col, vec_col)
-    if max_bucket is not None:
-        counts = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("__n"))
-        buckets = buckets.join(
-            counts.filter(F.col("__n") <= max_bucket).drop("__n"), "bucket"
-        )
+    buckets = cap_buckets(
+        sign_lsh_buckets(df, planes, id_col, vec_col), ["bucket"], max_bucket
+    )
     a = buckets.select(F.col(id_col).alias("id_a"), "bucket")
     b = buckets.select(F.col(id_col).alias("id_b"), "bucket")
     cand = (

@@ -331,6 +331,71 @@ def test_banding_from_signatures_equals_from_shingles(spark):
     sh.unpersist()
 
 
+def _dedup_docs(spark):
+    """Two near-duplicates, an unrelated doc and an eval copy of doc 1."""
+    base = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(12))
+    rows = [
+        (1, base),
+        (2, base + " extra"),
+        (3, " ".join(f"zeta{i} eta{i}" for i in range(20))),
+        (20, base),
+    ]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _dedup_entry_points():
+    """Every dedup/ entry point that used to cache a frame it never
+    released, as a call on the ``_dedup_docs`` frame."""
+    from goodreads_pyspark_spark.dedup import decontaminate, minhash, ngram, simhash
+    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+
+    def train(d):
+        return d.filter("doc_id < 20")
+
+    def ev(d):
+        return d.filter("doc_id >= 20")
+
+    return {
+        "lsh_candidate_pairs": lambda d: minhash.lsh_candidate_pairs(
+            d, max_bucket=10
+        ),
+        "lsh_candidate_pairs_from_signatures": lambda d: (
+            minhash.lsh_candidate_pairs_from_signatures(
+                minhash.minhash_signatures(d), max_bucket=10
+            )
+        ),
+        "simhash_neardup_pairs": lambda d: simhash.simhash_neardup_pairs(
+            d, max_bucket=10
+        ),
+        "contamination_stats": lambda d: decontaminate.contamination_stats(
+            train(d), ev(d)
+        ),
+        "contamination_stats_shingles": lambda d: (
+            decontaminate.contamination_stats(
+                train(d), ev(d), shingles=shingle_rows(d, out_id="id")
+            )
+        ),
+        "jaccard_pairs_max_df": lambda d: ngram.jaccard_pairs(d, max_df=100),
+        "containment_pairs_from_shingles": lambda d: (
+            ngram.containment_pairs_from_shingles(shingle_rows(d, out_id="id"))
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_dedup_entry_points()))
+def test_dedup_entry_point_leaves_no_cached_blocks(spark, name):
+    """A long-lived session calling dedup entry points over many corpora
+    must not accumulate cached blocks: from a cleared cache, a call and a
+    collect of its result leave the cache manager empty."""
+    d = _dedup_docs(spark)
+    spark.catalog.clearCache()
+    rows = _dedup_entry_points()[name](d).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left cached plans behind"
+    )
+    assert rows
+
+
 def test_all_cosines_is_superset_of_brute_force_knn(spark):
     """brute_force_knn must be exactly the top-k cut of all_cosines."""
     from goodreads_pyspark_spark.similarity.ann import all_cosines, brute_force_knn
@@ -679,10 +744,25 @@ _GRAPH_CACHE_USERS = (
     "g07_triangle_count",
     "g09_sssp_rounds",
 )
+#: Near-dup-family queries that cache shingles, signatures or band keys
+#: (directly or inside dedup/).
+_NEARDUP_CACHE_USERS = (
+    "d07_minhash_lsh_candidates",
+    "d11_simhash_neardup_pairs",
+    "d15_decontamination",
+    "d23_minhash_estimate_audit",
+    "d27_dup_shingle_fraction",
+    "d28_source_overlap",
+    "d34_lsh_band_tuning",
+)
 
 
 @pytest.mark.parametrize(
-    "name", _CONTAINMENT_FAMILY + _EMBEDDING_CACHE_USERS + _GRAPH_CACHE_USERS
+    "name",
+    _CONTAINMENT_FAMILY
+    + _EMBEDDING_CACHE_USERS
+    + _GRAPH_CACHE_USERS
+    + _NEARDUP_CACHE_USERS,
 )
 def test_containment_query_releases_its_caches(spark, duck, name):
     """With the containment family's shared kernels built (then

@@ -39,6 +39,9 @@ def _uncached_scans(spark):
 # mid-plan from per-superstep truncation; their surrounding plan is real,
 # so they don't belong in this set.)
 CHECKPOINTED_RESULTS = {
+    "d23_minhash_estimate_audit",
+    "d27_dup_shingle_fraction",
+    "d28_source_overlap",
     "d65_lsh_ensemble_containment",
     "d66_equidepth_ensemble",
     "d67_containment_dedup",
@@ -435,12 +438,43 @@ def test_d29_quota_window_is_partitioned(spark):
     assert "RunningWindowFunction" in plan or "Window" in plan
 
 
-def test_g10_ppr_state_is_id_and_bigint_only(spark):
+def test_ppr_superstep_state_is_id_and_bigint_only(spark, monkeypatch):
     """Per-superstep shuffles carry (id, pr/msg) pairs — no vertex
-    attributes balloon the iteration state."""
-    plan = plan_of(spark, "g10_personalized_pagerank")
+    attribute balloons the iteration state. Audits the PPR loop's own
+    superstep (the frame handed to ``_truncate``) over a graph whose
+    vertices carry a text attribute, not a query's checkpointed result."""
+    from goodreads_pyspark_spark.graph import pregel
+    from goodreads_pyspark_spark.graph.frames import PropertyGraph
+
+    steps = []
+    truncate = pregel._truncate
+
+    def spy(df, **kw):
+        steps.append(df)
+        return truncate(df, **kw)
+
+    monkeypatch.setattr(pregel, "_truncate", spy)
+    v = spark.createDataFrame(
+        [(i, f"vertex {i} biography text") for i in range(1, 6)], ["id", "bio"]
+    )
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], ["src", "dst"])
+    pregel.personalized_pagerank_scaled(PropertyGraph(v, e), "id = 1", n_iter=1)
+    assert len(steps) == 1
+    state = steps[0]
+    assert state.columns == ["id", "pr"]
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        state.explain("formatted")
+    plan = buf.getvalue()
     assert "CartesianProduct" not in plan
-    assert "text" not in plan and "l_comment" not in plan
+    # Every exchange (shuffle or broadcast) of the superstep: its input
+    # columns are ids and numbers, never the vertex attribute.
+    nodes = plan.split("\n\n")
+    exchanges = [n for n in nodes if n.split("\n")[0].rstrip().endswith("Exchange")]
+    assert exchanges, plan
+    for node in exchanges:
+        inputs = [ln for ln in node.splitlines() if ln.startswith("Input")]
+        assert inputs and "bio#" not in inputs[0], node
 
 
 def test_zorder_layout_prunes_box_queries(spark, tmp_path):
