@@ -3572,37 +3572,13 @@ def d48_threshold_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the corpus is never rescanned after index build.",
 )
 def s12_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from goodreads_pyspark_spark.functions.quality_model import quality_scores
+    from goodreads_pyspark_spark.streaming import drain, staged_stream, state_partitions
 
     docs = tbl(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % _C05_MOD == _C05_REM
     incoming = docs.filter(is_batch)
     corpus = docs.filter(~is_batch)
-
-    # Static state a production ingest daemon keeps warm (built once,
-    # reused by every micro-batch):
-    index_keys = (
-        band_index(corpus, max_bucket=D07_MAX_BUCKET)
-        .select("band", "key")
-        .distinct()
-        .cache()
-    )
-    corpus_hashes = corpus.select(F.md5("text").alias("h")).distinct().cache()
-    manifest = (
-        incoming.select(F.md5("text").alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("first_id"))
-        .cache()
-    )
-
-    import shutil
-
-    stage = tempfile.mkdtemp(prefix="s12_stage_")
-    out = tempfile.mkdtemp(prefix="s12_out_")
-    chk = tempfile.mkdtemp(prefix="s12_chk_")
-    incoming.repartition(3).write.mode("overwrite").parquet(stage)
 
     subword = F.size(
         F.regexp_extract_all(
@@ -3610,64 +3586,75 @@ def s12_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFram
         )
     ).cast("bigint")
 
-    def screen(bdf: DataFrame, batch_id: int) -> None:
-        near = (
-            _banded_keys(
-                shingle_rows(bdf, "doc_id", "text", 3, out_id="doc_id"),
-                "doc_id", 8, 4,
-            )
-            .join(index_keys, ["band", "key"], "left_semi")
-            .select("doc_id")
+    with _released() as caches, staged_stream(
+        spark, incoming.repartition(3), schema=incoming.schema, files_per_trigger=1
+    ) as st:
+        # Static state a production ingest daemon keeps warm (built once,
+        # reused by every micro-batch):
+        index_keys = (
+            band_index(corpus, max_bucket=D07_MAX_BUCKET)
+            .select("band", "key")
             .distinct()
-            .withColumn("is_near", F.lit(1))
+            .cache()
         )
-        base = bdf.select(
-            "doc_id", "source", F.md5("text").alias("h"),
-            subword.alias("n_subwords"),
+        corpus_hashes = corpus.select(F.md5("text").alias("h")).distinct().cache()
+        manifest = (
+            incoming.select(F.md5("text").alias("h"), "doc_id")
+            .groupBy("h")
+            .agg(F.min("doc_id").alias("first_id"))
+            .cache()
         )
-        flagged = (
-            base.join(corpus_hashes.withColumn("in_corpus", F.lit(1)), "h", "left")
-            .join(manifest, "h", "left")
-            .join(near, "doc_id", "left")
-            .join(
-                quality_scores(bdf).select("doc_id", "keep"), "doc_id", "left"
-            )
-            .select(
-                "doc_id",
-                "source",
-                "n_subwords",
-                F.when(
-                    (F.col("in_corpus") == 1)
-                    | (F.col("first_id") < F.col("doc_id")),
-                    "exact_dup",
-                )
-                .when(F.col("is_near") == 1, "near_dup")
-                .when(F.coalesce("keep", F.lit(0)) == 0, "low_quality")
-                .otherwise("admitted")
-                .alias("verdict"),
-            )
-        )
-        flagged.write.mode("append").parquet(out)
+        caches += [index_keys, corpus_hashes, manifest]
+        out = st.path("out")
 
-    try:
-        from goodreads_pyspark_spark.streaming import state_partitions
+        def screen(bdf: DataFrame, batch_id: int) -> None:
+            near = (
+                _banded_keys(
+                    shingle_rows(bdf, "doc_id", "text", 3, out_id="doc_id"),
+                    "doc_id", 8, 4,
+                )
+                .join(index_keys, ["band", "key"], "left_semi")
+                .select("doc_id")
+                .distinct()
+                .withColumn("is_near", F.lit(1))
+            )
+            base = bdf.select(
+                "doc_id", "source", F.md5("text").alias("h"),
+                subword.alias("n_subwords"),
+            )
+            flagged = (
+                base.join(corpus_hashes.withColumn("in_corpus", F.lit(1)), "h", "left")
+                .join(manifest, "h", "left")
+                .join(near, "doc_id", "left")
+                .join(
+                    quality_scores(bdf).select("doc_id", "keep"), "doc_id", "left"
+                )
+                .select(
+                    "doc_id",
+                    "source",
+                    "n_subwords",
+                    F.when(
+                        (F.col("in_corpus") == 1)
+                        | (F.col("first_id") < F.col("doc_id")),
+                        "exact_dup",
+                    )
+                    .when(F.col("is_near") == 1, "near_dup")
+                    .when(F.coalesce("keep", F.lit(0)) == 0, "low_quality")
+                    .otherwise("admitted")
+                    .alias("verdict"),
+                )
+            )
+            flagged.write.mode("append").parquet(out)
 
         # stateless foreachBatch, but each micro-batch's screen() runs 4
         # joins over a third of the (small) admission batch — 8 shuffle
         # partitions per batch, not 32 of scheduling overhead
         with state_partitions(spark, 8):
-            q = (
-                spark.readStream.schema(incoming.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
+            drain(
+                st.read()
                 .writeStream.foreachBatch(screen)
-                .option("checkpointLocation", chk)
-                .start()
+                .option("checkpointLocation", st.path("chk"))
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
 
         ledger = spark.read.parquet(out)
         n_led, n_in = ledger.count(), incoming.count()
@@ -3675,18 +3662,12 @@ def s12_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFram
             raise AssertionError(
                 f"streamed ledger has {n_led} rows, incoming batch has {n_in}"
             )
-        # The bounded (source, verdict) ledger aggregate must survive the
-        # finally-block cleanup of the parquet dirs it reads from:
-        # materialize it eagerly before the staged files disappear.
+        # materialize the bounded (source, verdict) aggregate before the
+        # stage (and the ledger files in it) goes
         return ledger.groupBy("source", "verdict").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_subwords").cast("bigint").alias("est_tokens"),
         ).localCheckpoint(eager=True)
-    finally:
-        for frame in (index_keys, corpus_hashes, manifest):
-            frame.unpersist()
-        for d in (stage, out, chk):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 # --- learned quality-classifier FIT ------------------------------------------
@@ -6342,58 +6323,47 @@ def d68_incremental_containment_admission(
 def s15_streaming_containment_admission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import state_partitions
+    from goodreads_pyspark_spark.streaming import drain, staged_stream, state_partitions
 
     docs = tbl(spark, sf_dir, "documents")
     incoming = docs.filter(_BATCH)
     standing = _d68_standing_index(spark, sf_dir)
 
-    stage = tempfile.mkdtemp(prefix="s15_stage_")
-    out = tempfile.mkdtemp(prefix="s15_out_")
-    chk = tempfile.mkdtemp(prefix="s15_chk_")
-    incoming.repartition(3).write.mode("overwrite").parquet(stage)
+    with staged_stream(
+        spark, incoming.repartition(3), schema=incoming.schema, files_per_trigger=1
+    ) as st:
+        out = st.path("out")
 
-    def screen(bdf: DataFrame, batch_id: int) -> None:
-        # per-batch probe caches are released after the write, on every
-        # exit path — a long-running stream would otherwise pin one
-        # (cand, inc) cache pair per micro-batch, unbounded
-        with _released() as caches:
-            bsh = shingle_rows(bdf, "doc_id", "text", 2, out_id="id")
-            rejected = (
-                _admission(standing, bsh, caches)
-                .select(F.col("incoming").alias("doc_id"))
-                .distinct()
-                .withColumn("__rej", F.lit(1))
-            )
-            (
-                bdf.select("doc_id", "source")
-                .join(F.broadcast(rejected), "doc_id", "left")
-                .select(
-                    "doc_id",
-                    "source",
-                    F.coalesce("__rej", F.lit(0)).alias("rejected"),
+        def screen(bdf: DataFrame, batch_id: int) -> None:
+            # per-batch probe caches are released after the write, on every
+            # exit path — a long-running stream would otherwise pin one
+            # (cand, inc) cache pair per micro-batch, unbounded
+            with _released() as caches:
+                bsh = shingle_rows(bdf, "doc_id", "text", 2, out_id="id")
+                rejected = (
+                    _admission(standing, bsh, caches)
+                    .select(F.col("incoming").alias("doc_id"))
+                    .distinct()
+                    .withColumn("__rej", F.lit(1))
                 )
-                .write.mode("append")
-                .parquet(out)
-            )
+                (
+                    bdf.select("doc_id", "source")
+                    .join(F.broadcast(rejected), "doc_id", "left")
+                    .select(
+                        "doc_id",
+                        "source",
+                        F.coalesce("__rej", F.lit(0)).alias("rejected"),
+                    )
+                    .write.mode("append")
+                    .parquet(out)
+                )
 
-    try:
         with state_partitions(spark, 8):
-            q = (
-                spark.readStream.schema(incoming.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
+            drain(
+                st.read()
                 .writeStream.foreachBatch(screen)
-                .option("checkpointLocation", chk)
-                .start()
+                .option("checkpointLocation", st.path("chk"))
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
 
         ledger = spark.read.parquet(out)
         n_led, n_in = ledger.count(), incoming.count()
@@ -6402,11 +6372,8 @@ def s15_streaming_containment_admission(
                 f"streamed ledger has {n_led} rows, incoming batch has {n_in}"
             )
         rejected = ledger.filter(F.col("rejected") == 1).select("doc_id")
-        # materialize before the finally-block deletes the parquet dirs
+        # materialize before the stage (and the ledger files in it) goes
         return _ledger(ledger, rejected, _D68_LEDGER).localCheckpoint(eager=True)
-    finally:
-        for d in (stage, out, chk):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 # --- d69: ensemble (bands, rows) tuning sweep ---------------------------------

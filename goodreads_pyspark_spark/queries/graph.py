@@ -15,6 +15,11 @@ value bit-for-bit — no float-accumulation-order divergence possible.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -492,6 +497,25 @@ def g09_sssp_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- G-extension: personalized (topic-sensitive) PageRank --------------------
+@contextmanager
+def _reliable_checkpoint_dir(sc):
+    """A temp dir for reliable checkpoints, removed on exit, with the
+    context's checkpoint dir put back as it was. The dir is
+    context-global: left pointing at the removed one, every later
+    reliable checkpoint of the session recreates it and writes there
+    (once a dir is set, ALS checkpoints its factors on its first
+    iteration and every 10th: m01 did)."""
+    prev, prev_raw = sc.getCheckpointDir(), getattr(sc, "_gps_checkpoint_dir", None)
+    path = tempfile.mkdtemp(prefix="g10_ckpt_")
+    try:
+        yield path
+    finally:
+        # a set dir is "<raw>/<uuid>"; setting <raw> again gives a fresh uuid
+        sc.setCheckpointDir(prev and os.path.dirname(prev))
+        sc._gps_checkpoint_dir = prev_raw
+        shutil.rmtree(path, ignore_errors=True)
+
+
 @query(
     "g10_personalized_pagerank",
     oracle=_sql_pagerank(
@@ -517,9 +541,6 @@ def g09_sssp_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reliable path is exercised three times, not just at the end.",
 )
 def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import uuid
-
     from goodreads_pyspark_spark.graph.pregel import (
         personalized_pagerank_scaled,
         ppr_base,
@@ -528,7 +549,6 @@ def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goodreads_pyspark_spark.operators.concurrency import run_concurrent
 
     g = graph_of(_edges(spark, sf_dir))
-    ckpt_dir = f"spark-warehouse/_g10_ckpt_{uuid.uuid4().hex[:8]}"
     # The edges/deg/seeds inputs are cached ONCE at this level and
     # released after both runs settle (ADVICE r12: per-run caches with
     # identical canonicalized plans are deduped by the CacheManager, so
@@ -537,48 +557,45 @@ def g10_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # result). The checkpoint-path independence the equality gate
     # certifies is untouched: both runs read identical base data by
     # construction; what differs is the truncation path.
-    with _released() as caches:
+    with _released() as caches, _reliable_checkpoint_dir(
+        spark.sparkContext
+    ) as ckpt_dir:
         base = ppr_base(g, _PPR_SEEDS)
         caches += [base["edges"], base["deg"], base["seeds"]]
-        try:
-            # the two checkpoint-mode runs are independent by construction
-            # — that independence is what the equality gate certifies — so
-            # their per-superstep job chains overlap on a driver pool
-            # (guide §2.6) instead of running the same 3-round loop twice
-            # back-to-back
-            reliable, local = run_concurrent(
-                [
-                    lambda: personalized_pagerank_scaled(
-                        g,
-                        _PPR_SEEDS,
-                        n_iter=3,
-                        checkpoint_every=1,
-                        checkpoint_dir=ckpt_dir,
-                        base=base,
-                    ),
-                    lambda: personalized_pagerank_scaled(
-                        g, _PPR_SEEDS, n_iter=3, checkpoint_every=1, base=base
-                    ).localCheckpoint(),
-                ]
-            )
-            # bit-identity: same row count and zero (id, score) rows on
-            # one side only — integer PPR is deterministic, so any
-            # divergence is a checkpoint-path bug. Driver-side bounded
-            # action (two counts), evaluated BEFORE the reliable
-            # checkpoint dir is deleted.
-            n_diff = (
-                reliable.unionByName(local)
-                .groupBy("id", "ppr_scaled")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") != 2)
-                .count()
-            )
-            same = bool(n_diff == 0)
-        finally:
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+        # the two checkpoint-mode runs are independent by construction
+        # — that independence is what the equality gate certifies — so
+        # their per-superstep job chains overlap on a driver thread pool
+        # instead of running the same 3-round loop twice back-to-back
+        reliable, local = run_concurrent(
+            [
+                lambda: personalized_pagerank_scaled(
+                    g,
+                    _PPR_SEEDS,
+                    n_iter=3,
+                    checkpoint_every=1,
+                    checkpoint_dir=ckpt_dir,
+                    base=base,
+                ),
+                lambda: personalized_pagerank_scaled(
+                    g, _PPR_SEEDS, n_iter=3, checkpoint_every=1, base=base
+                ).localCheckpoint(),
+            ]
+        )
+        # bit-identity: same row count and zero (id, score) rows on
+        # one side only — integer PPR is deterministic, so any
+        # divergence is a checkpoint-path bug. Driver-side bounded
+        # action (two counts), evaluated BEFORE the reliable
+        # checkpoint dir is deleted.
+        n_diff = (
+            reliable.unionByName(local)
+            .groupBy("id", "ppr_scaled")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") != 2)
+            .count()
+        )
     # return the local-mode frame (its blocks don't live in ckpt_dir)
     return local.select(
-        "id", "ppr_scaled", F.lit(same).alias("ckpt_equals_local")
+        "id", "ppr_scaled", F.lit(n_diff == 0).alias("ckpt_equals_local")
     )
 
 

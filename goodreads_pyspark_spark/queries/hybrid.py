@@ -678,7 +678,6 @@ def h05_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("escore"),
     )
     exp = top_k(esc, _H05_EXP, [F.desc("escore"), F.asc("tok")]).select("tok")
-    exp = exp.cache()  # feeds the expanded-term run AND the label column
     seeds = docs.sparkSession.createDataFrame(
         [(t,) for t in _H05_SEED], ["tok"]
     )

@@ -145,9 +145,9 @@ def io03_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- CDC merge (copy-on-write upsert) ----------------------------------------
-@query(
-    "io04_cdc_upsert",
-    oracle="""
+#: io04's change batch applied to the corpus snapshot: the next snapshot
+#: (s09 streams the same feed and gates against the same answer).
+_CDC_ORACLE = """
     WITH changes AS (
       SELECT 'D' AS op, doc_id, text, lang, source, n_chars
       FROM documents WHERE doc_id % 5 = 0
@@ -164,19 +164,13 @@ def io03_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT doc_id, text, lang, source, n_chars
     FROM changes WHERE op <> 'D'
-    """,
-    doc="CDC merge (operators/cdc.apply_cdc): a change batch of deletes "
-    "(doc_id%5=0), updates (%5=1, payload rewritten) and inserts "
-    "(%5=2, new key space) applied to the corpus snapshot — the "
-    "copy-on-write upsert lakehouse formats run underneath. The "
-    "touched-key set broadcasts into an anti join, so the 100 TB base "
-    "never shuffles; the merge is one map-side pass + union. Gated on "
-    "the full next-snapshot content.",
-)
-def io04_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.cdc import apply_cdc
+    """
 
-    docs = tbl(spark, sf_dir, "documents")
+
+def _cdc_feed(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The change feed of ``_CDC_ORACLE``, one frame per op class (with
+    its ``op`` column): deletes (doc_id%5=0), updates (%5=1, payload
+    rewritten) and inserts (%5=2, new key space)."""
     deletes = docs.filter(F.col("doc_id") % 5 == 0).withColumn("op", F.lit("D"))
     updates = (
         docs.filter(F.col("doc_id") % 5 == 1)
@@ -190,6 +184,25 @@ def io04_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("source", F.lit("ingest_v2"))
         .withColumn("op", F.lit("I"))
     )
+    return deletes, updates, inserts
+
+
+@query(
+    "io04_cdc_upsert",
+    oracle=_CDC_ORACLE,
+    doc="CDC merge (operators/cdc.apply_cdc): a change batch of deletes "
+    "(doc_id%5=0), updates (%5=1, payload rewritten) and inserts "
+    "(%5=2, new key space) applied to the corpus snapshot — the "
+    "copy-on-write upsert lakehouse formats run underneath. The "
+    "touched-key set broadcasts into an anti join, so the 100 TB base "
+    "never shuffles; the merge is one map-side pass + union. Gated on "
+    "the full next-snapshot content.",
+)
+def io04_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from goodreads_pyspark_spark.operators.cdc import apply_cdc
+
+    docs = tbl(spark, sf_dir, "documents")
+    deletes, updates, inserts = _cdc_feed(docs)
     changes = deletes.unionByName(updates).unionByName(inserts)
     return apply_cdc(docs, changes, key="doc_id")
 

@@ -4,8 +4,9 @@ The reference is batch-only (SURVEY.md §1 "Not exercised"); these cover the
 timestamp/window operator surface a production engine needs: time
 bucketing, window functions, sessionization, JSON extraction. The
 streaming versions of the same aggregations live in
-``goodreads_pyspark_spark/streaming`` — one logical definition, batch
-oracle here.
+``goodreads_pyspark_spark/streaming`` — one logical definition, two
+execution modes: a stream query (``sNN``) with a batch twin shares the
+twin's oracle.
 
 Timestamp outputs are rendered as strings/dates so Spark (session tz UTC)
 and DuckDB (naive UTC) hash identically.
@@ -13,11 +14,16 @@ and DuckDB (naive UTC) hash identically.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from goodreads_pyspark_spark.queries import PRE_MATERIALIZATION, query
+from goodreads_pyspark_spark.queries import query
 from goodreads_pyspark_spark.queries._helpers import (
+    _materialize,
+    _released,
     davg,
     dsum,
     events_tbl,
@@ -25,6 +31,90 @@ from goodreads_pyspark_spark.queries._helpers import (
     sql_dsum,
     tbl,
 )
+from goodreads_pyspark_spark.queries.io import _CDC_ORACLE, _cdc_feed
+from goodreads_pyspark_spark.streaming import (
+    dedup_events,
+    drain,
+    enrich_with_dim,
+    hourly_by_type,
+    run_to_memory_sink,
+    running_user_totals,
+    session_close_by_timeout,
+    sessionized_by_user,
+    sliding_by_type,
+    staged_stream,
+    state_partitions,
+)
+
+
+def _hms(col: str | Column) -> Column:
+    return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
+
+
+def _windowed(df: DataFrame, *cols: str) -> DataFrame:
+    """``window_start`` rendered as text, then ``cols``."""
+    return df.select(_hms("window_start").alias("window_start"), *cols)
+
+
+def _sessions(df: DataFrame) -> DataFrame:
+    """A ``sessionized_by_user`` result with its bounds rendered as text."""
+    return df.select(
+        "user_id",
+        _hms("session_start").alias("session_start"),
+        _hms("session_end").alias("session_end"),
+        "n_events",
+    )
+
+
+def _check_twin(
+    what: str,
+    got: DataFrame,
+    expected: DataFrame,
+    on: list[str],
+    exact: list[str],
+    close: tuple[str, ...] = (),
+) -> None:
+    """Raise unless a stream's result ``got`` equals its batch twin
+    ``expected``: a full join on the keys ``on`` (a key on one side only
+    diverges), ``exact`` columns compared null-safe and ``close`` ones
+    within 1e-6."""
+    g, e = got.alias("g"), expected.alias("e")
+    bad = [~F.col(f"g.{c}").eqNullSafe(F.col(f"e.{c}")) for c in exact] + [
+        ~F.coalesce(F.abs(F.col(f"g.{c}") - F.col(f"e.{c}")) <= 1e-6, F.lit(False))
+        for c in close
+    ]
+    n = g.join(e, on, "full").filter(functools.reduce(operator.or_, bad)).count()
+    if n:
+        raise AssertionError(f"streaming {what} diverge from batch for {n} keys")
+
+
+def _sentinel(ev: DataFrame, event_type: str, ahead: str) -> DataFrame:
+    """One ``event_type`` event of user -1, ``ahead`` past the last event
+    of ``ev``: staged last, it pushes the final watermark past every real
+    event, so the end-of-stream no-data batch evicts all remaining state
+    and emits it. Its type lets it survive a type filter and reach the
+    watermark node; id -1 drops it from the result."""
+    return ev.agg(F.max("ts").alias("m")).select(
+        F.lit(-1).cast("long").alias("event_id"),
+        (F.col("m") + F.expr(f"INTERVAL {ahead}")).alias("ts"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.lit(event_type).alias("event_type"),
+        F.lit(0.0).alias("value"),
+        F.lit(None).cast("string").alias("props"),
+    )
+
+
+def _sql_micros(key: str) -> str:
+    """Per-``key`` event count and exact integer-micros value sum (s02,
+    s08): per-event floor(value*1e6) summed as int64 is
+    order-independent in any IEEE-754 engine."""
+    return f"""
+    SELECT {key},
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS BIGINT)
+             AS total_micros
+    FROM events GROUP BY {key}
+    """
 
 
 # --- time bucketing (tumbling day) ------------------------------------------
@@ -69,7 +159,7 @@ def t02_hourly_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("value", 6, "avg_value"),
         )
         .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
+            _hms("w.start").alias("hour_start"),
             "event_type",
             "n_events",
             "avg_value",
@@ -194,9 +284,16 @@ def t06_json_prop_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- as-of join (operators/asof.py) -----------------------------------------
-@query(
-    "t07_asof_purchase_last_view",
-    oracle="""
+def _sql_last_view(tolerance: str | None = None) -> str:
+    """t07/t23 oracle: each purchase with the user's most recent prior
+    view (forward fill over the union of both sides, views first on a
+    tie), nulled when older than ``tolerance``."""
+    view_id, gap = "f_id", "epoch(__ts) - epoch(f_ts)"
+    if tolerance:
+        fresh = f"f_ts >= __ts - INTERVAL {tolerance}"
+        view_id = f"CASE WHEN {fresh} THEN {view_id} END"
+        gap = f"CASE WHEN {fresh} THEN {gap} END"
+    return f"""
     WITH tagged AS (
       SELECT user_id, ts AS __ts, 0 AS is_right, event_id,
              CAST(NULL AS BIGINT) AS view_event_id,
@@ -215,15 +312,17 @@ def t06_json_prop_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
     SELECT event_id, user_id,
            strftime(__ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-           f_id AS view_event_id,
-           epoch(__ts) - epoch(f_ts) AS gap_s
+           {view_id} AS view_event_id,
+           {gap} AS gap_s
     FROM filled WHERE is_right = 0
-    """,
-    doc="As-of join: each purchase ← the user's most recent prior view "
-    "(operators/asof.py union-marker formulation; one shuffle, no range "
-    "explosion). The oracle mirrors the same forward-fill semantics.",
-)
-def t07_asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """
+
+
+def _last_view(
+    spark: SparkSession, sf_dir: str, tolerance: str | None = None
+) -> DataFrame:
+    """Each purchase ← the user's most recent prior view, its payload
+    nulled when older than ``tolerance`` (t07, t23)."""
     from goodreads_pyspark_spark.operators.asof import as_of_join
 
     ev = events_tbl(spark, sf_dir)
@@ -243,17 +342,29 @@ def t07_asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="view_ts",
         payload=["view_event_id", "view_ts"],
         tiebreak="view_event_id",
+        tolerance=F.expr(f"INTERVAL {tolerance}") if tolerance else None,
     )
     return joined.select(
         "event_id",
         "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+        _hms("ts").alias("purchase_ts"),
         "view_event_id",
         (F.col("ts").cast("double") - F.col("view_ts").cast("double")).alias("gap_s"),
     )
 
 
-# --- streaming (rows-only: no SQL-expressible oracle for a stream run) ------
+@query(
+    "t07_asof_purchase_last_view",
+    oracle=_sql_last_view(),
+    doc="As-of join: each purchase ← the user's most recent prior view "
+    "(operators/asof.py union-marker formulation; one shuffle, no range "
+    "explosion). The oracle mirrors the same forward-fill semantics.",
+)
+def t07_asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _last_view(spark, sf_dir)
+
+
+# --- streaming: tumbling window, stateful totals, dedup ---------------------
 @query(
     "s01_streaming_hourly_counts",
     oracle=f"""
@@ -271,50 +382,22 @@ def t07_asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "result is bit-identical to the tumbling-window batch SQL.",
 )
 def s01_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        hourly_by_type,
-        run_to_memory_sink,
-        state_partitions,
-        stream_events_from_dir,
-    )
-
-    # File-source streams need a dedicated directory of uniform-schema
-    # files; stage the (nanos-normalized) events there.
-    stage = tempfile.mkdtemp(prefix="stream_events_")
-    try:
-        events_tbl(spark, sf_dir).write.mode("overwrite").parquet(stage)
-        stream = stream_events_from_dir(spark, stage)
-        with state_partitions(spark, 8):
-            got = run_to_memory_sink(
-                hourly_by_type(stream, exact_scale=6), output_mode="complete"
-            )
-        return got.select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
+    events = events_tbl(spark, sf_dir)
+    with staged_stream(spark, events) as st, state_partitions(spark, 8):
+        got = run_to_memory_sink(
+            hourly_by_type(st.read(), exact_scale=6), output_mode="complete"
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _windowed(got, "event_type", "n_events", "total_value")
 
 
 @query(
     "s02_stateful_user_totals",
-    oracle="""
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS BIGINT)
-             AS total_micros
-    FROM events GROUP BY user_id
-    """,
+    oracle=_sql_micros("user_id"),
     doc="Custom stateful streaming operator (streaming/stateful.py "
     "running_user_totals, applyInPandasWithState): per-user lifetime "
     "(count, value-sum) state machine driven over the staged events "
-    "stream. HASH-GATED (upgraded from rows-only, VERDICT r3 #3): the "
-    "state carries an exact integer-micros accumulator — per-event "
+    "stream. HASH-GATED: the state carries an exact integer-micros "
+    "accumulator — per-event "
     "floor(value*1e6) summed as int64 is order-independent, so the "
     "stream's final state is bit-identical to the batch SQL aggregate "
     "of the same expression in any IEEE-754 engine. The float running "
@@ -322,62 +405,35 @@ def s01_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "against the batch aggregate within 1e-6 inside the query.",
 )
 def s02_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        running_user_totals,
-        run_to_memory_sink,
-        stream_events_from_dir,
+    events = events_tbl(spark, sf_dir)
+    # NO shard shrink here: running_user_totals is
+    # applyInPandasWithState, where each shard is a Python worker —
+    # shrinking shards serializes the per-key Python work; the
+    # maintenance-dominated cases are many-micro-batch streams like
+    # s11, not this single-batch one
+    with staged_stream(spark, events) as st:
+        got = run_to_memory_sink(running_user_totals(st.read()), output_mode="update")
+    # Update-mode sink: one row per (user, micro-batch touched); the final
+    # state per user is the row with the largest running count.
+    latest = (
+        got.groupBy("user_id")
+        .agg(F.max(F.struct("n_events", "total_value", "total_micros")).alias("s"))
+        .select(
+            "user_id",
+            F.col("s.n_events").alias("n_events"),
+            F.col("s.total_value").alias("total_value"),
+            F.col("s.total_micros").alias("total_micros"),
+        )
     )
-
-    stage = tempfile.mkdtemp(prefix="stream_state_")
-    try:
-        events = events_tbl(spark, sf_dir)
-        events.write.mode("overwrite").parquet(stage)
-        # NO shard shrink here: running_user_totals is
-        # applyInPandasWithState, where each shard is a Python worker —
-        # shrinking shards serializes the per-key Python work; the
-        # maintenance-dominated cases are many-micro-batch streams like
-        # s11, not this single-batch one
-        got = run_to_memory_sink(
-            running_user_totals(stream_events_from_dir(spark, stage)),
-            output_mode="update",
-        )
-        # Update-mode sink: one row per (user, micro-batch touched); the final
-        # state per user is the row with the largest running count.
-        latest = (
-            got.groupBy("user_id")
-            .agg(F.max(F.struct("n_events", "total_value", "total_micros")).alias("s"))
-            .select(
-                "user_id",
-                F.col("s.n_events").alias("n_events"),
-                F.col("s.total_value").alias("total_value"),
-                F.col("s.total_micros").alias("total_micros"),
-            )
-        )
-        # Internal gate: the FLOAT accumulator must track the batch aggregate
-        # (the micros accumulator is pinned exactly by the driver's oracle).
-        expected = events.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("exp_n"),
-            F.sum("value").alias("exp_total"),
-        )
-        bad = (
-            latest.join(expected, "user_id", "full")
-            .filter(
-                ~F.col("n_events").eqNullSafe(F.col("exp_n"))
-                | ~F.coalesce(
-                    F.abs(F.col("total_value") - F.col("exp_total")) <= 1e-6,
-                    F.lit(False),
-                )
-            )
-            .count()
-        )
-        if bad:
-            raise AssertionError(f"stateful totals diverge from batch for {bad} users")
-        return latest.select("user_id", "n_events", "total_micros")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    # Internal gate: the FLOAT accumulator must track the batch aggregate
+    # (the micros accumulator is pinned exactly by the driver's oracle).
+    expected = events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value")
+    )
+    _check_twin(
+        "stateful totals", latest, expected, ["user_id"], ["n_events"], ("total_value",)
+    )
+    return latest.select("user_id", "n_events", "total_micros")
 
 
 @query(
@@ -389,10 +445,10 @@ def s02_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Streaming dedup with bounded state (streaming/dedup.py "
     "dropDuplicatesWithinWatermark): the events table is staged TWICE so "
-    "real duplicates arrive across micro-batches; the stream must emit "
+    "real duplicates arrive in separate files; the stream must emit "
     "each event_id exactly once while evicting state past the watermark "
     "— the only dedup formulation that survives an unbounded source. "
-    "HASH-GATED (upgraded from rows-only, VERDICT r3 #3): the emitted "
+    "HASH-GATED: the emitted "
     "per-type counts are pure integers, so the oracle is simply the "
     "distinct-by-id count of the UNDUPLICATED source — exactly what a "
     "correct streaming dedup of two staged copies must reproduce. The "
@@ -400,45 +456,26 @@ def s02_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "before returning.",
 )
 def s03_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        dedup_events,
-        run_to_memory_sink,
-        state_partitions,
-        stream_events_from_dir,
-    )
-
-    stage = tempfile.mkdtemp(prefix="stream_dedup_")
-    try:
-        events = events_tbl(spark, sf_dir)
-        # Two copies in separate files => duplicates span micro-batches.
-        events.write.mode("overwrite").parquet(stage)
-        events.write.mode("append").parquet(stage)
-        with state_partitions(spark, 8):
-            got = run_to_memory_sink(
-                dedup_events(stream_events_from_dir(spark, stage)),
-                output_mode="append",
-            )
-        n_got, n_expected = got.count(), events.dropDuplicates(["event_id"]).count()
-        if n_got != n_expected:
-            raise AssertionError(
-                f"stream dedup emitted {n_got} rows, batch dedup has {n_expected}"
-            )
-        return (
-            got.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .orderBy("event_type")
+    events = events_tbl(spark, sf_dir)
+    # Two copies in separate files => every event arrives twice.
+    with staged_stream(spark, events, events) as st, state_partitions(spark, 8):
+        got = run_to_memory_sink(dedup_events(st.read()), output_mode="append")
+    n_got, n_expected = got.count(), events.dropDuplicates(["event_id"]).count()
+    if n_got != n_expected:
+        raise AssertionError(
+            f"stream dedup emitted {n_got} rows, batch dedup has {n_expected}"
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return (
+        got.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .orderBy("event_type")
+    )
 
 
 # --- sliding (overlapping) windows ------------------------------------------
-@query(
-    "t08_sliding_window_by_type",
-    oracle=f"""
+#: t08/s04: 2h windows every 1h, by expanding each event against the
+#: k = window/slide offsets and re-aggregating.
+_SQL_SLIDING = f"""
     WITH k AS (SELECT unnest(generate_series(0, 1)) AS k),
     x AS (SELECT e.event_type, e.value,
                  date_trunc('hour', e.ts) - k.k * INTERVAL 1 HOUR AS wstart
@@ -448,51 +485,37 @@ def s03_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_events,
            {sql_dsum('value', 6)} AS total_value
     FROM x GROUP BY 1, 2
-    """,
+    """
+
+
+@query(
+    "t08_sliding_window_by_type",
+    oracle=_SQL_SLIDING,
     doc="Sliding-window aggregate — 2h windows advancing every 1h, so "
     "each event contributes to exactly 2 overlapping windows "
-    "(streaming/windows.py sliding_by_type shape). The oracle expands "
+    "(streaming/windows.py sliding_by_type, the batch face of s04). The "
+    "oracle expands "
     "events against the k=window/slide offsets and re-aggregates — the "
     "relational definition of a sliding window. Spark's window() "
     "produces the expansion inside codegen; one shuffle on "
     "(window, type) regardless of slide.",
 )
 def t08_sliding_window_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_tbl(spark, sf_dir)
-    return (
-        ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", 6, "total_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    return _windowed(
+        sliding_by_type(events_tbl(spark, sf_dir), exact_scale=6),
+        "event_type",
+        "n_events",
+        "total_value",
     )
 
 
 @query(
     "s04_streaming_sliding_window",
-    oracle=f"""
-    WITH k AS (SELECT unnest(generate_series(0, 1)) AS k),
-    x AS (SELECT e.event_type, e.value,
-                 date_trunc('hour', e.ts) - k.k * INTERVAL 1 HOUR AS wstart
-          FROM events e CROSS JOIN k)
-    SELECT strftime(wstart, '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           {sql_dsum('value', 6)} AS total_value
-    FROM x GROUP BY 1, 2
-    """,
+    oracle=_SQL_SLIDING,
     doc="Sliding windows through Structured Streaming (streaming/windows.py "
     "sliding_by_type): watermarked 2h/1h overlapping windows over the "
-    "staged events stream, complete-mode memory sink. HASH-GATED "
-    "(upgraded from rows-only, VERDICT r3 #3): the stream aggregates "
+    "staged events stream, complete-mode memory sink. HASH-GATED: "
+    "the stream aggregates "
     "value through the decimal-exact dsum path (exact_scale=6), which "
     "is order-independent, so streaming execution is bit-identical to "
     "the batch twin t08 and shares its relational sliding-window "
@@ -500,48 +523,19 @@ def t08_sliding_window_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(null-safe, both sides exact) before returning.",
 )
 def s04_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        run_to_memory_sink,
-        state_partitions,
-        sliding_by_type,
-        stream_events_from_dir,
+    events = events_tbl(spark, sf_dir)
+    with staged_stream(spark, events) as st, state_partitions(spark, 8):
+        got = run_to_memory_sink(
+            sliding_by_type(st.read(), exact_scale=6), output_mode="complete"
+        )
+    _check_twin(
+        "sliding windows",
+        got,
+        sliding_by_type(events, exact_scale=6),
+        ["window_start", "event_type"],
+        ["n_events", "total_value"],
     )
-
-    stage = tempfile.mkdtemp(prefix="stream_slide_")
-    try:
-        events = events_tbl(spark, sf_dir)
-        events.write.mode("overwrite").parquet(stage)
-        with state_partitions(spark, 8):
-            got = run_to_memory_sink(
-                sliding_by_type(stream_events_from_dir(spark, stage), exact_scale=6),
-                output_mode="complete",
-            )
-        expected = sliding_by_type(events, exact_scale=6)
-        # null-safe compare: a window present on only one side must count as a
-        # divergence; both sides are decimal-exact so equality is exact.
-        bad = (
-            got.join(expected, ["window_start", "event_type"], "full")
-            .filter(
-                ~got["n_events"].eqNullSafe(expected["n_events"])
-                | ~got["total_value"].eqNullSafe(expected["total_value"])
-            )
-            .count()
-        )
-        if bad:
-            raise AssertionError(
-                f"streaming sliding windows diverge from batch for {bad} windows"
-            )
-        return got.select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _windowed(got, "event_type", "n_events", "total_value")
 
 
 # --- lag/lead: day-over-day deltas -------------------------------------------
@@ -606,36 +600,13 @@ def t09_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the stream never shuffles to meet it.",
 )
 def s05_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.queries._helpers import tbl
-    from goodreads_pyspark_spark.streaming import (
-        enrich_with_dim,
-        run_to_memory_sink,
-        state_partitions,
-        stream_events_from_dir,
+    dim = tbl(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("key"), F.col("c_mktsegment").alias("attr")
     )
-
-    stage = tempfile.mkdtemp(prefix="stream_enrich_")
-    try:
-        events_tbl(spark, sf_dir).write.mode("overwrite").parquet(stage)
-        dim = tbl(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("key"), F.col("c_mktsegment").alias("attr")
-        )
-        stream = stream_events_from_dir(spark, stage)
-        with state_partitions(spark, 8):
-            got = run_to_memory_sink(
-                enrich_with_dim(stream, dim), output_mode="complete"
-            )
-        return got.select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "segment",
-            "n_events",
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    events = events_tbl(spark, sf_dir)
+    with staged_stream(spark, events) as st, state_partitions(spark, 8):
+        got = run_to_memory_sink(enrich_with_dim(st.read(), dim), output_mode="complete")
+    return _windowed(got, "segment", "n_events")
 
 
 # --- cumulative distinct users via first-seen collapse -----------------------
@@ -690,15 +661,55 @@ def t10_new_users_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- stream-stream interval join, driver-hash-gated --------------------------
-@query(
-    "s06_stream_stream_join",
-    oracle="""
+def _sql_attribution(join: str) -> str:
+    """s06/s10 oracle: purchases ``join`` same-user views of the
+    preceding hour."""
+    return f"""
     SELECT p.user_id, p.event_id AS purchase_id, v.event_id AS view_id
-    FROM events p JOIN events v
-      ON p.event_type = 'purchase' AND v.event_type = 'view'
+    FROM events p {join} events v
+      ON v.event_type = 'view'
      AND v.user_id = p.user_id
      AND v.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts
-    """,
+    WHERE p.event_type = 'purchase'
+    """
+
+
+def _attribution(spark: SparkSession, ev: DataFrame, *sentinels: DataFrame,
+                 how: str) -> DataFrame:
+    """Stream ``ev`` (then ``sentinels``) as two watermarked sides —
+    purchases and views, 2 hours each — and interval-join each purchase
+    to the same user's views of the preceding hour (s06 inner, s10 left
+    outer); the memory sink's rows."""
+    with staged_stream(spark, ev, *sentinels) as st:
+
+        def side(event_type: str, p: str, id_name: str) -> DataFrame:
+            return (
+                st.read()
+                .filter(F.col("event_type") == event_type)
+                .withWatermark("ts", "2 hours")
+                .select(
+                    F.col("user_id").alias(f"{p}_user"),
+                    F.col("event_id").alias(id_name),
+                    F.col("ts").alias(f"{p}_ts"),
+                )
+            )
+
+        joined = side("purchase", "p", "purchase_id").join(
+            side("view", "v", "view_id"),
+            (F.col("v_user") == F.col("p_user"))
+            & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+            & (F.col("v_ts") <= F.col("p_ts")),
+            how,
+        ).select(F.col("p_user").alias("user_id"), "purchase_id", "view_id")
+        # join state is ~20k rows / 1.5k users per side — 8 state shards,
+        # not 32 (state_partitions docstring has the sizing rule)
+        with state_partitions(spark, 8):
+            return run_to_memory_sink(joined, output_mode="append")
+
+
+@query(
+    "s06_stream_stream_join",
+    oracle=_sql_attribution("JOIN"),
     doc="Stream-stream interval join run as a real Structured Streaming "
     "query: purchases joined to the same user's views from the "
     "preceding hour, both sides watermarked so the join state is "
@@ -710,73 +721,47 @@ def t10_new_users_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     "forever.",
 )
 def s06_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        run_to_memory_sink,
-        state_partitions,
-        stream_events_from_dir,
-    )
-
-    stage = tempfile.mkdtemp(prefix="stream_ssj_")
-    try:
-        events_tbl(spark, sf_dir).write.mode("overwrite").parquet(stage)
-        purchases = (
-            stream_events_from_dir(spark, stage)
-            .filter(F.col("event_type") == "purchase")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("p_ts"),
-            )
-        )
-        views = (
-            stream_events_from_dir(spark, stage)
-            .filter(F.col("event_type") == "view")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("v_ts"),
-            )
-        )
-        joined = purchases.join(
-            views,
-            (F.col("v_user") == F.col("p_user"))
-            & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("v_ts") <= F.col("p_ts")),
-            "inner",
-        ).select(F.col("p_user").alias("user_id"), "purchase_id", "view_id")
-        # join state is ~20k rows / 1.5k users per side — 8 state shards,
-        # not 32 (state_partitions docstring has the sizing rule)
-        with state_partitions(spark, 8):
-            return run_to_memory_sink(joined, output_mode="append")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _attribution(spark, events_tbl(spark, sf_dir), how="inner")
 
 
 # --- calendar gap-fill / resampling ------------------------------------------
-@query(
-    "t11_hourly_gap_fill",
-    oracle="""
-    WITH bounds AS (
-      SELECT MIN(date_trunc('hour', ts)) AS lo,
-             MAX(date_trunc('hour', ts)) AS hi
-      FROM events),
+#: t11/t24: the dense (event_type, hour) grid over the observed hours.
+_SQL_HOUR_GRID = """
+    bounds AS (SELECT date_trunc('hour', MIN(ts)) AS lo,
+                      date_trunc('hour', MAX(ts)) AS hi FROM events),
     cal AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
             FROM bounds),
-    types AS (SELECT DISTINCT event_type FROM events),
+    grid AS (SELECT t.event_type, c.hour
+             FROM (SELECT DISTINCT event_type FROM events) t
+             CROSS JOIN cal c)"""
+
+
+def _hour_grid(ev: DataFrame) -> DataFrame:
+    """Every (hour, event_type) from the first to the last observed hour:
+    a generated calendar crossed with the broadcast type dim."""
+    bounds = ev.agg(
+        F.date_trunc("hour", F.min("ts")).alias("lo"),
+        F.date_trunc("hour", F.max("ts")).alias("hi"),
+    )
+    cal = bounds.select(
+        F.explode(F.expr("sequence(lo, hi, interval 1 hour)")).alias("hour")
+    )
+    return cal.crossJoin(F.broadcast(ev.select("event_type").distinct()))
+
+
+@query(
+    "t11_hourly_gap_fill",
+    oracle=f"""
+    WITH {_SQL_HOUR_GRID},
     hourly AS (SELECT event_type, date_trunc('hour', ts) AS hour,
                       COUNT(*) AS n
                FROM events GROUP BY 1, 2)
-    SELECT t.event_type,
-           strftime(c.hour, '%Y-%m-%d %H:%M:%S') AS hour,
+    SELECT g.event_type,
+           strftime(g.hour, '%Y-%m-%d %H:%M:%S') AS hour,
            CAST(COALESCE(h.n, 0) AS BIGINT) AS n_events,
            CAST(CASE WHEN h.n IS NULL THEN 1 ELSE 0 END AS INTEGER) AS is_gap
-    FROM cal c CROSS JOIN types t
-    LEFT JOIN hourly h ON h.event_type = t.event_type AND h.hour = c.hour
+    FROM grid g
+    LEFT JOIN hourly h ON h.event_type = g.event_type AND h.hour = g.hour
     """,
     doc="Calendar gap-fill (resampling): the dense (hour x type) grid "
     "built with sequence() from the observed bounds, left-joined "
@@ -791,20 +776,12 @@ def t11_hourly_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour")
     ).agg(F.count(F.lit(1)).alias("n"))
-    bounds = ev.agg(
-        F.min(F.date_trunc("hour", "ts")).alias("lo"),
-        F.max(F.date_trunc("hour", "ts")).alias("hi"),
-    )
-    cal = bounds.select(
-        F.explode(F.expr("sequence(lo, hi, interval 1 hour)")).alias("hour")
-    )
-    types = ev.select("event_type").distinct()
-    grid = cal.crossJoin(F.broadcast(types))
     return (
-        grid.join(hourly, ["event_type", "hour"], "left")
+        _hour_grid(ev)
+        .join(hourly, ["event_type", "hour"], "left")
         .select(
             "event_type",
-            F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
+            _hms("hour").alias("hour"),
             F.coalesce("n", F.lit(0)).cast("bigint").alias("n_events"),
             F.when(F.col("n").isNull(), 1).otherwise(0).cast("int").alias("is_gap"),
         )
@@ -950,10 +927,10 @@ T14_MAX_BASKET = 50
 #: Minimum pair support in the report.
 T14_MIN_SUPPORT = 2
 
-@query(
-    "t14_copurchase_pairs",
-    oracle=f"""
-    WITH pur AS (
+#: t14/t22: distinct purchased items per capped basket and the supported
+#: co-purchase pairs.
+_SQL_PAIRS = f"""
+    pur AS (
       SELECT DISTINCT user_id, CAST(props->>'k' AS INTEGER) AS item
       FROM events WHERE event_type = 'purchase'),
     ok_users AS (SELECT user_id FROM pur GROUP BY user_id
@@ -963,9 +940,45 @@ T14_MIN_SUPPORT = 2
       SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS support
       FROM basket a JOIN basket b
         ON a.user_id = b.user_id AND a.item < b.item
-      GROUP BY 1, 2)
-    SELECT item_a, item_b, CAST(support AS BIGINT) AS support
-    FROM pairs WHERE support >= {T14_MIN_SUPPORT}
+      GROUP BY 1, 2
+      HAVING COUNT(*) >= {T14_MIN_SUPPORT})"""
+
+
+def _basket(ev: DataFrame) -> DataFrame:
+    """Distinct (user, purchased item) rows of users within the cap."""
+    pur = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            "user_id", F.get_json_object("props", "$.k").cast("int").alias("item")
+        )
+        .distinct()
+    )
+    ok = (
+        pur.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("b"))
+        .filter(F.col("b") <= T14_MAX_BASKET)
+        .select("user_id")
+    )
+    return pur.join(ok, "user_id", "left_semi")
+
+
+def _pair_support(basket: DataFrame) -> DataFrame:
+    a = basket.select("user_id", F.col("item").alias("item_a"))
+    b = basket.select("user_id", F.col("item").alias("item_b"))
+    return (
+        a.join(b, "user_id")
+        .filter(F.col("item_a") < F.col("item_b"))
+        .groupBy("item_a", "item_b")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .filter(F.col("support") >= T14_MIN_SUPPORT)
+    )
+
+
+@query(
+    "t14_copurchase_pairs",
+    oracle=f"""
+    WITH {_SQL_PAIRS}
+    SELECT item_a, item_b, CAST(support AS BIGINT) AS support FROM pairs
     """,
     doc="Market-basket co-occurrence: distinct item pairs purchased by "
     "the same user, with support counts — the support-counting pass "
@@ -978,29 +991,7 @@ T14_MIN_SUPPORT = 2
     "pair aggregation is one (item_a, item_b)-keyed shuffle.",
 )
 def t14_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_tbl(spark, sf_dir)
-    pur = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id", F.get_json_object("props", "$.k").cast("int").alias("item")
-        )
-        .distinct()
-    )
-    ok = (
-        pur.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("__b"))
-        .filter(F.col("__b") <= T14_MAX_BASKET)
-        .select("user_id")
-    )
-    basket = pur.join(ok, "user_id")
-    b = basket.select("user_id", F.col("item").alias("item_b"))
-    return (
-        basket.join(b, "user_id")
-        .filter(F.col("item") < F.col("item_b"))
-        .groupBy(F.col("item").alias("item_a"), "item_b")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= T14_MIN_SUPPORT)
-    )
+    return _pair_support(_basket(events_tbl(spark, sf_dir)))
 
 
 # --- rolling z-score anomaly detection ---------------------------------------
@@ -1085,7 +1076,7 @@ def t15_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("baseline_var", var)
         .filter(F.col("baseline_var") > 0)
         .select(
-            F.date_format("hour_start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
+            _hms("hour_start").alias("hour_start"),
             "event_type",
             "n_events",
             "baseline_mean",
@@ -1128,7 +1119,7 @@ def t16_rolling_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_orderkey",
         "o_custkey",
-        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("orderdate"),
+        _hms("o_orderdate").alias("orderdate"),
         F.count(F.lit(1)).over(w).cast("bigint").alias("n_in_window"),
         F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
         .over(w)
@@ -1138,9 +1129,10 @@ def t16_rolling_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- native session windows (batch face of the streaming operator) -----------
-@query(
-    "t17_session_windows_native",
-    oracle=f"""
+#: t17/s07/s11: 30-minute-gap sessions of users < 100 as lag/cumsum
+#: islands; the break is strictly greater than the gap (Spark merges
+#: sessions that touch) and a session ends at its last event + gap.
+_SQL_SESSIONS = """
     WITH x AS (
       SELECT user_id, ts,
              CASE WHEN LAG(ts) OVER w IS NULL
@@ -1158,7 +1150,16 @@ def t16_rolling_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                     '%Y-%m-%d %H:%M:%S') AS session_end,
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM s GROUP BY user_id, sid
-    """,
+    """
+
+
+def _session_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
+
+
+@query(
+    "t17_session_windows_native",
+    oracle=_SQL_SESSIONS,
     doc="Native F.session_window sessionization (streaming/windows.py "
     "sessionized_by_user, the batch face of s07): 30-minute-gap "
     "sessions per user. Spark merges sessions that TOUCH (a pair "
@@ -1169,44 +1170,16 @@ def t16_rolling_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "actually runs.",
 )
 def t17_session_windows_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.streaming import sessionized_by_user
-
-    ev = events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
-    return sessionized_by_user(ev).select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-            "session_start"
-        ),
-        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        "n_events",
-    )
+    return _sessions(sessionized_by_user(_session_users(spark, sf_dir)))
 
 
 @query(
     "s07_streaming_session_window",
-    oracle=f"""
-    WITH x AS (
-      SELECT user_id, ts,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS brk
-      FROM events WHERE user_id < 100
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-    s AS (SELECT user_id, ts,
-                 SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-          FROM x)
-    SELECT user_id,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           strftime(MAX(ts) + INTERVAL 30 MINUTE,
-                    '%Y-%m-%d %H:%M:%S') AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM s GROUP BY user_id, sid
-    """,
+    oracle=_SQL_SESSIONS,
     doc="Session windows through Structured Streaming (streaming/windows.py "
     "sessionized_by_user): watermarked 30-min-gap sessions per user over "
-    "the staged events stream, complete-mode memory sink. HASH-GATED "
-    "(upgraded from rows-only, VERDICT r3 #3): session boundaries and "
+    "the staged events stream, complete-mode memory sink. HASH-GATED: "
+    "session boundaries and "
     "counts are pure timestamp/integer outputs, so the stream result "
     "is deterministic and shares the batch twin t17's relational "
     "lag/cumsum-island oracle (strictly-greater-than-gap break = "
@@ -1214,50 +1187,17 @@ def t17_session_windows_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     "asserts stream == batch row-for-row before returning.",
 )
 def s07_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        run_to_memory_sink,
-        state_partitions,
-        sessionized_by_user,
-        stream_events_from_dir,
+    events = _session_users(spark, sf_dir)
+    with staged_stream(spark, events) as st, state_partitions(spark, 8):
+        got = run_to_memory_sink(sessionized_by_user(st.read()), output_mode="complete")
+    _check_twin(
+        "sessions",
+        got,
+        sessionized_by_user(events),
+        ["user_id", "session_start"],
+        ["n_events", "session_end"],
     )
-
-    stage = tempfile.mkdtemp(prefix="stream_sess_")
-    try:
-        events = events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
-        events.write.mode("overwrite").parquet(stage)
-        with state_partitions(spark, 8):
-            got = run_to_memory_sink(
-                sessionized_by_user(stream_events_from_dir(spark, stage).filter(
-                    F.col("user_id") < 100
-                )),
-                output_mode="complete",
-            )
-        expected = sessionized_by_user(events)
-        bad = (
-            got.join(expected, ["user_id", "session_start"], "full")
-            .filter(
-                ~got["n_events"].eqNullSafe(expected["n_events"])
-                | ~got["session_end"].eqNullSafe(expected["session_end"])
-            )
-            .count()
-        )
-        if bad:
-            raise AssertionError(
-                f"streaming sessions diverge from batch for {bad} sessions"
-            )
-        return got.select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _sessions(got)
 
 
 # --- exponentially-weighted trailing volume (exact dyadic weights) -----------
@@ -1311,7 +1251,6 @@ def t18_ewma_hourly_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("hr"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .cache()
     )
     w = ev.sparkSession.createDataFrame(T18_WEIGHTS, ["d", "wt"])
     h2 = hourly.select(
@@ -1333,8 +1272,7 @@ def t18_ewma_hourly_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("d") == 0, F.col("c2"))).alias("c0"),
     )
     return g.select(
-        F.date_format(F.timestamp_seconds(F.col("hr") * 3600),
-                      "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
+        _hms(F.timestamp_seconds(F.col("hr") * 3600)).alias("hour_start"),
         "event_type",
         F.col("c0").cast("bigint").alias("n_events"),
         (F.col("num") / F.col("den")).alias("ewma"),
@@ -1401,9 +1339,7 @@ def t19_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ============================ round-4 additions ==============================
-
-
+# --- inter-arrival statistics and OHLC bars ----------------------------------
 @query(
     "t20_interarrival_stats",
     oracle="""
@@ -1490,7 +1426,7 @@ def t21_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "event_type",
-            F.date_format("hs", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
+            _hms("hs").alias("hour_start"),
             "open",
             "high",
             "low",
@@ -1502,13 +1438,7 @@ def t21_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s08_foreachbatch_sink",
-    oracle="""
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS BIGINT)
-             AS total_micros
-    FROM events GROUP BY event_type
-    """,
+    oracle=_sql_micros("event_type"),
     doc="The PRODUCTION streaming sink path: events stream -> "
     "foreachBatch -> append-mode parquet with a checkpoint location "
     "(run_to_memory_sink is the test harness; foreachBatch+checkpoint "
@@ -1522,72 +1452,39 @@ def t21_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pytest).",
 )
 def s08_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import stream_events_from_dir
-
-    stage = tempfile.mkdtemp(prefix="s08_stage_")
-    out = tempfile.mkdtemp(prefix="s08_out_")
-    chk = tempfile.mkdtemp(prefix="s08_chk_")
-    try:
-        events = events_tbl(spark, sf_dir)
-        events.write.mode("overwrite").parquet(stage)
-
-        def write_batch(bdf: DataFrame, batch_id: int) -> None:
-            bdf.write.mode("append").parquet(out)
-
-        q = (
-            stream_events_from_dir(spark, stage)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", chk)
-            .start()
+    events = events_tbl(spark, sf_dir)
+    with staged_stream(spark, events) as st:
+        out = st.path("out")
+        drain(
+            st.read()
+            .writeStream.foreachBatch(lambda bdf, _: bdf.write.mode("append").parquet(out))
+            .option("checkpointLocation", st.path("chk"))
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         written = spark.read.parquet(out)
         n_written, n_src = written.count(), events.count()
         if n_written != n_src:
             raise AssertionError(
                 f"foreachBatch sink wrote {n_written} rows, source has {n_src}"
             )
-        # materialize before the finally removes the staged dirs
-        return (written.groupBy("event_type").agg(
+        # materialize before the stage (and the sink output in it) goes
+        return written.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(F.floor(F.col("value") * 1e6).cast("long"))
             .cast("bigint")
             .alias("total_micros"),
-        )
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
 
 
-# --- association rules from co-purchase supports (queued for r5 rotation) ----
+# --- association rules from co-purchase supports ----------------------------
 T22_TOP = 20
 
 
 @query(
     "t22_association_rules",
     oracle=f"""
-    WITH pur AS (
-      SELECT DISTINCT user_id, CAST(props->>'k' AS INTEGER) AS item
-      FROM events WHERE event_type = 'purchase'),
-    ok_users AS (SELECT user_id FROM pur GROUP BY user_id
-                 HAVING COUNT(*) <= {T14_MAX_BASKET}),
-    basket AS (SELECT pur.user_id, item FROM pur JOIN ok_users USING (user_id)),
+    WITH {_SQL_PAIRS},
     n AS (SELECT COUNT(*) AS n_users FROM ok_users),
-    cnt AS (SELECT item, COUNT(*) AS c FROM basket GROUP BY item),
-    pairs AS (
-      SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS support
-      FROM basket a JOIN basket b
-        ON a.user_id = b.user_id AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= {T14_MIN_SUPPORT})
+    cnt AS (SELECT item, COUNT(*) AS c FROM basket GROUP BY item)
     SELECT item_a, item_b,
            CAST(support AS BIGINT) AS support,
            CAST(support AS DOUBLE) / ca.c AS confidence,
@@ -1609,86 +1506,42 @@ T22_TOP = 20
     "cap as t14 bounds the pair space.",
 )
 def t22_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_tbl(spark, sf_dir)
-    pur = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.get_json_object("props", "$.k").cast("int").alias("item"),
+    with _released() as caches:
+        basket = _basket(events_tbl(spark, sf_dir)).cache()
+        caches.append(basket)
+        n_users = basket.select("user_id").distinct().agg(
+            F.count(F.lit(1)).alias("n_users")
         )
-        .distinct()
-    )
-    ok = (
-        pur.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("b"))
-        .filter(F.col("b") <= T14_MAX_BASKET)
-        .select("user_id")
-    )
-    basket = pur.join(ok, "user_id", "left_semi").cache()
-    n_users = basket.select("user_id").distinct().agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
-    cnt = basket.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
-    a = basket.select("user_id", F.col("item").alias("item_a"))
-    b = basket.select("user_id", F.col("item").alias("item_b"))
-    pairs = (
-        a.join(b, "user_id")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= T14_MIN_SUPPORT)
-    )
-    ca = cnt.select(F.col("item").alias("item_a"), F.col("c").alias("ca"))
-    cb = cnt.select(F.col("item").alias("item_b"), F.col("c").alias("cb"))
-    out = (
-        # ca/cb are per-ITEM counts — the item domain grows with the
-        # corpus, so no forced broadcast: AQE's size check governs.
-        pairs.join(ca, "item_a")
-        .join(cb, "item_b")
-        .crossJoin(F.broadcast(n_users))
-        .select(
-            "item_a",
-            "item_b",
-            F.col("support").cast("bigint").alias("support"),
-            (F.col("support").cast("double") / F.col("ca")).alias("confidence"),
-            (
-                (F.col("support") * F.col("n_users")).cast("double")
-                / (F.col("ca") * F.col("cb"))
-            ).alias("lift"),
+        cnt = basket.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
+        ca = cnt.select(F.col("item").alias("item_a"), F.col("c").alias("ca"))
+        cb = cnt.select(F.col("item").alias("item_b"), F.col("c").alias("cb"))
+        out = (
+            # ca/cb are per-ITEM counts — the item domain grows with the
+            # corpus, so no forced broadcast: AQE's size check governs.
+            _pair_support(basket)
+            .join(ca, "item_a")
+            .join(cb, "item_b")
+            .crossJoin(F.broadcast(n_users))
+            .select(
+                "item_a",
+                "item_b",
+                F.col("support").cast("bigint").alias("support"),
+                (F.col("support").cast("double") / F.col("ca")).alias("confidence"),
+                (
+                    (F.col("support") * F.col("n_users")).cast("double")
+                    / (F.col("ca") * F.col("cb"))
+                ).alias("lift"),
+            )
+            .orderBy(F.col("lift").desc(), "item_a", "item_b")
+            .limit(T22_TOP)
         )
-        .orderBy(F.col("lift").desc(), "item_a", "item_b")
-        .limit(T22_TOP)
-    )
-    result = out.localCheckpoint(eager=True)
-    basket.unpersist()
-    # The checkpointed frame's plan is an opaque RDD scan; keep the lazy
-    # frame reachable so plan audits (tests/test_plans.py) can assert on
-    # the REAL join/aggregate shape.
-    PRE_MATERIALIZATION["t22_association_rules"] = out
-    return result
+        return _materialize("t22_association_rules", out)
 
 
-# --- streaming CDC upsert (foreachBatch merge; new in r5) --------------------
+# --- streaming CDC upsert (foreachBatch merge) -------------------------------
 @query(
     "s09_streaming_cdc_upsert",
-    oracle="""
-    WITH changes AS (
-      SELECT 'D' AS op, doc_id, text, lang, source, n_chars
-      FROM documents WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT 'U' AS op, doc_id, upper(text) AS text, lang, source,
-             n_chars + 1000 AS n_chars
-      FROM documents WHERE doc_id % 5 = 1
-      UNION ALL
-      SELECT 'I' AS op, doc_id + 1000000 AS doc_id, text, lang,
-             'ingest_v2' AS source, n_chars
-      FROM documents WHERE doc_id % 5 = 2)
-    SELECT doc_id, text, lang, source, n_chars
-    FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM changes)
-    UNION ALL
-    SELECT doc_id, text, lang, source, n_chars
-    FROM changes WHERE op <> 'D'
-    """,
+    oracle=_CDC_ORACLE,
     doc="STREAMING CDC: the io04 change feed (deletes %5=0, updates %5=1, "
     "inserts %5=2) arrives as a stream — one file per op class, "
     "maxFilesPerTrigger=1, so the merge genuinely applies "
@@ -1704,88 +1557,49 @@ def t22_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never shuffles.",
 )
 def s09_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import state_partitions
-
     from goodreads_pyspark_spark.operators.cdc import apply_cdc
 
     docs = tbl(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="s09_")
-    try:
-        v0 = f"{base}/v0"
-        docs.write.parquet(v0)
-
-        deletes = docs.filter(F.col("doc_id") % 5 == 0).withColumn("op", F.lit("D"))
-        updates = (
-            docs.filter(F.col("doc_id") % 5 == 1)
-            .withColumn("text", F.upper("text"))
-            .withColumn("n_chars", F.col("n_chars") + 1000)
-            .withColumn("op", F.lit("U"))
-        )
-        inserts = (
-            docs.filter(F.col("doc_id") % 5 == 2)
-            .withColumn("doc_id", F.col("doc_id") + 1000000)
-            .withColumn("source", F.lit("ingest_v2"))
-            .withColumn("op", F.lit("I"))
-        )
-        feed = f"{base}/feed"
-        for part in (deletes, updates, inserts):
-            part.coalesce(1).write.mode("append").parquet(feed)
-        feed_schema = spark.read.parquet(feed).schema
-
-        state = {"cur": v0, "version": 0, "batches": 0}
+    feed = [part.coalesce(1) for part in _cdc_feed(docs)]
+    with staged_stream(
+        spark, *feed, schema=feed[0].schema, files_per_trigger=1
+    ) as st:
+        state = {"cur": st.path("v0"), "batches": 0}
+        docs.write.parquet(state["cur"])
 
         def merge_batch(bdf: DataFrame, batch_id: int) -> None:
             if bdf.isEmpty():
                 return
-            snap = spark.read.parquet(state["cur"])
-            state["version"] += 1
             state["batches"] += 1
-            nxt = f"{base}/v{state['version']}"
+            nxt = st.path(f"v{state['batches']}")
+            snap = spark.read.parquet(state["cur"])
             apply_cdc(snap, bdf, key="doc_id").write.parquet(nxt)
             state["cur"] = nxt
 
         # stateless stream, but each merge_batch join runs at batch scale —
         # 8 shuffle partitions, not 32 of scheduling overhead
         with state_partitions(spark, 8):
-            q = (
-                spark.readStream.schema(feed_schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(feed)
+            drain(
+                st.read()
                 .writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", f"{base}/chk")
-                .start()
+                .option("checkpointLocation", st.path("chk"))
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
         if state["batches"] < 3:
             raise AssertionError(
                 f"expected >=3 incremental merge batches, saw {state['batches']}"
             )
-        # materialize before the finally removes the staged dirs
-        return (spark.read.parquet(state["cur"]).select(
-            "doc_id", "text", "lang", "source", "n_chars"
+        # materialize before the stage (and the snapshots in it) goes
+        return (
+            spark.read.parquet(state["cur"])
+            .select("doc_id", "text", "lang", "source", "n_chars")
+            .localCheckpoint(eager=True)
         )
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
-# --- stream-stream LEFT OUTER join (watermark-driven null emission; r5) ------
+# --- stream-stream LEFT OUTER join (watermark-driven null emission) ---------
 @query(
     "s10_stream_stream_left_join",
-    oracle="""
-    SELECT p.user_id, p.event_id AS purchase_id, v.event_id AS view_id
-    FROM events p LEFT JOIN events v
-      ON v.event_type = 'view'
-     AND v.user_id = p.user_id
-     AND v.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts
-    WHERE p.event_type = 'purchase'
-    """,
+    oracle=_sql_attribution("LEFT JOIN"),
     doc="Stream-stream LEFT OUTER interval join: every purchase emits — "
     "matched against same-user views from the preceding hour, or with "
     "a NULL view_id once the watermark PROVES no match can still "
@@ -1806,99 +1620,19 @@ def s09_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "requirement for an unbounded attribution join.",
 )
 def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        run_to_memory_sink,
-        state_partitions,
-        stream_events_from_dir,
+    ev = events_tbl(spark, sf_dir)
+    sentinels = _sentinel(ev, "purchase", "30 DAYS").unionByName(
+        _sentinel(ev, "view", "30 DAYS")
     )
-
-    stage = tempfile.mkdtemp(prefix="stream_ssloj_")
-    try:
-        ev = events_tbl(spark, sf_dir)
-        ev.write.mode("overwrite").parquet(stage)
-        # far-future sentinel per side: advances the watermark past every real
-        # event so the final no-data batch evicts and emits all unmatched rows
-        mx = ev.agg(F.max("ts").alias("m"))
-        sentinels = None
-        for etype in ("purchase", "view"):
-            row = mx.select(
-                F.lit(-1).cast("long").alias("event_id"),
-                (F.col("m") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit(etype).alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast("string").alias("props"),
-            )
-            sentinels = row if sentinels is None else sentinels.unionByName(row)
-        sentinels.write.mode("append").parquet(stage)
-
-        purchases = (
-            stream_events_from_dir(spark, stage)
-            .filter(F.col("event_type") == "purchase")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("p_ts"),
-            )
-        )
-        views = (
-            stream_events_from_dir(spark, stage)
-            .filter(F.col("event_type") == "view")
-            .withWatermark("ts", "2 hours")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("v_ts"),
-            )
-        )
-        joined = purchases.join(
-            views,
-            (F.col("v_user") == F.col("p_user"))
-            & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("v_ts") <= F.col("p_ts")),
-            "left_outer",
-        ).select(F.col("p_user").alias("user_id"), "purchase_id", "view_id")
-        # same state-shard sizing rationale as s06
-        with state_partitions(spark, 8):
-            got = run_to_memory_sink(joined, output_mode="append")
-        # drop the sentinel purchase (it joins only the view sentinel)
-        return got.filter(F.col("purchase_id") >= 0)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    got = _attribution(spark, ev, sentinels, how="left_outer")
+    # drop the sentinel purchase (it joins only the view sentinel)
+    return got.filter(F.col("purchase_id") >= 0)
 
 
-# --- as-of join with tolerance (bounded staleness; new in r6) ----------------
+# --- as-of join with tolerance (bounded staleness) --------------------------
 @query(
     "t23_asof_with_tolerance",
-    oracle="""
-    WITH tagged AS (
-      SELECT user_id, ts AS __ts, 0 AS is_right, event_id,
-             CAST(NULL AS BIGINT) AS view_event_id,
-             CAST(NULL AS TIMESTAMP) AS view_ts
-      FROM events WHERE event_type = 'purchase'
-      UNION ALL
-      SELECT user_id, ts, 1, NULL, event_id, ts
-      FROM events WHERE event_type = 'view'),
-    filled AS (
-      SELECT *,
-             last_value(view_event_id IGNORE NULLS) OVER w AS f_id,
-             last_value(view_ts IGNORE NULLS) OVER w AS f_ts
-      FROM tagged
-      WINDOW w AS (PARTITION BY user_id
-                   ORDER BY __ts, is_right DESC, view_event_id ASC NULLS FIRST
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-    SELECT event_id, user_id,
-           strftime(__ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-           CASE WHEN f_ts >= __ts - INTERVAL 1 HOUR THEN f_id END
-             AS view_event_id,
-           CASE WHEN f_ts >= __ts - INTERVAL 1 HOUR
-                THEN epoch(__ts) - epoch(f_ts) END AS gap_s
-    FROM filled WHERE is_right = 0
-    """,
+    oracle=_sql_last_view("1 HOUR"),
     doc="t07's as-of join under a 1-hour TOLERANCE (pandas merge_asof "
     "semantics; operators/asof.py tolerance param): a prior view older "
     "than an hour is too stale to attribute, so the whole payload "
@@ -1909,59 +1643,14 @@ def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "precisely when tolerance windows are wide.",
 )
 def t23_asof_with_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.asof import as_of_join
-
-    ev = events_tbl(spark, sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts"
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("ts").alias("view_ts"),
-        F.col("event_id").alias("view_event_id"),
-    )
-    joined = as_of_join(
-        purchases,
-        views,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="view_ts",
-        payload=["view_event_id", "view_ts"],
-        tiebreak="view_event_id",
-        tolerance=F.expr("INTERVAL 1 HOUR"),
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-        "view_event_id",
-        (F.col("ts").cast("double") - F.col("view_ts").cast("double")).alias("gap_s"),
-    )
+    return _last_view(spark, sf_dir, "1 HOUR")
 
 
-# --- session close by state timeout (silence as signal; new in r6) -----------
+# --- session close by state timeout (silence as signal) ---------------------
 @query(
     "s11_session_timeout_close",
-    oracle="""
-    WITH x AS (
-      SELECT user_id, ts,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS brk
-      FROM events WHERE user_id < 100
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-    s AS (SELECT user_id, ts,
-                 SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-          FROM x)
-    SELECT user_id,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           strftime(MAX(ts) + INTERVAL 30 MINUTE,
-                    '%Y-%m-%d %H:%M:%S') AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM s GROUP BY user_id, sid
-    """,
-    doc="Sessions that close by SILENCE (VERDICT r5 #7): per-user session "
+    oracle=_SQL_SESSIONS,
+    doc="Sessions that close by SILENCE: per-user session "
     "state in applyInPandasWithState with an EVENT-TIME TIMEOUT at "
     "last_event + gap — when the watermark passes it with no further "
     "data for the key, Spark fires the close callback and the session "
@@ -1982,21 +1671,12 @@ def t23_asof_with_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "row-for-row assert against the native session_window batch face.",
 )
 def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import datetime as _dt
     import glob
     import os
-    import shutil
-    import tempfile
     import time
 
-    from goodreads_pyspark_spark.streaming import (
-        run_to_memory_sink,
-        state_partitions,
-        session_close_by_timeout,
-        sessionized_by_user,
-    )
-    from goodreads_pyspark_spark.streaming.windows import EVENT_SCHEMA
-
-    ev = events_tbl(spark, sf_dir).filter(F.col("user_id") < 100)
+    ev = _session_users(spark, sf_dir)
 
     # Stage the stream as 3 time waves in ONE partitioned write job, cut
     # around the single largest intra-user silence (~100h at both sfs):
@@ -2020,11 +1700,10 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if top_gap["g"] < 6 * 3600:
         raise AssertionError("fixture lacks a >6h intra-user silence")
-    import datetime as _dt
 
-    # Only the silence-straddling pair of cuts is load-bearing (r9; the
-    # r8 quartile cuts added micro-batches — and per-batch state-store
-    # maintenance — without adding coverage): wave 1 spans the inside of
+    # Only the silence-straddling pair of cuts is load-bearing (more cuts
+    # add micro-batches — and per-batch state-store maintenance —
+    # without adding coverage): wave 1 spans the inside of
     # the largest silence, so it is empty for that user while its other
     # users' events push the watermark past the open deadline, and the
     # user's next event arrives strictly later, in wave 2.
@@ -2037,9 +1716,8 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     wave_col = sum(
         (F.col("ts") >= F.lit(c)).cast("int") for c in cuts
     )
-    stage = tempfile.mkdtemp(prefix="s11_")
-    try:
-        waves_dir = os.path.join(stage, "_waves")
+    with staged_stream(spark, files_per_trigger=1) as st:
+        waves_dir = os.path.join(st.dir, "_waves")
         (
             ev.withColumn("wave", wave_col)
             .repartition("wave")
@@ -2053,30 +1731,20 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i, f in enumerate(wave_files):
             # ascending mtimes pin the file source's oldest-first batch order
-            dst = os.path.join(stage, f"wave-{i:04d}.parquet")
+            dst = os.path.join(st.dir, f"wave-{i:04d}.parquet")
             os.rename(f, dst)
             os.utime(dst, (base + i, base + i))
         # typed sentinel (the s10 trick): passes the user filter via user_id -1,
         # pushes the final watermark past every real deadline
-        sentinel = ev.agg(F.max("ts").alias("m")).select(
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.col("m") + F.expr("INTERVAL 365 DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("view").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
+        before = set(glob.glob(os.path.join(st.dir, "*.parquet")))
+        _sentinel(ev, "view", "365 DAYS").coalesce(1).write.mode("append").parquet(
+            st.dir
         )
-        before = set(glob.glob(os.path.join(stage, "*.parquet")))
-        sentinel.coalesce(1).write.mode("append").parquet(stage)
-        for f in set(glob.glob(os.path.join(stage, "*.parquet"))) - before:
+        for f in set(glob.glob(os.path.join(st.dir, "*.parquet"))) - before:
             os.utime(f, (base + len(wave_files) + 1,) * 2)
 
         stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .filter(F.col("user_id") < 100)
-            .withWatermark("ts", "1 hour")
+            st.read().filter(F.col("user_id") < 100).withWatermark("ts", "1 hour")
         )
         # each micro-batch pays per-partition state-store maintenance;
         # state here is ~100 keys, so 4 shards, not 32 (state_partitions
@@ -2087,59 +1755,44 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
                 output_mode="update",
             ).filter(F.col("user_id") >= 0)
 
-        # fixture property: a timeout-closed session for a user who has a LATER
-        # session is provably a MID-STREAM silence close — had the user's next
-        # event been processed first, the handler would have closed the old
-        # session inline as 'gap'; 'timeout' means the callback fired in a
-        # batch strictly before the one carrying that user's next event.
-        later = got.select(
-            F.col("user_id").alias("u"), F.col("session_start").alias("nxt")
+    # fixture property: a timeout-closed session for a user who has a LATER
+    # session is provably a MID-STREAM silence close — had the user's next
+    # event been processed first, the handler would have closed the old
+    # session inline as 'gap'; 'timeout' means the callback fired in a
+    # batch strictly before the one carrying that user's next event.
+    later = got.select(
+        F.col("user_id").alias("u"), F.col("session_start").alias("nxt")
+    )
+    mid_stream = (
+        got.filter(F.col("closed_by") == "timeout")
+        .join(
+            later,
+            (F.col("user_id") == F.col("u"))
+            & (F.col("nxt") > F.col("session_end")),
+            "left_semi",
         )
-        mid_stream = (
-            got.filter(F.col("closed_by") == "timeout")
-            .join(
-                later,
-                (F.col("user_id") == F.col("u"))
-                & (F.col("nxt") > F.col("session_end")),
-                "left_semi",
-            )
-            .count()
-        )
-        if not mid_stream:
-            raise AssertionError("no mid-stream timeout-closed session in fixture")
-        if not got.filter(F.col("closed_by") == "gap").count():
-            raise AssertionError("no gap-closed session in fixture")
+        .count()
+    )
+    if not mid_stream:
+        raise AssertionError("no mid-stream timeout-closed session in fixture")
+    if not got.filter(F.col("closed_by") == "gap").count():
+        raise AssertionError("no gap-closed session in fixture")
 
-        # stream == batch, row for row (the s07 convention)
-        expected = sessionized_by_user(ev)
-        bad = (
-            got.join(expected, ["user_id", "session_start"], "full")
-            .filter(
-                ~got["n_events"].eqNullSafe(expected["n_events"])
-                | ~got["session_end"].eqNullSafe(expected["session_end"])
-            )
-            .count()
-        )
-        if bad:
-            raise AssertionError(
-                f"timeout-closed sessions diverge from batch for {bad} sessions"
-            )
-        return got.select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    # stream == batch, row for row (the s07 convention)
+    _check_twin(
+        "timeout-closed sessions",
+        got,
+        sessionized_by_user(ev),
+        ["user_id", "session_start"],
+        ["n_events", "session_end"],
+    )
+    return _sessions(got)
 
 
-# --- LOCF resample: last-observation-carried-forward hourly grid (r6) --------
+# --- LOCF resample: last-observation-carried-forward hourly grid ------------
 @query(
     "t24_locf_resample",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
       SELECT event_type, date_trunc('hour', ts) AS hour, value,
              ROW_NUMBER() OVER (
@@ -2147,13 +1800,7 @@ def s11_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFrame:
                ORDER BY ts DESC, event_id DESC) AS rn
       FROM events),
     hourly AS (SELECT event_type, hour, value FROM obs WHERE rn = 1),
-    bounds AS (SELECT date_trunc('hour', MIN(ts)) AS lo,
-                      date_trunc('hour', MAX(ts)) AS hi FROM events),
-    cal AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
-            FROM bounds),
-    grid AS (SELECT t.event_type, c.hour
-             FROM (SELECT DISTINCT event_type FROM events) t
-             CROSS JOIN cal c),
+    {_SQL_HOUR_GRID},
     joined AS (SELECT g.event_type, g.hour, h.value,
                       CASE WHEN h.value IS NULL THEN 0 ELSE 1 END AS is_observed
                FROM grid g LEFT JOIN hourly h
@@ -2195,16 +1842,7 @@ def t24_locf_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    cal = bounds.select(
-        F.explode(F.expr("sequence(lo, hi, interval 1 hour)")).alias("hour")
-    )
-    types = ev.select("event_type").distinct()
-    grid = cal.crossJoin(F.broadcast(types))
-    joined = grid.join(hourly, ["event_type", "hour"], "left").select(
+    joined = _hour_grid(ev).join(hourly, ["event_type", "hour"], "left").select(
         "event_type",
         "hour",
         "value",
@@ -2217,13 +1855,13 @@ def t24_locf_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.select(
         "event_type",
-        F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
+        _hms("hour").alias("hour"),
         F.last("value", ignorenulls=True).over(w_fill).alias("value_locf"),
         "is_observed",
     )
 
 
-# --- last-touch attribution (new in r7) ---------------------------------------
+# --- last-touch attribution -------------------------------------------------
 @query(
     "t25_lasttouch_attribution",
     oracle=f"""
@@ -2291,20 +1929,50 @@ def t25_lasttouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- daily sketch telemetry with engine-independent gate (new in r7) ----------
+# --- daily sketch telemetry with engine-independent gate -------------------
 _T26_RSD = 0.02
 _T26_TOL = 5 * _T26_RSD
 
-
-@query(
-    "t26_daily_approx_users",
-    oracle="""
+#: t26/s13: the exact per-day cells; the in-query HLL bound is pinned TRUE.
+_SQL_DAILY_USERS = """
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            TRUE AS hll_within_rsd
     FROM events GROUP BY 1
-    """,
+    """
+
+
+def _day(col: str = "ts") -> Column:
+    return F.date_format(F.date_trunc("day", col), "yyyy-MM-dd").alias("day")
+
+
+def _hll() -> Column:
+    return F.approx_count_distinct("user_id", rsd=_T26_RSD).alias("hll")
+
+
+def _daily_gate(daily: DataFrame) -> DataFrame:
+    """t26's gate columns over per-day exact counts and an ``hll``
+    estimate: the estimate within 5·rsd of the exact distinct count."""
+    err = F.abs(F.col("hll").cast("double") - F.col("exact_users")) / F.col(
+        "exact_users"
+    )
+    return daily.select(
+        "day", "exact_users", "n_events", (err <= _T26_TOL).alias("hll_within_rsd")
+    )
+
+
+def _daily_exact(ev: DataFrame, *aggs: Column) -> DataFrame:
+    return ev.groupBy(_day()).agg(
+        F.countDistinct("user_id").cast("bigint").alias("exact_users"),
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        *aggs,
+    )
+
+
+@query(
+    "t26_daily_approx_users",
+    oracle=_SQL_DAILY_USERS,
     doc="Daily distinct-user telemetry via HyperLogLog — the sketch q27 "
     "gates, in its most common production shape (per-time-bucket "
     "cardinality dashboards where exact COUNT DISTINCT would shuffle "
@@ -2319,102 +1987,43 @@ _T26_TOL = 5 * _T26_RSD
     "sampled audits.",
 )
 def t26_daily_approx_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_tbl(spark, sf_dir)
-    day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
-    agg = ev.groupBy(day).agg(
-        F.countDistinct("user_id").cast("bigint").alias("exact_users"),
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.approx_count_distinct("user_id", rsd=_T26_RSD).alias("hll"),
-    )
-    err = F.abs(F.col("hll").cast("double") - F.col("exact_users")) / F.col(
-        "exact_users"
-    )
-    return agg.select(
-        "day", "exact_users", "n_events", (err <= _T26_TOL).alias("hll_within_rsd")
-    )
+    return _daily_gate(_daily_exact(events_tbl(spark, sf_dir), _hll()))
 
 
-# --- streaming sketch telemetry (new in r7) ------------------------------------
 @query(
     "s13_streaming_approx_users",
-    oracle="""
-    SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           TRUE AS hll_within_rsd
-    FROM events GROUP BY 1
-    """,
+    oracle=_SQL_DAILY_USERS,
     doc="t26's daily distinct-user telemetry THROUGH the streaming "
     "engine — the reason sketches exist in streaming at all: exact "
     "COUNT DISTINCT is not a legal streaming aggregate (unbounded "
     "per-key state), approx_count_distinct is (fixed 2^p registers "
     "merged per micro-batch). The watermarked daily window carries "
-    "(count, HLL) state; after the run the query joins the streamed "
-    "result against the batch-exact counts, asserts the event counts "
-    "match row-for-row (stream == batch duality, the s01 discipline), "
-    "and emits the t26 gate columns — DuckDB recomputes the exact "
+    "(count, HLL) state; after the run the query checks the streamed "
+    "event counts against the batch-exact ones row-for-row (stream == "
+    "batch duality, the s01 discipline) and emits the t26 gate "
+    "columns — DuckDB recomputes the exact "
     "cells, the oracle pins the in-bound boolean TRUE. Scale shape: "
     "per-window state is one register array + one counter regardless "
     "of cardinality; the batch exact pass exists only as the audit.",
 )
 def s13_streaming_approx_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        run_to_memory_sink,
-        state_partitions,
-        stream_events_from_dir,
-    )
-
-    stage = tempfile.mkdtemp(prefix="s13_")
-    try:
-        ev = events_tbl(spark, sf_dir)
-        ev.write.mode("overwrite").parquet(stage)
-        stream = stream_events_from_dir(spark, stage)
+    ev = events_tbl(spark, sf_dir)
+    # state is ~30 daily windows — 4 state shards, not 32
+    with staged_stream(spark, ev) as st, state_partitions(spark, 4):
         agg = (
-            stream.withWatermark("ts", "1 day")
+            st.read()
+            .withWatermark("ts", "1 day")
             .groupBy(F.window("ts", "1 day").alias("w"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_events_stream"),
-                F.approx_count_distinct("user_id", rsd=_T26_RSD).alias("hll"),
-            )
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"), _hll())
         )
-        # state is ~30 daily windows — 4 state shards, not 32
-        with state_partitions(spark, 4):
-            got = run_to_memory_sink(agg, output_mode="complete").select(
-                F.date_format("w.start", "yyyy-MM-dd").alias("day"),
-                "n_events_stream",
-                "hll",
-            )
-        exact = ev.groupBy(
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
-        ).agg(
-            F.countDistinct("user_id").cast("bigint").alias("exact_users"),
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        )
-        j = exact.join(got, "day", "full")
-        bad = j.filter(
-            ~F.col("n_events").eqNullSafe(F.col("n_events_stream"))
-        ).count()
-        if bad:
-            raise AssertionError(
-                f"stream/batch daily event counts disagree on {bad} days"
-            )
-        err = F.abs(F.col("hll").cast("double") - F.col("exact_users")) / F.col(
-            "exact_users"
-        )
-        return j.select(
-            "day",
-            "exact_users",
-            "n_events",
-            (err <= _T26_TOL).alias("hll_within_rsd"),
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        got = run_to_memory_sink(agg, output_mode="complete")
+    got = got.select(_day("w.start"), "n_events", "hll")
+    exact = _daily_exact(ev)
+    _check_twin("daily event counts", got, exact, ["day"], ["n_events"])
+    return _daily_gate(exact.join(got.select("day", "hll"), "day"))
 
 
-# --- count-min sketch heavy hitters (new in r9) --------------------------------
+# --- count-min sketch heavy hitters ----------------------------------------
 #: Sketch geometry: d hash rows x w buckets. w=256 at test scale keeps the
 #: collision (overcount) path genuinely exercised by thousands of keys;
 #: production sizes w ~ e/eps for an eps*N additive error bound.
@@ -2448,9 +2057,11 @@ def _cms_pairs(df: DataFrame) -> DataFrame:
     ).select(*df.columns, "p.j", "p.b")
 
 
-@query(
-    "t27_cms_heavy_hitters",
-    oracle=f"""
+def _sql_cms_top(extra: str = "") -> str:
+    """t27/s14 oracle: per-key counts, their sketch cells, the per-key
+    min-of-cells estimate for the exact top-20 keys; ``extra`` columns
+    follow the overcount."""
+    return f"""
     WITH kc AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS cnt
                 FROM events GROUP BY user_id),
     r AS (SELECT user_id, cnt, j,
@@ -2463,9 +2074,49 @@ def _cms_pairs(df: DataFrame) -> DataFrame:
             FROM r JOIN cells USING (j, b) GROUP BY user_id, cnt)
     SELECT user_id, cnt AS exact_cnt,
            CAST(cms_est AS BIGINT) AS cms_est,
-           CAST(cms_est - cnt AS BIGINT) AS overcount
+           CAST(cms_est - cnt AS BIGINT) AS overcount{extra}
     FROM est ORDER BY cnt DESC, user_id LIMIT 20
-    """,
+    """
+
+
+def _cms_top(ev: DataFrame, streamed: DataFrame | None = None) -> DataFrame:
+    """t27's gate: the sketch is built from per-key counts (identical
+    cells to event-level updates, since CMS is linear), each key's
+    estimate is the min over its cells (a broadcast join), reported for
+    the exact top-20 keys. With ``streamed`` cells (``cell_s`` per
+    coordinate, s14) the estimate reads those, and
+    ``stream_matches_batch`` says each of the key's streamed cells
+    equals its batch cell."""
+    r = _cms_pairs(ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt")))
+    cells = r.groupBy("j", "b").agg(F.sum("cnt").cast("bigint").alias("cell"))
+    est, checks = "cell", {}
+    if streamed is not None:
+        cells, est = cells.join(streamed, ["j", "b"], "full"), "cell_s"
+        checks["stream_matches_batch"] = (
+            F.min(F.col("cell_s").eqNullSafe(F.col("cell")).cast("int")) == 1
+        )
+    top = (
+        r.join(F.broadcast(cells), ["j", "b"])
+        .groupBy("user_id", "cnt")
+        .agg(
+            F.min(est).cast("bigint").alias("cms_est"),
+            *[c.alias(name) for name, c in checks.items()],
+        )
+        .orderBy(F.col("cnt").desc(), "user_id")
+        .limit(20)
+    )
+    return top.select(
+        "user_id",
+        F.col("cnt").cast("bigint").alias("exact_cnt"),
+        "cms_est",
+        (F.col("cms_est") - F.col("cnt")).cast("bigint").alias("overcount"),
+        *checks,
+    )
+
+
+@query(
+    "t27_cms_heavy_hitters",
+    oracle=_sql_cms_top(),
     doc="Count-min sketch heavy hitters (Cormode & Muthukrishnan 2005, "
     f"public): {_T27_D} md5 hash rows x {_T27_W} buckets, per-key "
     "estimate = min over its cells, reported for the exact top-20 users "
@@ -2482,52 +2133,13 @@ def _cms_pairs(df: DataFrame) -> DataFrame:
     "column here is the audit, per the t26 discipline.",
 )
 def t27_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_tbl(spark, sf_dir)
-    kc = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .cache()  # feeds the cell build AND the estimate join
-    )
-
-    r = _cms_pairs(kc)
-    cells = r.groupBy("j", "b").agg(F.sum("cnt").cast("bigint").alias("cell"))
-    est = (
-        r.join(F.broadcast(cells), ["j", "b"])
-        .groupBy("user_id", "cnt")
-        .agg(F.min("cell").cast("bigint").alias("cms_est"))
-    )
-    return (
-        est.orderBy(F.col("cnt").desc(), "user_id")
-        .limit(20)
-        .select(
-            "user_id",
-            F.col("cnt").cast("bigint").alias("exact_cnt"),
-            "cms_est",
-            (F.col("cms_est") - F.col("cnt")).cast("bigint").alias("overcount"),
-        )
-    )
+    return _cms_top(events_tbl(spark, sf_dir))
 
 
-# --- streaming CMS heavy hitters (new in r9) ------------------------------------
+# --- streaming CMS heavy hitters --------------------------------------------
 @query(
     "s14_streaming_heavy_hitters",
-    oracle=f"""
-    WITH kc AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS cnt
-                FROM events GROUP BY user_id),
-    r AS (SELECT user_id, cnt, j,
-                 ('0x' || substr(md5('cms' || j || '_' || user_id), 1, 15))
-                   ::BIGINT % {_T27_W} AS b
-          FROM kc, (SELECT unnest([0, 1, 2]) AS j)),
-    cells AS (SELECT j, b, CAST(SUM(cnt) AS BIGINT) AS cell
-              FROM r GROUP BY j, b),
-    est AS (SELECT user_id, cnt, MIN(cell) AS cms_est
-            FROM r JOIN cells USING (j, b) GROUP BY user_id, cnt)
-    SELECT user_id, cnt AS exact_cnt,
-           CAST(cms_est AS BIGINT) AS cms_est,
-           CAST(cms_est - cnt AS BIGINT) AS overcount,
-           TRUE AS stream_matches_batch
-    FROM est ORDER BY cnt DESC, user_id LIMIT 20
-    """,
+    oracle=_sql_cms_top(", TRUE AS stream_matches_batch"),
     doc="t27's count-min sketch built BY the streaming engine — the "
     "setting CMS was designed for (Cormode & Muthukrishnan 2005: a "
     "sketch whose state is O(d*w) regardless of key cardinality, so it "
@@ -2547,64 +2159,19 @@ def t27_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is cell-wise addition.",
 )
 def s14_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from goodreads_pyspark_spark.streaming import (
-        run_to_memory_sink,
-        state_partitions,
-        stream_events_from_dir,
-    )
-
-    stage = tempfile.mkdtemp(prefix="s14_")
-    try:
-        ev = events_tbl(spark, sf_dir)
-        ev.write.mode("overwrite").parquet(stage)
-        stream = stream_events_from_dir(spark, stage)
-        cells_stream = _cms_pairs(stream.select("user_id")).groupBy(
-            "j", "b"
-        ).agg(F.count(F.lit(1)).cast("bigint").alias("cell_s"))
-        # 768 cells of state — 4 shards, not 32 (the s13 sizing rule)
-        with state_partitions(spark, 4):
-            got = run_to_memory_sink(cells_stream, output_mode="complete")
-        kc = (
-            ev.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .cache()  # feeds batch cells AND the estimate join
+    ev = events_tbl(spark, sf_dir)
+    # 768 cells of state — 4 shards, not 32 (the s13 sizing rule)
+    with staged_stream(spark, ev) as st, state_partitions(spark, 4):
+        cells = (
+            _cms_pairs(st.read().select("user_id"))
+            .groupBy("j", "b")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cell_s"))
         )
-        r = _cms_pairs(kc)
-        cells_batch = r.groupBy("j", "b").agg(
-            F.sum("cnt").cast("bigint").alias("cell_b")
-        )
-        cells = cells_batch.join(got, ["j", "b"], "full")
-        est = (
-            r.join(F.broadcast(cells), ["j", "b"])
-            .groupBy("user_id", "cnt")
-            .agg(
-                F.min("cell_s").cast("bigint").alias("cms_est"),
-                F.min(
-                    F.col("cell_s").eqNullSafe(F.col("cell_b")).cast("int")
-                ).alias("all_match"),
-            )
-        )
-        return (
-            est.orderBy(F.col("cnt").desc(), "user_id")
-            .limit(20)
-            .select(
-                "user_id",
-                F.col("cnt").cast("bigint").alias("exact_cnt"),
-                "cms_est",
-                (F.col("cms_est") - F.col("cnt"))
-                .cast("bigint")
-                .alias("overcount"),
-                (F.col("all_match") == 1).alias("stream_matches_batch"),
-            )
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        got = run_to_memory_sink(cells, output_mode="complete")
+    return _cms_top(ev, got)
 
 
-# --- quantile sketch audit (new in r9) -------------------------------------------
+# --- quantile sketch audit --------------------------------------------------
 #: GK sketch accuracy parameter: guaranteed rank error <= n/accuracy.
 _T28_ACC = 200
 
@@ -2643,7 +2210,6 @@ _T28_ACC = 200
 )
 def t28_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_tbl(spark, sf_dir).select("event_type", "value")
-    ev = ev.cache()  # three consumers: disc ranks, sketch, rank audit
     w = Window.partitionBy("event_type").orderBy("value")
     wn = Window.partitionBy("event_type")
     v = ev.withColumn("rn", F.row_number().over(w)).withColumn(

@@ -1,9 +1,11 @@
 from goodreads_pyspark_spark.streaming.windows import (  # noqa: F401
+    drain,
     enrich_with_dim,
     hourly_by_type,
     sessionized_by_user,
     sliding_by_type,
     run_to_memory_sink,
+    staged_stream,
     state_partitions,
     stream_events_from_dir,
 )

@@ -12,11 +12,17 @@ an unbounded source.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -44,6 +50,69 @@ def stream_events_from_dir(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(EVENT_SCHEMA).parquet(path)
 
 
+@dataclass(frozen=True)
+class Stage:
+    """A staged file source: ``dir`` holds the staged files (a caller may
+    add its own before reading), ``read()`` opens a new stream over them
+    and ``path(name)`` names a scratch location (sink output, checkpoint)
+    under the same temp dir."""
+
+    root: str
+    dir: str
+    read: Callable[[], DataFrame]
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.root, name)
+
+
+@contextmanager
+def staged_stream(
+    spark: SparkSession,
+    *frames: DataFrame,
+    schema: StructType = EVENT_SCHEMA,
+    files_per_trigger: int | None = None,
+):
+    """Stage ``frames`` as one parquet file source and yield its
+    :class:`Stage`.
+
+    File-source streams need a dedicated directory of uniform-schema
+    files. Each frame is appended in order, so its files form their own
+    write (two appends of one frame put duplicates in separate files);
+    ``files_per_trigger`` caps the files per micro-batch. The whole temp
+    dir — staged files and whatever the caller put under
+    ``Stage.path`` — is removed on every exit path.
+    """
+    root = tempfile.mkdtemp(prefix="stream_stage_")
+    try:
+        src = os.path.join(root, "src")
+        for frame in frames:
+            frame.write.mode("append").parquet(src)
+
+        def read() -> DataFrame:
+            reader = spark.readStream.schema(schema)
+            if files_per_trigger is not None:
+                reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+            return reader.parquet(src)
+
+        yield Stage(root, src, read)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def drain(writer: DataStreamWriter) -> None:
+    """Drive a stream to completion against the currently available
+    files: start, ``processAllAvailable``, stop (on every exit path).
+    ``writer`` is the configured sink — the memory sink of
+    :func:`run_to_memory_sink`, or ``foreachBatch`` with a
+    ``checkpointLocation``, the production shape (it also reaches
+    merge/upsert sinks Structured Streaming lacks natively)."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def _value_sum(exact_scale: int | None):
     """Sum of ``value`` for a windowed agg; ``exact_scale`` switches to a
     decimal-exact, order-independent sum (the ``dsum`` convention from
@@ -60,20 +129,12 @@ def _value_sum(exact_scale: int | None):
     )
 
 
-def hourly_by_type(
-    events: DataFrame,
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-    exact_scale: int | None = None,
+def _by_type(
+    events: DataFrame, window: Column, watermark: str, exact_scale: int | None
 ) -> DataFrame:
-    """Windowed counts/sums per event type with late-data watermark.
-
-    Works on a batch DataFrame too (watermark is a no-op there) — the
-    batch/stream duality the engine promises.
-    """
     src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(window.alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             _value_sum(exact_scale),
@@ -85,6 +146,20 @@ def hourly_by_type(
             "total_value",
         )
     )
+
+
+def hourly_by_type(
+    events: DataFrame,
+    watermark: str = "2 hours",
+    window: str = "1 hour",
+    exact_scale: int | None = None,
+) -> DataFrame:
+    """Windowed counts/sums per event type with late-data watermark.
+
+    Works on a batch DataFrame too (watermark is a no-op there) — the
+    batch/stream duality the engine promises.
+    """
+    return _by_type(events, F.window("ts", window), watermark, exact_scale)
 
 
 @contextmanager
@@ -106,27 +181,18 @@ def state_partitions(spark: SparkSession, n: int):
 
 
 def run_to_memory_sink(agg: DataFrame, output_mode: str = "append") -> DataFrame:
-    """Drive a streaming aggregation to completion against the currently
-    available files, stop, and return the sink's rows as a checkpointed
-    DataFrame — the synchronous smoke-test harness
-    (``processAllAvailable``), not a production sink. The memory sink's
-    view is dropped before returning, so no view outlives the call.
-    Production sinks: ``foreachBatch`` into partitioned parquet/Delta
-    with checkpointing.
+    """Drive a streaming aggregation to completion (:func:`drain`) into
+    the memory sink and return the sink's rows as a checkpointed
+    DataFrame — the synchronous smoke-test harness, not a production
+    sink. The memory sink's view is dropped before returning, so no view
+    outlives the call.
     """
     spark = agg.sparkSession
     name = f"memory_sink_{uuid.uuid4().hex}"
-    q = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
     try:
-        q.processAllAvailable()
+        drain(agg.writeStream.outputMode(output_mode).format("memory").queryName(name))
         return spark.table(name).localCheckpoint()
     finally:
-        q.stop()
         spark.catalog.dropTempView(name)
 
 
@@ -144,20 +210,7 @@ def sliding_by_type(
     multiplies live window count, not retained-event count. Batch/stream
     dual like :func:`hourly_by_type`.
     """
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            _value_sum(exact_scale),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return _by_type(events, F.window("ts", window, slide), watermark, exact_scale)
 
 
 def enrich_with_dim(

@@ -755,6 +755,13 @@ _NEARDUP_CACHE_USERS = (
     "d28_source_overlap",
     "d34_lsh_band_tuning",
 )
+#: Event-family queries that cached an intermediate with no handle.
+_EVENT_CACHE_USERS = (
+    "s14_streaming_heavy_hitters",
+    "t18_ewma_hourly_volume",
+    "t27_cms_heavy_hitters",
+    "t28_quantile_sketch_audit",
+)
 
 
 @pytest.mark.parametrize(
@@ -762,13 +769,16 @@ _NEARDUP_CACHE_USERS = (
     _CONTAINMENT_FAMILY
     + _EMBEDDING_CACHE_USERS
     + _GRAPH_CACHE_USERS
-    + _NEARDUP_CACHE_USERS,
+    + _NEARDUP_CACHE_USERS
+    + _EVENT_CACHE_USERS
+    + ("h05_prf_query_expansion",),
 )
 def test_containment_query_releases_its_caches(spark, duck, name):
     """With the containment family's shared kernels built (then
-    clearCache), a containment-family or caching embedding- or
-    graph-family query leaves no entry in the SQL cache manager, and its
-    answer, read after the release, still matches the oracle."""
+    clearCache), a containment-family query or one of the other
+    families' queries that cached leaves no entry in the SQL cache
+    manager, and its answer, read after the release, still matches the
+    oracle."""
     from goodreads_pyspark_spark.queries import REGISTRY, documents
     from tests.test_oracle_parity import SF_SMOKE, _norm
 

@@ -522,3 +522,29 @@ def test_hits_scaled_rescale_survives_large_mass(spark):
     }
     # all mass lands on the single sink: auth = (n*scale * scale) div (n*scale)
     assert out[100] == scale
+
+
+def test_g10_leaves_no_checkpoint_dir_behind(spark):
+    """g10 checkpoints reliably into a temp dir and puts the context's
+    checkpoint dir back as it was: a later reliable checkpoint in the
+    session (an RDD checkpoint, as ALS takes on its first iteration once
+    a dir is set) must not recreate a ``_g10_ckpt_*`` dir under the
+    working directory."""
+    import glob
+    import os
+
+    from goodreads_pyspark_spark.queries import REGISTRY
+    from tests.test_oracle_parity import SF_SMOKE
+
+    def ckpt_dirs():
+        return set(glob.glob(os.path.join(os.getcwd(), "spark-warehouse", "_g10_ckpt_*")))
+
+    sc = spark.sparkContext
+    before, dirs_before = sc.getCheckpointDir(), ckpt_dirs()
+    REGISTRY["g10_personalized_pagerank"].spark_fn(spark, SF_SMOKE).collect()
+    if sc.getCheckpointDir() is not None:
+        rdd = sc.parallelize(range(4))
+        rdd.checkpoint()
+        rdd.count()
+    assert ckpt_dirs() == dirs_before
+    assert (sc.getCheckpointDir() is None) == (before is None)

@@ -419,23 +419,37 @@ def test_session_timeout_close_paths(spark, tmp_path_factory):
         "s05_stream_static_enrich",
         "s06_stream_stream_join",
         "s07_streaming_session_window",
+        "s08_foreachbatch_sink",
+        "s09_streaming_cdc_upsert",
         "s10_stream_stream_left_join",
         "s11_session_timeout_close",
+        "s12_streaming_ingest_admission",
         "s13_streaming_approx_users",
         "s14_streaming_heavy_hitters",
+        "s15_streaming_containment_admission",
     ],
 )
 def test_memory_sink_query_leaves_no_view(spark, duck, name):
-    """A memory-sink query's sink view does not outlive the call: the
-    catalog's table list is unchanged afterwards, and the answer still
-    matches the oracle."""
+    """A query that drives a stream (memory sink or foreachBatch) tears
+    it all down: the catalog's table list is unchanged afterwards, no
+    streaming query is still active, no staging dir is left in the temp
+    dir, and the answer still matches the oracle."""
+    import os
+    import tempfile
+
     from goodreads_pyspark_spark.queries import REGISTRY
     from tests.test_oracle_parity import SF_SMOKE, _norm
 
+    def tmp_dirs():
+        tmp = tempfile.gettempdir()
+        return {d for d in os.listdir(tmp) if os.path.isdir(os.path.join(tmp, d))}
+
     q = REGISTRY[name]
-    before = sorted(t.name for t in spark.catalog.listTables())
+    before, dirs_before = sorted(t.name for t in spark.catalog.listTables()), tmp_dirs()
     sdf = q.spark_fn(spark, SF_SMOKE)
     assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert spark.streams.active == []
+    assert tmp_dirs() - dirs_before == set()
     res = duck.execute(q.oracle)
     d_cols = [d[0] for d in res.description]
     assert _norm(sdf.columns, sdf.collect()) == _norm(d_cols, res.fetchall())

@@ -6,7 +6,10 @@ cell values. It also reports each query that leaves a cached plan behind
 (the SQL cache is cleared before every query and checked after it): a
 leaking query runs once more, and the leak is "per call" if that run
 leaks again, or a one-time "memo build" (a session memo's first build)
-if it does not. Leaks are reported, not failed. Usage:
+if it does not. A query that leaves a streaming query active (stopped
+here, so later queries start clean) or a new directory in the temp dir
+(a staging dir, sink output or checkpoint) is tagged too. Leaks are
+reported, not failed. Usage:
 
     python tools/verify_local.py [sf_dir] [name-prefix ...]
 
@@ -20,6 +23,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -84,6 +88,8 @@ def main() -> int:
         spark = get_spark("verify_local")
     failures, passed = [], 0
     leaks: dict[str, str] = {}
+    stream_leaks: dict[str, list[str]] = {}
+    dir_leaks: dict[str, list[str]] = {}
     probe_s = 0.0  # leak re-runs, kept out of the reported query time
     t_start = time.time()
     for name, q in sorted(REGISTRY.items()):
@@ -91,6 +97,7 @@ def main() -> int:
             continue
         t0 = time.time()
         spark.catalog.clearCache()
+        dirs_before = _tmp_dirs()
         try:
             sdf = q.spark_fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -100,6 +107,16 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             continue
         leak, probe = "", 0.0
+        active = spark.streams.active
+        if active:
+            stream_leaks[name] = [a.name or a.id for a in active]
+            for a in active:
+                a.stop()
+            leak += f" [stream leak: {', '.join(stream_leaks[name])}]"
+        new_dirs = sorted(_tmp_dirs() - dirs_before)
+        if new_dirs:
+            dir_leaks[name] = new_dirs
+            leak += f" [staging dir leak: {', '.join(new_dirs)}]"
         if not _cache_empty(spark):
             t1 = time.time()
             spark.catalog.clearCache()
@@ -107,7 +124,7 @@ def main() -> int:
             leaks[name] = "memo build" if _cache_empty(spark) else "per call"
             probe = time.time() - t1
             probe_s += probe
-            leak = f" [cache leak: {leaks[name]}]"
+            leak = f" [cache leak: {leaks[name]}]" + leak
         if q.oracle is None:
             print(f"ok   {name}: rows-only ({len(s_rows)} rows) {time.time()-t0-probe:.1f}s{leak}")
             passed += 1
@@ -147,9 +164,21 @@ def main() -> int:
         f"\n{passed} passed, {len(failures)} failed "
         f"in {time.time() - t_start - probe_s:.1f}s; "
         f"{len(leaks)} cache leaks ({per_call} per call, "
-        f"{len(leaks) - per_call} memo builds)"
+        f"{len(leaks) - per_call} memo builds), "
+        f"{len(stream_leaks)} stream leaks, {len(dir_leaks)} staging dir leaks"
     )
     return 1 if failures else 0
+
+
+def _tmp_dirs() -> set[str]:
+    # artifacts-*: the session's own artifact root, made on first use and
+    # removed with the session
+    tmp = tempfile.gettempdir()
+    return {
+        d
+        for d in os.listdir(tmp)
+        if os.path.isdir(os.path.join(tmp, d)) and not d.startswith("artifacts-")
+    }
 
 
 def _cache_empty(spark) -> bool:
