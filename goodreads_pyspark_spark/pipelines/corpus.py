@@ -1,5 +1,6 @@
 """Training-corpus cleaning pipeline — the composed, end-to-end face of
-the dedup/quality operators (BASELINE.json north star).
+the dedup/quality operators, as the ``c01`` query and the benchmark's
+ingest pass run it.
 
 Stages (each a pure DataFrame transform, composable and individually
 testable):
@@ -19,11 +20,14 @@ near-dup chains may retain middle members — acceptable for corpus
 cleaning, and a Pregel connected-components pass can replace it when
 exact clustering matters.
 
-Cost discipline: the tokenize→shingle pass over the corpus runs ONCE —
-one cached ``(id, shingle)`` table feeds both the MinHash banding and the
-Jaccard verifier — and the pipeline adds no driver actions of its own
-(per-stage counts are opt-in via ``collect_stats``, off in the registered
-query path).
+Cost discipline: one ``(id, shingle)`` plan feeds both the MinHash
+banding and the Jaccard verifier, and the pipeline adds no driver actions
+of its own (per-stage counts are opt-in via ``collect_stats``, off in the
+registered query path). It caches nothing: the survivors, the shingle
+table and the candidate pairs are recomputed where the one lazy plan
+reads them twice, which a 10-pair A/B found as fast as caching them
+(CHANGES.md), and nothing is left in the SQL cache after the caller's
+action.
 """
 
 from __future__ import annotations
@@ -82,10 +86,10 @@ def drop_near_duplicates(
     the verified drop list comes back as an anti-join (unhinted — its
     size tracks the corpus's duplicate rate, so AQE picks broadcast vs
     shuffle at runtime).
-    One cached shingle table feeds both phases — the corpus is tokenized
-    exactly once. A caller that already holds a corpus-wide ``(id, sh)``
-    table (e.g. the c03 composition, whose decontamination stage needs
-    the same rows) passes it via ``shingles`` and the pass is restricted
+    One shingle table feeds both phases. A caller that already holds a
+    corpus-wide ``(id, sh)`` table (e.g. the c03 composition, whose
+    decontamination stage needs the same rows) passes it via
+    ``shingles`` and the pass is restricted
     by a semi-join instead of re-tokenizing — at 100 TB the tokenizer
     scan is the dominant linear cost, so it must run once per PIPELINE,
     not once per stage. A passed ``shingles`` table replaces self-
@@ -98,17 +102,17 @@ def drop_near_duplicates(
             f"precomputed shingles must have (id, sh) columns, got {shingles.columns}"
         )
     if shingles is None:
-        sh = shingle_rows(docs, id_col, text_col, shingle_n, out_id="id").cache()
+        sh = shingle_rows(docs, id_col, text_col, shingle_n, out_id="id")
     else:
         ids = docs.select(F.col(id_col).alias("id"))
-        sh = shingles.join(ids, "id", "left_semi").cache()
+        sh = shingles.join(ids, "id", "left_semi")
     candidates = lsh_candidate_pairs_from_shingles(
         sh.withColumnRenamed("id", id_col),
         id_col,
         num_hashes=num_hashes,
         bands=bands,
         max_bucket=max_bucket,
-    ).cache()
+    )
     # Verify candidates exactly: restrict the Jaccard join to candidate docs
     cand_ids = (
         candidates.select(F.col("doc_a").alias("id"))
@@ -120,9 +124,9 @@ def drop_near_duplicates(
     # carries a broadcast hint: AQE broadcasts when the candidate set
     # happens to be small and shuffles when it isn't.
     sh_cand = sh.join(cand_ids, "id", "left_semi")
-    verified = jaccard_pairs_from_shingles(
-        sh_cand, threshold=jaccard_threshold, already_cached=True
-    ).join(candidates, ["doc_a", "doc_b"], "left_semi")
+    verified = jaccard_pairs_from_shingles(sh_cand, threshold=jaccard_threshold).join(
+        candidates, ["doc_a", "doc_b"], "left_semi"
+    )
     to_drop = verified.select(F.col("doc_b").alias(id_col)).distinct()
     return anti_join(docs, to_drop, id_col)
 
@@ -143,9 +147,7 @@ def clean_corpus(
     single lazy plan: no action runs until the caller consumes the result.
     """
     gated = quality_gate(docs, min_tokens=min_tokens, text_col=text_col)
-    # exact-dedup survivors feed both the shingle table and the final
-    # anti-join — cache once rather than recompute the gate+dedup twice.
-    exact = exact_dedup(gated, id_col=id_col, text_col=text_col).cache()
+    exact = exact_dedup(gated, id_col=id_col, text_col=text_col)
     cleaned = drop_near_duplicates(
         exact,
         id_col=id_col,

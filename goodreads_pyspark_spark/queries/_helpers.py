@@ -106,6 +106,25 @@ def _released():
             c.unpersist()
 
 
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set the session confs ``confs`` for the block, then put each back
+    as it was on every exit path: a key that was unset is unset again.
+    No refcount: nested blocks restore in reverse order, and a frame that
+    must run under the confs is materialised inside the block."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _materialize(name: str, out: DataFrame) -> DataFrame:
     """Checkpoint query ``name``'s result so its caches can be released;
     the lazy frame stays in ``PRE_MATERIALIZATION`` for plan audits."""

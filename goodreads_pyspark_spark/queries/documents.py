@@ -1,5 +1,6 @@
-"""Text-analysis & dedup queries over ``documents`` — the LLM-data-pipeline
-operator surface (BASELINE.json north star), each with a DuckDB oracle.
+"""Text-analysis & dedup queries over ``documents`` — the corpus-cleaning,
+data-mix and dedup operator surface of an LLM data pipeline built around
+the Goodreads notebook, each with a DuckDB oracle.
 
 Tokenization must be mirrored exactly between engines; the canonical
 definition lives in ``functions/text.py`` (Spark) and ``_TOKS`` below
@@ -9,12 +10,21 @@ empties.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from goodreads_pyspark_spark.dedup import dup_group_stats, simhash_signatures
+from goodreads_pyspark_spark.dedup import (
+    dup_group_stats,
+    simhash_neardup_pairs,
+    simhash_signatures,
+)
+from goodreads_pyspark_spark.dedup.decontaminate import contamination_stats
 from goodreads_pyspark_spark.dedup.ensemble import (
     _pin,
     build_containment_standing,
@@ -24,22 +34,57 @@ from goodreads_pyspark_spark.dedup.ensemble import (
     incremental_containment_matches,
     lsh_ensemble_candidate_pairs,
 )
+from goodreads_pyspark_spark.dedup.exact import exact_dedup
 from goodreads_pyspark_spark.dedup.minhash import (
     _banded_keys,
     band_index,
+    incremental_lsh_matches,
     lsh_candidate_pairs_from_signatures,
     minhash_signatures_from_shingles,
 )
-from goodreads_pyspark_spark.dedup.ngram import containment_pairs_from_shingles
+from goodreads_pyspark_spark.dedup.ngram import (
+    containment_pairs_from_shingles,
+    jaccard_pairs,
+)
 from goodreads_pyspark_spark.dedup.shingles import shingle_hash, shingle_rows
+from goodreads_pyspark_spark.dedup.substring import duplicated_span_removal
+from goodreads_pyspark_spark.functions.bm25 import bm25_presence_rank
+from goodreads_pyspark_spark.functions.bpe import bpe_fit, bpe_segment_words
+from goodreads_pyspark_spark.functions.logistic import (
+    DSUM_SQL,
+    SIGMOID_SQL,
+    UPDATE_SQL,
+    feature_matrix,
+    logistic_fit,
+)
+from goodreads_pyspark_spark.functions.pii import (
+    PII_CLASSES,
+    pii_count,
+    redact_pii,
+    sql_redact,
+)
+from goodreads_pyspark_spark.functions.quality_model import quality_scores
 from goodreads_pyspark_spark.functions.text import (
     EN_STOPWORDS,
     doc_fingerprint,
+    norm_text,
     quality_punct_count,
     stopword_count,
     tokens,
+    word_shingles,
 )
+from goodreads_pyspark_spark.functions.vectors import explode_vector
+from goodreads_pyspark_spark.graph.frames import graph_of
+from goodreads_pyspark_spark.graph.pregel import connected_components_alternating
+from goodreads_pyspark_spark.operators import bounded_rank
 from goodreads_pyspark_spark.operators.concurrency import run_concurrent
+from goodreads_pyspark_spark.operators.partitioning import fan_out
+from goodreads_pyspark_spark.operators.relational import top_k_per_group
+from goodreads_pyspark_spark.pipelines.corpus import drop_near_duplicates, quality_gate
+from goodreads_pyspark_spark.pipelines.sampling import (
+    portable_bucket,
+    stratified_sample,
+)
 from goodreads_pyspark_spark.queries import query
 from goodreads_pyspark_spark.queries._helpers import (
     _materialize,
@@ -48,6 +93,7 @@ from goodreads_pyspark_spark.queries._helpers import (
     sql_cc_labels,
     tbl,
 )
+from goodreads_pyspark_spark.streaming import drain, staged_stream, state_partitions
 
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
@@ -236,12 +282,350 @@ def _sql_contamination(out: str, sh: str) -> str:
                 FROM {out}_tr GROUP BY doc_id) z USING (doc_id))"""
 
 
+def _sql_bucket(key: str, n: int | str) -> str:
+    """DuckDB mirror of ``portable_bucket``: the 32-bit md5 prefix of the
+    string ``key`` (salt included), mod ``n``."""
+    return f"('0x' || substr(md5({key}), 1, 8))::BIGINT % {n}"
+
+
 def _sql_shard(doc_id: str, n_shards: int) -> str:
     """``portable_bucket(doc_id, 'shard-v1', n_shards)`` (BIGINT)."""
-    return (
-        f"CAST(('0x' || substr(md5(CAST({doc_id} AS VARCHAR) || 'shard-v1'),"
-        f" 1, 8)) AS BIGINT) % {n_shards}"
+    return _sql_bucket(f"CAST({doc_id} AS VARCHAR) || 'shard-v1'", n_shards)
+
+
+def _sql_tk(cols: str = "doc_id", out: str = "tk", where: str = "TRUE") -> str:
+    """``out``: ``cols`` and the token list ``t`` of each document
+    matching ``where``."""
+    return f"{out} AS (SELECT {cols}, {_TOKS} AS t FROM documents WHERE {where})"
+
+
+#: A document's punctuation-mark count (``quality_punct_count``).
+_SQL_PUNCT = "len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))"
+
+#: d24's four named quality rules, in d43's stage order, over ``tk`` rows
+#: from ``_sql_rule_feats``.
+_SQL_RULES = (
+    ("min_tokens", "len(t) < 20"),
+    ("lexical_diversity", "len(list_distinct(t)) * 10 < 3 * len(t)"),
+    ("punct_ratio", "n_punct * 5 > n_chars"),
+    ("digit_noise", "n_digit_runs * 20 > len(t)"),
+)
+
+
+def _sql_rule_feats(cols: str) -> str:
+    """``tk``: ``cols``, tokens ``t`` and the n_chars, n_punct and
+    n_digit_runs inputs of ``_SQL_RULES`` for every document."""
+    return _sql_tk(
+        f"{cols}, length(text) AS n_chars, {_SQL_PUNCT} AS n_punct, "
+        "len(regexp_extract_all(text, '[0-9]{3,}')) AS n_digit_runs"
     )
+
+
+#: d59/d60's 60-bit content hash of a document.
+_SQL_H60_TEXT = _sql_h60("lower(trim(text))")
+
+#: ``tk`` and ``ex`` (doc_id, term): every token occurrence.
+_SQL_TERMS = f"""{_sql_tk()},
+    ex AS (SELECT doc_id, unnest(t) AS term FROM tk)"""
+
+
+def _sql_vocab(k: int) -> str:
+    """``vocab``: the top-``k`` terms of ``ex`` by (count desc, term),
+    with their 1-based rank ``rnk``."""
+    return f"""vocab AS (SELECT term, rnk FROM (
+        SELECT term, ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, term) AS rnk
+        FROM ex GROUP BY term) WHERE rnk <= {k})"""
+
+
+def _sql_qfeats(where: str = "TRUE") -> str:
+    """``qf``: (doc_id, f) — every unigram and ``a_b`` bigram feature of
+    the documents matching ``where`` (``quality_model.ngram_features``)."""
+    return f"""{_sql_tk(out="qtk", where=where)},
+    qf AS (SELECT doc_id, unnest(list_concat(t,
+             [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
+           FROM qtk)"""
+
+
+#: d38's hashed feature bucket of a feature ``f``.
+_SQL_QBUCKET = _sql_bucket("'qv1_' || f", 4096)
+
+
+def _sql_quality(cols: str = "d.doc_id", where: str = "TRUE") -> str:
+    """``qs``: ``cols`` of the documents ``d`` matching ``where`` with
+    d38's n_feats, sum_w, logit and keep (``quality_scores``)."""
+    w = _sql_bucket(f"'qw1_' || CAST({_SQL_QBUCKET} AS VARCHAR)", 2001)
+    return f"""{_sql_qfeats(where)},
+    qagg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
+                    CAST(SUM({w} - 1000) AS BIGINT) AS sum_w
+             FROM qf GROUP BY doc_id),
+    qs AS (SELECT {cols}, COALESCE(n_feats, 0) AS n_feats,
+                  COALESCE(sum_w, 0) AS sum_w,
+                  CASE WHEN COALESCE(n_feats, 0) = 0 THEN 0.0
+                       ELSE sum_w / (n_feats * 1000.0) END AS logit,
+                  CAST(CASE WHEN COALESCE(sum_w, 0) > 50 * COALESCE(n_feats, 0)
+                       THEN 1 ELSE 0 END AS INTEGER) AS keep
+           FROM documents d LEFT JOIN qagg USING (doc_id) WHERE {where})"""
+
+
+def _sql_tiles(src: str) -> str:
+    """``tiled``: ``src``'s rows with ``tile``, the per-language
+    NTILE(3) of the logit (logit desc, doc_id) — d47's tercile."""
+    return f"""tiled AS (SELECT *, NTILE(3) OVER (PARTITION BY lang
+                       ORDER BY logit DESC, doc_id) AS tile FROM {src})"""
+
+
+#: The head/middle/tail name of a ``tile``.
+_SQL_TILE_NAME = "CASE tile WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END"
+
+
+def _sql_base(cols: str) -> str:
+    """``base``: per document ``cols``, its token count ``n_tok`` and its
+    content hash ``h`` (d02's ``md5(lower(trim(text)))``)."""
+    return f"""base AS (SELECT {cols}, len({_TOKS}) AS n_tok,
+                  md5(lower(trim(text))) AS h FROM documents)"""
+
+
+def _sql_keep(src: str, extra: str = "") -> str:
+    """``keep``: per content hash ``h`` of ``src`` its group size
+    ``n_docs`` and survivor ``keep_id`` (lowest doc_id), plus the
+    aggregates in ``extra`` — d02's exact-dup groups."""
+    return f"""keep AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS n_docs,
+                    CAST(MIN(doc_id) AS BIGINT) AS keep_id{extra}
+             FROM {src} GROUP BY h)"""
+
+
+def _sql_volumes(src: str) -> str:
+    """``ps``: per source of ``src`` (source, n_tok) rows its n_docs and
+    n_tokens."""
+    return f"""ps AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+                  CAST(SUM(n_tok) AS BIGINT) AS n_tokens
+           FROM {src} GROUP BY source)"""
+
+
+def _sql_drift(src: str) -> str:
+    """``drift``: (source, n_docs, tv_distance) — d33's total-variation
+    distance between each source's token-length histogram and the
+    corpus-wide one, over ``src``'s (source, n_tok) rows."""
+    return f"""lb AS (SELECT source, LEAST(n_tok // {_D33_BIN}, {_D33_MAX_BIN}) AS bin
+           FROM {src}),
+    lsc AS (SELECT source, bin, COUNT(*) AS c FROM lb GROUP BY 1, 2),
+    lcc AS (SELECT bin, COUNT(*) AS cb FROM lb GROUP BY 1),
+    lns AS (SELECT source, COUNT(*) AS n_docs FROM lb GROUP BY 1),
+    ltot AS (SELECT COUNT(*) AS n FROM lb),
+    drift AS (
+      SELECT lns.source, lns.n_docs,
+             CAST(SUM(ABS(COALESCE(lsc.c, 0) * ltot.n - lcc.cb * lns.n_docs))
+                  AS DOUBLE) / (2.0 * lns.n_docs * (SELECT n FROM ltot))
+               AS tv_distance
+      FROM lns CROSS JOIN ltot
+      JOIN lcc ON TRUE
+      LEFT JOIN lsc ON lsc.source = lns.source AND lsc.bin = lcc.bin
+      GROUP BY lns.source, lns.n_docs, ltot.n)"""
+
+
+def _sql_tempered(src: str) -> str:
+    """``wtd``: ``src``'s rows with d36's sqrt-tempered weight ``w``;
+    ``swt``: their sum ``sw``."""
+    return f"""wtd AS (SELECT *, CAST(FLOOR(SQRT(n_tokens)) AS BIGINT) AS w
+           FROM {src}),
+    swt AS (SELECT SUM(w) AS sw FROM wtd)"""
+
+
+def _sql_unimax(src: str, n_rounds: int) -> str:
+    """``b`` (the budget) and ``s0`` .. ``s{n_rounds}``: d53's UniMax
+    waterfilling over ``src``'s (source, n_tokens) rows; ``a`` is each
+    source's allocation after the round, ``cap`` its epoch cap."""
+    steps = [
+        f"""b AS (SELECT (SUM(n_tokens) * {_D53_B_NUM}) // {_D53_B_DEN} AS budget
+          FROM {src}),
+    s0 AS (SELECT source, n_tokens, n_tokens AS cap,
+                  CAST(0 AS BIGINT) AS a FROM {src})"""
+    ]
+    for r in range(1, n_rounds + 1):
+        p = r - 1
+        steps.append(f"""m{r} AS (SELECT CAST(COUNT(*) FILTER (a < cap) AS BIGINT) AS n_act,
+                  b.budget - CAST(SUM(a) AS BIGINT) AS rem
+           FROM s{p} CROSS JOIN b GROUP BY b.budget),
+    s{r} AS MATERIALIZED (
+      SELECT source, n_tokens, cap,
+             a + CASE WHEN a < cap AND n_act > 0
+                      THEN LEAST(rem // n_act, cap - a) ELSE 0 END AS a
+      FROM s{p} CROSS JOIN m{r})""")
+    return ",\n    ".join(steps)
+
+
+# --- shared Spark scaffolds ---------------------------------------------------
+# The Spark side of the corpus-quality and data-mix family: each helper is
+# the engine twin of the builder of the same name above.
+
+#: Exact accumulator for sums of doubles (DECIMAL(38,12) in the oracles).
+_ACC = "decimal(38,12)"
+
+
+def _terms(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(doc_id, ``cols``, term): every token occurrence (``_SQL_TERMS``)."""
+    docs = fan_out(tbl(spark, sf_dir, "documents"))
+    return docs.select("doc_id", *cols, F.explode(tokens("text")).alias("term"))
+
+
+def _top_terms(ex: DataFrame, k: int) -> DataFrame:
+    """(term, tf): the top-``k`` terms of ``ex`` by (tf desc, term). An
+    orderBy+limit, not a global row_number window: Catalyst plans it as
+    TakeOrderedAndProject (per-partition top-k + merge), while the window
+    form funnels the whole vocabulary through one partition."""
+    return (
+        ex.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .orderBy(F.col("tf").desc(), F.col("term"))
+        .limit(k)
+    )
+
+
+def _h60(col: Column) -> Column:
+    """The 60-bit md5-prefix hash of ``col`` (``_sql_h60``)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+
+
+def _text_h60() -> Column:
+    """``_SQL_H60_TEXT``."""
+    return _h60(norm_text("text"))
+
+
+def _rule_feats(docs: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` plus the n_chars, n_tokens, n_uniq, n_punct and
+    n_digit_runs inputs of ``_rules`` (``_sql_rule_feats``)."""
+    toks = tokens("text")
+    return docs.select(
+        *cols,
+        F.length("text").alias("n_chars"),
+        F.size(toks).alias("n_tokens"),
+        F.size(F.array_distinct(toks)).alias("n_uniq"),
+        quality_punct_count("text").alias("n_punct"),
+        F.regexp_count("text", F.lit("[0-9]{3,}")).alias("n_digit_runs"),
+    )
+
+
+def _rules() -> list[tuple[str, Column]]:
+    """``_SQL_RULES`` over ``_rule_feats`` columns: (name, fails)."""
+    n = F.col("n_tokens")
+    return [
+        ("min_tokens", n < 20),
+        ("lexical_diversity", F.col("n_uniq") * 10 < 3 * n),
+        ("punct_ratio", F.col("n_punct") * 5 > F.col("n_chars")),
+        ("digit_noise", F.col("n_digit_runs") * 20 > n),
+    ]
+
+
+def _scored(docs: DataFrame, *cols: str) -> DataFrame:
+    """``quality_scores`` of ``docs`` with their ``cols`` (``qs``)."""
+    return quality_scores(docs).join(docs.select("doc_id", *cols), "doc_id")
+
+
+def _tiles(scored: DataFrame) -> DataFrame:
+    """``scored`` with ``tile``: the per-language NTILE(3) of the logit
+    (``_sql_tiles``)."""
+    w = Window.partitionBy("lang").orderBy(F.col("logit").desc(), "doc_id")
+    return scored.withColumn("tile", F.ntile(3).over(w))
+
+
+def _tile_name(tile: Column) -> Column:
+    """``_SQL_TILE_NAME``."""
+    return F.when(tile == 1, "head").when(tile == 2, "middle").otherwise("tail")
+
+
+def _base(docs: DataFrame, *cols: str) -> DataFrame:
+    """(doc_id, ``cols``, n_tok, h) per document (``_sql_base``)."""
+    return docs.select(
+        "doc_id",
+        *cols,
+        F.size(tokens("text")).alias("n_tok"),
+        F.md5(norm_text("text")).alias("h"),
+    )
+
+
+def _keep(base: DataFrame, *aggs: Column) -> DataFrame:
+    """(h, keep_id, ``aggs``): the survivor of each content-hash group of
+    ``base`` (``_sql_keep``)."""
+    return base.groupBy("h").agg(F.min("doc_id").alias("keep_id"), *aggs)
+
+
+def _volumes(rows: DataFrame) -> DataFrame:
+    """(source, n_docs, n_tokens) of (source, n_tok) ``rows``
+    (``_sql_volumes``)."""
+    return rows.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("n_tok").cast("bigint").alias("n_tokens"),
+    )
+
+
+def _length_drift(rows: DataFrame) -> DataFrame:
+    """(source, n_docs, tv_distance) of (source, n_tok) ``rows``
+    (``_sql_drift``). TV is computed from cross-multiplied integer counts
+    with one final double division."""
+    b = rows.select(
+        "source",
+        F.least(F.floor(F.col("n_tok") / _D33_BIN), F.lit(_D33_MAX_BIN)).alias("bin"),
+    )
+    sc = b.groupBy("source", "bin").agg(F.count(F.lit(1)).alias("c"))
+    cc = b.groupBy("bin").agg(F.count(F.lit(1)).alias("cb"))
+    ns = b.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
+    tot = b.agg(F.count(F.lit(1)).alias("n"))
+    diff = F.coalesce("c", F.lit(0)) * F.col("n") - F.col("cb") * F.col("n_docs")
+    return (
+        ns.crossJoin(F.broadcast(tot))
+        .crossJoin(F.broadcast(cc))
+        .join(sc, ["source", "bin"], "left")
+        .groupBy("source", "n_docs", "n")
+        .agg(F.sum(F.abs(diff)).alias("num"))
+        .select(
+            "source",
+            "n_docs",
+            (F.col("num").cast("double") / (2.0 * F.col("n_docs") * F.col("n"))).alias(
+                "tv_distance"
+            ),
+        )
+    )
+
+
+def _tempered(ps: DataFrame) -> DataFrame:
+    """``ps`` (source, n_tokens, ...) with d36's sqrt-tempered weight
+    ``w`` and the weight sum ``sw`` (``_sql_tempered``)."""
+    wtd = ps.withColumn("w", F.floor(F.sqrt(F.col("n_tokens"))).cast("bigint"))
+    return wtd.crossJoin(F.broadcast(wtd.agg(F.sum("w").alias("sw"))))
+
+
+def _unimax(ps: DataFrame) -> DataFrame:
+    """(source, n_tokens, cap, a): d53's UniMax waterfilling over ``ps``'s
+    (source, n_tokens) rows after ``_D53_ROUNDS`` rounds (``_sql_unimax``).
+    The rounds are lazy lineage over a per-source frame; the one
+    checkpoint pins the token counts."""
+    budget = ps.agg(
+        F.expr(f"(SUM(n_tokens) * {_D53_B_NUM}) div {_D53_B_DEN}")
+        .cast("bigint")
+        .alias("budget")
+    )
+    s = ps.select(
+        "source",
+        "n_tokens",
+        F.col("n_tokens").alias("cap"),
+        F.lit(0).cast("bigint").alias("a"),
+    ).localCheckpoint(eager=True)
+    active = F.col("a") < F.col("cap")
+    for _ in range(_D53_ROUNDS):
+        m = s.crossJoin(F.broadcast(budget)).agg(
+            F.sum(active.cast("int")).cast("bigint").alias("n_act"),
+            (F.first("budget") - F.sum("a")).cast("bigint").alias("rem"),
+        )
+        share = F.least(F.expr("rem div n_act"), F.col("cap") - F.col("a"))
+        s = s.crossJoin(F.broadcast(m)).select(
+            "source",
+            "n_tokens",
+            "cap",
+            (F.col("a") + F.when(active & (F.col("n_act") > 0), share).otherwise(0))
+            .cast("bigint")
+            .alias("a"),
+        )
+    return s
 
 
 # --- token counting ---------------------------------------------------------
@@ -273,11 +657,10 @@ def d01_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact dedup audit ------------------------------------------------------
 @query(
     "d02_exact_dup_groups",
-    oracle="""
-    SELECT md5(lower(trim(text))) AS content_hash,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(MIN(doc_id) AS BIGINT) AS keep_id
-    FROM documents GROUP BY 1
+    oracle=f"""
+    WITH {_sql_base("doc_id")},
+    {_sql_keep("base")}
+    SELECT h AS content_hash, n_docs, keep_id FROM keep
     """,
     doc="Exact dedup by content hash: group sizes + survivor id "
     "(dedup/exact.py). Only ids shuffle, never document bytes.",
@@ -308,17 +691,16 @@ def d03_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d04_lang_heuristic",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents)
+    WITH {_sql_tk()}
     SELECT doc_id,
-           CAST(len(list_filter(toks, x -> x IN {EN_STOPWORDS!r})) AS INTEGER)
+           CAST(len(list_filter(t, x -> x IN {EN_STOPWORDS!r})) AS INTEGER)
              AS n_stopwords,
-           CAST(len(toks) AS INTEGER) AS n_tokens,
-           CASE WHEN len(toks) > 0
-                 AND len(list_filter(toks, x -> x IN {EN_STOPWORDS!r})) * 20
-                     >= len(toks)
+           CAST(len(t) AS INTEGER) AS n_tokens,
+           CASE WHEN len(t) > 0
+                 AND len(list_filter(t, x -> x IN {EN_STOPWORDS!r})) * 20
+                     >= len(t)
                 THEN 'en' ELSE 'other' END AS pred_lang
-    FROM t
+    FROM tk
     """,
     doc="N-gram/stopword-ratio language ID: share of English function words "
     "≥5% → 'en' (integer form n_stop*20 >= n_tokens: exact at the "
@@ -346,22 +728,19 @@ def d04_lang_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d05_quality_scores",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, text, {_TOKS} AS toks,
-             len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct
-      FROM documents)
+    WITH {_sql_tk(f"doc_id, text, {_SQL_PUNCT} AS n_punct")}
     SELECT doc_id,
            CAST(length(text) AS INTEGER) AS n_chars,
-           CAST(len(toks) AS INTEGER) AS n_tokens,
+           CAST(len(t) AS INTEGER) AS n_tokens,
            CAST(n_punct AS INTEGER) AS n_punct,
            CAST(n_punct AS DOUBLE) / length(text) AS punct_ratio,
-           CAST(len(list_distinct(toks)) AS DOUBLE)
-             / greatest(len(toks), 1) AS uniq_ratio,
-           CASE WHEN len(toks) >= 20
-                 AND CAST(len(list_distinct(toks)) AS DOUBLE)
-                     / greatest(len(toks), 1) >= 0.3
+           CAST(len(list_distinct(t)) AS DOUBLE)
+             / greatest(len(t), 1) AS uniq_ratio,
+           CASE WHEN len(t) >= 20
+                 AND CAST(len(list_distinct(t)) AS DOUBLE)
+                     / greatest(len(t), 1) >= 0.3
                 THEN 'keep' ELSE 'flag' END AS quality
-    FROM t
+    FROM tk
     """,
     doc="Document quality features (length, punctuation ratio, lexical "
     "diversity) + keep/flag gate — the pre-training filter archetype.",
@@ -411,8 +790,6 @@ def _sql_jac_pairs() -> str:
 @session_memo
 def _jac05_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) pairs at threshold 0.5, df cap 100."""
-    from goodreads_pyspark_spark.dedup.ngram import jaccard_pairs
-
     docs = tbl(spark, sf_dir, "documents")
     return jaccard_pairs(docs, threshold=0.5, max_df=D06_MAX_DF)
 
@@ -420,11 +797,6 @@ def _jac05_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_memo
 def _neardup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, component) labeling of the Jaccard≥0.5 pair graph."""
-    from goodreads_pyspark_spark.graph.frames import graph_of
-    from goodreads_pyspark_spark.graph.pregel import (
-        connected_components_alternating,
-    )
-
     pairs = _jac05_pairs(spark, sf_dir)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     return connected_components_alternating(graph_of(edges))
@@ -439,14 +811,6 @@ def _c_pipeline_stages(spark: SparkSession, sf_dir: str):
     decontamination at 0.5). The LSH+verify near-dup kernel and the
     shingle-based contamination join are the pipeline's dominant costs.
     """
-    from goodreads_pyspark_spark.dedup.decontaminate import contamination_stats
-    from goodreads_pyspark_spark.dedup.exact import exact_dedup
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-    from goodreads_pyspark_spark.pipelines.corpus import (
-        drop_near_duplicates,
-        quality_gate,
-    )
-
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
     # ONE corpus-wide tokenize->shingle pass feeds the near-dup stage
     # and decontamination (the dominant linear cost at scale)
@@ -544,7 +908,7 @@ def _simhash_sig_ctes(bits: int = 16) -> str:
         for j in range(bits)
     )
     sig = " + ".join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(bits))
-    return f"""tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    return f"""{_sql_tk()},
     ex AS (SELECT doc_id, unnest(list_distinct(t)) AS tok FROM tk),
     v AS (SELECT doc_id,
            {votes}
@@ -614,8 +978,6 @@ def _simhash_pairs_oracle(
     "signatures widen (measured in SCALING.md).",
 )
 def d11_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup import simhash_neardup_pairs
-
     docs = tbl(spark, sf_dir, "documents")
     return simhash_neardup_pairs(
         docs, bits=48, bands=4, max_hamming=3, max_bucket=D11_MAX_BUCKET
@@ -626,8 +988,7 @@ def d11_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d09_vocabulary_top_terms",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    ex AS (SELECT doc_id, unnest(t) AS term FROM tk)
+    WITH {_SQL_TERMS}
     SELECT term,
            CAST(COUNT(*) AS BIGINT) AS tf_total,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
@@ -639,12 +1000,9 @@ def d11_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "outputs: no float drift possible.",
 )
 def d09_vocabulary_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    ex = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
     return (
-        ex.groupBy("term")
+        _terms(spark, sf_dir)
+        .groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("tf_total"),
             F.countDistinct("doc_id").alias("df"),
@@ -661,7 +1019,7 @@ def _clean_corpus_ctes(min_tokens: int = 20, jaccard: float = 0.8) -> str:
     survivors), MinHash candidates verified by exact Jaccard and
     ``clean`` (the near-dup survivors). c03 and c06 read the stages."""
     return f"""
-    tk0 AS (SELECT doc_id, text, {_TOKS} AS t FROM documents),
+    {_sql_tk("doc_id, text", out="tk0")},
     q AS (SELECT * FROM tk0
           WHERE len(t) >= {min_tokens}
             AND len(list_distinct(t)) * 10 >= 3 * len(t)),
@@ -750,21 +1108,40 @@ def d12_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Training context length for the packing layout.
 D13_CHUNK = 2048
 
-
-@query(
-    "d13_sequence_packing",
-    oracle=f"""
-    WITH tk AS (SELECT doc_id, source, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
+#: ``c``: each document's n_tokens and its token offset ``tok_offset`` in
+#: its source's concatenated stream (doc_id order). DuckDB SUM(BIGINT)
+#: yields HUGEINT, which Arrow fetches as decimal128 — cast back so the
+#: value hash sees int64 like Spark's bigint.
+_SQL_PACKED = f"""tk AS (SELECT doc_id, source, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
                 FROM documents),
     c AS (SELECT doc_id, source, n_tokens,
-                 -- DuckDB SUM(BIGINT) yields HUGEINT, which pandas/arrow
-                 -- coerces to float64 — cast back so the driver's value
-                 -- hash sees int64 like Spark's bigint (round-2 red row).
                  CAST(COALESCE(SUM(n_tokens) OVER (
                      PARTITION BY source ORDER BY doc_id
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                    AS BIGINT) AS tok_offset
-          FROM tk)
+          FROM tk)"""
+
+
+def _packed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, n_tokens, tok_offset) — ``_SQL_PACKED``."""
+    docs = tbl(spark, sf_dir, "documents")
+    base = docs.select(
+        "doc_id", "source", F.size(tokens("text")).cast("bigint").alias("n_tokens")
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return base.withColumn(
+        "tok_offset", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    )
+
+
+@query(
+    "d13_sequence_packing",
+    oracle=f"""
+    WITH {_SQL_PACKED}
     SELECT doc_id, source, n_tokens, tok_offset,
            CAST(tok_offset // {D13_CHUNK} AS BIGINT) AS first_chunk,
            CAST((tok_offset + greatest(n_tokens, 1) - 1) // {D13_CHUNK}
@@ -778,19 +1155,7 @@ D13_CHUNK = 2048
     "sources pack independently, the 100 TB-safe shape.",
 )
 def d13_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = tbl(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", "source", F.size(tokens("text")).cast("bigint").alias("n_tokens")
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    c = base.withColumn("tok_offset", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
-    return c.select(
+    return _packed(spark, sf_dir).select(
         "doc_id",
         "source",
         "n_tokens",
@@ -808,14 +1173,7 @@ def d13_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d17_chunk_layout",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, source, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
-                FROM documents),
-    c AS (SELECT doc_id, source, n_tokens,
-                 CAST(COALESCE(SUM(n_tokens) OVER (
-                     PARTITION BY source ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS BIGINT) AS tok_offset
-          FROM tk),
+    WITH {_SQL_PACKED},
     s AS (SELECT doc_id, source, n_tokens, tok_offset,
                  unnest(generate_series(
                      tok_offset // {D13_CHUNK},
@@ -847,19 +1205,7 @@ def d13_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic (div, not double floor) on both engines.",
 )
 def d17_chunk_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = tbl(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", "source", F.size(tokens("text")).cast("bigint").alias("n_tokens")
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    c = base.withColumn("tok_offset", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
-    s = c.select(
+    s = _packed(spark, sf_dir).select(
         "doc_id",
         "source",
         "n_tokens",
@@ -913,8 +1259,7 @@ def _d14_case() -> str:
     oracle=f"""
     SELECT doc_id, source, bucket FROM (
       SELECT doc_id, source,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'mix-v1'), 1, 8))::BIGINT
-               % 10000 AS bucket
+             {_sql_bucket("CAST(doc_id AS VARCHAR) || 'mix-v1'", 10000)} AS bucket
       FROM documents) b
     WHERE bucket < {_d14_case()}
     """,
@@ -925,8 +1270,6 @@ def _d14_case() -> str:
     "shuffle at any scale.",
 )
 def d14_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.pipelines.sampling import stratified_sample
-
     docs = tbl(spark, sf_dir, "documents")
     return stratified_sample(docs, D14_RATES, D14_DEFAULT).select(
         "doc_id", "source", "bucket"
@@ -950,8 +1293,6 @@ def d14_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "self-join blowup cannot occur and no df cap is needed.",
 )
 def d15_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.decontaminate import contamination_stats
-
     docs = tbl(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 20 != 0)
     ev = docs.filter(F.col("doc_id") % 20 == 0)
@@ -1015,7 +1356,7 @@ def c02_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d16_repetition_filters",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    WITH {_sql_tk()},
     base AS (SELECT doc_id, t, len(t) AS n FROM tk WHERE len(t) >= 2),
     uni AS (SELECT doc_id, n, unnest(t) AS tok FROM base),
     cu AS (SELECT doc_id, n, max(c) AS cu FROM
@@ -1040,8 +1381,6 @@ def c02_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "first).",
 )
 def d16_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = tbl(spark, sf_dir, "documents")
     base = (
         fan_out(docs)
@@ -1138,8 +1477,6 @@ def _incremental_minhash_oracle(batch: str, max_bucket: int) -> str:
     "hot-bucket cap as d07, mirrored in the oracle.",
 )
 def d19_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.minhash import incremental_lsh_matches
-
     docs = tbl(spark, sf_dir, "documents")
     incoming = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
@@ -1152,8 +1489,7 @@ def d19_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d20_tfidf_top_terms",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    ex AS (SELECT doc_id, unnest(t) AS term FROM tk),
+    WITH {_SQL_TERMS},
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM ex GROUP BY doc_id, term),
     df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM ex GROUP BY term),
     n AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -1179,10 +1515,6 @@ def d19_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quadratic, vocabulary never collected.",
 )
 def d20_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
     ex = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
     tf = ex.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -1216,7 +1548,7 @@ _CHUNK_ST = 32
 @query(
     "d21_chunk_overlap",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    WITH {_sql_tk()},
     sized AS (SELECT doc_id, t, len(t) AS n_tok FROM tk WHERE len(t) > 0),
     counted AS (
       SELECT doc_id, t, n_tok,
@@ -1432,24 +1764,16 @@ def d23_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- composite quality gate with per-rule audit ------------------------------
+_SQL_FAILS = " || ".join(
+    f"CASE WHEN {fails} THEN '{name},' ELSE '' END" for name, fails in _SQL_RULES
+)
+
+
 @query(
     "d24_quality_gate_audit",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, lang, text, {_TOKS} AS toks,
-             len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
-             len(regexp_extract_all(text, '[0-9]{{3,}}')) AS n_digit_runs
-      FROM documents),
-    f AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) < 20 THEN 'min_tokens,' ELSE '' END ||
-             CASE WHEN len(list_distinct(toks)) * 10 < 3 * len(toks)
-                  THEN 'lexical_diversity,' ELSE '' END ||
-             CASE WHEN n_punct * 5 > length(text)
-                  THEN 'punct_ratio,' ELSE '' END ||
-             CASE WHEN n_digit_runs * 20 > len(toks)
-                  THEN 'digit_noise,' ELSE '' END AS fails
-      FROM t)
+    WITH {_sql_rule_feats("doc_id")},
+    f AS (SELECT doc_id, {_SQL_FAILS} AS fails FROM tk)
     SELECT doc_id,
            CAST(CASE WHEN fails = '' THEN 1 ELSE 0 END AS INTEGER) AS passed,
            rtrim(fails, ',') AS failed_rules
@@ -1463,28 +1787,9 @@ def d23_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "review needs, vs d05's opaque keep/flag. Pure map-side codegen.",
 )
 def d24_quality_gate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = tbl(spark, sf_dir, "documents")
-    toks = tokens("text")
-    t = docs.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_uniq"),
-        quality_punct_count("text").alias("n_punct"),
-        F.regexp_count("text", F.lit("[0-9]{3,}")).alias("n_digit_runs"),
-    )
+    t = _rule_feats(tbl(spark, sf_dir, "documents"), "doc_id")
     fails = F.concat(
-        F.when(F.col("n_tokens") < 20, F.lit("min_tokens,")).otherwise(F.lit("")),
-        F.when(
-            F.col("n_uniq") * 10 < 3 * F.col("n_tokens"),
-            F.lit("lexical_diversity,"),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("n_punct") * 5 > F.col("n_chars"), F.lit("punct_ratio,")
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("n_digit_runs") * 20 > F.col("n_tokens"), F.lit("digit_noise,")
-        ).otherwise(F.lit("")),
+        *[F.when(c, F.lit(f"{name},")).otherwise(F.lit("")) for name, c in _rules()]
     )
     return t.select(
         "doc_id",
@@ -1497,13 +1802,8 @@ def d24_quality_gate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d25_oov_rate",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    ex AS (SELECT doc_id, unnest(t) AS term FROM tk),
-    vocab AS (
-      SELECT term FROM (
-        SELECT term, COUNT(*) AS tf,
-               ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, term) AS rnk
-        FROM ex GROUP BY term) WHERE rnk <= 1000),
+    WITH {_SQL_TERMS},
+    {_sql_vocab(1000)},
     per_doc AS (
       SELECT ex.doc_id,
              COUNT(*) AS n_tokens,
@@ -1524,21 +1824,8 @@ def d24_quality_gate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join; token rows shuffle once for the per-doc aggregate.",
 )
 def d25_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    ex = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-    # orderBy+limit, NOT a global row_number window: Catalyst rewrites
-    # this to TakeOrderedAndProject (per-partition top-1000 + merge),
-    # while the window form funnels the whole vocabulary through one
-    # partition.
-    vocab = (
-        ex.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .orderBy(F.col("tf").desc(), F.col("term"))
-        .limit(1000)
-        .select("term", F.lit(1).alias("__in_vocab"))
-    )
+    ex = _terms(spark, sf_dir)
+    vocab = _top_terms(ex, 1000).select("term", F.lit(1).alias("__in_vocab"))
     per_doc = (
         ex.join(F.broadcast(vocab), "term", "left")
         .groupBy("doc_id")
@@ -1586,8 +1873,6 @@ _N_SHARDS = 16
     "existing doc between shards.",
 )
 def d26_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.pipelines.sampling import portable_bucket
-
     docs = tbl(spark, sf_dir, "documents")
     sharded = docs.select(
         (portable_bucket(F.col("doc_id"), "shard-v1", _N_SHARDS))
@@ -1683,9 +1968,6 @@ def d27_dup_shingle_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shingle type — bounded by a constant, never by corpus size.",
 )
 def d28_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import word_shingles
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = tbl(spark, sf_dir, "documents")
     # Tokenize into an attribute first (the shingle_rows codegen lesson).
     base = fan_out(docs).select("source", tokens("text").alias("__toks"))
@@ -1751,8 +2033,6 @@ D29_QUOTA = 8
     "are bounded by per-partition top-k semantics under AQE.",
 )
 def d29_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = tbl(spark, sf_dir, "documents")
     order_key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("quota-v1")))
     w = Window.partitionBy("lang", "source").orderBy(order_key, "doc_id")
@@ -1778,8 +2058,7 @@ def _d30_point(k: int) -> str:
 @query(
     "d30_vocab_coverage",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    ex AS (SELECT unnest(t) AS term FROM tk),
+    WITH {_SQL_TERMS},
     tfr AS (SELECT term, COUNT(*) AS tf FROM ex GROUP BY term),
     tot AS (SELECT SUM(tf) AS total FROM tfr),
     pts AS ({_d30_point(100)} UNION ALL {_d30_point(1000)})
@@ -1797,11 +2076,7 @@ def _d30_point(k: int) -> str:
     "top-k + merge) over the term-frequency table, then a 1-row sum.",
 )
 def d30_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    ex = docs.select(F.explode(tokens("text")).alias("term"))
-    tfr = ex.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
+    tfr = _terms(spark, sf_dir).groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
     tot = tfr.agg(F.sum("tf").cast("bigint").alias("total"))
     pts = None
     for k in D30_KS:
@@ -1828,7 +2103,7 @@ D31_SPAN = 3
 @query(
     "d31_span_scrub",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    WITH {_sql_tk()},
     idx AS (SELECT doc_id, t, unnest(range(1, len(t)+1)) AS i FROM tk),
     ptok AS (SELECT doc_id, i AS pos, t[i] AS tok FROM idx),
     occ AS (SELECT doc_id, i, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
@@ -1863,12 +2138,9 @@ D31_SPAN = 3
     "documents, until the final per-doc concat.",
 )
 def d31_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import tokens
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     k = D31_SPAN
     docs = tbl(spark, sf_dir, "documents")
-    base = fan_out(docs).select("doc_id", tokens("text").alias("toks")).cache()
+    base = fan_out(docs).select("doc_id", tokens("text").alias("toks"))
     # Positional tokens (0-based) and positional spans.
     ptok = base.select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
@@ -1919,12 +2191,8 @@ _D32_VOCAB = 1000
 @query(
     "d32_token_rank_fluency",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    ex AS (SELECT doc_id, unnest(t) AS term FROM tk),
-    vocab AS (
-      SELECT term, rnk FROM (
-        SELECT term, ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, term) AS rnk
-        FROM ex GROUP BY term) WHERE rnk <= {_D32_VOCAB}),
+    WITH {_SQL_TERMS},
+    {_sql_vocab(_D32_VOCAB)},
     per_doc AS (
       SELECT ex.doc_id,
              COUNT(*) AS n_tokens,
@@ -1947,23 +2215,12 @@ _D32_VOCAB = 1000
     "join; token rows shuffle once for the per-doc aggregate.",
 )
 def d32_token_rank_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators import bounded_rank
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    ex = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-    # TakeOrdered cut first (scale path, see d25), then rank the bounded
-    # 1000 rows via bounded_rank — never an unpartitioned window, never
-    # the corpus.
-    top = (
-        ex.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .orderBy(F.col("tf").desc(), F.col("term"))
-        .limit(_D32_VOCAB)
-    )
-    vocab = bounded_rank(top, [("tf", "desc"), ("term", "asc")]).select(
-        "term", "rnk"
-    )
+    ex = _terms(spark, sf_dir)
+    # Rank the bounded top-1000 rows via bounded_rank — never an
+    # unpartitioned window, never the corpus.
+    vocab = bounded_rank(
+        _top_terms(ex, _D32_VOCAB), [("tf", "desc"), ("term", "asc")]
+    ).select("term", "rnk")
     per_doc = (
         ex.join(F.broadcast(vocab), "term", "left")
         .groupBy("doc_id")
@@ -1988,26 +2245,9 @@ _D33_MAX_BIN = 19
 @query(
     "d33_source_length_drift",
     oracle=f"""
-    WITH b AS (
-      SELECT source,
-             LEAST(len({_TOKS}) // {_D33_BIN}, {_D33_MAX_BIN}) AS bin
-      FROM documents),
-    sc AS (SELECT source, bin, COUNT(*) AS c FROM b GROUP BY 1, 2),
-    cc AS (SELECT bin, COUNT(*) AS cb FROM b GROUP BY 1),
-    ns AS (SELECT source, COUNT(*) AS n_docs FROM b GROUP BY 1),
-    tot AS (SELECT COUNT(*) AS n FROM b),
-    diffs AS (
-      SELECT ns.source, ns.n_docs,
-             SUM(ABS(COALESCE(sc.c, 0) * tot.n - cc.cb * ns.n_docs))
-               AS num
-      FROM ns CROSS JOIN tot
-      JOIN cc ON TRUE
-      LEFT JOIN sc ON sc.source = ns.source AND sc.bin = cc.bin
-      GROUP BY ns.source, ns.n_docs, tot.n)
-    SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(num AS DOUBLE)
-             / (2.0 * n_docs * (SELECT n FROM tot)) AS tv_distance
-    FROM diffs
+    WITH nt AS (SELECT source, len({_TOKS}) AS n_tok FROM documents),
+    {_sql_drift("nt")}
+    SELECT source, CAST(n_docs AS BIGINT) AS n_docs, tv_distance FROM drift
     """,
     doc="Distribution-drift audit: total-variation distance between each "
     "source's token-length histogram and the corpus-wide one (bins of "
@@ -2020,41 +2260,8 @@ _D33_MAX_BIN = 19
     "the histogram table is tiny regardless of corpus size.",
 )
 def d33_source_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import tokens
-
     docs = tbl(spark, sf_dir, "documents")
-    b = docs.select(
-        "source",
-        F.least(
-            F.floor(F.size(tokens("text")) / _D33_BIN), F.lit(_D33_MAX_BIN)
-        ).alias("bin"),
-    )
-    sc = b.groupBy("source", "bin").agg(F.count(F.lit(1)).alias("c"))
-    cc = b.groupBy("bin").agg(F.count(F.lit(1)).alias("cb"))
-    ns = b.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    tot = b.agg(F.count(F.lit(1)).alias("n"))
-    diffs = (
-        ns.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(cc))
-        .join(sc, ["source", "bin"], "left")
-        .groupBy("source", "n_docs", "n")
-        .agg(
-            F.sum(
-                F.abs(
-                    F.coalesce("c", F.lit(0)) * F.col("n")
-                    - F.col("cb") * F.col("n_docs")
-                )
-            ).alias("num")
-        )
-    )
-    return diffs.select(
-        "source",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        (
-            F.col("num").cast("double")
-            / (2.0 * F.col("n_docs") * F.col("n"))
-        ).alias("tv_distance"),
-    )
+    return _length_drift(docs.select("source", F.size(tokens("text")).alias("n_tok")))
 
 
 # --- end-to-end corpus -> training shards ------------------------------------
@@ -2100,9 +2307,6 @@ def _c03_oracle() -> str:
     "shuffle class; stages hand off (doc_id)-keyed frames.",
 )
 def c03_corpus_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import tokens as toks_fn
-    from goodreads_pyspark_spark.pipelines.sampling import portable_bucket
-
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
     stages = _c_pipeline_stages(spark, sf_dir)
     train = stages["cleaned"].filter(F.col("doc_id") % 20 != 0)
@@ -2112,7 +2316,7 @@ def c03_corpus_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = final.select(
         portable_bucket(F.col("doc_id"), "shard-v1", 8).cast("int").alias("shard"),
         "doc_id",
-        F.size(toks_fn("text")).alias("n_tok"),
+        F.size(tokens("text")).alias("n_tok"),
     )
     return routed.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2255,53 +2459,41 @@ def d34_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "capped at the vocabulary size, never a pairwise source join.",
 )
 def d35_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
-    # Hash shingles to portable 60-bit ints before anything shuffles
-    # (the ngram-kernel discipline; the oracle hashes identically, so
-    # distinct/exclusive type counts match even under a collision).
-    ds = (
-        shingle_rows(docs, out_id="doc_id")
-        .select("doc_id", shingle_hash().alias("sh"))
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .cache()
-    )
-    per_sh = ds.groupBy("sh").agg(
-        F.countDistinct("source").alias("n_sources")
-    )
-    per_src = ds.groupBy("source").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
-        F.count(F.lit(1)).cast("bigint").alias("n_shingle_rows"),
-        F.countDistinct("sh").cast("bigint").alias("n_distinct"),
-    )
-    uniq = (
-        ds.join(per_sh.filter(F.col("n_sources") == 1), "sh")
-        .groupBy("source")
-        .agg(F.countDistinct("sh").cast("bigint").alias("n_exclusive"))
-    )
-    out = (
-        per_src.join(uniq, "source", "left")
-        .select(
+    with _released() as caches:
+        # Hash shingles to portable 60-bit ints before anything shuffles
+        # (the ngram-kernel discipline; the oracle hashes identically, so
+        # distinct/exclusive type counts match even under a collision).
+        ds = _pin(
+            shingle_rows(docs, out_id="doc_id")
+            .select("doc_id", shingle_hash().alias("sh"))
+            .join(docs.select("doc_id", "source"), "doc_id"),
+            caches,
+        )
+        per_sh = ds.groupBy("sh").agg(F.countDistinct("source").alias("n_sources"))
+        per_src = ds.groupBy("source").agg(
+            F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
+            F.count(F.lit(1)).cast("bigint").alias("n_shingle_rows"),
+            F.countDistinct("sh").cast("bigint").alias("n_distinct"),
+        )
+        uniq = (
+            ds.join(per_sh.filter(F.col("n_sources") == 1), "sh")
+            .groupBy("source")
+            .agg(F.countDistinct("sh").cast("bigint").alias("n_exclusive"))
+        )
+        n_exclusive = F.coalesce("n_exclusive", F.lit(0)).cast("bigint")
+        out = per_src.join(uniq, "source", "left").select(
             "source",
             "n_docs",
             "n_shingle_rows",
             "n_distinct",
-            (
-                F.col("n_distinct").cast("double") / F.col("n_shingle_rows")
-            ).alias("novelty"),
-            F.coalesce("n_exclusive", F.lit(0))
-            .cast("bigint")
-            .alias("n_exclusive"),
-            (
-                F.coalesce("n_exclusive", F.lit(0)).cast("double")
-                / F.col("n_distinct")
-            ).alias("exclusivity"),
+            (F.col("n_distinct").cast("double") / F.col("n_shingle_rows")).alias(
+                "novelty"
+            ),
+            n_exclusive.alias("n_exclusive"),
+            (n_exclusive.cast("double") / F.col("n_distinct")).alias("exclusivity"),
         )
-        .localCheckpoint(eager=True)
-    )
-    ds.unpersist()
-    return out
+        return _materialize("d35_shingle_novelty", out)
 
 
 # --- temperature-weighted source mixing --------------------------------------
@@ -2311,19 +2503,13 @@ _D36_TARGET_DOCS = 1_000_000
 @query(
     "d36_temperature_mix",
     oracle=f"""
-    WITH per_source AS (
-      SELECT source,
-             CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(len({_TOKS})) AS BIGINT) AS n_tokens
-      FROM documents GROUP BY source),
-    weighted AS (
-      SELECT *, CAST(FLOOR(SQRT(n_tokens)) AS BIGINT) AS w
-      FROM per_source),
-    tot AS (SELECT SUM(w) AS sw FROM weighted)
+    WITH nt AS (SELECT source, len({_TOKS}) AS n_tok FROM documents),
+    {_sql_volumes("nt")},
+    {_sql_tempered("ps")}
     SELECT source, n_docs, n_tokens, w AS weight,
            CAST(w AS DOUBLE) / sw AS share,
            CAST((({_D36_TARGET_DOCS} * w) // sw) AS BIGINT) AS target_docs
-    FROM weighted CROSS JOIN tot
+    FROM wtd CROSS JOIN swt
     ORDER BY source
     """,
     doc="Temperature-weighted training-mix allocation (the multilingual / "
@@ -2341,19 +2527,10 @@ _D36_TARGET_DOCS = 1_000_000
     "total; allocation is arithmetic on a handful of rows.",
 )
 def d36_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
-    per_source = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.size(tokens("text"))).cast("bigint").alias("n_tokens"),
-    )
-    weighted = per_source.withColumn(
-        "w", F.floor(F.sqrt(F.col("n_tokens"))).cast("bigint")
-    )
-    tot = weighted.agg(F.sum("w").alias("sw"))
+    ps = _volumes(docs.select("source", F.size(tokens("text")).alias("n_tok")))
     return (
-        weighted.crossJoin(F.broadcast(tot))
+        _tempered(ps)
         .select(
             "source",
             "n_docs",
@@ -2428,7 +2605,8 @@ def _d37_oracle(n: int = _D37_MERGES) -> str:
 @query(
     "d37_bpe_fit",
     oracle=_d37_oracle(),
-    doc="Distributed BPE tokenizer FIT (VERDICT r5 missing-piece #1): "
+    doc="Distributed BPE tokenizer FIT (the tokenizer-training stage of "
+    "a pretraining pipeline): "
     f"learn the first {_D37_MERGES} merges from the corpus "
     "(functions/bpe.py). The corpus collapses ONCE to a word-frequency "
     "table (all further work is vocab-sized, the Sennrich 2016 trick); "
@@ -2442,8 +2620,6 @@ def _d37_oracle(n: int = _D37_MERGES) -> str:
     "plain non-overlapping `replace` in BOTH engines.",
 )
 def d37_bpe_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.bpe import bpe_fit
-
     docs = tbl(spark, sf_dir, "documents")
     return bpe_fit(spark, docs, n_merges=_D37_MERGES)
 
@@ -2452,32 +2628,11 @@ def d37_bpe_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d38_quality_classifier",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM tk),
-    wts AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qw1_' || CAST(
-                ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096
-              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000 AS w
-      FROM feats),
-    agg AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-             CAST(SUM(w) AS BIGINT) AS sum_w
-      FROM wts GROUP BY doc_id)
-    SELECT d.doc_id,
-           COALESCE(n_feats, 0) AS n_feats,
-           COALESCE(sum_w, 0) AS sum_w,
-           CASE WHEN COALESCE(n_feats, 0) = 0 THEN 0.0
-                ELSE sum_w / (n_feats * 1000.0) END AS logit,
-           CAST(CASE WHEN COALESCE(sum_w, 0) > 50 * COALESCE(n_feats, 0)
-                THEN 1 ELSE 0 END AS INTEGER) AS keep
-    FROM documents d LEFT JOIN agg USING (doc_id)
+    WITH {_sql_quality()}
+    SELECT doc_id, n_feats, sum_w, logit, keep FROM qs
     """,
-    doc="Model-based quality gate (VERDICT r5 missing-piece #2): "
+    doc="Model-based quality gate (the learned filter that complements "
+    "d24's rules): "
     "fastText/CCNet-shape LINEAR classifier inference — hashed "
     "unigram+bigram features (4096 md5 buckets), fixed md5-derived "
     "integer weight table, per-doc mean weight as the logit, integer "
@@ -2490,8 +2645,6 @@ def d37_bpe_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engine-portable; the gate is monotone in the logit).",
 )
 def d38_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-
     return quality_scores(tbl(spark, sf_dir, "documents"))
 
 
@@ -2524,8 +2677,6 @@ def _d39_oracle(n: int = _D37_MERGES, top_k: int = 200) -> str:
     "the same unrolled rounds and reads the final word state.",
 )
 def d39_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.bpe import bpe_segment_words
-
     return bpe_segment_words(
         tbl(spark, sf_dir, "documents"), n_merges=_D37_MERGES, top_k=200
     )
@@ -2570,8 +2721,6 @@ def d39_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "into train-order shards.",
 )
 def d40_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = tbl(spark, sf_dir, "documents").select("doc_id")
 
     def epoch_pos(salt: str, alias: str) -> DataFrame:
@@ -2613,28 +2762,12 @@ def d40_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _c04_oracle(rounds: int = 10) -> str:
     return f"""
     WITH {_cc_cluster_ctes(rounds)},
-    qtk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM qtk),
-    wts AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qw1_' || CAST(
-                ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096
-              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000 AS w
-      FROM feats),
-    qagg AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-             CAST(SUM(w) AS BIGINT) AS sum_w
-      FROM wts GROUP BY doc_id),
+    {_sql_quality()},
     scored AS (
       SELECT l.id AS doc_id, l.label AS cluster_id, s.cluster_size,
-             CASE WHEN COALESCE(q.n_feats, 0) = 0 THEN 0.0
-                  ELSE q.sum_w / (q.n_feats * 1000.0) END AS quality
+             q.logit AS quality
       FROM l{rounds} l JOIN sizes s ON l.label = s.label
-      LEFT JOIN qagg q ON q.doc_id = l.id),
+      JOIN qs q ON q.doc_id = l.id),
     rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY cluster_id
                        ORDER BY quality DESC, doc_id) AS r FROM scored)
     SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
@@ -2659,10 +2792,6 @@ def _c04_oracle(rounds: int = 10) -> str:
     "map-side linear, the window partitions by cluster id.",
 )
 def c04_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-
     docs = tbl(spark, sf_dir, "documents")
     cc = _neardup_cc(spark, sf_dir)
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -2704,7 +2833,7 @@ _D41_TERMS = ("dup", "spark", "batch")
 @query(
     "d41_bm25_rank",
     oracle=f"""
-    WITH tkb AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    WITH {_sql_tk(out="tkb")},
     dtl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tkb),
     stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                      CAST(SUM(dl) AS BIGINT) AS n_toks FROM dtl),
@@ -2742,8 +2871,6 @@ _D41_TERMS = ("dup", "spark", "batch")
     "pins the portable integer core.",
 )
 def d41_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.bm25 import bm25_presence_rank
-
     return bm25_presence_rank(
         tbl(spark, sf_dir, "documents"), query_terms=_D41_TERMS, k=20
     )
@@ -2753,7 +2880,7 @@ def d41_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d42_substring_dedup",
     oracle=f"""
-    WITH tks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    WITH {_sql_tk(out="tks")},
     g AS (SELECT doc_id, i - 1 AS pos,
                  md5(array_to_string(t[i:i+7], ' ')) AS h
           FROM tks, unnest(range(1, len(t) - 6)) AS r(i)
@@ -2788,36 +2915,27 @@ def d41_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tokens at any scale.",
 )
 def d42_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.substring import duplicated_span_removal
-
     return duplicated_span_removal(tbl(spark, sf_dir, "documents"), k=8, min_freq=2)
 
 
 # --- filter-cascade attribution funnel ---------------------------------------
+_SQL_KILLED = "CASE {} ELSE 0 END".format(
+    " ".join(f"WHEN {fails} THEN {i}" for i, (_, fails) in enumerate(_SQL_RULES, 1))
+)
+_SQL_STAGES = ", ".join(f"({i}, '{name}')" for i, (name, _) in enumerate(_SQL_RULES, 1))
+
+
 @query(
     "d43_filter_cascade",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, source, length(text) AS n_chars, {_TOKS} AS toks,
-             len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
-             len(regexp_extract_all(text, '[0-9]{{3,}}')) AS n_digit_runs
-      FROM documents),
-    attributed AS (
-      SELECT source,
-             CASE WHEN len(toks) < 20 THEN 1
-                  WHEN len(list_distinct(toks)) * 10 < 3 * len(toks) THEN 2
-                  WHEN n_punct * 5 > n_chars THEN 3
-                  WHEN n_digit_runs * 20 > len(toks) THEN 4
-                  ELSE 0 END AS killed_stage
-      FROM t),
+    WITH {_sql_rule_feats("source")},
+    attributed AS (SELECT source, {_SQL_KILLED} AS killed_stage FROM tk),
     totals AS (SELECT source, COUNT(*) AS n_total
                FROM attributed GROUP BY source),
     kills AS (SELECT source, killed_stage, COUNT(*) AS n_killed
               FROM attributed WHERE killed_stage > 0
               GROUP BY source, killed_stage),
-    stages AS (SELECT * FROM (VALUES
-        (1, 'min_tokens'), (2, 'lexical_diversity'),
-        (3, 'punct_ratio'), (4, 'digit_noise')) s(stage_no, stage)),
+    stages AS (SELECT * FROM (VALUES {_SQL_STAGES}) s(stage_no, stage)),
     grid AS (SELECT t.source, s.stage_no, s.stage,
                     t.n_total, COALESCE(k.n_killed, 0) AS n_killed
              FROM totals t CROSS JOIN stages s
@@ -2849,28 +2967,11 @@ def d42_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "output is |sources|x4 rows regardless of corpus size.",
 )
 def d43_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = tbl(spark, sf_dir, "documents")
-    toks = tokens("text")
-    t = docs.select(
-        "doc_id",
-        "source",
-        F.length("text").alias("n_chars"),
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_uniq"),
-        quality_punct_count("text").alias("n_punct"),
-        F.regexp_count("text", F.lit("[0-9]{3,}")).alias("n_digit_runs"),
-    )
-    attributed = t.select(
-        "source",
-        F.when(F.col("n_tokens") < 20, 1)
-        .when(F.col("n_uniq") * 10 < 3 * F.col("n_tokens"), 2)
-        .when(F.col("n_punct") * 5 > F.col("n_chars"), 3)
-        .when(F.col("n_digit_runs") * 20 > F.col("n_tokens"), 4)
-        .otherwise(0)
-        .alias("killed_stage"),
-    )
+    t = _rule_feats(tbl(spark, sf_dir, "documents"), "source")
+    killed = F.lit(0)
+    for i, (_, fails) in reversed(list(enumerate(_rules(), 1))):
+        killed = F.when(fails, i).otherwise(killed)
+    attributed = t.select("source", killed.alias("killed_stage"))
     totals = attributed.groupBy("source").agg(F.count(F.lit(1)).alias("n_total"))
     kills = (
         attributed.filter(F.col("killed_stage") > 0)
@@ -2878,8 +2979,7 @@ def d43_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_killed"))
     )
     stages = spark.createDataFrame(
-        [(1, "min_tokens"), (2, "lexical_diversity"),
-         (3, "punct_ratio"), (4, "digit_noise")],
+        [(i, name) for i, (name, _) in enumerate(_SQL_RULES, 1)],
         "stage_no int, stage string",
     )
     grid = (
@@ -2910,7 +3010,7 @@ def d43_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- leakage-safe cluster-aware split ----------------------------------------
 @query(
     "d44_leakage_safe_split",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT doc_id, source, md5(text) AS cluster_key FROM documents),
     sized AS (
@@ -2918,12 +3018,10 @@ def d43_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM c),
     assigned AS (
       SELECT *,
-             CASE WHEN ('0x' || substr(md5(cluster_key || 'split-v1'), 1, 8))::BIGINT % 10 < 8
-                    THEN 'train'
-                  WHEN ('0x' || substr(md5(cluster_key || 'split-v1'), 1, 8))::BIGINT % 10 = 8
-                    THEN 'val'
+             CASE WHEN bkt < 8 THEN 'train' WHEN bkt = 8 THEN 'val'
                   ELSE 'test' END AS split
-      FROM sized),
+      FROM (SELECT *, {_sql_bucket("cluster_key || 'split-v1'", 10)} AS bkt
+            FROM sized)),
     straddle AS (
       SELECT CAST(MAX(n_splits) AS INTEGER) AS max_splits_per_cluster
       FROM (SELECT cluster_key, COUNT(DISTINCT split) AS n_splits
@@ -2951,10 +3049,6 @@ def d43_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     "key is the md5 so hot keys are impossible by construction.",
 )
 def d44_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from goodreads_pyspark_spark.pipelines.sampling import portable_bucket
-
     docs = tbl(spark, sf_dir, "documents")
     c = docs.select("doc_id", "source", F.md5("text").alias("cluster_key"))
     sized = c.withColumn(
@@ -3041,10 +3135,6 @@ _D45_DSUM = "CAST(SUM(CAST({expr} AS DECIMAL(38,12))) AS DOUBLE)"
     "that is too wide; flag volume is linear in corpus either way.",
 )
 def d45_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.vectors import explode_vector
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    _ACC = "decimal(38,12)"
     emb = fan_out(tbl(spark, sf_dir, "embeddings"))
     docs = tbl(spark, sf_dir, "documents")
     e = explode_vector(emb, "vec_id")
@@ -3097,10 +3187,9 @@ _D46_TOP = 20
 @query(
     "d46_dsir_selection",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, lang, source, {{toks}} AS t FROM documents),
+    WITH {_sql_tk("doc_id, lang, source")},
     ex AS (SELECT doc_id, lang, source, unnest(t) AS term FROM tk),
-    b AS (SELECT doc_id, lang, source,
-                 ('0x' || substr(md5(term), 1, 8))::BIGINT % {_D46_BUCKETS} AS bkt
+    b AS (SELECT doc_id, lang, source, {_sql_bucket("term", _D46_BUCKETS)} AS bkt
           FROM ex),
     tgt AS (SELECT bkt, COUNT(*) AS ct FROM b WHERE lang = 'en' GROUP BY bkt),
     rw AS (SELECT bkt, COUNT(*) AS cr FROM b WHERE lang <> 'en' GROUP BY bkt),
@@ -3121,7 +3210,7 @@ _D46_TOP = 20
     SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
            ROUND(wsum / n_tokens, 6) AS dsir_score
     FROM sc ORDER BY dsir_score DESC, doc_id LIMIT {_D46_TOP}
-    """.format(toks=_TOKS),
+    """,
     doc="DSIR-shape importance selection (Xie et al. 2023, 'Data "
     "Selection for Language Models via Importance Resampling'): fit "
     "hashed-unigram bag distributions over a TARGET set (lang='en', "
@@ -3141,15 +3230,7 @@ _D46_TOP = 20
     "bucket (pipelines/sampling.py portable_bucket).",
 )
 def d46_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-    from goodreads_pyspark_spark.pipelines.sampling import portable_bucket
-
-    _ACC = "decimal(38,12)"
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    ex = docs.select(
-        "doc_id", "lang", "source", F.explode(tokens("text")).alias("term")
-    )
-    b = ex.select(
+    b = _terms(spark, sf_dir, "lang", "source").select(
         "doc_id",
         "lang",
         "source",
@@ -3204,35 +3285,9 @@ def d46_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d47_quality_partitions",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM tk),
-    wts AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qw1_' || CAST(
-                ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096
-              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000 AS w
-      FROM feats),
-    agg AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-             CAST(SUM(w) AS BIGINT) AS sum_w
-      FROM wts GROUP BY doc_id),
-    scored AS (
-      SELECT d.doc_id, d.lang, d.n_chars,
-             CASE WHEN COALESCE(n_feats, 0) = 0 THEN 0.0
-                  ELSE sum_w / (n_feats * 1000.0) END AS logit
-      FROM documents d LEFT JOIN agg USING (doc_id)),
-    tiled AS (
-      SELECT lang, n_chars, logit,
-             NTILE(3) OVER (PARTITION BY lang
-                            ORDER BY logit DESC, doc_id) AS tile
-      FROM scored)
-    SELECT lang, CAST(tile AS INTEGER) AS tile,
-           CASE tile WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-                     ELSE 'tail' END AS bucket,
+    WITH {_sql_quality("d.doc_id, d.lang, d.n_chars")},
+    {_sql_tiles("qs")}
+    SELECT lang, CAST(tile AS INTEGER) AS tile, {_SQL_TILE_NAME} AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
            ROUND(CAST(SUM(CAST(logit AS DECIMAL(38,12))) AS DOUBLE)
@@ -3254,18 +3309,8 @@ def d46_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "trade-off; exact NTILE keeps the gate bit-exact).",
 )
 def d47_quality_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    _ACC = "decimal(38,12)"
     docs = fan_out(tbl(spark, sf_dir, "documents"))
-    scored = quality_scores(docs).join(
-        docs.select("doc_id", "lang", "n_chars"), "doc_id"
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("logit").desc(), "doc_id")
-    tiled = scored.select("lang", "n_chars", "logit", F.ntile(3).over(w).alias("tile"))
+    tiled = _tiles(_scored(docs, "lang", "n_chars"))
     return tiled.groupBy("lang", "tile").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -3275,10 +3320,7 @@ def d47_quality_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "lang",
         F.col("tile").cast("int").alias("tile"),
-        F.when(F.col("tile") == 1, "head")
-        .when(F.col("tile") == 2, "middle")
-        .otherwise("tail")
-        .alias("bucket"),
+        _tile_name(F.col("tile")).alias("bucket"),
         "n_docs",
         "total_chars",
         "avg_logit",
@@ -3308,32 +3350,19 @@ def _c05_oracle(max_bucket: int = D07_MAX_BUCKET) -> str:
       SELECT b.doc_id FROM bh b JOIN ch ON ch.h = b.h
       UNION
       SELECT b.doc_id FROM bh b JOIN bh p ON p.h = b.h AND p.doc_id < b.doc_id),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM tk WHERE doc_id % {_C05_MOD} = {_C05_REM}),
-    wts AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qw1_' || CAST(
-                ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096
-              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000 AS w
-      FROM feats),
-    q AS (SELECT doc_id, COUNT(*) AS n_feats, SUM(w) AS sum_w
-          FROM wts GROUP BY doc_id),
+    {_sql_quality(where=batch)},
     ledger AS (
       SELECT d.source,
              CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
                   WHEN n.doc_id IS NOT NULL THEN 'near_dup'
-                  WHEN COALESCE(q.sum_w, 0) <= 50 * COALESCE(q.n_feats, 0)
-                       THEN 'low_quality'
+                  WHEN q.keep = 0 THEN 'low_quality'
                   ELSE 'admitted' END AS verdict,
              CAST(len(regexp_extract_all(lower(d.text),
                   '[a-z]+|[0-9]|[^a-z0-9\\s]')) AS BIGINT) AS n_subwords
       FROM documents d
       LEFT JOIN exact e ON e.doc_id = d.doc_id
       LEFT JOIN near n ON n.doc_id = d.doc_id
-      LEFT JOIN q ON q.doc_id = d.doc_id
+      JOIN qs q ON q.doc_id = d.doc_id
       WHERE d.doc_id % {_C05_MOD} = {_C05_REM})
     SELECT source, verdict, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_subwords) AS BIGINT) AS est_tokens
@@ -3360,10 +3389,6 @@ def _c05_oracle(max_bucket: int = D07_MAX_BUCKET) -> str:
     "keyed index lookups.",
 )
 def c05_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.minhash import incremental_lsh_matches
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
     is_batch = F.col("doc_id") % _C05_MOD == _C05_REM
     batch = docs.filter(is_batch)
@@ -3426,25 +3451,9 @@ def c05_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "d48_threshold_buckets",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM tk),
-    wts AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qw1_' || CAST(
-                ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096
-              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000 AS w
-      FROM feats),
-    agg AS (SELECT doc_id, COUNT(*) AS n_feats, SUM(w) AS sum_w
-            FROM wts GROUP BY doc_id),
-    scored AS (
-      SELECT d.doc_id, d.lang,
-             CASE WHEN COALESCE(n_feats, 0) = 0 THEN 0.0
-                  ELSE sum_w / (n_feats * 1000.0) END AS logit
-      FROM documents d LEFT JOIN agg USING (doc_id)),
+    WITH {_sql_quality("d.doc_id, d.lang")},
+    scored AS (SELECT doc_id, lang, logit FROM qs),
+    {_sql_tiles("scored")},
     th AS (
       SELECT lang,
              list_sort(list(logit))[CAST(ceil(COUNT(*) / 3.0) AS INT)] AS t1,
@@ -3455,14 +3464,7 @@ def c05_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
              CASE WHEN s.logit <= th.t1 THEN 'tail'
                   WHEN s.logit <= th.t2 THEN 'middle'
                   ELSE 'head' END AS bucket
-      FROM scored s JOIN th USING (lang)),
-    tiled AS (
-      SELECT lang, doc_id,
-             CASE NTILE(3) OVER (PARTITION BY lang
-                                 ORDER BY logit DESC, doc_id)
-               WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
-             END AS ntile_bucket
-      FROM scored)
+      FROM scored s JOIN th USING (lang))
     SELECT b.lang,
            ROUND(MAX(th.t1), 6) AS t1,
            ROUND(MAX(th.t2), 6) AS t2,
@@ -3472,7 +3474,8 @@ def c05_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(SUM(CASE WHEN b.bucket = t.ntile_bucket THEN 1.0 ELSE 0 END)
                  / COUNT(*), 6) AS agreement_rate
     FROM bucketed b
-    JOIN tiled t ON t.lang = b.lang AND t.doc_id = b.doc_id
+    JOIN (SELECT lang, doc_id, {_SQL_TILE_NAME} AS ntile_bucket FROM tiled) t
+      ON t.lang = b.lang AND t.doc_id = b.doc_id
     JOIN th ON th.lang = b.lang
     GROUP BY b.lang
     """,
@@ -3495,15 +3498,8 @@ def c05_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast.",
 )
 def d48_threshold_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
-    scored = quality_scores(docs).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    ).select("lang", "doc_id", "logit")
+    scored = _scored(docs, "lang").select("lang", "doc_id", "logit")
     th = scored.groupBy("lang").agg(
         F.expr(
             "element_at(sort_array(collect_list(logit)),"
@@ -3524,14 +3520,8 @@ def d48_threshold_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("head")
         .alias("bucket"),
     )
-    w = Window.partitionBy("lang").orderBy(F.col("logit").desc(), "doc_id")
-    tiled = scored.select(
-        "lang",
-        "doc_id",
-        F.when(F.ntile(3).over(w) == 1, "head")
-        .when(F.ntile(3).over(w) == 2, "middle")
-        .otherwise("tail")
-        .alias("ntile_bucket"),
+    tiled = _tiles(scored).select(
+        "lang", "doc_id", _tile_name(F.col("tile")).alias("ntile_bucket")
     )
     joined = bucketed.join(tiled, ["lang", "doc_id"])
     return joined.groupBy("lang").agg(
@@ -3572,9 +3562,6 @@ def d48_threshold_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the corpus is never rescanned after index build.",
 )
 def s12_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-    from goodreads_pyspark_spark.streaming import drain, staged_stream, state_partitions
-
     docs = tbl(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % _C05_MOD == _C05_REM
     incoming = docs.filter(is_batch)
@@ -3685,12 +3672,6 @@ def _d49_cte_chain(n_rounds: int = _D49_ROUNDS, eta: float = _D49_ETA) -> str:
     SIGMOID_SQL / UPDATE_SQL / DSUM_SQL), so the two engines run
     identical IEEE expression trees over identical decimal-exact sums.
     Shared by d49 (weight inspection) and d52 (train-fit evaluation)."""
-    from goodreads_pyspark_spark.functions.logistic import (
-        DSUM_SQL,
-        SIGMOID_SQL,
-        UPDATE_SQL,
-    )
-
     rounds = []
     for r in range(1, n_rounds + 1):
         p = r - 1
@@ -3705,19 +3686,12 @@ def _d49_cte_chain(n_rounds: int = _D49_ROUNDS, eta: float = _D49_ETA) -> str:
       SELECT w{p}.b, {UPDATE_SQL.format(eta=eta)} AS w
       FROM w{p} LEFT JOIN g{r} USING (b) CROSS JOIN nd)""")
     return f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    lab AS (SELECT doc_id, CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
+    WITH lab AS (SELECT doc_id, CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
             FROM documents),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM tk),
+    {_sql_qfeats()},
     cnt AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096 AS b,
-             CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM feats GROUP BY 1, 2),
+      SELECT doc_id, {_SQL_QBUCKET} AS b, CAST(COUNT(*) AS BIGINT) AS cnt
+      FROM qf GROUP BY 1, 2),
     nf AS (SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_feats
            FROM cnt GROUP BY doc_id),
     x AS MATERIALIZED (
@@ -3744,11 +3718,6 @@ def _logit_fit(spark: SparkSession, sf_dir: str):
     """The d49/d52 classifier fit: the hashed feature frame and the FINAL
     fitted weight table. d49 ranks the weights and d52 scores the corpus
     against them."""
-    from goodreads_pyspark_spark.functions.logistic import (
-        feature_matrix,
-        logistic_fit,
-    )
-
     docs = tbl(spark, sf_dir, "documents")
     labels = docs.select(
         "doc_id", F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y")
@@ -3763,7 +3732,7 @@ def _logit_fit(spark: SparkSession, sf_dir: str):
 @query(
     "d49_logistic_fit",
     oracle=_d49_oracle(),
-    doc="Learned quality-classifier FIT (VERDICT r6 'what's missing' #1) "
+    doc="Learned quality-classifier FIT "
     "— the trainer for the fastText/CCNet-shape linear gate d38 serves, "
     "completing the standard pipeline loop fit (d49) -> score (d38) -> "
     "tercile (d47) -> gate (d24/d43). Full-batch gradient ascent on "
@@ -3783,8 +3752,6 @@ def _logit_fit(spark: SparkSession, sf_dir: str):
     "gradient pass — n_rounds x 2 linear passes, no driver matrix.",
 )
 def d49_logistic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators import bounded_rank
-
     _, wfit = _logit_fit(spark, sf_dir)
     w = wfit.select(
         "b", F.round("w", 12).alias("w"), F.abs(F.round("w", 12)).alias("aw")
@@ -3808,7 +3775,7 @@ _D50_MAX_DUP3 = 0.05
 @query(
     "d50_repetition_rules",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    WITH {_sql_tk()},
     base AS (
       SELECT doc_id,
              CAST(len(t) AS BIGINT) AS n_tokens,
@@ -3878,8 +3845,6 @@ _D50_MAX_DUP3 = 0.05
     "struct max).",
 )
 def d50_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import tokens
-
     docs = tbl(spark, sf_dir, "documents")
     d = docs.select("doc_id", tokens("text").alias("t"))
     n = F.size("t")
@@ -3989,32 +3954,12 @@ _D51_CAP = 15
 @query(
     "d51_domain_cap",
     oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM tk),
-    wts AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qw1_' || CAST(
-                ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096
-              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000 AS w
-      FROM feats),
-    agg AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-             CAST(SUM(w) AS BIGINT) AS sum_w
-      FROM wts GROUP BY doc_id),
-    scored AS (
-      SELECT d.doc_id, d.source,
-             CASE WHEN COALESCE(n_feats, 0) = 0 THEN 0.0
-                  ELSE sum_w / (n_feats * 1000.0) END AS logit
-      FROM documents d LEFT JOIN agg USING (doc_id)),
+    WITH {_sql_quality("d.doc_id, d.source")},
     ranked AS (
       SELECT source, doc_id, logit,
              ROW_NUMBER() OVER (PARTITION BY source
                                 ORDER BY logit DESC, doc_id) AS rn
-      FROM scored)
+      FROM qs)
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(*) FILTER (rn <= {_D51_CAP}) AS BIGINT) AS n_kept,
@@ -4039,13 +3984,7 @@ _D51_CAP = 15
     "values are engine-portable.",
 )
 def d51_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    scored = quality_scores(docs).join(docs.select("doc_id", "source"), "doc_id")
+    scored = _scored(fan_out(tbl(spark, sf_dir, "documents")), "source")
     w = Window.partitionBy("source").orderBy(F.col("logit").desc(), "doc_id")
     ranked = scored.select(
         "source", "doc_id", "logit", F.row_number().over(w).alias("rn")
@@ -4062,8 +4001,6 @@ def d51_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- classifier train-fit evaluation -----------------------------------------
 def _d52_oracle(n_rounds: int = _D49_ROUNDS, eta: float = _D49_ETA) -> str:
-    from goodreads_pyspark_spark.functions.logistic import DSUM_SQL
-
     return f"""{_d49_cte_chain(n_rounds, eta)},
     zf AS (SELECT doc_id, {DSUM_SQL.format(e="w * x")} AS z
            FROM x JOIN w{n_rounds} USING (b) GROUP BY doc_id),
@@ -4103,8 +4040,6 @@ def _d52_oracle(n_rounds: int = _D49_ROUNDS, eta: float = _D49_ETA) -> str:
     "confusion rollup is a single-row aggregate.",
 )
 def d52_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.logistic import DSUM_SQL
-
     docs = tbl(spark, sf_dir, "documents")
     labels = docs.select(
         "doc_id", F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y")
@@ -4128,7 +4063,7 @@ def d52_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(y1.cast("int")).cast("bigint").alias("n_pos"),
         )
     )
-    out = conf.select(
+    return conf.select(
         "tp",
         "fp",
         "tn",
@@ -4138,9 +4073,7 @@ def d52_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "accuracy"
         ),
         (F.col("n_pos").cast("double") / F.col("n_scored")).alias("base_rate"),
-    ).localCheckpoint(eager=True)
-    x.unpersist()
-    return out
+    )
 
 
 # --- UniMax capped budget allocation -----------------------------------------
@@ -4152,28 +4085,10 @@ _D53_B_NUM, _D53_B_DEN = 9, 10
 
 
 def _d53_oracle(n_rounds: int = _D53_ROUNDS) -> str:
-    rounds = []
-    for r in range(1, n_rounds + 1):
-        p = r - 1
-        rounds.append(f"""
-    m{r} AS (SELECT CAST(COUNT(*) FILTER (a < cap) AS BIGINT) AS n_act,
-                  b.budget - CAST(SUM(a) AS BIGINT) AS rem
-           FROM s{p} CROSS JOIN b GROUP BY b.budget),
-    s{r} AS MATERIALIZED (
-      SELECT source, n_tokens, cap,
-             a + CASE WHEN a < cap AND n_act > 0
-                      THEN LEAST(rem // n_act, cap - a) ELSE 0 END AS a
-      FROM s{p} CROSS JOIN m{r})""")
     return f"""
-    WITH tok AS (
-      SELECT source,
-             CAST(SUM(len(list_filter(regexp_split_to_array(lower(text),
-                  '[^a-z0-9]+'), x -> x <> ''))) AS BIGINT) AS n_tokens
-      FROM documents GROUP BY source),
-    b AS (SELECT (SUM(n_tokens) * {_D53_B_NUM}) // {_D53_B_DEN} AS budget
-          FROM tok),
-    s0 AS (SELECT source, n_tokens, n_tokens AS cap,
-                  CAST(0 AS BIGINT) AS a FROM tok),{",".join(rounds)}
+    WITH nt AS (SELECT source, len({_TOKS}) AS n_tok FROM documents),
+    {_sql_volumes("nt")},
+    {_sql_unimax("ps", n_rounds)}
     SELECT source, n_tokens, CAST(a AS BIGINT) AS alloc_tokens,
            a = cap AS saturated,
            CAST(a AS DOUBLE) / n_tokens AS epochs
@@ -4201,56 +4116,9 @@ def _d53_oracle(n_rounds: int = _D53_ROUNDS) -> str:
     "one-row broadcast totals — the d36/d18 mix-report discipline.",
 )
 def d53_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import tokens
-
     docs = tbl(spark, sf_dir, "documents")
-    tok = (
-        docs.select("source", F.size(tokens("text")).alias("nt"))
-        .groupBy("source")
-        .agg(F.sum("nt").cast("bigint").alias("n_tokens"))
-    )
-    b = tok.agg(
-        F.expr(f"(SUM(n_tokens) * {_D53_B_NUM}) div {_D53_B_DEN}")
-        .cast("bigint")
-        .alias("budget")
-    )
-    s = tok.select(
-        "source", "n_tokens", F.col("n_tokens").alias("cap"),
-        F.lit(0).cast("bigint").alias("a"),
-    ).localCheckpoint(eager=True)
-    for _ in range(_D53_ROUNDS):
-        m = (
-            s.crossJoin(F.broadcast(b))
-            .agg(
-                F.sum((F.col("a") < F.col("cap")).cast("int"))
-                .cast("bigint")
-                .alias("n_act"),
-                (F.first("budget") - F.sum("a")).cast("bigint").alias("rem"),
-            )
-        )
-        s = (
-            s.crossJoin(F.broadcast(m))
-            .select(
-                "source",
-                "n_tokens",
-                "cap",
-                (
-                    F.col("a")
-                    + F.when(
-                        (F.col("a") < F.col("cap")) & (F.col("n_act") > 0),
-                        F.least(
-                            F.expr("rem div n_act"), F.col("cap") - F.col("a")
-                        ),
-                    ).otherwise(F.lit(0))
-                )
-                .cast("bigint")
-                .alias("a"),
-            )
-        )
-    # 4 rounds of lazy lineage over a domain-bounded (per-source) frame is
-    # trivial — no per-round truncation needed (unlike the corpus-sized
-    # Pregel loops); the one checkpoint above pins the token counts.
-    return s.select(
+    ps = _volumes(docs.select("source", F.size(tokens("text")).alias("n_tok")))
+    return _unimax(ps).select(
         "source",
         "n_tokens",
         F.col("a").alias("alloc_tokens"),
@@ -4271,7 +4139,7 @@ _D54_NUM, _D54_DEN = 1, 2
     WITH {_SHINGLE_CTES},
     src AS (SELECT doc_id, source FROM documents),
     ss AS (SELECT s.source,
-                  ('0x' || substr(md5(sh.sh), 1, 15))::BIGINT AS sh,
+                  {_sql_h60("sh.sh")} AS sh,
                   sh.doc_id
            FROM sh JOIN src s USING (doc_id)),
     per_source AS (SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
@@ -4309,8 +4177,6 @@ _D54_NUM, _D54_DEN = 1, 2
     "quadratic, no windows.",
 )
 def d54_boilerplate_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
-
     docs = tbl(spark, sf_dir, "documents")
     sh = shingle_rows(docs, "doc_id", "text", 3, out_id="doc_id")
     # Hash each shingle to a portable 60-bit int BEFORE anything shuffles:
@@ -4371,80 +4237,21 @@ def _d55_oracle(n_rounds: int = _D53_ROUNDS) -> str:
     data-card oracle (the c03 composition precedent): volumes, exact-dup
     rate, per-lang quality-tercile head share, length-histogram drift,
     tempered weight/share, and the UniMax capped allocation."""
-    rounds = []
-    for r in range(1, n_rounds + 1):
-        p = r - 1
-        rounds.append(f"""
-    m{r} AS (SELECT CAST(COUNT(*) FILTER (a < cap) AS BIGINT) AS n_act,
-                  b.budget - CAST(SUM(a) AS BIGINT) AS rem
-           FROM s{p} CROSS JOIN b GROUP BY b.budget),
-    s{r} AS MATERIALIZED (
-      SELECT source, n_tokens, cap,
-             a + CASE WHEN a < cap AND n_act > 0
-                      THEN LEAST(rem // n_act, cap - a) ELSE 0 END AS a
-      FROM s{p} CROSS JOIN m{r})""")
     return f"""
-    WITH base AS (
-      SELECT doc_id, source, lang, len({_TOKS}) AS n_tok,
-             md5(lower(trim(text))) AS h
-      FROM documents),
-    ps AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-                  CAST(SUM(n_tok) AS BIGINT) AS n_tokens
-           FROM base GROUP BY source),
-    keep AS (SELECT h, MIN(doc_id) AS keep_id FROM base GROUP BY h),
+    WITH {_sql_base("doc_id, source, lang")},
+    {_sql_volumes("base")},
+    {_sql_keep("base")},
     dups AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS dup_docs
              FROM base JOIN keep USING (h)
              WHERE doc_id <> keep_id GROUP BY source),
-    tk AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    feats AS (
-      SELECT doc_id,
-             unnest(list_concat(t,
-               [t[i] || '_' || t[i + 1] for i in range(1, len(t))])) AS f
-      FROM tk),
-    wts AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('qw1_' || CAST(
-                ('0x' || substr(md5('qv1_' || f), 1, 8))::BIGINT % 4096
-              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000 AS w
-      FROM feats),
-    qagg AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-             CAST(SUM(w) AS BIGINT) AS sum_w
-      FROM wts GROUP BY doc_id),
-    scoredq AS (
-      SELECT b.doc_id, b.source, b.lang,
-             CASE WHEN COALESCE(n_feats, 0) = 0 THEN 0.0
-                  ELSE sum_w / (n_feats * 1000.0) END AS logit
-      FROM base b LEFT JOIN qagg USING (doc_id)),
-    tiled AS (
-      SELECT source,
-             NTILE(3) OVER (PARTITION BY lang
-                            ORDER BY logit DESC, doc_id) AS tile
-      FROM scoredq),
+    {_sql_quality("d.doc_id, d.source, d.lang")},
+    {_sql_tiles("qs")},
     heads AS (SELECT source,
                      CAST(COUNT(*) FILTER (tile = 1) AS BIGINT) AS n_head
               FROM tiled GROUP BY source),
-    b2 AS (SELECT source, LEAST(n_tok // {_D33_BIN}, {_D33_MAX_BIN}) AS bin
-           FROM base),
-    sc AS (SELECT source, bin, COUNT(*) AS c FROM b2 GROUP BY 1, 2),
-    cc AS (SELECT bin, COUNT(*) AS cb FROM b2 GROUP BY 1),
-    tot AS (SELECT COUNT(*) AS n FROM b2),
-    drift AS (
-      SELECT ps.source,
-             CAST(SUM(ABS(COALESCE(sc.c, 0) * tot.n - cc.cb * ps.n_docs))
-                  AS DOUBLE) / (2.0 * ps.n_docs * (SELECT n FROM tot))
-               AS tv_distance
-      FROM ps CROSS JOIN tot
-      JOIN cc ON TRUE
-      LEFT JOIN sc ON sc.source = ps.source AND sc.bin = cc.bin
-      GROUP BY ps.source, ps.n_docs, tot.n),
-    wtd AS (SELECT source, CAST(FLOOR(SQRT(n_tokens)) AS BIGINT) AS w
-            FROM ps),
-    swt AS (SELECT SUM(w) AS sw FROM wtd),
-    b AS (SELECT (SUM(n_tokens) * {_D53_B_NUM}) // {_D53_B_DEN} AS budget
-          FROM ps),
-    s0 AS (SELECT source, n_tokens, n_tokens AS cap,
-                  CAST(0 AS BIGINT) AS a FROM ps),{",".join(rounds)}
+    {_sql_drift("base")},
+    {_sql_tempered("ps")},
+    {_sql_unimax("ps", n_rounds)}
     SELECT ps.source, ps.n_docs, ps.n_tokens,
            CAST(COALESCE(dups.dup_docs, 0) AS BIGINT) AS dup_docs,
            CAST(COALESCE(dups.dup_docs, 0) AS DOUBLE) / ps.n_docs AS dup_rate,
@@ -4477,137 +4284,44 @@ def _d55_oracle(n_rounds: int = _D53_ROUNDS) -> str:
     "(d33's integer-exact total-variation distance), and BOTH mix "
     "weights — d36's sqrt-tempered weight/share and d53's UniMax "
     "capped-waterfilling allocation with epochs consumed. Scale "
-    "shape: ONE tokenize+hash pass collapses the corpus to a narrow "
-    "(id, source, lang, n_tok, hash) frame that is cached and reused "
-    "by every branch (the text is never rescanned except by the d38 "
-    "feature explode, which is its own map-side pass); every "
+    "shape: one narrow (id, source, lang, n_tok, hash) projection "
+    "feeds every branch (the Spark side composes the d33, d36, d47 and "
+    "d53 helpers rather than copying them; the d38 feature explode is "
+    "its own map-side pass); every "
     "downstream join is per-source (domain-bounded) or per-bin "
     "(constant), the tercile cut is the d47 per-language window, and "
     "the waterfilling rounds are arithmetic over the tiny per-source "
     "frame with one-row broadcast totals.",
 )
 def d55_datamix_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.quality_model import quality_scores
-    from goodreads_pyspark_spark.functions.text import tokens
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
-    base = docs.select(
-        "doc_id",
-        "source",
-        "lang",
-        F.size(tokens("text")).alias("n_tok"),
-        F.md5(F.lower(F.trim(F.col("text")))).alias("h"),
-    ).cache()
-
-    ps = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_tok").cast("bigint").alias("n_tokens"),
-    )
-    keep = base.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
+    base = _base(docs, "source", "lang")
+    ps = _volumes(base)
     dups = (
-        base.join(keep, "h")
+        base.join(_keep(base), "h")
         .filter(F.col("doc_id") != F.col("keep_id"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("dup_docs"))
     )
-
-    from pyspark.sql import Window
-
-    scoredq = quality_scores(docs).join(
-        base.select("doc_id", "source", "lang"), "doc_id"
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("logit").desc(), "doc_id")
     heads = (
-        scoredq.select("source", F.ntile(3).over(w).alias("tile"))
+        _tiles(_scored(docs, "source", "lang"))
         .groupBy("source")
-        .agg(
-            F.sum((F.col("tile") == 1).cast("int")).cast("bigint").alias("n_head")
-        )
+        .agg(F.sum((F.col("tile") == 1).cast("int")).cast("bigint").alias("n_head"))
     )
-
-    b2 = base.select(
-        "source",
-        F.least(F.floor(F.col("n_tok") / _D33_BIN), F.lit(_D33_MAX_BIN)).alias(
-            "bin"
-        ),
-    )
-    sc = b2.groupBy("source", "bin").agg(F.count(F.lit(1)).alias("c"))
-    cc = b2.groupBy("bin").agg(F.count(F.lit(1)).alias("cb"))
-    tot = b2.agg(F.count(F.lit(1)).alias("n"))
-    drift = (
-        ps.select("source", "n_docs")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(cc))
-        .join(sc, ["source", "bin"], "left")
-        .groupBy("source", "n_docs", "n")
-        .agg(
-            F.sum(
-                F.abs(
-                    F.coalesce("c", F.lit(0)) * F.col("n")
-                    - F.col("cb") * F.col("n_docs")
-                )
-            ).alias("num")
-        )
-        .select(
-            "source",
-            (
-                F.col("num").cast("double") / (2.0 * F.col("n_docs") * F.col("n"))
-            ).alias("tv_distance"),
-        )
-    )
-
-    wtd = ps.select(
-        "source", F.floor(F.sqrt(F.col("n_tokens"))).cast("bigint").alias("w")
-    )
-    swt = wtd.agg(F.sum("w").alias("sw"))
-    budget = ps.agg(
-        F.expr(f"(SUM(n_tokens) * {_D53_B_NUM}) div {_D53_B_DEN}")
-        .cast("bigint")
-        .alias("budget")
-    )
-    s = ps.select(
-        "source", "n_tokens", F.col("n_tokens").alias("cap"),
-        F.lit(0).cast("bigint").alias("a"),
-    ).localCheckpoint(eager=True)
-    for _ in range(_D53_ROUNDS):
-        m = s.crossJoin(F.broadcast(budget)).agg(
-            F.sum((F.col("a") < F.col("cap")).cast("int"))
-            .cast("bigint")
-            .alias("n_act"),
-            (F.first("budget") - F.sum("a")).cast("bigint").alias("rem"),
-        )
-        s = s.crossJoin(F.broadcast(m)).select(
-            "source",
-            "n_tokens",
-            "cap",
-            (
-                F.col("a")
-                + F.when(
-                    (F.col("a") < F.col("cap")) & (F.col("n_act") > 0),
-                    F.least(F.expr("rem div n_act"), F.col("cap") - F.col("a")),
-                ).otherwise(F.lit(0))
-            )
-            .cast("bigint")
-            .alias("a"),
-        )
-    unimax = s.select("source", F.col("a").alias("ualloc"))
-
+    unimax = _unimax(ps).select("source", F.col("a").alias("ualloc"))
+    dup_docs = F.coalesce("dup_docs", F.lit(0)).cast("bigint")
     return (
         ps.join(dups, "source", "left")
         .join(heads, "source")
-        .join(drift, "source")
-        .join(wtd, "source")
+        .join(_length_drift(base).select("source", "tv_distance"), "source")
+        .join(_tempered(ps).select("source", "w", "sw"), "source")
         .join(unimax, "source")
-        .crossJoin(F.broadcast(swt))
         .select(
             "source",
             "n_docs",
             "n_tokens",
-            F.coalesce("dup_docs", F.lit(0)).cast("bigint").alias("dup_docs"),
-            (
-                F.coalesce("dup_docs", F.lit(0)).cast("double") / F.col("n_docs")
-            ).alias("dup_rate"),
+            dup_docs.alias("dup_docs"),
+            (dup_docs.cast("double") / F.col("n_docs")).alias("dup_rate"),
             (F.col("n_head").cast("double") / F.col("n_docs")).alias("head_share"),
             "tv_distance",
             F.col("w").alias("temper_weight"),
@@ -4622,23 +4336,19 @@ def d55_datamix_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- data-card snapshot diff -------------------------------------------------
+#: The survivor of a content-hash group before the admission batch.
+_SQL_KEEP_PREV = ", MIN(CASE WHEN NOT is_new THEN doc_id END) AS keep_prev"
+
 @query(
     "d56_datacard_snapshot_diff",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id, source, len({_TOKS}) AS n_tok,
-             md5(lower(trim(text))) AS h,
-             doc_id % {_C05_MOD} = {_C05_REM} AS is_new
-      FROM documents),
-    keys AS (
-      SELECT h, MIN(doc_id) AS keep_now,
-             MIN(CASE WHEN NOT is_new THEN doc_id END) AS keep_prev
-      FROM base GROUP BY h),
+    WITH {_sql_base(f"doc_id, source, doc_id % {_C05_MOD} = {_C05_REM} AS is_new")},
+    {_sql_keep("base", _SQL_KEEP_PREV)},
     flagged AS (
       SELECT b.source, b.n_tok, b.is_new,
-             b.doc_id <> k.keep_now AS dup_now,
+             b.doc_id <> k.keep_id AS dup_now,
              (NOT b.is_new) AND b.doc_id <> k.keep_prev AS dup_prev
-      FROM base b JOIN keys k USING (h))
+      FROM base b JOIN keep k USING (h))
     SELECT source,
            CAST(COUNT(*) FILTER (NOT is_new) AS BIGINT) AS n_docs_prev,
            CAST(COUNT(*) AS BIGINT) AS n_docs_now,
@@ -4665,26 +4375,16 @@ def d55_datamix_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     "division each.",
 )
 def d56_datacard_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import tokens
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    base = docs.select(
-        "doc_id",
-        "source",
-        F.size(tokens("text")).alias("n_tok"),
-        F.md5(F.lower(F.trim(F.col("text")))).alias("h"),
-        (F.col("doc_id") % _C05_MOD == _C05_REM).alias("is_new"),
-    ).cache()  # feeds both the keys agg and the flagged join: one tokenize+hash pass
-    keys = base.groupBy("h").agg(
-        F.min("doc_id").alias("keep_now"),
-        F.min(F.when(~F.col("is_new"), F.col("doc_id"))).alias("keep_prev"),
+    docs = fan_out(tbl(spark, sf_dir, "documents")).withColumn(
+        "is_new", F.col("doc_id") % _C05_MOD == _C05_REM
     )
-    flagged = base.join(keys, "h").select(
+    base = _base(docs, "source", "is_new")
+    keep = _keep(base, F.min(F.when(~F.col("is_new"), F.col("doc_id"))).alias("keep_prev"))
+    flagged = base.join(keep, "h").select(
         "source",
         "n_tok",
         "is_new",
-        (F.col("doc_id") != F.col("keep_now")).alias("dup_now"),
+        (F.col("doc_id") != F.col("keep_id")).alias("dup_now"),
         ((~F.col("is_new")) & (F.col("doc_id") != F.col("keep_prev"))).alias(
             "dup_prev"
         ),
@@ -4748,8 +4448,6 @@ _D57_AUG = (
 
 
 def _d57_oracle() -> str:
-    from goodreads_pyspark_spark.functions.pii import PII_CLASSES, sql_redact
-
     counts = ",\n             ".join(
         f"len(regexp_extract_all(t, '{pat}')) AS c_{name}"
         for name, pat, _tok in PII_CLASSES
@@ -4770,7 +4468,7 @@ def _d57_oracle() -> str:
              AS n_docs_flagged,
            {sums},
            CAST(SUM(length(t) - length(r)) AS BIGINT) AS chars_redacted,
-           CAST(CAST(SUM(('0x' || substr(md5(r), 1, 15))::BIGINT)
+           CAST(CAST(SUM({_sql_h60("r")})
                      AS DECIMAL(38,0)) AS VARCHAR) AS redacted_checksum
     FROM hits GROUP BY source
     """
@@ -4793,13 +4491,6 @@ def _d57_oracle() -> str:
     "per-source 1-row rollup.",
 )
 def d57_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.pii import (
-        PII_CLASSES,
-        pii_count,
-        redact_pii,
-    )
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
     aug = F.expr(_D57_AUG)
     hits = docs.select(
@@ -4839,12 +4530,9 @@ _D58_B = 64
 
 def _d58_oracle() -> str:
     return f"""
-    WITH tk AS (SELECT doc_id, source, lang, unnest({_TOKS}) AS tok
-                FROM documents),
-    bk AS (SELECT doc_id, source,  lang,
-                  ('0x' || substr(md5('dsir1_' || tok), 1, 8))::BIGINT % {_D58_B}
-                    AS b
-           FROM tk),
+    WITH {_sql_tk("doc_id, source, lang")},
+    bk AS (SELECT doc_id, source, lang, {_sql_bucket("'dsir1_' || tok", _D58_B)} AS b
+           FROM (SELECT doc_id, source, lang, unnest(t) AS tok FROM tk)),
     rb AS (SELECT b, COUNT(*) AS rcnt FROM bk GROUP BY b),
     tb AS (SELECT b, COUNT(*) AS tcnt FROM bk WHERE lang = 'en' GROUP BY b),
     tot AS (SELECT (SELECT COUNT(*) FROM bk) AS rtot,
@@ -4893,21 +4581,10 @@ def _d58_oracle() -> str:
     "DECIMAL accumulators, noted inline.",
 )
 def d58_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import tokens
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
-    docs = fan_out(tbl(spark, sf_dir, "documents"))
-    tk = docs.select(
-        "doc_id", "source", "lang", F.explode(tokens("text")).alias("tok")
+    bucket = portable_bucket(F.concat(F.lit("dsir1_"), "term"), buckets=_D58_B)
+    bk = _terms(spark, sf_dir, "source", "lang").select(
+        "doc_id", "source", "lang", bucket.alias("b")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("dsir1_"), F.col("tok"))), 1, 8), 16, 10)
-        .cast("bigint")
-        % _D58_B
-    )
-    # one cached token->bucket pass feeds the raw counts, the target
-    # counts, and the per-doc counts
-    bk = tk.select("doc_id", "source", "lang", bucket.alias("b")).cache()
     rb = bk.groupBy("b").agg(F.count(F.lit(1)).alias("rcnt"))
     tbl_t = (
         bk.filter(F.col("lang") == "en")
@@ -4957,10 +4634,7 @@ _D59_M = float(1 << 60)
 
 def _d59_oracle() -> str:
     return f"""
-    WITH hs AS (SELECT DISTINCT source,
-                       ('0x' || substr(md5(lower(trim(text))), 1, 15))::BIGINT
-                         AS h
-                FROM documents),
+    WITH hs AS (SELECT DISTINCT source, {_SQL_H60_TEXT} AS h FROM documents),
     sc AS (SELECT source, COUNT(*) AS cnt FROM hs GROUP BY source),
     sk AS (SELECT source, h FROM (
              SELECT source, h,
@@ -5021,17 +4695,8 @@ def _d59_oracle() -> str:
     "estimates — which is the point of KMV.",
 )
 def d59_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import norm_text
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-    from goodreads_pyspark_spark.operators.relational import top_k_per_group
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
-    h = F.conv(F.substring(F.md5(norm_text("text")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-    # one distinct (source, hash) pass feeds counts, sketches, and the
-    # exact-intersection differential
-    hs = docs.select("source", h.alias("h")).distinct().cache()
+    hs = docs.select("source", _text_h60().alias("h")).distinct()
     sc = hs.groupBy("source").agg(F.count(F.lit(1)).alias("cnt"))
     sk = top_k_per_group(hs, ["source"], _D59_K, [F.col("h")])
     pairs = (
@@ -5096,14 +4761,11 @@ _D60_J = 3
 
 
 def _d60_pos_sql(j: int, h_expr: str) -> str:
-    return (
-        f"('0x' || substr(md5('bl{j}_' || CAST({h_expr} AS STRING)), 1, 8))"
-        f"::BIGINT % m"
-    )
+    return _sql_bucket(f"'bl{j}_' || CAST({h_expr} AS STRING)", "m")
 
 
 def _d60_oracle() -> str:
-    h = "('0x' || substr(md5(lower(trim(text))), 1, 15))::BIGINT"
+    h = _SQL_H60_TEXT
     pos_rows = "\n        UNION ALL\n".join(
         f"        SELECT {_d60_pos_sql(j, 'h')} AS pos FROM corpus"
         f" CROSS JOIN mt"
@@ -5174,19 +4836,13 @@ def _d60_oracle() -> str:
     "gates.",
 )
 def d60_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.functions.text import norm_text
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
-    h = F.conv(F.substring(F.md5(norm_text("text")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
     hd = docs.select(
         "doc_id",
         "source",
-        h.alias("h"),
+        _text_h60().alias("h"),
         (F.col("doc_id") % _C05_MOD == _C05_REM).alias("is_batch"),
-    ).cache()  # one hash pass feeds filter build, probe, and differential
+    )
     corpus = hd.filter(~F.col("is_batch")).select("h")
     batch = hd.filter(F.col("is_batch")).select("doc_id", "source", "h")
     # data-sized filter: m = bits_per_key x corpus keys, one broadcast row
@@ -5194,18 +4850,9 @@ def d60_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(_D60_BITS_PER_KEY) * F.count(F.lit(1))).alias("m")
     )
 
-    def pos(j: int) -> F.Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"bl{j}_"), F.col("h").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % F.col("m")
+    def pos(j: int) -> Column:
+        return portable_bucket(
+            F.concat(F.lit(f"bl{j}_"), F.col("h").cast("string")), buckets=F.col("m")
         )
 
     corpus_m = corpus.crossJoin(F.broadcast(mt))
@@ -5301,8 +4948,6 @@ def _c06_oracle() -> str:
     "corpus row count.",
 )
 def c06_disposition_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.pipelines.sampling import portable_bucket
-
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
     stages = _c_pipeline_stages(spark, sf_dir)
 
@@ -5410,15 +5055,14 @@ _D61_FP = 1_000_000_000
 
 def _d61_oracle() -> str:
     return f"""
-    WITH tk AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
-    uh AS (SELECT ('0x' || substr(md5(unnest(t)), 1, 15))::BIGINT AS h1
-           FROM tk),
+    WITH {_sql_tk("doc_id, source")},
+    uh AS (SELECT {_sql_h60("tok")} AS h1
+           FROM (SELECT unnest(t) AS tok FROM tk)),
     uc AS (SELECT h1, CAST(COUNT(*) AS BIGINT) AS cu FROM uh GROUP BY h1),
     vv AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM uc),
     bg AS (SELECT doc_id, source,
-                  ('0x' || substr(md5(t[i] || ' ' || t[i+1]), 1, 15))::BIGINT
-                    AS hb,
-                  ('0x' || substr(md5(t[i]), 1, 15))::BIGINT AS h1
+                  {_sql_h60("t[i] || ' ' || t[i+1]")} AS hb,
+                  {_sql_h60("t[i]")} AS h1
            FROM (SELECT doc_id, source, t, unnest(range(1, len(t))) AS i
                  FROM tk WHERE len(t) >= 2)),
     db AS (SELECT doc_id, source, hb, h1, CAST(COUNT(*) AS BIGINT) AS c
@@ -5461,37 +5105,30 @@ def _d61_oracle() -> str:
     "beat the corpus token-weighted mean — the head/tail split CCNet "
     "buckets on. Distinct from d32 (token-rank fluency): this scores "
     "SEQUENTIAL coherence, so shuffled-word gibberish with a fluent "
-    "vocabulary still ranks tail. Scale shape: ONE cached tokenize "
-    "pass feeds unigram counts, bigram counts and per-doc rows; all "
+    "vocabulary still ranks tail. Scale shape: one tokenize "
+    "projection feeds unigram counts, bigram counts and per-doc rows; all "
     "joins are on hashed 8-byte keys (the d54 shuffle discipline); the "
     "score table is bigram-type-sized and the corpus mean is a 1-row "
     "broadcast. Bigint headroom: 1e9*(cb+1) needs cb < 9.2e9 — at "
     "trillion-token scale lift the products into decimal(38,0).",
 )
 def d61_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goodreads_pyspark_spark.operators.partitioning import fan_out
-
     docs = fan_out(tbl(spark, sf_dir, "documents"))
-    h60 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
-    # ONE tokenize pass (cached) feeds unigram counts, bigram rows and
-    # the per-doc aggregation — the corpus-linear cost runs once.
-    tk = docs.select("doc_id", "source", tokens("text").alias("t")).cache()
+    tk = docs.select("doc_id", "source", tokens("text").alias("t"))
     uc = (
         tk.select(F.explode("t").alias("tok"))
-        .select(h60(F.col("tok")).alias("h1"))
+        .select(_h60(F.col("tok")).alias("h1"))
         .groupBy("h1")
         .agg(F.count(F.lit(1)).alias("cu"))
     )
     idx = F.sequence(F.lit(1), F.size("t") - 1)
     pair = lambda i: F.struct(  # noqa: E731
-        h60(
+        _h60(
             F.concat_ws(
                 " ", F.element_at("t", i), F.element_at("t", i + F.lit(1))
             )
         ).alias("hb"),
-        h60(F.element_at("t", i)).alias("h1"),
+        _h60(F.element_at("t", i)).alias("h1"),
     )
     bg = (
         tk.filter(F.size("t") >= 2)
@@ -5516,7 +5153,6 @@ def d61_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("c") * F.col("s")).cast("bigint").alias("ssum"),
             F.sum("c").cast("bigint").alias("nbg"),
         )
-        .cache()  # feeds the corpus mean AND the per-source rollup
     )
     fl = dl.select("doc_id", "source", F.expr("ssum div nbg").alias("fp"))
     cm = dl.agg(F.expr("sum(ssum) div sum(nbg)").alias("mean_fp"))
@@ -6323,8 +5959,6 @@ def d68_incremental_containment_admission(
 def s15_streaming_containment_admission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from goodreads_pyspark_spark.streaming import drain, staged_stream, state_partitions
-
     docs = tbl(spark, sf_dir, "documents")
     incoming = docs.filter(_BATCH)
     standing = _d68_standing_index(spark, sf_dir)
@@ -6500,7 +6134,7 @@ def _d70_oracle() -> str:
     "d70_equidepth_sketch_edges",
     oracle=_d70_oracle(),
     doc="The 100 TB drop-in for d66's exact equi-depth edges, MEASURED "
-    "instead of asserted (VERDICT r10 item 4): the same three quantile "
+    "instead of asserted: the same three quantile "
     "edges computed twice — exact value-at-rank from the size histogram "
     "(dedup/ensemble.py equi_depth_edges, oracle-replayable) and via "
     "percentile_approx's Greenwald-Khanna sketch at accuracy "
@@ -6600,8 +6234,8 @@ def _d71_oracle() -> str:
     "d71_containment_threshold_sweep",
     oracle=_d71_oracle(),
     doc="Admission-threshold sweep for incremental containment (the d69 "
-    "tuning discipline applied to d68's operating point, VERDICT r10 "
-    f"item 8): thresholds {_D71_THRESHOLDS}% each get their own "
+    "tuning discipline applied to d68's operating point): "
+    f"thresholds {_D71_THRESHOLDS}% each get their own "
     "probe-partition floor (containment(q) >= t forces |x| >= t*|q|, "
     "so lower t probes deeper and candidate volume grows) over the "
     "SAME standing index and ONE incoming signature table — banding "
@@ -6753,7 +6387,7 @@ def _rejected_checksum(matches: DataFrame) -> str:
     oracle=_io18_oracle(),
     doc="Containment standing-state lifecycle: build -> WAP-stage -> "
     "audit -> publish -> COLD reload probe (io16's index-publish "
-    "discipline applied to d68's standing state, VERDICT r10 item 3): "
+    "discipline applied to d68's standing state): "
     "the three tables a production ingest daemon persists across "
     "batches — the size-partitioned banding index, the hot-shingle "
     "set, the df-filtered corpus shingle table, and the pre-cap bucket "
@@ -6780,10 +6414,6 @@ def _rejected_checksum(matches: DataFrame) -> str:
 def io18_containment_index_publish(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     docs = tbl(spark, sf_dir, "documents")
     standing = _d68_standing_index(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="io18_standing_")
@@ -6935,8 +6565,7 @@ def _io21_oracle() -> str:
     "io21_containment_index_fold_in",
     oracle=_io21_oracle(),
     doc="Standing-index MAINTENANCE — the step that closes the "
-    "production ingest loop the d63-d68/io18 arc built (VERDICT r11 "
-    "item 2): probe the batch against the standing state, derive the "
+    "production ingest loop the d63-d68/io18 arc built: probe the batch against the standing state, derive the "
     "admitted set, then FOLD the admitted docs into the index "
     "(dedup/ensemble.py extend_containment_standing) instead of "
     "rebuilding from scratch — band entries and bucket counts append "
@@ -7139,13 +6768,11 @@ def _io22_oracle() -> str:
     "iterations), while the corpus-sized st and tiny hot stay lazy "
     "delta-chains over the kernel's checkpointed base — copying the "
     "full shingle table per round cost more than their filtered "
-    "scans ever save (r13).",
+    "scans ever save.",
 )
 def io22_containment_ingest_loop(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = tbl(spark, sf_dir, "documents")
     all_sh = shingle_rows(docs, shingle_n=2, out_id="id").localCheckpoint()
     standing = _d68_standing_index(spark, sf_dir)

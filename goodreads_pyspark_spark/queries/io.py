@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.queries import query
-from goodreads_pyspark_spark.queries._helpers import tbl
+from goodreads_pyspark_spark.queries._helpers import session_confs, tbl
 
 _AGG = """
     SELECT '{fmt}' AS fmt, source,
@@ -25,6 +25,12 @@ _AGG = """
            CAST(sum(length(text)) AS BIGINT) AS n_chars
     FROM documents GROUP BY source
 """
+
+#: Session confs that disable broadcast joins, for the io11-io13 plan gates.
+_NO_BROADCAST = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+}
 
 
 @query(
@@ -571,58 +577,42 @@ def io11_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from goodreads_pyspark_spark.sources.sinks import write_parquet_table
 
-    # a crashed prior run can leave the managed-table LOCATION without its
-    # catalog entry; saveAsTable(overwrite) then refuses — clean both
+    names = ("io11_orders_bucketed", "io11_customer_bucketed")
     warehouse = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    for t in ("io11_orders_bucketed", "io11_customer_bucketed"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    write_parquet_table(
-        tbl(spark, sf_dir, "orders"),
-        "io11_orders_bucketed",
-        bucket_by=(8, ["o_custkey"]),
-    )
-    write_parquet_table(
-        tbl(spark, sf_dir, "customer"),
-        "io11_customer_bucketed",
-        bucket_by=(8, ["c_custkey"]),
-    )
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+
+    def drop_tables() -> None:
+        # also the LOCATION: a crashed run can leave it without its catalog
+        # entry, and saveAsTable(overwrite) then refuses
+        for t in names:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
+
+    drop_tables()
     try:
-        joined = spark.table("io11_orders_bucketed").join(
-            spark.table("io11_customer_bucketed"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        out = joined.groupBy("o_custkey", "c_mktsegment").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        if "SortMergeJoin" not in plan:
-            raise AssertionError("bucketed join did not pick SMJ:\n" + plan[:2000])
-        if "Exchange" in plan:
-            raise AssertionError(
-                "bucketed co-located join still shuffles:\n" + plan[:2000]
+        for name, src, key in zip(names, ("orders", "customer"), ("o_custkey", "c_custkey")):
+            write_parquet_table(tbl(spark, sf_dir, src), name, bucket_by=(8, [key]))
+        with session_confs(spark, _NO_BROADCAST):
+            joined = spark.table(names[0]).join(
+                spark.table(names[1]), F.col("o_custkey") == F.col("c_custkey")
             )
-        # force execution while the no-broadcast confs are still in place
-        out = out.localCheckpoint(eager=True)
+            out = joined.groupBy("o_custkey", "c_mktsegment").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
+                .cast("double")
+                .alias("total_price"),
+            )
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            if "SortMergeJoin" not in plan:
+                raise AssertionError("bucketed join did not pick SMJ:\n" + plan[:2000])
+            if "Exchange" in plan:
+                raise AssertionError(
+                    "bucketed co-located join still shuffles:\n" + plan[:2000]
+                )
+            # run while the no-broadcast confs are in place and before the
+            # tables are dropped
+            return out.localCheckpoint(eager=True)
     finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+        drop_tables()
 
 
 @query(
@@ -654,27 +644,16 @@ def io11_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "defaults only arm beyond 10 GB scans).",
 )
 def io12_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0",
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB"
-    )
-    try:
+    bloom = "spark.sql.optimizer.runtime.bloomFilter."
+    with session_confs(
+        spark,
+        {
+            **_NO_BROADCAST,
+            bloom + "enabled": "true",
+            bloom + "applicationSideScanSizeThreshold": "0",
+            bloom + "creationSideThreshold": "100MB",
+        },
+    ):
         li = tbl(spark, sf_dir, "lineitem")
         part = tbl(spark, sf_dir, "part")
         dim = part.filter(F.col("p_brand") == "Brand#1").select("p_partkey")
@@ -698,15 +677,8 @@ def io12_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "runtime bloom filter was not injected into the fact scan:\n"
                 + plan[:3000]
             )
-        # force execution while the no-broadcast/bloom confs are in place
-        out = out.localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+        # run while the no-broadcast/bloom confs are in place
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -753,28 +725,18 @@ def io13_aqe_skew_join_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
 
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.enabled",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.forceOptimizeSkewedJoin",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512b")
-    spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    try:
+    skew = "spark.sql.adaptive.skewJoin."
+    with session_confs(
+        spark,
+        {
+            **_NO_BROADCAST,
+            skew + "enabled": "true",
+            skew + "skewedPartitionFactor": "2",
+            skew + "skewedPartitionThresholdInBytes": "1KB",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "512b",
+            "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+        },
+    ):
         dim = sup.select(F.col("s_suppkey").alias("k"), "s_name")
         out = (
             fact.repartition(16)
@@ -791,14 +753,7 @@ def io13_aqe_skew_join_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 "AQE did not mark the hot join skewed:\n" + plan[:3000]
             )
-        out = frozen
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+        return frozen
 
 
 # --- snapshot / time-travel read over a CDC ledger (new in r7) ----------------

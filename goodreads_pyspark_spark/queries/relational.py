@@ -531,16 +531,20 @@ def q22_salted_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SURVEY.md §3.2).",
 )
 def q23_sql_facade_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tbl(spark, sf_dir, "customer").createOrReplaceTempView("q23_customer")
-    tbl(spark, sf_dir, "orders").createOrReplaceTempView("q23_orders")
-    return spark.sql("""
+    # DataFrame arguments bind as temp views that spark.sql drops once the
+    # query is analysed, so the session's catalog is left as it was.
+    return spark.sql(
+        """
         SELECT c_mktsegment, COUNT(*) AS n_rich_active
-        FROM q23_customer c
-        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM q23_customer)
-          AND EXISTS (SELECT 1 FROM q23_orders o
+        FROM {customer} c
+        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM {customer})
+          AND EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey)
         GROUP BY c_mktsegment
-    """)
+        """,
+        customer=tbl(spark, sf_dir, "customer"),
+        orders=tbl(spark, sf_dir, "orders"),
+    )
 
 
 # --- cube (grouping sets superset) ------------------------------------------
@@ -1252,17 +1256,18 @@ def q39_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle class as a plain groupBy.",
 )
 def q40_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = tbl(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("q40_orders")
-    return spark.sql("""
+    return spark.sql(
+        """
         SELECT o_orderstatus, o_orderpriority,
                CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
                     AS INT) AS gid,
                CAST(COUNT(*) AS BIGINT) AS n_orders
-        FROM q40_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                                 (o_orderstatus), (o_orderpriority))
-    """)
+        """,
+        orders=tbl(spark, sf_dir, "orders"),
+    )
 
 
 # --- column-statistics profile (data-profiling primitive) --------------------

@@ -344,10 +344,11 @@ def _dedup_docs(spark):
 
 
 def _dedup_entry_points():
-    """Every dedup/ entry point that used to cache a frame it never
-    released, as a call on the ``_dedup_docs`` frame."""
+    """Every dedup/ and pipelines/corpus.py entry point that used to cache
+    a frame it never released, as a call on the ``_dedup_docs`` frame."""
     from goodreads_pyspark_spark.dedup import decontaminate, minhash, ngram, simhash
     from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+    from goodreads_pyspark_spark.pipelines import corpus
 
     def train(d):
         return d.filter("doc_id < 20")
@@ -379,6 +380,8 @@ def _dedup_entry_points():
         "containment_pairs_from_shingles": lambda d: (
             ngram.containment_pairs_from_shingles(shingle_rows(d, out_id="id"))
         ),
+        "clean_corpus": lambda d: corpus.clean_corpus(d)[0],
+        "drop_near_duplicates": lambda d: corpus.drop_near_duplicates(d),
     }
 
 
@@ -755,6 +758,17 @@ _NEARDUP_CACHE_USERS = (
     "d28_source_overlap",
     "d34_lsh_band_tuning",
 )
+#: Corpus-quality and data-mix queries that cached an intermediate.
+_DOCUMENT_CACHE_USERS = (
+    "d31_span_scrub",
+    "d35_shingle_novelty",
+    "d55_datamix_card",
+    "d56_datacard_snapshot_diff",
+    "d58_dsir_importance",
+    "d59_kmv_source_overlap",
+    "d60_bloom_prefilter",
+    "d61_bigram_fluency",
+)
 #: Event-family queries that cached an intermediate with no handle.
 _EVENT_CACHE_USERS = (
     "s14_streaming_heavy_hitters",
@@ -771,6 +785,7 @@ _EVENT_CACHE_USERS = (
     + _GRAPH_CACHE_USERS
     + _NEARDUP_CACHE_USERS
     + _EVENT_CACHE_USERS
+    + _DOCUMENT_CACHE_USERS
     + ("h05_prf_query_expansion",),
 )
 def test_containment_query_releases_its_caches(spark, duck, name):

@@ -64,3 +64,74 @@ def test_no_query_name_is_a_prefix_of_another():
     exactly that query."""
     names = sorted(REGISTRY)
     assert not [(a, b) for a, b in zip(names, names[1:]) if b.startswith(a)]
+
+
+
+#: The session confs each plan-gated io query sets for its run.
+_SCOPED_CONFS = {
+    "io11_bucketed_colocated_join": (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    ),
+    "io12_bloom_filter_join": (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
+    ),
+    "io13_aqe_skew_join_split": (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.skewJoin.enabled",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "spark.sql.adaptive.forceOptimizeSkewedJoin",
+    ),
+}
+#: A sentinel per conf type that none of the queries sets.
+_SENTINELS = {
+    "enabled": "false",
+    "forceOptimizeSkewedJoin": "false",
+    "skewedPartitionFactor": "7",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SCOPED_CONFS))
+def test_query_restores_the_confs_it_sets(name, spark):
+    """Each conf an io plan gate sets for its run is put back: a sentinel
+    value set before the call is unchanged after it."""
+    keys = _SCOPED_CONFS[name]
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    sentinel = {k: _SENTINELS.get(k.rsplit(".", 1)[1], "12345678") for k in keys}
+    try:
+        for k, v in sentinel.items():
+            spark.conf.set(k, v)
+        REGISTRY[name].spark_fn(spark, SF_SMOKE).collect()
+        assert {k: spark.conf.get(k) for k in keys} == sentinel
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_session_confs_unsets_a_key_that_was_unset(spark):
+    """``session_confs`` puts a set key back to its value and unsets a key
+    that had no value, on the error path too."""
+    from goodreads_pyspark_spark.queries._helpers import session_confs
+
+    unset, kept = "spark.sql.test.scopedUnset", "spark.sql.test.scopedKept"
+    spark.conf.set(kept, "before")
+    try:
+        with pytest.raises(RuntimeError):
+            with session_confs(spark, {unset: "x", kept: "y"}):
+                assert spark.conf.get(unset) == "x"
+                assert spark.conf.get(kept) == "y"
+                raise RuntimeError
+        assert spark.conf.get(unset, None) is None
+        assert spark.conf.get(kept) == "before"
+    finally:
+        spark.conf.unset(kept)

@@ -427,29 +427,38 @@ def test_session_timeout_close_paths(spark, tmp_path_factory):
         "s13_streaming_approx_users",
         "s14_streaming_heavy_hitters",
         "s15_streaming_containment_admission",
+        "io11_bucketed_colocated_join",
+        "q23_sql_facade_subqueries",
+        "q40_grouping_sets",
     ],
 )
 def test_memory_sink_query_leaves_no_view(spark, duck, name):
-    """A query that drives a stream (memory sink or foreachBatch) tears
-    it all down: the catalog's table list is unchanged afterwards, no
-    streaming query is still active, no staging dir is left in the temp
-    dir, and the answer still matches the oracle."""
+    """A query that drives a stream (memory sink or foreachBatch) or
+    stages managed tables or temp views tears it all down: the catalog's
+    tables and temp views are unchanged afterwards, and so is the
+    warehouse dir, no streaming query is still active, no staging dir is
+    left in the temp dir, and the answer still matches the oracle."""
     import os
     import tempfile
 
     from goodreads_pyspark_spark.queries import REGISTRY
     from tests.test_oracle_parity import SF_SMOKE, _norm
 
-    def tmp_dirs():
-        tmp = tempfile.gettempdir()
-        return {d for d in os.listdir(tmp) if os.path.isdir(os.path.join(tmp, d))}
+    def dirs(root):
+        if not os.path.isdir(root):
+            return set()
+        return {d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))}
 
+    tmp = tempfile.gettempdir()
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
     q = REGISTRY[name]
-    before, dirs_before = sorted(t.name for t in spark.catalog.listTables()), tmp_dirs()
+    before = sorted(t.name for t in spark.catalog.listTables())
+    tmp_before, wh_before = dirs(tmp), dirs(warehouse)
     sdf = q.spark_fn(spark, SF_SMOKE)
     assert sorted(t.name for t in spark.catalog.listTables()) == before
     assert spark.streams.active == []
-    assert tmp_dirs() - dirs_before == set()
+    assert dirs(tmp) - tmp_before == set()
+    assert dirs(warehouse) - wh_before == set()
     res = duck.execute(q.oracle)
     d_cols = [d[0] for d in res.description]
     assert _norm(sdf.columns, sdf.collect()) == _norm(d_cols, res.fetchall())

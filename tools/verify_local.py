@@ -8,8 +8,8 @@ leaking query runs once more, and the leak is "per call" if that run
 leaks again, or a one-time "memo build" (a session memo's first build)
 if it does not. A query that leaves a streaming query active (stopped
 here, so later queries start clean) or a new directory in the temp dir
-(a staging dir, sink output or checkpoint) is tagged too. Leaks are
-reported, not failed. Usage:
+(a staging dir, sink output or checkpoint) or a new table or temp view
+in the session catalog is tagged too. Leaks are reported, not failed. Usage:
 
     python tools/verify_local.py [sf_dir] [name-prefix ...]
 
@@ -90,6 +90,7 @@ def main() -> int:
     leaks: dict[str, str] = {}
     stream_leaks: dict[str, list[str]] = {}
     dir_leaks: dict[str, list[str]] = {}
+    catalog_leaks: dict[str, list[str]] = {}
     probe_s = 0.0  # leak re-runs, kept out of the reported query time
     t_start = time.time()
     for name, q in sorted(REGISTRY.items()):
@@ -98,6 +99,7 @@ def main() -> int:
         t0 = time.time()
         spark.catalog.clearCache()
         dirs_before = _tmp_dirs()
+        catalog_before = _catalog(spark)
         try:
             sdf = q.spark_fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -117,6 +119,10 @@ def main() -> int:
         if new_dirs:
             dir_leaks[name] = new_dirs
             leak += f" [staging dir leak: {', '.join(new_dirs)}]"
+        new_entries = sorted(_catalog(spark) - catalog_before)
+        if new_entries:
+            catalog_leaks[name] = new_entries
+            leak += f" [catalog leak: {', '.join(new_entries)}]"
         if not _cache_empty(spark):
             t1 = time.time()
             spark.catalog.clearCache()
@@ -165,7 +171,8 @@ def main() -> int:
         f"in {time.time() - t_start - probe_s:.1f}s; "
         f"{len(leaks)} cache leaks ({per_call} per call, "
         f"{len(leaks) - per_call} memo builds), "
-        f"{len(stream_leaks)} stream leaks, {len(dir_leaks)} staging dir leaks"
+        f"{len(stream_leaks)} stream leaks, {len(dir_leaks)} staging dir leaks, "
+        f"{len(catalog_leaks)} catalog leaks"
     )
     return 1 if failures else 0
 
@@ -179,6 +186,11 @@ def _tmp_dirs() -> set[str]:
         for d in os.listdir(tmp)
         if os.path.isdir(os.path.join(tmp, d)) and not d.startswith("artifacts-")
     }
+
+
+def _catalog(spark) -> set[str]:
+    # tables of the current database and temp views
+    return {t.name for t in spark.catalog.listTables()}
 
 
 def _cache_empty(spark) -> bool:
