@@ -20,21 +20,26 @@ Mining of Massive Datasets ch.3) — public-domain technique.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+
+
+def minhash_aggs(num_hashes: int = 8) -> list[Column]:
+    """The ``mh0..mh{K-1}`` salted min-hash aggregates over an ``sh``
+    column, for a ``groupBy`` of per-document shingle rows."""
+    return [
+        F.min(F.md5(F.concat(F.lit(f"s{i}_"), F.col("sh")))).alias(f"mh{i}")
+        for i in range(num_hashes)
+    ]
 
 
 def minhash_signatures_from_shingles(
     sh: DataFrame, id_col: str = "doc_id", num_hashes: int = 8
 ) -> DataFrame:
     """Min-hash signatures from a prebuilt ``(id_col, sh)`` shingle table."""
-    mins = [
-        F.min(F.md5(F.concat(F.lit(f"s{i}_"), F.col("sh")))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*mins)
+    return sh.groupBy(id_col).agg(*minhash_aggs(num_hashes))
 
 
 def minhash_signatures(
@@ -87,10 +92,9 @@ def lsh_candidate_pairs_from_signatures(
     same ``num_hashes`` — so a sweep computes signatures ONCE and calls
     this per config.
     """
-    _check_bands(num_hashes, bands)
     # Both sides of the self-join read the banded keys; the planner reuses
     # the signature exchange, so the signatures are computed once uncached.
-    banded = _band_signatures(sigs, id_col, num_hashes, bands)
+    banded = band_signatures(sigs, id_col, num_hashes, bands)
     return band_pairs(banded, id_col, ["band", "key"], max_bucket)
 
 
@@ -118,15 +122,22 @@ def cap_buckets(rows: DataFrame, keys: list[str], max_bucket: int | None) -> Dat
 
 
 def band_pairs(
-    banded: DataFrame, id_col: str, keys: list[str], max_bucket: int | None = None
+    banded: DataFrame,
+    id_col: str,
+    keys: list[str],
+    max_bucket: int | None = None,
+    keep: Column | None = None,
 ) -> DataFrame:
     """Distinct ``(doc_a < doc_b)`` pairs of ``banded`` rows sharing a
-    bucket (equal ``keys``), hot buckets capped by :func:`cap_buckets`."""
+    bucket (equal ``keys``), hot buckets capped by :func:`cap_buckets`.
+    ``keep`` verifies each pair inside the self-join: a predicate over
+    the two rows' columns, qualified ``a.`` and ``b.``."""
     banded = cap_buckets(banded, keys, max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
+    pair = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     return (
         a.join(b, keys)
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(pair if keep is None else pair & keep)
         .select(
             F.col(f"a.{id_col}").alias("doc_a"),
             F.col(f"b.{id_col}").alias("doc_b"),
@@ -156,7 +167,7 @@ def _banded_keys(
 ) -> DataFrame:
     """(id_col, band, key) rows from a shingle table — the LSH index form."""
     sigs = minhash_signatures_from_shingles(sh, id_col, num_hashes)
-    return _band_signatures(sigs, id_col, num_hashes, bands)
+    return band_signatures(sigs, id_col, num_hashes, bands)
 
 
 def band_index(
@@ -170,16 +181,22 @@ def band_index(
 ) -> DataFrame:
     """The standing corpus's (id_col, band, key) LSH index, hot buckets
     capped: what an ingest batch is matched against."""
-    _check_bands(num_hashes, bands)
     sh = shingle_rows(docs, id_col, text_col, shingle_n, out_id=id_col)
     keys = _banded_keys(sh, id_col, num_hashes, bands)
     return cap_buckets(keys, ["band", "key"], max_bucket)
 
 
-def _band_signatures(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
+def band_signatures(
+    sigs: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id_col, band, key) rows from a signature table."""
+    """(id_col, *carry, band, key) rows from a signature table: ``bands``
+    md5 keys over consecutive runs of its ``mh0..mh{K-1}`` columns, the
+    ``carry`` columns riding along."""
+    _check_bands(num_hashes, bands)
     rows_per_band = num_hashes // bands
     band_keys = [
         F.md5(
@@ -188,7 +205,7 @@ def _band_signatures(
         for b in range(bands)
     ]
     return sigs.select(
-        F.col(id_col), F.posexplode(F.array(*band_keys)).alias("band", "key")
+        F.col(id_col), *carry, F.posexplode(F.array(*band_keys)).alias("band", "key")
     )
 
 

@@ -1,11 +1,12 @@
 """Vector-column expressions for similarity search.
 
-Embeddings are ``array<float>`` columns. The hot path (dot products,
-norms) is expressed with posexplode + grouped decimal-exact sums rather
-than a Python UDF: it stays in codegen, parallelizes per-row-group, and —
-because float addition is not associative — the decimal accumulation makes
-results independent of partitioning, which both the DuckDB oracle and any
-re-run at different parallelism require.
+Embeddings are ``array<float>`` columns. ``explode_vector`` is their
+long form, one (id, pos, v) row per element, for work that aggregates
+per dimension (sign-LSH planes, centroids); exact cosines fold each row's
+array instead (``similarity/ann.py``). Both sum in decimal rather than a
+Python UDF: because float addition is not associative, the decimal
+accumulation makes results independent of partitioning, which both the
+DuckDB oracle and any re-run at different parallelism require.
 
 For dense brute-force at larger scale, a Pandas-UDF BLAS path would be
 faster per-core; see ``similarity/ann.py`` for where that trade-off is

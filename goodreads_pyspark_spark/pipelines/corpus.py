@@ -9,10 +9,10 @@ testable):
                         (functions/text.py features)
   2. exact dedup      — content-hash, keep lowest id (dedup/exact.py)
   3. near-dup removal — MinHash+LSH candidates → per-pair verification at
-                        ``jaccard_threshold`` → drop the higher id of each
-                        verified pair
+                        ``jaccard_threshold`` over per-document shingle
+                        sets → drop the higher id of each verified pair
 
-Near-dup verification recomputes true Jaccard ONLY for LSH candidates —
+Near-dup verification computes true Jaccard ONLY for LSH candidates —
 the two-phase pattern again: cheap screen at corpus scale, exact check on
 the candidate set. Dropping the higher id per pair (rather than building
 connected components) is the standard single-pass policy; transitive
@@ -20,14 +20,15 @@ near-dup chains may retain middle members — acceptable for corpus
 cleaning, and a Pregel connected-components pass can replace it when
 exact clustering matters.
 
-Cost discipline: one ``(id, shingle)`` plan feeds both the MinHash
-banding and the Jaccard verifier, and the pipeline adds no driver actions
+Cost discipline: the shingle rows are aggregated once, into one row per
+document (signature plus hashed-shingle set), and that one table feeds
+both the banding and the verifier; the pipeline adds no driver actions
 of its own (per-stage counts are opt-in via ``collect_stats``, off in the
-registered query path). It caches nothing: the survivors, the shingle
-table and the candidate pairs are recomputed where the one lazy plan
-reads them twice, which a 10-pair A/B found as fast as caching them
-(CHANGES.md), and nothing is left in the SQL cache after the caller's
-action.
+registered query path). It caches nothing: the survivors and the
+per-document table are recomputed where the one lazy plan reads them
+twice (the planner reuses the per-document exchange), which a 10-pair
+A/B found as fast as caching them (CHANGES.md), and nothing is left in
+the SQL cache after the caller's action.
 """
 
 from __future__ import annotations
@@ -38,9 +39,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.dedup.exact import exact_dedup
-from goodreads_pyspark_spark.dedup.minhash import lsh_candidate_pairs_from_shingles
-from goodreads_pyspark_spark.dedup.ngram import jaccard_pairs_from_shingles
-from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+from goodreads_pyspark_spark.dedup.minhash import (
+    band_pairs,
+    band_signatures,
+    minhash_aggs,
+)
+from goodreads_pyspark_spark.dedup.shingles import shingle_hash, shingle_rows
 from goodreads_pyspark_spark.functions.text import tokens
 from goodreads_pyspark_spark.operators.relational import anti_join
 
@@ -82,20 +86,27 @@ def drop_near_duplicates(
 ) -> DataFrame:
     """Remove the higher-id member of each verified near-dup pair.
 
-    LSH proposes candidates (linear); exact n-gram Jaccard verifies them;
-    the verified drop list comes back as an anti-join (unhinted — its
+    One ``groupBy(id)`` over the ``(id, sh)`` rows yields each document's
+    min-hash signature and its set of hashed shingles (``shingle_hash``,
+    the hash every Jaccard oracle applies). The set rides along with the
+    document's band keys, and each pair sharing a band bucket
+    (``band_pairs``) is verified inside that self-join:
+    ``|A∩B| / |A∪B| >= jaccard_threshold``, the same double division as
+    the inverted-index kernel (``dedup/ngram.py``), so the survivors are
+    the same. The drop list comes back as an anti-join (unhinted — its
     size tracks the corpus's duplicate rate, so AQE picks broadcast vs
     shuffle at runtime).
-    One shingle table feeds both phases. A caller that already holds a
-    corpus-wide ``(id, sh)`` table (e.g. the c03 composition, whose
-    decontamination stage needs the same rows) passes it via
-    ``shingles`` and the pass is restricted
-    by a semi-join instead of re-tokenizing — at 100 TB the tokenizer
-    scan is the dominant linear cost, so it must run once per PIPELINE,
-    not once per stage. A passed ``shingles`` table replaces self-
-    computed shingling entirely, so ``shingle_n``/``text_col`` are
-    IGNORED for it — it must have been built with the same width from
-    the same column (same contract as contamination_stats).
+
+    A caller that already holds a corpus-wide ``(id, sh)`` table (e.g.
+    the c03 composition, whose decontamination stage needs the same
+    rows) passes it via ``shingles``; its per-document rows are then
+    restricted to ``docs`` by an inner join on the id instead of
+    re-tokenizing — at 100 TB the tokenizer scan is the dominant linear
+    cost, so it must run once per PIPELINE, not once per stage. A passed
+    ``shingles`` table replaces self-computed shingling entirely, so
+    ``shingle_n``/``text_col`` are IGNORED for it — it must have been
+    built with the same width from the same column (same contract as
+    contamination_stats).
     """
     if shingles is not None and not {"id", "sh"} <= set(shingles.columns):
         raise ValueError(
@@ -104,28 +115,18 @@ def drop_near_duplicates(
     if shingles is None:
         sh = shingle_rows(docs, id_col, text_col, shingle_n, out_id="id")
     else:
-        ids = docs.select(F.col(id_col).alias("id"))
-        sh = shingles.join(ids, "id", "left_semi")
-    candidates = lsh_candidate_pairs_from_shingles(
-        sh.withColumnRenamed("id", id_col),
-        id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        max_bucket=max_bucket,
+        sh = shingles
+    per_doc = sh.groupBy("id").agg(
+        *minhash_aggs(num_hashes), F.collect_set(shingle_hash()).alias("hs")
     )
-    # Verify candidates exactly: restrict the Jaccard join to candidate docs
-    cand_ids = (
-        candidates.select(F.col("doc_a").alias("id"))
-        .unionByName(candidates.select(F.col("doc_b").alias("id")))
-        .distinct()
+    if shingles is not None:
+        per_doc = per_doc.join(docs.select(F.col(id_col).alias("id")), "id")
+    banded = band_signatures(per_doc, "id", num_hashes, bands, carry=("hs",))
+    jaccard = F.size(F.array_intersect("a.hs", "b.hs")) / F.size(
+        F.array_union("a.hs", "b.hs")
     )
-    # cand_ids / to_drop scale with the corpus's duplicate rate — on a
-    # redundant 100 TB crawl they are corpus-proportional, so neither
-    # carries a broadcast hint: AQE broadcasts when the candidate set
-    # happens to be small and shuffles when it isn't.
-    sh_cand = sh.join(cand_ids, "id", "left_semi")
-    verified = jaccard_pairs_from_shingles(sh_cand, threshold=jaccard_threshold).join(
-        candidates, ["doc_a", "doc_b"], "left_semi"
+    verified = band_pairs(
+        banded, "id", ["band", "key"], max_bucket, keep=jaccard >= jaccard_threshold
     )
     to_drop = verified.select(F.col("doc_b").alias(id_col)).distinct()
     return anti_join(docs, to_drop, id_col)

@@ -19,6 +19,7 @@ DataFrames for the caller to persist (partitioned parquet at scale).
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -152,61 +153,61 @@ SQL_QUERIES: dict[str, str] = {
     "ratings_histogram": """
         SELECT rating, CAST(COUNT(*) AS BIGINT) AS n,
                AVG(rating) AS avg_rating
-        FROM ratings GROUP BY rating ORDER BY rating
+        FROM {ratings} GROUP BY rating ORDER BY rating
     """,
     # goodreads.py:167-168 — top reviewers
     "top_reviewers": """
         SELECT user_id, COUNT(book_id) AS books_rated
-        FROM ratings GROUP BY user_id
+        FROM {ratings} GROUP BY user_id
         ORDER BY books_rated DESC, user_id LIMIT 10
     """,
     # goodreads.py:173-174 — highest rated books
     "highest_rated_books": """
         SELECT book_id, title, average_rating
-        FROM books GROUP BY book_id, title, average_rating
+        FROM {books} GROUP BY book_id, title, average_rating
         ORDER BY average_rating DESC, book_id LIMIT 5
     """,
     # goodreads.py:179-180 — most-rated books
     "most_rated_books": """
         SELECT title, work_ratings_count, average_rating
-        FROM books ORDER BY work_ratings_count DESC, book_id LIMIT 10
+        FROM {books} ORDER BY work_ratings_count DESC, book_id LIMIT 10
     """,
     # goodreads.py:185-187 — reviews per publication year
     "reviews_per_year": """
         SELECT original_publication_year, COUNT(*) AS n_books
-        FROM books WHERE original_publication_year > 1900
+        FROM {books} WHERE original_publication_year > 1900
         GROUP BY original_publication_year
         ORDER BY original_publication_year
     """,
     # goodreads.py:192-194 — average rating per publication year
     "avg_rating_per_year": """
         SELECT original_publication_year, MEAN(average_rating) AS avg_rating
-        FROM books WHERE original_publication_year > 1900
+        FROM {books} WHERE original_publication_year > 1900
         GROUP BY original_publication_year
         ORDER BY original_publication_year
     """,
     # goodreads.py:198-202 — authors with most distinct books
     "prolific_authors": """
         SELECT authors[0] AS author, COUNT(DISTINCT title) AS n_books
-        FROM books GROUP BY authors[0]
+        FROM {books} GROUP BY authors[0]
         ORDER BY n_books DESC, author LIMIT 10
     """,
     # goodreads.py:206-210 — top-rated authors
     "top_rated_authors": """
         SELECT authors[0] AS author, MEAN(average_rating) AS avg_rating
-        FROM books GROUP BY authors[0]
+        FROM {books} GROUP BY authors[0]
         ORDER BY avg_rating DESC, author LIMIT 10
     """,
     # goodreads.py:214-218 — best Stephen King books
     "best_stephen_king": """
         SELECT title, MEAN(average_rating) AS avg_rating
-        FROM books WHERE authors[0] LIKE 'Stephen King'
+        FROM {books} WHERE authors[0] LIKE 'Stephen King'
         GROUP BY title ORDER BY avg_rating DESC, title LIMIT 5
     """,
     # goodreads.py:222-224 — books per year
     "books_per_year": """
         SELECT original_publication_year, COUNT(*) AS n
-        FROM books GROUP BY original_publication_year
+        FROM {books} GROUP BY original_publication_year
         ORDER BY n DESC, original_publication_year LIMIT 10
     """,
 }
@@ -215,24 +216,35 @@ SQL_QUERIES: dict[str, str] = {
 def run_sql_suite(
     spark: SparkSession, tables: GoodreadsTables, ratings: DataFrame | None = None
 ) -> dict[str, DataFrame]:
-    """Register the curated tables and run all ten reference SQL queries.
+    """Run all ten reference SQL queries over the curated tables.
 
-    Note: unlike the notebook originals, every ORDER BY carries a unique
-    tiebreak so results are deterministic under any partitioning.
+    The tables bind as temp views named uniquely per call and dropped
+    through the session catalog once the queries are analysed; unlike
+    ``spark.catalog.dropTempView`` (which ``spark.sql``'s DataFrame
+    arguments use), that drop does not uncache the caller's tables.
+    Every ORDER BY carries a unique tiebreak (unlike the notebook).
     """
-    tables.books.createOrReplaceTempView("books")
-    tables.users.createOrReplaceTempView("users")
-    (ratings if ratings is not None else tables.ratings_small).createOrReplaceTempView(
-        "ratings"
+    frames = dict(
+        books=tables.books,
+        ratings=ratings if ratings is not None else tables.ratings_small,
     )
-    return {name: spark.sql(sql) for name, sql in SQL_QUERIES.items()}
+    views = {k: f"{k}_{uuid.uuid4().hex}" for k in frames}
+    for k, df in frames.items():
+        df.createOrReplaceTempView(views[k])
+    try:
+        return {name: spark.sql(q.format(**views)) for name, q in SQL_QUERIES.items()}
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for view in views.values():
+            catalog.dropTempView(view)
 
 
 # --- point-lookup / recommendation helpers (reference §2.10) ----------------
 def get_book_title(books: DataFrame, book_id: int) -> str | None:
-    """goodreads.py:145-146 — single-title lookup."""
-    row = books.filter(F.col("book_id") == book_id).select("title").head()
-    return row["title"] if row else None
+    """goodreads.py:145-146 — single-title lookup; ``collect`` on the key
+    filter is one job (``head``'s incremental limit scan can take more)."""
+    rows = books.filter(F.col("book_id") == book_id).select("title").collect()
+    return rows[0]["title"] if rows else None
 
 
 def titles_for_ids(books: DataFrame, ids: DataFrame, id_col: str = "book_id") -> DataFrame:

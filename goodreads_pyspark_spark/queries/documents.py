@@ -187,7 +187,7 @@ def _sql_band_keys(
 
 def _sql_md5_keys(out: str, rows: int = 2) -> str:
     """``out``: (doc_id, p, band, key) in the d07 convention — ``sig``'s
-    mh0..mh7 in bands of ``rows``, md5 keys (``_band_signatures``)."""
+    mh0..mh7 in bands of ``rows``, md5 keys (``band_signatures``)."""
     return _sql_band_keys(
         "doc_id", out, rows=(rows,), n_hashes=8, key=lambda e: f"md5({e})"
     )

@@ -568,8 +568,8 @@ def e07_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rnk <= 3
     """,
     doc="Exact top-3 cosine neighbors for a BATCH of 8 query vectors in "
-    "one corpus pass (similarity/ann.py batch_knn): queries broadcast "
-    "long-form, one (qid,id)-keyed shuffle, per-query window cut — "
+    "one corpus pass (similarity/ann.py batch_knn): query rows broadcast, "
+    "each corpus row scored against them, per-query window cut — "
     "Q queries never cost Q corpus scans.",
 )
 def e09_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:

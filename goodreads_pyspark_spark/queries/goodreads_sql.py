@@ -70,7 +70,7 @@ def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _suite(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Build the derived tables, register views, return all ten DataFrames
+    """Build the derived tables and return all ten suite DataFrames
     (lazy — only the one the registered query returns ever executes)."""
     ratings = _ratings(spark, sf_dir)
     tables = GoodreadsTables(

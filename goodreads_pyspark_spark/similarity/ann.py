@@ -3,10 +3,11 @@
 Three tiers, in increasing scale-readiness:
 
 1. ``brute_force_knn`` — exact cosine top-k against one query vector.
-   Long-form (posexplode) formulation: the 1-row query side is broadcast,
-   dot/norm components are decimal-exact grouped sums, and the final
-   top-k is a ``TakeOrderedAndProject``. Exact answer; O(N·d) work —
-   the correctness baseline every ANN variant is judged against.
+   Per-row formulation: the 1-row query side is broadcast, each row's
+   dot product and norm are decimal-exact folds over its array
+   (``_dot_decimal``), and the final top-k is a
+   ``TakeOrderedAndProject``. Exact answer; O(N·d) work — the
+   correctness baseline every ANN variant is judged against.
 
 2. ``cosine_neardup_pairs`` — exact all-pairs cosine ≥ threshold. O(N²·d);
    fine for a partition-sized block, not for a corpus. At 100 TB this is
@@ -21,6 +22,11 @@ Three tiers, in increasing scale-readiness:
    only. For production dims (≥768), precompute the ±1 plane matrix and
    broadcast it into a Pandas-UDF matmul instead of per-element md5 —
    same semantics, BLAS throughput.
+
+Every exact cosine (``all_cosines``, ``cosine_range_search``,
+``batch_knn``, ``cosine_neardup_pairs``, ``bucketed_neardup_pairs``) is
+one per-row kernel, ``_cosine``; the long form (``_long_form``) stays
+where rows aggregate per plane or centroid (``sign_lsh_buckets``, lloyd).
 """
 
 from __future__ import annotations
@@ -33,6 +39,8 @@ from goodreads_pyspark_spark.functions.vectors import explode_vector
 from goodreads_pyspark_spark.operators.partitioning import fan_out
 
 _ACC = "decimal(38,12)"
+#: Per-row dot-product accumulator (see :func:`_dot_decimal`).
+_SUM = "decimal(37,12)"
 
 
 def _long_form(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -50,25 +58,22 @@ def all_cosines(
     the full scoring pass behind :func:`brute_force_knn` and the shared
     substrate for recall audits that cut the same ranking several ways
     (e19's nprobe sweep scores ONCE and derives every curve point).
+    The query row is broadcast and every other row scores against it
+    with :func:`_cosine`; an unknown ``query_id`` yields no rows.
     Cosine is rounded to ``round_to`` digits — the rounding defines a
     deterministic total order for any later cut, and 6dp absorbs the
     ~1e-14 Spark-vs-DuckDB double->decimal divergence (see e05's
     docstring) with negligible flip risk."""
-    e = _long_form(df, id_col, vec_col)
-    q = (
-        e.filter(F.col(id_col) == query_id)
-        .select(F.col("pos"), F.col("v").alias("qv"))
+    rows = _vectors(df, id_col, vec_col)
+    q = rows.filter(F.col(id_col) == query_id).select(
+        F.col("vec").alias("qv"), F.col("n2").alias("q2")
     )
-    joined = e.filter(F.col(id_col) != query_id).join(F.broadcast(q), "pos")
-    comps = joined.groupBy(id_col).agg(
-        F.sum((F.col("v") * F.col("qv")).cast(_ACC)).cast("double").alias("dot"),
-        F.sum((F.col("v") * F.col("v")).cast(_ACC)).cast("double").alias("n2"),
-        F.sum((F.col("qv") * F.col("qv")).cast(_ACC)).cast("double").alias("q2"),
+    cos = _cosine("vec", "n2", "qv", "q2", round_to)
+    return (
+        rows.filter(F.col(id_col) != query_id)
+        .crossJoin(F.broadcast(q))
+        .select(F.col(id_col), cos.alias("cosine"))
     )
-    cos = F.round(
-        F.col("dot") / (F.sqrt(F.col("n2")) * F.sqrt(F.col("q2"))), round_to
-    )
-    return comps.select(F.col(id_col), cos.alias("cosine"))
 
 
 def brute_force_knn(
@@ -91,19 +96,41 @@ def brute_force_knn(
 def _dot_decimal(a: Column, b: Column) -> Column:
     """Decimal-exact dot product of two array<double> columns, as DOUBLE.
 
-    ``zip_with`` + ``aggregate`` fold entirely inside whole-stage codegen —
-    no explode, no shuffle. Decimal accumulation keeps the result equal to
-    any other summation order (the long-form/grouped formulation included),
-    so physical strategy and logical answer stay decoupled.
+    ``zip_with`` + ``aggregate`` fold per row — no explode, no shuffle.
+    Each product rounds to 12 places, as the long form's
+    ``cast(v * q AS decimal(38,12))`` does, and decimal sums are exact, so
+    any summation order gives the same answer. A null product is skipped,
+    as SQL ``sum`` skips it. The accumulator is decimal(37,12): Spark types
+    a lambda's ``decimal(38,12) + decimal(38,12)`` as decimal(38,11).
     """
-    # decimal(18,12): long-backed in Spark (precision<=18 avoids BigDecimal
-    # object math), wide enough for |sum|<1e6 here, and the re-cast in the
-    # merge lambda is scale-preserving so no step ever rounds.
-    acc_t = "decimal(18,12)"
-    prods = F.zip_with(a, b, lambda x, y: (x * y).cast(acc_t))
+    prods = F.zip_with(a, b, lambda x, y: (x * y).cast(_SUM))
     return F.aggregate(
-        prods, F.lit(0).cast(acc_t), lambda acc, x: (acc + x).cast(acc_t)
+        prods,
+        F.lit(None).cast(_SUM),
+        lambda acc, x: F.coalesce(acc + x, acc, x).cast(_SUM),
     ).cast("double")
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, vec, n2) — each row's vector as array<double> and its squared
+    norm. Rows with a null or empty vector drop out, as they do from the
+    long form (``posexplode`` yields no row for them)."""
+    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    return (
+        df.select(F.col(id_col), vec.alias("vec"))
+        .filter(F.size("vec") > 0)
+        .withColumn("n2", _dot_decimal(F.col("vec"), F.col("vec")))
+    )
+
+
+def _cosine(a: str, na: str, b: str, nb: str, round_to: int) -> Column:
+    """Cosine of vector columns ``a`` and ``b`` (squared norms ``na`` and
+    ``nb`` from :func:`_vectors`), rounded to ``round_to`` digits. Vectors
+    of different lengths raise: there is no one cosine for them."""
+    cos = _dot_decimal(F.col(a), F.col(b)) / (F.sqrt(na) * F.sqrt(nb))
+    same_dim = F.size(a) == F.size(b)
+    mismatch = F.raise_error(F.lit("cosine of vectors of different lengths"))
+    return F.round(F.when(same_dim, cos).otherwise(mismatch), round_to)
 
 
 def _dot_double_unrolled(a: Column, b: Column, dim: int) -> Column:
@@ -205,65 +232,26 @@ def cosine_neardup_pairs(
     crossJoin (no Python workers). Both are quadratic: at corpus scale
     run this per LSH bucket (``sign_lsh_buckets``), never globally.
     """
-    dbl = fan_out(df).select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
+    dbl = _vectors(fan_out(df), id_col, vec_col)
+    a = dbl.select(
+        F.col(id_col).alias("id_a"), F.col("vec").alias("va"), F.col("n2").alias("na")
     )
-    norms = dbl.select(
-        F.col(id_col), _dot_decimal(F.col("vec"), F.col("vec")).alias("n2")
+    b = dbl.select(
+        F.col(id_col).alias("id_b"), F.col("vec").alias("vb"), F.col("n2").alias("nb")
     )
     margin = 1e-6
     if use_numpy_screen:
         cand_ids = _screen_pairs_numpy(dbl, threshold, margin, id_col, "vec")
-        cand = (
-            cand_ids.join(
-                dbl.select(F.col(id_col).alias("id_a"), F.col("vec").alias("va")),
-                "id_a",
-            )
-            .join(
-                dbl.select(F.col(id_col).alias("id_b"), F.col("vec").alias("vb")),
-                "id_b",
-            )
-            .join(
-                F.broadcast(
-                    norms.select(F.col(id_col).alias("id_a"), F.col("n2").alias("na"))
-                ),
-                "id_a",
-            )
-            .join(
-                F.broadcast(
-                    norms.select(F.col(id_col).alias("id_b"), F.col("n2").alias("nb"))
-                ),
-                "id_b",
-            )
-        )
+        cand = cand_ids.join(a, "id_a").join(b, "id_b")
     else:
-        a = dbl.select(F.col(id_col).alias("id_a"), F.col("vec").alias("va"))
-        b = dbl.select(F.col(id_col).alias("id_b"), F.col("vec").alias("vb"))
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
         dim = df.select(F.size(vec_col).alias("d")).first()["d"]
-        fast = pairs.select(
-            "id_a",
-            "id_b",
-            "va",
-            "vb",
-            _dot_double_unrolled(F.col("va"), F.col("vb"), dim).alias("fdot"),
-        )
-        na = norms.select(F.col(id_col).alias("id_a"), F.col("n2").alias("na"))
-        nb = norms.select(F.col(id_col).alias("id_b"), F.col("n2").alias("nb"))
+        fdot = _dot_double_unrolled(F.col("va"), F.col("vb"), dim)
         cand = (
-            fast.join(F.broadcast(na), "id_a")
-            .join(F.broadcast(nb), "id_b")
-            .filter(
-                F.col("fdot") / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb")))
-                >= threshold - margin
-            )
+            a.crossJoin(b)
+            .filter(F.col("id_a") < F.col("id_b"))
+            .filter(fdot / (F.sqrt("na") * F.sqrt("nb")) >= threshold - margin)
         )
-    cos = F.round(
-        _dot_decimal(F.col("va"), F.col("vb"))
-        / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))),
-        round_to,
-    )
+    cos = _cosine("va", "na", "vb", "nb", round_to)
     return (
         cand.select("id_a", "id_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
@@ -323,33 +311,29 @@ def batch_knn(
 
     Queries are the rows with ``id < n_queries``; returns
     (qid, vec_id, cosine, rnk) with k rows per query. The batch
-    generalization of ``brute_force_knn``: the query block (Q·d long-form
-    rows) is broadcast, the corpus streams past it once, and the per-query
-    cut is a window rank — so Q queries cost ONE corpus scan + one
-    (qid, id)-keyed shuffle with map-side partial sums, not Q scans. This
+    generalization of ``brute_force_knn``: the query block (Q rows) is
+    broadcast, the corpus streams past it once scoring each row against
+    every query, and the per-query cut is a window rank — so Q queries
+    cost ONE corpus scan + one qid-keyed shuffle, not Q scans. This
     is the shape batch inference/labeling runs at 100 TB: queries are
     always the small side, so they ride the broadcast; the corpus never
     re-partitions per query.
     """
     from pyspark.sql import Window
 
-    e = _long_form(df, id_col, vec_col)
-    q = e.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("qid"), "pos", F.col("v").alias("qv")
+    rows = _vectors(df, id_col, vec_col)
+    q = rows.filter(F.col(id_col) < n_queries).select(
+        F.col(id_col).alias("qid"), F.col("vec").alias("qv"), F.col("n2").alias("q2")
     )
-    joined = e.join(F.broadcast(q), "pos").filter(F.col(id_col) != F.col("qid"))
-    comps = joined.groupBy("qid", id_col).agg(
-        F.sum((F.col("v") * F.col("qv")).cast(_ACC)).cast("double").alias("dot"),
-        F.sum((F.col("v") * F.col("v")).cast(_ACC)).cast("double").alias("n2"),
-        F.sum((F.col("qv") * F.col("qv")).cast(_ACC)).cast("double").alias("q2"),
-    )
-    cos = F.round(
-        F.col("dot") / (F.sqrt(F.col("n2")) * F.sqrt(F.col("q2"))), round_to
+    cos = _cosine("vec", "n2", "qv", "q2", round_to)
+    scored = (
+        rows.crossJoin(F.broadcast(q))
+        .filter(F.col(id_col) != F.col("qid"))
+        .select("qid", F.col(id_col), cos.alias("cosine"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
     return (
-        comps.select("qid", F.col(id_col), cos.alias("cosine"))
-        .withColumn("rnk", F.row_number().over(w))
+        scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("qid", id_col, "cosine", F.col("rnk").cast("int").alias("rnk"))
     )
@@ -390,22 +374,18 @@ def bucketed_neardup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    e = _long_form(df, id_col, vec_col)
-    ea = e.select(F.col(id_col).alias("id_a"), "pos", F.col("v").alias("va"))
-    eb = e.select(F.col(id_col).alias("id_b"), "pos", F.col("v").alias("vb"))
-    comps = (
-        cand.join(ea, "id_a")
-        .join(eb, ["id_b", "pos"])
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.sum((F.col("va") * F.col("vb")).cast(_ACC)).cast("double").alias("dot"),
-            F.sum((F.col("va") * F.col("va")).cast(_ACC)).cast("double").alias("na"),
-            F.sum((F.col("vb") * F.col("vb")).cast(_ACC)).cast("double").alias("nb"),
-        )
+    rows = _vectors(df, id_col, vec_col)
+    a = rows.select(
+        F.col(id_col).alias("id_a"), F.col("vec").alias("va"), F.col("n2").alias("na")
     )
-    cos = F.round(F.col("dot") / (F.sqrt("na") * F.sqrt("nb")), round_to)
+    b = rows.select(
+        F.col(id_col).alias("id_b"), F.col("vec").alias("vb"), F.col("n2").alias("nb")
+    )
+    cos = _cosine("va", "na", "vb", "nb", round_to)
     return (
-        comps.select("id_a", "id_b", cos.alias("cosine"))
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .select("id_a", "id_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -427,22 +407,8 @@ def cosine_range_search(
     per-LSH-bucket (sign_lsh_buckets) exactly like top-k — the kernel is
     the rerank step, never the global scan.
     """
-    e = _long_form(df, id_col, vec_col)
-    q = (
-        e.filter(F.col(id_col) == query_id)
-        .select(F.col("pos"), F.col("v").alias("qv"))
-    )
-    joined = e.filter(F.col(id_col) != query_id).join(F.broadcast(q), "pos")
-    comps = joined.groupBy(id_col).agg(
-        F.sum((F.col("v") * F.col("qv")).cast(_ACC)).cast("double").alias("dot"),
-        F.sum((F.col("v") * F.col("v")).cast(_ACC)).cast("double").alias("n2"),
-        F.sum((F.col("qv") * F.col("qv")).cast(_ACC)).cast("double").alias("q2"),
-    )
-    cos = F.round(
-        F.col("dot") / (F.sqrt(F.col("n2")) * F.sqrt(F.col("q2"))), round_to
-    )
     return (
-        comps.select(F.col(id_col), cos.alias("cosine"))
+        all_cosines(df, query_id, id_col, vec_col, round_to)
         .filter(F.col("cosine") >= min_cosine)
         .orderBy(F.col("cosine").desc(), F.col(id_col))
     )

@@ -3,6 +3,13 @@ plus planted synthetic duplicates."""
 
 from __future__ import annotations
 
+import hashlib
+import math
+import re
+from collections import defaultdict
+from itertools import combinations
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +69,163 @@ def test_near_dup_removal_keeps_unrelated(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     kept = {r["doc_id"] for r in drop_near_duplicates(df).collect()}
     assert kept == {1, 2}
+
+
+def _md5(s: str) -> str:
+    return hashlib.md5(s.encode()).hexdigest()
+
+
+def _ref_neardup_survivors(texts, threshold=0.8, max_bucket=None, hashes=8, bands=4):
+    """Pure-Python ``drop_near_duplicates``: 3-word shingles, salted-md5
+    min-hashes banded two to a band, hot buckets capped, and each
+    candidate pair verified by Jaccard over the ``shingle_hash`` values
+    (the first 15 hex digits of each shingle's md5). Returns (survivor
+    ids, candidate pairs, per-doc hashed sets)."""
+    sets = {}
+    for i, text in texts.items():
+        t = [w for w in re.split(r"[^a-z0-9]+", text.lower()) if w]
+        grams = {" ".join(t[j : j + 3]) for j in range(len(t) - 2)}
+        if grams:
+            sets[i] = grams
+    rows = hashes // bands
+    buckets = defaultdict(set)
+    for i, grams in sets.items():
+        mh = [min(_md5(f"s{k}_{g}") for g in grams) for k in range(hashes)]
+        for b in range(bands):
+            buckets[(b, "".join(mh[b * rows : (b + 1) * rows]))].add(i)
+    hs = {i: {int(_md5(g)[:15], 16) for g in grams} for i, grams in sets.items()}
+    cands, drop = set(), set()
+    for members in buckets.values():
+        if max_bucket is not None and len(members) > max_bucket:
+            continue
+        for a, b in combinations(sorted(members), 2):
+            cands.add((a, b))
+            if len(hs[a] & hs[b]) / len(hs[a] | hs[b]) >= threshold:
+                drop.add(b)
+    return set(texts) - drop, cands, hs
+
+
+def _words(prefix: str, n: int) -> str:
+    return " ".join(f"{prefix}{i}" for i in range(n))
+
+
+#: 1/2 share 8 of 10 shingles (Jaccard exactly 0.8), 3/4 share 15 of 19
+#: (just below); 5/6 are identical but too short to shingle; 10-13 are
+#: one hot bucket of copies; 20 is unrelated.
+_NEARDUP_TEXTS = {
+    1: _words("a1x", 10),
+    2: _words("a1x", 10) + " extra one",
+    3: _words("b1x", 17),
+    4: _words("b1x", 17) + " p q r s",
+    5: "hi there",
+    6: "hi there",
+    **{i: _words("hot", 12) for i in (10, 11, 12, 13)},
+    20: _words("solo", 25),
+}
+
+
+def test_near_dup_survivors_match_python_reference(spark):
+    """Survivors equal the pure-Python reference at the 0.8 boundary,
+    just below it, for documents too short to shingle, with a bucket cap
+    that drops the hot bucket, and with a passed shingle table that
+    covers more documents than ``docs``."""
+    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+
+    texts = _NEARDUP_TEXTS
+    want, cands, hs = _ref_neardup_survivors(texts)
+    # the boundary pairs are LSH candidates, so the verifier decides them
+    assert {(1, 2), (3, 4)} <= cands
+    assert len(hs[1] & hs[2]) / len(hs[1] | hs[2]) == 0.8
+    assert len(hs[3] & hs[4]) / len(hs[3] | hs[4]) == 15 / 19
+    assert want == {1, 3, 4, 5, 6, 10, 20}
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+
+    def kept(**kw):
+        return {r["doc_id"] for r in drop_near_duplicates(docs, **kw).collect()}
+
+    assert kept() == want
+    capped, _, _ = _ref_neardup_survivors(texts, max_bucket=3)
+    assert capped == want | {11, 12, 13}
+    assert kept(max_bucket=3) == capped
+    # id 0 copies doc 2 but is not in ``docs``: restricted away, it must
+    # not drop doc 1 (Jaccard 0.8 with it, lower id)
+    extra = spark.createDataFrame([(0, texts[2])], "doc_id long, text string")
+    sh = shingle_rows(docs.unionByName(extra), out_id="id")
+    assert kept(shingles=sh) == want
+
+
+def test_cosines_match_decimal_reference(spark):
+    """The four per-row cosine entry points against a Python ``decimal``
+    replay of the long-form kernel: products rounded to 12 places,
+    null products skipped as SQL ``sum`` skips them, cosine rounded to 6
+    places. A missing query id yields no rows, a null vector drops out,
+    and vectors of different lengths fail loudly."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from goodreads_pyspark_spark.similarity.ann import (
+        all_cosines,
+        batch_knn,
+        bucketed_neardup_pairs,
+        cosine_range_search,
+        sign_lsh_buckets,
+    )
+
+    rng = np.random.default_rng(5)
+    vecs = {i: [float(x) for x in rng.integers(-8, 9, 6) / 8] for i in range(12)}
+    vecs[4][2] = None  # a null element
+    vecs[7] = [v * 3 for v in vecs[1]]  # parallel to 1: cosine exactly 1
+    rows = [(i, v) for i, v in vecs.items()] + [(99, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def dsum(xs):
+        terms = [
+            Decimal(repr(x)).quantize(Decimal("1e-12"), ROUND_HALF_UP)
+            for x in xs
+            if x is not None
+        ]
+        return float(sum(terms)) if terms else None
+
+    def cos(a, b):
+        va, vb = vecs[a], vecs[b]
+        dot = dsum(x * y if None not in (x, y) else None for x, y in zip(va, vb))
+        na = dsum(x * x if x is not None else None for x in va)
+        nb = dsum(y * y if y is not None else None for y in vb)
+        c = dot / (math.sqrt(na) * math.sqrt(nb))
+        return float(Decimal(repr(c)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    ref = {(a, b): cos(a, b) for a in vecs for b in vecs if a != b}
+    assert ref[(1, 7)] == 1.0
+    for q in (0, 4):
+        got = {r["vec_id"]: r["cosine"] for r in all_cosines(df, q).collect()}
+        assert got == {b: ref[(q, b)] for b in vecs if b != q}
+        got = [tuple(r) for r in cosine_range_search(df, q, 0.2).collect()]
+        want = sorted(
+            ((b, c) for (a, b), c in ref.items() if a == q and c >= 0.2),
+            key=lambda t: (-t[1], t[0]),
+        )
+        assert got == want
+    assert all_cosines(df, 12345).collect() == []
+    got = {
+        (r.qid, r.rnk): (r.vec_id, r.cosine) for r in batch_knn(df, 3, k=4).collect()
+    }
+    for q in range(3):
+        top = sorted((b for b in vecs if b != q), key=lambda b: (-ref[(q, b)], b))[:4]
+        assert [got[(q, r)] for r in range(1, 5)] == [(b, ref[(q, b)]) for b in top]
+    bucket = {r[0]: r[1] for r in sign_lsh_buckets(df, planes=2).collect()}
+    got = {
+        (r.id_a, r.id_b): r.cosine
+        for r in bucketed_neardup_pairs(df, threshold=0.3, planes=2).collect()
+    }
+    assert got == {
+        (a, b): c
+        for (a, b), c in ref.items()
+        if a < b and bucket[a] == bucket[b] and c >= 0.3
+    }
+    ragged = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [1.0, 2.0, 3.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="different lengths"):
+        all_cosines(ragged, 0).collect()
 
 
 def test_cosine_screen_size_cap_enforced(spark):

@@ -114,6 +114,24 @@ def test_sql_suite_runs_and_is_deterministic(spark, goodreads_tables):
     assert [tuple(r) for r in top] == [tuple(r) for r in again]
 
 
+def test_sql_suite_leaves_catalog_as_found(spark, goodreads_tables):
+    """The suite binds its tables per call: no temp view named books,
+    users or ratings (or any other) is left in the caller's catalog, a
+    view of those names the caller made is not replaced, and the caller's
+    cached tables stay cached."""
+    spark.range(3).createOrReplaceTempView("books")
+    before = sorted(t.name for t in spark.catalog.listTables())
+    try:
+        results = run_sql_suite(spark, goodreads_tables)
+        assert results["highest_rated_books"].count() == 5
+        assert sorted(t.name for t in spark.catalog.listTables()) == before
+        assert spark.table("books").columns == ["id"]
+        assert goodreads_tables.books.storageLevel.useMemory
+        assert goodreads_tables.ratings_small.storageLevel.useMemory
+    finally:
+        spark.catalog.dropTempView("books")
+
+
 def test_point_lookups(spark, goodreads_tables):
     some = goodreads_tables.books.select("book_id", "title").first()
     assert get_book_title(goodreads_tables.books, some["book_id"]) == some["title"]

@@ -357,11 +357,18 @@ def test_compaction_layout_properties(spark, tmp_path):
 
 
 def test_e09_broadcasts_query_block(spark):
-    # The batch-kNN query side must ride a broadcast; the corpus side
-    # must NOT appear in a cartesian/nested-loop join.
+    # The batch-kNN query side (the vec_id < 8 rows) must ride a
+    # broadcast that the corpus streams past; the corpus side must not
+    # be broadcast or appear in a cartesian product.
     plan = plan_of(spark, "e09_batch_knn")
-    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+    assert len(broadcast_subtrees(plan)) == 1
+    tree = plan.split("\n\n")[0]
+    bcast = tree[tree.index("BroadcastExchange") :]
+    scan = _re.search(r"Scan parquet\s+\((\d+)\)", bcast).group(1)
+    block = plan.split(f"\n({scan}) Scan parquet")[1].split("\n\n")[0]
+    assert "LessThan(vec_id,8)" in block, "the broadcast side is not the query block"
 
 
 def test_g07_no_cartesian_and_pruned_scan(spark, monkeypatch):
@@ -830,6 +837,42 @@ def test_e22_bucketed_semdedup_no_quadratic_kernel(spark):
     plan = buf.getvalue()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("passed_shingles", [False, True])
+def test_near_dup_reads_shingle_rows_once(spark, passed_shingles):
+    """Near-dup removal aggregates the shingle rows once, into one row
+    per document that feeds both the LSH banding and the Jaccard verifier,
+    and restricts nothing by semi-join: in the executed plan (exchange
+    reuse applied) there is one shingle explode and one partial aggregate
+    over it, and no LeftSemi join."""
+    import re
+
+    from goodreads_pyspark_spark.dedup.shingles import shingle_rows
+    from goodreads_pyspark_spark.pipelines.corpus import drop_near_duplicates
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sh = shingle_rows(docs, out_id="id") if passed_shingles else None
+    df = drop_near_duplicates(docs.filter("doc_id % 2 = 0"), shingles=sh)
+    df.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    tree, _, detail = plan.partition("\n\n")
+    final = tree.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in tree or "Final Plan" in tree
+    live = set(re.findall(r"\((\d+)\)", final))
+    blocks = {
+        m.group(1): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", detail, re.S | re.M)
+    }
+    details = [blocks.get(i, "") for i in live]
+    explodes = [b for b in details if re.search(r"Arguments: explode\(", b)]
+    partials = [b for b in details if "partial_min(md5" in b]
+    assert len(explodes) == 1, explodes
+    assert len(partials) == 1 and "partial_collect_set" in partials[0], partials
+    assert "LeftSemi" not in plan
 
 
 def test_e24_lloyd_broadcasts_centroids(spark):

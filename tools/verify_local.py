@@ -8,8 +8,10 @@ leaking query runs once more, and the leak is "per call" if that run
 leaks again, or a one-time "memo build" (a session memo's first build)
 if it does not. A query that leaves a streaming query active (stopped
 here, so later queries start clean) or a new directory in the temp dir
-(a staging dir, sink output or checkpoint) or a new table or temp view
-in the session catalog is tagged too. Leaks are reported, not failed. Usage:
+(a staging dir, sink output or checkpoint), a new table or temp view
+in the session catalog, or a SQL conf (``spark.sql.*``) it set, changed
+or unset and did not restore is tagged too. Leaks are reported, not
+failed. Usage:
 
     python tools/verify_local.py [sf_dir] [name-prefix ...]
 
@@ -91,6 +93,7 @@ def main() -> int:
     stream_leaks: dict[str, list[str]] = {}
     dir_leaks: dict[str, list[str]] = {}
     catalog_leaks: dict[str, list[str]] = {}
+    conf_leaks: dict[str, list[str]] = {}
     probe_s = 0.0  # leak re-runs, kept out of the reported query time
     t_start = time.time()
     for name, q in sorted(REGISTRY.items()):
@@ -100,6 +103,7 @@ def main() -> int:
         spark.catalog.clearCache()
         dirs_before = _tmp_dirs()
         catalog_before = _catalog(spark)
+        conf_before = _sql_confs(spark)
         try:
             sdf = q.spark_fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -123,6 +127,15 @@ def main() -> int:
         if new_entries:
             catalog_leaks[name] = new_entries
             leak += f" [catalog leak: {', '.join(new_entries)}]"
+        conf_after = _sql_confs(spark)
+        changed = sorted(
+            k
+            for k in conf_before.keys() | conf_after.keys()
+            if conf_before.get(k) != conf_after.get(k)
+        )
+        if changed:
+            conf_leaks[name] = changed
+            leak += f" [conf leak: {', '.join(changed)}]"
         if not _cache_empty(spark):
             t1 = time.time()
             spark.catalog.clearCache()
@@ -172,7 +185,7 @@ def main() -> int:
         f"{len(leaks)} cache leaks ({per_call} per call, "
         f"{len(leaks) - per_call} memo builds), "
         f"{len(stream_leaks)} stream leaks, {len(dir_leaks)} staging dir leaks, "
-        f"{len(catalog_leaks)} catalog leaks"
+        f"{len(catalog_leaks)} catalog leaks, {len(conf_leaks)} conf leaks"
     )
     return 1 if failures else 0
 
@@ -191,6 +204,11 @@ def _tmp_dirs() -> set[str]:
 def _catalog(spark) -> set[str]:
     # tables of the current database and temp views
     return {t.name for t in spark.catalog.listTables()}
+
+
+def _sql_confs(spark) -> dict[str, str]:
+    # the SQL confs set in the session (explicitly or by a query)
+    return {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.")}
 
 
 def _cache_empty(spark) -> bool:
