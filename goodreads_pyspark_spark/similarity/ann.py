@@ -93,8 +93,14 @@ def brute_force_knn(
     )
 
 
-def _dot_decimal(a: Column, b: Column) -> Column:
-    """Decimal-exact dot product of two array<double> columns, as DOUBLE.
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dot_decimal(a: str, b: str) -> str:
+    """SQL for the decimal-exact dot product of two array<double> columns,
+    as DOUBLE.
 
     ``zip_with`` + ``aggregate`` fold per row — no explode, no shuffle.
     Each product rounds to 12 places, as the long form's
@@ -102,24 +108,25 @@ def _dot_decimal(a: Column, b: Column) -> Column:
     any summation order gives the same answer. A null product is skipped,
     as SQL ``sum`` skips it. The accumulator is decimal(37,12): Spark types
     a lambda's ``decimal(38,12) + decimal(38,12)`` as decimal(38,11).
+    The kernels are SQL text, parsed once, rather than Python lambdas,
+    which take a JVM round trip per expression node to build.
     """
-    prods = F.zip_with(a, b, lambda x, y: (x * y).cast(_SUM))
-    return F.aggregate(
-        prods,
-        F.lit(None).cast(_SUM),
-        lambda acc, x: F.coalesce(acc + x, acc, x).cast(_SUM),
-    ).cast("double")
+    return (
+        f"CAST(aggregate(zip_with({_q(a)}, {_q(b)}, (x, y) -> CAST(x * y AS {_SUM})), "
+        f"CAST(NULL AS {_SUM}), (x, y) -> CAST(coalesce(x + y, x, y) AS {_SUM})) "
+        "AS DOUBLE)"
+    )
 
 
 def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, vec, n2) — each row's vector as array<double> and its squared
     norm. Rows with a null or empty vector drop out, as they do from the
     long form (``posexplode`` yields no row for them)."""
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec = F.expr(f"transform({_q(vec_col)}, x -> CAST(x AS DOUBLE))")
     return (
         df.select(F.col(id_col), vec.alias("vec"))
         .filter(F.size("vec") > 0)
-        .withColumn("n2", _dot_decimal(F.col("vec"), F.col("vec")))
+        .withColumn("n2", F.expr(_dot_decimal("vec", "vec")))
     )
 
 
@@ -127,10 +134,12 @@ def _cosine(a: str, na: str, b: str, nb: str, round_to: int) -> Column:
     """Cosine of vector columns ``a`` and ``b`` (squared norms ``na`` and
     ``nb`` from :func:`_vectors`), rounded to ``round_to`` digits. Vectors
     of different lengths raise: there is no one cosine for them."""
-    cos = _dot_decimal(F.col(a), F.col(b)) / (F.sqrt(na) * F.sqrt(nb))
-    same_dim = F.size(a) == F.size(b)
-    mismatch = F.raise_error(F.lit("cosine of vectors of different lengths"))
-    return F.round(F.when(same_dim, cos).otherwise(mismatch), round_to)
+    return F.expr(
+        f"round(CASE WHEN size({_q(a)}) = size({_q(b)}) "
+        f"THEN {_dot_decimal(a, b)} / (sqrt({_q(na)}) * sqrt({_q(nb)})) "
+        "ELSE raise_error('cosine of vectors of different lengths') END, "
+        f"{int(round_to)})"
+    )
 
 
 def _dot_double_unrolled(a: Column, b: Column, dim: int) -> Column:

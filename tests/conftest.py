@@ -62,3 +62,13 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def staging_runs():
+    """The one run per test session of each staging query, kept by
+    ``test_oracle_parity.run_query`` for every test that checks it. A
+    fixture, not a module global: pytest imports ``test_oracle_parity``
+    by its file name, and another test module importing it as
+    ``tests.test_oracle_parity`` gets a second module object."""
+    return {}

@@ -5,7 +5,13 @@ Small k / maxIter everywhere — CI exercises the surface, not the quality.
 
 from __future__ import annotations
 
+import sys
+import threading
+import uuid
+
+import numpy as np
 import pytest
+from pyspark.ml.recommendation import ALS, ALSModel
 from pyspark.sql import functions as F
 
 from goodreads_pyspark_spark.ml import (
@@ -25,6 +31,7 @@ from goodreads_pyspark_spark.ml.features import (
     book_feature_pipeline,
     silhouette,
 )
+from goodreads_pyspark_spark.ml.recommend import ServingALSModel, _top_k
 
 
 @pytest.fixture(scope="module")
@@ -81,6 +88,168 @@ def test_unknown_serve_ids_give_defined_answers(spark, goodreads_tables, split):
     assert brute_force_knn(emb, unknown).count() == 0
     recs = model.recommendForUserSubset(unseen, 3)
     assert explode_recommendations(recs).count() == 0
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def served(split):
+    """A fitted model, and its factors as float64 {id: vector} maps."""
+    model = fit_als(split[0], rank=4, maxIter=2, seed=42)
+    users = {r[0]: np.asarray(r[1], float) for r in model.userFactors.collect()}
+    items = {r[0]: np.asarray(r[1], float) for r in model.itemFactors.collect()}
+    return model, users, items
+
+
+def _recs(df) -> dict:
+    return {r[0]: [(x[0], x[1]) for x in r[1]] for r in df.collect()}
+
+
+def _assert_matches_mllib(got, want, src, dst, tol=1e-6):
+    """``got`` answers what MLlib's ``want`` does: the same keys; per key
+    the same ids in the same order, except ties within ``tol``; scores
+    within ``tol``; each score the factors' dot product."""
+    assert got.schema == want.schema
+    g, w = _recs(got), _recs(want)
+    assert g.keys() == w.keys()
+    for key, theirs in w.items():
+        ours = g[key]
+        assert len(ours) == len(theirs)
+        assert len({i for i, _ in ours}) == len(ours)
+        for (i, s), (j, t) in zip(ours, theirs):
+            assert abs(s - t) <= tol, (key, i, s, j, t)
+            assert abs(s - float(src[key] @ dst[i])) <= 1e-5
+        assert [s for _, s in ours] == sorted((s for _, s in ours), reverse=True)
+
+
+def test_user_subset_matches_mllib(spark, served):
+    model, users, items = served
+    known = sorted(users)[:3]
+    subset = spark.createDataFrame(
+        [(known[0],), (known[1],), (known[1],), (None,), (-1,), (known[2],)], "user_id int"
+    )
+    for n in (1, 5, len(items) + 7):
+        want = ALSModel.recommendForUserSubset(model, subset, n)
+        got = model.recommendForUserSubset(subset, n)
+        _assert_matches_mllib(got, want, users, items)
+        assert sorted(_recs(got)) == known
+        assert {len(v) for v in _recs(got).values()} == {min(n, len(items))}
+    # ids of any numeric column match as they do in MLlib's semi-join (3.0
+    # matches 3; 3.5, NaN and values past the int range match nothing);
+    # MLlib casts ids of a non-numeric column, and those calls take its path
+    as_double = spark.createDataFrame(
+        [(float(known[0]),), (known[1] + 0.5,), (float("nan"),), (2.0**40,)], "user_id double"
+    )
+    for other in (as_double, subset.select(F.col("user_id").cast("string"))):
+        want = ALSModel.recommendForUserSubset(model, other, 3)
+        _assert_matches_mllib(model.recommendForUserSubset(other, 3), want, users, items)
+
+
+def test_item_subset_matches_mllib(spark, served):
+    model, users, items = served
+    known = sorted(items)[-4:]
+    subset = spark.createDataFrame([(b,) for b in known + [known[0], None, -1]], "book_id long")
+    for n in (3, len(users) + 1):
+        want = ALSModel.recommendForItemSubset(model, subset, n)
+        got = model.recommendForItemSubset(subset, n)
+        _assert_matches_mllib(got, want, items, users)
+        assert sorted(_recs(got)) == known
+
+
+def test_subset_with_no_known_id_is_empty(spark, served):
+    model = served[0]
+    for rows in ([], [(None,)], [(-5,), (-6,)]):
+        subset = spark.createDataFrame(rows, "user_id int")
+        got = model.recommendForUserSubset(subset, 3)
+        assert got.collect() == []
+        assert got.schema == ALSModel.recommendForUserSubset(model, subset, 3).schema
+
+
+@pytest.mark.parametrize("n", [0, -1])
+def test_subset_rejects_non_positive_count_as_mllib(spark, served, n):
+    model = served[0]
+    subset = spark.createDataFrame([(sorted(served[1])[0],)], "user_id int")
+    with pytest.raises(Exception) as theirs:
+        ALSModel.recommendForUserSubset(model, subset, n)
+    with pytest.raises(type(theirs.value)):
+        model.recommendForUserSubset(subset, n)
+    with pytest.raises(type(theirs.value)):
+        model.recommendForItemSubset(subset.toDF("book_id"), n)
+
+
+def test_top_k_breaks_ties_by_id():
+    """Columns are ids in ascending order: the top ``k`` of each row is
+    by (score desc, column asc), ties across the k-th place included."""
+    scores = np.random.default_rng(0).integers(0, 4, size=(60, 12)).astype(np.float32)
+    for k in (1, 3, 5, 12, 20):
+        want = [sorted(range(12), key=lambda j: (-row[j], j))[:k] for row in scores]
+        assert _top_k(scores, k).tolist() == want
+
+
+def test_concurrent_first_calls_pull_the_factors_once(served):
+    """Threads racing on a model's first subset call all get the one copy
+    of its factors."""
+    fresh = ServingALSModel(served[0]._java_obj)
+    got = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=lambda: got.append(fresh._driver_factors())) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 8 and all(g is got[0] for g in got)
+
+
+def test_subset_jobs(spark, split):
+    """The factors are pulled once, on the first subset call; after that a
+    call runs one job, the subset collect. Fit and RMSE run as many jobs as
+    MLlib's own ALS and give its RMSE."""
+    train, test = split
+    params = dict(rank=4, maxIter=2, seed=42)
+    box = {}
+
+    def ours():
+        box["model"] = fit_als(train, **params)
+        box["ours"] = rmse(box["model"], test)
+
+    def theirs():
+        als = ALS(
+            userCol="user_id",
+            itemCol="book_id",
+            ratingCol="rating",
+            nonnegative=True,
+            coldStartStrategy="drop",
+            **params,
+        )
+        box["theirs"] = rmse(als.fit(train), test)
+
+    assert _jobs(spark, ours) == _jobs(spark, theirs)
+    assert box["ours"] == box["theirs"]
+    model = box["model"]
+    assert model._factors is None
+    subset = spark.createDataFrame([(1,), (2,)], "user_id int")
+    assert _jobs(spark, lambda: model.recommendForUserSubset(subset, 3).collect()) == 3
+    for call in (
+        lambda: model.recommendForUserSubset(subset, 3).collect(),
+        lambda: model.recommendForItemSubset(subset.toDF("book_id"), 3).collect(),
+    ):
+        assert _jobs(spark, call) == 1
 
 
 def test_als_grid_cv_surface(split):

@@ -7,6 +7,9 @@ This is the same comparison the driver runs at sf0.01 (SURVEY.md §5 item 2)
 from __future__ import annotations
 
 import math
+import os
+import tempfile
+from dataclasses import dataclass
 
 import pytest
 
@@ -30,11 +33,85 @@ def _norm(cols, rows):
     return sorted(tuple(_norm_cell(list(r)[i]) for i in order) for r in rows)
 
 
+#: Queries that drive a stream (memory sink or foreachBatch) or stage
+#: managed tables or temp views. Their run also records what the call left
+#: behind, which ``test_memory_sink_query_leaves_no_view`` checks.
+STAGING_QUERIES = frozenset(
+    [
+        "s01_streaming_hourly_counts",
+        "s02_stateful_user_totals",
+        "s03_streaming_dedup",
+        "s04_streaming_sliding_window",
+        "s05_stream_static_enrich",
+        "s06_stream_stream_join",
+        "s07_streaming_session_window",
+        "s08_foreachbatch_sink",
+        "s09_streaming_cdc_upsert",
+        "s10_stream_stream_left_join",
+        "s11_session_timeout_close",
+        "s12_streaming_ingest_admission",
+        "s13_streaming_approx_users",
+        "s14_streaming_heavy_hitters",
+        "s15_streaming_containment_admission",
+        "io11_bucketed_colocated_join",
+        "q23_sql_facade_subqueries",
+        "q40_grouping_sets",
+    ]
+)
+
+
+@dataclass(frozen=True)
+class Leftovers:
+    """Session state around one query call: the catalog's tables and temp
+    views before and after, the streams still active, and the directories
+    the call added to the temp dir and the warehouse dir."""
+
+    tables_before: list
+    tables_after: list
+    streams: list
+    tmp_dirs: set
+    warehouse_dirs: set
+
+
+def _dirs(root):
+    if not os.path.isdir(root):
+        return set()
+    return {d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))}
+
+
+def _tables(spark):
+    return sorted(t.name for t in spark.catalog.listTables())
+
+
+def run_query(spark, name, runs):
+    """(columns, rows, leftovers) of registry query ``name`` at sf0.001;
+    ``leftovers`` is a :class:`Leftovers` for a ``STAGING_QUERIES`` query
+    and None otherwise. A staging query runs once per test session: its
+    run is kept in ``runs`` (the ``staging_runs`` fixture), and every test
+    that checks it reads that one run."""
+    if name not in STAGING_QUERIES:
+        sdf = REGISTRY[name].spark_fn(spark, SF_SMOKE)
+        return sdf.columns, [tuple(r) for r in sdf.collect()], None
+    if name not in runs:
+        tmp = tempfile.gettempdir()
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
+        tables, tmp_before, wh_before = _tables(spark), _dirs(tmp), _dirs(warehouse)
+        sdf = REGISTRY[name].spark_fn(spark, SF_SMOKE)
+        left = Leftovers(
+            tables_before=tables,
+            tables_after=_tables(spark),
+            streams=[a.name or a.id for a in spark.streams.active],
+            tmp_dirs=_dirs(tmp) - tmp_before,
+            warehouse_dirs=_dirs(warehouse) - wh_before,
+        )
+        runs[name] = sdf.columns, [tuple(r) for r in sdf.collect()], left
+    return runs[name]
+
+
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(name, spark, duck):
+def test_query_matches_oracle(name, spark, duck, staging_runs):
     q = REGISTRY[name]
-    sdf = q.spark_fn(spark, SF_SMOKE)
-    s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    s_cols, s_rows, _ = run_query(spark, name, staging_runs)
     if q.oracle is None:
         assert len(s_rows) >= 0  # rows-only check, driver-style
         return

@@ -12,11 +12,13 @@ from goodreads_pyspark_spark.multimodal import (
     extract_image_features,
     sample_video_frames,
 )
+from goodreads_pyspark_spark.queries import REGISTRY
 from goodreads_pyspark_spark.streaming import (
     hourly_by_type,
     run_to_memory_sink,
     stream_events_from_dir,
 )
+from tests.test_oracle_parity import STAGING_QUERIES, _norm, run_query
 
 
 @pytest.fixture(scope="module")
@@ -409,56 +411,19 @@ def test_session_timeout_close_paths(spark, tmp_path_factory):
     }
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "s01_streaming_hourly_counts",
-        "s02_stateful_user_totals",
-        "s03_streaming_dedup",
-        "s04_streaming_sliding_window",
-        "s05_stream_static_enrich",
-        "s06_stream_stream_join",
-        "s07_streaming_session_window",
-        "s08_foreachbatch_sink",
-        "s09_streaming_cdc_upsert",
-        "s10_stream_stream_left_join",
-        "s11_session_timeout_close",
-        "s12_streaming_ingest_admission",
-        "s13_streaming_approx_users",
-        "s14_streaming_heavy_hitters",
-        "s15_streaming_containment_admission",
-        "io11_bucketed_colocated_join",
-        "q23_sql_facade_subqueries",
-        "q40_grouping_sets",
-    ],
-)
-def test_memory_sink_query_leaves_no_view(spark, duck, name):
+@pytest.mark.parametrize("name", sorted(STAGING_QUERIES))
+def test_memory_sink_query_leaves_no_view(spark, duck, staging_runs, name):
     """A query that drives a stream (memory sink or foreachBatch) or
     stages managed tables or temp views tears it all down: the catalog's
     tables and temp views are unchanged afterwards, and so is the
     warehouse dir, no streaming query is still active, no staging dir is
-    left in the temp dir, and the answer still matches the oracle."""
-    import os
-    import tempfile
-
-    from goodreads_pyspark_spark.queries import REGISTRY
-    from tests.test_oracle_parity import SF_SMOKE, _norm
-
-    def dirs(root):
-        if not os.path.isdir(root):
-            return set()
-        return {d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))}
-
-    tmp = tempfile.gettempdir()
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    q = REGISTRY[name]
-    before = sorted(t.name for t in spark.catalog.listTables())
-    tmp_before, wh_before = dirs(tmp), dirs(warehouse)
-    sdf = q.spark_fn(spark, SF_SMOKE)
-    assert sorted(t.name for t in spark.catalog.listTables()) == before
-    assert spark.streams.active == []
-    assert dirs(tmp) - tmp_before == set()
-    assert dirs(warehouse) - wh_before == set()
-    res = duck.execute(q.oracle)
+    left in the temp dir, and the answer still matches the oracle. Reads
+    the query's one run of the test session (``run_query``)."""
+    cols, rows, left = run_query(spark, name, staging_runs)
+    assert left.tables_after == left.tables_before
+    assert left.streams == []
+    assert left.tmp_dirs == set()
+    assert left.warehouse_dirs == set()
+    res = duck.execute(REGISTRY[name].oracle)
     d_cols = [d[0] for d in res.description]
-    assert _norm(sdf.columns, sdf.collect()) == _norm(d_cols, res.fetchall())
+    assert _norm(cols, rows) == _norm(d_cols, res.fetchall())

@@ -190,14 +190,18 @@ def main() -> int:
     return 1 if failures else 0
 
 
+#: Spark's own dirs in the temp dir, made part-way through a session and
+#: removed with it: the artifact root (artifacts-*) and, when
+#: SPARK_LOCAL_DIRS is unset, its scratch dirs (spark-*, blockmgr-*).
+_SPARK_DIRS = ("artifacts-", "spark-", "blockmgr-")
+
+
 def _tmp_dirs() -> set[str]:
-    # artifacts-*: the session's own artifact root, made on first use and
-    # removed with the session
     tmp = tempfile.gettempdir()
     return {
         d
         for d in os.listdir(tmp)
-        if os.path.isdir(os.path.join(tmp, d)) and not d.startswith("artifacts-")
+        if os.path.isdir(os.path.join(tmp, d)) and not d.startswith(_SPARK_DIRS)
     }
 
 
